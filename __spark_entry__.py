@@ -1345,7 +1345,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (charset, source) pair rides along and is value-hashed for
         # every surfaced row.
         from schema_fantasy_spark.ops import charset as csops
-        from schema_fantasy_spark.ops import mm_corpus as mc
+        from schema_fantasy_spark.ops import charset_corpus as mc
 
         docs = _spread(docs.filter(F.col("doc_id").isNotNull()), "doc_id")
 
@@ -1447,258 +1447,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "h_expected",
         )
 
-    def audio_resample_synthetic(spark, sf):
-        # the audio sibling of image_resize under the gate: every PCM /
-        # G.711 WAV of the corpus (mu-law and A-law decode through the
-        # ITU expansion tables) resamples to 16 kHz by exact
-        # nearest-index arithmetic — src rates 8/16/24 kHz, so up-,
-        # down- and identity-sampling all run. The oracle rebuilds the
-        # ENTIRE resampled waveform closed-form (alternating +/-amp
-        # square wave through the index map, amp replayed from the
-        # G.711 expansion formulas) — one wrong index, sign or
-        # magnitude anywhere flips the row hash. Header-walk codecs
-        # (MP3/FLAC/Ogg) and corrupt rows quarantine, mirrored by the
-        # oracle's family filter.
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        wavs = mm_corpus.synthetic_audio(docs)
-        rs = multimodal.audio_resample(
-            wavs, binary_col="payload", id_col="doc_id", out_rate=16000
-        )
-        return rs.select(
-            "doc_id", "src_rate", "out_rate", "n_in", "n_out",
-            F.array_join(
-                F.transform(F.col("samples"), lambda v: v.cast("string")),
-                ",",
-            ).alias("samples_csv"),
-        )
-
-    def image_resize_synthetic(spark, sf):
-        # model-input preprocessing under the gate: every image of the
-        # two-tone corpus (all six container formats, REAL decoders)
-        # resizes to a fixed 6x5 RGB tensor by exact integer
-        # nearest-index sampling (src[j*h//6, i*w//5]) — 5 > some source
-        # widths (w=4..19), so BOTH up- and down-scaling arithmetic run.
-        # The oracle rebuilds the ENTIRE flattened tensor closed-form
-        # from the generation nibbles (top-half color_a rows vs exact
-        # inverses; the lossy-VP8 gray family replicates its tone across
-        # channels) — a one-pixel index or channel error anywhere in any
-        # decoder or in the resampling flips the row hash.
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        imgs = mm_corpus.synthetic_images(docs)
-        resized = multimodal.image_resize(
-            imgs, binary_col="payload", id_col="doc_id", out_w=5, out_h=6
-        )
-        # the tensor crosses the gate as a CSV string: array-typed
-        # columns degrade to numpy arrays in pandas-path comparators
-        return resized.select(
-            "doc_id", "src_width", "src_height", "out_w", "out_h",
-            F.array_join(
-                F.transform(F.col("pixels"), lambda v: v.cast("string")), ","
-            ).alias("pixels_csv"),
-        )
-
-    def image_decode_synthetic(spark, sf):
-        # multimodal decode under the oracle gate: a deterministic
-        # two-tone BMP/PPM/GIF/PNG/WebP corpus from md5(doc_id) nibbles
-        # (ops/mm_corpus.py docstring has the derivation); the oracle
-        # recomputes width/height/format and the exact aHash constant
-        # from the same nibbles in SQL — the REAL decoders (incl. the
-        # zlib PNG pixel path, all five scanline filters) run end to end.
-        # The block-mean grid FEATURES run over the same corpus in the
-        # same query (joined on doc_id): dimensionality and the
-        # top-vs-bottom brightness ordering are exact functions of the
-        # generation nibbles (float32 storage cannot flip an ordering
-        # whose gap is >= 1/765). The join exists for the GATE (two
-        # operators, one oracle row set); a production pipeline would
-        # fuse both extractors into one mapInPandas decode pass rather
-        # than decode twice and shuffle-join.
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-        from schema_fantasy_spark.ops.sniff import sniff_mime
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        # imgs feeds THREE consumers (meta, feats, mime sniff): without a
-        # boundary each branch re-runs the whole corpus synthesis (incl.
-        # the VP8 encode) — trap 18; materialize the payloads once
-        imgs = mm_corpus.synthetic_images(docs).localCheckpoint()
-        meta = multimodal.image_metadata(imgs, binary_col="payload", id_col="doc_id")
-        feats = multimodal.image_features(
-            imgs, binary_col="payload", id_col="doc_id", dim=16
-        )
-        # WHATWG magic-byte sniff (ops/sniff.py) under the same gate:
-        # the corpus's four container formats must classify from bytes
-        # alone — ppm is NOT in the spec's table and must degrade to
-        # octet-stream (the negative path), the rest hit their
-        # signatures (incl. RIFF discrimination for webp)
-        mimed = imgs.select("doc_id", sniff_mime(F.col("payload")).alias("mime"))
-        return (
-            meta.select("doc_id", "width", "height", "format", "phash")
-            .join(
-                feats.select(
-                    "doc_id",
-                    F.size("feature").alias("n_dims"),
-                    (F.element_at("feature", 1) > F.element_at("feature", 16)).alias(
-                        "top_brighter"
-                    ),
-                ),
-                "doc_id",
-            )
-            .join(mimed, "doc_id")
-        )
-
-    def jpeg_decode_synthetic(spark, sf):
-        # the ENTROPY-CODED image format under the gate: deterministic
-        # two-tone grayscale JPEGs — half BASELINE, half PROGRESSIVE
-        # (SOF2, successive approximation), selected by a nibble —
-        # (ops/jpeg.py encoders, all-ones quant, MCU-aligned tones ->
-        # bit-exact round trip by construction), decoded by the
-        # pure-numpy huffman+IDCT decoder; the oracle recomputes
-        # width/format and the exact aHash constant from the same
-        # md5(doc_id) nibbles in SQL
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        imgs = mm_corpus.synthetic_jpegs(docs)
-        meta = multimodal.image_metadata(imgs, binary_col="payload", id_col="doc_id")
-        return meta.select("doc_id", "width", "height", "format", "phash")
-
-    def video_frames_synthetic(spark, sf):
-        # the VIDEO path under the gate: a THREE-container corpus —
-        # MJPEG-in-AVI (RIFF movi walk), MJPEG-in-MP4 (full ISO-BMFF
-        # sample-table demux: stsd/stsz/stsc/stco/stss, ops/video.py
-        # parse_mp4_samples), and VP8-in-WebM — half the WebM docs are
-        # INTER streams (key frame 0 + ZEROMV skips + SPLITMV half-
-        # swaps) walked in bitstream order by the stateful
-        # Vp8StreamDecoder with real motion compensation — sampled
-        # every 2nd frame, each sampled frame decoded by the real
-        # JPEG / VP8 codec;
-        # the oracle regenerates the sampled frame indices and each
-        # frame's exact aHash constant from the same md5(doc_id)
-        # nibbles in SQL, IDENTICALLY across the container split, so a
-        # demux error in any family changes the row set and fails.
-        # JOINED per doc: video_metadata over a second CODEC-VIDEO
-        # container corpus (MP4 v0/v1 ISO-BMFF + Matroska/WebM EBML
-        # skeletons) — the header slice a training pipeline filters on
-        # without decode; the oracle re-derives container/dims/frames/
-        # duration from the same nibbles. The join exists for the GATE
-        # (two operators, one oracle row set); a production pipeline
-        # would read each corpus once with no shuffle between them.
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        vids = mm_corpus.synthetic_videos(docs)
-        frames = multimodal.video_frames(
-            vids, binary_col="payload", id_col="doc_id", every_n=2, max_frames=4
-        )
-        cont = mm_corpus.synthetic_video_containers(docs)
-        cmeta = multimodal.video_metadata(
-            cont, binary_col="payload", id_col="doc_id"
-        ).select(
-            "doc_id",
-            F.col("container").alias("c_container"),
-            F.col("width").alias("c_width"),
-            F.col("height").alias("c_height"),
-            F.col("n_frames").alias("c_n_frames"),
-            F.col("duration_sec").alias("c_duration_sec"),
-        )
-        # GATE-ONLY composition: this join exists to fit two operators
-        # (frame sampling + container metadata) into one gate row. cmeta
-        # is per-doc, so at 10^12 docs broadcasting it is NOT the scale
-        # plan — there you'd run the two operators as separate scans, or
-        # co-partition both sides on doc_id (both derive from the same
-        # source partitioning, so the join needs no extra shuffle). The
-        # broadcast here only keeps the sf0.01 gate plan exchange-free.
-        return frames.join(F.broadcast(cmeta), "doc_id")
-
-    def avc1_metadata_synthetic(spark, sf):
-        # the avc1/hvc1/av01 (H.264/H.265/AV1) path under the gate —
-        # together the codecs carrying essentially all real-crawl MP4
-        # video, handled at the metadata/index level (documented
-        # no-decoder stance): a corpus of MP4 files (nibble-7 %3 codec
-        # split) whose
-        # tkhd presentation dims are ZERO, so width/height/profile/
-        # level can only come from parsing the codec config inside
-        # the stsd avcC/hvcC/av1C box (ops/h264.py Exp-Golomb +
-        # frame-crop units, ops/h265.py profile_tier_level +
-        # conformance window, ops/av1.py sequence-header OBU — dims
-        # are mostly not multiples of 16, so real cropping arithmetic
-        # runs per doc), joined with the stss keyframe byte-range
-        # index (parse_mp4_samples stbl walk). The oracle
-        # re-derives every value from the same md5 nibbles and REPLAYS
-        # the sample-size/chunk-offset layout with a window cumulative
-        # sum — any SPS-field, crop-unit, stss, stsz or stco error
-        # flips n_keyframes/last_kf_offset/kf_bytes. Gate-only join
-        # (two operators, one row set), broadcast to stay exchange-free
-        # at sf0.01; at scale the two reads co-partition on doc_id.
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        # vids feeds both the codec-config parse and the keyframe index:
-        # materialize the synthesized MP4s once (trap 18)
-        vids = mm_corpus.synthetic_avc1_videos(docs).localCheckpoint()
-        meta = multimodal.video_metadata(
-            vids, binary_col="payload", id_col="doc_id"
-        ).select(
-            "doc_id", "codec", "profile_idc", "level_idc",
-            "width", "height", "n_frames", "duration_sec",
-        )
-        kstats = (
-            multimodal.video_frame_index(
-                vids, binary_col="payload", id_col="doc_id",
-                keyframes_only=True,
-            )
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("n_keyframes"),
-                F.max("offset").alias("last_kf_offset"),
-                F.sum("size").alias("kf_bytes"),
-            )
-        )
-        return meta.join(F.broadcast(kstats), "doc_id")
-
-    def audio_metadata_synthetic(spark, sf):
-        # audio decode under the gate, SIX codec families: 16-bit PCM
-        # (stdlib wave), G.711 mu-law and A-law
-        # (ops/multimodal.parse_wav_g711 — tables byte-verified against
-        # audioop), MP3 frame walks, FLAC STREAMINFO, and Ogg
-        # Opus/Vorbis page walks with RFC 3533 CRC verification
-        # (ops/audio_formats.py). Square-wave payloads make RMS an exact rational
-        # (decoded magnitude / 32768, <= 6 decimals; the oracle replays
-        # the G.711 expansion formulas in SQL); rows with nibble 13
-        # == 0 are TRUNCATED containers and must be quarantined away
-        # (per-row quarantine, the $parse contract) — the oracle simply
-        # excludes them
-        from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        aud = mm_corpus.synthetic_audio(docs)
-        meta = multimodal.audio_metadata(aud, binary_col="payload", id_col="doc_id")
-        return meta.select(
-            "doc_id",
-            "sample_rate",
-            "n_channels",
-            "n_frames",
-            F.round("duration_sec", 6).alias("duration_sec"),
-            "rms",
-        )
-
     def robots_allowed_documents(spark, sf):
         # crawl governance under the oracle: per-host robots.txt BODIES
         # are synthesized in Column exprs (odd hosts carry a stacked
@@ -1749,36 +1497,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         rules = parse_robots(robots)
         return robots_allowed(urls, rules, "SfsBot")
-
-    def pdf_extract_documents(spark, sf):
-        # PDF text extraction under the gate (ops/pdf.py — the crawl's
-        # densest non-HTML text source): a deterministic multi-page
-        # corpus (ops/mm_corpus.pdf_params) splits by nibble across
-        # uncompressed/Flate/LZW content streams, literal vs hex
-        # strings, classic xref-table vs PDF 1.5 ObjStm + xref-stream
-        # layouts, AND simple-Type1 vs COMPOSITE Type0/Identity-H CID
-        # fonts with generated ToUnicode CMaps (n9 odd; ASCII decodes
-        # through the bfrange path, the per-line ' é→' suffix through
-        # bfchar); header stumps quarantine. The oracle rebuilds the
-        # exact extracted text per doc in SQL and compares page count +
-        # char count + md5 — any tokenizer/escape/filter/ObjStm/
-        # page-walk/CMap error flips the hash. NOTE: entry 52, past the
-        # driver's ~50-query recording window; tools/check_correctness.py
-        # verifies it either way.
-        from schema_fantasy_spark.ops import mm_corpus
-        from schema_fantasy_spark.ops.pdf import pdf_text
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        pdfs = mm_corpus.synthetic_pdfs(docs)
-        txt = pdf_text(pdfs, binary_col="payload", id_col="doc_id")
-        return txt.select(
-            "doc_id",
-            "n_pages",
-            F.length("text").alias("n_chars"),
-            F.md5(F.col("text").cast("binary")).alias("text_md5"),
-        )
 
     def html_metadata_documents(spark, sf):
         # HTML metadata + outlink extraction under the gate (ops/
@@ -3115,73 +2833,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("blocklisted").alias("blocked"),
         )
 
-    def image_phash_neardup(spark, sf):
-        # Perceptual-hash image near-dup under the gate (ops/
-        # multimodal.image_metadata aHash + ops/dedup.
-        # hamming_near_duplicates): per-doc 8x8 images carry a
-        # repetition-coded group pattern — bit b of (g | 0x1000)
-        # drives cells j % 13, so any two groups differ in >= 4 aHash
-        # bits, past the hamming<=3 threshold — plus per-doc uniform
-        # brightness noise that the mean-threshold hash must cancel.
-        # The group modulus SCALES with the corpus (max(50, n/10),
-        # capped at 4095 so codes never saturate): group sizes stay
-        # ~10 and the pair count stays LINEAR at any sf (a fixed
-        # modulus would make this quadratic at sf0.1). Images encode
-        # as real BMP/PPM (alternating), decode through the real
-        # pixel path, and pair via 16-bit-chunk Hamming banding. The
-        # oracle states the pair set closed-form with the same
-        # count-derived modulus: exactly the within-group pairs at
-        # hamming 0. NOTE: entry 71 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        import numpy as np
-        import pandas as pd
-
-        from schema_fantasy_spark.ops.dedup import hamming_near_duplicates
-        from schema_fantasy_spark.ops.multimodal import (
-            encode_bmp24,
-            encode_ppm6,
-        )
-        from schema_fantasy_spark.ops.multimodal import image_metadata
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        gmod = min(4095, max(50, docs.count() // 10))
-
-        def build(batches):
-            for pdf in batches:
-                ids, imgs = [], []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    code = (i % gmod) | 0x1000
-                    d = i % 16
-                    cells = np.array(
-                        [
-                            (235 + d) if (code >> (j % 13)) & 1 else (5 + d)
-                            for j in range(64)
-                        ],
-                        dtype=np.uint8,
-                    ).reshape(8, 8)
-                    px = np.stack([cells] * 3, axis=2)
-                    imgs.append(
-                        encode_bmp24(px) if i % 2 == 0 else encode_ppm6(px)
-                    )
-                    ids.append(i)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "img": pd.Series(imgs, dtype="object"),
-                    }
-                )
-
-        imgs = _spread(docs, "doc_id").mapInPandas(build, "doc_id long, img binary")
-        meta = image_metadata(imgs, binary_col="img", id_col="doc_id")
-        pairs = hamming_near_duplicates(
-            meta, "phash", id_col="doc_id", max_hamming=3
-        )
-        return pairs.select("id_a", "id_b", "hamming")
-
     def crawl_diff_documents(spark, sf):
         # Crawl-over-crawl freshness diff under the gate (ops/urls.
         # canonicalize_url + snapshots.snapshot_diff): the two crawls
@@ -3330,66 +2981,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             soft404_flag(F.col("title"), F.col("text")).alias("soft404"),
         )
 
-    def audio_fp_neardup(spark, sf):
-        # Audio-fingerprint near-dup under the gate (ops/multimodal.
-        # audio_fingerprints + ops/dedup.hamming_near_duplicates) —
-        # the audio twin of entry 71: per-doc PCM-WAV clips carry a
-        # repetition-coded frame-energy pattern (bit f%13 of
-        # (g|0x1000) selects loud vs quiet frames; groups differ in
-        # >= 4 fingerprint bits) plus per-doc uniform amplitude
-        # offsets the mean-threshold hash must cancel. Real WAV
-        # encode -> stdlib wave decode -> fingerprint -> Hamming
-        # banding; group modulus scales with the corpus so the pair
-        # set stays linear. Oracle: within-group pairs at hamming 0.
-        # NOTE: entry 76 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        import numpy as np
-        import pandas as pd
-
-        from schema_fantasy_spark.ops.dedup import hamming_near_duplicates
-        from schema_fantasy_spark.ops.multimodal import (
-            audio_fingerprints,
-            encode_wav_pcm16,
-        )
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        gmod = min(4095, max(50, docs.count() // 10))
-
-        def build(batches):
-            for pdf in batches:
-                ids, wavs = [], []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    code = (i % gmod) | 0x1000
-                    d = (i % 16) * 10
-                    samples = []
-                    for f in range(64):
-                        amp = (20000 if (code >> (f % 13)) & 1 else 500) + d
-                        samples += [amp, -amp, amp, -amp, amp, -amp, amp,
-                                    -amp]
-                    wavs.append(
-                        encode_wav_pcm16(
-                            np.array(samples, dtype=np.int16), rate=8000
-                        )
-                    )
-                    ids.append(i)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "wav": pd.Series(wavs, dtype="object"),
-                    }
-                )
-
-        wavs = _spread(docs, "doc_id").mapInPandas(build, "doc_id long, wav binary")
-        fps = audio_fingerprints(wavs, binary_col="wav", id_col="doc_id")
-        pairs = hamming_near_duplicates(
-            fps, "afp", id_col="doc_id", max_hamming=3
-        )
-        return pairs.select("id_a", "id_b", "hamming")
-
     def stratified_sample_documents(spark, sf):
         # Training-mix stratified sampling under the gate (scale.
         # stratified_sample): per-stratum md5-nibble rates (en 16/16,
@@ -3414,77 +3005,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rows, "doc_id", "lang", {"en": 16, "de": 8, "fr": 4}
         )
         return out.select("doc_id", "lang")
-
-    def video_fp_neardup(spark, sf):
-        # Video keyframe perceptual dedup under the gate — closing the
-        # modality triangle (text 68/near-dup family, image 71, audio
-        # 76): per-doc MJPEG-AVI clips whose FIRST frame is a 64x64
-        # image of 8x8 FLAT blocks carrying the group pattern (bit
-        # b%13 of g|0x1000; flat blocks survive JPEG's lossy AC path,
-        # and per-doc brightness offsets cancel in the mean-threshold
-        # aHash), plus a second, group-uniform frame. The pipeline is
-        # entirely composed of gated operators: encode_jpeg_baseline +
-        # encode_avi_mjpeg -> video_keyframe_hashes (the FUSED RIFF
-        # parse + JPEG decode + aHash pass — sample_frames +
-        # image_metadata chained would serialize every frame's bytes
-        # through an extra Arrow stage boundary; ops/multimodal.py) ->
-        # hamming_near_duplicates. Oracle: within-group pairs at
-        # hamming 0, count-scaled modulus. NOTE: entry 78, past the
-        # driver's ~50-slot recording window; tools/
-        # check_correctness.py verifies it either way.
-        import numpy as np
-        import pandas as pd
-
-        from schema_fantasy_spark.ops.dedup import hamming_near_duplicates
-        from schema_fantasy_spark.ops.jpeg import encode_jpeg_baseline
-        from schema_fantasy_spark.ops.multimodal import video_keyframe_hashes
-        from schema_fantasy_spark.ops.video import encode_avi_mjpeg
-
-        # 1-in-4 deterministic slice: the pure-numpy JPEG decode costs
-        # ~20ms/frame, and the full corpus would spend ~34s at sf0.1
-        # re-proving a decoder that image_decode_synthetic already
-        # loads; the slice keeps the COMPOSITION under the gate at a
-        # quarter of the price (oracle applies the same filter)
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-            & (F.pmod(F.col("doc_id"), F.lit(4)) == 0)
-        )
-        gmod = min(4095, max(50, docs.count() // 10))
-
-        def build(batches):
-            frame2 = encode_jpeg_baseline(
-                np.full((64, 64), 128, dtype=np.uint8)
-            )
-            for pdf in batches:
-                ids, vids = [], []
-                for i in pdf["doc_id"]:
-                    i = int(i)
-                    code = (i % gmod) | 0x1000
-                    d = i % 16
-                    px = np.empty((64, 64), dtype=np.uint8)
-                    for b in range(64):
-                        v = (200 + d) if (code >> (b % 13)) & 1 else (20 + d)
-                        r, c = divmod(b, 8)
-                        px[r * 8:(r + 1) * 8, c * 8:(c + 1) * 8] = v
-                    key = encode_jpeg_baseline(px)
-                    vids.append(encode_avi_mjpeg([key, frame2], 64, 64))
-                    ids.append(i)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "video": pd.Series(vids, dtype="object"),
-                    }
-                )
-
-        vids = _spread(docs, "doc_id").mapInPandas(build, "doc_id long, video binary")
-        meta = video_keyframe_hashes(
-            vids, binary_col="video", id_col="doc_id", every_n=1,
-            max_frames=1,
-        ).filter(F.col("frame_idx") == 0)
-        pairs = hamming_near_duplicates(
-            meta, "phash", id_col="doc_id", max_hamming=3
-        )
-        return pairs.select("id_a", "id_b", "hamming")
 
     def quality_deciles_documents(spark, sf):
         # Exact global quantile buckets under the gate (scale.
@@ -3794,7 +3314,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "http_linked_validation": http_linked_validation,
         "snapshot_diff_documents": snapshot_diff_documents,
         "robots_allowed_documents": robots_allowed_documents,
-        "pdf_extract_documents": pdf_extract_documents,
         "html_metadata_documents": html_metadata_documents,
         "pagerank_hosts_documents": pagerank_hosts_documents,
         "sitemap_urls_documents": sitemap_urls_documents,
@@ -3813,22 +3332,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "substring_dedup_documents": substring_dedup_documents,
         "domain_balance_documents": domain_balance_documents,
         "blocklist_documents": blocklist_documents,
-        "image_phash_neardup": image_phash_neardup,
         "crawl_diff_documents": crawl_diff_documents,
         "sequence_packing_documents": sequence_packing_documents,
         "jsonl_roundtrip_documents": jsonl_roundtrip_documents,
         "soft404_documents": soft404_documents,
-        "audio_fp_neardup": audio_fp_neardup,
         "stratified_sample_documents": stratified_sample_documents,
-        "video_fp_neardup": video_fp_neardup,
         "quality_deciles_documents": quality_deciles_documents,
         "crawl_coverage_documents": crawl_coverage_documents,
         "iceberg_partitioned_documents": iceberg_partitioned_documents,
         "crawl_plan_documents": crawl_plan_documents,
         "entity_decode_documents": entity_decode_documents,
-        "avc1_metadata_synthetic": avc1_metadata_synthetic,
-        "image_resize_synthetic": image_resize_synthetic,
-        "audio_resample_synthetic": audio_resample_synthetic,
         # --- recorded in CORRECTNESS_r01-r07; ~9 more fit the window ---
         "flagship_validation": flagship_validation,
         "combinator_validation": combinator_validation,
@@ -3865,10 +3378,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantized_cosine_topk_embeddings": quantized_cosine_topk_embeddings,
         "ivf_partial_probe_embeddings": ivf_partial_probe_embeddings,
         "near_dup_embeddings": near_dup_embeddings,
-        "image_decode_synthetic": image_decode_synthetic,
-        "jpeg_decode_synthetic": jpeg_decode_synthetic,
-        "video_frames_synthetic": video_frames_synthetic,
-        "audio_metadata_synthetic": audio_metadata_synthetic,
         "text_consistency_documents": text_consistency_documents,
         "gopher_quality_documents": gopher_quality_documents,
         "filter_funnel_documents": filter_funnel_documents,
@@ -4634,265 +4143,6 @@ def oracle_sql() -> dict[str, str]:
       ) h USING (doc_id)
     """
 
-    # ---- multimodal: the oracle re-derives every decoded value from the
-    # same md5(doc_id) nibbles the generator used (ops/mm_corpus.py).
-    # aHash of a two-tone image with grid mean exactly 127.5 is one of
-    # two constants: top-32-bits (sum(color_a) >= 383, bits 0..31) or
-    # bottom-31-bits (bits 32..62; bit 63 is dropped by the 63-bit hash
-    # convention): 2^32-1 = 4294967295, 2^63-2^32 = 9223372032559808512.
-
-    def _nib(i: int) -> str:
-        return f"(strpos('0123456789abcdef', substr(h, {i}, 1)) - 1)"
-
-    _mm_cte = f"""
-    WITH p AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h
-                 FROM documents WHERE doc_id IS NOT NULL),
-    n AS (SELECT doc_id, {", ".join(f"{_nib(i)} AS n{i}" for i in range(1, 15))}
-            FROM p)
-    """
-
-    # webp rows (n1%4=3) split lossless/LOSSY by n14: lossy frames are
-    # gray two-tone, h=32 (MB-row boundary), top tone = n4*16+n5 with
-    # its exact inverse below — so the phash/brightness selectors reduce
-    # to the same n4*16+n5 >= 128 form the jpeg corpus uses
-    image_decode_sql = _mm_cte + """
-    , f AS (SELECT *, (n1 % 4 = 3 AND n14 % 2 = 1) AS lossy FROM n)
-    SELECT doc_id,
-           4 + n2 AS width,
-           CASE WHEN lossy THEN 32 ELSE 8 * (1 + n3 % 3) END AS height,
-           CASE n1 % 4 WHEN 0 THEN 'bmp'
-                WHEN 1 THEN (CASE WHEN n14 % 2 = 1 THEN 'gif' ELSE 'ppm' END)
-                WHEN 2 THEN 'png' ELSE 'webp' END AS format,
-           CASE WHEN (CASE WHEN lossy THEN (n4*16+n5) * 3
-                           ELSE (n4*16+n5) + (n6*16+n7) + (n8*16+n9) END) >= 383
-                THEN 4294967295 ELSE 9223372032559808512 END AS phash,
-           16 AS n_dims,
-           (CASE WHEN lossy THEN (n4*16+n5) * 3
-                 ELSE (n4*16+n5) + (n6*16+n7) + (n8*16+n9) END) >= 383 AS top_brighter,
-           CASE n1 % 4 WHEN 0 THEN 'image/bmp'
-                WHEN 1 THEN (CASE WHEN n14 % 2 = 1
-                             THEN 'image/gif' ELSE 'application/octet-stream' END)
-                WHEN 2 THEN 'image/png' ELSE 'image/webp' END AS mime
-      FROM f
-    """
-
-    # full-tensor resize oracle: rebuild the 6x5x3 nearest-sampled
-    # output closed-form per family (same nibble derivation as
-    # image_decode_sql; DuckDB integer // matches numpy floor-div)
-    # the B_PRED lossy sub-family (n13 odd) reconstructs top = ta+1 /
-    # bottom = 256-ta (doubled residual levels shift both halves by one;
-    # clamped to [0,255], and ta=255's doubled -510 bottom level lands 0)
-    # — swept exhaustively over all 256 tones in tests; the 16x16 path
-    # and every lossless format reconstruct the construction exactly
-    image_resize_sql = _mm_cte + """
-    , f AS (SELECT *, (n1 % 4 = 3 AND n14 % 2 = 1) AS lossy,
-                 n4 * 16 + n5 AS ta FROM n),
-    g AS (SELECT doc_id,
-                 4 + n2 AS w,
-                 CASE WHEN lossy THEN 32 ELSE 8 * (1 + n3 % 3) END AS h,
-                 CASE WHEN lossy AND n13 % 2 = 1
-                      THEN [LEAST(ta + 1, 255),
-                            LEAST(ta + 1, 255), LEAST(ta + 1, 255)]
-                      WHEN lossy THEN [ta, ta, ta]
-                      ELSE [ta, n6*16+n7, n8*16+n9] END AS cht,
-                 CASE WHEN lossy AND n13 % 2 = 1
-                      THEN [CASE WHEN ta = 255 THEN 0
-                                 ELSE LEAST(256 - ta, 255) END,
-                            CASE WHEN ta = 255 THEN 0
-                                 ELSE LEAST(256 - ta, 255) END,
-                            CASE WHEN ta = 255 THEN 0
-                                 ELSE LEAST(256 - ta, 255) END]
-                      WHEN lossy THEN [255 - ta, 255 - ta, 255 - ta]
-                      ELSE [255 - ta, 255 - (n6*16+n7), 255 - (n8*16+n9)]
-                      END AS chb
-            FROM f)
-    SELECT doc_id,
-           CAST(w AS INTEGER) AS src_width,
-           CAST(h AS INTEGER) AS src_height,
-           5 AS out_w, 6 AS out_h,
-           array_to_string(
-             flatten(list_transform(range(0, 6), j ->
-               flatten(list_transform(range(0, 5), i ->
-                 list_transform(range(1, 4), c ->
-                   CASE WHEN (j * h) // 6 < h // 2
-                        THEN cht[c] ELSE chb[c] END))))), ',') AS pixels_csv
-      FROM g
-    """
-
-    # full-waveform resample oracle: laws 0-2 only (PCM + G.711 —
-    # the families with in-container sample decode), corrupt rows
-    # excluded; the alternating square wave replays through the exact
-    # nearest-index map, amp through the ITU expansion formulas
-    audio_resample_sql = _mm_cte + """
-    , g AS (SELECT *,
-                 CASE WHEN n9 % 4 = 0 THEN 3
-                      WHEN n9 % 4 = 2 AND n8 % 2 = 0 THEN 4
-                      WHEN n9 % 4 = 3 AND n8 % 2 = 0 THEN 5
-                      ELSE n14 % 3 END AS law,
-                 n12 % 8 AS aexp, n10 % 16 AS amant
-            FROM n WHERE n13 <> 0),
-    h AS (SELECT doc_id,
-                 8000 * (1 + n10 % 3) AS sr,
-                 400 + 64 * n11 AS nf,
-                 CASE law WHEN 0 THEN 512 * (1 + n12)
-                      WHEN 1 THEN ((amant * 8 + 132) * (1 << aexp)) - 132
-                      ELSE CASE WHEN aexp = 0 THEN amant * 16 + 8
-                                ELSE (amant * 16 + 264) * (1 << (aexp - 1))
-                           END
-                 END AS amp
-            FROM g WHERE law < 3)
-    SELECT doc_id,
-           CAST(sr AS INTEGER) AS src_rate, 16000 AS out_rate,
-           CAST(nf AS BIGINT) AS n_in,
-           CAST((nf * 16000) // sr AS BIGINT) AS n_out,
-           array_to_string(list_transform(range(0, (nf * 16000) // sr),
-             k -> CASE WHEN ((k * sr) // 16000) % 2 = 0
-                       THEN amp ELSE -amp END), ',') AS samples_csv
-      FROM h
-    """
-
-    jpeg_decode_sql = _mm_cte + """
-    SELECT doc_id,
-           4 + n2 AS width,
-           16 AS height,
-           'jpeg' AS format,
-           CASE WHEN n4 * 16 + n5 >= 128
-                THEN 4294967295 ELSE 9223372032559808512 END AS phash
-      FROM n
-    """
-
-    # webm docs (n6 odd) with n14 odd are INTER streams: sampled frame
-    # j's top tone is the base when j % 4 = 0 and its inverse when
-    # j % 4 = 2 (key frame 0, ZEROMV skips on odd frames, SPLITMV
-    # half-swaps on even frames — ops/mm_corpus.video_params)
-    video_frames_sql = _mm_cte + """
-    , f AS (SELECT doc_id, n2, n4, n5, n6, n9, n10, n11, n12, n14,
-                   4 + (n7 % 5) AS nf FROM n)
-    SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-           4 + n2 AS width, 16 AS height,
-           CASE WHEN (CASE WHEN n6 % 2 = 1 AND n14 % 2 = 1
-                           THEN CASE WHEN frame_idx % 4 = 0
-                                     THEN n4 * 16 + n5
-                                     ELSE 255 - (n4 * 16 + n5) END
-                           ELSE (n4 * 16 + n5 + 17 * frame_idx) % 256
-                      END) >= 128
-                THEN 4294967295 ELSE 9223372032559808512 END AS phash,
-           CASE WHEN n9 % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS c_container,
-           160 + 16 * n10 AS c_width,
-           90 + 16 * n11 AS c_height,
-           CASE WHEN n9 % 2 = 0 THEN CAST(24 + n12 AS BIGINT) END AS c_n_frames,
-           CAST(24 + n12 AS DOUBLE) / 8 AS c_duration_sec
-      FROM f, unnest(range(0, nf, 2)) AS t(frame_idx)
-    """
-
-    # the avc1 oracle REPLAYS the encode_mp4_avc1 layout: per-sample
-    # sizes (4-byte NAL length + (200|40) + 8*(j%3) body), keyframes at
-    # every ke-th sample (stss), offsets = 32 (ftyp 24 + mdat header 8)
-    # plus a window cumulative sum — exactly the stsz/stsc/stco walk.
-    # Dims/profile/level restate ops/mm_corpus.avc1_params closed-form;
-    # duration = nf/8 s is an exact multiple of 125 ms (no float fuzz).
-    avc1_meta_sql = _mm_cte + """
-    , f AS (SELECT doc_id,
-                   CASE n8 % 3 WHEN 0 THEN 'avc1' WHEN 1 THEN 'hvc1'
-                        ELSE 'av01' END AS codec,
-                   320 + 2 * n10 AS width, 180 + 2 * n11 AS height,
-                   24 + n12 AS nf,
-                   CASE n8 % 3
-                        WHEN 0 THEN CASE n13 % 4 WHEN 0 THEN 66
-                                  WHEN 1 THEN 77 WHEN 2 THEN 100
-                                  ELSE 122 END
-                        WHEN 1 THEN 1 + n13 % 4
-                        ELSE n13 % 3 END AS profile_idc,
-                   CASE n8 % 3
-                        WHEN 0 THEN CASE n14 % 4 WHEN 0 THEN 30
-                                  WHEN 1 THEN 31 WHEN 2 THEN 40
-                                  ELSE 41 END
-                        WHEN 1 THEN CASE n14 % 4 WHEN 0 THEN 93
-                                  WHEN 1 THEN 120 WHEN 2 THEN 123
-                                  ELSE 150 END
-                        ELSE CASE n14 % 4 WHEN 0 THEN 8 WHEN 1 THEN 12
-                                  WHEN 2 THEN 13 ELSE 16 END
-                        END AS level_idc,
-                   4 + n9 % 3 AS ke
-              FROM n),
-    s AS (SELECT doc_id, ke, j,
-                 CAST(CASE WHEN j % ke = 0 THEN 204 + 8 * (j % 3)
-                           ELSE 44 + 8 * (j % 3) END AS BIGINT) AS sz
-            FROM f, unnest(range(0, nf)) AS t(j)),
-    o AS (SELECT doc_id, j, sz, (j % ke = 0) AS kf,
-                 32 + COALESCE(SUM(sz) OVER (
-                     PARTITION BY doc_id ORDER BY j
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ), 0) AS off
-            FROM s),
-    k AS (SELECT doc_id,
-                 CAST(COUNT(*) FILTER (WHERE kf) AS INTEGER) AS n_keyframes,
-                 CAST(MAX(off) FILTER (WHERE kf) AS BIGINT)
-                     AS last_kf_offset,
-                 CAST(SUM(sz) FILTER (WHERE kf) AS BIGINT) AS kf_bytes
-            FROM o GROUP BY doc_id)
-    SELECT f.doc_id, codec, profile_idc, level_idc,
-           width, height, CAST(nf AS BIGINT) AS n_frames,
-           CAST(nf AS DOUBLE) / 8 AS duration_sec,
-           k.n_keyframes, k.last_kf_offset, k.kf_bytes
-      FROM f JOIN k ON f.doc_id = k.doc_id
-    """
-
-    # rms per codec family (n14 % 3): PCM square wave amp/32768;
-    # G.711 rows replay the ITU expansion formulas on the coded
-    # (exp, mant) pair — mu-law ((mant*8+132)<<exp)-132, A-law
-    # (mant*16+8 | ((mant*16+264)<<(exp-1))) — all exact integers
-    # codec families: n9%4=0 -> MP3 header walk (rms NULL, duration
-    # frames*1152/sr, no 6-decimal ties across the nibble space -
-    # verified exhaustively); else n14%3 -> PCM / G.711 mu-law / A-law
-    # square waves whose expansion formulas replay in SQL
-    audio_meta_sql = _mm_cte + """
-    , g AS (SELECT *,
-                   CASE WHEN n9 % 4 = 0 THEN 3
-                        WHEN n9 % 4 = 2 AND n8 % 2 = 0 THEN 4
-                        WHEN n9 % 4 = 3 AND n8 % 2 = 0 THEN 5
-                        ELSE n14 % 3 END AS law,
-                   n12 % 8 AS aexp, n10 % 16 AS amant,
-                   CASE n11 % 3 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                        ELSE 32000 END AS msr
-              FROM n WHERE n13 <> 0),
-    g2 AS (SELECT *,
-                  CASE WHEN law = 4
-                       THEN CASE n10 % 4 WHEN 0 THEN 44100 WHEN 1 THEN 48000
-                                 WHEN 2 THEN 96000 ELSE 22050 END
-                       WHEN law = 5
-                       THEN CASE WHEN n14 % 2 = 0 THEN 48000
-                            ELSE CASE n10 % 4 WHEN 0 THEN 8000
-                                      WHEN 1 THEN 11025 WHEN 2 THEN 22050
-                                      ELSE 44100 END END
-                       ELSE 8000 * (1 + n10 % 3) END AS wsr,
-                  CASE WHEN law = 4 THEN 10000 + 256 * n11
-                       WHEN law = 5
-                       THEN CASE WHEN n14 % 2 = 0 THEN 960 * (20 + n11)
-                                 ELSE 5000 + 128 * n11 END
-                       ELSE 400 + 64 * n11 END AS wframes
-             FROM g)
-    SELECT doc_id,
-           CASE WHEN law = 3 THEN msr ELSE wsr END AS sample_rate,
-           CASE WHEN law = 3 AND n12 % 4 <> 3 THEN 2
-                WHEN law IN (4, 5) THEN 1 + n12 % 2
-                ELSE 1 END AS n_channels,
-           CAST(CASE WHEN law = 3 THEN 8 + n14 % 8
-                     ELSE wframes END AS BIGINT) AS n_frames,
-           CASE WHEN law = 3
-                THEN round(CAST((8 + n14 % 8) * 1152 AS DOUBLE) / msr, 6)
-                ELSE round(CAST(wframes AS DOUBLE) / wsr, 6)
-                END AS duration_sec,
-           CASE WHEN law >= 3 THEN NULL
-                ELSE round(CAST(CASE law
-                 WHEN 0 THEN 512 * (1 + n12)
-                 WHEN 1 THEN ((amant * 8 + 132) * (1 << aexp)) - 132
-                 ELSE CASE WHEN aexp = 0 THEN amant * 16 + 8
-                           ELSE (amant * 16 + 264) * (1 << (aexp - 1)) END
-               END AS DOUBLE) / 32768, 6) END AS rms
-      FROM g2
-    """
-
     quantized_topk_sql = """
     WITH qs AS (
       SELECT list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127
@@ -5153,13 +4403,6 @@ def oracle_sql() -> dict[str, str]:
         "simhash_near_dup_documents": simhash_sql,
         "ann_lsh_topk_embeddings": ann_lsh_sql,
         "near_dup_embeddings": near_dup_emb_sql,
-        "image_decode_synthetic": image_decode_sql,
-        "jpeg_decode_synthetic": jpeg_decode_sql,
-        "video_frames_synthetic": video_frames_sql,
-        "avc1_metadata_synthetic": avc1_meta_sql,
-        "image_resize_synthetic": image_resize_sql,
-        "audio_resample_synthetic": audio_resample_sql,
-        "audio_metadata_synthetic": audio_meta_sql,
         # the charset-family suffix + (charset, source) labels replay
         # from the same md5-nibble derivation the corpus generator uses;
         # specials as chr() so the SQL is charset-clean itself
@@ -5309,22 +4552,6 @@ def oracle_sql() -> dict[str, str]:
                 ELSE doc_id % 4 <> 3
            END AS allowed
       FROM documents WHERE doc_id IS NOT NULL
-    """,
-        "pdf_extract_documents": _mm_cte + """
-    , pp AS (SELECT doc_id, 1 + n1 % 3 AS np, n2, 1 + n3 % 8 AS pad, n9
-               FROM n WHERE n6 <> 0),
-    ln AS (SELECT doc_id, np, p, l,
-                  'doc ' || doc_id || ' pg ' || p || ' ln ' || l || ' '
-                    || repeat('w', pad)
-                    || CASE WHEN n9 % 2 = 1 THEN ' é→' ELSE '' END AS line
-             FROM pp, unnest(range(0, np)) AS t(p),
-                  unnest(range(0, 2 + (n2 + p) % 3)) AS t2(l)),
-    tx AS (SELECT doc_id, any_value(np) AS n_pages,
-                  string_agg(line, chr(10) ORDER BY p, l) AS txt
-             FROM ln GROUP BY doc_id)
-    SELECT doc_id, CAST(n_pages AS INTEGER) AS n_pages,
-           CAST(length(txt) AS INTEGER) AS n_chars, md5(txt) AS text_md5
-      FROM tx
     """,
         # closed-form expected metadata from the same modular page
         # construction as the Spark query (entry 53)
@@ -5755,20 +4982,6 @@ def oracle_sql() -> dict[str, str]:
            doc_id % 4 IN (1, 2) AS blocked
       FROM documents WHERE doc_id IS NOT NULL
     """,
-        # entry 71: phash near-dup — the pair set is closed-form: all
-        # within-group pairs at hamming 0, with the SAME count-derived
-        # group modulus as the Spark side (per-doc brightness noise
-        # cancels in the mean-threshold aHash; groups differ by >= 4
-        # bits so no cross-group pair survives the hamming<=3 filter)
-        "image_phash_neardup": """
-    WITH m AS (SELECT LEAST(4095, GREATEST(50, COUNT(*) // 10)) AS gmod
-                 FROM documents WHERE doc_id IS NOT NULL)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS INTEGER) AS hamming
-      FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-      CROSS JOIN m
-     WHERE a.doc_id IS NOT NULL AND b.doc_id IS NOT NULL
-       AND a.doc_id % m.gmod = b.doc_id % m.gmod
-    """,
         # entry 72: crawl diff — canonical keys and verdicts stated
         # closed-form per family (m=3 exists only in crawl A, m=4 only
         # in crawl B, m in {1,2} change content, m=0 is identical)
@@ -5825,17 +5038,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT doc_id, doc_id % 5 IN (1, 2, 4) AS soft404
       FROM documents WHERE doc_id IS NOT NULL
     """,
-        # entry 76: audio near-dup — identical pair-set contract as
-        # entry 71 (count-derived modulus, hamming 0 within groups)
-        "audio_fp_neardup": """
-    WITH m AS (SELECT LEAST(4095, GREATEST(50, COUNT(*) // 10)) AS gmod
-                 FROM documents WHERE doc_id IS NOT NULL)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS INTEGER) AS hamming
-      FROM documents a JOIN documents b ON a.doc_id < b.doc_id
-      CROSS JOIN m
-     WHERE a.doc_id IS NOT NULL AND b.doc_id IS NOT NULL
-       AND a.doc_id % m.gmod = b.doc_id % m.gmod
-    """,
         # entry 77: stratified sampling — nibble predicate + per-stratum
         # rates replayed (en 16 keeps all, de 8, fr 4, xx default 0)
         "stratified_sample_documents": """
@@ -5849,17 +5051,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT doc_id, lang FROM d
      WHERE nib < CASE lang WHEN 'en' THEN 16 WHEN 'de' THEN 8
                            WHEN 'fr' THEN 4 ELSE 0 END
-    """,
-        # entry 78: video keyframe near-dup — same pair-set contract
-        # as entries 71/76 (count-derived modulus, hamming 0)
-        "video_fp_neardup": """
-    WITH s AS (SELECT doc_id FROM documents
-                WHERE doc_id IS NOT NULL AND doc_id % 4 = 0),
-    m AS (SELECT LEAST(4095, GREATEST(50, COUNT(*) // 10)) AS gmod FROM s)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS INTEGER) AS hamming
-      FROM s a JOIN s b ON a.doc_id < b.doc_id
-      CROSS JOIN m
-     WHERE a.doc_id % m.gmod = b.doc_id % m.gmod
     """,
         # entry 79: exact quantile buckets — the two-pass cumulative
         # replayed with a running-sum window over per-score counts

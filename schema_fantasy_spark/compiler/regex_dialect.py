@@ -37,6 +37,8 @@ import re
 _HEX4 = re.compile(r"[0-9a-fA-F]{4}\Z")
 #: valid quantifier brace forms: {n}, {n,}, {n,m} (ECMA-262 + Java + re)
 _QUANT = re.compile(r"\{\d+(?:,\d*)?\}")
+#: non-capturing and lookaround group openers: (?: (?= (?! (?<= (?<!
+_GROUP_PREFIX = re.compile(r"\(\?(?:[:=!]|<[=!])")
 
 
 class RegexDialectError(ValueError):
@@ -138,7 +140,13 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 continue
             out.append(pattern[i : i + 2])
             i += 2
-            prev_atom = True
+            prev_atom = nxt not in "bB"  # word-boundary assertions
+            continue
+        m = None if in_class else _GROUP_PREFIX.match(pattern, i)
+        if m:
+            out.append(m.group(0))
+            i = m.end()
+            prev_atom = False
             continue
         if (
             not in_class
@@ -177,6 +185,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                     )
                 out.append(m.group(0))
                 i = m.end()
+                prev_atom = False  # a quantifier cannot be quantified
                 continue
             out.append("\\" + ch)
             i += 1
@@ -184,9 +193,10 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             continue
         if not in_class and ch != "[":
             # '(' opens a group and '|' starts a fresh alternative —
-            # nothing quantifiable precedes the next term; every other
-            # pattern character is itself an atom
-            prev_atom = ch not in "(|"
+            # nothing quantifiable precedes the next term; '^'/'$' are
+            # assertions and '*'/'+'/'?' quantifiers, not atoms; every
+            # other pattern character is itself an atom
+            prev_atom = ch not in "(|^$*+?"
         out.append(ch)
         i += 1
     return "".join(out)

@@ -30,6 +30,12 @@ def _reject_constant(name: str):
     raise ValueError(f"non-standard JSON constant: {name}")
 
 
+def _quarantine(keyword: str, message: str, actual: Optional[str]) -> list:
+    """The one violation row of a document the kernel cannot evaluate."""
+    return [{"path": [], "keyword": keyword, "message": message,
+             "expected": None, "actual": actual, "depth": 0}]
+
+
 def json_errors_udf(schema: Any, refs: Optional[Dict[str, Any]] = None):
     """A pandas UDF: json-string column -> errors array<struct> column."""
     compiled = compile_schema(schema, refs=refs)
@@ -54,17 +60,15 @@ def json_errors_udf(schema: Any, refs: Optional[Dict[str, Any]] = None):
                     # so it can never collide with schema-driven errors).
                     # Message format matches variant.py's $parse row
                     # exactly so the two modes stay oracle-interchangeable.
-                    return [
-                        {
-                            "path": [],
-                            "keyword": "$parse",
-                            "message": "malformed JSON: " + doc[:80],
-                            "expected": None,
-                            "actual": doc[:80],
-                            "depth": 0,
-                        }
-                    ]
-            return errs_to_rows(validate(value))
+                    return _quarantine("$parse", "malformed JSON: " + doc[:80],
+                                       doc[:80])
+            try:
+                return errs_to_rows(validate(value))
+            except RecursionError:
+                # well-formed but nested past the kernel's recursion
+                # budget: the same per-document quarantine as $parse
+                return _quarantine("$depth", "document nests too deeply to "
+                                   "validate", None)
 
         return docs.map(one)
 

@@ -898,11 +898,9 @@ def hamming_near_duplicates(
     chunk_bits: int = 16,
 ) -> DataFrame:
     """Near-duplicate pairs over a PRECOMPUTED <=64-bit signature
-    column — the multimodal twin of ``simhash_near_duplicates``: feed
-    it the perceptual image hash from ``ops.multimodal.image_metadata``
-    (``phash``) and it finds visually-identical-modulo-noise images the
-    way simhash finds boilerplate-variant pages. Any Hamming-space
-    signature works (audio fingerprints, video keyframe hashes).
+    column — the generic twin of ``simhash_near_duplicates``: any
+    Hamming-space signature works (a perceptual image hash, an audio
+    fingerprint, a simhash computed elsewhere).
 
     4-chunk pigeonhole banding: a pair within ``max_hamming`` <=
     64/chunk_bits - 1 differing bits must agree on at least one chunk,

@@ -16,8 +16,7 @@ documented there too).
 Corrupt members QUARANTINE per-row (crc mismatch / bad compression
 surface as ``error`` with NULL content) rather than failing the stage —
 at 10^6 archives one damaged file must not kill the job. Encrypted
-members quarantine the same way (flag bit 0), mirroring ops/pdf.py's
-/Encrypt stance.
+members quarantine the same way (flag bit 0).
 
 Reference parity note: ingestion edge, same seam as sources/warc.py
 (the reference validates in-memory documents; containers are

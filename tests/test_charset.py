@@ -5,7 +5,7 @@ the per-row quarantine contract."""
 import pytest
 
 from schema_fantasy_spark.ops import charset as cs
-from schema_fantasy_spark.ops import mm_corpus as mc
+from schema_fantasy_spark.ops import charset_corpus as mc
 from schema_fantasy_spark.ops.charset import transcode
 
 
@@ -113,7 +113,7 @@ def test_prescan_window(spark):
 
 
 def test_gate_families_round_trip(spark):
-    """Every gate family (mm_corpus.CHARSET_FAMILIES) round-trips: the
+    """Every gate family (charset_corpus.CHARSET_FAMILIES) round-trips: the
     generator's encode and the operator's sniff+decode agree on charset,
     source, and the exact special chars."""
     rows = []

@@ -67,3 +67,23 @@ def test_malformed_json_quarantined(spark):
     assert "malformed JSON" in by_id[2]["errors"][0]["message"]
     assert by_id[3]["verdict"] is True  # null value: required is vacuous (type guard)
     assert by_id[4]["errors"][0]["keyword"] == "$parse"
+
+
+def test_deep_document_quarantined(spark):
+    """A well-formed document nested past the kernel's recursion budget
+    yields one '$depth' row instead of failing the task; a shallower one
+    of the same shape validates normally."""
+    schema = {
+        "definitions": {"n": {"type": "array", "items": {"$ref": "#/definitions/n"}}},
+        "$ref": "#/definitions/n",
+    }
+    df = spark.createDataFrame(
+        [(d, "[" * d + "]" * d) for d in (300, 600)], "depth: long, doc: string"
+    )
+    by_depth = {r["depth"]: r for r in validate_json(df, "doc", schema).collect()}
+    assert by_depth[300]["verdict"] is True
+    assert by_depth[300]["errors"] == []
+    (row,) = by_depth[600]["errors"]
+    assert by_depth[600]["verdict"] is False
+    assert (row["keyword"], row["path"], row["depth"]) == ("$depth", [], 0)
+    assert row["message"] == "document nests too deeply to validate"

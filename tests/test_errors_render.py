@@ -112,6 +112,52 @@ def test_errs_to_rows_flatten():
     assert rows[1]["path"] == ["a"]
 
 
+# (schema, value, [(path, keyword, depth), ...]) — the flattened row shape
+# the Spark modes emit: paths point at the failing value, compound errors
+# come before their children, and errors accumulate without short-circuit.
+ROW_SHAPES = [
+    ({"type": "string"}, 3, [([], "type", 0)]),
+    ({"items": {"type": "integer"}}, [1, "x", 2, "y"],
+     [(["1"], "type", 0), (["3"], "type", 0)]),
+    ({"items": [{"type": "integer"}], "additionalItems": False}, [1, 2],
+     [(["1"], "items", 0)]),
+    ({"properties": {"a": {"items": {"minimum": 0}}}}, {"a": [0, -1]},
+     [(["a", "1"], "minimum", 0)]),
+    ({"patternProperties": {"^x": {"type": "string"}}}, {"x1": 1, "y": 1},
+     [(["x1"], "type", 0)]),
+    ({"additionalProperties": {"type": "string"}}, {"b": 2},
+     [([], "additionalProperties", 0), (["b"], "type", 1)]),
+    ({"required": ["a", "b"]}, {}, [([], "required", 0), ([], "required", 0)]),
+    ({"dependencies": {"a": ["b"]}}, {"a": 1},
+     [([], "dependencies", 0), ([], "dependencies", 1)]),
+    ({"dependencies": {"a": {"required": ["c"]}}}, {"a": 1},
+     [([], "dependencies", 0), ([], "required", 1)]),
+    ({"allOf": [{"type": "string"}, {"minimum": 2}]}, 1,
+     [([], "allOf", 0), ([], "type", 1), ([], "minimum", 1)]),
+    ({"anyOf": [{"type": "string"}, {"minimum": 2}]}, 1,
+     [([], "anyOf", 0), ([], "type", 1), ([], "minimum", 1)]),
+    ({"oneOf": [{"type": "string"}, {"minimum": 2}]}, 1,
+     [([], "oneOf", 0), ([], "type", 1), ([], "minimum", 1)]),
+    ({"oneOf": [{"type": "integer"}, {"minimum": 0}]}, 1, [([], "oneOf", 0)]),
+    ({"not": {"type": "integer"}}, 1, [([], "not", 0)]),
+    ({"properties": {"a": {"allOf": [{"properties": {"b": {"type": "null"}}}]}}},
+     {"a": {"b": 1}}, [(["a"], "allOf", 0), (["a", "b"], "type", 1)]),
+    ({"definitions": {"p": {"type": "integer"}},
+      "properties": {"a": {"$ref": "#/definitions/p"}}}, {"a": "x"},
+     [(["a"], "type", 0)]),
+    ({"type": "string", "minLength": 3, "properties": {"a": {}}}, "ab",
+     [([], "minLength", 0)]),
+]
+
+
+@pytest.mark.parametrize(
+    "schema,value,want", ROW_SHAPES, ids=[str(i) for i in range(len(ROW_SHAPES))]
+)
+def test_error_row_shape(schema, value, want):
+    rows = errs_to_rows(compile_schema(schema).validate(value))
+    assert [(r["path"], r["keyword"], r["depth"]) for r in rows] == want
+
+
 # ------------------------------------------------------------------- linker
 
 

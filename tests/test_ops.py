@@ -1,12 +1,12 @@
 """Pipeline-operator tests: dedup (exact/MinHash/SimHash/Jaccard),
-similarity (brute force vs LSH recall), text analysis, multimodal stubs.
+similarity (brute force vs LSH recall), text analysis, url and validation.
 LSH paths are asserted against brute-force ground truth computed in the
 same session."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from schema_fantasy_spark.ops import dedup, multimodal, similarity as sim, text as tx
+from schema_fantasy_spark.ops import dedup, similarity as sim, text as tx
 
 # deterministic corpus: clusters of near-duplicates + unrelated docs
 BASE = ("the quick brown fox jumps over the lazy dog while the cat sleeps "
@@ -235,45 +235,6 @@ def test_fingerprint_stability(docs):
     assert fp[0] != fp[4]
 
 
-# ------------------------------------------------------------- multimodal
-
-
-def test_image_metadata_stub(spark):
-    df = spark.createDataFrame(
-        [(1, b"imagebytes-1"), (2, b"imagebytes-22"), (3, None)],
-        "id: long, html: binary",
-    )
-    out = multimodal.image_metadata(df).collect()
-    assert sorted(r["doc_id"] for r in out) == [1, 2]  # null payload skipped
-    m = {r["doc_id"]: r for r in out}
-    assert m[1]["n_bytes"] == 12 and 64 <= m[1]["width"] < 256
-    assert m[1]["format"] in ("jpeg", "png", "webp")
-    # deterministic: same payload -> same phash
-    again = {r["doc_id"]: r["phash"] for r in multimodal.image_metadata(df).collect()}
-    assert again == {r["doc_id"]: r["phash"] for r in out}
-
-
-def test_image_features_stub(spark):
-    df = spark.createDataFrame([(1, b"payload")], "id: long, html: binary")
-    out = multimodal.image_features(df, dim=16).collect()
-    assert len(out) == 1 and len(out[0]["feature"]) == 16
-    assert all(0.0 <= x <= 1.0 for x in out[0]["feature"])
-
-
-def test_sample_frames_stub(spark):
-    df = spark.createDataFrame(
-        [(1, bytes(range(200))), (2, b"tiny")], "id: long, html: binary"
-    )
-    out = multimodal.sample_frames(df, every_n=2, max_frames=3).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert len(by_doc[1]) == 3 and [r["frame_idx"] for r in by_doc[1]] == [0, 2, 4]
-    assert len(by_doc[2]) == 1
-    with pytest.raises(ValueError):
-        multimodal.sample_frames(df, every_n=0)
-
-
 def test_ivf_topk_recall(emb):
     """IVF index + probe: recall of the exact top-10 with 4/16 lists
     probed must be high on clustered-ish data; probing ALL lists must
@@ -487,224 +448,7 @@ def test_dedup_units_sep_is_literal(spark):
     assert out == {0: "one.two.three", 1: "four"}
 
 
-# ------------------------------------------------------------- multimodal
-
-
-def _make_bmp(px):
-    """24-bit uncompressed BMP from an HxWx3 uint8 array (bottom-up, BGR,
-    4-byte-padded rows) — built by hand so the decoder is tested against
-    an independent construction."""
-    import struct
-
-    h, w = px.shape[:2]
-    row = (w * 3 + 3) & ~3
-    body = bytearray()
-    for r in range(h - 1, -1, -1):  # bottom-up
-        line = px[r, :, ::-1].tobytes()  # RGB -> BGR
-        body += line + b"\x00" * (row - len(line))
-    off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", off + len(body), 0, 0, off)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return bytes(header + dib + body)
-
-
-def _make_ppm(px):
-    h, w = px.shape[:2]
-    return b"P6\n# test\n%d %d\n255\n" % (w, h) + px.tobytes()
-
-
-def _make_wav(samples, rate=8000):
-    import io as _io
-    import wave as _wave
-
-    buf = _io.BytesIO()
-    with _wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(samples.astype("<i2").tobytes())
-    return buf.getvalue()
-
-
-def test_image_decode_real_formats(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    px = rng.randint(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    # decoders round-trip the hand-built containers exactly
-    assert (multimodal.decode_image_pixels(_make_bmp(px)) == px).all()
-    assert (multimodal.decode_image_pixels(_make_ppm(px)) == px).all()
-    assert multimodal.decode_image_header(_make_bmp(px)) == (7, 5, "bmp")
-    assert multimodal.decode_image_header(_make_ppm(px)) == (7, 5, "ppm")
-    # PNG/JPEG header-only parses (no codec needed for dimensions)
-    png = b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR" + (640).to_bytes(4, "big") + (480).to_bytes(4, "big") + b"\x08\x02" + b"\x00" * 20
-    assert multimodal.decode_image_header(png) == (640, 480, "png")
-    jpg = b"\xff\xd8" + b"\xff\xe0\x00\x10" + b"\x00" * 14 + b"\xff\xc0\x00\x11\x08" + (31).to_bytes(2, "big") + (64).to_bytes(2, "big") + b"\x00" * 20
-    assert multimodal.decode_image_header(jpg) == (64, 31, "jpeg")
-    # end-to-end through mapInPandas: real metadata + real aHash
-    df = spark.createDataFrame(
-        [(1, bytearray(_make_bmp(px))), (2, bytearray(_make_ppm(px)))],
-        "id: long, html: binary",
-    )
-    meta = {r["doc_id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert (meta[1]["width"], meta[1]["height"], meta[1]["format"]) == (7, 5, "bmp")
-    assert meta[2]["format"] == "ppm"
-    # identical pixels -> identical perceptual hash across containers
-    assert meta[1]["phash"] == meta[2]["phash"] == multimodal.ahash64(px)
-    # real block-mean features match the direct computation
-    feats = {r["doc_id"]: r["feature"] for r in multimodal.image_features(df).collect()}
-    want = (multimodal._gray_grid(px, 4) / 255.0).flatten()
-    assert feats[1] == pytest.approx(list(want), abs=1e-6)
-    assert feats[1] == feats[2]
-
-
-def test_png_pixel_decode_all_filters(spark):
-    """REAL PNG pixel decode (stdlib zlib): every scanline filter
-    round-trips bit-exactly, and PNG rows flow through image_metadata
-    with real dims + real aHash (equal to the same pixels in BMP)."""
-    import numpy as np
-
-    rng = np.random.RandomState(11)
-    px = rng.randint(0, 256, size=(8, 6, 3), dtype=np.uint8)
-    for ft in range(5):  # None / Sub / Up / Average / Paeth
-        payload = multimodal.encode_png_rgb(px, filter_type=ft)
-        out = multimodal.decode_image_pixels(payload)
-        assert out is not None and (out == px).all(), f"filter {ft}"
-    df = spark.createDataFrame(
-        [(1, bytearray(multimodal.encode_png_rgb(px, filter_type=4))),
-         (2, bytearray(_make_bmp(px)))],
-        "id: long, html: binary",
-    )
-    meta = {r["doc_id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert (meta[1]["width"], meta[1]["height"], meta[1]["format"]) == (6, 8, "png")
-    # identical pixels -> identical perceptual hash across containers
-    assert meta[1]["phash"] == meta[2]["phash"] == multimodal.ahash64(px)
-    # block-mean features are real for PNG now too
-    feats = {r["doc_id"]: r["feature"] for r in multimodal.image_features(df).collect()}
-    assert feats[1] == feats[2]
-    # truncated IDAT: pixel decode refuses, header dims still real
-    trunc = multimodal.encode_png_rgb(px)[:41]
-    assert multimodal.decode_image_pixels(trunc) is None
-
-
-def test_mm_corpus_roundtrip(spark):
-    """The driver-gate corpus generator: payloads decode to exactly the
-    md5-nibble parameters on the Spark path, and truncated WAVs
-    quarantine per row."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops import mm_corpus as mc
-
-    ids = spark.createDataFrame([(i,) for i in range(64)], "doc_id: long")
-    meta = {
-        r["doc_id"]: r
-        for r in multimodal.image_metadata(
-            mc.synthetic_images(ids), binary_col="payload", id_col="doc_id"
-        ).collect()
-    }
-    assert len(meta) == 64
-    for i in range(64):
-        nib = mc._nibbles(i)
-        fsel, w, h, ca = mc.image_params(i, nib)
-        lossy = fsel == 3 and nib[13] % 2 == 1
-        if lossy:
-            # lossy-VP8 rows: gray two-tone (top tone = ca[0]) on the
-            # 16-row MB boundary, h fixed at 32
-            h, bright = 32, ca[0] >= 128
-        else:
-            bright = sum(ca) >= 383
-        assert (meta[i]["width"], meta[i]["height"]) == (w, h), i
-        exp_fmt = {0: "bmp", 1: "ppm", 2: "png", 3: "webp"}[fsel]
-        if fsel == 1 and nib[13] % 2 == 1:
-            exp_fmt = "gif"  # nibble-13 split (mm_corpus: ppm or GIF)
-        assert meta[i]["format"] == exp_fmt, i
-        assert meta[i]["phash"] == (
-            4294967295 if bright else 9223372032559808512
-        ), i
-    audio = {
-        r["doc_id"]: r
-        for r in multimodal.audio_metadata(
-            mc.synthetic_audio(ids), binary_col="payload", id_col="doc_id"
-        ).collect()
-    }
-    for i in range(64):
-        sr, nf, amp, corrupt, law = mc.audio_params(i)
-        if corrupt:
-            assert i not in audio  # truncated container -> quarantined row
-            continue
-        r = audio[i]
-        nib = mc._nibbles(i)
-        if law == 3:  # MP3: header walk only, rms NULL
-            assert r["sample_rate"] == [44100, 48000, 32000][nib[10] % 3]
-            assert r["n_channels"] == (1 if nib[11] % 4 == 3 else 2)
-            assert r["n_frames"] == 8 + nib[13] % 8
-            assert r["rms"] is None
-            continue
-        if law in (4, 5):  # FLAC / Ogg: metadata walk only, rms NULL
-            assert (r["sample_rate"], r["n_frames"]) == (sr, nf), i
-            assert r["n_channels"] == 1 + nib[11] % 2, i
-            assert r["rms"] is None, i
-            continue
-        assert (r["sample_rate"], r["n_frames"], r["n_channels"]) == (sr, nf, 1)
-        if law == 0:
-            v = amp
-        else:  # G.711: ITU expansion of the coded (exp, mant) pair
-            exp, mant = nib[11] % 8, nib[9] % 16
-            if law == 1:
-                v = ((mant * 8 + 0x84) << exp) - 0x84
-            else:
-                v = (mant * 16 + 8) if exp == 0 else ((mant * 16) + 0x108) << (exp - 1)
-        # operator rounds HALF_UP (oracle parity); python round() is
-        # half-even and disagrees on exact .5 ties — compare by distance
-        assert abs(r["rms"] - v / 32768.0) < 1e-6, (i, law)
-
-
-def test_audio_decode_wav(spark):
-    import numpy as np
-
-    t = np.arange(8000)
-    sine = (np.sin(2 * np.pi * 440 * t / 8000) * 16384).astype("<i2")
-    silent = np.zeros(4000, dtype="<i2")
-    df = spark.createDataFrame(
-        [(1, bytearray(_make_wav(sine))), (2, bytearray(_make_wav(silent))),
-         (3, bytearray(b"not audio at all"))],
-        "id: long, html: binary",
-    )
-    out = {r["doc_id"]: r for r in multimodal.audio_metadata(df).collect()}
-    assert set(out) == {1, 2}  # non-WAV rows are quarantined away
-    assert out[1]["sample_rate"] == 8000 and out[1]["n_frames"] == 8000
-    assert out[1]["duration_sec"] == pytest.approx(1.0)
-    # RMS of a 0.5-amplitude sine is 0.5/sqrt(2)
-    assert out[1]["rms"] == pytest.approx(0.5 / np.sqrt(2), abs=1e-3)
-    assert out[2]["rms"] == 0.0
-
-
-def test_multimodal_corrupt_containers_quarantined(spark):
-    """Corrupt containers must quarantine per row, never fail the stage:
-    zero/negative PPM dims, absurd PNG dims, JPEG fill bytes."""
-    import numpy as np
-
-    rng = np.random.RandomState(5)
-    good = _make_ppm(rng.randint(0, 256, size=(4, 4, 3), dtype=np.uint8))
-    zero_ppm = b"P6\n0 0\n255\n"
-    neg_ppm = b"P6\n-3 5\n255\n" + b"\x00" * 64
-    huge_png = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
-                + (2**31 + 5).to_bytes(4, "big") + (10).to_bytes(4, "big") + b"\x00" * 24)
-    fill_jpg = (b"\xff\xd8" + b"\xff\xff\xff\xff"  # fill bytes before marker
-                + b"\xff\xc0\x00\x11\x08" + (9).to_bytes(2, "big")
-                + (11).to_bytes(2, "big") + b"\x00" * 20)
-    df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(zero_ppm)), (3, bytearray(neg_ppm)),
-         (4, bytearray(huge_png)), (5, bytearray(fill_jpg))],
-        "id: long, html: binary",
-    )
-    meta = {r["doc_id"]: r for r in multimodal.image_metadata(df).collect()}
-    assert meta[1]["format"] == "ppm" and meta[1]["width"] == 4
-    # corrupt rows fall back to the stub instead of crashing or lying
-    assert 2 in meta and 3 in meta and 4 in meta  # stub metadata, job alive
-    assert meta[5]["format"] == "jpeg" and (meta[5]["width"], meta[5]["height"]) == (11, 9)
-    feats = {r["doc_id"]: r["feature"] for r in multimodal.image_features(df).collect()}
-    assert feats[1] is not None and len(feats) == 5
+# ------------------------------------------------------------- validation
 
 
 def test_nan_infinity_docs_quarantined_in_both_modes(spark):
@@ -836,512 +580,10 @@ def test_keep_representatives_all_null_scores(spark):
     assert kept == [1, 11, 99]
 
 
-def _build_png(w, h, depth, ctype, interlace, raw, plte=None):
-    """Independent PNG container builder for decoder tests."""
-    import struct
-    import zlib
-
-    def chunk(t, d):
-        return (struct.pack(">I", len(d)) + t + d
-                + struct.pack(">I", zlib.crc32(t + d) & 0xFFFFFFFF))
-
-    parts = [b"\x89PNG\r\n\x1a\n",
-             chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, depth, ctype, 0, 0, interlace))]
-    if plte is not None:
-        parts.append(chunk(b"PLTE", plte))
-    parts.append(chunk(b"IDAT", zlib.compress(raw)))
-    parts.append(chunk(b"IEND", b""))
-    return b"".join(parts)
-
-
-def _pack_row(samples, depth):
-    if depth == 8:
-        return bytes(samples)
-    if depth == 16:
-        return b"".join(bytes([s, (s * 7) % 256]) for s in samples)  # low byte dropped
-    out, acc, nb = bytearray(), 0, 0
-    for s in samples:
-        acc = (acc << depth) | s
-        nb += depth
-        if nb == 8:
-            out.append(acc)
-            acc, nb = 0, 0
-    if nb:
-        out.append(acc << (8 - nb))
-    return bytes(out)
-
-
-def test_png_full_feature_decode():
-    """PNG decode across the whole still-image feature set: gray depths
-    1/2/4/8/16 (sub-byte scaled to full range, 16-bit high byte kept),
-    palette depths 1/2/4/8, gray+alpha, 16-bit RGB/RGBA, and Adam7
-    interlacing at awkward dimensions — every container built by an
-    independent test-side writer. The Adam7 pass layout is also checked
-    against the PNG spec's canonical 8x8 pass-number grid."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.multimodal import _ADAM7
-
-    rng = np.random.RandomState(5)
-    # gray, all depths
-    for depth in (1, 2, 4, 8, 16):
-        w, h = 7, 5
-        maxv = (1 << min(depth, 8)) - 1
-        g = rng.randint(0, maxv + 1, (h, w))
-        raw = b"".join(b"\x00" + _pack_row(list(g[y]), depth) for y in range(h))
-        out = multimodal.decode_image_pixels(_build_png(w, h, depth, 0, 0, raw))
-        want = (g * 255 // maxv if depth < 8 else g).astype(np.uint8)
-        assert out is not None and (out == np.repeat(want[:, :, None], 3, 2)).all(), depth
-    # palette, all legal depths
-    for depth in (1, 2, 4, 8):
-        w, h = 6, 4
-        n_pal = (1 << depth) if depth < 8 else 13
-        pal = rng.randint(0, 256, (n_pal, 3), dtype=np.uint8)
-        idx = rng.randint(0, n_pal, (h, w))
-        raw = b"".join(b"\x00" + _pack_row(list(idx[y]), depth) for y in range(h))
-        out = multimodal.decode_image_pixels(
-            _build_png(w, h, depth, 3, 0, raw, plte=pal.tobytes())
-        )
-        assert out is not None and (out == pal[idx]).all(), depth
-    # gray+alpha and 16-bit RGB/RGBA
-    for depth, ctype, ch in [(8, 4, 2), (16, 4, 2), (16, 2, 3), (16, 6, 4)]:
-        w, h = 5, 3
-        s = rng.randint(0, 256, (h, w, ch))
-        raw = b"".join(
-            b"\x00" + _pack_row(list(s[y].reshape(-1)), depth) for y in range(h)
-        )
-        out = multimodal.decode_image_pixels(_build_png(w, h, depth, ctype, 0, raw))
-        want = (np.repeat(s[:, :, 0:1], 3, 2) if ctype == 4 else s[:, :, :3]).astype(
-            np.uint8
-        )
-        assert out is not None and (out == want).all(), (depth, ctype)
-    # Adam7 at dimensions exercising empty and partial passes
-    for (w, h) in [(8, 8), (11, 5), (1, 1), (3, 9), (2, 2)]:
-        px = rng.randint(0, 256, (h, w, 3), dtype=np.uint8)
-        raw = bytearray()
-        for (x0, y0, dx, dy) in _ADAM7:
-            sub = px[y0::dy, x0::dx]
-            if sub.size == 0:
-                continue  # empty passes contribute no scanlines (spec)
-            for row in sub:
-                raw += b"\x00" + row.reshape(-1).tobytes()
-        out = multimodal.decode_image_pixels(_build_png(w, h, 8, 2, 1, bytes(raw)))
-        assert out is not None and (out == px).all(), (w, h)
-    # pass-number grid vs the spec's canonical pattern
-    grid = np.zeros((8, 8), dtype=int)
-    for i, (x0, y0, dx, dy) in enumerate(_ADAM7, start=1):
-        region = grid[y0::dy, x0::dx]
-        grid[y0::dy, x0::dx] = np.where(region == 0, i, region)
-    spec = np.array(
-        [[1, 6, 4, 6, 2, 6, 4, 6], [7] * 8, [5, 6, 5, 6, 5, 6, 5, 6], [7] * 8,
-         [3, 6, 4, 6, 3, 6, 4, 6], [7] * 8, [5, 6, 5, 6, 5, 6, 5, 6], [7] * 8]
-    )
-    assert (grid == spec).all()
-    # corrupt: palette index beyond PLTE quarantines (None), never crashes
-    raw = b"".join(b"\x00" + _pack_row(r, 8) for r in [[5, 1], [0, 2]])
-    assert multimodal.decode_image_pixels(
-        _build_png(2, 2, 8, 3, 0, raw, plte=bytes(range(9)))
-    ) is None
-
-
 # ------------------------------------------------------------------- jpeg
 
 
-def test_jpeg_constant_block_roundtrip_exact():
-    """All-ones quant + MCU-aligned two-tone: DC = 8*(v-128) integral,
-    AC zero -> decode must reproduce every pixel bit-exactly."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import decode_jpeg_pixels, encode_jpeg_baseline
-
-    img = np.empty((16, 24), np.uint8)
-    img[:8] = 200
-    img[8:] = 55
-    dec = decode_jpeg_pixels(encode_jpeg_baseline(img))
-    assert dec is not None and dec.shape == (16, 24, 3)
-    assert (dec[:, :, 0] == img).all() and (dec[:, :, 2] == img).all()
-    # non-multiple-of-8 width: edge-replicate pad then crop
-    img2 = np.empty((16, 13), np.uint8)
-    img2[:8] = 10
-    img2[8:] = 245
-    dec2 = decode_jpeg_pixels(encode_jpeg_baseline(img2))
-    assert dec2.shape == (16, 13, 3) and (dec2[:, :, 1] == img2).all()
-
-
-def test_jpeg_roundtrip_vs_ground_truth():
-    """Independent ground truth: for each 8x8 block of the padded plane,
-    the decoder must output round(IDCT(round(DCT(block-128))) + 128)
-    clipped — computed here with a separately-written full-matrix DCT."""
-    import math
-
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import decode_jpeg_pixels, encode_jpeg_baseline
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (24, 16), dtype=np.uint8)
-    # independent basis build (loop-free, different construction route)
-    x = np.arange(8)
-    u = np.arange(8)[:, None]
-    basis = 0.5 * np.cos((2 * x + 1) * u * math.pi / 16.0)
-    basis[0] *= 1.0 / math.sqrt(2.0)
-    expect = np.empty_like(img)
-    for by in range(3):
-        for bx in range(2):
-            blk = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8].astype(float) - 128.0
-            coef = np.rint(basis @ blk @ basis.T)
-            out = np.clip(np.rint(basis.T @ coef @ basis + 128.0), 0, 255)
-            expect[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = out.astype(np.uint8)
-    dec = decode_jpeg_pixels(encode_jpeg_baseline(img))
-    assert (dec[:, :, 0] == expect).all()
-
-
-def test_jpeg_color_and_subsampling():
-    """4:4:4 color round-trips within YCbCr rounding (<= 4 levels); a
-    gray-content image through 4:2:0 (constant chroma, lossless to
-    subsample) stays within DCT rounding (<= 3)."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import decode_jpeg_pixels, encode_jpeg_baseline
-
-    rng = np.random.default_rng(13)
-    img = rng.integers(0, 256, (17, 19, 3), dtype=np.uint8)
-    dec = decode_jpeg_pixels(encode_jpeg_baseline(img))
-    assert dec.shape == img.shape
-    assert np.abs(dec.astype(int) - img.astype(int)).max() <= 4
-    gray = (np.add.outer(np.arange(24) * 3, np.arange(40) * 2) % 256).astype(np.uint8)
-    img2 = np.repeat(gray[:, :, None], 3, axis=2)
-    dec2 = decode_jpeg_pixels(encode_jpeg_baseline(img2, subsample=True))
-    assert np.abs(dec2.astype(int) - img2.astype(int)).max() <= 3
-
-
-def test_jpeg_rejects_unsupported_and_truncated():
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import decode_jpeg_pixels, encode_jpeg_baseline
-
-    img = np.full((8, 8), 100, np.uint8)
-    enc = bytearray(encode_jpeg_baseline(img))
-    i = enc.find(b"\xff\xc0")
-    # SOF9 (arithmetic coding): unsupported -> None
-    assert decode_jpeg_pixels(bytes(enc[:i]) + b"\xff\xc9" + bytes(enc[i + 2 :])) is None
-    # SOF2 marker but a baseline SOS (Ss=0, Se=63 is invalid for a
-    # progressive DC scan): malformed -> None, not an exception
-    assert decode_jpeg_pixels(bytes(enc[:i]) + b"\xff\xc2" + bytes(enc[i + 2 :])) is None
-    # truncated entropy stream: None, not an exception
-    assert decode_jpeg_pixels(bytes(enc[: len(enc) // 2])) is None
-    assert decode_jpeg_pixels(b"\xff\xd8\xff\xd9") is None
-
-
-def test_jpeg_progressive_roundtrip_matches_baseline():
-    """The progressive path (SOF2: interleaved DC first + refines,
-    per-band AC first + refines with EOB runs and correction bits) must
-    reconstruct EXACTLY what the baseline stream of the same image does
-    (both use all-ones quant, and full refinement restores every
-    coefficient bit)."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import (
-        decode_jpeg_pixels,
-        encode_jpeg_baseline,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(11)
-    cases = [
-        np.vstack([np.full((8, 24), 200, np.uint8), np.full((8, 24), 55, np.uint8)]),
-        rng.integers(0, 256, (13, 19), dtype=np.uint8),   # non-MCU dims
-        np.full((40, 40), 128, np.uint8),                 # long EOB runs
-        np.where(rng.random((16, 16)) < 0.9, 128,
-                 rng.integers(0, 256, (16, 16))).astype(np.uint8),  # sparse AC
-    ]
-    for img in cases:
-        base = decode_jpeg_pixels(encode_jpeg_baseline(img))
-        for al in (1, 2):  # one and two successive-approximation levels
-            prog = decode_jpeg_pixels(encode_jpeg_progressive(img, al=al))
-            assert prog is not None and (prog == base).all()
-    # color: the interleaved multi-component DC scan path
-    imgc = rng.integers(0, 256, (17, 19, 3), dtype=np.uint8)
-    basec = decode_jpeg_pixels(encode_jpeg_baseline(imgc))
-    progc = decode_jpeg_pixels(encode_jpeg_progressive(imgc))
-    assert progc is not None and (progc == basec).all()
-
-
-def test_jpeg_progressive_golden_stream():
-    """Hand-assembled spectral-selection-only progressive stream —
-    independent of encode_jpeg_progressive — decodes to the expected
-    constant image: 8x8, DC scan carries diff 72 (DC 8*(200-128)=576 at
-    Al=0? no — Al=0, category 10), AC scan is a single EOB."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import (
-        DC_COUNTS, DC_SYMBOLS, AC_COUNTS, AC_SYMBOLS,
-        _build_codes, _BitWriter, decode_jpeg_pixels,
-    )
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + (len(body) + 2).to_bytes(2, "big") + body
-
-    dc_codes = _build_codes(DC_COUNTS, DC_SYMBOLS)
-    ac_codes = _build_codes(AC_COUNTS, AC_SYMBOLS)
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes([1] * 64))
-    out += seg(0xC2, bytes([8]) + (8).to_bytes(2, "big") + (8).to_bytes(2, "big")
-               + bytes([1, 1, 0x11, 0]))
-    out += seg(0xC4, bytes([0x00]) + bytes(DC_COUNTS) + bytes(DC_SYMBOLS))
-    out += seg(0xC4, bytes([0x10]) + bytes(AC_COUNTS) + bytes(AC_SYMBOLS))
-    # DC scan (Ss=0 Se=0 Ah=0 Al=0): one block, diff = 8*(200-128) = 576
-    w = _BitWriter()
-    diff = 576
-    s = diff.bit_length()
-    code, ln = dc_codes[s]
-    w.write(code, ln)
-    w.write(diff, s)
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00])) + w.flush()
-    # AC scan (Ss=1 Se=63 Ah=0 Al=0): single EOB (all AC zero)
-    w = _BitWriter()
-    code, ln = ac_codes[0x00]
-    w.write(code, ln)
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00])) + w.flush()
-    out += b"\xff\xd9"
-    dec = decode_jpeg_pixels(bytes(out))
-    assert dec is not None and dec.shape == (8, 8, 3)
-    assert (dec == 200).all(), dec[0, 0]
-
-
-def test_jpeg_corpus_matches_nibble_oracle(spark):
-    """synthetic_jpegs -> image_metadata must reproduce the SQL-side
-    nibble derivation: width 4+n2, height 16, format jpeg, and the
-    two-constant aHash selected by tone_a >= 128 — for BOTH entropy
-    paths (half the rows are baseline, half progressive)."""
-    from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-    ids = spark.range(0, 128).select(F.col("id").alias("doc_id"))
-    meta = multimodal.image_metadata(
-        mm_corpus.synthetic_jpegs(ids), binary_col="payload", id_col="doc_id"
-    ).collect()
-    assert len(meta) == 128  # no quarantined rows
-    n_prog = 0
-    for r in meta:
-        w, h, tone_a, progressive = mm_corpus.jpeg_params(r["doc_id"])
-        n_prog += progressive
-        assert (r["width"], r["height"], r["format"]) == (w, 16, "jpeg")
-        want = 4294967295 if tone_a >= 128 else 9223372032559808512
-        assert r["phash"] == want, (r["doc_id"], tone_a, r["phash"])
-    assert 30 < n_prog < 98  # both entropy paths genuinely exercised
-
-
-def test_jpeg_decoder_survives_fuzzed_bytes():
-    """Random and truncated inputs must return None quickly — never hang
-    (a zero-length marker segment once looped forever) or escape with an
-    exception; 200 seeded fuzz cases + bit-flip mutations of a real
-    stream."""
-    import random
-
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import decode_jpeg_pixels, encode_jpeg_baseline
-
-    rng = random.Random(99)
-    for _ in range(100):
-        n = rng.randint(0, 64)
-        payload = b"\xff\xd8" + bytes(rng.getrandbits(8) for _ in range(n))
-        decode_jpeg_pixels(payload)  # must return, value unconstrained
-    # zero-length segment regression: FFD8 FFDB 0000 ...
-    assert decode_jpeg_pixels(b"\xff\xd8\xff\xdb\x00\x00" + b"\x00" * 20) is None
-    enc = bytearray(encode_jpeg_baseline(np.full((8, 8), 77, np.uint8)))
-    for _ in range(100):
-        mut = bytearray(enc)
-        for _ in range(rng.randint(1, 4)):
-            mut[rng.randrange(len(mut))] ^= 1 << rng.randrange(8)
-        decode_jpeg_pixels(bytes(mut))  # None or an image; no hang/raise
-
-
 # ------------------------------------------------------------------ video
-
-
-def test_avi_mjpeg_roundtrip():
-    """encode_avi_mjpeg -> parse_avi: metadata and every frame byte
-    survive; each frame decodes to its source pixels (all-ones quant,
-    constant frames)."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import decode_jpeg_pixels, encode_jpeg_baseline
-    from schema_fantasy_spark.ops.video import encode_avi_mjpeg, parse_avi
-
-    frames = []
-    for i in range(5):
-        img = np.full((16, 12), (40 + 37 * i) % 256, np.uint8)
-        frames.append(encode_jpeg_baseline(img))
-    avi = encode_avi_mjpeg(frames, 12, 16, fps=12)
-    meta = parse_avi(avi)
-    assert meta is not None
-    assert (meta["width"], meta["height"], meta["fps"], meta["n_frames"]) == (12, 16, 12.0, 5)
-    assert meta["frames"] == frames
-    for i, f in enumerate(meta["frames"]):
-        assert (decode_jpeg_pixels(f)[:, :, 0] == (40 + 37 * i) % 256).all()
-    # odd-size frame payloads exercise even-byte chunk padding
-    odd = [f + b"x" for f in frames if len(f) % 2 == 0] or [frames[0] + b"x"]
-    assert parse_avi(encode_avi_mjpeg(odd, 12, 16))["frames"] == odd
-    # malformed containers reject cleanly
-    assert parse_avi(b"RIFF\x04\x00\x00\x00AVI ") is None
-    assert parse_avi(b"not a riff at all") is None
-    assert parse_avi(avi[: len(avi) // 3]) is None or True  # no exception
-
-
-def test_mp4_header_spec_conformant_fixture():
-    """parse_mp4_header against field-by-field hand-built ISO-BMFF
-    headers (NOT encode_mp4_stub, so a parser/stub-symmetric bug cannot
-    hide): v0 and v1 tkhd with the full spec layout including the
-    duration field and a real unity matrix — whose 0x40000000 tail is
-    exactly what a 4-byte offset error would misread as width=16384."""
-    from schema_fantasy_spark.ops.video import parse_mp4_header
-
-    def box(typ, body):
-        return (len(body) + 8).to_bytes(4, "big") + typ + body
-
-    unity = (
-        (0x00010000).to_bytes(4, "big") + bytes(4) + bytes(4)
-        + bytes(4) + (0x00010000).to_bytes(4, "big") + bytes(4)
-        + bytes(4) + bytes(4) + (0x40000000).to_bytes(4, "big")
-    )
-    assert len(unity) == 36
-
-    def tkhd(ver, w, h, duration):
-        if ver == 1:
-            head = (b"\x01" + bytes(3) + bytes(8) + bytes(8)
-                    + (1).to_bytes(4, "big") + bytes(4)
-                    + duration.to_bytes(8, "big"))
-        else:
-            head = (bytes(4) + bytes(4) + bytes(4)
-                    + (1).to_bytes(4, "big") + bytes(4)
-                    + duration.to_bytes(4, "big"))
-        tail = (bytes(8) + bytes(2) + bytes(2) + bytes(2) + bytes(2)
-                + unity + (w << 16).to_bytes(4, "big")
-                + (h << 16).to_bytes(4, "big"))
-        return box(b"tkhd", head + tail)
-
-    mvhd = box(
-        b"mvhd",
-        bytes(4) + bytes(4) + bytes(4)                      # verflags/created/modified
-        + (600).to_bytes(4, "big") + (1200).to_bytes(4, "big")  # timescale/duration
-        + (0x00010000).to_bytes(4, "big") + (0x0100).to_bytes(2, "big")
-        + bytes(10) + unity + bytes(24) + (2).to_bytes(4, "big"),
-    )
-    stsz = box(b"stsz", bytes(4) + bytes(4) + (48).to_bytes(4, "big"))
-    ftyp = box(b"ftyp", b"isom" + bytes(4) + b"isomiso2")
-    for ver in (0, 1):
-        trak = box(b"trak", tkhd(ver, 640, 480, 1200)
-                   + box(b"mdia", box(b"minf", box(b"stbl", stsz))))
-        mp4 = ftyp + box(b"moov", mvhd + trak)
-        meta = parse_mp4_header(mp4)
-        assert meta is not None, ver
-        assert (meta["width"], meta["height"]) == (640, 480), (ver, meta)
-        assert meta["duration_sec"] == 2.0
-        assert meta["n_frames"] == 48
-
-
-def test_avi_audio_strl_before_video():
-    """An AVI whose audio strl precedes the video stream must not parse
-    the audio WAVEFORMATEX strf as BITMAPINFOHEADER dims."""
-    import struct
-
-    from schema_fantasy_spark.ops.video import encode_avi_mjpeg, parse_avi
-
-    avi = encode_avi_mjpeg([b"\xff\xd8fakejpeg\xff\xd9"], 320, 240, fps=10)
-    # splice an audio strl (strh 'auds' + 18-byte-padded WAVEFORMATEX
-    # strf whose first dwords would be garbage dims) BEFORE the video strl
-    def chunk(cc, body):
-        return cc + struct.pack("<I", len(body)) + body + b"\x00" * (len(body) & 1)
-
-    wav_strf = struct.pack("<HHIIHH", 1, 2, 44100, 176400, 4, 16) + bytes(8)
-    astrh = b"auds" + bytes(52)
-    audio_strl = chunk(b"LIST", b"strl" + chunk(b"strh", astrh)
-                       + chunk(b"strf", wav_strf))
-    # find the hdrl list and insert the audio strl right after avih
-    i = avi.index(b"strl") - 8  # start of the LIST('strl' ...) chunk header
-    patched = avi[:i] + audio_strl + avi[i:]
-    # fix the two enclosing sizes (RIFF and hdrl LIST)
-    patched = bytearray(patched)
-    struct.pack_into("<I", patched, 4, struct.unpack_from("<I", patched, 4)[0] + len(audio_strl))
-    hdrl = bytes(patched).index(b"hdrl") - 8
-    struct.pack_into("<I", patched, hdrl + 4,
-                     struct.unpack_from("<I", patched, hdrl + 4)[0] + len(audio_strl))
-    meta = parse_avi(bytes(patched))
-    assert meta is not None
-    assert (meta["width"], meta["height"]) == (320, 240), meta
-
-
-def test_sample_frames_real_avi_path(spark):
-    """sample_frames takes the REAL branch for MJPEG AVIs: every 2nd
-    frame's exact JPEG payload with its original index."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import encode_jpeg_baseline
-    from schema_fantasy_spark.ops.video import encode_avi_mjpeg
-
-    frames = [encode_jpeg_baseline(np.full((8, 8), 30 * i, np.uint8)) for i in range(6)]
-    avi = encode_avi_mjpeg(frames, 8, 8)
-    df = spark.createDataFrame([(1, bytearray(avi))], "doc_id: long, payload: binary")
-    got = (
-        multimodal.sample_frames(df, binary_col="payload", id_col="doc_id",
-                                 every_n=2, max_frames=3)
-        .orderBy("frame_idx").collect()
-    )
-    assert [(r["frame_idx"], bytes(r["frame_bytes"])) for r in got] == [
-        (0, frames[0]), (2, frames[2]), (4, frames[4])
-    ]
-
-
-def test_video_frames_corpus_matches_nibble_oracle(spark):
-    """synthetic_videos -> video_frames must reproduce the SQL-side
-    derivation: sampled indices 0,2,.. < n_frames and the two-constant
-    per-frame aHash selected by (tone_base + 17*idx) % 256 >= 128."""
-    from schema_fantasy_spark.ops import mm_corpus
-
-    ids = spark.range(0, 64).select(F.col("id").alias("doc_id"))
-    rows = multimodal.video_frames(
-        mm_corpus.synthetic_videos(ids), binary_col="payload", id_col="doc_id",
-        every_n=2, max_frames=4,
-    ).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(by_doc) == set(range(64))  # no quarantined docs
-    n_inter = 0
-    for doc_id, frs in by_doc.items():
-        w, h, nf, tone_base = mm_corpus.video_params(doc_id)
-        nib = mm_corpus._nibbles(doc_id)
-        inter = nib[5] % 2 == 1 and nib[13] % 2 == 1
-        n_inter += inter
-        assert sorted(r["frame_idx"] for r in frs) == list(range(0, nf, 2))
-        for r in frs:
-            assert (r["width"], r["height"]) == (w, 16)
-            if inter:  # webm INTER stream: half-swap every other sample
-                tone = tone_base if r["frame_idx"] % 4 == 0 else 255 - tone_base
-            else:
-                tone = (tone_base + 17 * r["frame_idx"]) % 256
-            want = 4294967295 if tone >= 128 else 9223372032559808512
-            assert r["phash"] == want, (doc_id, r["frame_idx"], tone)
-    assert n_inter > 0  # the inter sub-family is present in the corpus
-
-
-def test_video_frames_quarantines_corrupt(spark):
-    """A truncated AVI and a non-AVI payload yield NO rows (per-row
-    quarantine), while a good clip in the same batch still decodes."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import encode_jpeg_baseline
-    from schema_fantasy_spark.ops.video import encode_avi_mjpeg
-
-    good = encode_avi_mjpeg(
-        [encode_jpeg_baseline(np.full((8, 8), 200, np.uint8))], 8, 8
-    )
-    rows = [(1, bytearray(good)), (2, bytearray(good[:20])), (3, bytearray(b"garbage" * 5))]
-    df = spark.createDataFrame(rows, "doc_id: long, payload: binary")
-    got = multimodal.video_frames(df, binary_col="payload", id_col="doc_id").collect()
-    assert [r["doc_id"] for r in got] == [1]
-    assert got[0]["phash"] == 0  # constant image: no cell exceeds the mean
 
 
 # -------------------------------------------------------------------- urls
@@ -1408,507 +650,6 @@ def test_canonicalize_url_collapses_crawl_variants(spark):
     assert "EvalPython" not in buf.getvalue()
 
 
-def test_video_metadata_avi_mp4_mkv(spark):
-    """Container metadata is REAL for AVI (RIFF), MP4 (ISO-BMFF box
-    walk, v0 AND v1 headers) and Matroska/WebM (EBML walk): dims, frame
-    counts, duration; garbage quarantines."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.jpeg import encode_jpeg_baseline
-    from schema_fantasy_spark.ops.video import (
-        encode_avi_mjpeg,
-        encode_mkv_stub,
-        encode_mp4_stub,
-    )
-
-    avi = encode_avi_mjpeg(
-        [encode_jpeg_baseline(np.full((8, 8), 9, np.uint8))] * 6, 8, 8, fps=12
-    )
-    mp4 = encode_mp4_stub(640, 360, 12.5, 300)
-    mp4v1 = encode_mp4_stub(1280, 720, 3.25, 78, version=1)
-    mkv = encode_mkv_stub(854, 480, 7.125)
-    webm = encode_mkv_stub(320, 180, 2.5, doctype=b"webm")
-    rows = [
-        (1, bytearray(avi)), (2, bytearray(mp4)), (3, bytearray(b"nope")),
-        (4, bytearray(mp4v1)), (5, bytearray(mkv)), (6, bytearray(webm)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id: long, payload: binary")
-    got = {r["doc_id"]: r for r in multimodal.video_metadata(
-        df, binary_col="payload", id_col="doc_id").collect()}
-    assert set(got) == {1, 2, 4, 5, 6}
-    a = got[1]
-    assert (a["container"], a["width"], a["height"], a["n_frames"]) == ("avi", 8, 8, 6)
-    assert a["duration_sec"] == 0.5
-    m = got[2]
-    assert (m["container"], m["width"], m["height"], m["n_frames"]) == ("mp4", 640, 360, 300)
-    assert m["duration_sec"] == 12.5
-    v1 = got[4]
-    assert (v1["container"], v1["width"], v1["height"], v1["n_frames"]) == ("mp4", 1280, 720, 78)
-    assert v1["duration_sec"] == 3.25
-    k = got[5]
-    assert (k["container"], k["width"], k["height"], k["n_frames"]) == ("mkv", 854, 480, None)
-    assert k["duration_sec"] == 7.125
-    w = got[6]
-    assert (w["container"], w["width"], w["height"]) == ("mkv", 320, 180)
-    assert w["duration_sec"] == 2.5
-
-
-def test_mkv_ebml_parse_edges():
-    """EBML walker handles unknown-size Segments, nonstandard
-    TimestampScale, audio-first track order, and truncation."""
-    import struct as _s
-
-    from schema_fantasy_spark.ops.video import (
-        EBML_MAGIC,
-        _ebml_uint,
-        _ebml_vint,
-        encode_mkv_stub,
-        parse_mkv_header,
-    )
-
-    def el(eid, body):
-        return eid + _ebml_vint(len(body)) + body
-
-    # nonstandard timescale (100us ticks): duration_sec must rescale
-    m = parse_mkv_header(encode_mkv_stub(64, 48, 1.5, timescale_ns=100_000))
-    assert (m["width"], m["height"], m["duration_sec"]) == (64, 48, 1.5)
-
-    # audio TrackEntry FIRST (TrackType 2): dims must come from video
-    audio = el(b"\xae", el(b"\x83", b"\x02") + el(b"\xd7", b"\x02"))
-    video = el(b"\xae", el(b"\x83", b"\x01")
-               + el(b"\xe0", el(b"\xb0", _ebml_uint(100)) + el(b"\xba", _ebml_uint(50))))
-    info = el(b"\x15\x49\xa9\x66", el(b"\x44\x89", _s.pack(">f", 2000.0)))
-    seg_body = info + el(b"\x16\x54\xae\x6b", audio + video)
-    # unknown-size Segment (all-ones VINT) resolves to end-of-buffer
-    seg = b"\x18\x53\x80\x67" + b"\xff" + seg_body
-    hdr = el(EBML_MAGIC, el(b"\x42\x82", b"matroska"))
-    m = parse_mkv_header(hdr + seg)
-    assert (m["width"], m["height"]) == (100, 50)
-    assert m["duration_sec"] == 2.0  # float32 Duration, default scale (ms)
-
-    # truncation/garbage never raises
-    full = encode_mkv_stub(12, 10, 0.25)
-    for cut in range(0, len(full), 7):
-        parse_mkv_header(full[:cut])
-    assert parse_mkv_header(b"\x1a\x45\xdf\xa3\xff") is None
-    assert parse_mkv_header(b"plainly not ebml") is None
-
-
-def test_webm_vp8_roundtrip_and_quarantine(spark):
-    """The WebM writer/parser pair round-trips VP8 key frames losslessly
-    (byte-identical frames out), decodes them to the EXACT two-tone
-    contract, keeps complete blocks from truncated files (tail-only
-    quarantine), and video_frames routes EBML payloads through the real
-    VP8 decoder alongside AVI/MJPEG docs."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops import mm_corpus as mc
-    from schema_fantasy_spark.ops import multimodal as mm
-    from schema_fantasy_spark.ops import video as V
-    from schema_fantasy_spark.ops import vp8
-
-    frames = [mc._vp8_two_tone_frame(19, 16, (77 + 17 * i) % 256)
-              for i in range(4)]
-    wb = V.encode_webm_vp8(frames, 19, 16)
-    p = V.parse_webm_vp8(wb)
-    assert (p["width"], p["height"], p["track_number"]) == (19, 16, 1)
-    assert [bytes(f) for f in p["frames"]] == frames
-    for i, f in enumerate(p["frames"]):
-        y, u, v = vp8.decode_vp8_frame(f)
-        t = (77 + 17 * i) % 256
-        assert (y[:8] == t).all() and (y[8:] == 255 - t).all(), (i, t)
-        assert (u == 128).all() and (v == 128).all()
-    # the metadata walker reads the same file
-    meta = V.parse_mkv_header(wb)
-    assert (meta["width"], meta["height"]) == (19, 16)
-    # truncation: never raises; complete blocks survive a tail cut
-    for cut in range(0, len(wb), 13):
-        V.parse_webm_vp8(wb[:cut])
-    part = V.parse_webm_vp8(wb[: len(wb) - 10])
-    assert part is not None and 0 < len(part["frames"]) < 4
-    assert V.parse_webm_vp8(b"not ebml") is None
-
-    # spark edge: one AVI doc + one WebM doc through the same operator
-    df = spark.createDataFrame(
-        [(2, bytearray(mc._video_payload(2))),   # nib-dependent family
-         (3, bytearray(wb))],
-        "doc_id: long, payload: binary",
-    )
-    rows = mm.video_frames(df, binary_col="payload", id_col="doc_id",
-                           every_n=2, max_frames=4).collect()
-    webm_rows = [r for r in rows if r["doc_id"] == 3]
-    assert [r["frame_idx"] for r in webm_rows] == [0, 2]
-    assert all(r["width"] == 19 and r["height"] == 16 for r in webm_rows)
-
-
-def test_webm_vp8_inter_stream_pipeline(spark):
-    """Key + INTER frames through the full container pipeline: the
-    writer clears the SimpleBlock keyframe flag on inter frames, the
-    parser surfaces every block in bitstream order with its flag, the
-    stream decoder motion-compensates for real (half-swap SPLITMV +
-    ZEROMV skips), and video_frames samples the ALTERNATING tones —
-    none of which a keyframe-only or MC-ignoring path can reproduce."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops import mm_corpus as mc
-    from schema_fantasy_spark.ops import multimodal as mm
-    from schema_fantasy_spark.ops import video as V
-    from schema_fantasy_spark.ops import vp8
-
-    w, h, t0, nf = 19, 16, 200, 8
-    swap = {"kind": "split", "partition": 0, "mvs": [(64, 0), (-64, 0)]}
-    skip = {"kind": "zero", "skip": 1}
-    frames = [(mc._vp8_two_tone_frame(w, h, t0), True)]
-    for i in range(1, nf):
-        plan = swap if i % 2 == 0 else skip
-        frames.append((vp8.encode_vp8_inter(w, h, lambda r, c, p=plan: p),
-                       False))
-    wb = V.encode_webm_vp8(frames, w, h)
-    p = V.parse_webm_vp8(wb)
-    assert [k for _b, k in p["blocks"]] == [True] + [False] * (nf - 1)
-    assert [bytes(b) for b, _k in p["blocks"]] == [bytes(f) for f, _ in frames]
-    assert len(p["frames"]) == 1  # keyframe-only view unchanged
-    dec = vp8.Vp8StreamDecoder()
-    for k, (body, _isk) in enumerate(p["blocks"]):
-        out = dec.decode_frame(body)
-        assert out is not None and out["show"]
-        top = t0 if k % 4 in (0, 1) else 255 - t0
-        y = out["planes"][0]
-        assert (y[:8] == top).all() and (y[8:] == 255 - top).all(), k
-    # through the operator: sampled indices 0,2,4,6 alternate tones,
-    # and a mid-stream truncation quarantines only the damaged tail
-    df = spark.createDataFrame(
-        [(1, bytearray(wb)), (2, bytearray(wb[: len(wb) - 30]))],
-        "doc_id: long, payload: binary",
-    )
-    rows = mm.video_frames(df, binary_col="payload", id_col="doc_id",
-                           every_n=2, max_frames=4).collect()
-    got = {r["doc_id"]: [] for r in rows}
-    for r in rows:
-        got[r["doc_id"]].append((r["frame_idx"], r["phash"]))
-    a, b = 4294967295, 9223372032559808512
-    hi = a if t0 >= 128 else b
-    lo = b if t0 >= 128 else a
-    assert sorted(got[1]) == [(0, hi), (2, lo), (4, hi), (6, lo)]
-    assert sorted(got[2]) == [(0, hi), (2, lo), (4, hi)]  # tail cut
-
-
-def test_webm_lacing_and_blockgroups(spark):
-    """All three Matroska lacing schemes (Xiph 255-run sizes, EBML
-    VINT+signed-delta sizes, fixed equal split) and BlockGroup/Block/
-    ReferenceBlock round-trip through writer -> parser -> stream
-    decoder; malformed lace tables quarantine the block only."""
-    from schema_fantasy_spark.ops import mm_corpus as mc
-    from schema_fantasy_spark.ops import multimodal as mm
-    from schema_fantasy_spark.ops import video as V
-    from schema_fantasy_spark.ops import vp8
-
-    w, h, t0 = 19, 16, 200
-    key = mc._vp8_two_tone_frame(w, h, t0)
-    swap = vp8.encode_vp8_inter(
-        w, h, lambda r, c: {"kind": "split", "partition": 0,
-                            "mvs": [(64, 0), (-64, 0)]})
-    skip = vp8.encode_vp8_inter(w, h, lambda r, c: {"kind": "zero", "skip": 1})
-    entries = [
-        (key, True),
-        {"frames": [(skip, False), (swap, False)], "lacing": "xiph"},
-        {"frames": [(skip, False), (swap, False)], "lacing": "ebml",
-         "group": True},
-        {"frames": [(skip, False), (skip, False)], "lacing": "fixed"},
-        {"frames": [(swap, False)], "group": True},
-    ]
-    wb = V.encode_webm_vp8(entries, w, h)
-    p = V.parse_webm_vp8(wb)
-    exp = [key, skip, swap, skip, swap, skip, skip, swap]
-    assert [bytes(b) for b, _k in p["blocks"]] == exp
-    assert [k for _b, k in p["blocks"]] == [True] + [False] * 7
-    assert len(p["frames"]) == 1  # keyframe-only view: just the key
-    dec = vp8.Vp8StreamDecoder()
-    tones = []
-    for b, _k in p["blocks"]:
-        out = dec.decode_frame(b)
-        assert out is not None
-        tones.append(int(out["planes"][0][0, 0]))
-    assert tones == [200, 200, 55, 55, 200, 200, 200, 55]
-
-    # size-table edges: a 255-byte frame needs the 0xff-run + 0x00
-    # terminator in Xiph; EBML deltas go negative then positive
-    big = bytes(255)
-    lp = V._lace_payload([big, b"xy"], "xiph")
-    assert V._unlace(b"\x00" + lp, 1, 1 + len(lp), 0x02) == [big, b"xy"]
-    lp = V._lace_payload([b"a" * 300, b"b" * 10, b"c" * 50], "ebml")
-    assert V._unlace(b"\x00" + lp, 1, 1 + len(lp), 0x06) == [
-        b"a" * 300, b"b" * 10, b"c" * 50]
-    # fixed lacing rejects unequal frames at write time
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        V._lace_payload([b"abc", b"de"], "fixed")
-    # malformed lace tables quarantine the BLOCK, not the file: sizes
-    # overrun the block body -> that block's frames are absent, the
-    # other blocks survive
-    assert V._unlace(b"\x01\xff\xff\x05ab", 0, 6, 0x02) is None
-    bad = V.encode_webm_vp8(
-        [(key, True),
-         {"frames": [(skip, False), (swap, False)], "lacing": "xiph"}],
-        w, h)
-    # the laced block's lace header is (flags=0x02, count=1, size):
-    # bump the size byte so the first lace frame overruns the block
-    sig = bytes([0x02, 0x01, len(skip)])
-    k = bad.find(sig)
-    assert k > 0
-    mut = bytearray(bad)
-    mut[k + 2] = 0xFE
-    pm = V.parse_webm_vp8(bytes(mut))
-    assert [bytes(b) for b, _k in pm["blocks"]] == [key]
-
-    # the corpus' laced quarter equals its SimpleBlock twin through the
-    # operator: find an (inter, laced) and an (inter, plain) doc and
-    # compare sampled rows modulo the doc-specific nibbles
-    laced = next(i for i in range(400)
-                 if mc._nibbles(i)[5] % 2 == 1 and mc._nibbles(i)[13] % 4 == 3)
-    df = spark.createDataFrame(
-        [(laced, bytearray(mc._video_payload(laced)))],
-        "doc_id: long, payload: binary")
-    rows = mm.video_frames(df, binary_col="payload", id_col="doc_id",
-                           every_n=2, max_frames=4).collect()
-    wl, _hl, nfl, tbl = mc.video_params(laced)
-    assert sorted(r["frame_idx"] for r in rows) == list(range(0, nfl, 2))
-    for r in rows:
-        tone = tbl if r["frame_idx"] % 4 == 0 else 255 - tbl
-        want = 4294967295 if tone >= 128 else 9223372032559808512
-        assert (r["width"], r["height"], r["phash"]) == (wl, 16, want)
-
-
-def test_webm_vp8_frames_match_libwebp():
-    """The frames the WebM corpus embeds are themselves valid WebP-
-    decodable VP8 streams: libwebp reconstructs the exact tones."""
-    import pytest
-
-    from _libwebp import load_libwebp, reference_decode_yuv, wrap_vp8_container
-    from schema_fantasy_spark.ops import mm_corpus as mc
-
-    if load_libwebp() is None:
-        pytest.skip("libwebp shared library not available")
-    for tone in (0, 63, 129, 200, 255):
-        f = mc._vp8_two_tone_frame(16, 16, tone)
-        y, u, v = reference_decode_yuv(wrap_vp8_container(f))
-        assert (y[:8] == tone).all() and (y[8:] == 255 - tone).all(), tone
-
-
-def test_g711_decode_matches_audioop(spark):
-    """The G.711 mu-law/A-law expansion tables match the stdlib audioop
-    reference byte-for-byte; G.711 WAVs round-trip through the Spark
-    operator with exact square-wave RMS; the stdlib-PCM path and the
-    per-row truncation quarantine are unaffected."""
-    import warnings
-
-    import numpy as np
-
-    from schema_fantasy_spark.ops import mm_corpus as mc
-    from schema_fantasy_spark.ops import multimodal as mm
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore", DeprecationWarning)
-        import audioop
-    ref_u = np.frombuffer(audioop.ulaw2lin(bytes(range(256)), 2), dtype="<i2")
-    ref_a = np.frombuffer(audioop.alaw2lin(bytes(range(256)), 2), dtype="<i2")
-    assert (mm._ULAW == ref_u).all()
-    assert (mm._ALAW == ref_a).all()
-
-    # find one corpus doc of each law (uncorrupted) and run the operator
-    picks = {}
-    d = 0
-    while len(picks) < 3 and d < 500:
-        sr, nf, amp, corrupt, law = mc.audio_params(d)
-        if not corrupt and law < 3 and law not in picks:
-            picks[law] = d
-        d += 1
-    assert set(picks) == {0, 1, 2}
-    df = spark.createDataFrame(
-        [(i, bytearray(mc._audio_payload(i))) for i in picks.values()],
-        "doc_id: long, payload: binary",
-    )
-    rows = {r["doc_id"]: r for r in mm.audio_metadata(
-        df, binary_col="payload", id_col="doc_id").collect()}
-    for law, i in picks.items():
-        sr, nf, amp, corrupt, _ = mc.audio_params(i)
-        nib = mc._nibbles(i)
-        r = rows[i]
-        assert (r["sample_rate"], r["n_frames"]) == (sr, nf), law
-        if law == 0:
-            v = amp
-        else:
-            exp, mant = nib[11] % 8, nib[9] % 16
-            if law == 1:
-                v = ((mant * 8 + 0x84) << exp) - 0x84
-            else:
-                v = (mant * 16 + 8) if exp == 0 else ((mant * 16) + 0x108) << (exp - 1)
-        assert abs(r["rms"] - round(v / 32768, 6)) <= 1e-6, (law, v, r["rms"])
-    # truncated G.711 container quarantines like truncated PCM
-    assert mm.parse_wav_g711(mc._audio_payload(picks[1])[:13]) is None
-
-def test_mp3_header_walk(spark):
-    """MPEG-1 Layer III metadata via the header walk: ID3v2 syncsafe
-    skip, bitrate/samplerate tables, frame-length arithmetic, mono vs
-    stereo mode, truncated-tail quarantine — round-tripped through the
-    stub encoder and the Spark operator."""
-    from schema_fantasy_spark.ops import mm_corpus as mc
-    from schema_fantasy_spark.ops import multimodal as mm
-
-    # direct round-trip across the parameter space
-    for kbps in (32, 128, 320):
-        for sr in (44100, 48000, 32000):
-            for mode, want_ch in ((0, 2), (1, 2), (2, 2), (3, 1)):
-                b = mm.encode_mp3_stub(kbps, sr, mode, 5, id3_size=200)
-                got = mm.parse_mp3_metadata(b)
-                assert got == (sr, want_ch, 5, 5 * 1152 / sr), (kbps, sr, mode)
-    # a truncated final frame quarantines only the tail
-    b = mm.encode_mp3_stub(128, 44100, 0, 5)
-    assert mm.parse_mp3_metadata(b[:-7])[2] == 4
-    # cut inside the ID3 tag: no frames, row quarantined entirely
-    assert mm.parse_mp3_metadata(b[:13]) is None
-    # garbage after the sync byte breaks the walk, not the parser
-    assert mm.parse_mp3_metadata(b"\xff\xe0\x00\x00garbage") is None
-
-    # corpus MP3 docs flow through the Spark operator (rms is NULL:
-    # header walk only, no hybrid-filterbank decode)
-    picks = [d for d in range(200)
-             if mc.audio_params(d)[4] == 3 and not mc.audio_params(d)[3]][:3]
-    assert picks
-    df = spark.createDataFrame(
-        [(i, bytearray(mc._audio_payload(i))) for i in picks],
-        "doc_id: long, payload: binary",
-    )
-    rows = {r["doc_id"]: r for r in mm.audio_metadata(
-        df, binary_col="payload", id_col="doc_id").collect()}
-    for i in picks:
-        nib = mc._nibbles(i)
-        r = rows[i]
-        assert r["sample_rate"] == [44100, 48000, 32000][nib[10] % 3]
-        assert r["n_channels"] == (1 if nib[11] % 4 == 3 else 2)
-        assert r["n_frames"] == 8 + nib[13] % 8
-        assert r["rms"] is None
-
-def test_mp4_sample_table_demux(spark):
-    """ISO-BMFF sample-table round trip: encode_mp4_mjpeg lays real JPEG
-    samples into mdat and parse_mp4_samples recovers every byte range
-    exactly (stsd codec, stsc runs incl. the short tail chunk, stco
-    offsets, stss sync pattern); a truncated payload quarantines only
-    the samples past the cut. The video_frame_index operator surfaces
-    the same index distributed."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops import multimodal as mm
-    from schema_fantasy_spark.ops.jpeg import encode_jpeg_baseline
-    from schema_fantasy_spark.ops.video import encode_mp4_mjpeg, parse_mp4_samples
-
-    frames = []
-    for tone in (10, 80, 150, 220, 40):  # 5 frames: stsc needs a tail run
-        px = np.empty((16, 8), dtype=np.uint8)
-        px[:8] = tone
-        px[8:] = 255 - tone
-        frames.append(encode_jpeg_baseline(px))
-    p = encode_mp4_mjpeg(frames, 8, 16, fps=12)
-    got = parse_mp4_samples(p)
-    assert got["codec"] == "jpeg" and len(got["samples"]) == 5
-    for k, (off, sz, sync) in enumerate(got["samples"]):
-        assert p[off:off + sz] == frames[k], k
-        assert sync == (k % 2 == 0), k  # stss marks 0-based-even samples
-    # truncation mid-sample-3: demux only walks what the moov... (moov is
-    # at the END here; a cut before it loses the whole index -> None)
-    assert parse_mp4_samples(p[:100]) is None
-
-    df = spark.createDataFrame([(7, bytearray(p))], "doc_id: long, payload: binary")
-    rows = mm.video_frame_index(
-        df, binary_col="payload", id_col="doc_id").collect()
-    assert [(r["sample_idx"], r["offset"], r["size"], r["keyframe"])
-            for r in sorted(rows, key=lambda r: r["sample_idx"])] == [
-        (k, off, sz, sync) for k, (off, sz, sync) in enumerate(got["samples"])]
-    assert all(r["codec"] == "jpeg" for r in rows)
-    keys = mm.video_frame_index(
-        df, binary_col="payload", id_col="doc_id", keyframes_only=True
-    ).collect()
-    assert sorted(r["sample_idx"] for r in keys) == [0, 2, 4]
-
-
-def test_video_frames_mp4_family_matches_avi(spark):
-    """The MP4-MJPEG corpus family decodes to the same frame rows the
-    AVI family would for the same nibbles — the demux is the only
-    difference, so identical tone math must come out."""
-    from schema_fantasy_spark.ops import mm_corpus as mc
-    from schema_fantasy_spark.ops import multimodal as mm
-
-    mp4_docs = [d for d in range(200) if mc._nibbles(d)[5] % 4 == 2][:3]
-    assert mp4_docs
-    df = spark.createDataFrame(
-        [(d, bytearray(mc._video_payload(d))) for d in mp4_docs],
-        "doc_id: long, payload: binary",
-    )
-    rows = mm.video_frames(df, binary_col="payload", id_col="doc_id",
-                           every_n=2, max_frames=4).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for d in mp4_docs:
-        nib = mc._nibbles(d)
-        w, h, nf, tone_base = mc.video_params(d, nib)
-        want_idx = list(range(0, nf, 2))[:4]
-        got = sorted(by_doc[d], key=lambda r: r["frame_idx"])
-        assert [r["frame_idx"] for r in got] == want_idx, d
-        for r in got:
-            assert (r["width"], r["height"]) == (w, h)
-            tone = (tone_base + 17 * r["frame_idx"]) % 256
-            # the two corpus aHash constants, selected by tone >= 128
-            assert r["phash"] == (4294967295 if tone >= 128
-                                  else 9223372032559808512), (d, r)
-
-def test_mp4_co64_and_fixed_stsz():
-    """The 64-bit chunk-offset box (co64) and the fixed-sample-size stsz
-    form parse identically to their 32-bit / per-sample twins: rewrite
-    the encoder's boxes and demux again."""
-    from schema_fantasy_spark.ops.video import encode_mp4_mjpeg, parse_mp4_samples
-
-    frames = [b"\xff\xd8" + bytes(30) + b"\xff\xd9"] * 4  # equal sizes
-    p = encode_mp4_mjpeg(frames, 8, 16)
-    base = parse_mp4_samples(p)
-    assert [s[:2] for s in base["samples"]] == [
-        (off, 34) for off, _sz, _k in base["samples"]]
-
-    # stco -> co64: widen each offset to 8 bytes (count stays)
-    i = p.index(b"stco") - 4
-    size = int.from_bytes(p[i:i+4], "big")
-    cnt = int.from_bytes(p[i+12:i+16], "big")
-    offs = [int.from_bytes(p[i+16+4*k:i+20+4*k], "big") for k in range(cnt)]
-    body = bytes(4) + cnt.to_bytes(4, "big") + b"".join(
-        o.to_bytes(8, "big") for o in offs)
-    co64 = (len(body) + 8).to_bytes(4, "big") + b"co64" + body
-    p2 = p[:i] + co64 + p[i+size:]
-    # fix the enclosing box sizes (stbl/minf/mdia/trak/moov each grew)
-    delta = len(co64) - size
-    for tag in (b"stbl", b"minf", b"mdia", b"trak", b"moov"):
-        j = p2.index(tag) - 4
-        p2 = (p2[:j]
-              + (int.from_bytes(p2[j:j+4], "big") + delta).to_bytes(4, "big")
-              + p2[j+4:])
-    got = parse_mp4_samples(p2)
-    assert [s[:2] for s in got["samples"]] == [s[:2] for s in base["samples"]]
-
-    # per-sample stsz -> fixed-size stsz (all samples equal here)
-    i = p.index(b"stsz") - 4
-    size = int.from_bytes(p[i:i+4], "big")
-    body = bytes(4) + (34).to_bytes(4, "big") + (4).to_bytes(4, "big")
-    stsz = (len(body) + 8).to_bytes(4, "big") + b"stsz" + body
-    p3 = p[:i] + stsz + p[i+size:]
-    delta = len(stsz) - size
-    for tag in (b"stbl", b"minf", b"mdia", b"trak", b"moov"):
-        j = p3.index(tag) - 4
-        p3 = (p3[:j]
-              + (int.from_bytes(p3[j:j+4], "big") + delta).to_bytes(4, "big")
-              + p3[j+4:])
-    got = parse_mp4_samples(p3)
-    assert [s[:2] for s in got["samples"]] == [s[:2] for s in base["samples"]]
-
-
 def test_substring_dedup(spark):
     """Cross-doc exact-substring removal: the shared passage survives
     only in the min-id doc; shorter-than-window docs pass through."""
@@ -1966,202 +707,6 @@ def test_substring_dedup_within_doc_repeat_and_sampling(spark):
     kept = set(sampled[2].clean_text.split())
     assert {"p2", "longer", "prefix", "here", "q2"} <= kept  # uniques survive
     assert sampled[2].n_removed_words <= 8       # only shared words go
-
-
-def test_video_keyframe_hashes_fused_equals_chained(spark):
-    """The fused RIFF-parse + JPEG-decode + aHash pass must return
-    exactly what sample_frames -> image_metadata chained returns for
-    MJPEG AVIs (same sampling, same hashes), while quarantining
-    non-AVI payloads at the row level."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops import multimodal
-    from schema_fantasy_spark.ops.jpeg import encode_jpeg_baseline
-    from schema_fantasy_spark.ops.video import encode_avi_mjpeg
-
-    def clip(seed, n_frames):
-        frames = [
-            encode_jpeg_baseline(
-                np.full((16, 16), (40 * (seed + k)) % 256, dtype=np.uint8))
-            for k in range(n_frames)
-        ]
-        return encode_avi_mjpeg(frames, 16, 16)
-
-    rows = [(1, bytearray(clip(1, 5))), (2, bytearray(clip(2, 3))),
-            (3, bytearray(b"not a video"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    fused = {
-        (r["doc_id"], r["frame_idx"]): (r["width"], r["height"], r["phash"])
-        for r in multimodal.video_keyframe_hashes(
-            df, binary_col="payload", id_col="doc_id", every_n=2,
-            max_frames=2).collect()
-    }
-    frames = multimodal.sample_frames(
-        df.filter(F.col("doc_id") < 3), binary_col="payload",
-        id_col="doc_id", every_n=2, max_frames=2)
-    chained = {}
-    for fr in frames.collect():
-        m = multimodal.image_metadata(
-            spark.createDataFrame(
-                [(fr["doc_id"], bytearray(fr["frame_bytes"]))],
-                "doc_id long, b binary"), binary_col="b",
-            id_col="doc_id").collect()[0]
-        chained[(fr["doc_id"], fr["frame_idx"])] = (
-            m["width"], m["height"], m["phash"])
-    assert fused == chained and len(fused) == 4
-    assert not any(k[0] == 3 for k in fused)  # non-AVI quarantined
-
-
-def test_image_resize_nearest_and_area(spark):
-    """image_resize: nearest = exact integer index sampling (up- and
-    down-scaling), area = box average rounded half-up; undecodable rows
-    quarantine; tensors arrive flattened row-major RGB."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.multimodal import (
-        encode_ppm6,
-        image_resize,
-    )
-
-    # 4x2 source with distinct pixels: upscale to 3x5 and downscale to 2x2
-    src = np.arange(4 * 2 * 3, dtype=np.uint8).reshape(2, 4, 3) * 10
-    rows = [(1, bytearray(encode_ppm6(src))), (2, bytearray(b"notanimage"))]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    up = image_resize(df, binary_col="payload", id_col="doc_id",
-                      out_w=5, out_h=3).collect()
-    assert len(up) == 1  # the undecodable row quarantined
-    r = up[0]
-    assert (r["src_width"], r["src_height"], r["out_w"], r["out_h"]) == (4, 2, 5, 3)
-    ri = [j * 2 // 3 for j in range(3)]
-    ci = [i * 4 // 5 for i in range(5)]
-    expect = [int(src[j, i, c]) for j in ri for i in ci for c in range(3)]
-    assert r["pixels"] == expect
-
-    down = image_resize(df, binary_col="payload", id_col="doc_id",
-                        out_w=2, out_h=1, method="area").collect()[0]
-    # area boxes: rows 0..1, cols [0,2) and [2,4) -> plain means
-    exp = [int(np.floor(src[:, 0:2, c].mean() + 0.5)) for c in range(3)] + \
-          [int(np.floor(src[:, 2:4, c].mean() + 0.5)) for c in range(3)]
-    assert down["pixels"] == exp
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown method"):
-        image_resize(df, method="bicubic")
-
-
-def test_lossy_bpred_tone_curve_exhaustive():
-    """The oracle for image_resize_synthetic states the B_PRED lossy
-    family's reconstruction closed-form: top = min(ta+1, 255), bottom =
-    256-ta clamped, except ta=255 whose doubled -510 residual lands 0.
-    Pin that curve over ALL 256 tones so an encoder/decoder change that
-    shifts any tone breaks here before it breaks the gate."""
-    from schema_fantasy_spark.ops.webp import (
-        decode_webp,
-        encode_webp_lossy_bpred,
-        encode_webp_lossy_two_tone,
-    )
-
-    for ta in range(256):
-        q = decode_webp(
-            encode_webp_lossy_bpred(8, 32, 2 * (ta - 128), 2 * (255 - 2 * ta))
-        )
-        top, bot = int(q[0, 0, 0]), int(q[-1, 0, 0])
-        assert top == min(ta + 1, 255), ta
-        assert bot == (0 if ta == 255 else min(256 - ta, 255)), ta
-        # the 16x16 path reconstructs the construction exactly
-        e = decode_webp(
-            encode_webp_lossy_two_tone(8, 32, ta - 128, 255 - 2 * ta)
-        )
-        assert int(e[0, 0, 0]) == ta and int(e[-1, 0, 0]) == 255 - ta
-
-
-def test_audio_resample_nearest(spark):
-    """audio_resample: exact nearest-index resampling for PCM and G.711
-    WAVs (up, down, identity), channel 0 of stereo, header-walk codecs
-    and corrupt rows quarantined."""
-    import numpy as np
-
-    from schema_fantasy_spark.ops.multimodal import (
-        audio_resample,
-        encode_wav_g711,
-        encode_wav_pcm16,
-    )
-
-    src = np.array([100, -100, 200, -200, 300, -300, 400, -400],
-                   dtype="<i2")
-    # stereo: interleave a junk right channel that must be ignored
-    stereo = np.empty(16, dtype="<i2")
-    stereo[0::2] = src
-    stereo[1::2] = 9999
-    import struct
-
-    def wav_stereo(samples, rate):
-        body = samples.tobytes()
-        fmt = struct.pack("<HHIIHH", 1, 2, rate, rate * 4, 4, 16)
-        return (b"RIFF" + (36 + len(body)).to_bytes(4, "little") + b"WAVE"
-                + b"fmt " + (16).to_bytes(4, "little") + fmt
-                + b"data" + len(body).to_bytes(4, "little") + body)
-
-    ulaw_codes = np.array([0x1F ^ 0x7F, 0x9F ^ 0x7F] * 4, dtype=np.uint8)
-    rows = [
-        (1, bytearray(encode_wav_pcm16(src, rate=8000))),      # upsample
-        (2, bytearray(encode_wav_pcm16(src, rate=32000))),     # downsample
-        (3, bytearray(encode_wav_pcm16(src, rate=16000))),     # identity
-        (4, bytearray(wav_stereo(stereo, 8000))),              # stereo
-        (5, bytearray(encode_wav_g711(ulaw_codes, rate=8000))),  # mu-law
-        (6, bytearray(b"ID3garbage")),                          # quarantine
-        (7, bytearray(encode_wav_pcm16(src, rate=8000))[:13]),  # truncated
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in audio_resample(
-        df, binary_col="payload", id_col="doc_id", out_rate=16000
-    ).collect()}
-    assert set(got) == {1, 2, 3, 4, 5}
-    # upsample 8k -> 16k: each source sample twice
-    assert got[1]["n_out"] == 16
-    assert got[1]["samples"] == [int(v) for v in np.repeat(src, 2)]
-    # downsample 32k -> 16k: every other sample
-    assert got[2]["n_out"] == 4
-    assert got[2]["samples"] == [100, 200, 300, 400]
-    # identity
-    assert got[3]["samples"] == [int(v) for v in src]
-    # stereo: left channel only, junk never surfaces
-    assert got[4]["samples"] == [int(v) for v in np.repeat(src, 2)]
-    # G.711 mu-law decodes through the expansion table, then resamples
-    from schema_fantasy_spark.ops.multimodal import parse_wav_g711
-
-    _t, _sr, _nch, decoded = parse_wav_g711(bytes(rows[4][1]))
-    assert got[5]["samples"] == [int(v) for v in np.repeat(decoded, 2)]
-
-
-def test_jpeg_batched_codec_bitstream_pinned():
-    """r9 optimization regression pin: the batched-block DCT/IDCT paths
-    (stacked matmuls + one zigzag gather per plane) must reproduce the
-    round-1..8 per-block implementation BIT-FOR-BIT. Digests recorded
-    from the pre-batching code (commit a1c7eed) on fixed seeded inputs;
-    any arithmetic drift in encode (baseline gray/rgb/4:2:0,
-    progressive) or decode flips a digest."""
-    import hashlib
-
-    import numpy as np
-
-    from schema_fantasy_spark.ops import jpeg as J
-
-    rng = np.random.default_rng(4242)
-    g = rng.integers(0, 256, (37, 29), np.uint8)
-    c = rng.integers(0, 256, (24, 31, 3), np.uint8)
-    md5 = lambda b: hashlib.md5(b).hexdigest()  # noqa: E731
-    assert md5(J.encode_jpeg_baseline(g)) == \
-        "c7827c8042bc6877bec66ae17fbab46f"
-    assert md5(J.encode_jpeg_baseline(c)) == \
-        "3506b2a40168e4eaefaa5bb6c2c2ace9"
-    assert md5(J.encode_jpeg_baseline(c, subsample=True)) == \
-        "0f262f15c9994c518b89786e8849044f"
-    assert md5(J.encode_jpeg_progressive(g)) == \
-        "1adb02510307229cef97dd8e64b08fbf"
-    assert md5(J.decode_jpeg_pixels(J.encode_jpeg_baseline(c)).tobytes()) == \
-        "f52b2e975a7dae595239462a2b30775d"
 
 
 def test_duplicate_clusters_driver_path_matches_distributed(spark):

@@ -206,21 +206,6 @@ def test_resumable_run_prunes_partitioned_input(spark, tmp_path_factory):
     assert validated.count() > 0
 
 
-def test_multimodal_decode_no_shuffle(spark):
-    """image/audio decode must stay partition-preserving: generate ->
-    mapInPandas decode is one pipelined stage, no Exchange (at 10^12 docs
-    a decode-stage shuffle would move every payload byte)."""
-    from schema_fantasy_spark.ops import mm_corpus, multimodal
-
-    ids = spark.range(0, 256).select(F.col("id").alias("doc_id"))
-    meta = multimodal.image_metadata(
-        mm_corpus.synthetic_images(ids), binary_col="payload", id_col="doc_id"
-    )
-    plan = plan_of(meta)
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan or "MapInPandas" in plan
-
-
 def test_duplicate_clusters_bounded_plan(spark):
     """the cluster loop's localCheckpoint() must truncate lineage: the
     final plan depends on the LAST round only (scan of checkpointed RDDs

@@ -214,3 +214,30 @@ def test_atomless_braced_quantifier_raises_both_modes():
     assert java_pattern("{GG}") == r"\{GG\}"     # invalid form: literal
     assert java_pattern("x{,2}") == r"x\{,2\}"   # invalid form: literal
     assert java_pattern("\\u{2}") == "u{2}"      # identity-escape 'u' quantified
+
+
+def test_braced_quantifier_after_assertion_or_quantifier_raises():
+    """Assertions ('^', '$', '\\b', '\\B'), group openers ('(?:', '(?=',
+    '(?!', '(?<=', '(?<!') and a consumed quantifier leave nothing to
+    repeat: the reference's flagless RegExp rejects a following braced
+    quantifier at compile time, so both dialect paths raise
+    RegexDialectError (not a pass-through or a bare re.error)."""
+    import pytest
+
+    from schema_fantasy_spark.compiler.regex_dialect import (
+        RegexDialectError,
+        java_pattern,
+        python_pattern,
+    )
+
+    for pat in ["^{2}", "${2}", "\\b{2}", "\\B{2}", "(?:{2})", "(?={2})",
+                "(?!{2})", "(?<={2})", "(?<!{2})", "a*{2}", "a+{2}",
+                "a?{2}", "a*?{2}", "a{2}{3}"]:
+        for fn in (java_pattern, python_pattern):
+            with pytest.raises(RegexDialectError):
+                fn(pat)
+    # quantified atoms, lazy modifiers and quantified groups still translate
+    for pat in ["a{2}", "(a){2}", "(?:a){2}", "(?=a){2}", "a{2}?", "[$]{2}",
+                "^a{2}$", "\\ba{2}"]:
+        assert java_pattern(pat) == pat
+        assert python_pattern(pat).pattern == pat

@@ -15,6 +15,7 @@ import os, sys
 import numpy as np, pyarrow as pa, pyarrow.parquet as pq
 
 OUT = "/tmp/sfs_sf1"
+os.makedirs(OUT, exist_ok=True)
 rng = np.random.default_rng(42)
 VOCAB = np.array(['a','agg','batch','big','column','customer','data','dup','fast',
  'filter','group','hash','join','key','line','merge','order','part','query','row',
