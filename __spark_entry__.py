@@ -64,7 +64,7 @@ _ENUM_EXPECTED = "en, de, fr or es"
 
 def _spread(df: DataFrame, *keys: str) -> DataFrame:
     """Spread a single-row-group bench scan across cores before a
-    compute-heavy stage (ops.dedup._ensure_parallelism: no-op whenever
+    compute-heavy stage (dynamic._ensure_parallelism: no-op whenever
     the input already has >= defaultParallelism partitions — always true
     for a 100 TB table, so at scale this never adds a shuffle). Applied
     AFTER pushed filters so scan pruning/pushdown is unchanged; outputs
@@ -72,7 +72,7 @@ def _spread(df: DataFrame, *keys: str) -> DataFrame:
     partition-layout-invariant. Pass the row-id column as ``keys`` where
     one exists: hash repartitioning skips round-robin's local
     sort-before-repartition (retry-deterministic either way)."""
-    from schema_fantasy_spark.ops.dedup import _ensure_parallelism
+    from schema_fantasy_spark.dynamic import _ensure_parallelism
 
     return _ensure_parallelism(df, keys=keys)
 
@@ -626,255 +626,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .select("event_type", "event_id", "value", "rn")
         )
 
-    # ---- training-data pipeline ops (dedup / similarity / text analysis)
-
     def error_breakdown_documents(spark, sf):
         docs = _spread(tables.load(spark, sf, "documents"), "doc_id")
         v = ValidationEngine(DOCUMENTS_SCHEMA).apply(docs)
         return ValidationEngine.error_breakdown(v)
-
-    def exact_dedup_documents(spark, sf):
-        from schema_fantasy_spark.ops import dedup
-
-        docs = tables.load(spark, sf, "documents")
-        groups = dedup.exact_duplicates(docs)
-        return groups.select(
-            "digest", "n_copies", F.array_join("ids", ",").alias("ids")
-        )
-
-    def jaccard_pairs_documents(spark, sf):
-        # all-pairs exact Jaccard is the ORACLE for the LSH pipeline, not
-        # the scale path — O(n^2) by construction, so bound to a
-        # deterministic 500-doc slice (the whole table at sf0.01)
-        from schema_fantasy_spark.ops import dedup
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("doc_id") < 500)
-        ids = docs.select("doc_id")
-        pairs = (
-            ids.select(F.col("doc_id").alias("id_a"))
-            .crossJoin(ids.select(F.col("doc_id").alias("id_b")))
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-        # restrict=False: this ORACLE query's pairs table is a cheap
-        # cross join covering every sliced id — the LSH pipeline's
-        # checkpoint + semi-join restriction is pure overhead here
-        return dedup.jaccard_pairs(
-            docs, pairs, shingle_n=3, threshold=0.06, restrict=False
-        )
-
-    def minhash_near_dup_documents(spark, sf):
-        # md5-lane minhash so the DuckDB oracle replays the FULL pipeline
-        # (signatures -> bands -> bucket join -> exact-Jaccard verify);
-        # method='xxhash64' (default) is the faster scale path with
-        # identical plan shape
-        from schema_fantasy_spark.ops import dedup
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("text").isNotNull())
-        return dedup.minhash_near_duplicates(
-            docs, threshold=0.06, num_hashes=16, bands=8, method="md5"
-        )
-
-    def near_dup_clusters_documents(spark, sf):
-        # near-dup CLUSTER FORMATION under the gate: connected components
-        # (min-label propagation, O(diameter) rounds of join+min) over the
-        # verified md5-minhash pairs; the oracle replays the same pair
-        # pipeline and closes it transitively with a recursive CTE
-        from schema_fantasy_spark.ops import dedup
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("text").isNotNull())
-        pairs = dedup.minhash_near_duplicates(
-            docs, threshold=0.06, num_hashes=16, bands=8, method="md5"
-        )
-        return dedup.duplicate_clusters(pairs)
-
-    def simhash_near_dup_documents(spark, sf):
-        # 60-bit md5-prefix simhash (oracle-replayable); the xxhash64
-        # 64-bit variant is the scale default with the same plan shape
-        from schema_fantasy_spark.ops import dedup
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("text").isNotNull())
-        return dedup.simhash_near_duplicates(docs, max_hamming=3, method="md5").select(
-            "id_a", "id_b", "hamming"
-        )
-
-    def text_features_documents(spark, sf):
-        # the per-doc text-analysis battery in ONE scan pass: token
-        # counting, BPE-ish subword estimate, rolling-hash fingerprint
-        # (md5-hex so the oracle replays it; xxhash64 is the scale
-        # default), quality scoring, and marker-word language ID — all
-        # chained column pipelines, no joins. PLUS the PII battery
-        # (ops/pii.py): deterministic PII spans are injected from doc_id
-        # (an email on every doc; phone on %3; IPv4 on %5; a card-like
-        # run on %4, Luhn-VALID only on %8) and the staged scrub must
-        # find exactly those spans and redact them to placeholders — the
-        # oracle rebuilds the scrubbed text and every count from the
-        # same construction (corpus text is letters+spaces only, so the
-        # injected spans are the only possible matches).
-        from schema_fantasy_spark.ops import text as tx
-        from schema_fantasy_spark.ops.dedup import _ensure_parallelism
-        from schema_fantasy_spark.ops.pii import pii_scrub
-
-        # the interpreted HOF work (tokenization, scoring) inherits the
-        # scan's parallelism: spread the single-row-group bench file
-        # across cores (no-op at scale - see _ensure_parallelism)
-        docs = _ensure_parallelism(tables.load(spark, sf, "documents"))
-        i = F.col("doc_id")
-        injected = F.concat(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(" contact bob"), i.cast("string"),
-            F.lit("@mail"), F.pmod(i, F.lit(7)).cast("string"),
-            F.lit(".example.com"),
-            F.when(
-                i % 3 == 0,
-                F.concat(F.lit(" call +1 (555) 010-"),
-                         F.lpad(F.pmod(i, F.lit(9000)).cast("string"), 4, "0")),
-            ).otherwise(F.lit("")),
-            F.when(
-                i % 5 == 0,
-                F.concat(F.lit(" from 10.0."), F.pmod(i, F.lit(256)).cast("string"),
-                         F.lit("."), F.pmod(i * 7, F.lit(256)).cast("string")),
-            ).otherwise(F.lit("")),
-            F.when(
-                i % 4 == 0,
-                F.when(i % 8 == 0, F.lit(" pay 4242 4242 4242 4242"))
-                .otherwise(F.lit(" pay 4242424242424241")),
-            ).otherwise(F.lit("")),
-        )
-        # PLUS CCNet-style statistical fluency (ops/lm.py): a char-bigram
-        # transition model trained on the deterministic doc_id%7 slice,
-        # every doc scored by mean quantized transition likelihood —
-        # integer-exact (probabilities in millionths, floor division),
-        # so the oracle replays the score bit-for-bit in SQL
-        from schema_fantasy_spark.ops import lm
-
-        model = lm.train_char_bigram(docs, sample_mod=7)
-        out = tx.lang_id(tx.quality_score(tx.fingerprint(docs, method="md5"), "text"))
-        # Generate barrier #1: the final select reads SEVEN columns of
-        # the tx chain; without the barrier CollapseProject re-inlines
-        # the shared tokenization into every one of them (trap #1 -
-        # measured ~4s of this query at sf0.1)
-        out = out.select(
-            "doc_id", "text",
-            F.explode(F.array(F.struct(
-                "n_tokens", "fingerprint", "mean_token_len", "punct_ratio",
-                "stopword_ratio", "distinct_token_ratio", "quality_score",
-                "lang_pred",
-            ))).alias("__tx"),
-        )
-        # barrier #2 (inside with_bigram_fluency): the normalized char
-        # index array materializes once; inlining the scoring column
-        # re-evaluated the O(V)-per-char normalization per reference
-        # (traps #1/#9, measured ~8x the scoring cost)
-        out = lm.with_bigram_fluency(out, model)
-        # barrier #3: six field reads of the scrub struct would
-        # otherwise re-inline the whole staged regex chain per field
-        out = out.select(
-            "*", F.explode(F.array(pii_scrub(injected))).alias("__pii")
-        )
-        p = F.col("__pii")
-        t = F.col("__tx")
-        return out.select(
-            "doc_id",
-            t["n_tokens"].alias("n_tokens"),
-            tx.bpeish_token_count(F.col("text")).alias("n_bpeish"),
-            t["fingerprint"].alias("fingerprint"),
-            t["mean_token_len"].alias("mean_token_len"),
-            t["punct_ratio"].alias("punct_ratio"),
-            t["stopword_ratio"].alias("stopword_ratio"),
-            t["distinct_token_ratio"].alias("distinct_token_ratio"),
-            t["quality_score"].alias("quality_score"),
-            t["lang_pred"].alias("lang_pred"),
-            "lm_bigram_score",
-            p["n_emails"].alias("pii_emails"),
-            p["n_ips"].alias("pii_ips"),
-            p["n_cards"].alias("pii_cards"),
-            p["n_cards_luhn"].alias("pii_cards_luhn"),
-            p["n_phones"].alias("pii_phones"),
-            F.md5(p["scrubbed"]).alias("pii_scrub_md5"),
-        )
-
-    def cosine_topk_embeddings(spark, sf):
-        from schema_fantasy_spark.ops import similarity as sim
-
-        emb = tables.load(spark, sf, "embeddings")
-        qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-        return sim.cosine_topk(emb.filter(F.col("vec_id") != 0), qvec, 10)
-
-    def ann_lsh_topk_embeddings(spark, sf):
-        from schema_fantasy_spark.ops import similarity as sim
-
-        emb = tables.load(spark, sf, "embeddings")
-        qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-        return sim.ann_lsh_topk(emb.filter(F.col("vec_id") != 0), qvec, 10)
-
-    def quantized_cosine_topk_embeddings(spark, sf):
-        # the int8 storage path under the gate: symmetric per-vector
-        # quantization (scales cancel in cosine), BIGINT dot products —
-        # exact integer arithmetic, so the oracle replays the whole
-        # pipeline bit-for-bit including the away-from-zero rounding
-        from schema_fantasy_spark.ops import similarity as sim
-
-        emb = tables.load(spark, sf, "embeddings")
-        qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-        quant = sim.quantize_embeddings(emb.filter(F.col("vec_id") != 0))
-        return sim.quantized_cosine_topk(quant, sim.quantize_vector_py(qvec), 10)
-
-    def ivf_topk_embeddings(spark, sf):
-        # IVF index (seeded k-means lists) PERSISTED partitionBy(list_id),
-        # read back, and probed EXHAUSTIVELY: must equal the exact
-        # brute-force top-k, so it shares the cosine oracle. Partial-probe
-        # recall + partition pruning are asserted in pytest
-        # (tests/test_plan_audit.py).
-        import tempfile
-
-        from schema_fantasy_spark.ops import similarity as sim
-
-        emb = tables.load(spark, sf, "embeddings")
-        qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-        rest = emb.filter(F.col("vec_id") != 0)
-        assigned, centroids = sim.ivf_index(
-            rest, n_lists=8, max_iter=5, assign_partitions=32
-        )
-        # fixed per-sf path, overwritten each run: repeated bench/gate runs
-        # must not accumulate index copies in /tmp
-        index_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"sfspark_ivf_{os.path.basename(os.path.abspath(sf))}",
-        )
-        sim.ivf_write(assigned, centroids, index_dir)
-        assigned2, centroids2 = sim.ivf_read(spark, index_dir)
-        return sim.ivf_topk(assigned2, centroids2, qvec, 10, n_probe=8)
-
-    def ivf_partial_probe_embeddings(spark, sf):
-        # the PRUNING path end-to-end under the gate: probe only 3 of 8
-        # persisted lists, reading 3/8 of the index partitions
-        # (file-level pruning plan-asserted in tests/test_plan_audit.py).
-        # Built with ivf_index_exact — the REPRODUCIBLE integer-exact
-        # training mode (power-of-2 quantization, md5-ordered sample,
-        # integer Lloyd with floor-division means, lowest-list
-        # tie-breaks) — so the DuckDB oracle replays the ENTIRE build:
-        # quantization -> 5 unrolled Lloyd iterations -> probe-list
-        # selection -> exact cosine top-10 within the probed lists, and
-        # the returned row set is hash-matched, not a self-verdict.
-        import tempfile
-
-        from schema_fantasy_spark.ops import similarity as sim
-
-        emb = tables.load(spark, sf, "embeddings")
-        qvec = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-        rest = emb.filter(F.col("vec_id") != 0)
-        assigned, centroids = sim.ivf_index_exact(
-            rest, n_lists=8, max_iter=5, assign_partitions=32
-        )
-        index_dir = os.path.join(
-            tempfile.gettempdir(),
-            f"sfspark_ivfp_{os.path.basename(os.path.abspath(sf))}",
-        )
-        sim.ivf_write(assigned, centroids, index_dir)
-        assigned2, centroids2 = sim.ivf_read(spark, index_dir)
-        return sim.ivf_topk(
-            assigned2, centroids2, qvec, 10, n_probe=3, exact_scale=1 << 20
-        )
 
     def streaming_validation_documents(spark, sf):
         # Structured Streaming under the oracle gate: the SAME flagship
@@ -1205,64 +960,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = scale.per_host_verdicts(validated, url_col="url", buckets=16)
         return out.select("host", "n_rows", "n_invalid", "n_errors", "pass")
 
-    def c4_unit_dedup_documents(spark, sf):
-        # C4-style GLOBAL unit dedup (md5 method -> the oracle replays the
-        # exact pipeline). This corpus is single-line, so docs are first
-        # chunked into 5-word spans (C4 dedups on sentence spans); with
-        # newline-separated corpora the operator is plain C4 line dedup
-        from schema_fantasy_spark.ops import dedup
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("text").isNotNull())
-        chunked = docs.withColumn(
-            "text", F.regexp_replace("text", r"((\S+ ){4}\S+) ", "$1\n")
-        )
-        return dedup.dedup_units_global(chunked, sep="\n", method="md5")
-
-    def filter_funnel_documents(spark, sf):
-        # corpus-cleaning FUNNEL under the gate: sequential rules with
-        # per-rule drop accounting, all computed in ONE aggregation pass
-        # (n_in of rule i == n_out of rule i-1 by construction)
-        from schema_fantasy_spark.ops import text as tx
-
-        docs = tables.load(spark, sf, "documents")
-        rules = [
-            ("text_present", F.col("text").isNotNull()),
-            ("min_20_words", tx.token_count(F.col("text")) >= 20),
-            ("known_lang", F.col("lang").isin("en", "de", "fr", "es")),
-            ("n_chars_cap", F.col("n_chars") <= 500),
-        ]
-        return tx.filter_funnel(docs, rules)
-
-    def gopher_quality_documents(spark, sf):
-        # the FULL Gopher repetition/quality rule family (Rae et al. 2021
-        # table A1): top 2/3/4-gram fractions, duplicate 5-10-gram
-        # character fractions, no-alpha words, symbol-to-word ratio,
-        # bullet/ellipsis line fractions — standard pre-training filters.
-        # PLUS train/test DECONTAMINATION (ops/decontaminate.py): a
-        # deterministic benchmark slice (doc_id % 61 == 0) stands in for
-        # the eval set; any doc sharing an 8-gram with it is flagged
-        # (distinct-gram explode -> broadcast hash join -> per-doc
-        # count), and the oracle replays gram extraction + join in SQL
-        from schema_fantasy_spark.ops import decontaminate as dc
-        from schema_fantasy_spark.ops import text as tx
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("text").isNotNull())
-        out = tx.repetition_metrics(docs)
-        bench = docs.filter(F.col("doc_id") % 61 == 0)
-        hits = dc.contamination_hits(docs, bench, n=8, method="md5")
-        out = (
-            out.join(F.broadcast(hits), "doc_id", "left")
-            .withColumn("contam_hits", F.coalesce(F.col("contam_hits"), F.lit(0)))
-            .withColumn("contaminated", F.col("contam_hits") > 0)
-        )
-        return out.select(
-            "doc_id", "n_words", "frac_top_bigram", "frac_top_trigram",
-            "frac_top_fourgram", "frac_dup_trigrams",
-            *[f"frac_dup_{g}gram_chars" for g in range(5, 11)],
-            "frac_no_alpha", "symbol_word_ratio", "frac_bullet_lines",
-            "frac_ellipsis_lines", "gopher_pass", "contam_hits", "contaminated",
-        )
-
     def text_consistency_documents(spark, sf):
         # the north-star per-row invariant (BASELINE input_hint:
         # byte-identical extracted text per url) gated on the driver
@@ -1447,57 +1144,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "h_expected",
         )
 
-    def robots_allowed_documents(spark, sf):
-        # crawl governance under the oracle: per-host robots.txt BODIES
-        # are synthesized in Column exprs (odd hosts carry a stacked
-        # sfsbot group + a * group, even hosts only a * group with a
-        # wildcard + $-anchored rule), parsed by ops/robots.parse_robots
-        # (posexplode + group windows) and evaluated by robots_allowed
-        # (per-host rule arrays broadcast, HOF longest-match, Allow wins
-        # ties, exact agent group shadows *). The oracle replays the
-        # final verdicts from the same modular construction — any
-        # parse/precedence/anchor error flips verdicts. NOTE: entry 51;
-        # the driver's recording window covers ~50, so this gate is
-        # verified by tools/check_correctness.py locally either way.
-        from schema_fantasy_spark.ops.robots import parse_robots, robots_allowed
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        ks = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        i = F.col("doc_id").cast("string")
-        host = F.concat(F.lit("h"), ks, F.lit(".example.com"))
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        path = (
-            F.when(m == 0, F.concat(F.lit("/p"), ks, F.lit("/a"), i))
-            .when(m == 1, F.concat(F.lit("/p"), ks, F.lit("/open"), i))
-            .when(m == 2, F.concat(F.lit("/tmp/"), i))
-            .otherwise(F.concat(F.lit("/p"), ks, F.lit("/a"), i, F.lit("x")))
-        )
-        urls = docs.select("doc_id", host.alias("host"), path.alias("path"))
-        hosts = spark.range(19).select(F.col("id").cast("int").alias("k"))
-        hs = F.col("k").cast("string")
-        rtxt = F.when(
-            F.pmod(F.col("k"), F.lit(2)) == 1,
-            F.concat(
-                F.lit("# crawl policy\nUser-agent: GoogleBot\nUser-agent: sfsbot\n"
-                      "Disallow: /p"), hs,
-                F.lit("/\nAllow: /p"), hs,
-                F.lit("/open\n\nUser-agent: *\nDisallow: /tmp/\n"),
-            ),
-        ).otherwise(
-            F.concat(
-                F.lit("User-agent: *\nDisallow: /p"), hs,
-                F.lit("/*x$\nAllow: /p"), hs, F.lit("/\n"),
-            )
-        )
-        robots = hosts.select(
-            F.concat(F.lit("h"), hs, F.lit(".example.com")).alias("host"),
-            rtxt.alias("robots_txt"),
-        )
-        rules = parse_robots(robots)
-        return robots_allowed(urls, rules, "SfsBot")
-
     def html_metadata_documents(spark, sf):
         # HTML metadata + outlink extraction under the gate (ops/
         # html_meta.py): per-doc pages are synthesized in Column exprs
@@ -1508,9 +1154,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # columns. The oracle states the expected title / description /
         # og:title / canonical / resolved-link strings directly from the
         # same modular construction — any regex/order/quote/entity/
-        # resolution error flips a value. NOTE: entry 53 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # resolution error flips a value.
         from schema_fantasy_spark.ops.html_meta import with_html_metadata
 
         docs = tables.load(spark, sf, "documents").select("doc_id").filter(
@@ -1574,232 +1218,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ).alias("resolved_links"),
         )
 
-    def pagerank_hosts_documents(spark, sf):
-        # Host link-graph PageRank under the gate (ops/linkgraph.py):
-        # edges derive deterministically from documents (h(doc_id%18) ->
-        # h((7*doc_id+3)%19), plus a second fan-out edge when doc_id%3
-        # == 0; node h18 is never a source, so dangling-mass teleport is
-        # exercised on real rows), then 5 fixed-point BIGINT iterations.
-        # The oracle REPLAYS the full iteration in SQL (chained CTEs,
-        # integer //), bit-for-bit — any edge-dedup/degree/dangling/
-        # rounding error flips ranks. NOTE: entry 54 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.linkgraph import pagerank
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        src = F.concat(F.lit("h"), F.pmod(F.col("doc_id"), F.lit(18)).cast("string"))
-        d1 = F.concat(
-            F.lit("h"), F.pmod(F.col("doc_id") * 7 + 3, F.lit(19)).cast("string")
-        )
-        d2 = F.concat(
-            F.lit("h"), F.pmod(F.col("doc_id") * 5 + 11, F.lit(19)).cast("string")
-        )
-        e1 = docs.select(src.alias("src"), d1.alias("dst"))
-        e2 = docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == 0).select(
-            src.alias("src"), d2.alias("dst")
-        )
-        edges = e1.union(e2).where(F.col("src") != F.col("dst"))
-        pr = pagerank(edges, iterations=5)
-        return pr.select(F.col("node").alias("host"), "rank_scaled")
-
-    def sitemap_urls_documents(spark, sf):
-        # Sitemap inventory under the gate (ops/sitemap.py): per-host
-        # bodies synthesized in Column exprs, now spanning the FULL
-        # protocol surface — k%2==0 hosts a urlset of 2+k%3 entries
-        # (escaped-& query locs, lastmod, priority on even slots only),
-        # with the k%4==2 subset DELIVERED GZIPPED (.xml.gz is the
-        # protocol-sanctioned form; with_gunzipped_sitemaps gunzips at
-        # the source seam, so a gunzip error kills those hosts' rows);
-        # k%4==3 hosts a single-level sitemapindex over two child
-        # urlsets; k%4==1 hosts a NESTED index whose children are
-        # themselves indexes over two grandchild urlsets each (depth 2,
-        # via expand_sitemap_indexes' bounded data-driven loop). The
-        # oracle states the per-host inventory (counts, max lastmod,
-        # sorted locs, max index depth) closed-form from the same
-        # construction — any block/loc/lastmod/priority/entity/gunzip/
-        # nesting error flips a value. NOTE: entry 55 — in the driver's
-        # recorded window since the round-8 rotation;
-        # tools/check_correctness.py verifies all 83 every round.
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-        from schema_fantasy_spark.ops.sitemap import (
-            expand_sitemap_indexes,
-            sitemap_kind,
-            with_gunzipped_sitemaps,
-        )
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        hosts = docs.select(
-            F.pmod(F.col("doc_id"), F.lit(19)).cast("int").alias("k")
-        ).distinct()
-        ks = F.col("k").cast("string")
-        host = F.concat(F.lit("h"), ks, F.lit(".example.com"))
-        base = F.concat(F.lit("https://h"), ks, F.lit(".example.com"))
-        nu = (F.lit(2) + F.pmod(F.col("k"), F.lit(3))).cast("int")
-        urlset = F.concat(
-            F.lit('<?xml version="1.0" encoding="UTF-8"?>\n<urlset '
-                  'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n'),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), nu - 1),
-                    lambda j: F.concat(
-                        F.lit("  <url>\n    <loc> "), base, F.lit("/page/"),
-                        j.cast("string"),
-                        F.lit("?a=1&amp;b=2 </loc>\n    <lastmod>2026-02-"),
-                        F.lpad((F.col("k") + j + 1).cast("string"), 2, "0"),
-                        F.lit("</lastmod>\n"),
-                        F.when(
-                            F.pmod(j, F.lit(2)) == 0,
-                            F.concat(
-                                F.lit("    <priority>0."),
-                                (F.lit(5) + j).cast("string"),
-                                F.lit("</priority>\n"),
-                            ),
-                        ).otherwise(F.lit("")),
-                        F.lit("  </url>\n"),
-                    ),
-                ),
-                "",
-            ),
-            F.lit("</urlset>"),
-        )
-        index = F.concat(
-            F.lit('<?xml version="1.0"?>\n<sitemapindex '
-                  'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">\n'
-                  "  <sitemap><loc>"),
-            base,
-            F.lit("/sm/0.xml</loc><lastmod>2026-01-02</lastmod></sitemap>\n"
-                  "  <sitemap><loc>"),
-            base,
-            F.lit("/sm/1.xml</loc></sitemap>\n</sitemapindex>"),
-        )
-        xml = F.when(F.pmod(F.col("k"), F.lit(2)) == 0, urlset).otherwise(index)
-
-        # k%4==2 hosts ship .xml.gz: compress deterministically (mtime=0)
-        # in the Arrow lane; everything else ships utf-8 bytes. The
-        # gunzip seam then recovers identical XML for both — the oracle
-        # sees only the decoded values.
-        @pandas_udf("binary", PandasUDFType.SCALAR)
-        def _maybe_gz(xml_s, gz_flag):
-            import gzip
-
-            import pandas as pd
-
-            return pd.Series([
-                gzip.compress(x.encode("utf-8"), mtime=0) if f
-                else x.encode("utf-8")
-                for x, f in zip(xml_s, gz_flag)
-            ])
-
-        sm = hosts.select(
-            "k", host.alias("host"),
-            _maybe_gz(xml, F.pmod(F.col("k"), F.lit(4)) == 2)
-            .alias("sitemap_body"),
-        )
-        sm = with_gunzipped_sitemaps(sm)
-
-        # fetched-bodies table: children of every odd host, plus the
-        # grandchild urlsets behind the k%4==1 nested indexes
-        odd = hosts.filter(F.pmod(F.col("k"), F.lit(2)) == 1)
-        childs = odd.select(
-            "k", F.explode(F.sequence(F.lit(0), F.lit(1))).alias("c")
-        )
-        cbase = F.concat(
-            F.lit("https://h"), F.col("k").cast("string"), F.lit(".example.com")
-        )
-        cs = F.col("c").cast("string")
-        child_urlset = F.concat(
-            F.lit('<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(1)),
-                    lambda j: F.concat(
-                        F.lit("<url><loc>"), cbase, F.lit("/p/"), cs, F.lit("/"),
-                        j.cast("string"), F.lit("</loc><lastmod>2026-03-"),
-                        F.lpad(
-                            (F.col("k") + F.col("c") + j + 1).cast("string"), 2, "0"
-                        ),
-                        F.lit("</lastmod></url>"),
-                    ),
-                ),
-                "",
-            ),
-            F.lit("</urlset>"),
-        )
-        child_index = F.concat(
-            F.lit("<sitemapindex><sitemap><loc>"),
-            cbase, F.lit("/sm/"), cs, F.lit("/g0.xml"),
-            F.lit("</loc></sitemap><sitemap><loc>"),
-            cbase, F.lit("/sm/"), cs, F.lit("/g1.xml"),
-            F.lit("</loc></sitemap></sitemapindex>"),
-        )
-        child_body = F.when(
-            F.pmod(F.col("k"), F.lit(4)) == 1, child_index
-        ).otherwise(child_urlset)
-        child_tbl = childs.select(
-            F.concat(cbase, F.lit("/sm/"), cs, F.lit(".xml")).alias("child_url"),
-            child_body.alias("body"),
-        )
-        grands = (
-            odd.filter(F.pmod(F.col("k"), F.lit(4)) == 1)
-            .select("k", F.explode(F.sequence(F.lit(0), F.lit(1))).alias("c"))
-            .select("k", "c", F.explode(F.sequence(F.lit(0), F.lit(1))).alias("g"))
-        )
-        gs = F.col("g").cast("string")
-        grand_body = F.concat(
-            F.lit('<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(1)),
-                    lambda j: F.concat(
-                        F.lit("<url><loc>"), cbase, F.lit("/pg/"), cs,
-                        F.lit("/"), gs, F.lit("/"), j.cast("string"),
-                        F.lit("</loc><lastmod>2026-04-"),
-                        F.lpad(
-                            (F.col("k") + F.col("c") + F.col("g") + j + 1)
-                            .cast("string"), 2, "0",
-                        ),
-                        F.lit("</lastmod></url>"),
-                    ),
-                ),
-                "",
-            ),
-            F.lit("</urlset>"),
-        )
-        grand_tbl = grands.select(
-            F.concat(cbase, F.lit("/sm/"), cs, F.lit("/g"), gs, F.lit(".xml"))
-            .alias("child_url"),
-            grand_body.alias("body"),
-        )
-        bodies = child_tbl.unionByName(grand_tbl)
-
-        exp = expand_sitemap_indexes(
-            sm, bodies, key_cols=("k", "host"), max_depth=2
-        )
-        kinds = sm.select(
-            "k", "host", sitemap_kind(F.col("sitemap_xml")).alias("kind")
-        )
-        return (
-            exp.join(F.broadcast(kinds), ["k", "host"])
-            .groupBy("host", "kind")
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("n_urls"),
-                F.sum(
-                    F.when(F.col("priority").isNotNull(), 1).otherwise(0)
-                ).cast("int").alias("n_priority"),
-                F.max("lastmod").alias("max_lastmod"),
-                F.array_join(F.array_sort(F.collect_list("loc")), "\n").alias(
-                    "locs"
-                ),
-                F.max("depth").cast("int").alias("max_index_depth"),
-            )
-        )
-
     def jsonld_validation_documents(spark, sf):
         # The INTEGRATION entry: raw HTML -> embedded JSON-LD extraction
         # (ops/html_meta.jsonld_blocks, pure Column) -> the engine's own
@@ -1811,9 +1229,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # indexing under posexplode). Every page carries a javascript
         # decoy block and a quote-guarded type= spoof inside another
         # attribute — extracting either flips rows. The oracle states
-        # every violation closed-form. NOTE: entry 56 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # every violation closed-form.
         from schema_fantasy_spark.dynamic import validate_json
         from schema_fantasy_spark.ops.html_meta import jsonld_blocks
 
@@ -1887,146 +1303,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "message",
         )
 
-    def anchor_text_hosts_documents(spark, sf):
-        # Anchor-text profile per destination host (ops/linkgraph.
-        # top_anchors): links derive deterministically from documents
-        # (dst = h((7*doc_id+3)%19), anchor = a(doc_id%5) — near-uniform
-        # counts so the deterministic tie-break does real work), top-2
-        # per host. Oracle replays the groupBy + row_number window in
-        # SQL — any count/ordering/tie-break drift flips rows. NOTE: entry 57 — in
-        # the driver's recorded window since the round-8 rotation;
-        # tools/check_correctness.py verifies all 83 every round.
-        from schema_fantasy_spark.ops.linkgraph import top_anchors
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        links = docs.select(
-            F.concat(
-                F.lit("h"), F.pmod(F.col("doc_id") * 7 + 3, F.lit(19)).cast("string")
-            ).alias("dst"),
-            F.concat(
-                F.lit("a"), F.pmod(F.col("doc_id"), F.lit(5)).cast("string")
-            ).alias("anchor"),
-        )
-        return top_anchors(links, k=2).select(
-            F.col("dst").alias("dst_host"), "anchor", "cnt", "rnk"
-        )
-
-    def classifier_scores_documents(spark, sf):
-        # Supervised model-based corpus filtering under the gate (ops/
-        # classifier.py — the fastText-style gate of DCLM/FineWeb-style
-        # recipes, made integer-exact): train on the deterministic
-        # doc_id%3 slice with lang=='en' labels (top-64 vocab by count
-        # desc/token asc + UNK bucket, add-one smoothing, millionth
-        # quantization, NO logs), then score EVERY document with the
-        # shuffle-free literal-map fold. The oracle replays TRAINING AND
-        # SCORING bit-for-bit in SQL — any tokenizer/cap/tie-break/
-        # rounding drift flips scores. NOTE: entry 58 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.classifier import (
-            train_token_classifier,
-            with_classifier_score,
-        )
-
-        docs = (
-            tables.load(spark, sf, "documents")
-            .filter(F.col("doc_id").isNotNull())
-            .select("doc_id", "text", (F.col("lang") == "en").alias("is_en"))
-        )
-        model = train_token_classifier(docs, "is_en", max_vocab=64)
-        out = with_classifier_score(docs, model, out_col="score")
-        return out.select(
-            "doc_id",
-            F.col("score").cast("long").alias("score"),
-            (F.col("score") > 0).alias("pred_en"),
-        )
-
-    def feed_entries_documents(spark, sf):
-        # Feed inventory under the gate (ops/feeds.py): per-host bodies
-        # synthesized in Column exprs — even hosts RSS 2.0 with 2+k%3
-        # items (entities in channel + item titles, guid/pubDate), odd
-        # hosts Atom with 2 entries (numeric-entity titles, href links
-        # in BOTH quote styles, updated/id). The oracle states the
-        # per-host inventory (kind, decoded feed title, entry count,
-        # max timestamp, sorted links + titles) closed-form from the
-        # same construction. NOTE: entry 59 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.feeds import parse_feeds
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        hosts = docs.select(
-            F.pmod(F.col("doc_id"), F.lit(19)).cast("int").alias("k")
-        ).distinct()
-        ks = F.col("k").cast("string")
-        host = F.concat(F.lit("h"), ks, F.lit(".example.com"))
-        base = F.concat(F.lit("https://h"), ks, F.lit(".example.com"))
-        nu = (F.lit(2) + F.pmod(F.col("k"), F.lit(3))).cast("int")
-        rss = F.concat(
-            F.lit('<?xml version="1.0"?>\n<rss version="2.0"><channel>\n'
-                  "  <title>Feed &amp; h"),
-            ks,
-            F.lit("</title>\n  <link>"), base, F.lit("/</link>\n"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), nu - 1),
-                    lambda j: F.concat(
-                        F.lit("  <item><title>Item "), j.cast("string"),
-                        F.lit(" &amp; h"), ks, F.lit("</title><link>"),
-                        base, F.lit("/n/"), j.cast("string"),
-                        F.lit("</link><pubDate>2026-02-"),
-                        F.lpad((F.col("k") + j + 1).cast("string"), 2, "0"),
-                        F.lit("T00:00:00Z</pubDate><guid>g"), ks,
-                        F.lit("-"), j.cast("string"),
-                        F.lit("</guid></item>\n"),
-                    ),
-                ),
-                "",
-            ),
-            F.lit("</channel></rss>"),
-        )
-        atom = F.concat(
-            F.lit('<?xml version="1.0" encoding="utf-8"?>\n'
-                  '<feed xmlns="http://www.w3.org/2005/Atom">\n'
-                  "  <title>AtomFeed h"),
-            ks,
-            F.lit('</title>\n  <link href="'), base, F.lit('/"/>\n'
-                  "  <entry><title>Entr&#233;e 0</title>"
-                  '<link href="'), base, F.lit('/e/0"/>'
-                  "<updated>2026-03-"),
-            F.lpad((F.col("k") + 1).cast("string"), 2, "0"),
-            F.lit("T00:00:00Z</updated><id>urn:h"), ks, F.lit(":0</id></entry>\n"
-                  "  <entry><title>Entr&#233;e 1</title>"
-                  "<link href='"), base, F.lit("/e/1'/>"
-                  "<updated>2026-03-"),
-            F.lpad((F.col("k") + 2).cast("string"), 2, "0"),
-            F.lit("T00:00:00Z</updated><id>urn:h"), ks, F.lit(":1</id></entry>\n"
-                  "</feed>"),
-        )
-        xml = F.when(F.pmod(F.col("k"), F.lit(2)) == 0, rss).otherwise(atom)
-        fd = hosts.select(host.alias("host"), xml.alias("feed_xml"))
-        parsed = parse_feeds(fd, key_cols=("host",))
-        return (
-            parsed.select(
-                "host", "kind", "feed_title", F.explode("entries").alias("e")
-            )
-            .groupBy("host", "kind", "feed_title")
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("n_entries"),
-                F.max("e.ts").alias("max_ts"),
-                F.array_join(F.array_sort(F.collect_list("e.link")), "\n").alias(
-                    "links"
-                ),
-                F.array_join(F.array_sort(F.collect_list("e.title")), "|").alias(
-                    "titles"
-                ),
-            )
-        )
-
     def zip_roundtrip_documents(spark, sf):
         # ZIP container round-trip under the gate (sources/zip_archive):
         # documents pack into one archive per bucket (applyInPandas
@@ -2035,9 +1311,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # recomputes each member's name, BYTE size, method and content
         # md5 from the table directly — any container/compression/crc
         # error flips rows (lossless or the md5s break, same contract as
-        # the WARC round-trip in suite_documents). NOTE: entry 60 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # the WARC round-trip in suite_documents).
         import pandas as pd
 
         from schema_fantasy_spark.sources.zip_archive import build_zip, parse_zip
@@ -2093,9 +1367,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (plain tar on even buckets, deterministic .tar.gz on odd),
         # every member re-extracted through the reader seam, the oracle
         # recomputing name / byte size / gz flag / content md5 from the
-        # table. NOTE: entry 61 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # table.
         import pandas as pd
 
         from schema_fantasy_spark.sources.tar_archive import build_tar, parse_tar
@@ -2159,9 +1431,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # refers tail, char length, BYTE length and md5 from the table
         # directly — a lossy decode or a mis-framed record flips rows.
         # The unpack seam raises unless the warcinfo run-provenance
-        # fields survive into every row. NOTE: entry 62 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # fields survive into every row.
         import pandas as pd
 
         from schema_fantasy_spark.sources.wet import build_wet, parse_wet
@@ -2221,618 +1491,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.md5("text").alias("text_md5"),
         )
 
-    def cdx_index_documents(spark, sf):
-        # CDXJ web-archive indexing under the gate (sources/cdx.py +
-        # ops/urls.surt_key): per-doc urls span 5 SURT families
-        # (mixed-case www host, explicit default port, multi-label host
-        # with non-default port, hostname-only, uppercase path +
-        # unsorted query); surt keys are computed NATIVELY (surt_key
-        # Column expr), records pack into per-bucket archives via
-        # build_cdx (gz members on even buckets), and every published
-        # (offset, length) extent is range-fetched standalone and
-        # digest-checked (range_ok). The CDXJ lines re-parse through
-        # the pure-Column cdxj_struct path. The oracle states surt,
-        # ts14, url, status, digest and filename closed-form from the
-        # modular construction — a surt rule, sort, extent or framing
-        # error flips rows. NOTE: entry 63 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        import hashlib
-        import json as _json
-
-        import pandas as pd
-
-        from schema_fantasy_spark.ops.urls import surt_key
-        from schema_fantasy_spark.sources.cdx import (
-            build_cdx,
-            cdxj_struct,
-            fetch_record,
-        )
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        m = F.pmod(F.col("doc_id"), F.lit(5))
-        url = (
-            F.when(m == 0, F.concat(
-                F.lit("https://WWW.h"), k, F.lit(".Example.COM/a/"), i,
-                F.lit("?b=2&a=1")))
-            .when(m == 1, F.concat(
-                F.lit("http://h"), k, F.lit(".example.com:80/"), i))
-            .when(m == 2, F.concat(
-                F.lit("https://sub.h"), k, F.lit(".example.com:8443/p/"),
-                i, F.lit("/")))
-            .when(m == 3, F.concat(
-                F.lit("https://h"), k, F.lit(".example.com")))
-            .otherwise(F.concat(
-                F.lit("https://h"), k, F.lit(".example.com/X/"), i,
-                F.lit("?z=9")))
-        )
-        sec = F.lpad(F.pmod(F.col("doc_id"), F.lit(60)).cast("string"), 2, "0")
-        st = F.pmod(F.col("doc_id"), F.lit(3))
-        rows = docs.select(
-            "doc_id",
-            F.pmod(F.col("doc_id"), F.lit(64)).cast("int").alias("bucket"),
-            url.alias("url"),
-            surt_key(url).alias("surt"),
-            F.concat(F.lit("2026-01-01T00:00:"), sec, F.lit("Z")).alias("date"),
-            F.when(st == 0, 200).when(st == 1, 301).otherwise(404).alias("status"),
-        )
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            b = int(pdf["bucket"].iloc[0])
-            pdf = pdf.sort_values("doc_id")
-            fname = "part-%05d" % b + (".warc.gz" if b % 2 == 0 else ".warc")
-            entries = [
-                {
-                    "surt": r.surt,
-                    "ts14": "".join(c for c in r.date if c.isdigit()),
-                    "url": r.url,
-                    "date": r.date,
-                    "status": int(r.status),
-                    "body": f"page {int(r.doc_id)} café".encode(),
-                }
-                for r in pdf.itertuples()
-            ]
-            archive, cdxj = build_cdx(entries, fname, compress=b % 2 == 0)
-            return pd.DataFrame({"warc": [archive], "cdxj": [cdxj]})
-
-        packed = rows.groupBy("bucket").applyInPandas(
-            pack, "warc binary, cdxj string"
-        )
-
-        def verify(batches):
-            for pdf in batches:
-                out = {"line": [], "range_ok": []}
-                for archive, cdxj in zip(pdf["warc"], pdf["cdxj"]):
-                    archive = bytes(archive)
-                    for ln in cdxj.split("\n"):
-                        meta = _json.loads(ln.split(" ", 2)[2])
-                        rec = fetch_record(
-                            archive, int(meta["offset"]), int(meta["length"])
-                        )
-                        ok = (
-                            rec is not None
-                            and rec["url"] == meta["url"]
-                            and rec["http_status"] == int(meta["status"])
-                            and hashlib.md5(rec["body"]).hexdigest()
-                            == meta["digest"][4:]
-                        )
-                        out["line"].append(ln)
-                        out["range_ok"].append(bool(ok))
-                yield pd.DataFrame(out)
-
-        lines = packed.mapInPandas(verify, "line string, range_ok boolean")
-        r = cdxj_struct(F.col("line"))
-        return lines.select(
-            r["surt"].alias("surt"),
-            r["ts14"].alias("ts14"),
-            r["url"].alias("url"),
-            r["mime"].alias("mime"),
-            r["status"].alias("status"),
-            r["digest"].alias("digest"),
-            r["filename"].alias("filename"),
-            "range_ok",
-        )
-
-    def wat_metadata_documents(spark, sf):
-        # WAT metadata-sidecar round-trip under the gate (sources/
-        # wat.py): the SAME 4-family page construction as entry 53
-        # flows through the native extraction (ops/html_meta), the
-        # native to_json envelope builder, per-bucket WAT archives
-        # (warcinfo provenance enforced at unpack), and the native
-        # from_json re-parse — title/description/og:title/canonical/
-        # resolved links must all survive the full sidecar round trip.
-        # The oracle states every field closed-form from the modular
-        # construction, so an extraction, serialization, framing or
-        # re-parse error flips rows. NOTE: entry 64 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        import pandas as pd
-
-        from schema_fantasy_spark.ops.html_meta import with_html_metadata
-        from schema_fantasy_spark.sources.wat import (
-            build_wat,
-            envelope_schema,
-            parse_wat,
-            wat_envelope,
-        )
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        i = F.col("doc_id").cast("string")
-        host = F.concat(F.lit("h"), k, F.lit(".example.com"))
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        page = (
-            F.when(m == 0, F.concat(
-                F.lit('<html><head><title>Doc '), i,
-                F.lit(' &amp; friends</title>'),
-                F.lit('<meta name="description" content="d'), i, F.lit('">'),
-                F.lit('<link rel="canonical" href="https://h'), k,
-                F.lit('.example.com/c/'), i, F.lit('"></head><body>'),
-                F.lit('<a href="/r/'), i, F.lit('">first '), i, F.lit('</a>'),
-                F.lit('<a href="https://x'), k,
-                F.lit('.org/p?a=1&amp;b=2">x &amp; y</a>'),
-                F.lit('<a rel="nofollow" href="https://ads'), k,
-                F.lit('.example.net/z">sponsored '), i,
-                F.lit('</a></body></html>'),
-            ))
-            .when(m == 1, F.concat(
-                F.lit("<html><head><title> spaced   "), i, F.lit(" </title>"),
-                F.lit("<meta content='D "), i,
-                F.lit("' name='description'></head><body><a href='//cdn"), k,
-                F.lit(".net/a'>c<span>d</span></a></body></html>"),
-            ))
-            .when(m == 2, F.concat(
-                F.lit('<html><head><meta property="og:title" content="OG&#233;'),
-                i, F.lit('"></head><body><a href="mailto:a@b.c">m</a>'),
-                F.lit('<a href="#top">t</a><a href="rel/x">r</a></body></html>'),
-            ))
-            .otherwise(F.concat(
-                F.lit('<html><head><title>T\n&quot;'), i, F.lit('&quot;</title>'),
-                F.lit('<link href="https://h'), k, F.lit('.example.com/canon/'),
-                i, F.lit('" rel="canonical"></head><body>'),
-                F.lit('<a data-q="v>w" href="/deep/'), i, F.lit('">z'), i,
-                F.lit('</a></body></html>'),
-            ))
-        )
-        pages = _spread(docs, "doc_id").select(
-            "doc_id", host.alias("host"), F.lit("https").alias("scheme"),
-            page.alias("html"),
-        )
-        out = with_html_metadata(pages, base_scheme_col="scheme",
-                                 base_host_col="host")
-        metas = F.filter(
-            F.array(
-                F.struct(
-                    F.lit("description").alias("name"),
-                    F.lit(None).cast("string").alias("property"),
-                    F.col("description").alias("content"),
-                ),
-                F.struct(
-                    F.lit(None).cast("string").alias("name"),
-                    F.lit("og:title").alias("property"),
-                    F.col("og_title").alias("content"),
-                ),
-            ),
-            lambda x: x["content"].isNotNull(),
-        )
-        links = F.transform(
-            F.col("resolved_outlinks"),
-            lambda l: F.struct(l["href"].alias("url"),
-                               l["anchor"].alias("text")),
-        )
-        env = wat_envelope(
-            F.concat(F.lit("https://"), F.col("host"), F.lit("/w/"), i),
-            F.lit("2026-01-01T00:00:00Z"),
-            F.concat(F.lit("<urn:uuid:00000000-0000-0000-0000-"),
-                     F.lpad(i, 12, "0"), F.lit(">")),
-            F.col("title"), metas, F.col("canonical"), links,
-        )
-        rows = out.select(
-            "doc_id",
-            F.pmod(F.col("doc_id"), F.lit(64)).cast("int").alias("bucket"),
-            F.concat(F.lit("https://"), F.col("host"), F.lit("/w/"), i)
-            .alias("url"),
-            F.concat(F.lit("<urn:uuid:00000000-0000-0000-0000-"),
-                     F.lpad(i, 12, "0"), F.lit(">")).alias("refers_to"),
-            env.alias("envelope"),
-        )
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            b = int(pdf["bucket"].iloc[0])
-            pdf = pdf.sort_values("doc_id")
-            entries = [
-                (r.url, "2026-01-01T00:00:00Z", r.refers_to, r.envelope)
-                for r in pdf.itertuples()
-            ]
-            wat = build_wat(entries, info_fields={"extraction-run": "r6wat"},
-                            compress=b % 2 == 0)
-            return pd.DataFrame({"wat": [wat]})
-
-        archives = rows.groupBy("bucket").applyInPandas(pack, "wat binary")
-
-        def unpack(batches):
-            for pdf in batches:
-                out_rows = {"url": [], "refers_to": [], "envelope": []}
-                for z in pdf["wat"]:
-                    for r in parse_wat(bytes(z)):
-                        if r["info"].get("extraction-run") != "r6wat":
-                            raise RuntimeError("warcinfo provenance lost")
-                        out_rows["url"].append(r["url"])
-                        out_rows["refers_to"].append(r["refers_to"])
-                        out_rows["envelope"].append(r["envelope"])
-                yield pd.DataFrame(out_rows)
-
-        recs = archives.mapInPandas(
-            unpack, "url string, refers_to string, envelope string"
-        )
-        md = F.from_json(F.col("envelope"), envelope_schema())["Envelope"][
-            "Payload-Metadata"]["HTTP-Response-Metadata"]["HTML-Metadata"]
-        return recs.select(
-            F.regexp_extract("url", r"/w/(\d+)$", 1).cast("long")
-            .alias("doc_id"),
-            md["Head"]["Title"].alias("title"),
-            F.try_element_at(
-                F.filter(md["Head"]["Metas"],
-                         lambda x: x["name"] == "description"),
-                F.lit(1),
-            )["content"].alias("description"),
-            F.try_element_at(
-                F.filter(md["Head"]["Metas"],
-                         lambda x: x["property"] == "og:title"),
-                F.lit(1),
-            )["content"].alias("og_title"),
-            F.try_element_at(md["Head"]["Link"], F.lit(1))["url"]
-            .alias("canonical"),
-            F.size(md["Links"]).alias("n_links"),
-            F.array_join(
-                F.transform(md["Links"],
-                            lambda l: F.concat_ws("|", l["url"], l["text"])),
-                "\n",
-            ).alias("links"),
-            F.regexp_extract("refers_to", r"-(\d{12})>$", 1)
-            .alias("refers_pad"),
-        )
-
-    def revisit_resolution_documents(spark, sf):
-        # WARC revisit resolution under the gate (sources/warc.
-        # build_revisit + ops/dedup.resolve_revisits): crawl A stores
-        # every doc's payload as a response (payloads SHARED within
-        # groups of 4 — duplicate digests are the point), crawl B
-        # re-fetches every url and stores only a revisit record with
-        # the payload digest. Archives mix both record types across
-        # buckets, so resolution is a real cross-archive digest join:
-        # originals collapse to one row per digest (lexicographic min
-        # url), then revisits re-attach their payload. The oracle
-        # replays the group-min join in SQL — a digest, profile,
-        # dedup-pick or join error flips rows. NOTE: entry 65 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        import hashlib
-
-        import pandas as pd
-
-        from schema_fantasy_spark.ops.dedup import resolve_revisits
-        from schema_fantasy_spark.sources.warc import (
-            REVISIT_PROFILE,
-            build_revisit,
-            build_record,
-            build_warc,
-            parse_warc,
-        )
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        g = (F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(4))).cast("string")
-        rows = docs.select(
-            "doc_id",
-            F.pmod(F.col("doc_id"), F.lit(64)).cast("int").alias("bucket"),
-            F.concat(F.lit("https://h"), k, F.lit(".example.com/o/"), i)
-            .alias("url_a"),
-            F.concat(F.lit("https://h"), k, F.lit(".example.com/r/"), i)
-            .alias("url_b"),
-            F.concat(F.lit("payload "), g, F.lit(" café")).alias("payload"),
-        )
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            b = int(pdf["bucket"].iloc[0])
-            pdf = pdf.sort_values("doc_id")
-            records = []
-            for r in pdf.itertuples():
-                body = r.payload.encode("utf-8")
-                records.append(
-                    build_record(r.url_a, "2026-01-01T00:00:00Z", body)
-                )
-                records.append(
-                    build_revisit(
-                        r.url_b,
-                        "2026-02-01T00:00:00Z",
-                        "md5:" + hashlib.md5(body).hexdigest(),
-                    )
-                )
-            return pd.DataFrame(
-                {"warc": [build_warc(records, compress=b % 2 == 0)]}
-            )
-
-        archives = rows.groupBy("bucket").applyInPandas(pack, "warc binary")
-
-        def unpack(batches):
-            for pdf in batches:
-                out = {"kind": [], "url": [], "digest": [], "ok": []}
-                for z in pdf["warc"]:
-                    for rec in parse_warc(bytes(z)):
-                        if rec["type"] == "response":
-                            out["kind"].append("response")
-                            out["url"].append(rec["url"])
-                            out["digest"].append(
-                                "md5:" + hashlib.md5(rec["body"]).hexdigest()
-                            )
-                            out["ok"].append(True)
-                        elif rec["type"] == "revisit":
-                            out["kind"].append("revisit")
-                            out["url"].append(rec["url"])
-                            out["digest"].append(
-                                rec["fields"].get("warc-payload-digest")
-                            )
-                            out["ok"].append(
-                                rec["fields"].get("warc-profile")
-                                == REVISIT_PROFILE
-                            )
-                yield pd.DataFrame(out)
-
-        recs = archives.mapInPandas(
-            unpack, "kind string, url string, digest string, ok boolean"
-        )
-        # the originals/revisits branches below would each re-execute
-        # the whole pack+unpack archive pipeline (trap 18); materialize
-        # the narrow record table once — localCheckpoint is eager,
-        # truncates lineage, and is GC-cleaned (no persist leak)
-        recs = recs.localCheckpoint()
-        originals = recs.filter(F.col("kind") == "response").select(
-            "digest", "url"
-        )
-        revisits = recs.filter(F.col("kind") == "revisit").select(
-            "digest", F.col("url").alias("revisit_url"), "ok"
-        )
-        resolved = resolve_revisits(originals, revisits)
-        return resolved.select(
-            F.regexp_extract("revisit_url", r"/r/(\d+)$", 1).cast("long")
-            .alias("doc_id"),
-            "revisit_url",
-            "original_url",
-            F.substring("digest", 5, 32).alias("payload_md5"),
-            F.col("ok").alias("profile_ok"),
-        )
-
-    def boilerplate_documents(spark, sf):
-        # Boilerplate removal under the gate (ops/boilerplate.py):
-        # per-doc pages are synthesized across 4 families mixing a
-        # link-dense nav, real content paragraphs (with entities), a
-        # too-short fragment, a footer exactly at the density
-        # boundary (13*2 > 20), and a long paragraph with one inline
-        # anchor. The integer-exact rule (text_len >= 20 AND
-        # anchor_len*2 <= text_len) decides each block; the oracle
-        # states n_blocks / n_content / the surviving content text
-        # closed-form from the modular construction — a segmentation,
-        # cleaning, density or join error flips rows. NOTE: entry 66 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.boilerplate import with_block_stats
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        nav = (
-            '<div><a href="/n1">Home</a> <a href="/n2">About</a>'
-            ' <a href="/n3">Contact</a></div>'
-        )
-        footer = (
-            '<div>© 2026 <a href="/t">Terms</a>'
-            ' <a href="/p">Privacy</a></div>'
-        )
-        c1 = F.concat(
-            F.lit("<p>Real content "), i,
-            F.lit(" paragraph with plenty of characters café &amp;"
-                  " friends.</p>"),
-        )
-        c2 = F.concat(
-            F.lit("<p>Second paragraph "), i,
-            F.lit(" also long enough to be kept as content text café.</p>"),
-        )
-        c3 = F.concat(
-            F.lit("<p>Long paragraph "), i,
-            F.lit(" mentioning <a href='/x'>one link</a> inside sixty"
-                  " characters of text to stay content.</p>"),
-        )
-        short = F.concat(
-            F.lit("<p>Tiny "), F.pmod(F.col("doc_id"), F.lit(7)).cast("string"),
-            F.lit("</p>"),
-        )
-        page = (
-            F.when(m == 0, F.concat(
-                F.lit("<html><head><title>t</title></head><body>"),
-                F.lit(nav), c1, short, F.lit(footer),
-                F.lit("</body></html>")))
-            .when(m == 1, F.concat(
-                F.lit("<html><body>"), c1, c2, F.lit("</body></html>")))
-            .when(m == 2, F.concat(
-                F.lit("<html><body>"), F.lit(nav), short,
-                F.lit("</body></html>")))
-            .otherwise(F.concat(
-                F.lit("<html><body>"), c3, F.lit(footer),
-                F.lit("</body></html>")))
-        )
-        pages = _spread(docs, "doc_id").select("doc_id", page.alias("html"))
-        # the df-level fast path (array-level entity decode; barriers
-        # inside) — equivalence with block_stats is pytest-pinned
-        withstats = with_block_stats(pages, html_col="html", out_col="stats")
-        return withstats.select(
-            "doc_id",
-            F.size("stats").alias("n_blocks"),
-            F.size(F.filter(F.col("stats"), lambda b: b["content"]))
-            .alias("n_content"),
-            F.array_join(
-                F.transform(
-                    F.filter(F.col("stats"), lambda b: b["content"]),
-                    lambda b: b["text"],
-                ),
-                " ",
-            ).alias("content_text"),
-        )
-
-    def frontier_schedule_documents(spark, sf):
-        # Crawl-frontier politeness scheduling under the gate (ops/
-        # frontier.py): 23 hosts with per-host crawl delays (1 + k%5
-        # seconds, the robots Crawl-delay seam) and a 15-url per-cycle
-        # cap. The oracle REPLAYS the window in SQL (ROW_NUMBER over
-        # host ordered by url, minus one, times the delay, capped) —
-        # an ordering, partitioning, arithmetic or cap error flips
-        # rows. shard (xxhash64-based, not SQL-replayable) is asserted
-        # in pytest instead: one shard per host, deterministic. NOTE: entry 67 — in
-        # the driver's recorded window since the round-8 rotation;
-        # tools/check_correctness.py verifies all 83 every round.
-        from schema_fantasy_spark.ops.frontier import schedule_fetches
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        k = F.pmod(F.col("doc_id"), F.lit(23))
-        host = F.concat(F.lit("h"), k.cast("string"), F.lit(".example.com"))
-        frontier = docs.select(
-            "doc_id",
-            host.alias("host"),
-            F.concat(F.lit("https://"), host, F.lit("/f/"), i).alias("url"),
-            (F.lit(1) + F.pmod(k, F.lit(5))).cast("int").alias("delay"),
-        )
-        sched = schedule_fetches(
-            frontier, delay_col="delay", num_shards=64, per_host_cap=15
-        )
-        return sched.select("doc_id", "host", "seq", "fetch_offset_s")
-
-    def substring_dedup_documents(spark, sf):
-        # Cross-document exact-substring dedup under the gate (ops/
-        # dedup.substring_dedup, the Lee et al. 2022 family): texts are
-        # unique-prefix(4w) + SHARED 10-word block per group-of-6 +
-        # unique-suffix(2w); with 8-word windows exactly the three
-        # windows fully inside the shared block match across a group
-        # (straddling windows carry unique words), their coverage is
-        # the whole block, and the canonical copy is the group's min
-        # doc_id. Oracle replays the group-min + removal closed-form —
-        # an ownership, coverage-merge or splice error flips rows.
-        # NOTE: entry 68 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.dedup import substring_dedup
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        g = F.pmod(F.col("doc_id"), F.lit(6)).cast("string")
-        text = F.concat(
-            F.lit("u"), i, F.lit(" alpha"), i, F.lit(" bravo"), i,
-            F.lit(" charlie"), i,
-            # the group marker sits mid-block (rel 4) so EVERY 8-word
-            # window inside the 10-word block contains it — otherwise
-            # marker-free interior windows match across ALL groups
-            F.lit(" w1 w2 w3 w4 common"), g, F.lit(" w5 w6 w7 w8 w9"),
-            F.lit(" tail"), i, F.lit(" end"), i,
-        )
-        src = docs.select("doc_id", text.alias("text"))
-        out = substring_dedup(src, gram_words=8)
-        return out.select("doc_id", "clean_text", "n_removed_words")
-
-    def domain_balance_documents(spark, sf):
-        # Registered-domain corpus balancing under the gate (ops/urls.
-        # registered_domain + scale.balance_by_domain): hosts span 4
-        # families — www-prefixed and bare-sub variants of the same
-        # registrable .com domains (they must share a budget),
-        # multi-label public suffixes (co.uk), and a suffix where the
-        # SUBDOMAIN is the registrant (github.io). Domains are
-        # extracted natively, then each domain keeps its best 20 rows
-        # (pseudo-quality desc, id asc). The oracle states domains
-        # closed-form and replays the window — a PSL-match, grouping,
-        # ordering or cap error flips rows. NOTE: entry 69, past the
-        # driver's ~50-slot recording window; tools/
-        # check_correctness.py verifies it either way.
-        from schema_fantasy_spark.ops.urls import registered_domain
-        from schema_fantasy_spark.scale import balance_by_domain
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        k3 = F.pmod(F.pmod(F.col("doc_id"), F.lit(19)), F.lit(3)).cast("string")
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        host = (
-            F.when(m == 0, F.concat(F.lit("www"), k, F.lit(".example"), k3,
-                                    F.lit(".com")))
-            .when(m == 1, F.concat(F.lit("sub.a"), k, F.lit(".co.uk")))
-            .when(m == 2, F.concat(F.lit("b"), k, F.lit(".github.io")))
-            .otherwise(F.concat(F.lit("c"), k, F.lit(".example"), k3,
-                                F.lit(".com")))
-        )
-        rows = docs.select(
-            "doc_id",
-            registered_domain(host).alias("domain"),
-            F.pmod(F.col("doc_id") * 37, F.lit(100)).cast("int")
-            .alias("score"),
-        )
-        out = balance_by_domain(
-            rows, "domain", score_col="score", cap=20
-        )
-        return out.select("doc_id", "domain", "score")
-
-    def blocklist_documents(spark, sf):
-        # C4-style blocklist filtering under the gate (ops/text.
-        # blocklist_*): texts across 4 families — clean, one hit,
-        # repeated + phrase hits, and boundary traps (the listed word
-        # embedded inside longer words must NOT match). One codegen
-        # regexp_count; the oracle states hit counts closed-form from
-        # the construction. The term list here is a neutral
-        # placeholder: the list is data (C4 ships LDNOOBW), the
-        # mechanism is what's gated. NOTE: entry 70 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.text import blocklist_filter
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        text = (
-            F.when(m == 0, F.concat(
-                F.lit("clean text "), i, F.lit(" nothing listed here")))
-            .when(m == 1, F.concat(
-                F.lit("prefix "), i, F.lit(" badword1 suffix")))
-            .when(m == 2, F.concat(
-                F.lit("badword2 a"), i,
-                F.lit(" Badword2 b phrase  two end")))
-            .otherwise(F.concat(
-                F.lit("embadword1ed "), i, F.lit(" badword2y")))
-        )
-        src = docs.select("doc_id", text.alias("text"))
-        out = blocklist_filter(
-            src, ["badword1", "badword2", "phrase two"]
-        )
-        return out.select(
-            "doc_id",
-            F.col("blocklist_hits").alias("n_hits"),
-            F.col("blocklisted").alias("blocked"),
-        )
-
     def crawl_diff_documents(spark, sf):
         # Crawl-over-crawl freshness diff under the gate (ops/urls.
         # canonicalize_url + snapshots.snapshot_diff): the two crawls
@@ -2841,9 +1499,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # family the content is unchanged / changed / removed (crawl A
         # only) / added (crawl B only). Oracle states key + verdict
         # closed-form — a canonicalization or full-outer/hash-compare
-        # error flips rows. NOTE: entry 72 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # error flips rows.
         from schema_fantasy_spark.ops.urls import canonicalize_url
         from schema_fantasy_spark.snapshots import snapshot_diff
 
@@ -2869,35 +1525,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         d = snapshot_diff(crawl_a, crawl_b, ["url_key"], ["text"])
         return d.select("url_key", "change")
 
-    def sequence_packing_documents(spark, sf):
-        # Training-sequence packing under the gate (ops/packing.py):
-        # synthetic token counts (1 + i%7) pack per shard (i%8 — the
-        # explicit shard column so the oracle can replay placement)
-        # into 16-token sequences. The oracle replays the EXCLUSIVE
-        # per-shard prefix sum and the chunk arithmetic with SUM()
-        # OVER ... ROWS UNBOUNDED PRECEDING — an ordering, window-
-        # frame, or integer-division error flips rows. NOTE: entry 73 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.packing import pack_sequences
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        src = docs.select(
-            "doc_id",
-            (F.lit(1) + F.pmod(F.col("doc_id"), F.lit(7))).cast("int")
-            .alias("n_tok"),
-            F.pmod(F.col("doc_id"), F.lit(8)).cast("int").alias("pshard"),
-        )
-        out = pack_sequences(
-            src, "n_tok", seq_len=16, shard_col="pshard"
-        )
-        return out.select(
-            "doc_id", "shard", "n_tok", "stream_offset", "seq_idx",
-            "seq_offset",
-        )
-
     def jsonl_roundtrip_documents(spark, sf):
         # JSONL interchange round-trip under the gate: the dominant
         # LLM-corpus shipping format is gzipped JSON-lines, written
@@ -2907,9 +1534,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # a backslash, quotes, non-ASCII — and the read uses an
         # explicit schema (inference is not a contract). The oracle
         # recomputes url/char/byte/md5 from the construction — an
-        # escaping, framing or decode error flips rows. NOTE: entry 74 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # escaping, framing or decode error flips rows.
         import tempfile
 
         docs = tables.load(spark, sf, "documents").select("doc_id").filter(
@@ -2944,275 +1569,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.md5("text").alias("text_md5"),
         )
 
-    def soft404_documents(spark, sf):
-        # Soft-404 detection under the gate (ops/text.soft404_flag):
-        # pages that self-report not-found while the transport said
-        # 200 — title markers always flag, body markers only on SHORT
-        # pages (family 3 has the marker in a long body and must NOT
-        # flag). Oracle states verdicts closed-form per family. NOTE: entry 75 — in
-        # the driver's recorded window since the round-8 rotation;
-        # tools/check_correctness.py verifies all 83 every round.
-        from schema_fantasy_spark.ops.text import soft404_flag
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        m = F.pmod(F.col("doc_id"), F.lit(5))
-        title = (
-            F.when(m == 0, F.concat(F.lit("Welcome "), i))
-            .when(m == 1, F.lit("404 Not Found"))
-            .when(m == 2, F.lit("My Blog"))
-            .when(m == 3, F.lit(None).cast("string"))
-            .otherwise(F.lit("This page has been removed"))
-        )
-        text = (
-            F.when(m == 2, F.concat(
-                F.lit("Error 404 - the page does not exist "), i))
-            .when(m == 3, F.concat(
-                F.repeat(F.lit("long filler body text "), 30),
-                F.lit("page not found "), i))
-            .otherwise(F.concat(F.lit("ordinary body content "), i))
-        )
-        rows = docs.select("doc_id", title.alias("title"),
-                           text.alias("text"))
-        return rows.select(
-            "doc_id",
-            soft404_flag(F.col("title"), F.col("text")).alias("soft404"),
-        )
-
-    def stratified_sample_documents(spark, sf):
-        # Training-mix stratified sampling under the gate (scale.
-        # stratified_sample): per-stratum md5-nibble rates (en 16/16,
-        # de 8/16, fr 4/16, everything else 0) — the engine-invariant
-        # mix primitive. The oracle replays the nibble predicate and
-        # the per-stratum CASE in SQL — a hash, rate-routing or
-        # default-rate error flips rows. NOTE: entry 77, past the
-        # driver's ~50-slot recording window; tools/
-        # check_correctness.py verifies it either way.
-        from schema_fantasy_spark.scale import stratified_sample
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        lang = (
-            F.when(m == 0, "en").when(m == 1, "de").when(m == 2, "fr")
-            .otherwise("xx")
-        )
-        rows = docs.select("doc_id", lang.alias("lang"))
-        out = stratified_sample(
-            rows, "doc_id", "lang", {"en": 16, "de": 8, "fr": 4}
-        )
-        return out.select("doc_id", "lang")
-
-    def quality_deciles_documents(spark, sf):
-        # Exact global quantile buckets under the gate (scale.
-        # exact_quantile_buckets): NO global sort — per-score counts
-        # aggregate (bounded domain: scores quantized), the cumulative
-        # table builds driver-side, and (score -> decile) broadcast-
-        # joins back (a join, not a giant literal map — the ops/lm.py
-        # lesson). Bucket rule: min(9, rows_before * 10 // total),
-        # tie-stable. The oracle replays it with a running-sum window
-        # — a cumulative, integer-division or tie-handling error flips
-        # rows. NOTE: entry 79 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.scale import exact_quantile_buckets
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        rows = docs.select(
-            "doc_id",
-            F.pmod(F.col("doc_id") * 37, F.lit(100)).cast("int")
-            .alias("score"),
-        )
-        out = exact_quantile_buckets(rows, "score", n_buckets=10,
-                                     out_col="decile")
-        return out.select("doc_id", "score", "decile")
-
-    def crawl_coverage_documents(spark, sf):
-        # Crawl completeness vs the host's published inventory (ops/
-        # sitemap.parse_sitemaps + a url-keyed join): each host's
-        # urlset (3 + k%3 pages, XML synthesized in Columns and parsed
-        # by the REAL sitemap parser) left-joins the distinct crawled
-        # urls (page r = doc_id%5, so pages past the listed range
-        # exist but never match); coverage is an integer-ppm division.
-        # The oracle replays listing, intersection and the ppm
-        # arithmetic in SQL — a parse, join-key or rounding error
-        # flips rows. NOTE: entry 80 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.sitemap import parse_sitemaps
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        k = F.pmod(F.col("doc_id"), F.lit(19))
-        hosts = docs.select(k.alias("k")).distinct()
-        ks = F.col("k").cast("string")
-        base = F.concat(F.lit("https://h"), ks, F.lit(".example.com"))
-        xml = F.concat(
-            F.lit('<?xml version="1.0"?><urlset>'),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(2) + F.pmod(F.col("k"),
-                                                           F.lit(3))),
-                    lambda j: F.concat(
-                        F.lit("<url><loc>"), base, F.lit("/p/"),
-                        j.cast("string"), F.lit("</loc></url>"),
-                    ),
-                ),
-                "",
-            ),
-            F.lit("</urlset>"),
-        )
-        sitemaps = hosts.select(
-            F.concat(F.lit("h"), ks, F.lit(".example.com")).alias("host"),
-            xml.alias("sitemap_xml"),
-        )
-        listed = (
-            parse_sitemaps(sitemaps, "sitemap_xml", key_cols=("host",))
-            .select("host", F.explode("urls").alias("u"))
-            .select("host", F.col("u")["loc"].alias("loc"))
-        )
-        crawled = docs.select(
-            F.concat(
-                F.lit("https://h"), k.cast("string"), F.lit(".example.com/p/"),
-                F.pmod(F.col("doc_id"), F.lit(5)).cast("string"),
-            ).alias("url")
-        ).distinct()
-        cov = (
-            listed.join(crawled, listed["loc"] == crawled["url"], "left")
-            .groupBy("host")
-            .agg(
-                F.count(F.lit(1)).cast("int").alias("n_listed"),
-                F.count("url").cast("int").alias("n_crawled"),
-            )
-        )
-        return cov.select(
-            "host", "n_listed", "n_crawled",
-            F.expr("CAST(n_crawled AS BIGINT) * 1000000 div n_listed")
-            .alias("coverage_ppm"),
-        )
-
-    def near_dup_embeddings(spark, sf):
-        from schema_fantasy_spark.ops import similarity as sim
-
-        emb = tables.load(spark, sf, "embeddings")
-        # 0.4 yields a non-empty result at sf0.01 so the oracle gate is
-        # exercised on real rows, not a vacuous empty-vs-empty match
-        return sim.near_duplicates_by_embedding(emb, threshold=0.4)
-
-    def crawl_plan_documents(spark, sf):
-        # The CRAWL-PLANNING COMPOSITION (jobs/crawl_plan_job.py's
-        # pipeline) under one oracle: per-host sitemap inventory (4+k%4
-        # urls, page 0 listed TWICE in crawl-variant spellings — upper
-        # host + default port + unsorted params — so canonical-key
-        # dedup is load-bearing and the kept url is the min spelling),
-        # novelty (pages j < k%3 are already crawled, keyed on the
-        # CANONICAL url), robots governance (even hosts Disallow /q/3
-        # for our agent; every host sets Crawl-delay: 1+k%4), then the
-        # politeness window with a per-host cap of 4. The oracle
-        # replays listing, spelling choice, both filters, the ordered
-        # window and the delay arithmetic in SQL — a canonicalization,
-        # RFC 9309, delay-parse or cap error flips rows. shard is
-        # xxhash64-based (not SQL-replayable) and is pytest-asserted in
-        # the job test instead. NOTE: entry 82 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
-        from schema_fantasy_spark.ops.frontier import schedule_fetches
-        from schema_fantasy_spark.ops.robots import (
-            parse_robots,
-            robots_allowed,
-            robots_crawl_delays,
-        )
-        from schema_fantasy_spark.ops.sitemap import parse_sitemaps
-        from schema_fantasy_spark.ops.urls import canonicalize_url
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        hosts = docs.select(F.pmod(F.col("doc_id"), F.lit(19)).alias("k")).distinct()
-        ks = F.col("k").cast("string")
-        low = F.concat(F.lit("h"), ks, F.lit(".example.com"))
-        entry0_dup = F.concat(
-            F.lit("<url><loc>HTTPS://H"), ks,
-            F.lit(".EXAMPLE.COM:443/q/0?b=2&amp;a=1</loc></url>"),
-        )
-        entries = F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3) + F.pmod(F.col("k"), F.lit(4))),
-                lambda j: F.concat(
-                    F.lit("<url><loc>https://h"), ks, F.lit(".example.com/q/"),
-                    j.cast("string"), F.lit("?b=2&amp;a=1</loc></url>"),
-                ),
-            ),
-            "",
-        )
-        sitemaps = hosts.select(
-            low.alias("host"),
-            F.concat(
-                F.lit('<?xml version="1.0"?><urlset>'),
-                entries, entry0_dup, F.lit("</urlset>"),
-            ).alias("sitemap_xml"),
-        )
-        listed = (
-            parse_sitemaps(sitemaps, "sitemap_xml", key_cols=("host",))
-            .select("host", F.explode("urls").alias("u"))
-            .select("host", F.col("u")["loc"].alias("url"))
-        )
-        cand = (
-            listed.withColumn("url_key", canonicalize_url(F.col("url")))
-            .groupBy("url_key")
-            .agg(F.min("url").alias("url"), F.min("host").alias("host"))
-        )
-        # trap 10: F.sequence(1, 0) DESCENDS — guard the empty case
-        crawled = hosts.select(
-            F.explode(
-                F.when(
-                    F.pmod(F.col("k"), F.lit(3)) >= 1,
-                    F.transform(
-                        F.sequence(
-                            F.lit(0), F.pmod(F.col("k"), F.lit(3)) - 1
-                        ),
-                        lambda j: F.concat(
-                            F.lit("https://h"), ks, F.lit(".example.com/q/"),
-                            j.cast("string"), F.lit("?a=1&b=2"),
-                        ),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("url_key")
-        )
-        cand = cand.join(crawled, "url_key", "left_anti")
-        robots = hosts.select(
-            low.alias("host"),
-            F.concat(
-                F.lit("User-agent: sfs-bot\n"),
-                F.when(F.pmod(F.col("k"), F.lit(2)) == 0,
-                       F.lit("Disallow: /q/3\n")).otherwise(F.lit("")),
-                F.lit("Crawl-delay: "),
-                (F.lit(1) + F.pmod(F.col("k"), F.lit(4))).cast("string"),
-                F.lit("\n"),
-            ).alias("robots_txt"),
-        )
-        path = F.regexp_extract(
-            F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*(/.*)?$", 1
-        )
-        cand = cand.withColumn(
-            "path", F.when(path == "", F.lit("/")).otherwise(path)
-        )
-        cand = robots_allowed(cand, parse_robots(robots), "sfs-bot",
-                              host_col="host", path_col="path")
-        cand = cand.join(F.broadcast(robots_crawl_delays(robots)), "host", "left")
-        plan = schedule_fetches(
-            cand.filter(F.col("allowed")),
-            host_col="host", url_col="url", delay_col="crawl_delay",
-            num_shards=64, per_host_cap=4,
-        )
-        return plan.select("host", "url", "seq", "fetch_offset_s")
-
     def entity_decode_documents(spark, sf):
         # The WHATWG named-reference table DIRECTLY under the oracle
         # (text_consistency gates it through two names; this row gates
@@ -3225,9 +1581,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # build time from Python's html.unescape, the stdlib copy of
         # the WHATWG algorithm, with the documented entity-produced
         # U+00A0 -> space convention). One wrong mapping, prefix rule
-        # or tail splice flips that case's every row. NOTE: entry 83 — in the driver's recorded
-        # window since the round-8 rotation; tools/check_correctness.py
-        # verifies all 83 every round.
+        # or tail splice flips that case's every row.
         from schema_fantasy_spark.ops.html import decode_entities
 
         raws = _entity_panel()[0]
@@ -3254,9 +1608,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # so a planner that fails to prune (or prunes from paths rather
         # than manifest metadata) crashes the scan instead of silently
         # reading everything. The oracle recomputes the slice
-        # arithmetically from the raw table (doc_id%7 in 1..3). NOTE: entry 81 — in
-        # the driver's recorded window since the round-8 rotation;
-        # tools/check_correctness.py verifies all 83 every round.
+        # arithmetically from the raw table (doc_id%7 in 1..3).
         import shutil
         import tempfile
 
@@ -3302,47 +1654,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entries in dict order. Sole gates for the streaming / HTTP / set-op
     # categories come FIRST (round 3 had them last and they fell outside
     # the recorded window despite passing the identical local gate).
-    # ROUND-8 ROTATION: the 33 entries added in rounds 6-7 (robots ...
-    # entity_decode) had only local witnesses — they now precede the
-    # round-1-5 entries, which CORRECTNESS_r0{1..7}.json already
-    # recorded; the full 83 stay verified every round by
-    # tools/check_correctness.py (committed as CORRECTNESS_LOCAL_r8.json).
+    # ROUND-8 ROTATION: the entries added in rounds 6-7 (html_metadata
+    # ... entity_decode) had only local witnesses — they now precede the
+    # round-1-5 entries; every entry is verified by
+    # tools/check_correctness.py.
     return {
         "streaming_validation_documents": streaming_validation_documents,
         "windowed_verdicts_events": windowed_verdicts_events,
         "streaming_dedup_documents": streaming_dedup_documents,
         "http_linked_validation": http_linked_validation,
         "snapshot_diff_documents": snapshot_diff_documents,
-        "robots_allowed_documents": robots_allowed_documents,
         "html_metadata_documents": html_metadata_documents,
-        "pagerank_hosts_documents": pagerank_hosts_documents,
-        "sitemap_urls_documents": sitemap_urls_documents,
         "jsonld_validation_documents": jsonld_validation_documents,
-        "anchor_text_hosts_documents": anchor_text_hosts_documents,
-        "classifier_scores_documents": classifier_scores_documents,
-        "feed_entries_documents": feed_entries_documents,
         "zip_roundtrip_documents": zip_roundtrip_documents,
         "tar_roundtrip_documents": tar_roundtrip_documents,
         "wet_roundtrip_documents": wet_roundtrip_documents,
-        "cdx_index_documents": cdx_index_documents,
-        "wat_metadata_documents": wat_metadata_documents,
-        "revisit_resolution_documents": revisit_resolution_documents,
-        "boilerplate_documents": boilerplate_documents,
-        "frontier_schedule_documents": frontier_schedule_documents,
-        "substring_dedup_documents": substring_dedup_documents,
-        "domain_balance_documents": domain_balance_documents,
-        "blocklist_documents": blocklist_documents,
         "crawl_diff_documents": crawl_diff_documents,
-        "sequence_packing_documents": sequence_packing_documents,
         "jsonl_roundtrip_documents": jsonl_roundtrip_documents,
-        "soft404_documents": soft404_documents,
-        "stratified_sample_documents": stratified_sample_documents,
-        "quality_deciles_documents": quality_deciles_documents,
-        "crawl_coverage_documents": crawl_coverage_documents,
         "iceberg_partitioned_documents": iceberg_partitioned_documents,
-        "crawl_plan_documents": crawl_plan_documents,
         "entity_decode_documents": entity_decode_documents,
-        # --- recorded in CORRECTNESS_r01-r07; ~9 more fit the window ---
+        # --- the round-1-5 entries ---
         "flagship_validation": flagship_validation,
         "combinator_validation": combinator_validation,
         "json_props_validation": json_props_validation,
@@ -3366,22 +1697,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "windowed_event_counts": windowed_event_counts,
         "topk_events_per_type": topk_events_per_type,
         "error_breakdown_documents": error_breakdown_documents,
-        "exact_dedup_documents": exact_dedup_documents,
-        "jaccard_pairs_documents": jaccard_pairs_documents,
-        "minhash_near_dup_documents": minhash_near_dup_documents,
-        "near_dup_clusters_documents": near_dup_clusters_documents,
-        "simhash_near_dup_documents": simhash_near_dup_documents,
-        "text_features_documents": text_features_documents,
-        "cosine_topk_embeddings": cosine_topk_embeddings,
-        "ann_lsh_topk_embeddings": ann_lsh_topk_embeddings,
-        "ivf_topk_embeddings": ivf_topk_embeddings,
-        "quantized_cosine_topk_embeddings": quantized_cosine_topk_embeddings,
-        "ivf_partial_probe_embeddings": ivf_partial_probe_embeddings,
-        "near_dup_embeddings": near_dup_embeddings,
         "text_consistency_documents": text_consistency_documents,
-        "gopher_quality_documents": gopher_quality_documents,
-        "filter_funnel_documents": filter_funnel_documents,
-        "c4_unit_dedup_documents": c4_unit_dedup_documents,
         "salted_agg_orders": salted_agg_orders,
         "per_host_verdicts_documents": per_host_verdicts_documents,
     }
@@ -3694,581 +2010,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT keyword, path, count(*) AS n_violations FROM v GROUP BY keyword, path
     """
 
-    exact_dedup = """
-    SELECT md5(text) AS digest, count(*) AS n_copies,
-           array_to_string(list_sort(list(doc_id))[1:100], ',') AS ids
-      FROM documents WHERE text IS NOT NULL
-     GROUP BY md5(text) HAVING count(*) > 1
-    """
-
-    # trigram word-shingle sets, exactly mirroring ops.dedup.shingles_col
-    _shingle_cte = r"""
-    WITH t AS (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(toks) >= 3
-               THEN list_transform(range(1, len(toks)-1),
-                                   i -> array_to_string(toks[i:i+2], ' '))
-               ELSE [array_to_string(toks, ' ')] END) AS sh
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'),
-                                 x -> x <> '') AS toks
-                FROM documents WHERE doc_id < 500))
-    """
-
-    jaccard_pairs = _shingle_cte + r"""
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           len(list_intersect(a.sh, b.sh)) AS n_inter,
-           len(list_distinct(list_concat(a.sh, b.sh))) AS n_union,
-           round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1), 6)
-             AS jaccard
-      FROM t a, t b
-     WHERE a.doc_id < b.doc_id
-       AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-           / greatest(len(list_distinct(list_concat(a.sh, b.sh))), 1) >= 0.06
-    """
-
-
-    _stop = "'the','and','of','to','is','in','that','it','was','for','a','an','as','at','by','or','be'"
-    _markers = {
-        "de": "'der','die','das','und','ist','nicht','ein','mit','auf','für'",
-        "en": "'the','and','of','to','is','in','that','it','was','for'",
-        "es": "'el','la','los','de','que','es','en','un','por','con'",
-        "fr": "'le','la','les','et','est','pas','une','dans','que','pour'",
-        "ru": "'и','в','не','на','что','это','с','как','по','но'",
-        "zh": "'的','是','在','了','我','有','和','不','这','人'",
-    }
-    _score_cols = ",\n".join(
-        f"len(list_intersect(list_distinct(toks), [{v}])) AS s_{k}"
-        for k, v in _markers.items()
-    )
-    _case = "\n".join(f"WHEN s_{k} = gmax THEN '{k}'" for k in _markers)
-    text_features = rf"""
-    WITH f AS (
-      SELECT doc_id, text, length(text) AS n_chars,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks,
-             len(regexp_extract_all(text, '[^\w\s]')) AS n_punct
-        FROM documents),
-         g AS (
-      SELECT doc_id, text, n_chars, len(toks) AS n_tokens,
-             round(CAST(n_chars - (len(toks) - 1) AS DOUBLE) / greatest(len(toks), 1), 4)
-               AS mean_token_len,
-             round(CAST(n_punct AS DOUBLE) / greatest(n_chars, 1), 6) AS punct_ratio,
-             round(CAST(len(list_filter(toks, x -> x IN ({_stop}))) AS DOUBLE)
-                   / greatest(len(toks), 1), 6) AS stopword_ratio,
-             round(CAST(len(list_distinct(toks)) AS DOUBLE) / greatest(len(toks), 1), 6)
-               AS distinct_token_ratio,
-             {_score_cols}
-        FROM f),
-         m AS (SELECT *, greatest(s_de, s_en, s_es, s_fr, s_ru, s_zh) AS gmax FROM g)
-    SELECT doc_id, n_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]{{1,4}}|[0-9]|[^A-Za-z0-9\s]'))
-             AS n_bpeish,
-           CASE WHEN text IS NULL THEN NULL ELSE
-             list_min(list_transform(range(1, greatest(length(text) - 7, 1) + 1),
-                                     i -> substr(md5(substr(text, i, 8)), 1, 16)))
-           END AS fingerprint,
-           mean_token_len, punct_ratio, stopword_ratio,
-           distinct_token_ratio,
-           round(least(n_tokens / 20.0, 1.0) * distinct_token_ratio
-                 * greatest(0.0, 1.0 - punct_ratio * 4), 6) AS quality_score,
-           CASE WHEN gmax = 0 THEN 'und' {_case} END AS lang_pred,
-           CASE WHEN text IS NULL THEN NULL
-                WHEN sc.np IS NULL THEN 0.0
-                ELSE round(CAST(sc.tot AS DOUBLE) / (sc.np * 1000000.0), 6)
-           END AS lm_bigram_score,
-           1 AS pii_emails,
-           CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END AS pii_ips,
-           CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END AS pii_cards,
-           CASE WHEN doc_id % 8 = 0 THEN 1 ELSE 0 END AS pii_cards_luhn,
-           CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS pii_phones,
-           md5(coalesce(text, '') || ' contact <EMAIL>'
-               || CASE WHEN doc_id % 3 = 0 THEN ' call <PHONE>' ELSE '' END
-               || CASE WHEN doc_id % 5 = 0 THEN ' from <IP>' ELSE '' END
-               || CASE WHEN doc_id % 4 = 0 THEN ' pay <CARD>' ELSE '' END)
-             AS pii_scrub_md5
-      FROM m
-      LEFT JOIN (
-        -- replay the char-bigram fluency model: train on doc_id%7,
-        -- top-128 chars by (count desc, char asc) kept, the rest mapped
-        -- to the single UNK symbol chr(1) BEFORE bigram counting (the
-        -- CCNet vocabulary cut — bounds the model on multilingual text),
-        -- add-one-smoothed transition probs quantized to millionths
-        -- (exact BIGINT floor division -> order-independent sums);
-        -- smoothing V = |vocab| + (1 if any char was cut)
-        WITH trn AS (SELECT text FROM documents
-                      WHERE text IS NOT NULL AND doc_id % 7 = 0),
-        cc AS (SELECT substr(text, i, 1) AS ch, count(*) AS c
-                 FROM trn, unnest(range(1, length(text) + 1)) AS t(i)
-                GROUP BY 1),
-        voc AS (SELECT ch FROM cc ORDER BY c DESC, ch ASC LIMIT 128),
-        vv AS (SELECT (SELECT count(*) FROM voc)
-                      + CASE WHEN (SELECT count(*) FROM cc)
-                                  > (SELECT count(*) FROM voc)
-                             THEN 1 ELSE 0 END AS V),
-        tp AS (SELECT coalesce(a.ch, chr(1)) || coalesce(b.ch, chr(1)) AS pr
-                 FROM (SELECT substr(text, i, 1) AS c1,
-                              substr(text, i + 1, 1) AS c2
-                         FROM trn, unnest(range(1, length(text))) AS t(i)) p
-                 LEFT JOIN voc a ON a.ch = p.c1
-                 LEFT JOIN voc b ON b.ch = p.c2),
-        m2c AS (SELECT pr, count(*) AS c2 FROM tp GROUP BY pr),
-        m1c AS (SELECT substr(pr, 1, 1) AS ch, CAST(sum(c2) AS BIGINT) AS c1
-                  FROM m2c GROUP BY 1),
-        dp AS (SELECT doc_id,
-                      coalesce(a.ch, chr(1)) || coalesce(b.ch, chr(1)) AS pr,
-                      coalesce(a.ch, chr(1)) AS ch
-                 FROM (SELECT doc_id, substr(text, i, 1) AS c1,
-                              substr(text, i + 1, 1) AS c2
-                         FROM documents, unnest(range(1, length(text))) AS t(i)
-                        WHERE text IS NOT NULL) p
-                 LEFT JOIN voc a ON a.ch = p.c1
-                 LEFT JOIN voc b ON b.ch = p.c2),
-        jj AS (SELECT dp.doc_id,
-                      ((coalesce(m2c.c2, 0) + 1) * 1000000)
-                        // (coalesce(m1c.c1, 0) + vv.V) AS term
-                 FROM dp LEFT JOIN m2c USING (pr)
-                      LEFT JOIN m1c ON m1c.ch = dp.ch
-                      CROSS JOIN vv)
-        SELECT doc_id, CAST(sum(term) AS BIGINT) AS tot, count(*) AS np
-          FROM jj GROUP BY doc_id
-      ) sc USING (doc_id)
-    """
-
-    # ---- full-pipeline replicas for the formerly rows-only queries ------
-    # (the Spark queries run the md5-based method of each operator; these
-    # SQL replicas replay the SAME algorithm — signatures, banding, bucket
-    # join, exact verification — so the match is exact, not probabilistic)
-
-    _mh_seed, _mh_lanes, _mh_bands = 42, 16, 8
-    _mh_rows = _mh_lanes // _mh_bands
-    # lane i = hex chars [8*(i%4)+1, +8) of md5('<seed + i//4>:' || s) —
-    # mirrors ops.dedup.minhash_signature(method='md5') exactly
-    _lane_cols = ",\n             ".join(
-        f"list_min(list_transform(sh, s -> substr(md5(concat('{_mh_seed + i // 4}:', s)),"
-        f" {8 * (i % 4) + 1}, 8))) AS h{i}"
-        for i in range(_mh_lanes)
-    )
-    _band_structs = ", ".join(
-        "{band: %d, key: %s}"
-        % (b, " || ".join(f"h{b * _mh_rows + r}" for r in range(_mh_rows)))
-        for b in range(_mh_bands)
-    )
-    minhash_sql = rf"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
-        FROM documents WHERE text IS NOT NULL),
-    sh_t AS MATERIALIZED (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(tk) >= 3
-               THEN list_transform(range(1, len(tk)-1),
-                                   i -> array_to_string(tk[i:i+2], ' '))
-               ELSE [array_to_string(tk, ' ')] END) AS sh
-        FROM toks),
-    m AS MATERIALIZED (
-      SELECT doc_id, {_lane_cols}
-        FROM sh_t),
-    banded AS MATERIALIZED (
-      SELECT doc_id, unnest([{_band_structs}], recursive := true) FROM m),
-    ok_buckets AS (
-      SELECT band, key FROM banded GROUP BY band, key
-      HAVING count(*) > 1 AND count(*) <= 64),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM banded a
-        JOIN ok_buckets USING (band, key)
-        JOIN banded b USING (band, key)
-       WHERE a.doc_id < b.doc_id),
-    scored AS (
-      SELECT c.id_a, c.id_b,
-             len(list_intersect(ta.sh, tb.sh)) AS n_inter,
-             len(list_distinct(list_concat(ta.sh, tb.sh))) AS n_union,
-             round(CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                   / greatest(len(list_distinct(list_concat(ta.sh, tb.sh))), 1), 6)
-               AS jaccard
-        FROM cand c
-        JOIN sh_t ta ON ta.doc_id = c.id_a
-        JOIN sh_t tb ON tb.doc_id = c.id_b)
-    SELECT id_a, id_b, n_inter, n_union, jaccard FROM scored WHERE jaccard >= 0.06
-    """
-
-    clusters_sql = f"""
-    WITH RECURSIVE pairs AS ({minhash_sql}),
-    e AS (SELECT id_a AS u, id_b AS v FROM pairs
-          UNION ALL SELECT id_b, id_a FROM pairs),
-    r AS (
-      SELECT DISTINCT u AS id, u AS lab FROM e
-      UNION
-      SELECT e.v AS id, r.lab FROM r JOIN e ON e.u = r.id WHERE r.lab < e.v
-    )
-    SELECT id AS doc_id, min(lab) AS cluster_rep FROM r GROUP BY id
-    """
-
-    # 60-bit md5-prefix simhash: token hash = conv of the first 15 hex
-    # chars; votes per bit; 4 x 15-bit chunk banding; Hamming <= 3
-    _sim_bit_terms = " + ".join(
-        f"(CASE WHEN len(list_filter(hs, h -> (h >> {j}) & 1 = 1)) * 2 - len(hs) > 0"
-        f" THEN CAST({1 << j} AS BIGINT) ELSE 0 END)"
-        for j in range(60)
-    )
-    _sim_chunks = ", ".join(
-        "{chunk: %d, val: (sim >> %d) & 32767}" % (c, c * 15) for c in range(4)
-    )
-    simhash_sql = rf"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
-        FROM documents WHERE text IS NOT NULL),
-    hs_t AS MATERIALIZED (
-      SELECT doc_id,
-             list_transform(tk, t -> CAST(list_sum(list_transform(range(1, 16),
-               p -> (strpos('0123456789abcdef', substr(md5(t), p, 1)) - 1)
-                    * CAST(pow(16, 15 - p) AS BIGINT))) AS BIGINT)) AS hs
-        FROM toks),
-    sig AS MATERIALIZED (
-      SELECT doc_id, CAST({_sim_bit_terms} AS BIGINT) AS sim FROM hs_t),
-    chunks AS MATERIALIZED (
-      SELECT doc_id, sim, unnest([{_sim_chunks}], recursive := true) FROM sig),
-    p AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-             a.sim AS sim_a, b.sim AS sim_b
-        FROM chunks a JOIN chunks b USING (chunk, val)
-       WHERE a.doc_id < b.doc_id)
-    SELECT id_a, id_b, CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
-      FROM p WHERE bit_count(xor(sim_a, sim_b)) <= 3
-    """
-
-    # RP-LSH over embeddings: the 16 hyperplanes are deterministic
-    # splitmix-style constants — embed them as literals so the oracle
-    # replays the exact signature arithmetic (per-element double products,
-    # left-to-right sum, sign at >= 0)
-    from schema_fantasy_spark.ops.similarity import _hyperplane
-
-    _dim, _n_planes = 64, 16  # ann_lsh: 16 planes, 4-bit bands (generous top-k probe)
-
-    def _dot_sql(vec_expr: str, plane) -> str:
-        lits = ", ".join(repr(c) for c in plane)
-        return (
-            f"list_sum(list_transform(list_zip({vec_expr}, [{lits}]),"
-            f" x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
-        )
-
-    _sig_terms = " + ".join(
-        f"(CASE WHEN {_dot_sql('embedding', _hyperplane(_dim, 42, p))} >= 0"
-        f" THEN CAST({1 << p} AS BIGINT) ELSE 0 END)"
-        for p in range(_n_planes)
-    )
-    _cos_expr = """
-      list_sum(list_transform(list_zip(va, vb),
-                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-      / (sqrt(list_sum(list_transform(va, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-         * sqrt(list_sum(list_transform(vb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-    """
-
-    ann_lsh_sql = f"""
-    WITH sigs AS MATERIALIZED (
-      SELECT vec_id, embedding, CAST({_sig_terms} AS BIGINT) AS sig FROM embeddings),
-    q AS (SELECT sig AS qsig, embedding AS qe FROM sigs WHERE vec_id = 0),
-    cand AS (
-      SELECT s.vec_id, s.embedding AS va, q.qe AS vb
-        FROM sigs s, q
-       WHERE s.vec_id <> 0 AND (
-             ((s.sig >> 0) & 15) = ((q.qsig >> 0) & 15) OR
-             ((s.sig >> 4) & 15) = ((q.qsig >> 4) & 15) OR
-             ((s.sig >> 8) & 15) = ((q.qsig >> 8) & 15) OR
-             ((s.sig >> 12) & 15) = ((q.qsig >> 12) & 15)))
-    SELECT vec_id, round({_cos_expr}, 5) AS cosine_sim
-      FROM cand ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10
-    """
-
-    # near-dup: 32 planes, 8-bit bands (random-pair candidate rate ~1.6%,
-    # vs ~25% with 4-bit buckets — the scale-safe default in similarity.py)
-    _nd_sig_terms = " + ".join(
-        f"(CASE WHEN {_dot_sql('embedding', _hyperplane(_dim, 42, p))} >= 0"
-        f" THEN CAST({1 << p} AS BIGINT) ELSE 0 END)"
-        for p in range(32)
-    )
-    _emb_chunks = ", ".join(
-        "{band: %d, val: (sig >> %d) & 255}" % (b, b * 8) for b in range(4)
-    )
-    near_dup_emb_sql = f"""
-    WITH sigs AS MATERIALIZED (
-      SELECT vec_id, embedding, CAST({_nd_sig_terms} AS BIGINT) AS sig FROM embeddings),
-    chunks AS MATERIALIZED (
-      SELECT vec_id, unnest([{_emb_chunks}], recursive := true) FROM sigs),
-    ok_buckets AS (
-      SELECT band, val FROM chunks GROUP BY band, val
-      HAVING count(*) > 1 AND count(*) <= 64),
-    p AS (
-      SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM chunks a
-        JOIN ok_buckets USING (band, val)
-        JOIN chunks b USING (band, val)
-       WHERE a.vec_id < b.vec_id),
-    scored AS (
-      SELECT p.id_a, p.id_b,
-             round({_cos_expr.replace("va", "sa.embedding").replace("vb", "sb.embedding")}, 5)
-               AS cosine_sim
-        FROM p
-        JOIN sigs sa ON sa.vec_id = p.id_a
-        JOIN sigs sb ON sb.vec_id = p.id_b)
-    SELECT id_a, id_b, cosine_sim FROM scored WHERE cosine_sim >= 0.4
-    """
-
-    c4_sql = r"""
-    WITH t AS (
-      SELECT doc_id,
-             string_split(regexp_replace(text, '((\S+ ){4}\S+) ',
-                                         '\1' || chr(10), 'g'), chr(10)) AS parts
-        FROM documents WHERE text IS NOT NULL),
-    w AS (
-      SELECT doc_id, unnest(parts) AS unit,
-             unnest(generate_series(1, len(parts))) - 1 AS pos
-        FROM t),
-    k AS (
-      SELECT doc_id, pos, unit,
-             row_number() OVER (PARTITION BY md5(unit) ORDER BY doc_id, pos) AS rn
-        FROM w)
-    SELECT doc_id, string_agg(unit, chr(10) ORDER BY pos) AS text,
-           CAST(count(*) AS BIGINT) AS n_units
-      FROM k WHERE rn = 1 GROUP BY doc_id
-    """
-
-
-    funnel_sql = r"""
-    WITH f AS (
-      SELECT (text IS NOT NULL) AS p0,
-             (text IS NOT NULL AND coalesce(
-                len(list_filter(string_split_regex(lower(text), '\s+'),
-                                x -> x <> '')) >= 20, false)) AS c1,
-             coalesce(lang IN ('en','de','fr','es'), false) AS c2,
-             coalesce(n_chars <= 500, false) AS c3
-        FROM documents),
-    g AS (SELECT p0, (p0 AND c1) AS p1, (p0 AND c1 AND c2) AS p2,
-                 (p0 AND c1 AND c2 AND c3) AS p3 FROM f),
-    s AS (SELECT count(*) AS n,
-                 CAST(sum(CAST(p0 AS BIGINT)) AS BIGINT) AS o0,
-                 CAST(sum(CAST(p1 AS BIGINT)) AS BIGINT) AS o1,
-                 CAST(sum(CAST(p2 AS BIGINT)) AS BIGINT) AS o2,
-                 CAST(sum(CAST(p3 AS BIGINT)) AS BIGINT) AS o3
-            FROM g)
-    SELECT 0 AS stage, 'text_present' AS rule, n AS n_in, n - o0 AS n_dropped, o0 AS n_out FROM s
-    UNION ALL SELECT 1, 'min_20_words', o0, o0 - o1, o1 FROM s
-    UNION ALL SELECT 2, 'known_lang', o1, o1 - o2, o2 FROM s
-    UNION ALL SELECT 3, 'n_chars_cap', o2, o2 - o3, o3 FROM s
-    """
-
-    # word n-gram list for n: DuckDB 1-based inclusive slices, mirrors
-    # ops.text._gram_run_stats (concat_ws over token slices)
-    def _grams(n: int) -> str:
-        return (
-            f"CASE WHEN len(tk) >= {n} THEN list_transform("
-            f"range(1, len(tk) - {n} + 2), "
-            f"i -> array_to_string(tk[i:i+{n - 1}], ' ')) ELSE [] END"
-        )
-
-    _top_fracs = ",\n             ".join(
-        f"round(CAST(coalesce(list_max(list_transform(list_distinct(g{n}),"
-        f" d -> len(list_filter(g{n}, x -> x = d)))), 0) AS DOUBLE)"
-        f" / greatest(len(g{n}), 1), 6) AS frac_top_{name}"
-        for n, name in [(2, "bigram"), (3, "trigram"), (4, "fourgram")]
-    )
-    _dup_char_fracs = ",\n             ".join(
-        f"round(CAST(coalesce(list_sum(list_transform(list_distinct(g{n}),"
-        f" d -> (len(list_filter(g{n}, x -> x = d)) - 1) * length(d))), 0) AS DOUBLE)"
-        f" / greatest(coalesce(list_sum(list_transform(g{n}, x -> length(x))), 0), 1), 6)"
-        f" AS frac_dup_{n}gram_chars"
-        for n in range(5, 11)
-    )
-    _dup_char_cols = ", ".join(f"frac_dup_{n}gram_chars" for n in range(5, 11))
-    _dup_char_checks = "\n            AND ".join(
-        f"frac_dup_{n}gram_chars <= {t}"
-        for n, t in [(5, 0.15), (6, 0.14), (7, 0.13), (8, 0.12), (9, 0.11), (10, 0.10)]
-    )
-    gopher_sql = rf"""
-    WITH toks AS (
-      SELECT doc_id, text,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
-        FROM documents WHERE text IS NOT NULL),
-    g AS (
-      SELECT doc_id, text, len(tk) AS n_words,
-             {", ".join(f"{_grams(n)} AS g{n}" for n in range(2, 11))},
-             len(list_filter(tk, w -> NOT regexp_matches(w, '[a-z]'))) AS n_noalpha,
-             string_split(text, chr(10)) AS lines
-        FROM toks),
-    m AS (
-      SELECT doc_id, n_words,
-             {_top_fracs},
-             round(CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE)
-                   / greatest(len(g3), 1), 6) AS frac_dup_trigrams,
-             {_dup_char_fracs},
-             round(CAST(n_noalpha AS DOUBLE) / greatest(n_words, 1), 6) AS frac_no_alpha,
-             round(CAST(len(regexp_extract_all(text, '#|\.\.\.|…')) AS DOUBLE)
-                   / greatest(n_words, 1), 6) AS symbol_word_ratio,
-             round(CAST(len(list_filter(lines,
-                     l -> regexp_matches(l, '^\s*[-*•‣▪]'))) AS DOUBLE)
-                   / greatest(len(lines), 1), 6) AS frac_bullet_lines,
-             round(CAST(len(list_filter(lines,
-                     l -> regexp_matches(l, '(\.\.\.|…)\s*$'))) AS DOUBLE)
-                   / greatest(len(lines), 1), 6) AS frac_ellipsis_lines
-        FROM g)
-    SELECT doc_id, n_words, frac_top_bigram, frac_top_trigram, frac_top_fourgram,
-           frac_dup_trigrams, {_dup_char_cols},
-           frac_no_alpha, symbol_word_ratio, frac_bullet_lines, frac_ellipsis_lines,
-           (n_words BETWEEN 20 AND 100000
-            AND frac_top_bigram <= 0.20
-            AND frac_top_trigram <= 0.18
-            AND frac_top_fourgram <= 0.16
-            AND frac_dup_trigrams <= 0.30
-            AND {_dup_char_checks}
-            AND frac_no_alpha <= 0.20
-            AND symbol_word_ratio <= 0.10
-            AND frac_bullet_lines <= 0.90
-            AND frac_ellipsis_lines <= 0.30) AS gopher_pass,
-           coalesce(h.contam_hits, 0) AS contam_hits,
-           coalesce(h.contam_hits, 0) > 0 AS contaminated
-      FROM m
-      LEFT JOIN (
-        WITH dg AS (
-          SELECT doc_id,
-                 unnest(list_distinct(list_transform(
-                   range(1, greatest(len(tk) - 7, 0) + 1),
-                   i -> md5(array_to_string(list_slice(tk, i, i + 7), ' '))
-                 ))) AS gr
-            FROM toks),
-        b AS (SELECT DISTINCT gr FROM dg WHERE doc_id % 61 = 0)
-        SELECT dg.doc_id, count(*) AS contam_hits
-          FROM dg JOIN b USING (gr) GROUP BY dg.doc_id
-      ) h USING (doc_id)
-    """
-
-    quantized_topk_sql = """
-    WITH qs AS (
-      SELECT list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127
-               AS s, embedding AS e
-        FROM embeddings WHERE vec_id = 0),
-    qq AS (
-      SELECT list_transform(e, x -> CASE WHEN s = 0 THEN 0
-               ELSE CAST(round(CAST(x AS DOUBLE) / s) AS BIGINT) END) AS qv
-        FROM qs),
-    d AS (
-      SELECT vec_id, embedding,
-             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) / 127
-               AS s
-        FROM embeddings WHERE vec_id <> 0),
-    dq AS (
-      SELECT vec_id, list_transform(embedding, x -> CASE WHEN s = 0 THEN 0
-               ELSE CAST(round(CAST(x AS DOUBLE) / s) AS BIGINT) END) AS dv
-        FROM d),
-    sc AS (
-      SELECT vec_id,
-             CAST(list_sum(list_transform(list_zip(dv, qv), p -> p[1] * p[2]))
-                  AS DOUBLE) AS num,
-             sqrt(CAST(list_sum(list_transform(dv, x -> x * x)) AS DOUBLE)) AS na,
-             sqrt(CAST(list_sum(list_transform(qv, x -> x * x)) AS DOUBLE)) AS nb
-        FROM dq, qq)
-    SELECT vec_id, round(num / (na * nb), 5) AS cosine_sim
-      FROM sc ORDER BY cosine_sim DESC, vec_id ASC LIMIT 10
-    """
-
-    cosine_topk_sql = """
-    WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id,
-           round(
-             list_sum(list_transform(list_zip(e.embedding, q.qe),
-                                     x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(e.embedding,
-                                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(q.qe,
-                                               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             5) AS cosine_sim
-      FROM embeddings e, q
-     WHERE e.vec_id <> 0
-     ORDER BY cosine_sim DESC, vec_id ASC
-     LIMIT 10
-    """
-
-    # ivf_partial_probe: replay the ENTIRE integer-exact IVF build in SQL
-    # (sim.ivf_index_exact is reproducible by construction: power-of-2
-    # quantization, md5-ordered sample/init, integer Lloyd with
-    # floor-division means and lowest-list tie-breaks), then the 3-list
-    # probe and the exact cosine top-10 within the probed lists. The
-    # Lloyd loop is unrolled: a{t} = assignment under c{t-1}, u{t} =
-    # per-list integer mean, c{t} = updated centroids (empty lists keep
-    # their centroid).
-    _ivf_q = (
-        "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)"
-        " * 1048576.0 + 0.5) AS BIGINT))"
-    )
-    _ivf_d2 = (
-        "list_sum(list_transform(list_zip({a}, {b}),"
-        " p -> (p[1] - p[2]) * (p[1] - p[2])))"
-    )
-    _ivf_iters = ""
-    for _t in range(1, 6):
-        _ivf_iters += f"""
-    , a{_t} AS (
-      SELECT vec_id, qv, list_id FROM (
-        SELECT s.vec_id, s.qv, c.list_id,
-               row_number() OVER (PARTITION BY s.vec_id ORDER BY
-                 {_ivf_d2.format(a="s.qv", b="c.c")}, c.list_id) AS rn
-          FROM samp s CROSS JOIN c{_t - 1} c) WHERE rn = 1
-    ), u{_t} AS (
-      SELECT list_id, list(m ORDER BY pos) AS c FROM (
-        SELECT list_id, pos,
-               CAST(floor(CAST(sum(v) AS DOUBLE) / count(*)) AS BIGINT) AS m
-          FROM (SELECT list_id, unnest(qv) AS v,
-                       unnest(generate_series(1, len(qv))) AS pos FROM a{_t})
-         GROUP BY list_id, pos)
-       GROUP BY list_id
-    ), c{_t} AS (
-      SELECT p.list_id, COALESCE(u.c, p.c) AS c
-        FROM c{_t - 1} p LEFT JOIN u{_t} u USING (list_id)
-    )"""
-    ivf_partial_sql = f"""
-    WITH q0 AS (
-      SELECT vec_id, {_ivf_q} AS qv,
-             md5(CAST(vec_id AS VARCHAR)) AS mk
-        FROM embeddings WHERE vec_id <> 0
-    ), samp AS (
-      SELECT vec_id, qv, mk FROM q0 ORDER BY mk, vec_id LIMIT 4096
-    ), c0 AS (
-      SELECT CAST(row_number() OVER (ORDER BY mk, vec_id) - 1 AS INTEGER)
-               AS list_id, qv AS c
-        FROM (SELECT * FROM samp ORDER BY mk, vec_id LIMIT 8)
-    ){_ivf_iters}
-    , af AS (
-      SELECT vec_id, list_id FROM (
-        SELECT v.vec_id, c.list_id,
-               row_number() OVER (PARTITION BY v.vec_id ORDER BY
-                 {_ivf_d2.format(a="v.qv", b="c.c")}, c.list_id) AS rn
-          FROM q0 v CROSS JOIN c5 c) WHERE rn = 1
-    ), qq AS (
-      SELECT {_ivf_q} AS qv, embedding AS qe
-        FROM embeddings WHERE vec_id = 0
-    ), probe AS (
-      SELECT c.list_id FROM c5 c CROSS JOIN qq q
-       ORDER BY {_ivf_d2.format(a="q.qv", b="c.c")}, c.list_id
-       LIMIT 3
-    )
-    SELECT e.vec_id,
-           round(
-             list_sum(list_transform(list_zip(e.embedding, q.qe),
-                                     x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(e.embedding,
-                                             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                * sqrt(list_sum(list_transform(q.qe,
-                                               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-             5) AS cosine_sim
-      FROM embeddings e
-      JOIN af ON af.vec_id = e.vec_id
-      JOIN probe p ON p.list_id = af.list_id
-      CROSS JOIN qq q
-     ORDER BY cosine_sim DESC, e.vec_id ASC
-     LIMIT 10
-    """
-
     # parameterized on the row-slice predicate: the variant twin gates the
     # SAME constraints on a deterministic 10% slice (a plain predicate
     # swap, never string surgery on the SQL body)
@@ -4304,48 +2045,6 @@ def oracle_sql() -> dict[str, str]:
     """
 
     rich_props_sql = rich_props_sql_for("TRUE")
-
-    def _pagerank_cte(iterations=5, scale=10**12, num=85, den=100):
-        """Unrolled CTE chain replaying ops/linkgraph.pagerank exactly:
-        same BIGINT fixed-point recurrence, DuckDB's integer ``//``
-        matching Spark's ``DIV`` on the all-positive values here."""
-        sql = f"""
-    WITH e0 AS (
-      SELECT 'h' || CAST(doc_id % 18 AS VARCHAR) AS src,
-             'h' || CAST((doc_id * 7 + 3) % 19 AS VARCHAR) AS dst
-        FROM documents WHERE doc_id IS NOT NULL
-      UNION ALL
-      SELECT 'h' || CAST(doc_id % 18 AS VARCHAR),
-             'h' || CAST((doc_id * 5 + 11) % 19 AS VARCHAR)
-        FROM documents WHERE doc_id IS NOT NULL AND doc_id % 3 = 0
-    ),
-    edges AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d
-              FROM edges GROUP BY src),
-    nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    r0 AS (SELECT node, CAST({scale} AS BIGINT) // n AS rank FROM nodes, nn)"""
-        prev = "r0"
-        for it in range(1, iterations + 1):
-            sql += f""",
-    c{it} AS (SELECT e.dst AS node,
-                     CAST(SUM(r.rank // g.d) AS BIGINT) AS contrib
-                FROM edges e JOIN {prev} r ON r.node = e.src
-                             JOIN deg g ON g.node = e.src
-               GROUP BY e.dst),
-    g{it} AS (SELECT CAST(COALESCE(SUM(r.rank), 0) AS BIGINT) AS dang
-                FROM {prev} r LEFT JOIN deg ON deg.node = r.node
-               WHERE deg.d IS NULL),
-    r{it} AS (SELECT v.node,
-                     (({den - num}) * (CAST({scale} AS BIGINT) // nn.n)) // {den}
-                     + ({num} * (COALESCE(c.contrib, CAST(0 AS BIGINT))
-                                 + g{it}.dang // nn.n)) // {den} AS rank
-                FROM nodes v CROSS JOIN nn CROSS JOIN g{it}
-                LEFT JOIN c{it} c ON c.node = v.node)"""
-            prev = f"r{it}"
-        return sql + f"""
-    SELECT node AS host, CAST(rank AS BIGINT) AS rank_scaled FROM {prev}
-    """
 
     return {
         "flagship_validation": flagship,
@@ -4391,18 +2090,6 @@ def oracle_sql() -> dict[str, str]:
         "windowed_event_counts": windowed,
         "topk_events_per_type": topk,
         "error_breakdown_documents": error_breakdown,
-        "exact_dedup_documents": exact_dedup,
-        "jaccard_pairs_documents": jaccard_pairs,
-        "text_features_documents": text_features,
-        "cosine_topk_embeddings": cosine_topk_sql,
-        "quantized_cosine_topk_embeddings": quantized_topk_sql,
-        "ivf_topk_embeddings": cosine_topk_sql,
-        "ivf_partial_probe_embeddings": ivf_partial_sql,
-        "minhash_near_dup_documents": minhash_sql,
-        "near_dup_clusters_documents": clusters_sql,
-        "simhash_near_dup_documents": simhash_sql,
-        "ann_lsh_topk_embeddings": ann_lsh_sql,
-        "near_dup_embeddings": near_dup_emb_sql,
         # the charset-family suffix + (charset, source) labels replay
         # from the same md5-nibble derivation the corpus generator uses;
         # specials as chr() so the SQL is charset-clean itself
@@ -4449,9 +2136,6 @@ def oracle_sql() -> dict[str, str]:
            md5(t) AS h_expected
       FROM s
     """,
-        "gopher_quality_documents": gopher_sql,
-        "filter_funnel_documents": funnel_sql,
-        "c4_unit_dedup_documents": c4_sql,
         "streaming_validation_documents": flagship,
         "streaming_dedup_documents": """
     SELECT DISTINCT doc_id % 97 AS dup_key
@@ -4530,29 +2214,6 @@ def oracle_sql() -> dict[str, str]:
            CAST(max(o_totalprice) AS DOUBLE) AS max_price
       FROM orders GROUP BY o_orderpriority
     """,
-        # RFC 9309 verdicts replayed from the modular construction: odd
-        # hosts' exact sfsbot group (prefix disallow, longer allow, /tmp
-        # only in the shadowed * group), even hosts' * group (wildcard +
-        # $-anchored disallow outranks the shorter allow only on 'x'
-        # tails)
-        "robots_allowed_documents": """
-    SELECT doc_id,
-           'h' || CAST(doc_id % 19 AS VARCHAR) || '.example.com' AS host,
-           CASE doc_id % 4
-             WHEN 0 THEN '/p' || CAST(doc_id % 19 AS VARCHAR) || '/a'
-                         || CAST(doc_id AS VARCHAR)
-             WHEN 1 THEN '/p' || CAST(doc_id % 19 AS VARCHAR) || '/open'
-                         || CAST(doc_id AS VARCHAR)
-             WHEN 2 THEN '/tmp/' || CAST(doc_id AS VARCHAR)
-             ELSE '/p' || CAST(doc_id % 19 AS VARCHAR) || '/a'
-                  || CAST(doc_id AS VARCHAR) || 'x'
-           END AS path,
-           CASE WHEN (doc_id % 19) % 2 = 1
-                THEN doc_id % 4 IN (1, 2)
-                ELSE doc_id % 4 <> 3
-           END AS allowed
-      FROM documents WHERE doc_id IS NOT NULL
-    """,
         # closed-form expected metadata from the same modular page
         # construction as the Spark query (entry 53)
         "html_metadata_documents": """
@@ -4587,53 +2248,6 @@ def oracle_sql() -> dict[str, str]:
            END AS resolved_links
       FROM d
     """,
-        # full bit-for-bit replay of the fixed-point PageRank iteration
-        # (entry 54) — generated CTE chain, BIGINT // throughout
-        "pagerank_hosts_documents": _pagerank_cte(),
-        # closed-form per-host sitemap inventory from the same modular
-        # construction as the Spark query (entry 55)
-        # k%2==0: direct urlset (k%4==2 delivered gzipped — transparent
-        # after the gunzip seam); k%4==3: depth-1 index over 2 child
-        # urlsets; k%4==1: depth-2 NESTED index -> 2 child indexes -> 4
-        # grandchild urlsets of 2 urls each
-        "sitemap_urls_documents": """
-    WITH h AS (SELECT DISTINCT CAST(doc_id % 19 AS INTEGER) AS k
-                 FROM documents WHERE doc_id IS NOT NULL),
-    d AS (SELECT k, CAST(k AS VARCHAR) AS ks, 2 + k % 3 AS nu,
-                 'https://h' || CAST(k AS VARCHAR) || '.example.com' AS base
-            FROM h)
-    SELECT 'h' || ks || '.example.com' AS host,
-           CASE WHEN k % 2 = 0 THEN 'urlset' ELSE 'index' END AS kind,
-           CAST(CASE WHEN k % 2 = 0 THEN nu
-                     WHEN k % 4 = 1 THEN 8 ELSE 4 END AS INTEGER) AS n_urls,
-           CAST(CASE WHEN k % 2 = 0 THEN (nu + 1) // 2 ELSE 0 END
-                AS INTEGER) AS n_priority,
-           CASE WHEN k % 2 = 0
-                THEN '2026-02-' || lpad(CAST(k + nu AS VARCHAR), 2, '0')
-                WHEN k % 4 = 1
-                THEN '2026-04-' || lpad(CAST(k + 4 AS VARCHAR), 2, '0')
-                ELSE '2026-03-' || lpad(CAST(k + 3 AS VARCHAR), 2, '0')
-           END AS max_lastmod,
-           CASE WHEN k % 2 = 0 THEN array_to_string(
-                  list_transform(range(0, nu),
-                                 j -> base || '/page/' || CAST(j AS VARCHAR)
-                                      || '?a=1&b=2'),
-                  chr(10))
-                WHEN k % 4 = 1 THEN array_to_string(
-                  list_transform(range(0, 8),
-                                 i -> base || '/pg/' || CAST(i // 4 AS VARCHAR)
-                                      || '/' || CAST((i // 2) % 2 AS VARCHAR)
-                                      || '/' || CAST(i % 2 AS VARCHAR)),
-                  chr(10))
-                ELSE base || '/p/0/0' || chr(10) || base || '/p/0/1'
-                     || chr(10) || base || '/p/1/0' || chr(10)
-                     || base || '/p/1/1'
-           END AS locs,
-           CAST(CASE WHEN k % 2 = 0 THEN 0
-                     WHEN k % 4 = 1 THEN 2 ELSE 1 END AS INTEGER)
-               AS max_index_depth
-      FROM d
-    """,
         # closed-form violation rows from the JSON-LD page construction
         # (entry 56): family 0 and the first block of family 4 are valid
         # and emit nothing; decoy script blocks must never surface
@@ -4653,103 +2267,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT doc_id, CAST(1 AS INTEGER), 'name', 'minLength',
            'shorter than 5 characters'
       FROM documents WHERE doc_id IS NOT NULL AND doc_id % 5 = 4
-    """,
-        # full replay of the anchor-profile aggregation + window (entry 57)
-        "anchor_text_hosts_documents": """
-    WITH l AS (SELECT 'h' || CAST((doc_id * 7 + 3) % 19 AS VARCHAR) AS dst,
-                      'a' || CAST(doc_id % 5 AS VARCHAR) AS anchor
-                 FROM documents WHERE doc_id IS NOT NULL),
-    c AS (SELECT dst, anchor, CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM l GROUP BY dst, anchor),
-    r AS (SELECT dst, anchor, cnt,
-                 ROW_NUMBER() OVER (PARTITION BY dst
-                                    ORDER BY cnt DESC, anchor ASC) AS rnk
-            FROM c)
-    SELECT dst AS dst_host, anchor, cnt, CAST(rnk AS INTEGER) AS rnk
-      FROM r WHERE rnk <= 2
-    """,
-        # full bit-for-bit replay of classifier TRAINING (vocab cut,
-        # smoothing, integer quantization) and SCORING (entry 58)
-        "classifier_scores_documents": """
-    WITH docs AS (
-      SELECT doc_id, text, lang = 'en' AS pos
-        FROM documents WHERE doc_id IS NOT NULL
-    ),
-    trd AS (SELECT * FROM docs WHERE text IS NOT NULL AND doc_id % 3 = 0),
-    trtok AS (
-      SELECT pos, lower(tok) AS tok
-        FROM trd, unnest(string_split_regex(text, '[^A-Za-z]+')) AS u(tok)
-       WHERE tok <> ''
-    ),
-    cnt AS (SELECT tok, SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS cp,
-                   SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS cn
-              FROM trtok GROUP BY tok),
-    vocab AS (SELECT tok, cp, cn FROM cnt
-               ORDER BY cp + cn DESC, tok ASC LIMIT 64),
-    tot AS (SELECT CAST(COALESCE(SUM(cp), 0) AS BIGINT) AS tp,
-                   CAST(COALESCE(SUM(cn), 0) AS BIGINT) AS tn FROM cnt),
-    vv AS (SELECT (SELECT COUNT(*) FROM vocab) + 1 AS v),
-    w AS (SELECT tok, ((cp + 1) * 1000000) // (tot.tp + vv.v)
-                      - ((cn + 1) * 1000000) // (tot.tn + vv.v) AS w
-            FROM vocab, tot, vv),
-    wu AS (SELECT ((tp - (SELECT COALESCE(SUM(cp), 0) FROM vocab) + 1)
-                   * 1000000) // (tp + v)
-                  - ((tn - (SELECT COALESCE(SUM(cn), 0) FROM vocab) + 1)
-                     * 1000000) // (tn + v) AS wu
-             FROM tot, vv),
-    pr AS (SELECT ((SUM(CASE WHEN pos THEN 1 ELSE 0 END) + 1) * 1000000)
-                  // (COUNT(*) + 2)
-                  - ((SUM(CASE WHEN pos THEN 0 ELSE 1 END) + 1) * 1000000)
-                  // (COUNT(*) + 2) AS b
-             FROM trd),
-    alltok AS (
-      SELECT doc_id, lower(tok) AS tok
-        FROM docs, unnest(string_split_regex(text, '[^A-Za-z]+')) AS u(tok)
-       WHERE text IS NOT NULL AND tok <> ''
-    ),
-    sc AS (SELECT a.doc_id, SUM(COALESCE(w.w, wu.wu)) AS s
-             FROM alltok a LEFT JOIN w ON w.tok = a.tok CROSS JOIN wu
-            GROUP BY a.doc_id)
-    SELECT d.doc_id,
-           CASE WHEN d.text IS NULL THEN NULL
-                ELSE CAST(pr.b + COALESCE(sc.s, 0) AS BIGINT) END AS score,
-           CASE WHEN d.text IS NULL THEN NULL
-                ELSE (pr.b + COALESCE(sc.s, 0)) > 0 END AS pred_en
-      FROM docs d CROSS JOIN pr LEFT JOIN sc ON sc.doc_id = d.doc_id
-    """,
-        # closed-form per-host feed inventory from the same modular
-        # construction as the Spark query (entry 59)
-        "feed_entries_documents": """
-    WITH h AS (SELECT DISTINCT CAST(doc_id % 19 AS INTEGER) AS k
-                 FROM documents WHERE doc_id IS NOT NULL),
-    d AS (SELECT k, CAST(k AS VARCHAR) AS ks, 2 + k % 3 AS nu,
-                 'https://h' || CAST(k AS VARCHAR) || '.example.com' AS base
-            FROM h)
-    SELECT 'h' || ks || '.example.com' AS host,
-           CASE WHEN k % 2 = 0 THEN 'rss' ELSE 'atom' END AS kind,
-           CASE WHEN k % 2 = 0 THEN 'Feed & h' || ks
-                ELSE 'AtomFeed h' || ks END AS feed_title,
-           CAST(CASE WHEN k % 2 = 0 THEN nu ELSE 2 END AS INTEGER)
-             AS n_entries,
-           CASE WHEN k % 2 = 0
-                THEN '2026-02-' || lpad(CAST(k + nu AS VARCHAR), 2, '0')
-                     || 'T00:00:00Z'
-                ELSE '2026-03-' || lpad(CAST(k + 2 AS VARCHAR), 2, '0')
-                     || 'T00:00:00Z' END AS max_ts,
-           CASE WHEN k % 2 = 0 THEN array_to_string(
-                  list_transform(range(0, nu),
-                                 j -> base || '/n/' || CAST(j AS VARCHAR)),
-                  chr(10))
-                ELSE base || '/e/0' || chr(10) || base || '/e/1'
-           END AS links,
-           CASE WHEN k % 2 = 0 THEN array_to_string(
-                  list_transform(range(0, nu),
-                                 j -> 'Item ' || CAST(j AS VARCHAR)
-                                      || ' & h' || ks),
-                  '|')
-                ELSE 'Entrée 0|Entrée 1'
-           END AS titles
-      FROM d
     """,
         # member name / byte size / method / md5 recomputed from the
         # table directly (entry 60) — lossless or the hashes break
@@ -4790,198 +2307,6 @@ def oracle_sql() -> dict[str, str]:
            md5(text) AS text_md5
       FROM d
     """,
-        # entry 63: CDXJ index — surt/ts14/url/status/digest/filename
-        # stated closed-form from the 5-family modular construction;
-        # range_ok TRUE means every published (offset,length) extent
-        # independently decoded to the digest-matching record
-        "cdx_index_documents": """
-    WITH d AS (
-      SELECT doc_id AS i, doc_id % 19 AS k, doc_id % 5 AS m,
-             doc_id % 64 AS b, doc_id % 60 AS s, doc_id % 3 AS st
-        FROM documents WHERE doc_id IS NOT NULL
-    )
-    SELECT CASE m
-             WHEN 0 THEN 'com,example,h' || k || ')/a/' || i || '?a=1&b=2'
-             WHEN 1 THEN 'com,example,h' || k || ')/' || i
-             WHEN 2 THEN 'com,example,h' || k || ',sub:8443)/p/' || i || '/'
-             WHEN 3 THEN 'com,example,h' || k || ')/'
-             ELSE 'com,example,h' || k || ')/x/' || i || '?z=9' END AS surt,
-           '202601010000' || lpad(CAST(s AS VARCHAR), 2, '0') AS ts14,
-           CASE m
-             WHEN 0 THEN 'https://WWW.h' || k || '.Example.COM/a/' || i
-                         || '?b=2&a=1'
-             WHEN 1 THEN 'http://h' || k || '.example.com:80/' || i
-             WHEN 2 THEN 'https://sub.h' || k || '.example.com:8443/p/'
-                         || i || '/'
-             WHEN 3 THEN 'https://h' || k || '.example.com'
-             ELSE 'https://h' || k || '.example.com/X/' || i || '?z=9'
-           END AS url,
-           'text/html' AS mime,
-           CAST(CASE st WHEN 0 THEN 200 WHEN 1 THEN 301 ELSE 404 END
-                AS VARCHAR) AS status,
-           'md5:' || md5('page ' || i || ' café') AS digest,
-           'part-' || lpad(CAST(b AS VARCHAR), 5, '0')
-             || CASE WHEN b % 2 = 0 THEN '.warc.gz' ELSE '.warc' END
-             AS filename,
-           TRUE AS range_ok
-      FROM d
-    """,
-        # entry 64: WAT sidecar round-trip — the entry-53 closed-form
-        # extraction expectations, plus the sidecar linkage fields
-        # (n_links = resolved count, refers_pad = zero-padded doc_id)
-        "wat_metadata_documents": """
-    WITH d AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS i,
-                      CAST(doc_id % 19 AS VARCHAR) AS k, doc_id % 4 AS m
-                 FROM documents WHERE doc_id IS NOT NULL)
-    SELECT doc_id,
-           CASE m WHEN 0 THEN 'Doc ' || i || ' & friends'
-                  WHEN 1 THEN 'spaced ' || i
-                  WHEN 2 THEN NULL
-                  ELSE 'T "' || i || '"' END AS title,
-           CASE m WHEN 0 THEN 'd' || i
-                  WHEN 1 THEN 'D ' || i ELSE NULL END AS description,
-           CASE m WHEN 2 THEN 'OGé' || i ELSE NULL END AS og_title,
-           CASE m WHEN 0 THEN 'https://h' || k || '.example.com/c/' || i
-                  WHEN 3 THEN 'https://h' || k || '.example.com/canon/' || i
-                  ELSE NULL END AS canonical,
-           CAST(CASE m WHEN 0 THEN 3 WHEN 1 THEN 1 WHEN 2 THEN 0 ELSE 1 END
-                AS INTEGER) AS n_links,
-           CASE m
-             WHEN 0 THEN 'https://h' || k || '.example.com/r/' || i
-                         || '|first ' || i || chr(10)
-                         || 'https://x' || k || '.org/p?a=1&b=2|x & y'
-                         || chr(10)
-                         || 'https://ads' || k || '.example.net/z|sponsored ' || i
-             WHEN 1 THEN 'https://cdn' || k || '.net/a|c d'
-             WHEN 2 THEN ''
-             ELSE 'https://h' || k || '.example.com/deep/' || i || '|z' || i
-           END AS links,
-           lpad(i, 12, '0') AS refers_pad
-      FROM d
-    """,
-        # entry 65: revisit resolution — full SQL replay of the
-        # dedup-originals (min url per shared digest group) + digest
-        # join; payload digests recomputed from the modular payloads
-        "revisit_resolution_documents": """
-    WITH d AS (SELECT doc_id AS i, CAST(doc_id % 19 AS VARCHAR) AS k,
-                      doc_id - doc_id % 4 AS g
-                 FROM documents WHERE doc_id IS NOT NULL),
-    u AS (SELECT i, g,
-                 'https://h' || k || '.example.com/o/' || CAST(i AS VARCHAR)
-                   AS url_a,
-                 'https://h' || k || '.example.com/r/' || CAST(i AS VARCHAR)
-                   AS url_b
-            FROM d),
-    o AS (SELECT g, min(url_a) AS original_url FROM u GROUP BY g)
-    SELECT u.i AS doc_id,
-           u.url_b AS revisit_url,
-           o.original_url,
-           md5('payload ' || CAST(u.g AS VARCHAR) || ' café') AS payload_md5,
-           TRUE AS profile_ok
-      FROM u JOIN o USING (g)
-    """,
-        # entry 66: boilerplate removal — expected block counts and the
-        # surviving content text stated closed-form per family (nav and
-        # footer are link-dense, the fragment is short, the content
-        # paragraphs clear both thresholds)
-        "boilerplate_documents": """
-    WITH d AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS i, doc_id % 4 AS m,
-                      CAST(doc_id % 7 AS VARCHAR) AS s
-                 FROM documents WHERE doc_id IS NOT NULL),
-    t AS (SELECT doc_id, m,
-                 'Real content ' || i
-                   || ' paragraph with plenty of characters café & friends.'
-                   AS c1,
-                 'Second paragraph ' || i
-                   || ' also long enough to be kept as content text café.'
-                   AS c2,
-                 'Long paragraph ' || i
-                   || ' mentioning one link inside sixty characters of text'
-                   || ' to stay content.' AS c3
-            FROM d)
-    SELECT doc_id,
-           CAST(CASE m WHEN 0 THEN 4 WHEN 1 THEN 2 WHEN 2 THEN 2 ELSE 2 END
-                AS INTEGER) AS n_blocks,
-           CAST(CASE m WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 0 ELSE 1 END
-                AS INTEGER) AS n_content,
-           CASE m WHEN 0 THEN c1
-                  WHEN 1 THEN c1 || ' ' || c2
-                  WHEN 2 THEN ''
-                  ELSE c3 END AS content_text
-      FROM t
-    """,
-        # entry 67: frontier scheduling — full SQL replay of the
-        # politeness window (row_number per host by url, crawl-delay
-        # arithmetic, per-cycle cap)
-        "frontier_schedule_documents": """
-    WITH d AS (SELECT doc_id AS i, doc_id % 23 AS k
-                 FROM documents WHERE doc_id IS NOT NULL),
-    u AS (SELECT i,
-                 'h' || CAST(k AS VARCHAR) || '.example.com' AS host,
-                 'https://h' || CAST(k AS VARCHAR) || '.example.com/f/'
-                   || CAST(i AS VARCHAR) AS url,
-                 1 + k % 5 AS delay
-            FROM d),
-    s AS (SELECT i, host, delay,
-                 ROW_NUMBER() OVER (PARTITION BY host ORDER BY url) - 1
-                   AS seq
-            FROM u)
-    SELECT i AS doc_id, host, CAST(seq AS INTEGER) AS seq,
-           CAST(seq * delay AS BIGINT) AS fetch_offset_s
-      FROM s WHERE seq < 15
-    """,
-        # entry 68: exact-substring dedup — group-min ownership and the
-        # shared-block removal stated closed-form (non-owners lose
-        # exactly the 10 covered words; single-doc groups untouched)
-        "substring_dedup_documents": """
-    WITH d AS (SELECT doc_id AS i, doc_id % 6 AS g
-                 FROM documents WHERE doc_id IS NOT NULL),
-    o AS (SELECT g, min(i) AS owner FROM d GROUP BY g),
-    t AS (SELECT i, owner,
-                 'u' || CAST(i AS VARCHAR) || ' alpha' || CAST(i AS VARCHAR)
-                   || ' bravo' || CAST(i AS VARCHAR) || ' charlie'
-                   || CAST(i AS VARCHAR) AS pre,
-                 'w1 w2 w3 w4 common' || CAST(g AS VARCHAR)
-                   || ' w5 w6 w7 w8 w9' AS mid,
-                 'tail' || CAST(i AS VARCHAR) || ' end' || CAST(i AS VARCHAR)
-                   AS suf
-            FROM d JOIN o USING (g))
-    SELECT i AS doc_id,
-           CASE WHEN i = owner THEN pre || ' ' || mid || ' ' || suf
-                ELSE pre || ' ' || suf END AS clean_text,
-           CAST(CASE WHEN i = owner THEN 0 ELSE 10 END AS INTEGER)
-             AS n_removed_words
-      FROM t
-    """,
-        # entry 69: domain balancing — registrable domains stated
-        # closed-form per family, the per-domain cap window replayed
-        "domain_balance_documents": """
-    WITH d AS (SELECT doc_id AS i, doc_id % 4 AS m, doc_id % 19 AS k,
-                      (doc_id * 37) % 100 AS score
-                 FROM documents WHERE doc_id IS NOT NULL),
-    t AS (SELECT i, score, CASE m
-            WHEN 0 THEN 'example' || CAST(k % 3 AS VARCHAR) || '.com'
-            WHEN 1 THEN 'a' || CAST(k AS VARCHAR) || '.co.uk'
-            WHEN 2 THEN 'b' || CAST(k AS VARCHAR) || '.github.io'
-            ELSE 'example' || CAST(k % 3 AS VARCHAR) || '.com' END AS domain
-          FROM d),
-    r AS (SELECT i, domain, score,
-                 ROW_NUMBER() OVER (PARTITION BY domain
-                                    ORDER BY score DESC, i ASC) AS rn
-            FROM t)
-    SELECT i AS doc_id, domain, CAST(score AS INTEGER) AS score
-      FROM r WHERE rn <= 20
-    """,
-        # entry 70: blocklist filter — hit counts closed-form (family 2
-        # has two badword2 occurrences, one case-folded, plus the
-        # doubled-space phrase; family 3's embedded words never match)
-        "blocklist_documents": """
-    SELECT doc_id,
-           CAST(CASE doc_id % 4 WHEN 1 THEN 1 WHEN 2 THEN 3 ELSE 0 END
-                AS INTEGER) AS n_hits,
-           doc_id % 4 IN (1, 2) AS blocked
-      FROM documents WHERE doc_id IS NOT NULL
-    """,
         # entry 72: crawl diff — canonical keys and verdicts stated
         # closed-form per family (m=3 exists only in crawl A, m=4 only
         # in crawl B, m in {1,2} change content, m=0 is identical)
@@ -4995,23 +2320,6 @@ def oracle_sql() -> dict[str, str]:
                            WHEN 3 THEN 'removed'
                            ELSE 'added' END AS change
       FROM documents WHERE doc_id IS NOT NULL
-    """,
-        # entry 73: sequence packing — per-shard exclusive prefix sum
-        # + chunk arithmetic, replayed with a running-sum window
-        "sequence_packing_documents": """
-    WITH d AS (SELECT doc_id, CAST(1 + doc_id % 7 AS INTEGER) AS n_tok,
-                      CAST(doc_id % 8 AS INTEGER) AS shard
-                 FROM documents WHERE doc_id IS NOT NULL),
-    s AS (SELECT doc_id, shard, n_tok,
-                 SUM(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
-                                  ROWS UNBOUNDED PRECEDING) - n_tok
-                   AS stream_offset
-            FROM d)
-    SELECT doc_id, shard, n_tok,
-           CAST(stream_offset AS BIGINT) AS stream_offset,
-           CAST(stream_offset // 16 AS BIGINT) AS seq_idx,
-           CAST(stream_offset % 16 AS INTEGER) AS seq_offset
-      FROM s
     """,
         # entry 74: JSONL round-trip — url/char/byte/md5 recomputed
         # from the construction (the text embeds a real newline,
@@ -5031,62 +2339,6 @@ def oracle_sql() -> dict[str, str]:
            md5(text) AS text_md5
       FROM d
     """,
-        # entry 75: soft-404 — verdicts closed-form: title markers
-        # (families 1, 4) and short-body markers (family 2) flag; the
-        # long-body marker (family 3) and clean pages do not
-        "soft404_documents": """
-    SELECT doc_id, doc_id % 5 IN (1, 2, 4) AS soft404
-      FROM documents WHERE doc_id IS NOT NULL
-    """,
-        # entry 77: stratified sampling — nibble predicate + per-stratum
-        # rates replayed (en 16 keeps all, de 8, fr 4, xx default 0)
-        "stratified_sample_documents": """
-    WITH d AS (SELECT doc_id,
-                      CASE doc_id % 4 WHEN 0 THEN 'en' WHEN 1 THEN 'de'
-                                      WHEN 2 THEN 'fr' ELSE 'xx' END AS lang,
-                      strpos('0123456789abcdef',
-                             substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1
-                        AS nib
-                 FROM documents WHERE doc_id IS NOT NULL)
-    SELECT doc_id, lang FROM d
-     WHERE nib < CASE lang WHEN 'en' THEN 16 WHEN 'de' THEN 8
-                           WHEN 'fr' THEN 4 ELSE 0 END
-    """,
-        # entry 79: exact quantile buckets — the two-pass cumulative
-        # replayed with a running-sum window over per-score counts
-        "quality_deciles_documents": """
-    WITH t AS (SELECT doc_id, CAST((doc_id * 37) % 100 AS INTEGER) AS score
-                 FROM documents WHERE doc_id IS NOT NULL),
-    c AS (SELECT score, COUNT(*) AS n FROM t GROUP BY score),
-    cum AS (SELECT score,
-                   COALESCE(SUM(n) OVER (ORDER BY score
-                                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                         AND 1 PRECEDING), 0) AS before,
-                   (SELECT SUM(n) FROM c) AS total
-              FROM c)
-    SELECT t.doc_id, t.score,
-           CAST(LEAST(9, cum.before * 10 // cum.total) AS INTEGER) AS decile
-      FROM t JOIN cum USING (score)
-    """,
-        # entry 80: crawl coverage — listing, intersection and ppm
-        # arithmetic replayed (crawled pages r past a host's listed
-        # range 0..2+k%3 exist and must not count)
-        "crawl_coverage_documents": """
-    WITH d AS (SELECT doc_id % 19 AS k, doc_id % 5 AS r
-                 FROM documents WHERE doc_id IS NOT NULL),
-    h AS (SELECT DISTINCT k FROM d),
-    listed AS (SELECT k, unnest(range(0, 3 + k % 3)) AS j FROM h),
-    crawled AS (SELECT DISTINCT k, r FROM d),
-    agg AS (SELECT l.k, COUNT(*) AS n_listed, COUNT(c.r) AS n_crawled
-              FROM listed l
-              LEFT JOIN crawled c ON c.k = l.k AND c.r = l.j
-             GROUP BY l.k)
-    SELECT 'h' || CAST(k AS VARCHAR) || '.example.com' AS host,
-           CAST(n_listed AS INTEGER) AS n_listed,
-           CAST(n_crawled AS INTEGER) AS n_crawled,
-           CAST(n_crawled * 1000000 // n_listed AS BIGINT) AS coverage_ppm
-      FROM agg
-    """,
         # entry 81: partitioned iceberg_lite with metadata pruning —
         # the engine read a days(warc_ts)-partitioned table through a
         # partition_filter AFTER the out-of-range files were deleted
@@ -5101,33 +2353,6 @@ def oracle_sql() -> dict[str, str]:
       FROM documents
      WHERE doc_id IS NOT NULL AND (doc_id % 7) BETWEEN 1 AND 3
      GROUP BY 1, 2
-    """,
-        # entry 82: the crawl-planning composition replayed — listing,
-        # the min-spelling pick after canonical-key dedup (page 0's
-        # upper-host variant sorts first), novelty (j < k%3 crawled),
-        # robots (even hosts disallow /q/3), the per-host ordered
-        # window, the Crawl-delay arithmetic and the cap of 4
-        "crawl_plan_documents": """
-    WITH h AS (SELECT DISTINCT doc_id % 19 AS k
-                 FROM documents WHERE doc_id IS NOT NULL),
-    u AS (SELECT k, j,
-                 CASE WHEN j = 0
-                      THEN 'HTTPS://H' || CAST(k AS VARCHAR)
-                           || '.EXAMPLE.COM:443/q/0?b=2&a=1'
-                      ELSE 'https://h' || CAST(k AS VARCHAR)
-                           || '.example.com/q/' || CAST(j AS VARCHAR)
-                           || '?b=2&a=1' END AS url
-            FROM h, unnest(range(0, 4 + k % 4)) AS t(j)),
-    f AS (SELECT k, url FROM u
-           WHERE j >= k % 3
-             AND NOT (k % 2 = 0 AND j = 3)),
-    w AS (SELECT k, url,
-                 ROW_NUMBER() OVER (PARTITION BY k ORDER BY url) - 1 AS seq
-            FROM f)
-    SELECT 'h' || CAST(k AS VARCHAR) || '.example.com' AS host, url,
-           CAST(seq AS INTEGER) AS seq,
-           CAST(seq * (1 + k % 4) AS BIGINT) AS fetch_offset_s
-      FROM w WHERE seq < 4
     """,
         # entry 83: the 64-case named-entity panel — the oracle states
         # every expected decoded string as a LITERAL (ground truth from

@@ -13,9 +13,8 @@ those semantics two ways:
   JSON documents (conformance parity with the reference's test suite).
 
 Plus ENGINE-NEW table-scope checks (column stats, uniqueness, referential
-integrity, distribution drift), dedup / similarity / text-analysis
-operators for training-data pipelines, checkpoint/resume manifests, and
-Structured Streaming validation.
+integrity, distribution drift), the WARC -> text ingestion path,
+checkpoint/resume manifests, and Structured Streaming validation.
 """
 
 from schema_fantasy_spark.errors import Err, render_error

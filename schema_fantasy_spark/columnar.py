@@ -47,13 +47,23 @@ from schema_fantasy_spark.compiler.regex_dialect import (
 )
 
 
-def _jrx(p: str) -> str:
+def _rx(p: str) -> Tuple[str, "re.Pattern"]:
     """Java-dialect pattern for ``rlike`` (JS spellings translated,
-    dialect-divergent constructs rejected — reference src/v4/pattern.js:18)."""
+    dialect-divergent constructs rejected — reference src/v4/pattern.js:18)
+    and the Python-dialect compiled pattern the kernel uses. Compiling the
+    Python form rejects, at schema-compile time, a pattern the kernel
+    rejects (say, a repeated group name) that would otherwise fail as a
+    task inside ``rlike``."""
+    rx = _prx(p)
     try:
-        return java_pattern(p)
+        return java_pattern(p), rx
     except RegexDialectError as e:
         raise SchemaCompileError(str(e)) from None
+
+
+def _jrx(p: str) -> str:
+    """The ``rlike`` half of :func:`_rx`."""
+    return _rx(p)[0]
 
 
 def _prx(p: str) -> "re.Pattern":
@@ -62,6 +72,8 @@ def _prx(p: str) -> "re.Pattern":
         return python_pattern(p)
     except RegexDialectError as e:
         raise SchemaCompileError(str(e)) from None
+    except re.error as e:
+        raise SchemaCompileError(f"bad regex {p!r}: {e}") from e
 
 ERRORS_DDL = ERRORS_SCHEMA.simpleString()
 
@@ -76,6 +88,7 @@ def _err_struct(
     message: Column,
     expected: Optional[Column] = None,
     actual: Optional[Column] = None,
+    depth: int = 0,
 ) -> Column:
     return F.struct(
         path.alias("path"),
@@ -83,7 +96,7 @@ def _err_struct(
         message.alias("message"),
         (expected if expected is not None else F.lit(None).cast("string")).alias("expected"),
         (actual if actual is not None else F.lit(None).cast("string")).alias("actual"),
-        F.lit(0).alias("depth"),
+        F.lit(depth).alias("depth"),
     )
 
 
@@ -132,6 +145,32 @@ def _compound(
     )
 
 
+def _with_null_rows(emit: Callable, rows: Sequence[tuple]) -> Callable:
+    """Attach the rows a JSON null yields under this keyword (see
+    :class:`ColumnarNode`); keywords without them pass a null."""
+    emit.null_rows = tuple(rows)
+    return emit
+
+
+def _bump_rows(rows: Sequence[tuple]) -> List[tuple]:
+    return [(kw, msg, exp, act, depth + 1) for kw, msg, exp, act, depth in rows]
+
+
+def _emit_json(sub: "ColumnarNode", value: Column, dtype: T.DataType, path: Column) -> Column:
+    """``sub`` over an array element or map value. There a NULL is a
+    JSON null that is present, not an absent property, so it yields
+    ``sub.null_rows`` (only ``type``, ``enum`` and the combinators over
+    them react to a null; every other keyword's type guard passes it)."""
+    nulls = [
+        _err_struct(path, kw, F.lit(msg), F.lit(exp).cast("string"),
+                    F.lit(act).cast("string"), depth)
+        for kw, msg, exp, act, depth in sub.null_rows
+    ]
+    return F.when(
+        value.isNull(), F.array(*nulls) if nulls else _empty_errors()
+    ).otherwise(sub.emit(value, dtype, path))
+
+
 # ----------------------------------------------------------- type utilities
 
 
@@ -175,12 +214,24 @@ def _is_numeric(dtype: T.DataType) -> bool:
 
 
 class ColumnarNode:
-    """Compiled subschema: emits an errors array for (value expr, path expr)."""
+    """Compiled subschema: emits an errors array for (value expr, path expr).
 
-    __slots__ = ("emit",)
+    ``emit`` reads a NULL value as an ABSENT property (a NULL struct field
+    or column), which every keyword passes. ``null_rows`` are the error
+    rows a JSON ``null`` yields instead — the reading of a NULL array
+    element or map value, see :func:`_emit_json`. They are static:
+    ``(keyword, message, expected, actual, depth)`` tuples, all at the
+    value's own path, because null has no children."""
 
-    def __init__(self, emit: Callable[[Column, T.DataType, Column], Column]):
+    __slots__ = ("emit", "null_rows")
+
+    def __init__(
+        self,
+        emit: Callable[[Column, T.DataType, Column], Column],
+        null_rows: Sequence[tuple] = (),
+    ):
         self.emit = emit
+        self.null_rows = tuple(null_rows)
 
 
 def compile_columnar(
@@ -222,10 +273,12 @@ def compile_columnar(
         in_progress.add(key)
         try:
             keyword_emitters: List[Callable[[Column, T.DataType, Column], Optional[Column]]] = []
+            null_rows: List[tuple] = []
             for kw in node:
                 e = _compile_keyword(kw, node[kw], node, cur_base, cur_doc, compile_node)
                 if e is not None:
                     keyword_emitters.append(e)
+                    null_rows += getattr(e, "null_rows", ())
         finally:
             in_progress.discard(key)
 
@@ -233,7 +286,7 @@ def compile_columnar(
             parts = [em(value, dtype, path) for em in keyword_emitters]
             return _concat_errors([p for p in parts if p is not None])
 
-        return ColumnarNode(emit)
+        return ColumnarNode(emit, null_rows)
 
     root = compile_node(base, schema, schema)
     return ColumnarPlan(root, schema)
@@ -328,10 +381,10 @@ def _compile_keyword(
     if kw == "properties":
         return _ck_properties({k: rec(s) for k, s in sch.items()}, sch)
     if kw == "patternProperties":
-        return _ck_pattern_properties([(_jrx(p), _prx(p), rec(s)) for p, s in sch.items()])
+        return _ck_pattern_properties([(*_rx(p), rec(s)) for p, s in sch.items()])
     if kw == "additionalProperties":
         props = node.get("properties") or {}
-        patterns = [(_jrx(p), _prx(p)) for p in (node.get("patternProperties") or {})]
+        patterns = [_rx(p) for p in (node.get("patternProperties") or {})]
         sub = rec(sch) if isinstance(sch, dict) else None
         return _ck_additional_properties(sch, sub, props, patterns)
     if kw == "items":
@@ -383,7 +436,8 @@ def _ck_type(sch: Any):
         )
         return _leaf(value.isNotNull(), err)
 
-    return emit
+    nulls = [] if "null" in tset else [("type", "Invalid type", expected, "null", 0)]
+    return _with_null_rows(emit, nulls)
 
 
 #: closed integral ranges per Spark type, for ANSI-safe literal coercion
@@ -549,7 +603,8 @@ def _ck_enum(sch: Any):
         err = _err_struct(path, "enum", F.lit(""), F.lit(expected), value.cast("string"))
         return _leaf(value.isNotNull() & ~ok, err)
 
-    return emit
+    nulls = [] if None in sch else [("enum", "", expected, "null", 0)]
+    return _with_null_rows(emit, nulls)
 
 
 def _ck_bound(sch: Any, excl: Any, is_min: bool):
@@ -660,11 +715,37 @@ def _ck_items_count(sch: Any, is_min: bool):
     return emit
 
 
+def _has_float(dtype: T.DataType) -> bool:
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return True
+    if isinstance(dtype, T.ArrayType):
+        return _has_float(dtype.elementType)
+    if isinstance(dtype, T.StructType):
+        return any(_has_float(f.dataType) for f in dtype.fields)
+    return False
+
+
+def _positive_zeros(col: Column, dtype: T.DataType) -> Column:
+    """Every float of the value with -0.0 rewritten to 0.0 (``x + 0.0``):
+    JSON deep equality, like the kernel's, holds -0.0 == 0.0, but
+    ``array_distinct`` keeps both."""
+    if not _has_float(dtype):
+        return col
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return col + F.lit(0.0).cast(dtype)
+    if isinstance(dtype, T.ArrayType):
+        return F.transform(col, lambda e: _positive_zeros(e, dtype.elementType))
+    inner = F.struct(
+        *[_positive_zeros(col[f.name], f.dataType).alias(f.name) for f in dtype.fields]
+    )
+    return F.when(col.isNotNull(), inner)
+
+
 def _ck_unique_items(sch: Any):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not isinstance(dtype, T.ArrayType) or sch is False:
             return _empty_errors()
-        ndup = F.size(value) - F.size(F.array_distinct(value))
+        ndup = F.size(value) - F.size(F.array_distinct(_positive_zeros(value, dtype)))
         msg = F.concat(
             F.lit("does not contain unique values: "),
             ndup.cast("string"),
@@ -737,14 +818,19 @@ def _ck_properties(subs: Dict[str, ColumnarNode], raw: dict):
                 child = sub.emit(
                     value[key], fields[key], F.concat(path, F.array(F.lit(key)))
                 )
-                parts.append(F.when(value.isNull(), _empty_errors()).otherwise(child))
+                # a NULL field is an absent property: no keyword runs (a
+                # compound like 'not' would otherwise fail on it)
+                parts.append(
+                    F.when(value.isNull() | value[key].isNull(), _empty_errors())
+                    .otherwise(child)
+                )
             return _concat_errors(parts)
         if isinstance(dtype, T.MapType):
             parts = []
             for key, sub in subs.items():
                 v = value.getItem(key)
-                child = sub.emit(
-                    v, dtype.valueType, F.concat(path, F.array(F.lit(key)))
+                child = _emit_json(
+                    sub, v, dtype.valueType, F.concat(path, F.array(F.lit(key)))
                 )
                 parts.append(
                     F.when(
@@ -781,8 +867,9 @@ def _ck_pattern_properties(subs: List[Tuple[str, "re.Pattern", ColumnarNode]]):
                 matched = F.map_filter(value, lambda k, _v: k.rlike(raw))
                 entry_errs = F.transform(
                     F.map_entries(matched),
-                    lambda e: sub.emit(
-                        e["value"], dtype.valueType, F.concat(path, F.array(e["key"]))
+                    lambda e: _emit_json(
+                        sub, e["value"], dtype.valueType,
+                        F.concat(path, F.array(e["key"])),
                     ),
                 )
                 parts.append(
@@ -876,8 +963,8 @@ def _ck_additional_properties(
             # schema form over map values
             child_arrays = F.transform(
                 addkeys,
-                lambda k: sub.emit(
-                    value.getItem(k), dtype.valueType, F.concat(path, F.array(k))
+                lambda k: _emit_json(
+                    sub, value[k], dtype.valueType, F.concat(path, F.array(k))
                 ),
             )
             children = F.flatten(child_arrays)
@@ -906,8 +993,8 @@ def _ck_items_homogeneous(sub: ColumnarNode):
             return _empty_errors()
         per_element = F.transform(
             value,
-            lambda x, i: sub.emit(
-                x, dtype.elementType, F.concat(path, F.array(i.cast("string")))
+            lambda x, i: _emit_json(
+                sub, x, dtype.elementType, F.concat(path, F.array(i.cast("string")))
             ),
         )
         return F.when(value.isNull(), _empty_errors()).otherwise(F.flatten(per_element))
@@ -923,7 +1010,7 @@ def _ck_items_tuple(subs: List[ColumnarNode], add_sch: Any, add_node: Optional[C
         parts = []
         for i, sub in enumerate(subs):
             elem = F.element_at(value, i + 1)
-            child = sub.emit(elem, et, F.concat(path, F.array(F.lit(str(i)))))
+            child = _emit_json(sub, elem, et, F.concat(path, F.array(F.lit(str(i)))))
             parts.append(
                 F.when(value.isNull() | (F.size(value) <= i), _empty_errors()).otherwise(
                     child
@@ -949,8 +1036,9 @@ def _ck_items_tuple(subs: List[ColumnarNode], add_sch: Any, add_node: Optional[C
                 F.flatten(
                     F.transform(
                         F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
-                        lambda x, i: add_node.emit(
-                            x, et, F.concat(path, F.array((i + k).cast("string")))
+                        lambda x, i: _emit_json(
+                            add_node, x, et,
+                            F.concat(path, F.array((i + k).cast("string"))),
                         ),
                     )
                 ),
@@ -963,20 +1051,25 @@ def _ck_items_tuple(subs: List[ColumnarNode], add_sch: Any, add_node: Optional[C
 
 def _ck_dependencies(deps: List[Tuple[str, Any, Optional[ColumnarNode]]]):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if not isinstance(dtype, T.StructType):
+        if isinstance(dtype, T.StructType):
+            fields = {f.name for f in dtype.fields}
+
+            def has(name: str) -> Column:
+                # a NULL field is an absent property
+                return value[name].isNotNull() if name in fields else F.lit(False)
+        elif isinstance(dtype, T.MapType):
+
+            def has(name: str) -> Column:
+                return F.map_contains_key(value, name)
+        else:
             return _empty_errors()
-        fields = {f.name for f in dtype.fields}
         parts = []
         for key, dep, sub in deps:
-            if key not in fields:
-                continue
-            present = value.isNotNull() & value[key].isNotNull()
+            present = value.isNotNull() & has(key)
             if isinstance(dep, list):
                 missing_entries = []
                 for d in dep:
-                    d_missing = (
-                        F.lit(True) if d not in fields else value[d].isNull()
-                    )
+                    d_missing = ~has(d)
                     missing_entries.append(
                         F.when(
                             d_missing,
@@ -1018,7 +1111,9 @@ def _ck_all_of(subs: List[ColumnarNode]):
             F.size(children) > 0, path, "allOf", F.lit("Not all conditions valid"), children
         )
 
-    return emit
+    children = [r for s in subs for r in s.null_rows]
+    nulls = [("allOf", "Not all conditions valid", None, None, 0)] if children else []
+    return _with_null_rows(emit, nulls + _bump_rows(children))
 
 
 def _ck_any_of(subs: List[ColumnarNode]):
@@ -1035,7 +1130,11 @@ def _ck_any_of(subs: List[ColumnarNode]):
             n_fail == len(subs), path, "anyOf", F.lit("No conditions valid"), children
         )
 
-    return emit
+    nulls = []
+    if subs and all(s.null_rows for s in subs):
+        nulls = [("anyOf", "No conditions valid", None, None, 0)]
+        nulls += _bump_rows([r for s in subs for r in s.null_rows])
+    return _with_null_rows(emit, nulls)
 
 
 def _ck_one_of(subs: List[ColumnarNode]):
@@ -1055,7 +1154,14 @@ def _ck_one_of(subs: List[ColumnarNode]):
         )
         return F.concat(none_valid, too_many)
 
-    return emit
+    n_ok = sum(not s.null_rows for s in subs)
+    nulls = []
+    if n_ok == 0:
+        nulls = [("oneOf", "No conditions valid", None, None, 0)]
+        nulls += _bump_rows([r for s in subs for r in s.null_rows])
+    if n_ok > 1:
+        nulls.append(("oneOf", "More than one condition valid", None, None, 0))
+    return _with_null_rows(emit, nulls)
 
 
 def _ck_not(sub: ColumnarNode):
@@ -1065,7 +1171,8 @@ def _ck_not(sub: ColumnarNode):
             F.size(child) == 0, _err_struct(path, "not", F.lit("condition valid"))
         )
 
-    return emit
+    nulls = [] if sub.null_rows else [("not", "condition valid", None, None, 0)]
+    return _with_null_rows(emit, nulls)
 
 
 def _human_list_col(last: str, arr: Column) -> Column:

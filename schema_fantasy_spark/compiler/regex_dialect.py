@@ -26,8 +26,18 @@ Deliberate divergence kept strict-only: ``\\c`` without a control letter
 data character inside them — translating both contexts faithfully buys
 nothing for real schemas, so it raises in both modes).
 
-Anything in the shared core passes through byte-for-byte, so existing
-Java/Python-targeted schemas are unaffected.
+The constructs whose meaning differs between the three dialects are
+spelled out as the reference's RegExp reads them, for both targets:
+``\\s``/``\\S`` as JS's whitespace class (U+00A0, U+FEFF, the Zs spaces
+and the line terminators; Python's Unicode ``\\s`` adds U+001C-U+001F and
+U+0085, java.util.regex's is ASCII), ``.`` as "not a line terminator"
+(``\\n``, ``\\r``, U+2028, U+2029), ``$`` as end of input (Python and Java
+also match before a final newline), ``\\v`` as U+000B (Java's ``\\v`` is a
+class) and ``\\b``/``\\B`` as ASCII word boundaries (JDK 17's ``\\b`` treats
+every Unicode letter as a word character, Python's ``\\B`` never matches an
+empty string). ``\\d`` and ``\\w`` are ASCII in JS and java.util.regex;
+:func:`python_pattern` compiles with ``re.ASCII`` to match. Everything else in the shared core passes
+through byte-for-byte.
 """
 
 from __future__ import annotations
@@ -39,16 +49,48 @@ _HEX4 = re.compile(r"[0-9a-fA-F]{4}\Z")
 _QUANT = re.compile(r"\{\d+(?:,\d*)?\}")
 #: non-capturing and lookaround group openers: (?: (?= (?! (?<= (?<!
 _GROUP_PREFIX = re.compile(r"\(\?(?:[:=!]|<[=!])")
+#: JS WhiteSpace + LineTerminator, the members of \s (ECMA-262 22.2.2.9)
+_JS_SPACE = (
+    r"\t\n\x0B\f\r\x20\u00a0\u1680\u2000-\u200a"
+    r"\u2028\u2029\u202f\u205f\u3000\ufeff"
+)
+#: JS '.': anything but a LineTerminator
+_JS_DOT = r"[^\n\r\u2028\u2029]"
+#: JS '$' without the m flag: end of input only
+_END = {"python": r"\Z", "java": r"\z"}
+#: \b / \B over the ASCII \w, spelled with lookarounds (JDK 17's own \b
+#: treats every Unicode letter as a word character, its \w does not;
+#: Python's \B never matches an empty string)
+_ASCII_BOUNDARY = {
+    "b": r"(?:(?<=\w)(?!\w)|(?<!\w)(?=\w))",
+    "B": r"(?:(?<=\w)(?=\w)|(?<!\w)(?!\w))",
+}
 
 
 class RegexDialectError(ValueError):
     """A pattern uses a construct with dialect-dependent semantics."""
 
 
+def _fold_nonspace(body: str, neg: bool) -> str:
+    """A class holding ``\\S``, with ``body`` its other members. Python has
+    no class nested in a class, so spell ``[X\\S]`` as ``(?:[X]|[^ws])`` and
+    ``[^X\\S]`` as ``(?:(?![X])[ws])``."""
+    if body.startswith("^"):
+        body = "\\" + body
+    if not body:
+        return ("[" if neg else "[^") + _JS_SPACE + "]"
+    if neg:
+        return "(?:(?![" + body + "])[" + _JS_SPACE + "])"
+    return "(?:[" + body + "]|[^" + _JS_SPACE + "])"
+
+
 def _translate(pattern: str, target: str, strict: bool = False) -> str:
     out = []
     i, n = 0, len(pattern)
     in_class = False
+    # where the open class starts in ``out``, whether it is negated and
+    # whether it holds \S
+    cls_start, cls_neg, cls_nonspace = 0, False, False
     # does the previous token form a quantifiable atom? A VALID-form
     # braced quantifier with nothing to repeat ('{2}' at pattern start
     # or after '|'/'(') is an Annex-B InvalidBracedQuantifier — the
@@ -138,7 +180,25 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 i += 2
                 prev_atom = True
                 continue
-            out.append(pattern[i : i + 2])
+            if nxt in "sS":
+                if not in_class:
+                    out.append(("[" if nxt == "s" else "[^") + _JS_SPACE + "]")
+                elif nxt == "s":
+                    out.append(_JS_SPACE)
+                else:
+                    cls_nonspace = True  # folded in when the class closes
+                i += 2
+                prev_atom = True
+                continue
+            if nxt == "v":
+                out.append("\\x0B")
+                i += 2
+                prev_atom = True
+                continue
+            if nxt in "bB" and not in_class:
+                out.append(_ASCII_BOUNDARY[nxt])
+            else:
+                out.append(pattern[i : i + 2])
             i += 2
             prev_atom = nxt not in "bB"  # word-boundary assertions
             continue
@@ -165,9 +225,16 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             continue
         if ch == "[" and not in_class:
             in_class = True
+            cls_start, cls_nonspace = len(out), False
+            cls_neg = pattern[i + 1 : i + 2] == "^"
         elif ch == "]" and in_class:
             in_class = False
             prev_atom = True
+            if cls_nonspace:
+                body = "".join(out[cls_start + 1 + cls_neg :])
+                out[cls_start:] = [_fold_nonspace(body, cls_neg)]
+                i += 1
+                continue
         elif ch in "{}" and not in_class:
             # Annex-B ExtendedPatternCharacter: a brace that does not form
             # a valid quantifier is a LITERAL in the reference's flagless
@@ -197,6 +264,10 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             # assertions and '*'/'+'/'?' quantifiers, not atoms; every
             # other pattern character is itself an atom
             prev_atom = ch not in "(|^$*+?"
+            if ch in ".$":
+                out.append(_JS_DOT if ch == "." else _END[target])
+                i += 1
+                continue
         out.append(ch)
         i += 1
     return "".join(out)
@@ -211,5 +282,7 @@ def java_pattern(pattern: str, strict: bool = False) -> str:
 
 def python_pattern(pattern: str, strict: bool = False) -> "re.Pattern":
     """Compiled Python ``re`` pattern with JS spellings translated (same
-    ``strict`` contract as :func:`java_pattern`)."""
-    return re.compile(_translate(pattern, "python", strict=strict))
+    ``strict`` contract as :func:`java_pattern`). ``re.ASCII`` gives
+    ``\\d``/``\\w`` the ASCII classes of the reference's RegExp;
+    Python's defaults are Unicode, so ``\\d`` would match ``'٣'``."""
+    return re.compile(_translate(pattern, "python", strict=strict), re.ASCII)

@@ -315,8 +315,9 @@ def transcode(
     # evaluated the page-length regex twice — then compose
     # charset/source from the barriered fields (cheap CASEs). The
     # replace-existing-columns contract is preserved by dropping first.
-    from schema_fantasy_spark.ops.dedup import _barrier
+    from schema_fantasy_spark.ops import _assert_staging_free, _barrier
 
+    _assert_staging_free(df, "_cs_raw")
     d = _detect_parts(b, F.col(declared_col) if declared_col else None)
     staged = df.drop(*[c for c in ("charset", "source") if c in df.columns])
     staged = _barrier(

@@ -188,9 +188,8 @@ _HEX_RE = r"^#[xX](0*[0-9A-Fa-f]{1,6});"
 
 def _decode_body_sql(var: str = "s") -> str:
     """The decoder as a SQL expression string over ``var`` — identical
-    semantics to :func:`_decode_entities_columns`; wrapped into the
-    scalar + array TEMPORARY FUNCTIONs by :func:`_ensure_decode_fn`,
-    once per session.
+    semantics to :func:`_decode_entities_columns`; wrapped into a
+    TEMPORARY FUNCTION by :func:`_ensure_decode_fn`, once per session.
 
     Why SQL and not Column building: every pyspark ``F.*`` call is a
     py4j round trip, and the decoder tree is ~1,000 nodes — building
@@ -267,23 +266,12 @@ array_join(transform(
 """
 
 
-_FN_ARR = "sfs_decode_entities_arr"
-
-
 def _ensure_decode_fn(spark) -> None:
-    """Register the scalar + array SQL decoders once per session (the
-    array form exists because SQL-function inlining cannot scope a
-    lambda-variable ARGUMENT — so callers that decode inside HOF
-    lambdas restructure to decode whole arrays at the top level)."""
+    """Register the SQL decoder once per session."""
     if not spark.catalog.functionExists(_FN):
-        body = _decode_body_sql("s")
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {_FN}(s STRING) "
-            f"RETURNS STRING RETURN {body}"
-        )
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {_FN_ARR}(a ARRAY<STRING>) "
-            f"RETURNS ARRAY<STRING> RETURN transform(a, s -> {body})"
+            f"RETURNS STRING RETURN {_decode_body_sql('s')}"
         )
 
 
@@ -325,21 +313,6 @@ def decode_entities(s: Column) -> Column:
         _ensure_decode_fn(spark)
         return F.call_function(_FN, s)
     return _decode_entities_columns(s)
-
-
-def decode_entities_array(a: Column) -> Column:
-    """Element-wise :func:`decode_entities` over an ``array<string>``
-    (NULL elements pass through as NULL). This is how HOF-heavy parsers
-    (sitemaps, feeds, outlinks) reach the fast SQL decoder: extract the
-    RAW strings inside their lambdas, then decode the whole array at
-    the top level in one call."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is not None and not _contains_lambda_var(a):
-        _ensure_decode_fn(spark)
-        return F.call_function(_FN_ARR, a)
-    return F.transform(a, _decode_entities_columns)
 
 
 def _decode_entities_columns(s: Column) -> Column:

@@ -1,7 +1,7 @@
 """HTML metadata + outlink extraction — the structured side of the crawl
 page: ``<title>``, ``<meta name=...>`` / Open Graph ``<meta property=...>``
 descriptions, the ``<link rel=canonical>`` target, and the outlink set
-(href + anchor text), which feeds the host link graph (ops/linkgraph.py).
+(href + anchor text).
 
 Like ops/html.extract_text this is pure Column work — regexp extraction
 chains inside whole-stage codegen, no Python, no shuffle: at 10^12 pages

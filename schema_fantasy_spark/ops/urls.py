@@ -123,94 +123,3 @@ def with_canonical_url(
 ) -> DataFrame:
     """Append the canonical-url column (the dedup/uniqueness key)."""
     return df.withColumn(out_col, canonicalize_url(F.col(url_col)))
-
-
-def surt_key(url: Column) -> Column:
-    """SURT (Sort-friendly URI Reordering Transform) index key of an
-    absolute http(s) URL — the key scheme of web-archive CDX indexes
-    (``com,example)/path?a=1``): all of one registered domain's pages
-    sort contiguously, so a range scan over a sorted index answers
-    host-/domain-prefix queries without a shuffle.
-
-    Contract (deterministic; the IA-canonicalizer conventions):
-
-    * scheme dropped; userinfo dropped; host lowercased;
-    * one leading ``www`` label (``www.``, ``www2.`` ...) stripped;
-    * host labels reversed and joined with ``,``; a non-default port
-      (!= 80 http / 443 https) survives as ``:port`` after the labels;
-    * ``)`` then the path (empty -> ``/``) and the ``?``-joined query
-      with parameters sorted, both lowercased; fragment dropped;
-    * non-http(s) or hostless input -> NULL (no index key exists).
-
-    Pure Column expressions (codegen, no Python). Compose after
-    :func:`canonicalize_url` when percent-escape/dot-segment
-    normalization should fold into the key."""
-    u = F.trim(url)
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    is_http = scheme.isin("http", "https")
-    rest = F.regexp_replace(u, r"^[A-Za-z][A-Za-z0-9+.-]*://", "")
-    authority = F.regexp_extract(rest, r"^([^/?#]*)", 1)
-    tail = F.substring(rest, F.length(authority) + 1, F.lit(1 << 30))
-    hostport = F.lower(F.regexp_replace(authority, r"^.*@", ""))
-    host = F.regexp_replace(hostport, r":\d*$", "")
-    port = F.regexp_extract(hostport, r":(\d+)$", 1)
-    port = (
-        F.when((scheme == "http") & (port == "80"), F.lit(""))
-        .when((scheme == "https") & (port == "443"), F.lit(""))
-        .otherwise(port)
-    )
-    host = F.regexp_replace(host, r"^www\d*\.", "")
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ",")
-    no_frag = F.regexp_replace(tail, r"#.*$", "")
-    path = F.lower(F.regexp_extract(no_frag, r"^([^?]*)", 1))
-    query = F.lower(F.regexp_extract(no_frag, r"^[^?]*\?(.*)$", 1))
-    sorted_q = F.array_join(F.array_sort(F.split(query, "&")), "&")
-    key = F.concat(
-        rev,
-        F.when(port == "", F.lit("")).otherwise(F.concat(F.lit(":"), port)),
-        F.lit(")"),
-        F.when(path == "", F.lit("/")).otherwise(path),
-        F.when(sorted_q == "", F.lit("")).otherwise(
-            F.concat(F.lit("?"), sorted_q)
-        ),
-    )
-    return F.when(is_http & (host != ""), key)
-
-
-#: default public-suffix subset for registered_domain — multi-label
-#: suffixes MUST sort before their parents (regex alternation is
-#: ordered); swap in the full publicsuffix.org list at deployment (it
-#: is data, not mechanism — the column logic is identical)
-_PUBLIC_SUFFIXES = (
-    "co.uk", "org.uk", "ac.uk", "gov.uk", "com.au", "net.au", "org.au",
-    "co.jp", "ne.jp", "or.jp", "com.br", "com.cn", "github.io",
-    "blogspot.com", "com", "org", "net", "edu", "gov", "mil", "int",
-    "io", "uk", "au", "jp", "br", "cn", "de", "fr", "info", "biz",
-)
-
-
-def registered_domain(host: Column, suffixes=None) -> Column:
-    """The registrable domain (eTLD+1) of a hostname — the key for
-    domain-level dedup, ranking and corpus balancing (host-level keys
-    overcount: ``a.blogspot.com`` and ``b.blogspot.com`` are different
-    REGISTRANTS, while ``www.x.com`` / ``cdn.x.com`` are one).
-
-    One ``regexp_extract`` over an ordered suffix alternation
-    (longest/multi-label alternatives first, so ``x.co.uk`` yields
-    ``x.co.uk``, not ``co.uk``): pure codegen, no Python, no lookup
-    join. A host that IS a public suffix (or matches none) yields
-    NULL. ``suffixes`` swaps in the full publicsuffix.org list."""
-    import re as _re
-
-    alts = "|".join(
-        _re.escape(s)
-        for s in sorted(suffixes or _PUBLIC_SUFFIXES,
-                        key=lambda s: (-s.count("."), s))
-    )
-    h = F.lower(host)
-    got = F.regexp_extract(h, r"([^.]+\.(?:" + alts + r"))$", 1)
-    # a host that IS a listed suffix must not register: the leftmost
-    # regex start would otherwise split it over a SHORTER suffix
-    # ('co.uk' -> label 'co' + suffix 'uk')
-    is_bare = h.rlike(r"^(?:" + alts + r")$")
-    return F.when(is_bare, F.lit(None)).otherwise(F.nullif(got, F.lit("")))

@@ -147,116 +147,3 @@ def deterministic_sample(
     else:
         nib = F.pmod(F.xxhash64(F.col(id_col)), F.lit(16))
     return df.filter(nib < rate_sixteenths)
-
-
-def balance_by_domain(
-    df: DataFrame,
-    domain_col: str,
-    id_col: str = "doc_id",
-    score_col: Optional[str] = None,
-    cap: int = 1000,
-) -> DataFrame:
-    """Cap each domain's share of the corpus (the C4/mC4 convention —
-    without it a handful of mega-domains dominate the training mix):
-    keep at most ``cap`` rows per ``domain_col``, the best first —
-    ordered by (``score_col`` DESC, ``id_col`` ASC), or by id alone —
-    so the selection is deterministic under any partitioning.
-
-    Pair with ``ops.urls.registered_domain`` for the key: host-level
-    capping overcounts (every ``*.blogspot.com`` subdomain is a
-    different registrant) and undercounts (``www.``/``cdn.`` variants
-    of one site each get their own budget).
-
-    100 TB shape: ONE domain-keyed window shuffle. The heaviest domain
-    defines the largest partition; the cap bounds what SURVIVES, not
-    the partition itself — for a pathological domain holding a double-
-    digit share of the corpus, pre-filter with a salted count and
-    sample before windowing."""
-    from pyspark.sql import Window
-
-    order = (
-        [F.col(score_col).desc(), F.col(id_col).asc()]
-        if score_col
-        else [F.col(id_col).asc()]
-    )
-    w = Window.partitionBy(domain_col).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .drop("_rn")
-    )
-
-
-def stratified_sample(
-    df: DataFrame,
-    id_col: str,
-    stratum_col: str,
-    rates_sixteenths: dict[str, int],
-    default_sixteenths: int = 0,
-) -> DataFrame:
-    """Per-stratum deterministic sampling — the training-MIX primitive
-    (`deterministic_sample` with a rate per language/source/quality
-    bucket): keep a row iff the first md5 nibble of its id is below its
-    STRATUM's rate (n/16). Same reproducibility contract as the global
-    sampler (identical rows on any engine/partitioning/run), so two
-    teams materializing "50% en, 25% de, everything else out" get the
-    byte-same corpus. Unlisted strata (and NULL) use
-    ``default_sixteenths``.
-
-    Scale shape: a pure filter over a small literal CASE — pushes into
-    the scan, no shuffle, no join against a rates table."""
-    for k, v in rates_sixteenths.items():
-        if not 0 <= v <= 16:
-            raise ValueError(f"rate for {k!r} must be in [0, 16]")
-    if not 0 <= default_sixteenths <= 16:
-        raise ValueError("default_sixteenths must be in [0, 16]")
-    nib = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 1), 16, 10
-    ).cast("int")
-    rate = F.lit(default_sixteenths)
-    for k, v in sorted(rates_sixteenths.items()):
-        rate = F.when(F.col(stratum_col) == k, F.lit(v)).otherwise(rate)
-    return df.filter(nib < rate)
-
-
-def exact_quantile_buckets(
-    df: DataFrame,
-    score_col: str,
-    n_buckets: int = 10,
-    out_col: str = "bucket",
-    max_distinct: int = 100_000,
-) -> DataFrame:
-    """EXACT global quantile buckets (deciles by default) without a
-    global sort: the corpus-analytics primitive behind "train on the
-    top quality decile".
-
-    Two passes, both scale-clean: (1) aggregate per-score counts — the
-    contract is a BOUNDED score domain (this repo quantizes scores to
-    millionths), asserted against ``max_distinct`` — and build the
-    cumulative table driver-side; (2) broadcast-join the (score ->
-    bucket) table back. Deliberately a broadcast JOIN, not a literal
-    map: a 10^5-entry ``create_map`` would inline a multi-MB
-    expression tree into the plan (the ops/lm.py lesson).
-
-    Bucket rule, deterministic and tie-stable (equal scores share a
-    bucket): ``min(n_buckets-1, rows_before(score) * n_buckets //
-    total)`` — integer arithmetic, replayable as a SQL running-sum
-    window. NULL scores keep a NULL bucket."""
-    counts = df.groupBy(score_col).count().collect()
-    rows = sorted((r[0], r[1]) for r in counts if r[0] is not None)
-    if len(rows) > max_distinct:
-        raise ValueError(
-            f"{len(rows)} distinct scores > max_distinct={max_distinct}: "
-            "quantize the score first (the bounded-domain contract)"
-        )
-    total = sum(n for _, n in rows) or 1
-    mapping, before = [], 0
-    for s, n in rows:
-        mapping.append((s, min(n_buckets - 1, before * n_buckets // total)))
-        before += n
-    spark = df.sparkSession
-    stype = df.schema[score_col].dataType.simpleString()
-    mdf = spark.createDataFrame(
-        mapping, f"{score_col} {stype}, {out_col} int"
-    )
-    return df.join(F.broadcast(mdf), score_col, "left")

@@ -61,8 +61,7 @@ def build_revisit(
     mechanism — a re-fetch whose payload was byte-identical to an
     earlier capture stores no body, only ``WARC-Payload-Digest`` (the
     resolution key), ``WARC-Refers-To`` and the identical-payload
-    profile. Resolution back to the stored payload is
-    ``ops.dedup.resolve_revisits``."""
+    profile."""
     return build_record(
         url,
         date,
@@ -134,27 +133,6 @@ def build_warc(records: List[bytes], compress: bool = True) -> bytes:
     if not compress:
         return b"".join(records)
     return b"".join(gzip.compress(r) for r in records)
-
-
-def build_warc_indexed(records: List[bytes], compress: bool = True):
-    """``(archive_bytes, [(offset, length), ...])`` — one index entry per
-    record, offsets/lengths over the archive AS STORED (compressed
-    member extents when ``compress``), i.e. exactly the (offset, length)
-    a CDX index publishes so a fetcher can range-request ONE record out
-    of a multi-GB archive without reading the rest (the Common Crawl
-    access pattern). ``archive[off:off+len]`` is always independently
-    decodable: a whole gzip member, or a whole plain record."""
-    chunks: List[bytes] = []
-    index: List[tuple] = []
-    off = 0
-    for r in records:
-        # mtime pinned: byte-identical archives for identical records,
-        # so the published (offset, length, digest) index is reproducible
-        stored = gzip.compress(r, mtime=0) if compress else r
-        chunks.append(stored)
-        index.append((off, len(stored)))
-        off += len(stored)
-    return b"".join(chunks), index
 
 
 # --------------------------------------------------------------- parsing

@@ -111,7 +111,7 @@ def stateful_dedup_stream(
     """Cross-micro-batch exact deduplication with keyed state
     (``applyInPandasWithState``): the first row per key passes, every later
     occurrence — in this or any later micro-batch — is dropped. The
-    streaming analogue of ops.dedup.distinct_by_content.
+    streaming analogue of a batch distinct-by-content-digest.
 
     State per key is one boolean ("seen"), so state size is O(distinct
     keys); pass ``timeout_hours`` to expire state for keys not seen in that

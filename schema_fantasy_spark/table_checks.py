@@ -144,9 +144,10 @@ def column_profile_exact(
       ``pos = p*(N-1)`` — verified bit-equal against the builtin on
       randomized inputs (tests/test_scale.py::test_column_profile_exact).
 
-    The count table is persisted for the three passes and unpersisted
-    before returning (bounded lifecycle); the returned frame is a
-    literal of k rows, so downstream consumers pay nothing. Only sound
+    The count table is persisted for the three passes, the range layout
+    checkpointed, and both released before returning (bounded
+    lifecycle); the returned frame is a literal of k rows, so downstream
+    consumers pay nothing. Only sound
     for EXACT profiling of columns whose distinct-value count table is
     shuffle-able — i.e. strictly more scalable than the builtin, whose
     final task holds the same table in one heap."""
@@ -172,23 +173,28 @@ def column_profile_exact(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .persist()
     )
+    ranked = None
     try:
         nparts = max(spark.sparkContext.defaultParallelism, 1)
-        # persisted: the range exchange samples boundaries per JOB (and
-        # AQE may coalesce it), so the subtotal pass and the rank-lookup
-        # pass must read the SAME materialized partition layout — the
-        # cache freezes it; both are unpersisted in the finally below
+        # checkpointed: the range exchange samples boundaries per JOB
+        # (and AQE may coalesce it), so the subtotal pass and the
+        # rank-lookup pass must read the SAME materialized partition
+        # layout. An eager localCheckpoint freezes it (trap 21); a bare
+        # persist would not survive a lost cached partition, whose
+        # recompute could resample boundaries and silently shift ranks.
+        # A lost checkpoint block fails the job instead
         ranked = (
             cnts.filter(
                 F.col("value").isNotNull() & F.col("cid").isin(pct_cids)
             )
             .repartitionByRange(nparts, "cid", "value")
-            .persist()
+            .localCheckpoint()
         )
         # the subtotal pass and the stats pass are independent reads of
-        # the persisted count table: overlap them (guide §2.6 — actions
-        # are only sequential because driver code calls them
-        # sequentially), which hides one small-job latency per profile
+        # the checkpointed ranks and the persisted count table: overlap
+        # them (guide §2.6 — actions are only sequential because driver
+        # code calls them sequentially), which hides one small-job
+        # latency per profile
         from concurrent.futures import ThreadPoolExecutor
 
         def _part_rows():
@@ -281,10 +287,10 @@ def column_profile_exact(
         ).collect()
         val_at = {(r["cid"], r["rank"]): r["value"] for r in found}
     finally:
-        try:
-            ranked.unpersist()
-        except NameError:
-            pass
+        if ranked is not None:
+            # no public API drops a local checkpoint's blocks before the
+            # driver garbage-collects its RDD; unpersist that RDD here
+            ranked._jdf.queryExecution().logical().rdd().unpersist(False)
         cnts.unpersist()
     rows = []
     by_cid = {r["cid"]: r for r in stats}

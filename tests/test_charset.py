@@ -193,3 +193,15 @@ def test_transcode_passes_input_columns_through(spark):
     )
     r = transcode(df, id_col="url").collect()[0]
     assert (r["url"], r["n"], r["text"]) == ("u1", 7, "hi é")
+
+
+def test_transcode_rejects_staging_name_collision(spark):
+    """An input frame that already carries the internal ``_cs_raw``
+    staging column fails up front with an error naming it, instead of an
+    ambiguous reference deep in the detection plan."""
+    df = spark.createDataFrame(
+        [(1, bytearray(b"hi"), "mine")],
+        "doc_id: long, html: binary, _cs_raw: string",
+    )
+    with pytest.raises(ValueError, match="_cs_raw"):
+        transcode(df)

@@ -3,6 +3,8 @@ DataFrames, cross-checked for row-level equivalence against the pure-Python
 kernel (the two modes must agree on (path, keyword) multisets)."""
 
 import json
+import random
+import unicodedata
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
@@ -10,6 +12,7 @@ from pyspark.sql import Row, functions as F, types as T
 from schema_fantasy_spark.columnar import compile_columnar
 from schema_fantasy_spark.compiler.plan import SchemaCompileError, compile_schema
 from schema_fantasy_spark.engine import ValidationEngine
+from schema_fantasy_spark.errors import errs_to_rows
 
 TYPED_SCHEMA = T.StructType([
     T.StructField("rid", T.LongType()),
@@ -89,43 +92,351 @@ def _mk_rows(n_rows=840):
     return rows
 
 
-def _row_to_json_value(row: dict):
+def _to_json(v):
     """Struct NULL field ≡ absent property (dropped); a MAP entry with a
     NULL value is PRESENT with JSON null (maps have real key sets)."""
-    def conv(v):
-        if isinstance(v, Row):
-            return {k: conv(x) for k, x in v.asDict().items() if x is not None}
-        if isinstance(v, dict):  # MapType: keep null-valued entries
-            return {k: conv(x) for k, x in v.items()}
-        if isinstance(v, list):
-            return [conv(x) for x in v]
-        return v
-
-    return {k: conv(v) for k, v in row.items() if v is not None}
+    if isinstance(v, Row):
+        return {k: _to_json(x) for k, x in v.asDict().items() if x is not None}
+    if isinstance(v, dict):  # MapType: keep null-valued entries
+        return {k: _to_json(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_to_json(x) for x in v]
+    return v
 
 
-def test_columnar_matches_python_kernel(spark):
-    df = spark.createDataFrame(_mk_rows(), TYPED_SCHEMA)
-    plan = compile_columnar(FULL_SCHEMA)
-    got = {
-        r["rid"]: sorted(("/".join(e["path"]), e["keyword"], e["depth"]) for e in r["errors"])
-        for r in plan.apply(df).select("rid", "errors").collect()
+def _row_to_json_value(row: dict):
+    return {k: _to_json(v) for k, v in row.items() if v is not None}
+
+
+# ---- cross-mode differential: seeded typed-struct schemas per keyword
+#
+# Each case draws a typed table and a draft-4 schema that exercises one
+# keyword (or $ref / combinator nesting) from a seeded generator, then
+# compares every row's FULL error list — path, keyword, message,
+# expected, actual and depth — between the columnar plan and the Python
+# kernel run on the row's JSON reading (NULL struct field = absent
+# property; NULL array element or map value = JSON null). Values are
+# JSON-representable (no NaN / ±Infinity: the typed table is a
+# projection of JSON documents).
+#
+# Two documented divergences shape the comparison:
+# * min/maxLength: the default columnar plan counts raw code points, the
+#   kernel NFC code points (test_nfc_lengths_option). The two length
+#   cases run with nfc_lengths=True over strings that include a
+#   decomposed sequence; every other case NFC-normalizes its strings,
+#   because nfc_lengths cannot run inside array items (a Python UDF may
+#   not appear in a higher-order function).
+# * enum's ``actual`` renders the value with Spark's string cast, the
+#   kernel as compact JSON ('[1, 2]' vs '[1,2]', '1.0E20' vs '1e+20'),
+#   so enum rows compare without ``actual``.
+
+_LONG, _DOUBLE, _STR, _BOOL = T.LongType(), T.DoubleType(), T.StringType(), T.BooleanType()
+_XY = T.StructType([T.StructField("x", _LONG), T.StructField("y", _STR)])
+_ARR = T.ArrayType
+_MAP = lambda vt: T.MapType(_STR, vt)  # noqa: E731
+
+_LONGS = [-7, -1, 0, 1, 2, 3, 5, 6, 9, 10, 12, 21, 50, 100, 2 ** 53 + 1, -(2 ** 53) - 3]
+_DOUBLES = [-2.5, -0.0, 0.0, 0.25, 0.5, 1.0, 1.5, 3.0, 9.75, 10.0, 100.0, 100.25,
+            0.1, 0.3, 1e-9, 1e20, 2.0 ** 53]
+_STRINGS = ["", "a", "ab", "abc", "abcd", "zq", "Zz9", "hello", "p{L}", "uu",
+            "x{y}", "\u00e9", "e\u0301", "\u65e5\u672c", "\U0001F600x", "a\nb",
+            "ab\n", "b\r", "\u0663" "4", "a_b", " ", "\u00a0", "\x00z", "\u00e9z",
+            "k1", "kx", "a\u2028", "\ufeff"]
+_KEYS = ["k1", "k2", "ka", "x", "y", "zz", "other"]
+_SCALARS = [_LONG, _DOUBLE, _STR, _BOOL]
+_ANY = _SCALARS + [_ARR(_LONG), _ARR(_DOUBLE), _ARR(_STR), _XY, _MAP(_STR),
+                   _MAP(_LONG), _ARR(_ARR(_LONG)), _ARR(_XY)]
+
+
+def _value(rng, dt, null_rate=0.12):
+    if rng.random() < null_rate:
+        return None
+    if isinstance(dt, T.LongType):
+        return rng.choice(_LONGS)
+    if isinstance(dt, T.DoubleType):
+        return rng.choice(_DOUBLES)
+    if isinstance(dt, T.StringType):
+        if rng.random() < 0.7:
+            return rng.choice(_STRINGS)
+        return "".join(rng.choice("abzAZ09_ {}é\n") for _ in range(rng.randint(0, 6)))
+    if isinstance(dt, T.BooleanType):
+        return rng.random() < 0.5
+    if isinstance(dt, T.ArrayType):
+        # elements drawn from a 3-value pool, so duplicates occur
+        pool = [_value(rng, dt.elementType, 0.08) for _ in range(3)]
+        return [rng.choice(pool) for _ in range(rng.choice([0, 1, 2, 2, 3, 4, 5]))]
+    if isinstance(dt, T.MapType):
+        return {k: _value(rng, dt.valueType, 0.1)
+                for k in rng.sample(_KEYS, rng.randint(0, 4))}
+    return Row(**{f.name: _value(rng, f.dataType, 0.25) for f in dt.fields})
+
+
+def _nfc(v):
+    if isinstance(v, str):
+        return unicodedata.normalize("NFC", v)
+    if isinstance(v, Row):
+        return Row(**{k: _nfc(x) for k, x in v.asDict().items()})
+    if isinstance(v, dict):
+        return {_nfc(k): _nfc(x) for k, x in v.items()}
+    if isinstance(v, list):
+        return [_nfc(x) for x in v]
+    return v
+
+
+def _pattern(rng):
+    """A JS-dialect pattern: Annex-B identity escapes (\\p, \\u), control
+    and NUL escapes, named groups and literal braces go through
+    regex_dialect on both sides (java_pattern / python_pattern)."""
+    atoms = ["a", "b", "z", "[a-c]", "[^a]", "\\d", "\\w", "\\s", ".", "\\.",
+             "\\p{L}", "\\u0061", "\\cJ", "\\0", "x{y}", "{", "}", "é",
+             "[0-9]", "(?:ab)", "(?<g>a)", "\\n", "\\bz", "\\D", "\\W", "\\S",
+             "[a\\S]", "\\B", "\\v"]
+    quants = ["", "", "", "*", "+", "?", "{2}", "{1,2}", "{0,}"]
+    parts = ["^"] if rng.random() < 0.4 else []
+    parts += [rng.choice(atoms) + rng.choice(quants) for _ in range(rng.randint(1, 3))]
+    if rng.random() < 0.3:
+        parts.insert(rng.randint(0, len(parts)), "|")
+    return "".join(parts) + ("$" if rng.random() < 0.4 else "")
+
+
+def _bound(rng, kw, values):
+    s = {kw: rng.choice(values)}
+    if rng.random() < 0.6:
+        s["exclusive" + kw[0].upper() + kw[1:]] = rng.random() < 0.5
+    return s
+
+
+#: keyword -> fn(rng, dtype) -> schema fragment applying it
+_LEAF = {
+    "type": lambda r, dt: {"type": (lambda t: t[0] if len(t) == 1 else t)(r.sample(
+        ["null", "boolean", "integer", "number", "string", "array", "object"], r.randint(1, 3)))},
+    "enum": lambda r, dt: {"enum": [_to_json(_value(r, dt, 0.1)) for _ in range(r.randint(1, 3))]
+                           + [r.choice([None, True, 0, 1.0, 3, 2.5, "a", "1", [1, 2], {"x": 1}])
+                              for _ in range(r.randint(0, 2))]},
+    "minimum": lambda r, dt: _bound(r, "minimum", [-1, 0, 0.5, 1, 3, 9.75, 10, 2 ** 53]),
+    "maximum": lambda r, dt: _bound(r, "maximum", [-1, 0, 0.5, 1, 3, 9.75, 100, 2 ** 53]),
+    "multipleOf": lambda r, dt: {"multipleOf": r.choice([1, 2, 3, 7, 0.5, 0.25, 0.1, 1.5])},
+    "minLength": lambda r, dt: {"minLength": r.randint(0, 4)},
+    "maxLength": lambda r, dt: {"maxLength": r.randint(0, 4)},
+    "pattern": lambda r, dt: {"pattern": _pattern(r)},
+    "minItems": lambda r, dt: {"minItems": r.randint(0, 4)},
+    "maxItems": lambda r, dt: {"maxItems": r.randint(0, 4)},
+    "uniqueItems": lambda r, dt: {"uniqueItems": r.random() < 0.8},
+    "minProperties": lambda r, dt: {"minProperties": r.randint(0, 3)},
+    "maxProperties": lambda r, dt: {"maxProperties": r.randint(0, 3)},
+    "required": lambda r, dt: {"required": r.sample(["x", "y", "k1", "k2", "nope"], r.randint(1, 3))},
+}
+
+
+def _leaf(rng, dt):
+    out = {}
+    for kw in rng.sample(sorted(_LEAF), rng.randint(1, 2)):
+        out.update(_LEAF[kw](rng, dt))
+    return out
+
+
+def _sub(rng, dt, depth):
+    """A sub-schema for values of ``dt``: leaf keywords, a combinator, or
+    a structural keyword one level down."""
+    if depth <= 0 or rng.random() < 0.45:
+        return _leaf(rng, dt)
+    kind = rng.choice(["allOf", "anyOf", "oneOf", "not", "down"])
+    if kind == "not":
+        return {"not": _sub(rng, dt, depth - 1)}
+    if kind != "down":
+        return {kind: [_sub(rng, dt, depth - 1) for _ in range(rng.randint(1, 3))]}
+    if isinstance(dt, T.ArrayType):
+        return {"items": _sub(rng, dt.elementType, depth - 1)}
+    if isinstance(dt, T.StructType):
+        return {"properties": {f.name: _sub(rng, f.dataType, depth - 1)
+                               for f in dt.fields if rng.random() < 0.8}}
+    if isinstance(dt, T.MapType):
+        return {"properties": {k: _sub(rng, dt.valueType, depth - 1) for k in rng.sample(_KEYS, 2)}}
+    return _leaf(rng, dt)
+
+
+def _one_field(*types):
+    """Case: the keyword applies to property ``v`` of one of ``types``
+    (types it does not apply to check its type guard)."""
+    def make(rng, kw):
+        dt = rng.choice(types)
+        return [("v", dt)], {"properties": {"v": _LEAF[kw](rng, dt)}}
+    return make
+
+
+def _object_fields(rng):
+    pool = [("x", _LONG), ("y", _STR), ("k1", _DOUBLE), ("k2", _ARR(_LONG)), ("zz", _BOOL)]
+    return rng.sample(pool, rng.randint(2, 5))
+
+
+def _object_case(rng, kw):
+    """Case: an object keyword at the row struct, or on a map column."""
+    if rng.random() < 0.35:
+        vt = rng.choice([_STR, _LONG])
+        if kw == "properties":
+            s = {kw: {k: _sub(rng, vt, 1) for k in rng.sample(_KEYS, 3)}}
+        elif kw == "patternProperties":
+            s = {kw: {p: _leaf(rng, vt) for p in rng.sample(["^k", "z$", "\\d", "."], 2)}}
+        elif kw == "additionalProperties":
+            s = {"properties": {"k1": {}}, "patternProperties": {"^z": {}},
+                 kw: rng.choice([False, True, _leaf(rng, vt)])}
+        elif kw == "dependencies":
+            s = {kw: {k: rng.sample(_KEYS, rng.randint(1, 2)) if rng.random() < 0.5
+                      else {"required": [rng.choice(_KEYS)], "minProperties": 3}
+                      for k in rng.sample(_KEYS, 2)}}
+        else:
+            s = _LEAF[kw](rng, vt)
+        return [("v", _MAP(vt))], {"properties": {"v": s}}
+    fields = _object_fields(rng)
+    names = [n for n, _ in fields]
+    if kw == "properties":
+        s = {kw: {n: _sub(rng, dt, 1) for n, dt in fields if rng.random() < 0.8}}
+        s[kw]["absent"] = _leaf(rng, _STR)
+    elif kw == "patternProperties":
+        s = {kw: {p: _leaf(rng, rng.choice(fields)[1])
+                  for p in rng.sample(["^k", "^x", "z$", "1", "^(x|y)$", "."], 2)}}
+    elif kw == "additionalProperties":
+        s = {"properties": {n: {} for n in rng.sample(names + ["other"], 2)}}
+        if rng.random() < 0.4:
+            s["patternProperties"] = {rng.choice(["^k", "z$", "^y"]): {}}
+        s[kw] = rng.choice([False, True, _leaf(rng, rng.choice(fields)[1])])
+    elif kw == "dependencies":
+        s = {kw: {n: rng.sample(names + ["nope"], rng.randint(1, 2)) if rng.random() < 0.5
+                  else {"required": [rng.choice(names + ["nope"])],
+                        "properties": {fields[0][0]: _leaf(rng, fields[0][1])}}
+                  for n in rng.sample(names + ["nope"], 2)}}
+    else:
+        s = _LEAF[kw](rng, None)
+    return fields, s
+
+
+def _combinator_case(rng, kw):
+    fields = _object_fields(rng)
+    st = T.StructType([T.StructField(n, dt) for n, dt in fields])
+    if kw == "not":
+        return fields, {"not": _sub(rng, st, 2)}
+    return fields, {kw: [_sub(rng, st, 2) for _ in range(rng.randint(1, 3))]}
+
+
+def _items_case(rng, kw):
+    dt = rng.choice([_ARR(_LONG), _ARR(_DOUBLE), _ARR(_STR), _ARR(_XY), _ARR(_ARR(_LONG))])
+    if kw == "items":
+        return [("v", dt)], {"properties": {"v": {"items": _sub(rng, dt.elementType, 1)}}}
+    et = dt.elementType
+    s = {"items": [_leaf(rng, et) for _ in range(rng.randint(0, 3))],
+         "additionalItems": rng.choice([False, True, _leaf(rng, et)])}
+    return [("v", dt)], {"properties": {"v": s}}
+
+
+def _ref_case(rng, kw):
+    if kw == "$ref":
+        fields = _object_fields(rng)
+        st = T.StructType([T.StructField(n, dt) for n, dt in fields])
+        defs = {n + "_d": _sub(rng, dt, 1) for n, dt in fields if rng.random() < 0.7}
+        defs["whole"] = _sub(rng, st, 1)
+        return fields, {"definitions": defs,
+                        "properties": {d[:-2]: {"$ref": f"#/definitions/{d}"}
+                                       for d in defs if d != "whole"},
+                        "allOf": [{"$ref": "#/definitions/whole"}]}
+    # a $ref chain under items, reached through anyOf
+    dt = rng.choice([_ARR(_LONG), _ARR(_STR), _ARR(_XY)])
+    return [("v", dt)], {
+        "definitions": {"a": {"$ref": "#/definitions/b"},
+                        "b": _sub(rng, dt.elementType, 1),
+                        "arr": {"items": {"$ref": "#/definitions/a"}}},
+        "properties": {"v": {"anyOf": [{"$ref": "#/definitions/arr"}, {"maxItems": 1}]}},
     }
-    kernel = compile_schema(FULL_SCHEMA)
+
+
+def _nested_case(rng, kw):
+    o = T.StructType([T.StructField("x", _LONG), T.StructField("y", _STR),
+                      T.StructField("a", _ARR(_XY))])
+    fields = [("o", o), ("m", _MAP(_LONG))]
+    return fields, _sub(rng, T.StructType([T.StructField(n, dt) for n, dt in fields]), 4)
+
+
+_DIFF_CASES = {
+    "type": _one_field(*_ANY),
+    "enum": _one_field(*_ANY),
+    "minimum": _one_field(_LONG, _DOUBLE, _STR),
+    "maximum": _one_field(_LONG, _DOUBLE, _BOOL),
+    "multipleOf": _one_field(_LONG, _DOUBLE),
+    "minLength": _one_field(_STR, _LONG),
+    "maxLength": _one_field(_STR, _ARR(_STR)),
+    "pattern": _one_field(_STR, _STR, _LONG),
+    "items": _items_case,
+    "additionalItems": _items_case,
+    "minItems": _one_field(_ARR(_LONG), _ARR(_STR), _STR),
+    "maxItems": _one_field(_ARR(_LONG), _ARR(_XY)),
+    "uniqueItems": _one_field(_ARR(_LONG), _ARR(_DOUBLE), _ARR(_STR), _ARR(_XY),
+                              _ARR(_ARR(_LONG)), _MAP(_STR)),
+    "required": _object_case,
+    "properties": _object_case,
+    "patternProperties": _object_case,
+    "additionalProperties": _object_case,
+    "minProperties": _object_case,
+    "maxProperties": _object_case,
+    "dependencies": _object_case,
+    "allOf": _combinator_case,
+    "anyOf": _combinator_case,
+    "oneOf": _combinator_case,
+    "not": _combinator_case,
+    "$ref": _ref_case,
+    "$ref-chain": _ref_case,
+    "nested": _nested_case,
+}
+_NFC_CASES = {"minLength", "maxLength"}
+
+
+def _diff_case(name: str, seed: int, n_rows: int = 48):
+    rng = random.Random(f"{name}/{seed}")
+    fields, schema = _DIFF_CASES[name](rng, name)
+    st = T.StructType([T.StructField("rid", _LONG)]
+                      + [T.StructField(n, dt) for n, dt in fields])
+    rows = [(rid, *[_value(rng, dt) for _, dt in fields]) for rid in range(n_rows)]
+    if name not in _NFC_CASES:
+        rows = [_nfc(list(r)) for r in rows]
+    return st, schema, rows
+
+
+def _error_key(e):
+    actual = None if e["keyword"] == "enum" else e["actual"]
+    return (tuple(e["path"]), e["keyword"], e["message"], e["expected"], actual, e["depth"])
+
+
+@pytest.mark.parametrize(
+    "name,seed",
+    [("full", 0)] + [(n, s) for n in _DIFF_CASES for s in range(5)],
+)
+def test_columnar_matches_python_kernel(spark, name, seed):
+    """The columnar plan and the Python kernel return the same error rows
+    on every row: the hand-built 23-keyword FULL_SCHEMA table, and seeded
+    generated cases per keyword and for $ref / combinator nesting."""
+    if name == "full":
+        st, schema, rows = TYPED_SCHEMA, FULL_SCHEMA, _mk_rows()
+    else:
+        st, schema, rows = _diff_case(name, seed)
+    try:
+        kernel = compile_schema(schema)
+    except SchemaCompileError:
+        # a pattern the reference's RegExp rejects: both modes must refuse
+        with pytest.raises(SchemaCompileError):
+            compile_columnar(schema)
+        return
+    plan = compile_columnar(schema, nfc_lengths=name in _NFC_CASES)
+    df = spark.createDataFrame(rows, st)
     mismatches = []
-    for raw in df.collect():
-        d = raw.asDict(recursive=False)
-        rid = d.pop("rid")
-        value = _row_to_json_value(d)
-        value["rid"] = rid
-        want = sorted(
-            ("/".join(str(p) for p in e.vpath), e.keyword, depth)
-            for err in kernel.validate(value)
-            for e, depth in [(x, dp) for x, dp in err.flatten()]
-        )
-        if got[rid] != want:
-            mismatches.append((rid, value, got[rid], want))
-    assert not mismatches, f"{len(mismatches)} rows disagree; first: {mismatches[0]}"
+    # the kernel reads each row as Spark returns it: map entries keep
+    # Spark's order, which error messages listing keys follow
+    for r in plan.apply(df).collect():
+        value = _row_to_json_value({n: r[n] for n in st.names})
+        got = sorted(_error_key(e) for e in r["errors"])
+        want = sorted(_error_key(e) for e in errs_to_rows(kernel.validate(value)))
+        if got != want:
+            mismatches.append((value, got, want))
+    assert not mismatches, (
+        f"{len(mismatches)} rows disagree under {schema!r}; first: {mismatches[0]}"
+    )
 
 
 def test_pattern_properties_map_nonstring_values(spark):

@@ -1,14 +1,13 @@
-"""Pipeline-operator tests: dedup (exact/MinHash/SimHash/Jaccard),
-similarity (brute force vs LSH recall), text analysis, url and validation.
-LSH paths are asserted against brute-force ground truth computed in the
-same session."""
+"""Tests of the kept text-path operators and sampling: marker-word
+language ID, URL canonicalization, deterministic sampling, and the
+non-JSON-constant quarantine shared by dynamic and variant mode."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from schema_fantasy_spark.ops import dedup, similarity as sim, text as tx
+from schema_fantasy_spark.ops import text as tx
 
-# deterministic corpus: clusters of near-duplicates + unrelated docs
+# deterministic corpus: English variants, de/fr/es docs, empty and short text
 BASE = ("the quick brown fox jumps over the lazy dog while the cat sleeps "
         "near the warm fire and the birds sing in the tall green trees")
 DOCS = [
@@ -34,190 +33,6 @@ def docs(spark):
     return spark.createDataFrame(DOCS, "doc_id: long, text: string").cache()
 
 
-def test_exact_duplicates(docs):
-    groups = dedup.exact_duplicates(docs).collect()
-    assert len(groups) == 1
-    assert groups[0]["n_copies"] == 2 and groups[0]["ids"] == [0, 1]
-    kept = dedup.distinct_by_content(docs).select("doc_id").collect()
-    assert sorted(r["doc_id"] for r in kept) == [0, 2, 3, 4, 5, 6, 7, 8, 9]
-
-
-def test_minhash_near_duplicates(docs):
-    pairs = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in dedup.minhash_near_duplicates(docs, threshold=0.3).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
-    assert (0, 2) in pairs and 0.5 < pairs[(0, 2)] < 1.0
-    assert (0, 3) in pairs
-    # unrelated docs never pair with the cluster
-    assert not any(4 in p or 5 in p for p in pairs)
-
-
-@pytest.mark.parametrize("method", ["xxhash64", "md5"])
-def test_minhash_lanes_are_independent(docs, method):
-    """Every signature lane must use a distinct seed/prefix. Guards the
-    F.transform two-parameter-lambda trap: (s, i) lambdas receive the
-    ARRAY INDEX as i, collapsing all lanes to one hash (hit in round 2)."""
-    sh = dedup._barrier(
-        docs.filter("doc_id = 0").select("doc_id", "text"),
-        dedup.shingles_col(F.col("text"), 3),
-        "_sh",
-    )
-    sig = sh.select(
-        dedup.minhash_signature(F.col("_sh"), 8, 42, method).alias("sig")
-    ).collect()[0]["sig"]
-    assert len(set(sig)) > 4, f"lanes collapsed: {sig}"
-
-
-def test_minhash_md5_method_matches_xxhash_semantics(docs):
-    """The oracle-comparable md5 pipeline verifies with the same exact
-    Jaccard stage, so any pair both candidate paths surface must carry an
-    identical score; with rows_per_band=2 the md5 parameters have HIGHER
-    recall at mid Jaccard, so xxhash's verified pairs are a subset."""
-    xx = {(r["id_a"], r["id_b"]): r["jaccard"]
-          for r in dedup.minhash_near_duplicates(docs, threshold=0.3).collect()}
-    md = {(r["id_a"], r["id_b"]): r["jaccard"]
-          for r in dedup.minhash_near_duplicates(
-              docs, threshold=0.3, num_hashes=16, bands=8, method="md5").collect()}
-    assert set(xx) <= set(md)
-    assert all(md[k] == v for k, v in xx.items())
-    assert {k for k, j in md.items() if j >= 0.8} <= set(xx)  # high-j recall
-
-
-def test_simhash_md5_method(docs):
-    """60-bit md5-prefix simhash: identical docs collide; hamming is
-    consistent with the signature definition."""
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in dedup.simhash_near_duplicates(
-                 docs, max_hamming=8, method="md5").collect()}
-    assert pairs[(0, 1)] == 0  # identical text -> identical fingerprint
-    assert all(h <= 8 for h in pairs.values())
-
-
-def test_minhash_candidates_superset_of_high_jaccard(docs):
-    """LSH recall: pairs with true Jaccard >= 0.8 are candidates with
-    P(miss) = (1 - 0.8^4)^16 ~ 2e-4 — and the fixed seed makes this corpus
-    deterministic, so the assertion is stable. (At s=0.5 misses are
-    expected by design: ~35% per pair.)"""
-    cands = {(r["id_a"], r["id_b"])
-             for r in dedup.minhash_lsh_candidates(docs).collect()}
-    ids = docs.select("doc_id")
-    allp = (ids.withColumnRenamed("doc_id", "id_a")
-            .crossJoin(ids.select(F.col("doc_id").alias("id_b")))
-            .filter("id_a < id_b"))
-    truth = {(r["id_a"], r["id_b"])
-             for r in dedup.jaccard_pairs(docs, allp, threshold=0.8).collect()}
-    assert truth and truth <= cands
-
-
-def test_simhash_near_duplicates(docs):
-    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in dedup.simhash_near_duplicates(docs, max_hamming=8).collect()}
-    assert pairs[(0, 1)] == 0  # identical text -> identical fingerprint
-    # 16-bit chunk banding guarantees recall only for hamming <= 3;
-    # this corpus deterministically yields (0,3) at distance 3
-    assert (0, 3) in pairs and pairs[(0, 3)] <= 3
-    assert not any(4 in p for p in pairs)  # unrelated doc never pairs
-
-
-def test_simhash_is_deterministic(docs):
-    a = docs.select(dedup.simhash64(F.col("text")).alias("s")).collect()
-    b = docs.select(dedup.simhash64(F.col("text")).alias("s")).collect()
-    assert [r["s"] for r in a] == [r["s"] for r in b]
-    assert all(r["s"] >= 0 for r in a)  # 63-bit positive
-
-
-# ------------------------------------------------------------- similarity
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").cache()
-
-
-def test_cosine_topk_matches_numpy(emb):
-    import numpy as np
-
-    rows = emb.collect()
-    q = np.array(rows[0]["embedding"], dtype=np.float64)
-    mat = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows[1:]}
-    sims = {
-        i: round(float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q))), 5)
-        for i, v in mat.items()
-    }
-    want = sorted(sims.items(), key=lambda kv: (-kv[1], kv[0]))[:5]
-    got = [
-        (r["vec_id"], r["cosine_sim"])
-        for r in sim.cosine_topk(
-            emb.filter(F.col("vec_id") != rows[0]["vec_id"]), rows[0]["embedding"], 5
-        ).collect()
-    ]
-    assert got == want
-
-
-def test_ann_lsh_recall(emb):
-    rows = emb.limit(1).collect()
-    q = rows[0]["embedding"]
-    rest = emb.filter(F.col("vec_id") != rows[0]["vec_id"])
-    exact = [r["vec_id"] for r in sim.cosine_topk(rest, q, 10).collect()]
-    approx = [r["vec_id"] for r in sim.ann_lsh_topk(rest, q, 10, bands=8, n_planes=16).collect()]
-    # 8 bands of 2 bits: candidates = anything agreeing on one 2-bit band;
-    # recall of exact top-10 should be high
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.7, (exact, approx)
-
-
-def test_near_duplicates_by_embedding(spark):
-    base = [0.5, -0.25, 1.0, 0.125] * 16
-    close = list(base)
-    close[0] += 0.01
-    far = [-x for x in base]
-    df = spark.createDataFrame(
-        [(0, base), (1, close), (2, far)], "vec_id: long, embedding: array<float>"
-    )
-    pairs = {(r["id_a"], r["id_b"]): r["cosine_sim"]
-             for r in sim.near_duplicates_by_embedding(df, threshold=0.9).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] > 0.999
-    assert not any(2 in p for p in pairs)
-
-
-def test_near_dup_embedding_degenerate_bucket_capped(spark):
-    # 1k identical vectors collapse to ONE RP-LSH signature: without the
-    # bucket cap the band join is quadratic (~500k pairs); with the
-    # minhash-style cap (64 members) the degenerate buckets are dropped
-    # entirely and the pair count is bounded
-    base = [0.5, -0.25, 1.0, 0.125] * 16
-    rows = [(i, base) for i in range(1000)]
-    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    pairs = sim.near_duplicates_by_embedding(df, threshold=0.9).collect()
-    assert len(pairs) == 0  # every bucket is over-cap -> suppressed
-    # a smaller same-signature clique under the cap still pairs fully
-    small = spark.createDataFrame(rows[:10], "vec_id: long, embedding: array<float>")
-    got = sim.near_duplicates_by_embedding(small, threshold=0.9).count()
-    assert got == 45  # C(10,2)
-
-
-# ------------------------------------------------------------------- text
-
-
-def test_token_counts(spark):
-    df = spark.createDataFrame([("hello world, foo!",)], "text: string")
-    r = df.select(
-        tx.token_count(F.col("text")).alias("n"),
-        tx.bpeish_token_count(F.col("text")).alias("b"),
-    ).collect()[0]
-    assert r["n"] == 3
-    # hell+o + worl+d + , + foo + ! = 7 BPE-ish pieces
-    assert r["b"] == 7
-
-
-def test_quality_score_ordering(docs):
-    scores = {r["doc_id"]: r["quality_score"]
-              for r in tx.quality_score(docs).collect()}
-    assert scores[8] == 0.0  # empty text
-    assert scores[4] > scores[9]  # long diverse text beats 2-token text
-    assert all(0.0 <= s <= 1.0 for s in scores.values())
-
-
 def test_lang_id(docs):
     pred = {r["doc_id"]: r["lang_pred"] for r in tx.lang_id(docs).collect()}
     assert pred[0] == "en" and pred[4] == "en"
@@ -225,230 +40,6 @@ def test_lang_id(docs):
     assert pred[6] == "fr"
     assert pred[7] == "es"
     assert pred[8] == "und"
-
-
-def test_fingerprint_stability(docs):
-    fp = {r["doc_id"]: r["fingerprint"] for r in tx.fingerprint(docs).collect()}
-    assert fp[0] == fp[1]  # identical docs -> identical fingerprint
-    # min-hash over 8-gram shingles survives a single word substitution
-    assert fp[0] == fp[2] or fp[0] == fp[3] or fp[2] == fp[3] or True
-    assert fp[0] != fp[4]
-
-
-def test_ivf_topk_recall(emb):
-    """IVF index + probe: recall of the exact top-10 with 4/16 lists
-    probed must be high on clustered-ish data; probing ALL lists must
-    reproduce the exact top-k exactly."""
-    rows = emb.limit(1).collect()
-    q = rows[0]["embedding"]
-    rest = emb.filter(F.col("vec_id") != rows[0]["vec_id"])
-    assigned, centroids = sim.ivf_index(rest, n_lists=8, seed=42)
-    assigned = assigned.cache()
-    exact = [r["vec_id"] for r in sim.cosine_topk(rest, q, 10).collect()]
-    # full probe == exact
-    full = [r["vec_id"] for r in sim.ivf_topk(assigned, centroids, q, 10, n_probe=8).collect()]
-    assert full == exact
-    # partial probe: reasonable recall
-    approx = [r["vec_id"] for r in sim.ivf_topk(assigned, centroids, q, 10, n_probe=3).collect()]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.5, (exact, approx)
-    # every vector landed in exactly one list
-    assert assigned.count() == rest.count()
-    assert assigned.filter(F.col("list_id").isNull()).count() == 0
-
-
-def test_ivf_index_exact_reproducible(emb):
-    """The integer-exact IVF training mode is REPRODUCIBLE: the same
-    assignment bits regardless of input partitioning (the resumable
-    10^12-vector-build claim), full probe still equals the exact top-k,
-    and the centroids are integral (exact in array<double> storage)."""
-    rows = emb.limit(1).collect()
-    q = rows[0]["embedding"]
-    rest = emb.filter(F.col("vec_id") != rows[0]["vec_id"])
-    a1, c1 = sim.ivf_index_exact(rest, n_lists=8, max_iter=5,
-                                 assign_partitions=32)
-    a2, c2 = sim.ivf_index_exact(rest.repartition(7), n_lists=8, max_iter=5,
-                                 assign_partitions=3)
-    assert c1 == c2
-    assert all(x == int(x) for c in c1 for x in c)
-    m1 = {r["vec_id"]: r["list_id"] for r in a1.collect()}
-    m2 = {r["vec_id"]: r["list_id"] for r in a2.collect()}
-    assert m1 == m2
-    # full probe == exact brute force (centroid quality unaffected)
-    exact = [r["vec_id"] for r in sim.cosine_topk(rest, q, 10).collect()]
-    full = [r["vec_id"] for r in
-            sim.ivf_topk(a1, c1, q, 10, n_probe=8, exact_scale=1 << 20).collect()]
-    assert full == exact
-
-
-def test_repetition_metrics_hand_computed(spark):
-    """Gopher-style rules on hand-computable fixtures."""
-    df = spark.createDataFrame(
-        [
-            (0, "a b " * 30),             # "a b a b ...": top bigram dominates
-            (1, " ".join(f"w{i}" for i in range(30))),  # all distinct
-            (2, "1 2 3 4 5 6 7 8 9 10 11 12 13 14 15 16 17 18 19 20"),  # no alpha
-            (3, "short text"),            # below min_words
-        ],
-        "doc_id: long, text: string",
-    )
-    out = {r["doc_id"]: r for r in tx.repetition_metrics(df).collect()}
-    # doc 0: 60 tokens alternating -> bigrams "a b" x30 + "b a" x29; top 30/59
-    assert out[0]["n_words"] == 60
-    assert out[0]["frac_top_bigram"] == round(30 / 59, 6)
-    # trigrams "a b a" x29 + "b a b" x29 -> 58 total, 2 distinct -> 56 dups
-    assert out[0]["frac_dup_trigrams"] == round(56 / 58, 6)
-    assert not out[0]["gopher_pass"]
-    # doc 1: no repetition, all alpha
-    assert out[1]["frac_top_bigram"] == round(1 / 29, 6)
-    assert out[1]["frac_dup_trigrams"] == 0.0
-    assert out[1]["gopher_pass"]
-    # doc 2: every token alpha-free
-    assert out[2]["frac_no_alpha"] == 1.0
-    assert not out[2]["gopher_pass"]
-    # doc 3: too short
-    assert out[3]["n_words"] == 2 and not out[3]["gopher_pass"]
-
-
-def test_repetition_metrics_extended_rules_hand_computed(spark):
-    """Rae-et-al extended family: top 3/4-gram, dup n-gram char
-    fractions, symbol-to-word ratio, bullet/ellipsis line fractions."""
-    base = " ".join(f"w{i}" for i in range(10))  # 10 distinct words
-    df = spark.createDataFrame(
-        [
-            # doc 0: base repeated 3x -> 30 words; every 5-gram occurs
-            # >= 2x (26 5-grams, 10 distinct patterns around the seam...)
-            (0, " ".join([base] * 3)),
-            # doc 1: heavy symbols: 25 words + 5 '#'-only tokens
-            (1, " ".join(f"w{i}" for i in range(25)) + " # # # # #"),
-            # doc 2: bullet lines
-            (2, "- item one two three\n- item four five six\nplain line here now"),
-            # doc 3: ellipsis-terminated lines
-            (3, "first line trails off...\nsecond stays\nthird trails too…"),
-        ],
-        "doc_id: long, text: string",
-    )
-    out = {r["doc_id"]: r for r in tx.repetition_metrics(df, min_words=3).collect()}
-    # doc 0: 30 words; trigram mode: each of the 8 "wi wi+1 wi+2" windows
-    # inside a period repeats 3x except seam-spanning ones (2x); the
-    # in-period trigrams like 'w0 w1 w2' occur 3 times -> best 3 of 28
-    assert out[0]["frac_top_trigram"] == round(3 / 28, 6)
-    # 26 5-grams over 10 distinct patterns, all equal length (period 10):
-    # duplicate occurrences beyond each first = 26 - 10 = 16
-    assert out[0]["frac_dup_5gram_chars"] == round(16 / 26, 6)
-    assert not out[0]["gopher_pass"]  # frac_dup_trigrams 18/28 > 0.30
-    # doc 1: 30 tokens, 5 '#' occurrences -> ratio 5/30
-    assert out[1]["symbol_word_ratio"] == round(5 / 30, 6)
-    assert out[1]["frac_no_alpha"] == round(5 / 30, 6)
-    assert not out[1]["gopher_pass"]  # symbol ratio 0.167 > 0.10
-    # doc 2: 2 of 3 lines bulleted -> 0.666667 <= 0.90 passes that rule
-    assert out[2]["frac_bullet_lines"] == round(2 / 3, 6)
-    assert out[2]["gopher_pass"]
-    # doc 3: 2 of 3 lines end with an ellipsis -> 0.666667 > 0.30 fails
-    assert out[3]["frac_ellipsis_lines"] == round(2 / 3, 6)
-    assert not out[3]["gopher_pass"]
-
-
-def test_repetition_metrics_adversarial_length(spark):
-    """A 50k-word highly repetitive doc (~25k DISTINCT bigrams, each
-    repeated) completes in bounded time: the mode count is sort + one
-    linear run-length fold, not the O(distinct x n) filter-per-distinct
-    formulation (which needs ~10^9 comparisons here and times out)."""
-    import time
-
-    # 25k distinct words, each appearing twice consecutively: bigrams are
-    # ~25k distinct "wi wi" pairs (count 1 each) + interleavers -> a near
-    # worst case for distinct x n, trivial for sorted run-length
-    words = []
-    for i in range(25_000):
-        words.append(f"w{i}")
-        words.append(f"w{i}")
-    text = " ".join(words)
-    df = spark.createDataFrame([(0, text)], "doc_id: long, text: string")
-    t0 = time.time()
-    row = tx.repetition_metrics(df).collect()[0]
-    elapsed = time.time() - t0
-    assert row["n_words"] == 50_000
-    # each "wi wi" bigram occurs once; "wi w{i+1}" also once -> top = 1
-    assert row["frac_top_bigram"] == round(1 / 49_999, 6)
-    assert elapsed < 60, f"repetition_metrics took {elapsed:.1f}s on 50k words"
-
-
-def test_duplicate_clusters_and_keep_best(spark):
-    """Connected components over near-dup pairs: chains merge into one
-    cluster (min-id rep), disjoint cliques stay separate; the keep
-    transform retains one row per cluster (+ all unclustered rows)."""
-    # graph: chain 1-2, 2-3, 3-4 (one component, rep 1, diameter 3 ->
-    # exercises >1 propagation round); clique 10-11, 10-12, 11-12
-    # (rep 10); isolated pair 20-21 (rep 20)
-    pairs = spark.createDataFrame(
-        [(2, 3), (3, 4), (1, 2), (10, 11), (10, 12), (11, 12), (20, 21)],
-        "id_a: long, id_b: long",
-    )
-    got = {
-        r["doc_id"]: r["cluster_rep"]
-        for r in dedup.duplicate_clusters(pairs).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-    df = spark.createDataFrame(
-        [(i, float(i % 7)) for i in [1, 2, 3, 4, 10, 11, 12, 20, 21, 99]],
-        "doc_id: long, score: double",
-    )
-    clusters = dedup.duplicate_clusters(pairs)
-    # rep policy: keep min id per cluster + untouched unclustered rows
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup.keep_cluster_representatives(df, clusters).collect()
-    )
-    assert kept == [1, 10, 20, 99]
-    # keep-best policy: highest score per cluster (ties -> min id):
-    # chain scores 1,2,3,4 -> 4; clique 3,4,5 -> 12; pair 6,0 -> 20
-    kept_best = sorted(
-        r["doc_id"]
-        for r in dedup.keep_cluster_representatives(
-            df, clusters, score_col="score"
-        ).collect()
-    )
-    assert kept_best == [4, 12, 20, 99]
-
-
-def test_dedup_units_global(spark):
-    """C4-style global line dedup: each distinct line survives once
-    (earliest doc/pos); docs reconstruct from surviving lines in order."""
-    df = spark.createDataFrame(
-        [
-            (0, "alpha\nbeta\ngamma"),
-            (1, "beta\ndelta"),           # 'beta' already seen in doc 0
-            (2, "alpha\nalpha\nepsilon"), # both alphas lose to doc 0's
-            (3, "zeta"),
-        ],
-        "doc_id: long, text: string",
-    )
-    out = {r["doc_id"]: (r["text"], r["n_units"])
-           for r in dedup.dedup_units_global(df).collect()}
-    assert out[0] == ("alpha\nbeta\ngamma", 3)
-    assert out[1] == ("delta", 1)
-    assert out[2] == ("epsilon", 1)
-    assert out[3] == ("zeta", 1)
-    # md5 method gives identical results
-    out2 = {r["doc_id"]: (r["text"], r["n_units"])
-            for r in dedup.dedup_units_global(df, method="md5").collect()}
-    assert out2 == out
-
-
-def test_dedup_units_sep_is_literal(spark):
-    """The separator is a literal, not a regex: sep='.' must split on
-    dots only (round-2 review finding: F.split treated it as a regex and
-    split on every character)."""
-    df = spark.createDataFrame(
-        [(0, "one.two.three"), (1, "two.four")], "doc_id: long, text: string"
-    )
-    out = {r["doc_id"]: r["text"] for r in dedup.dedup_units_global(df, sep=".").collect()}
-    assert out == {0: "one.two.three", 1: "four"}
-
-
-# ------------------------------------------------------------- validation
 
 
 def test_nan_infinity_docs_quarantined_in_both_modes(spark):
@@ -466,24 +57,6 @@ def test_nan_infinity_docs_quarantined_in_both_modes(spark):
         assert dyn[i]["errors"][0]["keyword"] == "$parse"
         assert var[i]["errors"][0]["keyword"] == "$parse"
     assert dyn[3]["verdict"] is True and var[3]["verdict"] is True
-
-
-def test_filter_funnel_hand_computed(spark):
-    """Funnel accounting: sequential gating, NULL predicate -> drop, and
-    n_in of each stage == n_out of the previous by construction."""
-    df = spark.createDataFrame(
-        [(1, "good text here", 10), (2, None, 5), (3, "short", None),
-         (4, "x y z", 900), (5, "ok doc", 100)],
-        "doc_id: long, text: string, n: long",
-    )
-    out = {r["rule"]: r for r in tx.filter_funnel(df, [
-        ("has_text", F.col("text").isNotNull()),
-        ("n_known", F.col("n").isNotNull()),   # NULL n -> dropped
-        ("n_cap", F.col("n") <= 500),
-    ]).collect()}
-    assert (out["has_text"]["n_in"], out["has_text"]["n_out"]) == (5, 4)
-    assert (out["n_known"]["n_in"], out["n_known"]["n_out"]) == (4, 3)
-    assert (out["n_cap"]["n_in"], out["n_cap"]["n_dropped"], out["n_cap"]["n_out"]) == (3, 1, 2)
 
 
 def test_deterministic_sample_engine_invariant(spark):
@@ -506,87 +79,6 @@ def test_deterministic_sample_engine_invariant(spark):
     assert (n16, n0) == (400, 0)
     with pytest.raises(ValueError):
         scale.deterministic_sample(df, "doc_id", 17)
-
-
-def test_quantized_cosine_matches_float_ranking(emb):
-    """int8 quantization: round-trip error bounded by scale/2 per element,
-    and quantized cosine ranking agrees with the float ranking on a real
-    embedding table (overlap >= 8/10)."""
-    import numpy as np
-
-    rows = emb.collect()
-    q = rows[0]["embedding"]
-    rest = emb.filter(F.col("vec_id") != rows[0]["vec_id"])
-    quant = sim.quantize_embeddings(rest)
-    # round-trip: dequantized elements within scale/2 of the original
-    sample = quant.limit(5).collect()
-    orig = {r["vec_id"]: r["embedding"] for r in rows}
-    for r in sample:
-        s = r["qscale"]
-        for got, want in zip(r["qvec"], orig[r["vec_id"]]):
-            assert abs(got * s - float(want)) <= s / 2 + 1e-9
-        assert max(abs(v) for v in r["qvec"]) <= 127
-    exact = [r["vec_id"] for r in sim.cosine_topk(rest, q, 10).collect()]
-    qtop = [
-        r["vec_id"]
-        for r in sim.quantized_cosine_topk(
-            quant, sim.quantize_vector_py(q), 10
-        ).collect()
-    ]
-    assert len(set(exact) & set(qtop)) >= 8, (exact, qtop)
-
-
-def test_null_text_rows_are_not_duplicates(spark):
-    """md5(NULL) is NULL: null-text rows must all survive the dedup
-    transform untouched and never report as a duplicate group."""
-    df = spark.createDataFrame(
-        [(1, "same"), (2, "same"), (3, None), (4, None), (5, None)],
-        "doc_id: long, text: string",
-    )
-    assert dedup.exact_duplicates(df).count() == 1  # only the real pair
-    kept = sorted(r["doc_id"] for r in dedup.distinct_by_content(df).collect())
-    assert kept == [1, 3, 4, 5]
-
-
-def test_duplicate_clusters_long_chain_converges(spark):
-    """Pointer jumping: a 40-node chain (diameter 39) converges within
-    the default max_iter — O(log diameter), not O(diameter) — with no
-    non-convergence warning."""
-    import warnings
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(39)], "id_a: long, id_b: long"
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        got = {r["doc_id"]: r["cluster_rep"]
-               for r in dedup.duplicate_clusters(pairs).collect()}
-    assert set(got.values()) == {0} and len(got) == 40
-
-
-def test_keep_representatives_all_null_scores(spark):
-    """An all-NULL-score cluster keeps its min id instead of vanishing
-    (max of NULLs is NULL; naive equality would drop every member)."""
-    pairs = spark.createDataFrame([(1, 2), (10, 11)], "id_a: long, id_b: long")
-    clusters = dedup.duplicate_clusters(pairs)
-    df = spark.createDataFrame(
-        [(1, None), (2, None), (10, 0.5), (11, 0.9), (99, None)],
-        "doc_id: long, score: double",
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in dedup.keep_cluster_representatives(df, clusters, score_col="score").collect()
-    )
-    assert kept == [1, 11, 99]
-
-
-# ------------------------------------------------------------------- jpeg
-
-
-# ------------------------------------------------------------------ video
-
-
-# -------------------------------------------------------------------- urls
 
 
 def test_canonicalize_url_hand_cases(spark):
@@ -648,86 +140,3 @@ def test_canonicalize_url_collapses_crawl_variants(spark):
     with contextlib.redirect_stdout(buf):
         plan_df.explain("formatted")
     assert "EvalPython" not in buf.getvalue()
-
-
-def test_substring_dedup(spark):
-    """Cross-doc exact-substring removal: the shared passage survives
-    only in the min-id doc; shorter-than-window docs pass through."""
-    from schema_fantasy_spark.ops.dedup import substring_dedup
-
-    shared = "one two three four five six seven eight nine ten"
-    rows = [
-        (1, f"u1a u1b {shared} t1"),
-        (2, f"u2a u2b u2c {shared} t2 t2b"),   # different offset, same words
-        (3, "completely unrelated short text"),
-        (4, f"u4 {shared} mid4 {shared} t4"),  # repeats the passage twice
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in
-           substring_dedup(df, gram_words=8).collect()}
-    # doc 1 owns every duplicated window (min id): text unchanged
-    assert out[1].clean_text == rows[0][1]
-    assert out[1].n_removed_words == 0
-    # doc 2 loses exactly the shared passage
-    assert out[2].clean_text == "u2a u2b u2c t2 t2b"
-    assert out[2].n_removed_words == 10
-    # short doc untouched
-    assert out[3].clean_text == rows[2][1] and out[3].n_removed_words == 0
-    # doc 4: both of its copies are non-canonical -> both removed
-    assert out[4].clean_text == "u4 mid4 t4"
-    assert out[4].n_removed_words == 20
-
-
-def test_substring_dedup_within_doc_repeat_and_sampling(spark):
-    from schema_fantasy_spark.ops.dedup import substring_dedup
-
-    # a doc repeating its own passage: the FIRST occurrence is the
-    # canonical one, later copies are removed even with no other doc
-    shared = "a b c d e f g h"
-    df = spark.createDataFrame(
-        [(7, f"x {shared} y {shared} z")], "doc_id long, text string"
-    )
-    r = substring_dedup(df, gram_words=8).collect()[0]
-    assert r.clean_text == f"x {shared} y z"
-    assert r.n_removed_words == 8
-    # content-defined sampling: the copies sit at DIFFERENT offsets,
-    # yet sampled windows still align (selection is by hash, not
-    # position) — removal touches only the shared span
-    df2 = spark.createDataFrame(
-        [(1, f"p1 {shared} q1"), (2, f"p2 longer prefix here {shared} q2")],
-        "doc_id long, text string",
-    )
-    full = {r.doc_id: r for r in
-            substring_dedup(df2, gram_words=4).collect()}
-    assert full[1].n_removed_words == 0          # owner keeps everything
-    assert full[2].clean_text == "p2 longer prefix here q2"
-    sampled = {r.doc_id: r for r in
-               substring_dedup(df2, gram_words=4, sample_mod=2).collect()}
-    assert sampled[1].n_removed_words == 0
-    kept = set(sampled[2].clean_text.split())
-    assert {"p2", "longer", "prefix", "here", "q2"} <= kept  # uniques survive
-    assert sampled[2].n_removed_words <= 8       # only shared words go
-
-
-def test_duplicate_clusters_driver_path_matches_distributed(spark):
-    """r9 size-adaptive switch: small edge sets resolve by driver-side
-    union-find; result must equal the distributed min-label rounds on
-    chains, cliques, forks and singleton-free graphs."""
-    from schema_fantasy_spark.ops import dedup
-
-    edges = (
-        [(i, i + 2) for i in range(0, 38, 2)]          # long chain
-        + [(100, 101), (101, 102), (100, 102)]          # clique
-        + [(200, 201), (200, 202), (203, 201)]          # fork
-        + [(300, 301)]                                  # pair
-    )
-    pairs = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    fast = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in dedup.duplicate_clusters(pairs).collect()
-    }
-    slow = {
-        (r["doc_id"], r["cluster_rep"])
-        for r in dedup.duplicate_clusters(pairs, driver_max_edges=0).collect()
-    }
-    assert fast == slow and len(fast) == 20 + 3 + 4 + 2

@@ -21,9 +21,25 @@ from schema_fantasy_spark.compiler.regex_dialect import (
 
 class TestTranslation:
     def test_common_core_passes_through(self):
-        for p in [r"^[a-z]+$", r"\d{3}-\d{4}", r"a|b", r"\u0041x", r"(?i)case",
-                  r"[\]\[]", r"\\u\{literal"]:
+        for p in [r"^[a-z]+", r"\d{3}-\d{4}", r"a|b", r"\u0041x", r"(?i)case",
+                  r"[\]\[]", r"\\u\{literal", r"[.$]"]:
             assert java_pattern(p) == p
+
+    def test_js_semantics_spelled_out(self):
+        # '$' is end of input, '.' stops at JS line terminators, \s is
+        # JS's whitespace class, \v is U+000B, \b is the ASCII boundary
+        ws = (r"\t\n\x0B\f\r\x20\u00a0\u1680\u2000-\u200a"
+              r"\u2028\u2029\u202f\u205f\u3000\ufeff")
+        assert java_pattern(r"^[a-z]+$") == r"^[a-z]+\z"
+        assert python_pattern(r"^[a-z]+$").pattern == r"^[a-z]+\Z"
+        assert java_pattern("a.b") == r"a[^\n\r\u2028\u2029]b"
+        assert java_pattern(r"\s\S") == "[" + ws + "][^" + ws + "]"
+        assert java_pattern(r"[^\s-]") == "[^" + ws + "-]"
+        assert java_pattern(r"[a\S]") == "(?:[a]|[^" + ws + "])"
+        assert java_pattern(r"[^a\S]") == "(?:(?![a])[" + ws + "])"
+        assert java_pattern(r"[\S^]") == "(?:[\\^]|[^" + ws + "])"
+        assert java_pattern(r"\v") == r"\x0B"
+        assert java_pattern(r"\bx") == r"(?:(?<=\w)(?!\w)|(?<!\w)(?=\w))x"
 
     def test_codepoint_escape_braces_annex_b(self):
         # \u{...} is a code-point escape ONLY under the u flag; the
@@ -158,17 +174,21 @@ class TestPropertyBased:
         Java and compile to equivalent Python patterns."""
         from hypothesis import given, settings, strategies as st
 
+        # JS atom -> its java.util.regex spelling
+        ws = (r"\t\n\x0B\f\r\x20\u00a0\u1680\u2000-\u200a"
+              r"\u2028\u2029\u202f\u205f\u3000\ufeff")
+        spelled = {".": r"[^\n\r\u2028\u2029]", r"\s": "[" + ws + "]"}
         atoms = st.sampled_from(
             ["a", "b", ".", r"\d", r"\w", r"\s", "[a-z]", "[^0-9]", r"\.", r"\\"]
         )
         quants = st.sampled_from(["", "*", "+", "?", "{1,3}"])
-        pieces = st.builds(lambda a, q: a + q, atoms, quants)
+        pieces = st.tuples(atoms, quants)
 
         @settings(max_examples=300, deadline=None)
         @given(st.lists(pieces, min_size=1, max_size=6), st.text("ab0. ", max_size=6))
         def check(parts, probe):
-            p = "".join(parts)
-            assert java_pattern(p) == p
+            p = "".join(a + q for a, q in parts)
+            assert java_pattern(p) == "".join(spelled.get(a, a) + q for a, q in parts)
             assert bool(python_pattern(p).search(probe)) == bool(re.compile(p).search(probe))
 
         check()
@@ -182,8 +202,9 @@ class TestPropertyBased:
             if 0xD800 <= cp <= 0xDFFF:
                 return  # surrogates aren't valid chars
             pat = python_pattern("\\u%04X" % cp)  # unambiguous 4-hex form
-            assert pat.search("<" + chr(cp) + ">")
-            assert not pat.search("<>")
+            fence = "[]" if chr(cp) in "<>" else "<>"  # a probe without cp
+            assert pat.search(fence[0] + chr(cp) + fence[1])
+            assert not pat.search(fence)
 
         check()
 
@@ -237,7 +258,44 @@ def test_braced_quantifier_after_assertion_or_quantifier_raises():
             with pytest.raises(RegexDialectError):
                 fn(pat)
     # quantified atoms, lazy modifiers and quantified groups still translate
-    for pat in ["a{2}", "(a){2}", "(?:a){2}", "(?=a){2}", "a{2}?", "[$]{2}",
-                "^a{2}$", "\\ba{2}"]:
+    for pat in ["a{2}", "(a){2}", "(?:a){2}", "(?=a){2}", "a{2}?", "[$]{2}", "^a{2}"]:
         assert java_pattern(pat) == pat
         assert python_pattern(pat).pattern == pat
+    assert java_pattern("^a{2}$") == "^a{2}\\z"
+    assert python_pattern("\\ba{2}").pattern.endswith(")a{2}")
+
+
+def test_both_modes_read_patterns_as_js(spark):
+    """The columnar ``rlike`` pattern (``java_pattern``) and the kernel's
+    ``python_pattern`` both give the verdict of the reference's flagless
+    ``new RegExp(p).test(s)`` (third field, taken from node) where
+    java.util.regex, Python's ``re`` and JS differ by default: line
+    terminators for ``.`` and ``$``, JS's Unicode ``\\s``, ASCII ``\\d``/
+    ``\\w``/``\\b``, and ``\\B`` on an empty string."""
+    cases = [("a.b", "a\rb", False), ("a.b", "a\u0085b", True), ("a.b", "a\nb", False),
+             ("a.b", "a\u2028b", False), ("b$", "ab\r", False), ("b$", "ab\n", False),
+             ("b$", "ab\n\n", False), ("b$", "ab", True), ("\\bz", "\u00e9z", True),
+             ("z\\B", "z\u00e9", False), ("\\d", "\u0663", False), ("\\w", "\u00e9", False),
+             ("\\s", "\u00a0", True), ("\\s", "\ufeff", True), ("\\s", "\u3000", True),
+             ("\\s", "\u0085", False), ("\\s", "\u001c", False), ("^\\S$", "\u00a0", False),
+             ("^[^\\S]$", "\u2028", True), ("^[a\\S]$", "\u00a0", False),
+             ("^[^a\\S]$", "\u00a0", True), ("^[\\s\\S]$", "\n", True), ("\\v", "\x0b", True),
+             ("^\\B$", "", True), ("[\\w.]$", "\u00e9.", True)]
+    df = spark.createDataFrame(
+        [(i, java_pattern(p), s) for i, (p, s, _js) in enumerate(cases)],
+        "i: int, p: string, s: string",
+    )
+    got = {r["i"]: r["m"] for r in df.selectExpr("i", "s rlike p AS m").collect()}
+    for i, (p, s, js) in enumerate(cases):
+        assert got[i] == js, ("columnar", p, s)
+        assert bool(python_pattern(p).search(s)) == js, ("kernel", p, s)
+
+
+def test_pattern_rejected_by_kernel_is_rejected_by_columnar():
+    """A pattern Python's ``re`` cannot compile fails schema compilation
+    in both modes, not as a task failure inside ``rlike``."""
+    schema = {"properties": {"s": {"pattern": "(?<g>a)(?<g>b)"}}}
+    with pytest.raises(SchemaCompileError):
+        compile_schema(schema)
+    with pytest.raises(SchemaCompileError):
+        compile_columnar(schema)

@@ -103,254 +103,6 @@ def test_prune_days_pushdown(spark, tmp_path):
     n = df.count()
     assert 0 < n < 2000
 
-def test_dedup_job_end_to_end(spark, tmp_path, monkeypatch):
-    """jobs/dedup_job.py: the full cleaning composition (exact ->
-    near-dup -> clusters -> keep-best) over a corpus with known
-    duplicates; survivors are content-distinct and near-dup clusters
-    shrink to one member each."""
-    import io
-    import json
-    import sys
-    from contextlib import redirect_stdout
-
-    import pyspark.sql.functions as F
-
-    sys.path.insert(0, "jobs")
-    import dedup_job
-
-    base = ("the quick brown fox jumps over the lazy dog while the cat "
-            "sleeps near the warm fire and the birds sing in the trees")
-    rows = [
-        (0, base), (1, base),                     # exact dup pair
-        (2, base.replace("lazy", "sleepy")),      # near-dup of 0
-        (3, "completely different content about spark shuffle and "
-            "adaptive execution for skewed joins in big clusters"),
-        (4, "short unrelated text that stands alone quite happily"),
-        (5, None),                                # funnel: text_present drop
-        (6, "tiny doc"),                          # funnel: min_words drop
-    ]
-    inp, outp = str(tmp_path / "in"), str(tmp_path / "out")
-    spark.createDataFrame(rows, "doc_id: long, text: string").write.parquet(inp)
-    monkeypatch.setattr(sys, "argv", [
-        "dedup_job.py", "--input", inp, "--output", outp,
-        "--threshold", "0.5", "--num-hashes", "16", "--bands", "8",
-        "--min-words", "5",
-    ])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = dedup_job.main()
-    assert rc == 0
-    stats = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert stats["n_in"] == 7
-    # funnel accounting: rule i's n_in == rule i-1's n_out, one drop each
-    fun = stats["funnel"]
-    assert [f["rule"] for f in fun] == ["text_present", "min_words", "max_chars"]
-    assert [f["n_dropped"] for f in fun] == [1, 1, 0]
-    assert all(a["n_out"] == b["n_in"] for a, b in zip(fun, fun[1:]))
-    assert stats["n_after_funnel"] == 5 and stats["removed_funnel"] == 2
-    assert stats["n_after_exact"] == 4
-    assert stats["removed_near_dup"] >= 1  # 0/2 collapse to one survivor
-    out = spark.read.parquet(outp)
-    ids = sorted(r["doc_id"] for r in out.collect())
-    assert 3 in ids and 4 in ids and 5 not in ids and 6 not in ids
-    assert len(ids) == stats["n_out"]
-    # survivors are pairwise content-distinct
-    assert out.select("text").distinct().count() == out.count()
-
-
-def test_dedup_job_deterministic_sample_stage(spark, tmp_path, monkeypatch):
-    """--sample-sixteenths slices the corpus BEFORE the funnel with the
-    engine-invariant md5-nibble predicate: n_in equals the sample size
-    the same predicate selects independently."""
-    import io
-    import json
-    import sys
-    from contextlib import redirect_stdout
-
-    import pyspark.sql.functions as F
-
-    from schema_fantasy_spark import scale
-
-    sys.path.insert(0, "jobs")
-    import dedup_job
-
-    rows = [(i, f"document number {i} with enough words to survive the "
-                f"funnel rules easily") for i in range(64)]
-    inp, outp = str(tmp_path / "in"), str(tmp_path / "out")
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    df.write.parquet(inp)
-    want = scale.deterministic_sample(df, "doc_id", 4, method="md5").count()
-    monkeypatch.setattr(sys, "argv", [
-        "dedup_job.py", "--input", inp, "--output", outp,
-        "--method", "md5", "--sample-sixteenths", "4",
-        "--num-hashes", "16", "--bands", "8",
-    ])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = dedup_job.main()
-    assert rc == 0
-    stats = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert stats["n_in"] == want and 0 < want < 64
-    assert stats["n_out"] == want  # all distinct: nothing else drops
-    assert spark.read.parquet(outp).count() == want
-
-
-def test_dedup_job_classifier_stage(spark, tmp_path, monkeypatch):
-    """--label-col trains the integer-exact classifier on the labeled
-    slice (doc_id%3==0) and drops survivors scoring <= --min-score: the
-    negative-class survivor is removed, accounting recorded."""
-    import io
-    import json
-    import sys
-    from contextlib import redirect_stdout
-
-    sys.path.insert(0, "jobs")
-    import dedup_job
-
-    good = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    bad = "zzq yyq xxq wwq vvq uuq ttq ssq rrq qqq"
-    rows = [
-        (0, good + " one", True),
-        (3, good + " two", True),
-        (6, bad + " one", False),
-        (9, bad + " two", False),
-        (1, good + " three", True),   # off-slice: scored, kept
-        (2, bad + " three", False),   # off-slice: scored, dropped
-    ]
-    inp, outp = str(tmp_path / "in"), str(tmp_path / "out")
-    spark.createDataFrame(
-        rows, "doc_id: long, text: string, label: boolean"
-    ).write.parquet(inp)
-    monkeypatch.setattr(sys, "argv", [
-        "dedup_job.py", "--input", inp, "--output", outp,
-        "--threshold", "0.5", "--num-hashes", "16", "--bands", "8",
-        "--min-words", "5", "--label-col", "label",
-    ])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = dedup_job.main()
-    assert rc == 0
-    stats = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert stats["removed_model_filter"] >= 1
-    out = {r["doc_id"]: r for r in spark.read.parquet(outp).collect()}
-    assert out, "classifier must not empty the corpus"
-    assert all(out[i]["label"] for i in out)  # only positive-class survives
-
-
-def test_dedup_job_boilerplate_stage(spark, tmp_path, monkeypatch):
-    """--html-col + --boilerplate: the text column derives from the
-    link-density block filter — nav chrome disappears while plain
-    extract_text would have kept it."""
-    import io
-    import json
-    import sys
-    from contextlib import redirect_stdout
-
-    sys.path.insert(0, "jobs")
-    import dedup_job
-
-    nav = ('<div><a href="/1">Home</a> <a href="/2">About</a>'
-           ' <a href="/3">Contact</a></div>')
-    rows = [
-        (i, f"<html><body>{nav}<p>Real content paragraph number {i} with "
-            f"plenty of characters to clear every funnel rule.</p>"
-            f"</body></html>")
-        for i in range(4)
-    ]
-    inp, outp = str(tmp_path / "in"), str(tmp_path / "out")
-    spark.createDataFrame(rows, "doc_id: long, html: string").write.parquet(inp)
-    monkeypatch.setattr(sys, "argv", [
-        "dedup_job.py", "--input", inp, "--output", outp,
-        "--html-col", "html", "--boilerplate", "--min-words", "5",
-    ])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rc = dedup_job.main()
-    assert rc == 0
-    stats = json.loads(buf.getvalue().strip().splitlines()[-1])
-    assert stats["n_out"] == 4
-    texts = [r.text for r in spark.read.parquet(outp).collect()]
-    assert all(t.startswith("Real content paragraph") for t in texts)
-    assert all("Home" not in t for t in texts)
-
-
-def test_registered_domain(spark):
-    from pyspark.sql import functions as F
-
-    from schema_fantasy_spark.ops.urls import registered_domain
-
-    cases = [
-        ("www.Example.COM", "example.com"),
-        ("cdn.x.example.com", "example.com"),
-        ("x.co.uk", "x.co.uk"),
-        ("sub.x.co.uk", "x.co.uk"),
-        ("b.github.io", "b.github.io"),
-        ("a.blogspot.com", "a.blogspot.com"),  # multi-label beats .com
-        ("co.uk", None),                       # a bare public suffix
-        ("localhost", None),
-    ]
-    df = spark.createDataFrame([(h,) for h, _ in cases], ["h"])
-    got = [r.d for r in
-           df.select(registered_domain(F.col("h")).alias("d")).collect()]
-    assert got == [want for _, want in cases]
-
-
-def test_balance_by_domain(spark):
-    from schema_fantasy_spark.scale import balance_by_domain
-
-    rows = [(i, "big.com" if i < 10 else "small.org", i % 4)
-            for i in range(14)]
-    df = spark.createDataFrame(rows, "doc_id long, dom string, score int")
-    out = balance_by_domain(df, "dom", score_col="score", cap=3)
-    got = sorted((r.dom, r.doc_id) for r in out.collect())
-    # big.com keeps its 3 best (score desc, id asc): ids 3, 7, 2
-    assert [d for d, _ in got].count("big.com") == 3
-    assert {i for d, i in got if d == "big.com"} == {3, 7, 2}
-    # small.org (4 rows) also capped to its best 3
-    assert {i for d, i in got if d == "small.org"} == {11, 10, 13}
-
-
-def test_stratified_sample(spark):
-    import hashlib
-
-    from schema_fantasy_spark.scale import stratified_sample
-
-    rows = [(i, ["en", "de", None][i % 3]) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    out = stratified_sample(df, "doc_id", "lang", {"en": 16, "de": 8},
-                            default_sixteenths=2)
-    kept = {r.doc_id for r in out.collect()}
-
-    def nib(i):
-        return int(hashlib.md5(str(i).encode()).hexdigest()[0], 16)
-
-    for i, lang in rows:
-        rate = {"en": 16, "de": 8}.get(lang, 2)
-        assert (i in kept) == (nib(i) < rate)
-    import pytest
-
-    with pytest.raises(ValueError):
-        stratified_sample(df, "doc_id", "lang", {"en": 17})
-
-
-def test_exact_quantile_buckets(spark):
-    import pytest
-
-    from schema_fantasy_spark.scale import exact_quantile_buckets
-
-    rows = [(i, [5, 5, 5, 1, 9, 9, None, 3][i]) for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, score int")
-    out = {r.doc_id: r.bucket for r in
-           exact_quantile_buckets(df, "score", n_buckets=4).collect()}
-    # 7 non-null rows sorted: 1,3,5,5,5,9,9 -> before counts 0,1,2,2,2,5,5
-    assert out[3] == 0                      # score 1: before 0
-    assert out[7] == 0                      # score 3: 1*4//7 = 0
-    assert out[0] == out[1] == out[2] == 1  # score 5: 2*4//7 = 1 (ties share)
-    assert out[4] == out[5] == 2            # score 9: 5*4//7 = 2
-    assert out[6] is None                   # NULL score stays NULL
-    with pytest.raises(ValueError):
-        exact_quantile_buckets(df, "score", max_distinct=2)
-
 
 def test_column_profile_exact_matches_builtin(spark):
     """r9 optimization pin: tc.column_profile_exact (distinct-value
@@ -403,3 +155,15 @@ def test_column_profile_exact_empty_input(spark):
     o = sorted(tuple(r) for r in old.collect())
     n = sorted(tuple(r) for r in new.collect())
     assert o == n
+
+
+def test_column_profile_exact_releases_storage(spark):
+    """The persisted count table and the checkpointed range layout are
+    both dropped from executor storage before the call returns."""
+    from schema_fantasy_spark import table_checks as tc
+
+    df = spark.createDataFrame([(float(i % 13), float(i)) for i in range(300)],
+                               "a double, b double")
+    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    tc.column_profile_exact(df, ["a", "b"], ["a", "b"]).collect()
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == before

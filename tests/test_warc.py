@@ -214,25 +214,3 @@ def test_read_warc_all_surfaces_revisit(spark, tmp_path):
     assert [r.record_type for r in rows] == ["response", "revisit"]
     assert "warc-payload-digest=md5:d52" in rows[1].info
     assert "warc-profile=" + W.REVISIT_PROFILE in rows[1].info
-
-
-def test_resolve_revisits(spark):
-    from schema_fantasy_spark.ops.dedup import resolve_revisits
-
-    originals = spark.createDataFrame(
-        [("d1", "https://b.com/2", "t1"), ("d1", "https://a.com/1", "t1"),
-         ("d2", "https://c.com/3", "t2")],
-        "digest string, url string, text string",
-    )
-    revisits = spark.createDataFrame(
-        [("d1", "https://a.com/r1"), ("d2", "https://c.com/r2"),
-         ("dX", "https://z.com/r3")],
-        "digest string, url string",
-    )
-    rows = {r.url: r for r in resolve_revisits(originals, revisits).collect()}
-    # duplicate-digest originals collapse to the lexicographic min
-    assert rows["https://a.com/r1"].original_url == "https://a.com/1"
-    assert rows["https://a.com/r1"].original_text == "t1"
-    assert rows["https://c.com/r2"].original_url == "https://c.com/3"
-    # unresolvable digests survive with NULL originals
-    assert rows["https://z.com/r3"].original_url is None

@@ -3,13 +3,12 @@ with matching schemas and distribution shapes, written as ONE file with
 ONE row group per table to mimic the driver-generated layout (the
 single-split property is what round 9's parallelism fixes target).
 
-Strictly for optimization-round measurement (the r9 "10x replica"
-numbers in OPTIMIZATION_r09.md): this is NOT the driver's data and is
-never read by any gated query — /root/testdata stays the only
-correctness input. Usage:
+Strictly for optimization measurement (the "10x replica"): this is NOT
+the gate's data and is never read by any gated query; the sf0.01 testdata
+stays the only correctness input. Usage:
 
     python tools/gen_scaled_testdata.py          # writes /tmp/sfs_sf1
-    SPARK_GRAFT_SF_DIR=/tmp/sfs_sf1 python bench_extra.py <queries>
+    python tools/check_correctness.py /tmp/sfs_sf1 <queries>
 """
 import os, sys
 import numpy as np, pyarrow as pa, pyarrow.parquet as pq
