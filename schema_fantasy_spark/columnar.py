@@ -298,15 +298,26 @@ class ColumnarPlan:
     def __init__(self, root: ColumnarNode, schema: Any):
         self._root = root
         self.schema = schema
+        #: input struct type (JSON: field order, types, nullability) ->
+        #: its errors Column
+        self._bound: Dict[str, Column] = {}
 
     def errors_column(self, df: DataFrame) -> Column:
         """The ``errors`` array<struct> expression for ``df``'s rows.
 
         The row value is the struct of all columns (the JSON object).
+        Built once per input struct type: every ``F.*`` call is a py4j
+        round trip, and the Column, made of unresolved column references,
+        binds to any frame of that type.
         """
-        value = F.struct(*[F.col(f.name) for f in df.schema.fields])
-        dtype = T.StructType(df.schema.fields)
-        return self._root.emit(value, dtype, F.array().cast("array<string>"))
+        key = df.schema.json()
+        errors = self._bound.get(key)
+        if errors is None:
+            value = F.struct(*[F.col(f.name) for f in df.schema.fields])
+            dtype = T.StructType(df.schema.fields)
+            errors = self._bound[key] = self._root.emit(
+                value, dtype, F.array().cast("array<string>"))
+        return errors
 
     def apply(
         self, df: DataFrame, errors_col: str = "errors", verdict_col: str = "verdict"

@@ -2,7 +2,7 @@
 
 Re-expresses the reference's recursive interpreter (reference index.js:56-63:
 for each schema key dispatch a predicate, fold results applicatively so ALL
-failures accumulate) as a one-time compilation:
+failures accumulate) as a one-time compilation to Python source:
 
 * $ref chains resolved at compile time with cycle detection
   (reference src/context.js:16-37 semantics; cycle/unknown -> raise here,
@@ -15,22 +15,40 @@ failures accumulate) as a one-time compilation:
   when the value is not of the type the keyword applies to
   (e.g. reference src/v4/pattern.js:16).
 
+The generated source holds one function per schema node (memoized per
+``(base, id(node))``, so a recursive schema becomes mutually recursive
+functions). Inside a function the value's JSON type is looked up once, the
+keyword checks are straight-line ``if``s in schema-key order under that
+guard, and a function returns ``None`` for a valid value. Errors carry
+value paths relative to the node that made them; a parent prefixes its key
+only when a child failed, so a valid document builds no path at all.
+``anyOf`` stops at the first passing branch and ``oneOf`` at the second:
+the discarded branches could not change the result.
+
+Every constant (messages, enum sets, translated regexes) is a literal in
+the source, so the text alone determines the kernel: ``load_kernel``
+executes a source once per process and caches it by its text, which is
+how the dynamic mode's Python workers reuse one kernel across batches.
+
 Documented divergences:
 * integer: the reference tests ``x === (x|0)`` (src/v4/type.js:13), which
   silently bounds integers to int32 in JS. We use mathematical integrality
   (int, or float with .is_integer()), matching draft-4 intent.
 * enum expected-value rendering uses compact JSON, not JS String().
-
-The compiled validator is a pure-Python closure tree: picklable-free state
-(only schema constants + compiled regexes), safe to reference from a pandas
-UDF — Spark broadcasts it with the task closure.
+* nesting: the kernel looks inside containers at most ``MAX_DEPTH`` levels
+  below the root and raises :class:`NestingError` past that; the
+  reference recurses until the JS stack overflows.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import json
+import math
 import re
 import unicodedata
+from dataclasses import dataclass
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
 from schema_fantasy_spark.errors import (
@@ -45,12 +63,23 @@ from schema_fantasy_spark.compiler.linker import (
     UnknownResourceError,
     resolve_ref,
 )
+from schema_fantasy_spark.compiler.regex_dialect import RegexDialectError, python_pattern
 
-Validator = Callable[[Any, tuple], List[Err]]
+#: The kernel's nesting budget: it looks inside containers at most this
+#: many levels below the document root. A deeper document raises
+#: NestingError (the dynamic mode quarantines it as one '$depth' row), so
+#: a hostile document cannot exhaust the Python stack. A schema whose
+#: nodes each cost several frames per level may still run out of stack
+#: first; that RecursionError is quarantined the same way.
+MAX_DEPTH = 512
 
 
 class SchemaCompileError(Exception):
     pass
+
+
+class NestingError(RecursionError):
+    """A document nests deeper than MAX_DEPTH levels."""
 
 
 # ---------------------------------------------------------------- type model
@@ -73,6 +102,11 @@ def type_of(v: Any) -> str:
     return "unknown"
 
 
+#: type_of by exact class; other classes fall back to type_of
+_TYPES = {type(None): "null", bool: "boolean", int: "number", float: "number",
+          str: "string", list: "array", dict: "object"}
+
+
 def is_integer(v: Any) -> bool:
     """Integer-valued number (reference src/v4/type.js:13; int32 quirk not
     reproduced — see module docstring)."""
@@ -86,7 +120,7 @@ def is_integer(v: Any) -> bool:
 def canonical(v: Any):
     """Hashable type-tagged canonical form for JSON deep equality
     (R.equals semantics: 1 == 1.0 but 1 != true != '1')."""
-    t = type_of(v)
+    t = _TYPES.get(v.__class__) or type_of(v)
     if t == "number":
         return ("n", float(v))
     if t == "array":
@@ -110,411 +144,85 @@ def ulength(s: str) -> int:
     return len(unicodedata.normalize("NFC", s))
 
 
-# ------------------------------------------------------------ leaf keywords
-# Each _k_* returns a Validator closure. `sch` is the keyword's schema value.
+# ------------------------------------------------- runtime of the kernels
 
+def _add(errs: Optional[list], err: Err) -> list:
+    if errs is None:
+        return [err]
+    errs.append(err)
+    return errs
 
-def _k_type(sch: Any) -> Validator:
-    types = sch if isinstance(sch, list) else [sch]
-    expected = " or ".join(str(t) for t in types)
-    tset = set(types)
 
-    def check(v, vpath):
-        actual = type_of(v)
-        if actual in tset or (is_integer(v) and "integer" in tset):
-            return []
-        return [Err(VALUES, "type", "Invalid type", vpath, expected, actual)]
+def _cat(errs: Optional[list], more: list) -> list:
+    if errs is None:
+        return more
+    errs.extend(more)
+    return errs
 
-    return check
 
+def _at(errs: list, key) -> list:
+    """Prefix ``key`` to the value path of ``errs`` and their children:
+    a child's errors are relative to the child's value."""
+    stack = list(errs)
+    while stack:
+        err = stack.pop()
+        err.vpath = (key,) + err.vpath
+        stack.extend(err.children)
+    return errs
 
-def _k_enum(sch: Any) -> Validator:
-    allowed = {canonical(x) for x in sch}
-    expected = human_list("or", [json_repr(x) for x in sch])
 
-    def check(v, vpath):
-        if canonical(v) in allowed:
-            return []
-        return [Err(VALUES, "enum", "", vpath, expected, json_repr(v))]
+def _props_msg(verb: str, keys: list) -> str:
+    return (f"additional propert{'y' if len(keys) == 1 else 'ies'} {verb}: "
+            + human_list("and", keys))
 
-    return check
 
+def _unique_msg(n: int) -> str:
+    return f"does not contain unique values: {n} duplicate{'' if n == 1 else 's'} found"
 
-def _k_minimum(sch: Any, siblings: dict) -> Validator:
-    excl = siblings.get("exclusiveMinimum")
-    excl = excl if isinstance(excl, bool) else False  # non-boolean -> false
 
-    def check(v, vpath):
-        if type_of(v) != "number":
-            return []
-        ok = v > sch if excl else v >= sch
-        if ok:
-            return []
-        msg = f"less than {'or equal to ' if excl else ''}{sch}"
-        return [Err(SINGLE, "minimum", msg, vpath)]
+def _deep():
+    raise NestingError(f"document nests deeper than {MAX_DEPTH} levels")
 
-    return check
 
+def _vacuous(v, d):
+    return None
 
-def _k_maximum(sch: Any, siblings: dict) -> Validator:
-    excl = siblings.get("exclusiveMaximum")
-    excl = excl if isinstance(excl, bool) else False
 
-    def check(v, vpath):
-        if type_of(v) != "number":
-            return []
-        ok = v < sch if excl else v <= sch
-        if ok:
-            return []
-        msg = f"greater than {'or equal to ' if excl else ''}{sch}"
-        return [Err(SINGLE, "maximum", msg, vpath)]
+#: the names generated source may use besides its own functions/constants
+_RUNTIME = {
+    "_Err": Err, "_T": _TYPES, "_type_of": type_of, "_isint": is_integer,
+    "_canon": canonical, "_json": json_repr, "_ulen": ulength, "_add": _add,
+    "_cat": _cat, "_at": _at, "_props_msg": _props_msg,
+    "_unique_msg": _unique_msg, "_deep": _deep, "_vacuous": _vacuous, "_re": re,
+}
 
-    return check
 
-
-def _k_multipleOf(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "number":
-            return []
-        if isinstance(v, int) and isinstance(sch, int) and sch != 0:
-            ok = v % sch == 0
-        else:
-            ok = (v / sch) % 1 == 0  # float semantics, IEEE754 like JS
-        if ok:
-            return []
-        return [Err(SINGLE, "multipleOf", f"not a multiple of {sch}", vpath)]
-
-    return check
-
-
-def _k_minLength(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "string" or ulength(v) >= sch:
-            return []
-        return [Err(SINGLE, "minLength", f"shorter than {sch} characters", vpath)]
-
-    return check
-
-
-def _k_maxLength(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "string" or ulength(v) <= sch:
-            return []
-        return [Err(SINGLE, "maxLength", f"longer than {sch} characters", vpath)]
-
-    return check
-
-
-def _dialect_rx(pattern: str) -> "re.Pattern":
-    """Compile a draft-4 ``pattern`` with JS-dialect spellings translated
-    to Python ``re`` (reference src/v4/pattern.js:18 uses ``new RegExp``);
-    dialect-divergent constructs raise at schema-compile time."""
-    from schema_fantasy_spark.compiler.regex_dialect import (
-        RegexDialectError,
-        python_pattern,
-    )
-
-    try:
-        return python_pattern(pattern)
-    except RegexDialectError as e:
-        raise SchemaCompileError(str(e)) from None
-
-
-def _k_pattern(sch: Any) -> Validator:
-    rx = _dialect_rx(sch)  # compiled once at plan time, JS spellings translated
-
-    def check(v, vpath):
-        if type_of(v) != "string" or rx.search(v):
-            return []
-        return [Err(SINGLE, "pattern", f"does not match /{sch}/", vpath)]
-
-    return check
-
-
-def _k_minItems(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "array" or len(v) >= sch:
-            return []
-        return [Err(SINGLE, "minItems", f"less than {sch} items", vpath)]
-
-    return check
-
-
-def _k_maxItems(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "array" or len(v) <= sch:
-            return []
-        return [Err(SINGLE, "maxItems", f"more than {sch} items", vpath)]
-
-    return check
-
-
-def _k_uniqueItems(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "array" or sch is False:
-            return []
-        n = len(v) - len(set(canonical(x) for x in v))
-        if n == 0:
-            return []
-        msg = f"does not contain unique values: {n} duplicate{'' if n == 1 else 's'} found"
-        return [Err(SINGLE, "uniqueItems", msg, vpath)]
-
-    return check
-
-
-def _k_minProperties(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "object" or len(v) >= sch:
-            return []
-        return [Err(SINGLE, "minProperties", f"less than {sch} properties", vpath)]
-
-    return check
-
-
-def _k_maxProperties(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "object" or len(v) <= sch:
-            return []
-        return [Err(SINGLE, "maxProperties", f"more than {sch} properties", vpath)]
-
-    return check
-
-
-def _k_required(sch: Any) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "object":
-            return []
-        # one error per missing key (reference src/v4/required.js:18-24
-        # returns an array of Validations)
-        return [
-            Err(SINGLE, "required", f"missing {req}", vpath)
-            for req in sch
-            if req not in v
-        ]
-
-    return check
-
-
-# ------------------------------------------------------- recursive keywords
-
-
-def _k_properties(subs: List[Tuple[str, Validator]]) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "object":
-            return []
-        errs: List[Err] = []
-        for key, sub in subs:
-            if key in v:  # absent keys vacuously pass
-                errs.extend(sub(v[key], vpath + (key,)))
-        return errs
-
-    return check
-
-
-def _k_patternProperties(subs: List[Tuple[str, "re.Pattern", Validator]]) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "object":
-            return []
-        errs: List[Err] = []
-        # cross-product schema-regex x value-keys, schema order outer
-        # (reference src/v4/patternProperties.js:31 xprod)
-        for _raw, rx, sub in subs:
-            for key in v:
-                if rx.search(key):
-                    errs.extend(sub(v[key], vpath + (key,)))
-        return errs
-
-    return check
-
-
-def _k_additionalProperties(
-    sch: Any,
-    sub: Optional[Validator],
-    sibling_props: dict,
-    sibling_patterns: List["re.Pattern"],
-) -> Validator:
-    def is_additional(key: str) -> bool:
-        return key not in sibling_props and not any(rx.search(key) for rx in sibling_patterns)
-
-    def check(v, vpath):
-        if type_of(v) != "object" or sch is True:
-            return []
-        addprops = [k for k in v if is_additional(k)]
-        if not addprops:
-            return []
-        if sch is False:
-            msg = (
-                f"additional propert{'y' if len(addprops) == 1 else 'ies'} found: "
-                + human_list("and", addprops)
-            )
-            return [Err(SINGLE, "additionalProperties", msg, vpath)]
-        # object schema: validate each additional prop via focusValue
-        fail_props: List[str] = []
-        child_errs: List[Err] = []
-        for key in addprops:
-            sub_errs = sub(v[key], vpath + (key,))
-            if sub_errs:
-                fail_props.append(key)
-                child_errs.extend(sub_errs)
-        if not fail_props:
-            return []
-        msg = (
-            f"additional propert{'y' if len(fail_props) == 1 else 'ies'} invalid: "
-            + human_list("and", fail_props)
-        )
-        return [Err(COMPOUND, "additionalProperties", msg, vpath, children=child_errs)]
-
-    return check
-
-
-def _k_items_homogeneous(sub: Validator) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "array":
-            return []
-        errs: List[Err] = []
-        for i, item in enumerate(v):
-            errs.extend(sub(item, vpath + (i,)))
-        return errs
-
-    return check
-
-
-def _k_items_tuple(subs: List[Validator], add_sch: Any, add_sub: Optional[Validator]) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "array":
-            return []
-        errs: List[Err] = []
-        for i, item in enumerate(v):
-            if i < len(subs):
-                errs.extend(subs[i](item, vpath + (i,)))
-            elif isinstance(add_sch, bool):
-                if not add_sch:
-                    errs.append(Err(SINGLE, "items", "additional item found", vpath + (i,)))
-            elif add_sub is not None:
-                errs.extend(add_sub(item, vpath + (i,)))
-        return errs
-
-    return check
-
-
-def _k_dependencies(deps: List[Tuple[str, Any, Optional[Validator]]]) -> Validator:
-    def check(v, vpath):
-        if type_of(v) != "object":
-            return []
-        errs: List[Err] = []
-        for key, dep, sub in deps:
-            if key not in v:
-                continue
-            if isinstance(dep, list):
-                missing = [
-                    Err(SINGLE, "dependencies", f'Missing "{d}" given "{key}"', vpath)
-                    for d in dep
-                    if d not in v
-                ]
-                if missing:
-                    msg = (
-                        f"Missing dependenc{'y ' if len(missing) == 1 else 'ies '}"
-                        f'for "{key}"'
-                    )
-                    errs.append(Err(COMPOUND, "dependencies", msg, vpath, children=missing))
-            elif sub is not None:
-                sub_errs = sub(v, vpath)  # whole value re-validated, same vpath
-                if sub_errs:
-                    errs.append(
-                        Err(
-                            COMPOUND,
-                            "dependencies",
-                            f'Failed dependency for "{key}"',
-                            vpath,
-                            children=sub_errs,
-                        )
-                    )
-        return errs
-
-    return check
-
-
-def _k_allOf(subs: List[Validator]) -> Validator:
-    def check(v, vpath):
-        all_errs: List[Err] = []
-        for sub in subs:
-            all_errs.extend(sub(v, vpath))
-        if not all_errs:
-            return []
-        return [Err(COMPOUND, "allOf", "Not all conditions valid", vpath, children=all_errs)]
-
-    return check
-
-
-def _k_anyOf(subs: List[Validator]) -> Validator:
-    def check(v, vpath):
-        if not subs:  # vacuous truth branch (reference src/v4/anyOf.js:25)
-            return []
-        fail_errs: List[Err] = []
-        n_fail = 0
-        for sub in subs:
-            errs = sub(v, vpath)
-            if errs:
-                n_fail += 1
-                fail_errs.extend(errs)
-        if n_fail < len(subs):
-            return []
-        return [Err(COMPOUND, "anyOf", "No conditions valid", vpath, children=fail_errs)]
-
-    return check
-
-
-def _k_oneOf(subs: List[Validator]) -> Validator:
-    def check(v, vpath):
-        fail_errs: List[Err] = []
-        n_ok = 0
-        for sub in subs:
-            errs = sub(v, vpath)
-            if errs:
-                fail_errs.extend(errs)
-            else:
-                n_ok += 1
-        if n_ok == 1:
-            return []
-        if n_ok == 0:
-            return [Err(COMPOUND, "oneOf", "No conditions valid", vpath, children=fail_errs)]
-        return [Err(SINGLE, "oneOf", "More than one condition valid", vpath)]
-
-    return check
-
-
-def _k_not(sub: Validator) -> Validator:
-    def check(v, vpath):
-        if sub(v, vpath):
-            return []
-        return [Err(SINGLE, "not", "condition valid", vpath)]
-
-    return check
-
-
-# ------------------------------------------------------------- the compiler
-
-#: keywords that are never predicates (reference src/predicate.js:34-59 has
-#: no entries; index.js:73 -> vacuous success). Everything not in
-#: _KNOWN_KEYWORDS is likewise elided.
-_NON_PREDICATES = {"default", "definitions", "format", "id", "$schema", "description", "title"}
+@functools.lru_cache(maxsize=128)
+def load_kernel(source: str) -> Callable[[Any, int], Optional[List[Err]]]:
+    """The root function of generated ``source``, executed once per
+    process and cached by the source text."""
+    ns = dict(_RUNTIME)
+    exec(compile(source, "<schema kernel>", "exec"), ns)
+    return ns["kernel"]
 
 
 class CompiledSchema:
     """A compiled constraint plan. ``validate(value)`` returns the
     accumulated error list (empty = valid), mirroring the reference's
-    ``Validation`` applicative (index.js:60-62)."""
+    ``Validation`` applicative (index.js:60-62). ``source`` is the
+    generated kernel."""
 
-    def __init__(self, validator: Validator, schema: Any, refs: Dict[str, Any]):
-        self._validator = validator
+    def __init__(self, source: str, schema: Any, refs: Dict[str, Any]):
+        self.source = source
         self.schema = schema
         self.refs = refs
+        self._kernel = load_kernel(source)
 
     def validate(self, value: Any) -> List[Err]:
-        return self._validator(value, ())
+        return self._kernel(value, 0) or []
 
     def is_valid(self, value: Any) -> bool:
-        return not self._validator(value, ())
+        return not self._kernel(value, 0)
 
 
 def compile_schema(
@@ -527,130 +235,362 @@ def compile_schema(
     SchemaCompileError at plan time.
     """
     refs = refs or {}
-    # memo supports self-recursive schemas (e.g. a tree schema whose
-    # properties $ref back to itself): in-progress nodes get a forward
-    # thunk resolved at first validation call.
-    memo: Dict[Tuple[str, int], Optional[Validator]] = {}
+    return CompiledSchema(generate_source(schema, refs, base), schema, refs)
 
-    def compile_node(cur_base: str, cur_doc: Any, node: Any) -> Validator:
-        cur_base, cur_doc, node = resolve_ref(refs, cur_base, cur_doc, node)
+
+def generate_source(schema: Any, refs: Optional[Dict[str, Any]] = None,
+                    base: str = "") -> str:
+    """Python source of the kernel validating ``schema``: one function
+    ``f<n>(v, d)`` per schema node (``d`` is the value's nesting depth)
+    returning ``None`` or a non-empty error list, and ``kernel``, the
+    root. The same schema always yields the same text."""
+    return _Generator(refs or {}).run(base, schema)
+
+
+# ------------------------------------------------------------- the generator
+
+def _lit(x: Any) -> str:
+    """A Python literal expression evaluating to the JSON value ``x``."""
+    if x is None or isinstance(x, bool):
+        return repr(x)
+    if isinstance(x, int):
+        return int.__repr__(x)
+    if isinstance(x, float):
+        if math.isnan(x):
+            return "float('nan')"
+        if math.isinf(x):
+            return "float('inf')" if x > 0 else "-float('inf')"
+        return float.__repr__(x)
+    if isinstance(x, str):
+        return str.__repr__(x)
+    if isinstance(x, list):
+        return "[" + ", ".join(_lit(y) for y in x) + "]"
+    if isinstance(x, dict):
+        return "{" + ", ".join(f"{_lit(k)}: {_lit(y)}" for k, y in x.items()) + "}"
+    raise SchemaCompileError(f"schema constant {x!r} is not a JSON value")
+
+
+def _err(kind: str, keyword: str, message: str, path: str = "()",
+         expected: str = "None", actual: str = "None", children: str = "") -> str:
+    """Source of one ``Err`` construction; ``message`` is an expression."""
+    args = [repr(kind), repr(keyword), message, path]
+    if expected != "None" or actual != "None" or children:
+        args += [expected, actual]
+    if children:
+        args.append(children)
+    return f"_Err({', '.join(args)})"
+
+
+def _add_err(*args, **kw) -> str:
+    return f"e = _add(e, {_err(*args, **kw)})"
+
+
+@dataclass
+class _Block:
+    """The source lines of one keyword, run when the value's JSON type
+    ``t`` is ``guard`` (always when None); ``descends`` if they call
+    children at depth ``d1``, ``typed`` if they read ``t`` unguarded."""
+
+    guard: Optional[str]
+    lines: List[str]
+    descends: bool = False
+    typed: bool = False
+
+
+class _Generator:
+    def __init__(self, refs: Dict[str, Any]):
+        self.refs = refs
+        #: (base, id(node)) -> function name, None for a node without checks
+        self.memo: Dict[Tuple[str, int], Optional[str]] = {}
+        self.n_funcs = 0
+        self.consts: Dict[str, str] = {}  # literal expression -> name
+        self.funcs: List[str] = []
+
+    def run(self, base: str, schema: Any) -> str:
+        root = self.node(base, schema, schema)
+        consts = [f"{name} = {expr}" for expr, name in self.consts.items()]
+        return "\n".join(consts + self.funcs + [f"kernel = {root or '_vacuous'}", ""])
+
+    def const(self, expr: str) -> str:
+        name = self.consts.get(expr)
+        if name is None:
+            name = self.consts[expr] = f"_k{len(self.consts)}"
+        return name
+
+    def regex(self, pattern: str) -> str:
+        """Name of the compiled regex constant for a draft-4 pattern (JS
+        spellings translated, dialect-divergent constructs rejected)."""
+        try:
+            rx = python_pattern(pattern)
+        except RegexDialectError as e:
+            raise SchemaCompileError(str(e)) from None
+        return self.const(f"_re.compile({rx.pattern!r}, {rx.flags})")
+
+    def node(self, base: str, doc: Any, node: Any) -> Optional[str]:
+        """Name of the function validating ``node``; None if it never fails."""
+        base, doc, node = resolve_ref(self.refs, base, doc, node)
         if not isinstance(node, dict):
-            # boolean/scalar schema: keysIn -> [] -> vacuous success
-            return lambda v, vp: []
-        key = (cur_base, id(node))
-        if key in memo:
-            cached = memo[key]
-            if cached is not None:
-                return cached
-
-            def forward(v, vp, _key=key):
-                return memo[_key](v, vp)  # resolved by the time it runs
-
-            return forward
-        memo[key] = None  # mark in-progress
-
-        checks: List[Validator] = []
+            return None  # boolean/scalar schema: keysIn -> [] -> vacuous success
+        key = (base, id(node))
+        if key in self.memo:
+            return self.memo[key]  # done, or in progress (a recursive $ref)
+        name = self.memo[key] = f"f{self.n_funcs}"
+        self.n_funcs += 1
+        blocks: List[_Block] = []
         for kw in node:  # schema key order = accumulation order
-            sch = node[kw]
             try:
-                built = _compile_keyword(kw, sch, node, cur_base, cur_doc, compile_node)
+                block = self.keyword(kw, node[kw], node, lambda s: self.node(base, doc, s))
             except re.error as e:
                 raise SchemaCompileError(f"bad regex in {kw!r}: {e}") from e
-            if built is not None:
-                checks.append(built)
+            if block is not None:
+                blocks.append(block)
+        if not blocks:
+            # later callers skip the node; a recursive $ref met while it
+            # was in progress may already call it by name
+            self.memo[key] = None
+            self.funcs.append(f"{name} = _vacuous\n")
+            return None
+        lines = [f"def {name}(v, d):", "    e = None"]
+        if any(b.guard or b.typed for b in blocks):
+            lines.append("    t = _T.get(v.__class__) or _type_of(v)")
+        for guard, group in itertools.groupby(blocks, key=lambda b: b.guard):
+            group, pad = list(group), "    "
+            if guard is not None:
+                lines.append(f"    if t == {guard!r}:")
+                pad = "        "
+            if any(b.descends for b in group):
+                lines += [pad + "d1 = d + 1", pad + f"if d1 > {MAX_DEPTH}: _deep()"]
+            lines += [pad + line for b in group for line in b.lines]
+        lines.append("    return e")
+        self.funcs.append("\n".join(lines) + "\n")
+        return name
 
-        if len(checks) == 1:
-            validator = checks[0]
-        else:
-            def validator(v, vp, _checks=tuple(checks)):
-                errs: List[Err] = []
-                for c in _checks:
-                    errs.extend(c(v, vp))
-                return errs
+    # ------------------------------------------------------------ keywords
 
-        memo[key] = validator
-        return validator
-
-    root = compile_node(base, schema, schema)
-    return CompiledSchema(root, schema, refs)
-
-
-def _compile_keyword(
-    kw: str,
-    sch: Any,
-    node: dict,
-    base: str,
-    doc: Any,
-    compile_node: Callable,
-) -> Optional[Validator]:
-    rec = lambda sub: compile_node(base, doc, sub)  # noqa: E731
-
-    if kw == "type":
-        return _k_type(sch)
-    if kw == "enum":
-        return _k_enum(sch)
-    if kw == "minimum":
-        return _k_minimum(sch, node)
-    if kw == "maximum":
-        return _k_maximum(sch, node)
-    if kw == "multipleOf":
-        return _k_multipleOf(sch)
-    if kw == "minLength":
-        return _k_minLength(sch)
-    if kw == "maxLength":
-        return _k_maxLength(sch)
-    if kw == "pattern":
-        return _k_pattern(sch)
-    if kw == "minItems":
-        return _k_minItems(sch)
-    if kw == "maxItems":
-        return _k_maxItems(sch)
-    if kw == "uniqueItems":
-        return _k_uniqueItems(sch)
-    if kw == "minProperties":
-        return _k_minProperties(sch)
-    if kw == "maxProperties":
-        return _k_maxProperties(sch)
-    if kw == "required":
-        return _k_required(sch)
-    if kw == "properties":
-        return _k_properties([(k, rec(s)) for k, s in sch.items()])
-    if kw == "patternProperties":
-        return _k_patternProperties(
-            [(raw, _dialect_rx(raw), rec(s)) for raw, s in sch.items()]
-        )
-    if kw == "additionalProperties":
-        sibling_props = node.get("properties") or {}
-        sibling_patterns = [_dialect_rx(p) for p in (node.get("patternProperties") or {})]
-        sub = rec(sch) if isinstance(sch, dict) else None
-        return _k_additionalProperties(sch, sub, sibling_props, sibling_patterns)
-    if kw == "items":
-        if isinstance(sch, list):
-            add_sch = node.get("additionalItems")
-            add_sub = rec(add_sch) if isinstance(add_sch, dict) else None
-            return _k_items_tuple([rec(s) for s in sch], add_sch, add_sub)
-        if isinstance(sch, dict):
-            return _k_items_homogeneous(rec(sch))
+    def keyword(self, kw: str, sch: Any, node: dict, rec: Callable) -> Optional[_Block]:
+        """The block checking keyword ``kw`` (value ``sch``) of ``node``;
+        None for a keyword that never fails. ``rec`` compiles a subschema."""
+        if kw == "type":
+            types = sch if isinstance(sch, list) else [sch]
+            tset = set(types)
+            expected = " or ".join(str(t) for t in types)
+            ok = f"t in {self.const(f'frozenset({_lit(types)})')}"
+            if "integer" in tset and "number" not in tset:
+                ok += " or (t == 'number' and _isint(v))"
+            return _Block(None, [f"if not ({ok}):",
+                                 "    " + _add_err(VALUES, "type", "'Invalid type'", "()",
+                                                   repr(expected), "t")], typed=True)
+        if kw == "enum":
+            allowed = self.const(f"frozenset(map(_canon, {_lit(list(sch))}))")
+            expected = human_list("or", [json_repr(x) for x in sch])
+            # a str's canonical form is ('s', str): test strs directly
+            strs = self.const(f"frozenset({_lit([x for x in sch if isinstance(x, str)])})")
+            miss = f"v not in {strs} if v.__class__ is str else _canon(v) not in {allowed}"
+            return _Block(None, [f"if {miss}:",
+                                 "    " + _add_err(VALUES, "enum", "''", "()",
+                                                   repr(expected), "_json(v)")])
+        if kw in ("minimum", "maximum"):
+            excl = node.get("exclusiveM" + kw[1:])
+            excl = excl if isinstance(excl, bool) else False  # non-boolean -> false
+            op = {"minimum": ">", "maximum": "<"}[kw] + ("" if excl else "=")
+            word = {"minimum": "less", "maximum": "greater"}[kw]
+            msg = f"{word} than {'or equal to ' if excl else ''}{sch}"
+            return _Block("number", [f"if not v {op} {_lit(sch)}:",
+                                     "    " + _add_err(SINGLE, kw, repr(msg))])
+        if kw == "multipleOf":
+            ok = f"(v / {_lit(sch)}) % 1 == 0"  # float semantics, IEEE754 like JS
+            if isinstance(sch, int) and sch != 0:
+                ok = f"(v % {_lit(sch)} == 0 if isinstance(v, int) else {ok})"
+            return _Block("number", [f"if not {ok}:", "    " + _add_err(
+                SINGLE, "multipleOf", repr(f"not a multiple of {sch}"))])
+        if kw in ("minLength", "maxLength"):
+            op, msg = ((">=", f"shorter than {sch} characters") if kw == "minLength"
+                       else ("<=", f"longer than {sch} characters"))
+            return _Block("string", [f"if not _ulen(v) {op} {_lit(sch)}:",
+                                     "    " + _add_err(SINGLE, kw, repr(msg))])
+        if kw == "pattern":
+            return _Block("string", [f"if not {self.regex(sch)}.search(v):", "    " + _add_err(
+                SINGLE, "pattern", repr(f"does not match /{sch}/"))])
+        if kw in ("minItems", "maxItems", "minProperties", "maxProperties"):
+            guard = "array" if kw.endswith("Items") else "object"
+            noun = "items" if guard == "array" else "properties"
+            op, word = (">=", "less") if kw.startswith("min") else ("<=", "more")
+            return _Block(guard, [f"if not len(v) {op} {_lit(sch)}:", "    " + _add_err(
+                SINGLE, kw, repr(f"{word} than {sch} {noun}"))])
+        if kw == "uniqueItems":
+            if sch is False:
+                return None
+            return _Block("array", [
+                "n = len(v) - len({_canon(x) for x in v})",
+                "if n:",
+                "    " + _add_err(SINGLE, "uniqueItems", "_unique_msg(n)")])
+        if kw == "required":
+            # one error per missing key (reference src/v4/required.js:18-24
+            # returns an array of Validations)
+            lines = []
+            for req in sch:
+                lines += [f"if {_lit(req)} not in v:",
+                          "    " + _add_err(SINGLE, "required", repr(f"missing {req}"))]
+            return _Block("object", lines) if lines else None
+        if kw == "properties":
+            lines = []
+            for key, sub in sch.items():
+                fn = rec(sub)
+                if fn is not None:  # absent keys vacuously pass
+                    lines += [f"if {_lit(key)} in v:",
+                              f"    r = {fn}(v[{_lit(key)}], d1)",
+                              f"    if r: e = _cat(e, _at(r, {_lit(key)}))"]
+            return _Block("object", lines, True) if lines else None
+        if kw == "patternProperties":
+            # cross-product schema-regex x value-keys, schema order outer
+            # (reference src/v4/patternProperties.js:31 xprod)
+            lines = []
+            for raw, sub in sch.items():
+                rx, fn = self.regex(raw), rec(sub)
+                if fn is not None:
+                    lines += [f"for k in filter({rx}.search, v):",
+                              f"    r = {fn}(v[k], d1)",
+                              "    if r: e = _cat(e, _at(r, k))"]
+            return _Block("object", lines, True) if lines else None
+        if kw == "additionalProperties":
+            return self.additional_properties(sch, node, rec)
+        if kw == "items":
+            if isinstance(sch, dict):
+                fn = rec(sch)
+                if fn is None:
+                    return None
+                return _Block("array", ["for i, x in enumerate(v):",
+                                        f"    r = {fn}(x, d1)",
+                                        "    if r: e = _cat(e, _at(r, i))"], True)
+            if isinstance(sch, list):
+                return self.items_tuple(sch, node.get("additionalItems"), rec)
+            return None
+        if kw == "dependencies":
+            return self.dependencies(sch, rec)
+        if kw == "allOf":
+            return self.all_of([rec(s) for s in sch])
+        if kw == "anyOf":
+            return self.any_of([rec(s) for s in sch])
+        if kw == "oneOf":
+            return self.one_of([rec(s) for s in sch])
+        if kw == "not":
+            fn = rec(sch)
+            lines = [_add_err(SINGLE, "not", "'condition valid'")]
+            if fn is not None:
+                lines = [f"if not {fn}(v, d):", "    " + lines[0]]
+            return _Block(None, lines)
+        # '$ref' beside other keywords: resolve_ref already replaced the
+        # node by its target (draft-4 ignores the siblings). Unknown
+        # keywords and the non-predicates ('default', 'definitions',
+        # 'format', 'id', ...): vacuous success (reference index.js:73,
+        # src/predicate.js:34-59)
         return None
-    if kw == "dependencies":
-        deps = [
-            (k, d, rec(d) if isinstance(d, dict) else None) for k, d in sch.items()
-        ]
-        return _k_dependencies(deps)
-    if kw == "allOf":
-        return _k_allOf([rec(s) for s in sch])
-    if kw == "anyOf":
-        return _k_anyOf([rec(s) for s in sch])
-    if kw == "oneOf":
-        return _k_oneOf([rec(s) for s in sch])
-    if kw == "not":
-        return _k_not(rec(sch))
-    if kw == "$ref":
-        # a node that is itself {"$ref": ...} was already resolved by
-        # compile_node; a $ref alongside other keywords: draft-4 says
-        # siblings are ignored, and the reference resolves the node to the
-        # ref target entirely — compile_node handled it. Here $ref appears
-        # as a plain key only if resolve_ref left it (cannot happen).
-        return None
-    # unknown keyword / non-predicate -> vacuous success (reference index.js:73)
-    return None
+
+    def additional_properties(self, sch: Any, node: dict, rec: Callable) -> Optional[_Block]:
+        if sch is True:
+            return None
+        if not (sch is False or isinstance(sch, dict)):
+            raise SchemaCompileError(
+                f"additionalProperties must be a boolean or a schema, not {sch!r}")
+        props = node.get("properties") or {}
+        known = self.const(f"frozenset({_lit(list(props))})")
+        extra = f"k not in {known}" + "".join(
+            f" and not {self.regex(p)}.search(k)" for p in (node.get("patternProperties") or {}))
+        if sch is False:
+            return _Block("object", [
+                f"if not v.keys() <= {known}:",
+                f"    a = [k for k in v if {extra}]",
+                "    if a: " + _add_err(SINGLE, "additionalProperties", "_props_msg('found', a)")])
+        fn = rec(sch)
+        if fn is None:
+            return None
+        # object schema: validate each additional prop via focusValue
+        return _Block("object", [
+            f"if not v.keys() <= {known}:",
+            "    a = c = None",
+            "    for k in v:",
+            f"        if {extra}:",
+            f"            r = {fn}(v[k], d1)",
+            "            if r:",
+            "                a = _add(a, k)",
+            "                c = _cat(c, _at(r, k))",
+            "    if a: " + _add_err(COMPOUND, "additionalProperties",
+                                    "_props_msg('invalid', a)", children="c")], True)
+
+    def items_tuple(self, subs: list, add_sch: Any, rec: Callable) -> Optional[_Block]:
+        lines = []
+        for i, sub in enumerate(subs):
+            fn = rec(sub)
+            if fn is not None:
+                lines += [f"if len(v) > {i}:",
+                          f"    r = {fn}(v[{i}], d1)",
+                          f"    if r: e = _cat(e, _at(r, {i}))"]
+        n = len(subs)
+        if add_sch is False:
+            lines += [f"for i in range({n}, len(v)):",
+                      "    " + _add_err(SINGLE, "items", "'additional item found'", "(i,)")]
+        elif isinstance(add_sch, dict):
+            fn = rec(add_sch)
+            if fn is not None:
+                lines += [f"for i in range({n}, len(v)):",
+                          f"    r = {fn}(v[i], d1)",
+                          "    if r: e = _cat(e, _at(r, i))"]
+        return _Block("array", lines, True) if lines else None
+
+    def dependencies(self, sch: dict, rec: Callable) -> Optional[_Block]:
+        lines = []
+        for key, dep in sch.items():
+            if isinstance(dep, list):
+                if not dep:
+                    continue
+                lines += [f"if {_lit(key)} in v:", "    m = None"]
+                for name in dep:
+                    lines += [f"    if {_lit(name)} not in v:", "        m = _add(m, " + _err(
+                        SINGLE, "dependencies", repr(f'Missing "{name}" given "{key}"')) + ")"]
+                one, many = (repr(f'Missing dependenc{s}for "{key}"') for s in ("y ", "ies "))
+                lines += ["    if m: " + _add_err(COMPOUND, "dependencies",
+                                                  f"{one} if len(m) == 1 else {many}",
+                                                  children="m")]
+            elif isinstance(dep, dict):
+                fn = rec(dep)
+                if fn is not None:  # whole value re-validated, same path
+                    lines += [f"if {_lit(key)} in v:",
+                              f"    r = {fn}(v, d)",
+                              "    if r: " + _add_err(COMPOUND, "dependencies",
+                                                      repr(f'Failed dependency for "{key}"'),
+                                                      children="r")]
+        return _Block("object", lines) if lines else None
+
+    def all_of(self, fns: List[Optional[str]]) -> Optional[_Block]:
+        fns = [fn for fn in fns if fn is not None]
+        if not fns:
+            return None
+        lines = ["c = None"]
+        for fn in fns:
+            lines += [f"r = {fn}(v, d)", "if r: c = _cat(c, r)"]
+        lines.append("if c: " + _add_err(COMPOUND, "allOf", "'Not all conditions valid'",
+                                         children="c"))
+        return _Block(None, lines)
+
+    def any_of(self, fns: List[Optional[str]]) -> Optional[_Block]:
+        if not fns or None in fns:  # vacuous truth (reference src/v4/anyOf.js:25)
+            return None
+        # c holds the failures so far; None once a branch passed
+        lines = [f"c = {fns[0]}(v, d)"]
+        for fn in fns[1:]:
+            lines += ["if c:", f"    r = {fn}(v, d)", "    c = _cat(c, r) if r else None"]
+        lines.append("if c: " + _add_err(COMPOUND, "anyOf", "'No conditions valid'",
+                                         children="c"))
+        return _Block(None, lines)
+
+    def one_of(self, fns: List[Optional[str]]) -> Optional[_Block]:
+        # n counts passing branches; past two the verdict cannot change
+        lines = ["c = None", f"n = {sum(fn is None for fn in fns)}"]
+        for fn in fns:
+            if fn is not None:
+                lines += ["if n < 2:", f"    r = {fn}(v, d)",
+                          "    if r: c = _cat(c, r)", "    else: n += 1"]
+        lines += ["if n == 0: " + _add_err(COMPOUND, "oneOf", "'No conditions valid'",
+                                           children="c or []"),
+                  "elif n > 1: " + _add_err(SINGLE, "oneOf", "'More than one condition valid'")]
+        return _Block(None, lines)

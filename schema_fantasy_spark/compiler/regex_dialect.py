@@ -16,7 +16,14 @@ dynamic kernel). The three dialects agree on the common core; this module
   matches ``u{GG}`` — exactly what the reference computes. The translator
   emits the bare letter and escapes non-quantifier braces (``\\{``/``\\}``,
   a no-op for Python and required for java.util.regex, which rejects bare
-  ``{`` outside quantifiers).
+  ``{`` outside quantifiers). The same holds for every other letter
+  escape the flagless RegExp gives no meaning (``\\h``, ``\\R``, ``\\e``,
+  ``\\a``, ``\\Q``, ``\\z``, ``\\x`` without two hex digits, ``\\k`` in a
+  pattern without named groups, ``\\B`` in a class, ...): Java reads
+  several of them as classes, anchors or quotes and Python rejects most,
+  so the translator emits the bare letter. ``[^]`` (any character) and
+  ``[]`` (matches nothing), errors in both Java and Python, are spelled
+  as ``[\\s\\S]`` and ``[^\\s\\S]``.
 * with ``strict=True``, RAISES :class:`RegexDialectError` at schema-compile
   time for those same constructs instead — for deployments that would
   rather reject a schema than reproduce Annex-B legacy semantics.
@@ -45,6 +52,15 @@ from __future__ import annotations
 import re
 
 _HEX4 = re.compile(r"[0-9a-fA-F]{4}\Z")
+_HEX2 = re.compile(r"[0-9a-fA-F]{2}")
+#: letters a flagless JS RegExp escape gives a meaning, in a class or out
+#: (p/P and u are identity escapes handled on their own, k and x depend
+#: on what follows, B is only an assertion outside a class)
+_MEANINGFUL = set("bBdDwWsSfnrtvcxukpP")
+#: JS's "[^]" (any character) and "[]" (nothing)
+_EMPTY_CLASS = re.compile(r"\[\^?\]")
+#: a named group opener (?<name>, not a lookbehind
+_NAMED_GROUP = re.compile(r"\(\?<(?![=!])")
 #: valid quantifier brace forms: {n}, {n,}, {n,m} (ECMA-262 + Java + re)
 _QUANT = re.compile(r"\{\d+(?:,\d*)?\}")
 #: non-capturing and lookaround group openers: (?: (?= (?! (?<= (?<!
@@ -98,12 +114,30 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
     # so deferring to a runtime rlike failure (or a bare re.error)
     # mid-query is wrong in both modes (ADVICE r8).
     prev_atom = False
+    # without a named group, flagless '\k' is an identity escape
+    named = bool(_NAMED_GROUP.search(pattern))
     while i < n:
         ch = pattern[i]
         if ch == "\\":
             if i + 1 >= n:
                 raise RegexDialectError(f"pattern {pattern!r}: trailing backslash")
             nxt = pattern[i + 1]
+            if nxt.isascii() and nxt.isalpha() and (
+                nxt not in _MEANINGFUL
+                or (nxt == "B" and in_class)
+                or (nxt == "x" and not _HEX2.match(pattern, i + 2))
+                or (nxt == "k" and not named)
+            ):
+                if strict:
+                    raise RegexDialectError(
+                        f"pattern {pattern!r}: '\\{nxt}' is a JS legacy identity "
+                        f"escape (it matches '{nxt}'); Java and Python read it "
+                        "differently or not at all; write the bare letter"
+                    )
+                out.append(nxt)  # Annex-B identity escape: the letter itself
+                i += 2
+                prev_atom = True
+                continue
             if nxt == "u":
                 if _HEX4.match(pattern[i + 2 : i + 6]):
                     out.append(pattern[i : i + 6])  # \uXXXX: common core
@@ -162,12 +196,12 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 i += 3
                 prev_atom = True
                 continue
-            if (
-                nxt == "k"
-                and target == "python"
-                and i + 2 < n
-                and pattern[i + 2] == "<"
-            ):
+            if nxt == "k" and pattern[i + 2 : i + 3] != "<":
+                raise RegexDialectError(
+                    f"pattern {pattern!r}: '\\k' must name a group in a pattern "
+                    "with named groups"
+                )
+            if nxt == "k" and target == "python":
                 j = pattern.find(">", i + 3)
                 if j < 0:
                     raise RegexDialectError(f"pattern {pattern!r}: unterminated \\k<")
@@ -197,6 +231,8 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 continue
             if nxt in "bB" and not in_class:
                 out.append(_ASCII_BOUNDARY[nxt])
+            elif nxt == "b":
+                out.append("\\x08")  # backspace in a JS class; Java rejects [\b]
             else:
                 out.append(pattern[i : i + 2])
             i += 2
@@ -222,6 +258,18 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             out.append(("(?P<" if target == "python" else "(?<") + name + ">")
             i = j + 1
             prev_atom = False
+            continue
+        m = None if in_class else _EMPTY_CLASS.match(pattern, i)
+        if m:
+            if strict:
+                raise RegexDialectError(
+                    f"pattern {pattern!r}: JS's empty class '[]' and any-"
+                    "character class '[^]' are errors in Java and Python; "
+                    "spell the intent another way"
+                )
+            out.append("[\\s\\S]" if m.group(0) == "[^]" else "[^\\s\\S]")
+            i = m.end()
+            prev_atom = True
             continue
         if ch == "[" and not in_class:
             in_class = True

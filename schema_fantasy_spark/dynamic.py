@@ -6,11 +6,13 @@ reference's native habitat — arbitrary JSON, reference index.js:43). The
 scale path for typed tables is ``columnar.py``; SURVEY.md §7 'hard parts'
 (b) routes pathological/recursive schemas here.
 
-The compiled validator closure is built ONCE on the driver
-(``compile_schema``) and shipped to executors inside the UDF closure —
-regexes precompiled, $refs resolved; executors do zero schema
-interpretation setup. Data crosses JVM->Python as Arrow batches
-(spark.sql.execution.arrow.maxRecordsPerBatch rows at a time).
+The kernel is generated ONCE on the driver (``compile_schema``: Python
+source with $refs resolved and every constant a literal) and only its
+source text travels in the UDF. Each Python worker executes the source
+once and caches the kernel by that text (``plan.load_kernel``), so later
+batches and tasks on the worker reuse it. A dynamic ``ValidationEngine``
+builds its UDF once, at construction. Data crosses JVM->Python as Arrow
+batches (spark.sql.execution.arrow.maxRecordsPerBatch rows at a time).
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from schema_fantasy_spark.errors import ERRORS_SCHEMA, errs_to_rows
-from schema_fantasy_spark.compiler.plan import compile_schema
+from schema_fantasy_spark.compiler.plan import CompiledSchema, compile_schema, load_kernel
 
 
 def _reject_constant(name: str):
@@ -65,11 +67,17 @@ def _ensure_parallelism(
 
 def json_errors_udf(schema: Any, refs: Optional[Dict[str, Any]] = None):
     """A pandas UDF: json-string column -> errors array<struct> column."""
-    compiled = compile_schema(schema, refs=refs)
+    return kernel_udf(compile_schema(schema, refs=refs))
+
+
+def kernel_udf(compiled: CompiledSchema):
+    """The pandas UDF running ``compiled``'s kernel; it carries only the
+    kernel's source."""
+    source = compiled.source
 
     @pandas_udf(ERRORS_SCHEMA)
     def _validate(docs: pd.Series) -> pd.Series:
-        validate = compiled.validate
+        kernel = load_kernel(source)
 
         def one(doc):
             if doc is None:
@@ -90,10 +98,11 @@ def json_errors_udf(schema: Any, refs: Optional[Dict[str, Any]] = None):
                     return _quarantine("$parse", "malformed JSON: " + doc[:80],
                                        doc[:80])
             try:
-                return errs_to_rows(validate(value))
+                return errs_to_rows(kernel(value, 0) or ())
             except RecursionError:
-                # well-formed but nested past the kernel's recursion
-                # budget: the same per-document quarantine as $parse
+                # well-formed but nested past the kernel's nesting budget
+                # (plan.NestingError) or the Python stack: the same
+                # per-document quarantine as $parse
                 return _quarantine("$depth", "document nests too deeply to "
                                    "validate", None)
 
@@ -112,7 +121,13 @@ def validate_json(
 ) -> DataFrame:
     """Validate JSON documents held in ``df[doc_col]`` (string) against
     ``schema``; append errors + verdict columns."""
-    udf = json_errors_udf(schema, refs)
+    return apply_udf(df, doc_col, json_errors_udf(schema, refs), errors_col, verdict_col)
+
+
+def apply_udf(df: DataFrame, doc_col: str, udf, errors_col: str = "errors",
+              verdict_col: str = "verdict") -> DataFrame:
+    """Append the errors of the kernel UDF ``udf`` over ``df[doc_col]``
+    and the verdict."""
     # The Arrow UDF inherits the scan's parallelism; spread low-split
     # inputs (a single-row-group bench file, a small createDataFrame)
     # across cores first. _ensure_parallelism is a NO-OP whenever the

@@ -18,7 +18,8 @@ from typing import Any, Dict, Iterable, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from schema_fantasy_spark.columnar import ColumnarPlan, compile_columnar
-from schema_fantasy_spark.dynamic import validate_json
+from schema_fantasy_spark.compiler.plan import compile_schema
+from schema_fantasy_spark.dynamic import apply_udf, kernel_udf
 
 
 class ValidationEngine:
@@ -35,7 +36,8 @@ class ValidationEngine:
         (JSON strings via Arrow-batched compiled kernel — the measured
         default for dynamic docs), 'variant' (JSON strings via Spark 4
         VariantType expressions, JVM-side; see variant.py for when it
-        wins).
+        wins). Dynamic mode generates its kernel and builds its UDF here,
+        once; every ``apply`` reuses them.
 
         ``nfc_lengths=True`` (columnar mode) counts min/maxLength in NFC
         like the reference (src/v4/minLength.js:19-20) via one vectorized
@@ -47,8 +49,11 @@ class ValidationEngine:
         self.schema = schema
         self.refs = refs or {}
         self.mode = mode
-        self._plan = None
-        if mode == "columnar":
+        self._plan = self._udf = None
+        if mode == "dynamic":
+            self._plan = compile_schema(schema, refs=self.refs)
+            self._udf = kernel_udf(self._plan)
+        elif mode == "columnar":
             self._plan = compile_columnar(
                 schema, refs=self.refs, nfc_lengths=nfc_lengths
             )
@@ -71,9 +76,7 @@ class ValidationEngine:
         if self.mode == "dynamic":
             if doc_col is None:
                 raise ValueError("dynamic mode needs doc_col (a JSON-string column)")
-            return validate_json(
-                df, doc_col, self.schema, self.refs, errors_col, verdict_col
-            )
+            return apply_udf(df, doc_col, self._udf, errors_col, verdict_col)
         if self.mode == "variant":
             if doc_col is None:
                 raise ValueError("variant mode needs doc_col (a JSON-string column)")

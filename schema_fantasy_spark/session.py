@@ -18,7 +18,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """A local session on ``cores`` cores: by default ``SPARK_GRAFT_CPUS``,
+    else the CPUs this process may run on."""
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     shuffle_partitions = shuffle_partitions or max(cores, 32)
     b = (
         SparkSession.builder.master(f"local[{cores}]")

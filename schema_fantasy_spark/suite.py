@@ -188,7 +188,10 @@ class CheckSuite:
         results: List[CheckResult] = []
         validated = violations = None
         if self._engine is not None:
-            validated = self._engine.apply(df).persist()
+            # materialized once by an eager, lineage-truncating local
+            # checkpoint: the schema aggregate, the table checks and the
+            # report's violations all read it, none re-runs validation
+            validated = self._engine.apply(df).localCheckpoint()
         target = validated if validated is not None else df
 
         # ONE aggregation pass for the schema verdict + every algebraic
@@ -223,6 +226,4 @@ class CheckSuite:
                 results.extend(finish(row))
             else:
                 results.extend(payload(target))
-        if validated is not None:
-            validated.unpersist()
         return SuiteReport(results, validated, violations)

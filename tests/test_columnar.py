@@ -541,6 +541,27 @@ def test_columnar_additional_properties_static(spark):
     assert errs[0]["message"] == "additional property found: extra"
 
 
+def test_errors_column_bound_once_per_input_type(spark):
+    """The errors Column is built once per input struct type: frames with
+    the same column names but another type for one column get their own
+    errors, and a second same-typed apply reuses the Column."""
+    plan = compile_columnar({"properties": {"lang": {"type": "string", "maxLength": 2}}})
+    strs = spark.createDataFrame([(1, "en"), (2, "deu")], "id: long, lang: string")
+    ints = spark.createDataFrame([(1, 5)], "id: long, lang: long")
+
+    def rows(df):
+        return sorted((r["id"], [(e["keyword"], e["actual"]) for e in r["errors"]])
+                      for r in plan.apply(df).collect())
+
+    first = rows(strs)
+    assert first == [(1, []), (2, [("maxLength", None)])]
+    assert rows(ints) == [(1, [("type", "number")])]
+    assert rows(strs) == first
+    again = spark.createDataFrame([(3, "x")], "id: long, lang: string")
+    assert plan.errors_column(again) is plan.errors_column(strs)
+    assert plan.errors_column(ints) is not plan.errors_column(strs)
+
+
 def test_violations_and_partition_verdicts(spark):
     df = spark.createDataFrame(
         [(1, "ok", "g1"), (2, None, "g1"), (3, "ok", "g2")], "id: long, v: string, g: string"

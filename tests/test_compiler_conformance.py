@@ -6,6 +6,7 @@ over hand-authored draft-4 fixtures, strengthened from boolean-only to
 error-path checking where marked.
 """
 
+import json
 import re
 
 import jsonschema
@@ -14,7 +15,8 @@ from referencing import Registry
 from referencing.jsonschema import DRAFT4
 
 from schema_fantasy_spark import compile_schema
-from schema_fantasy_spark.errors import render_all
+from schema_fantasy_spark.compiler.plan import MAX_DEPTH, NestingError
+from schema_fantasy_spark.errors import errs_to_rows, render_all
 
 from tests.conftest import load_fixture_cases
 
@@ -110,3 +112,71 @@ def test_minlength_nfc_normalization():
     assert compiled.is_valid(decomposed)
     compiled2 = compile_schema({"minLength": 2})
     assert not compiled2.is_valid(decomposed)
+
+
+_KERNEL_SCHEMA = {
+    "definitions": {"node": {"type": "object", "properties": {
+        "kids": {"type": "array", "items": {"$ref": "#/definitions/node"}},
+        "tag": {"enum": ["a", 1, None, [1]], "pattern": "^[a-z]$"},
+    }, "additionalProperties": False, "patternProperties": {"^x-": {"maxLength": 3}}}},
+    "anyOf": [{"$ref": "#/definitions/node"}, {"type": "null"}],
+    "dependencies": {"kids": ["tag"]},
+}
+
+
+def test_same_schema_same_source():
+    """The generated source is the workers' kernel cache key: compiling a
+    schema twice, or an equal copy of it, gives the same text."""
+    first = compile_schema(_KERNEL_SCHEMA).source
+    assert compile_schema(_KERNEL_SCHEMA).source == first
+    assert compile_schema(json.loads(json.dumps(_KERNEL_SCHEMA))).source == first
+    assert compile_schema({**_KERNEL_SCHEMA, "maxProperties": 3}).source != first
+
+
+def test_recursive_schema_compiles_to_mutually_recursive_functions():
+    """A $ref cycle becomes functions calling each other; errors found two
+    levels down carry their full path, in schema-key order."""
+    doc = {"kids": [{"kids": [{"tag": "zz", "x-1": "long"}]}]}
+    rows = errs_to_rows(compile_schema(_KERNEL_SCHEMA).validate(doc))
+    assert [(r["depth"], r["keyword"], "/".join(r["path"])) for r in rows] == [
+        (0, "anyOf", ""),
+        (1, "enum", "kids/0/kids/0/tag"),
+        (1, "pattern", "kids/0/kids/0/tag"),
+        (1, "maxLength", "kids/0/kids/0/x-1"),
+        (1, "type", ""),
+        (0, "dependencies", ""),
+        (1, "dependencies", ""),
+    ]
+
+
+def test_nesting_budget():
+    """The kernel looks inside containers at most MAX_DEPTH levels below
+    the root; a deeper document raises NestingError (a RecursionError,
+    which dynamic mode quarantines as one '$depth' row)."""
+    compiled = compile_schema({"items": {"$ref": "#"}})
+
+    def nested(k):
+        doc = []
+        for _ in range(k - 1):
+            doc = [doc]
+        return doc
+
+    assert compiled.validate(nested(MAX_DEPTH)) == []
+    with pytest.raises(NestingError):
+        compiled.validate(nested(MAX_DEPTH + 1))
+    assert issubclass(NestingError, RecursionError)
+
+
+def test_vacuous_node_reached_through_a_cycle():
+    """F never fails (its anyOf has a 'true' branch), but Y, compiled while
+    F was in progress, calls F by name; validating through Y must work."""
+    compiled = compile_schema({
+        "definitions": {
+            "F": {"anyOf": [{"$ref": "#/definitions/Y"}, True]},
+            "Y": {"properties": {"a": {"$ref": "#/definitions/F"}}, "maxProperties": 1},
+        },
+        "properties": {"f": {"$ref": "#/definitions/F"}, "y": {"$ref": "#/definitions/Y"}},
+    })
+    assert compiled.validate({"f": 1, "y": {"a": {"b": 1}}}) == []
+    assert [(e.keyword, e.vpath) for e in compiled.validate({"y": {"a": 1, "b": 2}})] == [
+        ("maxProperties", ("y",))]

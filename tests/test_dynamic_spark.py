@@ -87,3 +87,21 @@ def test_deep_document_quarantined(spark):
     assert by_depth[600]["verdict"] is False
     assert (row["keyword"], row["path"], row["depth"]) == ("$depth", [], 0)
     assert row["message"] == "document nests too deeply to validate"
+
+
+def test_engine_generates_kernel_once(spark, monkeypatch):
+    """A dynamic engine generates its kernel at construction and every
+    apply reuses it (and its UDF)."""
+    from schema_fantasy_spark.compiler import plan
+    from schema_fantasy_spark.engine import ValidationEngine
+
+    calls = []
+    generate = plan.generate_source
+    monkeypatch.setattr(plan, "generate_source",
+                        lambda *a, **kw: calls.append(a) or generate(*a, **kw))
+    engine = ValidationEngine({"required": ["a"]}, mode="dynamic")
+    df = spark.createDataFrame([(1, '{"a": 1}'), (2, "{}")], "id: long, doc: string")
+    for _ in range(2):
+        got = {r["id"]: r["verdict"] for r in engine.apply(df, doc_col="doc").collect()}
+        assert got == {1: True, 2: False}
+    assert len(calls) == 1

@@ -280,7 +280,20 @@ def test_both_modes_read_patterns_as_js(spark):
              ("\\s", "\u0085", False), ("\\s", "\u001c", False), ("^\\S$", "\u00a0", False),
              ("^[^\\S]$", "\u2028", True), ("^[a\\S]$", "\u00a0", False),
              ("^[^a\\S]$", "\u00a0", True), ("^[\\s\\S]$", "\n", True), ("\\v", "\x0b", True),
-             ("^\\B$", "", True), ("[\\w.]$", "\u00e9.", True)]
+             ("^\\B$", "", True), ("[\\w.]$", "\u00e9.", True),
+             # Annex-B identity escapes: the bare letter
+             ("\\h", "h", True), ("\\h", " ", False), ("\\R", "R", True),
+             ("\\R", "\n", False), ("\\e", "\x1b", False), ("\\a", "\x07", False),
+             ("\\a", "a", True), ("\\Q.\\E", "Q.E", True), ("\\Q.\\E", ".", False),
+             ("^\\A$", "A", True), ("^\\Z$", "Z", True), ("\\z", "z", True),
+             ("\\x", "x", True), ("\\x4", "x4", True), ("\\x41", "A", True),
+             ("\\k<a>", "k<a>", True), ("(?<n>a)\\k<n>", "aa", True),
+             ("[\\h]", " ", False), ("[\\B]", "B", True),
+             ("[\\b]", "\b", True), ("[\\b]", "b", False),
+             # '[^]' is any character, '[]' matches nothing
+             ("^[^]$", "\n", True), ("a[^]b", "a b", True), ("^[^]{2}$", "ab", True),
+             ("[]", "", False), ("a[]", "a", False), ("[]a]", "a]", False),
+             ("[^]a]", "xa]", True), ("[^]a]", "a", False)]
     df = spark.createDataFrame(
         [(i, java_pattern(p), s) for i, (p, s, _js) in enumerate(cases)],
         "i: int, p: string, s: string",
@@ -289,6 +302,19 @@ def test_both_modes_read_patterns_as_js(spark):
     for i, (p, s, js) in enumerate(cases):
         assert got[i] == js, ("columnar", p, s)
         assert bool(python_pattern(p).search(s)) == js, ("kernel", p, s)
+
+
+def test_strict_rejects_identity_escapes_and_empty_classes():
+    """``strict=True`` refuses the Annex-B readings the default mode
+    reproduces, as it does for ``\\p``; '\\k' that names no group is an
+    error in a pattern with named groups (node rejects it too)."""
+    for pat in ["\\h", "[\\R]", "\\x4", "\\k", "[^]", "[]", "a[]b"]:
+        for fn in (java_pattern, python_pattern):
+            with pytest.raises(RegexDialectError):
+                fn(pat, strict=True)
+    for pat in ["(?<n>a)\\k", "(?<n>a)\\kx"]:
+        with pytest.raises(RegexDialectError):
+            java_pattern(pat)
 
 
 def test_pattern_rejected_by_kernel_is_rejected_by_columnar():

@@ -2,9 +2,12 @@
 pages table — all checks evaluate (no short-circuit), outcomes accumulate,
 thresholds decide the suite verdict."""
 
+import shutil
+
 import pyspark.sql.functions as F
 
 from schema_fantasy_spark import table_checks as tc
+from schema_fantasy_spark.engine import ValidationEngine
 from schema_fantasy_spark.sources.pages import (
     LANG_CUM, PAGES_SCHEMA, expected_violation_ids, pages, snapshot_pair,
 )
@@ -97,6 +100,24 @@ def test_suite_algebraic_checks_fold_into_one_job(spark):
     # algebraic checks must not add ANY: they ride the same aggregation
     assert n_with_checks == n_schema_only, (n_schema_only, n_with_checks)
     assert len(report.results) == 4
+
+
+def test_report_violations_read_the_suite_materialization(spark, tmp_path):
+    """Writing ``report.violations`` after ``run`` reads the validation the
+    suite materialized: the source files are deleted first, so a rescan
+    of the source would fail."""
+    src = str(tmp_path / "pages")
+    pages(spark, 2000).write.parquet(src)
+    df = spark.read.parquet(src)
+    n_errors = ValidationEngine(PAGES_SCHEMA).apply(df).select(
+        F.sum(F.size("errors"))).collect()[0][0]
+    report = (CheckSuite(schema=PAGES_SCHEMA, id_cols=("id",))
+              .with_null_rate("lang", 0.05).with_uniqueness(["url"]).run(df))
+    shutil.rmtree(src)
+    out = str(tmp_path / "violations")
+    report.violations.write.parquet(out)
+    assert n_errors > 0
+    assert spark.read.parquet(out).count() == n_errors
 
 
 def test_schema_check_statuses(spark):
