@@ -1,6 +1,7 @@
 """Columnar constraint compiler — the 100 TB execution path.
 
-Compiles a JSON-Schema draft-4 document ONCE on the driver against a typed
+Translates the checks of the keyword IR (``compiler/ir.py``, where the
+keyword semantics and wording live) ONCE, at plan time, against a typed
 DataFrame schema, emitting one flat DAG of native Spark ``Column``
 expressions: an ``errors: array<struct>`` column whose construction
 evaluates EVERY check (no AND-chain short-circuit), mirroring the
@@ -32,48 +33,13 @@ Engine extensions over the reference model (documented):
 
 from __future__ import annotations
 
-import re
-from typing import Any, Callable, Dict, List, Optional, Sequence, Tuple
+from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from schema_fantasy_spark.errors import ERRORS_SCHEMA, human_list
-from schema_fantasy_spark.compiler.linker import resolve_ref
-from schema_fantasy_spark.compiler.plan import SchemaCompileError, json_repr
-from schema_fantasy_spark.compiler.regex_dialect import (
-    RegexDialectError,
-    java_pattern,
-    python_pattern,
-)
-
-
-def _rx(p: str) -> Tuple[str, "re.Pattern"]:
-    """Java-dialect pattern for ``rlike`` (JS spellings translated,
-    dialect-divergent constructs rejected — reference src/v4/pattern.js:18)
-    and the Python-dialect compiled pattern the kernel uses. Compiling the
-    Python form rejects, at schema-compile time, a pattern the kernel
-    rejects (say, a repeated group name) that would otherwise fail as a
-    task inside ``rlike``."""
-    rx = _prx(p)
-    try:
-        return java_pattern(p), rx
-    except RegexDialectError as e:
-        raise SchemaCompileError(str(e)) from None
-
-
-def _jrx(p: str) -> str:
-    """The ``rlike`` half of :func:`_rx`."""
-    return _rx(p)[0]
-
-
-def _prx(p: str) -> "re.Pattern":
-    """Python-dialect compiled pattern for compile-time field matching."""
-    try:
-        return python_pattern(p)
-    except RegexDialectError as e:
-        raise SchemaCompileError(str(e)) from None
-    except re.error as e:
-        raise SchemaCompileError(f"bad regex {p!r}: {e}") from e
+from schema_fantasy_spark.compiler import ir
+from schema_fantasy_spark.compiler.ir import SchemaCompileError
+from schema_fantasy_spark.errors import ERRORS_SCHEMA
 
 ERRORS_DDL = ERRORS_SCHEMA.simpleString()
 
@@ -146,8 +112,15 @@ def _compound(
 
 
 def _with_null_rows(emit: Callable, rows: Sequence[tuple]) -> Callable:
-    """Attach the rows a JSON null yields under this keyword (see
-    :class:`ColumnarNode`); keywords without them pass a null."""
+    """An emitter ``emit(value, dtype, path)`` -> errors array, of a check
+    or of a whole node, with its ``null_rows``.
+
+    ``emit`` reads a NULL value as an ABSENT property (a NULL struct field
+    or column), which every keyword passes. ``null_rows`` are the error
+    rows a JSON ``null`` yields instead — the reading of a NULL array
+    element or map value, see :func:`_emit_json`. They are static:
+    ``(keyword, message, expected, actual, depth)`` tuples, all at the
+    value's own path, because null has no children."""
     emit.null_rows = tuple(rows)
     return emit
 
@@ -156,7 +129,7 @@ def _bump_rows(rows: Sequence[tuple]) -> List[tuple]:
     return [(kw, msg, exp, act, depth + 1) for kw, msg, exp, act, depth in rows]
 
 
-def _emit_json(sub: "ColumnarNode", value: Column, dtype: T.DataType, path: Column) -> Column:
+def _emit_json(sub: Callable, value: Column, dtype: T.DataType, path: Column) -> Column:
     """``sub`` over an array element or map value. There a NULL is a
     JSON null that is present, not an absent property, so it yields
     ``sub.null_rows`` (only ``type``, ``enum`` and the combinators over
@@ -168,7 +141,7 @@ def _emit_json(sub: "ColumnarNode", value: Column, dtype: T.DataType, path: Colu
     ]
     return F.when(
         value.isNull(), F.array(*nulls) if nulls else _empty_errors()
-    ).otherwise(sub.emit(value, dtype, path))
+    ).otherwise(sub(value, dtype, path))
 
 
 # ----------------------------------------------------------- type utilities
@@ -178,28 +151,18 @@ _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FLOAT_TYPES = (T.FloatType, T.DoubleType, T.DecimalType)
 
 
+#: Spark dtype classes -> their JSON type; timestamp/date/binary extend JSON
+_JSON_TYPES = (
+    (T.NullType, "null"), (T.BooleanType, "boolean"), (_INT_TYPES + _FLOAT_TYPES, "number"),
+    (T.StringType, "string"), (T.ArrayType, "array"), ((T.StructType, T.MapType), "object"),
+    (T.TimestampType, "timestamp"), (T.DateType, "date"), (T.BinaryType, "binary"),
+)
+
+
 def json_type_of(dtype: T.DataType) -> str:
     """Static JSON type of a Spark dtype (mirror of the reference's dynamic
     typeOf, reference src/v4/type.js:12, resolved at compile time)."""
-    if isinstance(dtype, T.NullType):
-        return "null"
-    if isinstance(dtype, T.BooleanType):
-        return "boolean"
-    if isinstance(dtype, _INT_TYPES + _FLOAT_TYPES):
-        return "number"
-    if isinstance(dtype, T.StringType):
-        return "string"
-    if isinstance(dtype, T.ArrayType):
-        return "array"
-    if isinstance(dtype, (T.StructType, T.MapType)):
-        return "object"
-    if isinstance(dtype, T.TimestampType):
-        return "timestamp"
-    if isinstance(dtype, T.DateType):
-        return "date"
-    if isinstance(dtype, T.BinaryType):
-        return "binary"
-    return "unknown"
+    return next((name for cls, name in _JSON_TYPES if isinstance(dtype, cls)), "unknown")
 
 
 def _is_integral(dtype: T.DataType) -> bool:
@@ -211,27 +174,6 @@ def _is_numeric(dtype: T.DataType) -> bool:
 
 
 # ------------------------------------------------------------- the compiler
-
-
-class ColumnarNode:
-    """Compiled subschema: emits an errors array for (value expr, path expr).
-
-    ``emit`` reads a NULL value as an ABSENT property (a NULL struct field
-    or column), which every keyword passes. ``null_rows`` are the error
-    rows a JSON ``null`` yields instead — the reading of a NULL array
-    element or map value, see :func:`_emit_json`. They are static:
-    ``(keyword, message, expected, actual, depth)`` tuples, all at the
-    value's own path, because null has no children."""
-
-    __slots__ = ("emit", "null_rows")
-
-    def __init__(
-        self,
-        emit: Callable[[Column, T.DataType, Column], Column],
-        null_rows: Sequence[tuple] = (),
-    ):
-        self.emit = emit
-        self.null_rows = tuple(null_rows)
 
 
 def compile_columnar(
@@ -253,49 +195,37 @@ def compile_columnar(
     expression DAG cannot express unbounded recursion. Those route to the
     dynamic mode.
     """
-    global _NFC_LENGTHS
-    refs = refs or {}
-    in_progress: set = set()
-    _NFC_LENGTHS = nfc_lengths
-    # (module-level switch read synchronously during this compile walk;
-    # compile is driver-side and single-threaded per call)
+    root = _Translator(nfc_lengths).node(ir.lower(schema, refs, base))
+    return ColumnarPlan(root, schema)
 
-    def compile_node(cur_base: str, cur_doc: Any, node: Any) -> ColumnarNode:
-        cur_base, cur_doc, node = resolve_ref(refs, cur_base, cur_doc, node)
-        if not isinstance(node, dict):
-            return ColumnarNode(lambda v, dt, p: _empty_errors())
-        key = (cur_base, id(node))
-        if key in in_progress:
-            raise SchemaCompileError(
-                "recursive schema cannot compile to a flat column DAG; "
-                "use the dynamic (Arrow-batched) mode"
-            )
-        in_progress.add(key)
+
+class _Translator:
+    """IR nodes -> emitters, each check by its ``_EMITTERS`` entry."""
+
+    def __init__(self, nfc_lengths: bool):
+        self.nfc_lengths = nfc_lengths
+        self.in_progress: set = set()
+
+    def node(self, node: ir.Node) -> Callable:
+        if node in self.in_progress:
+            raise SchemaCompileError("recursive schema cannot compile to a flat column DAG; "
+                                     "use the dynamic (Arrow-batched) mode")
+        self.in_progress.add(node)
         try:
-            keyword_emitters: List[Callable[[Column, T.DataType, Column], Optional[Column]]] = []
-            null_rows: List[tuple] = []
-            for kw in node:
-                e = _compile_keyword(kw, node[kw], node, cur_base, cur_doc, compile_node)
-                if e is not None:
-                    keyword_emitters.append(e)
-                    null_rows += getattr(e, "null_rows", ())
+            emitters = [_EMITTERS[type(c)](c, self) for c in node.checks]
         finally:
-            in_progress.discard(key)
+            self.in_progress.discard(node)
 
         def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-            parts = [em(value, dtype, path) for em in keyword_emitters]
-            return _concat_errors([p for p in parts if p is not None])
+            return _concat_errors([em(value, dtype, path) for em in emitters])
 
-        return ColumnarNode(emit, null_rows)
-
-    root = compile_node(base, schema, schema)
-    return ColumnarPlan(root, schema)
+        return _with_null_rows(emit, [r for e in emitters for r in getattr(e, "null_rows", ())])
 
 
 class ColumnarPlan:
     """A compiled constraint plan bound lazily to a DataFrame."""
 
-    def __init__(self, root: ColumnarNode, schema: Any):
+    def __init__(self, root: Callable, schema: Any):
         self._root = root
         self.schema = schema
         #: input struct type (JSON: field order, types, nullability) ->
@@ -315,8 +245,7 @@ class ColumnarPlan:
         if errors is None:
             value = F.struct(*[F.col(f.name) for f in df.schema.fields])
             dtype = T.StructType(df.schema.fields)
-            errors = self._bound[key] = self._root.emit(
-                value, dtype, F.array().cast("array<string>"))
+            errors = self._bound[key] = self._root(value, dtype, F.array().cast("array<string>"))
         return errors
 
     def apply(
@@ -326,128 +255,41 @@ class ColumnarPlan:
         return out.withColumn(verdict_col, F.size(F.col(errors_col)) == 0)
 
 
-# ------------------------------------------------------------- keyword emit
-# Each returns emit(value, dtype, path) -> errors array (or None to elide).
+# ------------------------------------------------------------- check emit
+# One function per IR check kind: (check, translator) -> emit(value, dtype,
+# path) -> errors array. Every keyword keeps its type guard, resolved
+# against the bound dtype at bind time.
 
 
-def _vacuous(_v, _dt, _p) -> Column:
-    return _empty_errors()
+def _say(words: tuple, n: Column, names: Optional[Column] = None) -> Column:
+    """The message of IR ``words`` for a runtime count ``n`` and name
+    array ``names`` (see ``ir.say``)."""
+    return F.concat(*[
+        F.lit(w) if isinstance(w, str)
+        else F.when(n == 1, F.lit(w.one)).otherwise(F.lit(w.many)) if isinstance(w, ir.Plural)
+        else n.cast("string") if w is ir.COUNT
+        else _human_list_col("and", names)
+        for w in words
+    ])
 
 
-def _guarded(dtype_pred, build):
-    """Static type guard: if the bound dtype doesn't satisfy ``dtype_pred``,
-    the keyword is vacuous (compile-time elision of the runtime guard)."""
-
-    def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if not dtype_pred(dtype):
-            return _empty_errors()
-        return build(value, dtype, path)
-
-    return emit
-
-
-def _null_pass(value: Column, errors: Column) -> Column:
-    """NULL value ≡ absent property -> vacuous pass for non-required checks."""
-    return F.when(value.isNull(), _empty_errors()).otherwise(errors)
-
-
-def _compile_keyword(
-    kw: str,
-    sch: Any,
-    node: dict,
-    base: str,
-    doc: Any,
-    compile_node: Callable,
-):
-    rec = lambda sub: compile_node(base, doc, sub)  # noqa: E731
-
-    if kw == "type":
-        return _ck_type(sch)
-    if kw == "enum":
-        return _ck_enum(sch)
-    if kw == "minimum":
-        return _ck_bound(sch, node.get("exclusiveMinimum"), is_min=True)
-    if kw == "maximum":
-        return _ck_bound(sch, node.get("exclusiveMaximum"), is_min=False)
-    if kw == "multipleOf":
-        return _ck_multiple_of(sch)
-    if kw == "minLength":
-        return _ck_length(sch, is_min=True)
-    if kw == "maxLength":
-        return _ck_length(sch, is_min=False)
-    if kw == "pattern":
-        return _ck_pattern(sch)
-    if kw == "minItems":
-        return _ck_items_count(sch, is_min=True)
-    if kw == "maxItems":
-        return _ck_items_count(sch, is_min=False)
-    if kw == "uniqueItems":
-        return _ck_unique_items(sch)
-    if kw == "minProperties":
-        return _ck_props_count(sch, is_min=True)
-    if kw == "maxProperties":
-        return _ck_props_count(sch, is_min=False)
-    if kw == "required":
-        return _ck_required(sch)
-    if kw == "properties":
-        return _ck_properties({k: rec(s) for k, s in sch.items()}, sch)
-    if kw == "patternProperties":
-        return _ck_pattern_properties([(*_rx(p), rec(s)) for p, s in sch.items()])
-    if kw == "additionalProperties":
-        props = node.get("properties") or {}
-        patterns = [_rx(p) for p in (node.get("patternProperties") or {})]
-        sub = rec(sch) if isinstance(sch, dict) else None
-        return _ck_additional_properties(sch, sub, props, patterns)
-    if kw == "items":
-        if isinstance(sch, list):
-            add_sch = node.get("additionalItems")
-            add_node = rec(add_sch) if isinstance(add_sch, dict) else None
-            return _ck_items_tuple([rec(s) for s in sch], add_sch, add_node)
-        if isinstance(sch, dict):
-            return _ck_items_homogeneous(rec(sch))
-        return None
-    if kw == "dependencies":
-        deps = [(k, d, rec(d) if isinstance(d, dict) else None) for k, d in sch.items()]
-        return _ck_dependencies(deps)
-    if kw == "allOf":
-        return _ck_all_of([rec(s) for s in sch])
-    if kw == "anyOf":
-        return _ck_any_of([rec(s) for s in sch])
-    if kw == "oneOf":
-        return _ck_one_of([rec(s) for s in sch])
-    if kw == "not":
-        return _ck_not(rec(sch))
-    return None  # unknown keyword -> vacuous (reference index.js:73)
-
-
-def _ck_type(sch: Any):
-    types = sch if isinstance(sch, list) else [sch]
-    expected = " or ".join(str(t) for t in types)
-    tset = set(types)
+def _ck_type(c: ir.Type, tr: _Translator):
+    tset = set(c.types)
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         actual = json_type_of(dtype)
-        ok_static = actual in tset
-        if ok_static:
+        if actual in tset or (actual == "number" and c.integer and _is_integral(dtype)):
             return _empty_errors()
-        if actual == "number":
-            if _is_integral(dtype) and "integer" in tset:
-                return _empty_errors()
-            if "integer" in tset and not _is_integral(dtype):
-                # runtime integrality check on a float column
-                violated = value.isNotNull() & (value != F.floor(value))
-                err = _err_struct(
-                    path, "type", F.lit("Invalid type"),
-                    F.lit(expected), F.lit("number"),
-                )
-                return _leaf(violated, err)
+        if actual == "number" and c.integer:
+            # runtime integrality check on a float column
+            err = _err_struct(path, c.keyword, F.lit(c.message), F.lit(c.expected),
+                              F.lit("number"))
+            return _leaf(value.isNotNull() & (value != F.floor(value)), err)
         # statically wrong type: every non-null value fails
-        err = _err_struct(
-            path, "type", F.lit("Invalid type"), F.lit(expected), F.lit(actual)
-        )
+        err = _err_struct(path, c.keyword, F.lit(c.message), F.lit(c.expected), F.lit(actual))
         return _leaf(value.isNotNull(), err)
 
-    nulls = [] if "null" in tset else [("type", "Invalid type", expected, "null", 0)]
+    nulls = [] if "null" in tset else [(c.keyword, c.message, c.expected, "null", 0)]
     return _with_null_rows(emit, nulls)
 
 
@@ -584,9 +426,7 @@ def _sorted_maps(col: Column, dtype: T.DataType) -> Column:
     return col
 
 
-def _ck_enum(sch: Any):
-    expected = human_list("or", [json_repr(x) for x in sch])
-
+def _ck_enum(c: ir.Enum, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         # each enum literal is coerced into the column's exact dtype at
         # compile time; comparison is then structural (1 == 1.0 holds, and
@@ -597,60 +437,55 @@ def _ck_enum(sch: Any):
         # the literal JSONs, which Catalyst constant-folds): HOF exprs get
         # no common-subexpression elimination, so K eqNullSafe copies
         # would re-sort the row's maps K times.
-        lits = [_typed_literal(x, dtype) for x in sch]
-        lits = [c for c in lits if c is not None]
+        lits = [_typed_literal(x, dtype) for x in c.values]
+        lits = [x for x in lits if x is not None]
         if not lits:
             ok = F.lit(False)
         elif _contains_map(dtype):
-            lit_jsons = F.array(*[F.to_json(_sorted_maps(c, dtype)) for c in lits])
+            lit_jsons = F.array(*[F.to_json(_sorted_maps(x, dtype)) for x in lits])
             ok = F.coalesce(
                 F.array_contains(lit_jsons, F.to_json(_sorted_maps(value, dtype))),
                 F.lit(False),
             )
         else:
             ok = F.lit(False)
-            for c in lits:
-                ok = ok | value.eqNullSafe(c)
-        err = _err_struct(path, "enum", F.lit(""), F.lit(expected), value.cast("string"))
+            for x in lits:
+                ok = ok | value.eqNullSafe(x)
+        err = _err_struct(path, c.keyword, F.lit(c.message), F.lit(c.expected),
+                          value.cast("string"))
         return _leaf(value.isNotNull() & ~ok, err)
 
-    nulls = [] if None in sch else [("enum", "", expected, "null", 0)]
+    nulls = [] if None in c.values else [(c.keyword, c.message, c.expected, "null", 0)]
     return _with_null_rows(emit, nulls)
 
 
-def _ck_bound(sch: Any, excl: Any, is_min: bool):
-    excl = excl if isinstance(excl, bool) else False
-
+def _ck_bound(c: ir.Bound, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if _is_numeric(dtype):
-            bound = F.lit(sch)
+            bound = F.lit(c.limit)
         elif isinstance(dtype, (T.TimestampType, T.DateType)):
-            bound = F.lit(sch).cast(dtype)  # engine extension
+            bound = F.lit(c.limit).cast(dtype)  # engine extension
         else:
             return _empty_errors()
-        if is_min:
-            ok = value > bound if excl else value >= bound
-            msg = f"less than {'or equal to ' if excl else ''}{sch}"
-            kw = "minimum"
+        if c.is_min:
+            ok = value > bound if c.exclusive else value >= bound
         else:
-            ok = value < bound if excl else value <= bound
-            msg = f"greater than {'or equal to ' if excl else ''}{sch}"
-            kw = "maximum"
-        err = _err_struct(path, kw, F.lit(msg))
+            ok = value < bound if c.exclusive else value <= bound
+        err = _err_struct(path, c.keyword, F.lit(c.message))
         return _leaf(value.isNotNull() & ~ok, err)
 
     return emit
 
 
-def _ck_multiple_of(sch: Any):
+def _ck_multiple_of(c: ir.MultipleOf, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not _is_numeric(dtype):
             return _empty_errors()
-        if _is_integral(dtype) and isinstance(sch, int):
-            ok = value % F.lit(sch) == 0
+        if _is_integral(dtype) and isinstance(c.divisor, int):
+            ok = value % F.lit(c.divisor) == 0
         else:
-            ok = (value.cast("double") / F.lit(float(sch))) % 1 == 0
-        err = _err_struct(path, "multipleOf", F.lit(f"not a multiple of {sch}"))
+            ok = (value.cast("double") / F.lit(float(c.divisor))) % 1 == 0
+        err = _err_struct(path, c.keyword, F.lit(c.message))
         return _leaf(value.isNotNull() & ~ok, err)
 
     return emit
@@ -677,51 +512,38 @@ def nfc_length_udf():
     return _nfc_len
 
 
-#: module switch consulted by _ck_length; set via compile_columnar kwarg
-_NFC_LENGTHS = False
-
-
-def _ck_length(sch: Any, is_min: bool):
-    use_nfc = _NFC_LENGTHS
+def _ck_size(c: ir.Size, tr: _Translator):
+    """min/maxLength over strings, min/maxItems over arrays and
+    min/maxProperties over structs (non-null fields) and maps."""
+    use_nfc = tr.nfc_lengths
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if not isinstance(dtype, T.StringType):
-            return _empty_errors()
-        n = nfc_length_udf()(value) if use_nfc else F.length(value)
-        if is_min:
-            ok, kw, msg = n >= sch, "minLength", f"shorter than {sch} characters"
+        if c.guard == "string" and isinstance(dtype, T.StringType):
+            n = nfc_length_udf()(value) if use_nfc else F.length(value)
+        elif c.guard == "array" and isinstance(dtype, T.ArrayType):
+            n = F.size(value)
+        elif c.guard == "object" and isinstance(dtype, T.MapType):
+            n = F.size(F.map_keys(value))
+        elif c.guard == "object" and isinstance(dtype, T.StructType):
+            # present properties = non-null fields (NULL ≡ absent)
+            n = sum((F.when(value[f.name].isNotNull(), 1).otherwise(0) for f in dtype.fields),
+                    start=F.lit(0))
         else:
-            ok, kw, msg = n <= sch, "maxLength", f"longer than {sch} characters"
-        err = _err_struct(path, kw, F.lit(msg))
+            return _empty_errors()
+        ok = n >= c.limit if c.is_min else n <= c.limit
+        err = _err_struct(path, c.keyword, F.lit(c.message))
         return _leaf(value.isNotNull() & ~ok, err)
 
     return emit
 
 
-def _ck_pattern(sch: Any):
-    jp = _jrx(sch)  # dialect-divergent constructs raise at compile time
-
+def _ck_pattern(c: ir.Pattern, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not isinstance(dtype, T.StringType):
             return _empty_errors()
         # rlike = java.util.regex find -> unanchored, like JS RegExp.test
-        err = _err_struct(path, "pattern", F.lit(f"does not match /{sch}/"))
-        return _leaf(value.isNotNull() & ~value.rlike(jp), err)
-
-    return emit
-
-
-def _ck_items_count(sch: Any, is_min: bool):
-    def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if not isinstance(dtype, T.ArrayType):
-            return _empty_errors()
-        n = F.size(value)
-        if is_min:
-            ok, kw, msg = n >= sch, "minItems", f"less than {sch} items"
-        else:
-            ok, kw, msg = n <= sch, "maxItems", f"more than {sch} items"
-        err = _err_struct(path, kw, F.lit(msg))
-        return _leaf(value.isNotNull() & ~ok, err)
+        err = _err_struct(path, c.keyword, F.lit(c.message))
+        return _leaf(value.isNotNull() & ~value.rlike(c.regex.java), err)
 
     return emit
 
@@ -752,156 +574,114 @@ def _positive_zeros(col: Column, dtype: T.DataType) -> Column:
     return F.when(col.isNotNull(), inner)
 
 
-def _ck_unique_items(sch: Any):
+def _ck_unique_items(c: ir.UniqueItems, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if not isinstance(dtype, T.ArrayType) or sch is False:
+        if not isinstance(dtype, T.ArrayType) or not c.unique:
             return _empty_errors()
         ndup = F.size(value) - F.size(F.array_distinct(_positive_zeros(value, dtype)))
-        msg = F.concat(
-            F.lit("does not contain unique values: "),
-            ndup.cast("string"),
-            F.lit(" duplicate"),
-            F.when(ndup == 1, F.lit("")).otherwise(F.lit("s")),
-            F.lit(" found"),
-        )
-        err = _err_struct(path, "uniqueItems", msg)
+        err = _err_struct(path, c.keyword, _say(c.words, ndup))
         return _leaf(value.isNotNull() & (ndup > 0), err)
 
     return emit
 
 
-def _ck_props_count(sch: Any, is_min: bool):
+def _required_in_map(c: ir.Required, m: Column, path: Column) -> Column:
+    return _concat_errors([
+        _leaf(m.isNotNull() & ~F.map_contains_key(m, req), _err_struct(path, c.keyword, F.lit(msg)))
+        for req, msg in zip(c.names, c.messages)])
+
+
+def _ck_required(c: ir.Required, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if isinstance(dtype, T.MapType):
-            n = F.size(F.map_keys(value))
-        elif isinstance(dtype, T.StructType):
-            # present properties = non-null fields (NULL ≡ absent)
-            n = sum(
-                (F.when(value[f.name].isNotNull(), 1).otherwise(0) for f in dtype.fields),
-                start=F.lit(0),
-            )
-        else:
+            return _required_in_map(c, value, path)
+        if not isinstance(dtype, T.StructType):
             return _empty_errors()
-        if is_min:
-            ok, kw, msg = n >= sch, "minProperties", f"less than {sch} properties"
-        else:
-            ok, kw, msg = n <= sch, "maxProperties", f"more than {sch} properties"
-        err = _err_struct(path, kw, F.lit(msg))
-        return _leaf(value.isNotNull() & ~ok, err)
+        fields = {f.name for f in dtype.fields}
+        return _concat_errors([
+            _leaf(value.isNotNull() & value[req].isNull() if req in fields else value.isNotNull(),
+                  _err_struct(path, c.keyword, F.lit(msg)))
+            for req, msg in zip(c.names, c.messages)])
 
     return emit
 
 
-def _ck_required(sch: Any):
+def _field_errors(value: Column, name: str, child: Column) -> Column:
+    """``child`` for struct field ``name``: a NULL struct or field is an
+    absent property, on which no keyword runs (a compound like 'not'
+    would otherwise fail on it)."""
+    return F.when(value.isNull() | value[name].isNull(), _empty_errors()).otherwise(child)
+
+
+def _at_key(path: Column, key) -> Column:
+    return F.concat(path, F.array(F.lit(key) if isinstance(key, str) else key))
+
+
+def _ck_properties(c: ir.Properties, tr: _Translator):
+    subs = [(key, tr.node(sub)) for key, sub in c.entries]
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if isinstance(dtype, T.StructType):
-            fields = {f.name for f in dtype.fields}
-            parts = []
-            for req in sch:
-                err = _err_struct(path, "required", F.lit(f"missing {req}"))
-                if req not in fields:
-                    parts.append(_leaf(value.isNotNull(), err))
-                else:
-                    parts.append(_leaf(value.isNotNull() & value[req].isNull(), err))
-            return _concat_errors(parts)
+            fields = {f.name: f.dataType for f in dtype.fields}
+            # an absent property vacuously passes
+            return _concat_errors([
+                _field_errors(value, key, sub(value[key], fields[key], _at_key(path, key)))
+                for key, sub in subs if key in fields])
         if isinstance(dtype, T.MapType):
-            parts = [
-                _leaf(
-                    value.isNotNull() & ~F.map_contains_key(value, req),
-                    _err_struct(path, "required", F.lit(f"missing {req}")),
-                )
-                for req in sch
-            ]
-            return _concat_errors(parts)
+            return _concat_errors([
+                F.when(value.isNull() | ~F.map_contains_key(value, key), _empty_errors())
+                .otherwise(_emit_json(sub, value.getItem(key), dtype.valueType,
+                                      _at_key(path, key)))
+                for key, sub in subs])
         return _empty_errors()
 
     return emit
 
 
-def _ck_properties(subs: Dict[str, ColumnarNode], raw: dict):
+def _ck_pattern_properties(c: ir.PatternProperties, tr: _Translator):
+    subs = [(regex, tr.node(sub)) for regex, sub in c.entries]
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if isinstance(dtype, T.StructType):
-            fields = {f.name: f.dataType for f in dtype.fields}
-            parts = []
-            for key, sub in subs.items():
-                if key not in fields:
-                    continue  # absent property vacuously passes
-                child = sub.emit(
-                    value[key], fields[key], F.concat(path, F.array(F.lit(key)))
-                )
-                # a NULL field is an absent property: no keyword runs (a
-                # compound like 'not' would otherwise fail on it)
-                parts.append(
-                    F.when(value.isNull() | value[key].isNull(), _empty_errors())
-                    .otherwise(child)
-                )
-            return _concat_errors(parts)
-        if isinstance(dtype, T.MapType):
-            parts = []
-            for key, sub in subs.items():
-                v = value.getItem(key)
-                child = _emit_json(
-                    sub, v, dtype.valueType, F.concat(path, F.array(F.lit(key)))
-                )
-                parts.append(
-                    F.when(
-                        value.isNull() | ~F.map_contains_key(value, key), _empty_errors()
-                    ).otherwise(child)
-                )
-            return _concat_errors(parts)
-        return _empty_errors()
-
-    return emit
-
-
-def _ck_pattern_properties(subs: List[Tuple[str, "re.Pattern", ColumnarNode]]):
-    def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if isinstance(dtype, T.StructType):
-            fields = {f.name: f.dataType for f in dtype.fields}
-            parts = []
             # cross-product regex x static field names, resolved at compile time
-            for _raw, rx, sub in subs:
-                for name, ftype in fields.items():
-                    if rx.search(name):
-                        child = sub.emit(
-                            value[name], ftype, F.concat(path, F.array(F.lit(name)))
-                        )
-                        parts.append(
-                            F.when(
-                                value.isNull() | value[name].isNull(), _empty_errors()
-                            ).otherwise(child)
-                        )
-            return _concat_errors(parts)
+            return _concat_errors([
+                _field_errors(value, f.name, sub(value[f.name], f.dataType,
+                                                      _at_key(path, f.name)))
+                for regex, sub in subs for f in dtype.fields if regex.python.search(f.name)])
         if isinstance(dtype, T.MapType):
-            parts = []
-            for raw, _rx, sub in subs:
-                matched = F.map_filter(value, lambda k, _v: k.rlike(raw))
-                entry_errs = F.transform(
-                    F.map_entries(matched),
-                    lambda e: _emit_json(
-                        sub, e["value"], dtype.valueType,
-                        F.concat(path, F.array(e["key"])),
-                    ),
-                )
-                parts.append(
-                    F.when(value.isNull(), _empty_errors()).otherwise(
-                        F.flatten(entry_errs)
-                    )
-                )
-            return _concat_errors(parts)
+            return _concat_errors([
+                F.when(value.isNull(), _empty_errors()).otherwise(F.flatten(F.transform(
+                    F.map_entries(F.map_filter(value, lambda k, _v: k.rlike(regex.java))),
+                    lambda e: _emit_json(sub, e["value"], dtype.valueType,
+                                         _at_key(path, e["key"])))))
+                for regex, sub in subs])
         return _empty_errors()
 
     return emit
 
 
-def _ck_additional_properties(
-    sch, sub, props: dict, patterns: List[Tuple[str, "re.Pattern"]]
-):
+def _invalid_keys(c: ir.AdditionalProperties, keys: Column, child: Callable,
+                  path: Column) -> Column:
+    """additionalProperties' compound error over the runtime ``keys``;
+    ``child(k)`` is the errors of key k's value."""
+    child_arrays = F.transform(keys, child)
+    children = F.flatten(child_arrays)
+    fail_keys = F.filter(
+        F.zip_with(keys, child_arrays, lambda k, errs: F.when(F.size(errs) > 0, k)),
+        lambda x: x.isNotNull(),
+    )
+    nf = F.size(fail_keys)
+    return _compound(nf > 0, path, c.keyword, _say(c.invalid, nf, fail_keys), children)
+
+
+def _ck_additional_properties(c: ir.AdditionalProperties, tr: _Translator):
+    sub = tr.node(c.additional) if isinstance(c.additional, ir.Node) else None
+
     def is_additional(name: str) -> bool:
-        return name not in props and not any(rx.search(name) for _j, rx in patterns)
+        return name not in c.known and not any(rx.python.search(name) for rx in c.patterns)
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        if sch is True:
+        if c.additional is True:
             return _empty_errors()
         if isinstance(dtype, T.StructType):
             # compile-time column-set difference (zero runtime cost for the
@@ -909,158 +689,112 @@ def _ck_additional_properties(
             add = [f for f in dtype.fields if is_additional(f.name)]
             if not add:
                 return _empty_errors()
-            if sch is False:
+            if c.additional is False:
                 # present additional props = non-null additional fields
-                present = F.array_compact(
-                    F.array(
-                        *[
-                            F.when(value[f.name].isNotNull(), F.lit(f.name))
-                            for f in add
-                        ]
-                    )
-                )
+                present = F.array_compact(F.array(
+                    *[F.when(value[f.name].isNotNull(), F.lit(f.name)) for f in add]))
                 n = F.size(present)
-                msg = F.concat(
-                    F.lit("additional propert"),
-                    F.when(n == 1, F.lit("y")).otherwise(F.lit("ies")),
-                    F.lit(" found: "),
-                    _human_list_col("and", present),
-                )
-                err = _err_struct(path, "additionalProperties", msg)
+                err = _err_struct(path, c.keyword, _say(c.found, n, present))
                 return _leaf(value.isNotNull() & (n > 0), err)
             # schema form: validate each additional field
-            fail_names = []
-            child_parts = []
-            for f in add:
-                child = sub.emit(
-                    value[f.name], f.dataType, F.concat(path, F.array(F.lit(f.name)))
-                )
-                child = F.when(
-                    value.isNull() | value[f.name].isNull(), _empty_errors()
-                ).otherwise(child)
-                child_parts.append(child)
-                fail_names.append(F.when(F.size(child) > 0, F.lit(f.name)))
+            child_parts = [
+                _field_errors(value, f.name, sub(value[f.name], f.dataType,
+                                                      _at_key(path, f.name)))
+                for f in add]
             children = _concat_errors(child_parts)
-            failed_props = F.array_compact(F.array(*fail_names))
+            failed_props = F.array_compact(F.array(*[
+                F.when(F.size(child) > 0, F.lit(f.name)) for f, child in zip(add, child_parts)]))
             nf = F.size(failed_props)
-            msg = F.concat(
-                F.lit("additional propert"),
-                F.when(nf == 1, F.lit("y")).otherwise(F.lit("ies")),
-                F.lit(" invalid: "),
-                _human_list_col("and", failed_props),
-            )
-            return _compound(nf > 0, path, "additionalProperties", msg, children)
+            return _compound(nf > 0, path, c.keyword, _say(c.invalid, nf, failed_props),
+                             children)
         if isinstance(dtype, T.MapType):
             addkeys = F.filter(
                 F.map_keys(value),
-                lambda k: ~k.isin(list(props))
-                & ~F.coalesce(
-                    F.array_max(F.array(*[k.rlike(j) for j, _rx in patterns]))
-                    if patterns
-                    else F.lit(False),
+                lambda k: ~k.isin(list(c.known)) & ~F.coalesce(
+                    F.array_max(F.array(*[k.rlike(rx.java) for rx in c.patterns]))
+                    if c.patterns else F.lit(False),
                     F.lit(False),
                 ),
             )
             n = F.size(addkeys)
-            if sch is False:
-                msg = F.concat(
-                    F.lit("additional propert"),
-                    F.when(n == 1, F.lit("y")).otherwise(F.lit("ies")),
-                    F.lit(" found: "),
-                    _human_list_col("and", addkeys),
-                )
-                err = _err_struct(path, "additionalProperties", msg)
+            if c.additional is False:
+                err = _err_struct(path, c.keyword, _say(c.found, n, addkeys))
                 return _leaf(value.isNotNull() & (n > 0), err)
             # schema form over map values
-            child_arrays = F.transform(
-                addkeys,
-                lambda k: _emit_json(
-                    sub, value[k], dtype.valueType, F.concat(path, F.array(k))
-                ),
-            )
-            children = F.flatten(child_arrays)
-            fail_keys = F.filter(
-                F.zip_with(addkeys, child_arrays, lambda k, errs: F.when(F.size(errs) > 0, k)),
-                lambda x: x.isNotNull(),
-            )
-            nf = F.size(fail_keys)
-            msg = F.concat(
-                F.lit("additional propert"),
-                F.when(nf == 1, F.lit("y")).otherwise(F.lit("ies")),
-                F.lit(" invalid: "),
-                _human_list_col("and", fail_keys),
-            )
-            return F.when(value.isNull(), _empty_errors()).otherwise(
-                _compound(nf > 0, path, "additionalProperties", msg, children)
-            )
+            return F.when(value.isNull(), _empty_errors()).otherwise(_invalid_keys(
+                c, addkeys,
+                lambda k: _emit_json(sub, value[k], dtype.valueType, _at_key(path, k)), path))
         return _empty_errors()
 
     return emit
 
 
-def _ck_items_homogeneous(sub: ColumnarNode):
+def _ck_items(c: ir.Items, tr: _Translator):
+    sub = tr.node(c.node)
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not isinstance(dtype, T.ArrayType):
             return _empty_errors()
-        per_element = F.transform(
-            value,
-            lambda x, i: _emit_json(
-                sub, x, dtype.elementType, F.concat(path, F.array(i.cast("string")))
-            ),
-        )
+        per_element = F.transform(value, lambda x, i: _emit_json(
+            sub, x, dtype.elementType, _at_key(path, i.cast("string"))))
         return F.when(value.isNull(), _empty_errors()).otherwise(F.flatten(per_element))
 
     return emit
 
 
-def _ck_items_tuple(subs: List[ColumnarNode], add_sch: Any, add_node: Optional[ColumnarNode]):
+def _ck_tuple_items(c: ir.TupleItems, tr: _Translator):
+    subs = [tr.node(sub) for sub in c.nodes]
+    add_node = tr.node(c.additional) if isinstance(c.additional, ir.Node) else None
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not isinstance(dtype, T.ArrayType):
             return _empty_errors()
-        et = dtype.elementType
-        parts = []
-        for i, sub in enumerate(subs):
-            elem = F.element_at(value, i + 1)
-            child = _emit_json(sub, elem, et, F.concat(path, F.array(F.lit(str(i)))))
-            parts.append(
-                F.when(value.isNull() | (F.size(value) <= i), _empty_errors()).otherwise(
-                    child
-                )
-            )
-        k = len(subs)
-        if add_sch is False:
-            extra = F.when(
-                value.isNotNull() & (F.size(value) > k),
-                F.transform(
-                    F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
-                    lambda _x, i: _err_struct(
-                        F.concat(path, F.array((i + k).cast("string"))),
-                        "items",
-                        F.lit("additional item found"),
-                    ),
-                ),
-            ).otherwise(_empty_errors())
-            parts.append(extra)
+        et, k = dtype.elementType, len(subs)
+        parts = [
+            F.when(value.isNull() | (F.size(value) <= i), _empty_errors()).otherwise(
+                _emit_json(sub, F.element_at(value, i + 1), et, _at_key(path, str(i))))
+            for i, sub in enumerate(subs)]
+        if c.additional is False:
+            rest = F.transform(
+                F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
+                lambda _x, i: _err_struct(_at_key(path, (i + k).cast("string")),
+                                          c.keyword, F.lit(c.message)))
         elif add_node is not None:
-            extra = F.when(
-                value.isNotNull() & (F.size(value) > k),
-                F.flatten(
-                    F.transform(
-                        F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
-                        lambda x, i: _emit_json(
-                            add_node, x, et,
-                            F.concat(path, F.array((i + k).cast("string"))),
-                        ),
-                    )
-                ),
-            ).otherwise(_empty_errors())
-            parts.append(extra)
-        return _concat_errors(parts)
+            rest = F.flatten(F.transform(
+                F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
+                lambda x, i: _emit_json(add_node, x, et, _at_key(path, (i + k).cast("string")))))
+        else:
+            return _concat_errors(parts)
+        extra = F.when(value.isNotNull() & (F.size(value) > k), rest).otherwise(_empty_errors())
+        return _concat_errors(parts + [extra])
 
     return emit
 
 
-def _ck_dependencies(deps: List[Tuple[str, Any, Optional[ColumnarNode]]]):
+def _dependency_errors(c: ir.Dependencies, guard: Column, has: Callable,
+                       schema_errors: Callable, path: Column) -> Column:
+    """dependencies over an object value: ``has(name)`` tests a property,
+    ``schema_errors(dep)`` is the value's errors under a schema form."""
+    parts = []
+    for dep in c.entries:
+        present = guard & has(dep.key)
+        if isinstance(dep, ir.DependentSchema):
+            children = schema_errors(dep)
+            parts.append(_compound(present & (F.size(children) > 0), path, c.keyword,
+                                   F.lit(dep.message), children))
+            continue
+        children = F.array_compact(F.array(*[
+            F.when(~has(d), _err_struct(path, c.keyword, F.lit(msg)))
+            for d, msg in zip(dep.names, dep.messages)]))
+        nm = F.size(children)
+        parts.append(_compound(present & (nm > 0), path, c.keyword, _say(dep.words, nm),
+                               children))
+    return _concat_errors(parts)
+
+
+def _ck_dependencies(c: ir.Dependencies, tr: _Translator):
+    subs = {dep: tr.node(dep.node) for dep in c.entries if isinstance(dep, ir.DependentSchema)}
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if isinstance(dtype, T.StructType):
             fields = {f.name for f in dtype.fields}
@@ -1074,116 +808,100 @@ def _ck_dependencies(deps: List[Tuple[str, Any, Optional[ColumnarNode]]]):
                 return F.map_contains_key(value, name)
         else:
             return _empty_errors()
-        parts = []
-        for key, dep, sub in deps:
-            present = value.isNotNull() & has(key)
-            if isinstance(dep, list):
-                missing_entries = []
-                for d in dep:
-                    d_missing = ~has(d)
-                    missing_entries.append(
-                        F.when(
-                            d_missing,
-                            _err_struct(
-                                path,
-                                "dependencies",
-                                F.lit(f'Missing "{d}" given "{key}"'),
-                            ),
-                        )
-                    )
-                children = F.array_compact(F.array(*missing_entries))
-                nm = F.size(children)
-                msg = F.concat(
-                    F.lit("Missing dependenc"),
-                    F.when(nm == 1, F.lit("y ")).otherwise(F.lit("ies ")),
-                    F.lit(f'for "{key}"'),
-                )
-                parts.append(_compound(present & (nm > 0), path, "dependencies", msg, children))
-            elif sub is not None:
-                children = sub.emit(value, dtype, path)
-                parts.append(
-                    _compound(
-                        present & (F.size(children) > 0),
-                        path,
-                        "dependencies",
-                        F.lit(f'Failed dependency for "{key}"'),
-                        children,
-                    )
-                )
-        return _concat_errors(parts)
+        return _dependency_errors(c, value.isNotNull(), has,
+                                  lambda dep: subs[dep](value, dtype, path), path)
 
     return emit
 
 
-def _ck_all_of(subs: List[ColumnarNode]):
+# The combinators over the errors arrays of their branches at one value
+# (shared with variant.py).
+
+
+def _all_of_errors(c: ir.AllOf, arrays: List[Column], path: Column) -> Column:
+    children = _concat_errors(arrays)
+    return _compound(F.size(children) > 0, path, c.keyword, F.lit(c.message), children)
+
+
+def _any_of_errors(c: ir.AnyOf, arrays: List[Column], path: Column) -> Column:
+    n_fail = sum((F.when(F.size(x) > 0, 1).otherwise(0) for x in arrays), start=F.lit(0))
+    return _compound(n_fail == len(arrays), path, c.keyword, F.lit(c.message),
+                     _concat_errors(arrays))
+
+
+def _one_of_errors(c: ir.OneOf, arrays: List[Column], path: Column) -> Column:
+    n_ok = sum((F.when(F.size(x) == 0, 1).otherwise(0) for x in arrays), start=F.lit(0))
+    none_valid = _compound(n_ok == 0, path, c.keyword, F.lit(c.message), _concat_errors(arrays))
+    too_many = _leaf(n_ok > 1, _err_struct(path, c.keyword, F.lit(c.too_many)))
+    return F.concat(none_valid, too_many)
+
+
+def _not_errors(c: ir.Not, errors: Column, path: Column) -> Column:
+    return _leaf(F.size(errors) == 0, _err_struct(path, c.keyword, F.lit(c.message)))
+
+
+def _ck_all_of(c: ir.AllOf, tr: _Translator):
+    subs = [tr.node(sub) for sub in c.nodes]
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        children = _concat_errors([s.emit(value, dtype, path) for s in subs])
-        return _compound(
-            F.size(children) > 0, path, "allOf", F.lit("Not all conditions valid"), children
-        )
+        return _all_of_errors(c, [s(value, dtype, path) for s in subs], path)
 
     children = [r for s in subs for r in s.null_rows]
-    nulls = [("allOf", "Not all conditions valid", None, None, 0)] if children else []
+    nulls = [(c.keyword, c.message, None, None, 0)] if children else []
     return _with_null_rows(emit, nulls + _bump_rows(children))
 
 
-def _ck_any_of(subs: List[ColumnarNode]):
+def _ck_any_of(c: ir.AnyOf, tr: _Translator):
+    subs = [tr.node(sub) for sub in c.nodes]
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not subs:
             return _empty_errors()
-        child_arrays = [s.emit(value, dtype, path) for s in subs]
-        n_fail = sum(
-            (F.when(F.size(c) > 0, 1).otherwise(0) for c in child_arrays),
-            start=F.lit(0),
-        )
-        children = _concat_errors(child_arrays)
-        return _compound(
-            n_fail == len(subs), path, "anyOf", F.lit("No conditions valid"), children
-        )
+        return _any_of_errors(c, [s(value, dtype, path) for s in subs], path)
 
     nulls = []
     if subs and all(s.null_rows for s in subs):
-        nulls = [("anyOf", "No conditions valid", None, None, 0)]
+        nulls = [(c.keyword, c.message, None, None, 0)]
         nulls += _bump_rows([r for s in subs for r in s.null_rows])
     return _with_null_rows(emit, nulls)
 
 
-def _ck_one_of(subs: List[ColumnarNode]):
+def _ck_one_of(c: ir.OneOf, tr: _Translator):
+    subs = [tr.node(sub) for sub in c.nodes]
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        child_arrays = [s.emit(value, dtype, path) for s in subs]
-        n_ok = sum(
-            (F.when(F.size(c) == 0, 1).otherwise(0) for c in child_arrays),
-            start=F.lit(0),
-        )
-        fail_children = _concat_errors(child_arrays)
-        none_valid = _compound(
-            n_ok == 0, path, "oneOf", F.lit("No conditions valid"), fail_children
-        )
-        too_many = _leaf(
-            n_ok > 1,
-            _err_struct(path, "oneOf", F.lit("More than one condition valid")),
-        )
-        return F.concat(none_valid, too_many)
+        return _one_of_errors(c, [s(value, dtype, path) for s in subs], path)
 
     n_ok = sum(not s.null_rows for s in subs)
     nulls = []
     if n_ok == 0:
-        nulls = [("oneOf", "No conditions valid", None, None, 0)]
+        nulls = [(c.keyword, c.message, None, None, 0)]
         nulls += _bump_rows([r for s in subs for r in s.null_rows])
     if n_ok > 1:
-        nulls.append(("oneOf", "More than one condition valid", None, None, 0))
+        nulls.append((c.keyword, c.too_many, None, None, 0))
     return _with_null_rows(emit, nulls)
 
 
-def _ck_not(sub: ColumnarNode):
+def _ck_not(c: ir.Not, tr: _Translator):
+    sub = tr.node(c.node)
+
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
-        child = sub.emit(value, dtype, path)
-        return _leaf(
-            F.size(child) == 0, _err_struct(path, "not", F.lit("condition valid"))
-        )
+        return _not_errors(c, sub(value, dtype, path), path)
 
-    nulls = [] if sub.null_rows else [("not", "condition valid", None, None, 0)]
+    nulls = [] if sub.null_rows else [(c.keyword, c.message, None, None, 0)]
     return _with_null_rows(emit, nulls)
+
+
+#: IR check kind -> the function making its emitter
+_EMITTERS: Dict[type, Callable] = {
+    ir.Type: _ck_type, ir.Enum: _ck_enum, ir.Bound: _ck_bound,
+    ir.MultipleOf: _ck_multiple_of, ir.Size: _ck_size, ir.Pattern: _ck_pattern,
+    ir.UniqueItems: _ck_unique_items, ir.Required: _ck_required,
+    ir.Properties: _ck_properties, ir.PatternProperties: _ck_pattern_properties,
+    ir.AdditionalProperties: _ck_additional_properties, ir.Items: _ck_items,
+    ir.TupleItems: _ck_tuple_items, ir.Dependencies: _ck_dependencies,
+    ir.AllOf: _ck_all_of, ir.AnyOf: _ck_any_of, ir.OneOf: _ck_one_of, ir.Not: _ck_not,
+}
 
 
 def _human_list_col(last: str, arr: Column) -> Column:

@@ -2,28 +2,25 @@
 
 Re-expresses the reference's recursive interpreter (reference index.js:56-63:
 for each schema key dispatch a predicate, fold results applicatively so ALL
-failures accumulate) as a one-time compilation to Python source:
+failures accumulate) as a one-time compilation to Python source. The
+keyword semantics, ``$ref`` resolution, value checks and wording live in
+``compiler/ir.py``; this module translates the IR's checks into source:
 
-* $ref chains resolved at compile time with cycle detection
-  (reference src/context.js:16-37 semantics; cycle/unknown -> raise here,
-  at plan time, instead of at cursor-focus time).
-* unknown keywords elided (reference index.js:73, src/predicate.js:58,85 —
-  unknown -> vacuous success; also 'default', 'definitions', 'format', 'id').
-* regexes precompiled (the reference deliberately recompiles per evaluation,
-  src/v4/pattern.js:18 — a documented naivety we do not reproduce).
 * every keyword predicate keeps its universal type guard: vacuous success
   when the value is not of the type the keyword applies to
   (e.g. reference src/v4/pattern.js:16).
+* regexes are compiled once, as constants of the source (the reference
+  deliberately recompiles per evaluation, src/v4/pattern.js:18 — a
+  documented naivety we do not reproduce).
 
-The generated source holds one function per schema node (memoized per
-``(base, id(node))``, so a recursive schema becomes mutually recursive
-functions). Inside a function the value's JSON type is looked up once, the
-keyword checks are straight-line ``if``s in schema-key order under that
-guard, and a function returns ``None`` for a valid value. Errors carry
-value paths relative to the node that made them; a parent prefixes its key
-only when a child failed, so a valid document builds no path at all.
-``anyOf`` stops at the first passing branch and ``oneOf`` at the second:
-the discarded branches could not change the result.
+The generated source holds one function per IR node (a recursive schema
+becomes mutually recursive functions). Inside a function the value's JSON
+type is looked up once, the checks are straight-line ``if``s in schema-key
+order under that guard, and a function returns ``None`` for a valid value.
+Errors carry value paths relative to the node that made them; a parent
+prefixes its key only when a child failed, so a valid document builds no
+path at all. ``anyOf`` stops at the first passing branch and ``oneOf`` at
+the second: the discarded branches could not change the result.
 
 Every constant (messages, enum sets, translated regexes) is a literal in
 the source, so the text alone determines the kernel: ``load_kernel``
@@ -44,26 +41,15 @@ from __future__ import annotations
 
 import functools
 import itertools
-import json
 import math
 import re
 import unicodedata
 from dataclasses import dataclass
-from typing import Any, Callable, Dict, List, Optional, Tuple
+from typing import Any, Callable, Dict, List, Optional
 
-from schema_fantasy_spark.errors import (
-    COMPOUND,
-    SINGLE,
-    VALUES,
-    Err,
-    human_list,
-)
-from schema_fantasy_spark.compiler.linker import (
-    CyclicRefError,
-    UnknownResourceError,
-    resolve_ref,
-)
-from schema_fantasy_spark.compiler.regex_dialect import RegexDialectError, python_pattern
+from schema_fantasy_spark.compiler import ir
+from schema_fantasy_spark.compiler.ir import SchemaCompileError, json_repr
+from schema_fantasy_spark.errors import COMPOUND, SINGLE, VALUES, Err
 
 #: The kernel's nesting budget: it looks inside containers at most this
 #: many levels below the document root. A deeper document raises
@@ -72,10 +58,6 @@ from schema_fantasy_spark.compiler.regex_dialect import RegexDialectError, pytho
 #: nodes each cost several frames per level may still run out of stack
 #: first; that RecursionError is quarantined the same way.
 MAX_DEPTH = 512
-
-
-class SchemaCompileError(Exception):
-    pass
 
 
 class NestingError(RecursionError):
@@ -130,13 +112,6 @@ def canonical(v: Any):
     return (t[0], v)
 
 
-def json_repr(v: Any) -> str:
-    """Stringify a JSON value for error messages."""
-    if isinstance(v, str):
-        return v
-    return json.dumps(v, separators=(",", ":"), sort_keys=True)
-
-
 def ulength(s: str) -> int:
     """Code-point length after NFC normalization (reference
     src/v4/minLength.js:18-22 + src/ulength.js:9-17 — surrogate pairs
@@ -171,15 +146,6 @@ def _at(errs: list, key) -> list:
     return errs
 
 
-def _props_msg(verb: str, keys: list) -> str:
-    return (f"additional propert{'y' if len(keys) == 1 else 'ies'} {verb}: "
-            + human_list("and", keys))
-
-
-def _unique_msg(n: int) -> str:
-    return f"does not contain unique values: {n} duplicate{'' if n == 1 else 's'} found"
-
-
 def _deep():
     raise NestingError(f"document nests deeper than {MAX_DEPTH} levels")
 
@@ -192,8 +158,8 @@ def _vacuous(v, d):
 _RUNTIME = {
     "_Err": Err, "_T": _TYPES, "_type_of": type_of, "_isint": is_integer,
     "_canon": canonical, "_json": json_repr, "_ulen": ulength, "_add": _add,
-    "_cat": _cat, "_at": _at, "_props_msg": _props_msg,
-    "_unique_msg": _unique_msg, "_deep": _deep, "_vacuous": _vacuous, "_re": re,
+    "_cat": _cat, "_at": _at, "_props_msg": ir.props_message,
+    "_unique_msg": ir.unique_message, "_deep": _deep, "_vacuous": _vacuous, "_re": re,
 }
 
 
@@ -244,7 +210,7 @@ def generate_source(schema: Any, refs: Optional[Dict[str, Any]] = None,
     ``f<n>(v, d)`` per schema node (``d`` is the value's nesting depth)
     returning ``None`` or a non-empty error list, and ``kernel``, the
     root. The same schema always yields the same text."""
-    return _Generator(refs or {}).run(base, schema)
+    return _Generator().run(ir.lower(schema, refs, base))
 
 
 # ------------------------------------------------------------- the generator
@@ -287,7 +253,7 @@ def _add_err(*args, **kw) -> str:
 
 @dataclass
 class _Block:
-    """The source lines of one keyword, run when the value's JSON type
+    """The source lines of one check, run when the value's JSON type
     ``t`` is ``guard`` (always when None); ``descends`` if they call
     children at depth ``d1``, ``typed`` if they read ``t`` unguarded."""
 
@@ -298,16 +264,15 @@ class _Block:
 
 
 class _Generator:
-    def __init__(self, refs: Dict[str, Any]):
-        self.refs = refs
-        #: (base, id(node)) -> function name, None for a node without checks
-        self.memo: Dict[Tuple[str, int], Optional[str]] = {}
+    def __init__(self):
+        #: IR node -> function name, None for a node without checks
+        self.memo: Dict[ir.Node, Optional[str]] = {}
         self.n_funcs = 0
         self.consts: Dict[str, str] = {}  # literal expression -> name
         self.funcs: List[str] = []
 
-    def run(self, base: str, schema: Any) -> str:
-        root = self.node(base, schema, schema)
+    def run(self, root: ir.Node) -> str:
+        root = self.node(root)
         consts = [f"{name} = {expr}" for expr, name in self.consts.items()]
         return "\n".join(consts + self.funcs + [f"kernel = {root or '_vacuous'}", ""])
 
@@ -317,37 +282,24 @@ class _Generator:
             name = self.consts[expr] = f"_k{len(self.consts)}"
         return name
 
-    def regex(self, pattern: str) -> str:
-        """Name of the compiled regex constant for a draft-4 pattern (JS
-        spellings translated, dialect-divergent constructs rejected)."""
-        try:
-            rx = python_pattern(pattern)
-        except RegexDialectError as e:
-            raise SchemaCompileError(str(e)) from None
-        return self.const(f"_re.compile({rx.pattern!r}, {rx.flags})")
+    def regex(self, rx: ir.Regex) -> str:
+        """Name of the compiled regex constant of a pattern."""
+        return self.const(f"_re.compile({rx.python.pattern!r}, {rx.python.flags})")
 
-    def node(self, base: str, doc: Any, node: Any) -> Optional[str]:
+    def node(self, node: ir.Node) -> Optional[str]:
         """Name of the function validating ``node``; None if it never fails."""
-        base, doc, node = resolve_ref(self.refs, base, doc, node)
-        if not isinstance(node, dict):
-            return None  # boolean/scalar schema: keysIn -> [] -> vacuous success
-        key = (base, id(node))
-        if key in self.memo:
-            return self.memo[key]  # done, or in progress (a recursive $ref)
-        name = self.memo[key] = f"f{self.n_funcs}"
+        if node is ir.ANY:
+            return None
+        if node in self.memo:
+            return self.memo[node]  # done, or in progress (a recursive $ref)
+        name = self.memo[node] = f"f{self.n_funcs}"
         self.n_funcs += 1
-        blocks: List[_Block] = []
-        for kw in node:  # schema key order = accumulation order
-            try:
-                block = self.keyword(kw, node[kw], node, lambda s: self.node(base, doc, s))
-            except re.error as e:
-                raise SchemaCompileError(f"bad regex in {kw!r}: {e}") from e
-            if block is not None:
-                blocks.append(block)
+        blocks = [b for b in (self.HANDLERS[type(c)](self, c) for c in node.checks)
+                  if b is not None]
         if not blocks:
             # later callers skip the node; a recursive $ref met while it
             # was in progress may already call it by name
-            self.memo[key] = None
+            self.memo[node] = None
             self.funcs.append(f"{name} = _vacuous\n")
             return None
         lines = [f"def {name}(v, d):", "    e = None"]
@@ -365,143 +317,96 @@ class _Generator:
         self.funcs.append("\n".join(lines) + "\n")
         return name
 
-    # ------------------------------------------------------------ keywords
+    # -------------------------------------------------------------- checks
+    # each: the block of one IR check, None for a check that never fails
 
-    def keyword(self, kw: str, sch: Any, node: dict, rec: Callable) -> Optional[_Block]:
-        """The block checking keyword ``kw`` (value ``sch``) of ``node``;
-        None for a keyword that never fails. ``rec`` compiles a subschema."""
-        if kw == "type":
-            types = sch if isinstance(sch, list) else [sch]
-            tset = set(types)
-            expected = " or ".join(str(t) for t in types)
-            ok = f"t in {self.const(f'frozenset({_lit(types)})')}"
-            if "integer" in tset and "number" not in tset:
-                ok += " or (t == 'number' and _isint(v))"
-            return _Block(None, [f"if not ({ok}):",
-                                 "    " + _add_err(VALUES, "type", "'Invalid type'", "()",
-                                                   repr(expected), "t")], typed=True)
-        if kw == "enum":
-            allowed = self.const(f"frozenset(map(_canon, {_lit(list(sch))}))")
-            expected = human_list("or", [json_repr(x) for x in sch])
-            # a str's canonical form is ('s', str): test strs directly
-            strs = self.const(f"frozenset({_lit([x for x in sch if isinstance(x, str)])})")
-            miss = f"v not in {strs} if v.__class__ is str else _canon(v) not in {allowed}"
-            return _Block(None, [f"if {miss}:",
-                                 "    " + _add_err(VALUES, "enum", "''", "()",
-                                                   repr(expected), "_json(v)")])
-        if kw in ("minimum", "maximum"):
-            excl = node.get("exclusiveM" + kw[1:])
-            excl = excl if isinstance(excl, bool) else False  # non-boolean -> false
-            op = {"minimum": ">", "maximum": "<"}[kw] + ("" if excl else "=")
-            word = {"minimum": "less", "maximum": "greater"}[kw]
-            msg = f"{word} than {'or equal to ' if excl else ''}{sch}"
-            return _Block("number", [f"if not v {op} {_lit(sch)}:",
-                                     "    " + _add_err(SINGLE, kw, repr(msg))])
-        if kw == "multipleOf":
-            ok = f"(v / {_lit(sch)}) % 1 == 0"  # float semantics, IEEE754 like JS
-            if isinstance(sch, int) and sch != 0:
-                ok = f"(v % {_lit(sch)} == 0 if isinstance(v, int) else {ok})"
-            return _Block("number", [f"if not {ok}:", "    " + _add_err(
-                SINGLE, "multipleOf", repr(f"not a multiple of {sch}"))])
-        if kw in ("minLength", "maxLength"):
-            op, msg = ((">=", f"shorter than {sch} characters") if kw == "minLength"
-                       else ("<=", f"longer than {sch} characters"))
-            return _Block("string", [f"if not _ulen(v) {op} {_lit(sch)}:",
-                                     "    " + _add_err(SINGLE, kw, repr(msg))])
-        if kw == "pattern":
-            return _Block("string", [f"if not {self.regex(sch)}.search(v):", "    " + _add_err(
-                SINGLE, "pattern", repr(f"does not match /{sch}/"))])
-        if kw in ("minItems", "maxItems", "minProperties", "maxProperties"):
-            guard = "array" if kw.endswith("Items") else "object"
-            noun = "items" if guard == "array" else "properties"
-            op, word = (">=", "less") if kw.startswith("min") else ("<=", "more")
-            return _Block(guard, [f"if not len(v) {op} {_lit(sch)}:", "    " + _add_err(
-                SINGLE, kw, repr(f"{word} than {sch} {noun}"))])
-        if kw == "uniqueItems":
-            if sch is False:
-                return None
-            return _Block("array", [
-                "n = len(v) - len({_canon(x) for x in v})",
-                "if n:",
-                "    " + _add_err(SINGLE, "uniqueItems", "_unique_msg(n)")])
-        if kw == "required":
-            # one error per missing key (reference src/v4/required.js:18-24
-            # returns an array of Validations)
-            lines = []
-            for req in sch:
-                lines += [f"if {_lit(req)} not in v:",
-                          "    " + _add_err(SINGLE, "required", repr(f"missing {req}"))]
-            return _Block("object", lines) if lines else None
-        if kw == "properties":
-            lines = []
-            for key, sub in sch.items():
-                fn = rec(sub)
-                if fn is not None:  # absent keys vacuously pass
-                    lines += [f"if {_lit(key)} in v:",
-                              f"    r = {fn}(v[{_lit(key)}], d1)",
-                              f"    if r: e = _cat(e, _at(r, {_lit(key)}))"]
-            return _Block("object", lines, True) if lines else None
-        if kw == "patternProperties":
-            # cross-product schema-regex x value-keys, schema order outer
-            # (reference src/v4/patternProperties.js:31 xprod)
-            lines = []
-            for raw, sub in sch.items():
-                rx, fn = self.regex(raw), rec(sub)
-                if fn is not None:
-                    lines += [f"for k in filter({rx}.search, v):",
-                              f"    r = {fn}(v[k], d1)",
-                              "    if r: e = _cat(e, _at(r, k))"]
-            return _Block("object", lines, True) if lines else None
-        if kw == "additionalProperties":
-            return self.additional_properties(sch, node, rec)
-        if kw == "items":
-            if isinstance(sch, dict):
-                fn = rec(sch)
-                if fn is None:
-                    return None
-                return _Block("array", ["for i, x in enumerate(v):",
-                                        f"    r = {fn}(x, d1)",
-                                        "    if r: e = _cat(e, _at(r, i))"], True)
-            if isinstance(sch, list):
-                return self.items_tuple(sch, node.get("additionalItems"), rec)
+    def type_(self, c: ir.Type) -> _Block:
+        ok = f"t in {self.const(f'frozenset({_lit(list(c.types))})')}"
+        if c.integer and "number" not in c.types:
+            ok += " or (t == 'number' and _isint(v))"
+        return _Block(None, [f"if not ({ok}):",
+                             "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
+                                               repr(c.expected), "t")], typed=True)
+
+    def enum(self, c: ir.Enum) -> _Block:
+        allowed = self.const(f"frozenset(map(_canon, {_lit(list(c.values))}))")
+        # a str's canonical form is ('s', str): test strs directly
+        strs = self.const(f"frozenset({_lit([x for x in c.values if isinstance(x, str)])})")
+        miss = f"v not in {strs} if v.__class__ is str else _canon(v) not in {allowed}"
+        return _Block(None, [f"if {miss}:",
+                             "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
+                                               repr(c.expected), "_json(v)")])
+
+    @staticmethod
+    def _single(guard: str, ok: str, c: ir.Check) -> _Block:
+        """A check failing with its fixed message when ``ok`` is false."""
+        return _Block(guard, [f"if not {ok}:",
+                              "    " + _add_err(SINGLE, c.keyword, repr(c.message))])
+
+    def bound(self, c: ir.Bound) -> _Block:
+        op = (">" if c.is_min else "<") + ("" if c.exclusive else "=")
+        return self._single("number", f"v {op} {_lit(c.limit)}", c)
+
+    def multiple_of(self, c: ir.MultipleOf) -> _Block:
+        ok = f"(v / {_lit(c.divisor)}) % 1 == 0"  # float semantics, IEEE754 like JS
+        if isinstance(c.divisor, int):
+            ok = f"(v % {_lit(c.divisor)} == 0 if isinstance(v, int) else {ok})"
+        return self._single("number", ok, c)
+
+    def size(self, c: ir.Size) -> _Block:
+        n = "_ulen(v)" if c.guard == "string" else "len(v)"
+        return self._single(c.guard, f"{n} {'>=' if c.is_min else '<='} {_lit(c.limit)}", c)
+
+    def pattern(self, c: ir.Pattern) -> _Block:
+        return self._single("string", f"{self.regex(c.regex)}.search(v)", c)
+
+    def unique_items(self, c: ir.UniqueItems) -> Optional[_Block]:
+        if not c.unique:
             return None
-        if kw == "dependencies":
-            return self.dependencies(sch, rec)
-        if kw == "allOf":
-            return self.all_of([rec(s) for s in sch])
-        if kw == "anyOf":
-            return self.any_of([rec(s) for s in sch])
-        if kw == "oneOf":
-            return self.one_of([rec(s) for s in sch])
-        if kw == "not":
-            fn = rec(sch)
-            lines = [_add_err(SINGLE, "not", "'condition valid'")]
+        return _Block("array", [
+            "n = len(v) - len({_canon(x) for x in v})",
+            "if n:",
+            "    " + _add_err(SINGLE, c.keyword, "_unique_msg(n)")])
+
+    def required(self, c: ir.Required) -> Optional[_Block]:
+        lines = []
+        for name, msg in zip(c.names, c.messages):
+            lines += [f"if {_lit(name)} not in v:",
+                      "    " + _add_err(SINGLE, c.keyword, repr(msg))]
+        return _Block("object", lines) if lines else None
+
+    def properties(self, c: ir.Properties) -> Optional[_Block]:
+        lines = []
+        for key, sub in c.entries:
+            fn = self.node(sub)
+            if fn is not None:  # absent keys vacuously pass
+                lines += [f"if {_lit(key)} in v:",
+                          f"    r = {fn}(v[{_lit(key)}], d1)",
+                          f"    if r: e = _cat(e, _at(r, {_lit(key)}))"]
+        return _Block("object", lines, True) if lines else None
+
+    def pattern_properties(self, c: ir.PatternProperties) -> Optional[_Block]:
+        lines = []
+        for regex, sub in c.entries:
+            rx, fn = self.regex(regex), self.node(sub)
             if fn is not None:
-                lines = [f"if not {fn}(v, d):", "    " + lines[0]]
-            return _Block(None, lines)
-        # '$ref' beside other keywords: resolve_ref already replaced the
-        # node by its target (draft-4 ignores the siblings). Unknown
-        # keywords and the non-predicates ('default', 'definitions',
-        # 'format', 'id', ...): vacuous success (reference index.js:73,
-        # src/predicate.js:34-59)
-        return None
+                lines += [f"for k in filter({rx}.search, v):",
+                          f"    r = {fn}(v[k], d1)",
+                          "    if r: e = _cat(e, _at(r, k))"]
+        return _Block("object", lines, True) if lines else None
 
-    def additional_properties(self, sch: Any, node: dict, rec: Callable) -> Optional[_Block]:
-        if sch is True:
+    def additional_properties(self, c: ir.AdditionalProperties) -> Optional[_Block]:
+        if c.additional is True:
             return None
-        if not (sch is False or isinstance(sch, dict)):
-            raise SchemaCompileError(
-                f"additionalProperties must be a boolean or a schema, not {sch!r}")
-        props = node.get("properties") or {}
-        known = self.const(f"frozenset({_lit(list(props))})")
+        known = self.const(f"frozenset({_lit(list(c.known))})")
         extra = f"k not in {known}" + "".join(
-            f" and not {self.regex(p)}.search(k)" for p in (node.get("patternProperties") or {}))
-        if sch is False:
+            f" and not {self.regex(p)}.search(k)" for p in c.patterns)
+        if c.additional is False:
             return _Block("object", [
                 f"if not v.keys() <= {known}:",
                 f"    a = [k for k in v if {extra}]",
-                "    if a: " + _add_err(SINGLE, "additionalProperties", "_props_msg('found', a)")])
-        fn = rec(sch)
+                "    if a: " + _add_err(SINGLE, c.keyword, "_props_msg('found', a)")])
+        fn = self.node(c.additional)
         if fn is None:
             return None
         # object schema: validate each additional prop via focusValue
@@ -514,83 +419,107 @@ class _Generator:
             "            if r:",
             "                a = _add(a, k)",
             "                c = _cat(c, _at(r, k))",
-            "    if a: " + _add_err(COMPOUND, "additionalProperties",
-                                    "_props_msg('invalid', a)", children="c")], True)
+            "    if a: " + _add_err(COMPOUND, c.keyword, "_props_msg('invalid', a)",
+                                    children="c")], True)
 
-    def items_tuple(self, subs: list, add_sch: Any, rec: Callable) -> Optional[_Block]:
+    def items(self, c: ir.Items) -> Optional[_Block]:
+        fn = self.node(c.node)
+        if fn is None:
+            return None
+        return _Block("array", ["for i, x in enumerate(v):",
+                                f"    r = {fn}(x, d1)",
+                                "    if r: e = _cat(e, _at(r, i))"], True)
+
+    def tuple_items(self, c: ir.TupleItems) -> Optional[_Block]:
         lines = []
-        for i, sub in enumerate(subs):
-            fn = rec(sub)
+        for i, sub in enumerate(c.nodes):
+            fn = self.node(sub)
             if fn is not None:
                 lines += [f"if len(v) > {i}:",
                           f"    r = {fn}(v[{i}], d1)",
                           f"    if r: e = _cat(e, _at(r, {i}))"]
-        n = len(subs)
-        if add_sch is False:
+        n = len(c.nodes)
+        if c.additional is False:
             lines += [f"for i in range({n}, len(v)):",
-                      "    " + _add_err(SINGLE, "items", "'additional item found'", "(i,)")]
-        elif isinstance(add_sch, dict):
-            fn = rec(add_sch)
+                      "    " + _add_err(SINGLE, c.keyword, repr(c.message), "(i,)")]
+        elif c.additional is not True:
+            fn = self.node(c.additional)
             if fn is not None:
                 lines += [f"for i in range({n}, len(v)):",
                           f"    r = {fn}(v[i], d1)",
                           "    if r: e = _cat(e, _at(r, i))"]
         return _Block("array", lines, True) if lines else None
 
-    def dependencies(self, sch: dict, rec: Callable) -> Optional[_Block]:
+    def dependencies(self, c: ir.Dependencies) -> Optional[_Block]:
         lines = []
-        for key, dep in sch.items():
-            if isinstance(dep, list):
-                if not dep:
-                    continue
-                lines += [f"if {_lit(key)} in v:", "    m = None"]
-                for name in dep:
-                    lines += [f"    if {_lit(name)} not in v:", "        m = _add(m, " + _err(
-                        SINGLE, "dependencies", repr(f'Missing "{name}" given "{key}"')) + ")"]
-                one, many = (repr(f'Missing dependenc{s}for "{key}"') for s in ("y ", "ies "))
-                lines += ["    if m: " + _add_err(COMPOUND, "dependencies",
+        for dep in c.entries:
+            key = _lit(dep.key)
+            if isinstance(dep, ir.DependentSchema):
+                fn = self.node(dep.node)
+                if fn is not None:  # whole value re-validated, same path
+                    lines += [f"if {key} in v:",
+                              f"    r = {fn}(v, d)",
+                              "    if r: " + _add_err(COMPOUND, c.keyword, repr(dep.message),
+                                                      children="r")]
+            elif dep.names:
+                lines += [f"if {key} in v:", "    m = None"]
+                for name, msg in zip(dep.names, dep.messages):
+                    lines += [f"    if {_lit(name)} not in v:",
+                              "        m = _add(m, " + _err(SINGLE, c.keyword, repr(msg)) + ")"]
+                one, many = (repr(ir.say(dep.words, n)) for n in (1, 2))
+                lines += ["    if m: " + _add_err(COMPOUND, c.keyword,
                                                   f"{one} if len(m) == 1 else {many}",
                                                   children="m")]
-            elif isinstance(dep, dict):
-                fn = rec(dep)
-                if fn is not None:  # whole value re-validated, same path
-                    lines += [f"if {_lit(key)} in v:",
-                              f"    r = {fn}(v, d)",
-                              "    if r: " + _add_err(COMPOUND, "dependencies",
-                                                      repr(f'Failed dependency for "{key}"'),
-                                                      children="r")]
         return _Block("object", lines) if lines else None
 
-    def all_of(self, fns: List[Optional[str]]) -> Optional[_Block]:
-        fns = [fn for fn in fns if fn is not None]
+    def all_of(self, c: ir.AllOf) -> Optional[_Block]:
+        fns = [fn for fn in map(self.node, c.nodes) if fn is not None]
         if not fns:
             return None
         lines = ["c = None"]
         for fn in fns:
             lines += [f"r = {fn}(v, d)", "if r: c = _cat(c, r)"]
-        lines.append("if c: " + _add_err(COMPOUND, "allOf", "'Not all conditions valid'",
-                                         children="c"))
+        lines.append("if c: " + _add_err(COMPOUND, c.keyword, repr(c.message), children="c"))
         return _Block(None, lines)
 
-    def any_of(self, fns: List[Optional[str]]) -> Optional[_Block]:
+    def any_of(self, c: ir.AnyOf) -> Optional[_Block]:
+        fns = [self.node(n) for n in c.nodes]
         if not fns or None in fns:  # vacuous truth (reference src/v4/anyOf.js:25)
             return None
         # c holds the failures so far; None once a branch passed
         lines = [f"c = {fns[0]}(v, d)"]
         for fn in fns[1:]:
             lines += ["if c:", f"    r = {fn}(v, d)", "    c = _cat(c, r) if r else None"]
-        lines.append("if c: " + _add_err(COMPOUND, "anyOf", "'No conditions valid'",
-                                         children="c"))
+        lines.append("if c: " + _add_err(COMPOUND, c.keyword, repr(c.message), children="c"))
         return _Block(None, lines)
 
-    def one_of(self, fns: List[Optional[str]]) -> Optional[_Block]:
+    def one_of(self, c: ir.OneOf) -> _Block:
+        fns = [self.node(n) for n in c.nodes]
         # n counts passing branches; past two the verdict cannot change
         lines = ["c = None", f"n = {sum(fn is None for fn in fns)}"]
         for fn in fns:
             if fn is not None:
                 lines += ["if n < 2:", f"    r = {fn}(v, d)",
                           "    if r: c = _cat(c, r)", "    else: n += 1"]
-        lines += ["if n == 0: " + _add_err(COMPOUND, "oneOf", "'No conditions valid'",
+        lines += ["if n == 0: " + _add_err(COMPOUND, c.keyword, repr(c.message),
                                            children="c or []"),
-                  "elif n > 1: " + _add_err(SINGLE, "oneOf", "'More than one condition valid'")]
+                  "elif n > 1: " + _add_err(SINGLE, c.keyword, repr(c.too_many))]
         return _Block(None, lines)
+
+    def not_(self, c: ir.Not) -> _Block:
+        fn = self.node(c.node)
+        lines = [_add_err(SINGLE, c.keyword, repr(c.message))]
+        if fn is not None:
+            lines = [f"if not {fn}(v, d):", "    " + lines[0]]
+        return _Block(None, lines)
+
+    #: IR check kind -> the method generating its block
+    HANDLERS: Dict[type, Callable] = {
+        ir.Type: type_, ir.Enum: enum, ir.Bound: bound, ir.MultipleOf: multiple_of,
+        ir.Size: size, ir.Pattern: pattern, ir.UniqueItems: unique_items,
+        ir.Required: required, ir.Properties: properties,
+        ir.PatternProperties: pattern_properties,
+        ir.AdditionalProperties: additional_properties, ir.Items: items,
+        ir.TupleItems: tuple_items, ir.Dependencies: dependencies, ir.AllOf: all_of,
+        ir.AnyOf: any_of, ir.OneOf: one_of, ir.Not: not_,
+    }

@@ -21,9 +21,13 @@ dynamic kernel). The three dialects agree on the common core; this module
   ``\\a``, ``\\Q``, ``\\z``, ``\\x`` without two hex digits, ``\\k`` in a
   pattern without named groups, ``\\B`` in a class, ...): Java reads
   several of them as classes, anchors or quotes and Python rejects most,
-  so the translator emits the bare letter. ``[^]`` (any character) and
-  ``[]`` (matches nothing), errors in both Java and Python, are spelled
-  as ``[\\s\\S]`` and ``[^\\s\\S]``.
+  so the translator emits the bare letter. A digit escape ``\\N`` is a
+  backreference only outside a class in a pattern with at least N
+  capturing groups; otherwise ``\\8`` and ``\\9`` are identity escapes and
+  the rest a legacy octal escape (``\\12`` is U+000A, ``\\400`` is a space
+  then '0'), spelled ``\\xHH``. ``[^]`` (any character) and ``[]``
+  (matches nothing), errors in both Java and Python, are spelled as
+  ``[\\s\\S]`` and ``[^\\s\\S]``.
 * with ``strict=True``, RAISES :class:`RegexDialectError` at schema-compile
   time for those same constructs instead — for deployments that would
   rather reject a schema than reproduce Annex-B legacy semantics.
@@ -61,6 +65,9 @@ _MEANINGFUL = set("bBdDwWsSfnrtvcxukpP")
 _EMPTY_CLASS = re.compile(r"\[\^?\]")
 #: a named group opener (?<name>, not a lookbehind
 _NAMED_GROUP = re.compile(r"\(\?<(?![=!])")
+#: a legacy octal escape's digits: \377 at most, \400 is \40 then '0'
+_OCTAL = re.compile(r"[0-3][0-7]{0,2}|[4-7][0-7]?")
+_DIGITS = re.compile(r"[0-9]+")
 #: valid quantifier brace forms: {n}, {n,}, {n,m} (ECMA-262 + Java + re)
 _QUANT = re.compile(r"\{\d+(?:,\d*)?\}")
 #: non-capturing and lookaround group openers: (?: (?= (?! (?<= (?<!
@@ -100,6 +107,12 @@ def _fold_nonspace(body: str, neg: bool) -> str:
     return "(?:[" + body + "]|[^" + _JS_SPACE + "])"
 
 
+def _count_groups(pattern: str) -> int:
+    """The number of capturing groups, numbered and named, in ``pattern``."""
+    bare = re.sub(r"\\.|\[(?:\\.|[^\]\\])*\]", "", pattern)  # no escapes, no classes
+    return len(re.findall(r"\((?!\?)|\(\?<(?![=!])", bare))
+
+
 def _translate(pattern: str, target: str, strict: bool = False) -> str:
     out = []
     i, n = 0, len(pattern)
@@ -116,6 +129,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
     prev_atom = False
     # without a named group, flagless '\k' is an identity escape
     named = bool(_NAMED_GROUP.search(pattern))
+    groups = _count_groups(pattern)
     while i < n:
         ch = pattern[i]
         if ch == "\\":
@@ -209,9 +223,24 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 i = j + 1
                 prev_atom = True
                 continue
-            if nxt == "0" and (i + 2 >= n or not pattern[i + 2].isdigit()):
+            if nxt == "0" and not (i + 2 < n and pattern[i + 2] in "01234567"):
                 out.append("\\x00")  # bare \0 is NUL in JS; octal-error in Java
                 i += 2
+                prev_atom = True
+                continue
+            if nxt in "123456789" and (
+                in_class or int(_DIGITS.match(pattern, i + 1).group(0)) > groups
+            ):
+                # no such group: Annex-B reads \8 and \9 as identity
+                # escapes and the rest as a legacy octal escape
+                if strict:
+                    raise RegexDialectError(
+                        f"pattern {pattern!r}: '\\{nxt}' names no group; the reference's "
+                        "flagless RegExp reads it as a legacy octal or identity escape"
+                    )
+                m = _OCTAL.match(pattern, i + 1)
+                out.append("\\x%02X" % int(m.group(0), 8) if m else nxt)
+                i = m.end() if m else i + 2
                 prev_atom = True
                 continue
             if nxt in "sS":

@@ -2,12 +2,12 @@
 
 Spark 4's VariantType gives binary-encoded dynamic JSON with expression
 access (`parse_json`, `try_variant_get`, `schema_of_variant`). This module
-compiles a draft-4 schema into Column expressions over a variant value —
-the reference's *dynamic* type dispatch (reference src/v4/type.js:12
-``typeOf`` at evaluation time) re-expressed as runtime `schema_of_variant`
-dispatch, entirely inside codegen. It is the fast path for JSON-document
-validation; the Arrow-batched UDF (dynamic.py) remains the 100%-faithful
-fallback for recursive schemas and deep-equality corner cases.
+translates the checks of the keyword IR (``compiler/ir.py``, where the
+keyword semantics and wording live) into Column expressions over a variant
+value — the reference's *dynamic* type dispatch (reference
+src/v4/type.js:12 ``typeOf`` at evaluation time) as runtime
+`schema_of_variant` dispatch. The Arrow-batched UDF (dynamic.py) remains
+the faithful fallback for recursive schemas and deep-equality corners.
 
 Key semantic mappings:
 * missing key   -> SQL NULL variant  (try_element_at on the object map)
@@ -21,57 +21,49 @@ Key semantic mappings:
 
 Documented approximations (route to dynamic mode if they matter):
 * recursive $refs are unrolled to ``max_depth`` (beyond it the subtree
-  vacuously passes and a compile warning lists the truncation);
+  vacuously passes and the plan's warning lists the nodes cut off);
 * enum/uniqueItems deep equality canonicalizes numbers at EVERY nesting
   level down to ``CANON_DEPTH`` (so ``enum: [[1]]`` accepts ``[1.0]``,
   matching the kernel's R.equals semantics, reference src/v4/enum.js:25);
   only below that unroll depth do subtrees compare textually via
   to_json. Schemas whose ENUM literals nest past ``CANON_DEPTH`` are
-  AUTO-ROUTED to the Arrow-UDF kernel at compile time (the literal
-  depth is compile-time-known); for ``uniqueItems`` the depth of the
-  DATA cannot be known at compile time, so arrays whose elements nest
-  composites deeper than ``CANON_DEPTH`` remain the one manual-routing
-  case.
+  AUTO-ROUTED to the Arrow-UDF kernel at compile time; for
+  ``uniqueItems`` the depth of the DATA cannot be known at compile time,
+  so arrays whose elements nest composites deeper than ``CANON_DEPTH``
+  remain the one manual-routing case.
 
-MEASURED tradeoff (sf0.1 events, 100k docs, local[32], this container,
-re-measured round 5): this mode now BEATS the Arrow-batched
-compiled-kernel UDF ~1.8x on a 3-keyword schema (1.0s vs 1.8s warm);
-the UDF keeps ~2x on a 12-keyword nested schema (4.3s vs 8.2s — down
-from ~8x before the barrier work). Variant expressions evaluate
-interpreted (no whole-stage codegen, so no subexpression elimination),
-so ``VariantPlan.apply`` materializes the parsed document, its root
-map/array casts, and every root property's value + runtime type as
-Generate-barrier attributes; what remains slower on nested schemas is
-per-element HOF lambdas re-evaluating their subtrees. Conformance is
-identical (211/211 fixture cases). Prefer this mode when (a) documents
-are stored as VARIANT at rest (Parquet/Iceberg v3) so parse cost is
-already paid, and/or (b) the schema is flat-ish or touches a small
-fraction of large documents (variant reads only referenced paths; the
-UDF must json.loads everything).
-For JSON-string columns, ``VariantPlan.apply`` inserts an explode-barrier
-so the document is parsed exactly once per row (a naive inline
-``parse_json`` re-parses per keyword: measured 3.8x slower).
+Variant expressions evaluate interpreted (no whole-stage codegen, so no
+subexpression elimination), so ``VariantPlan.apply`` parses each JSON
+document once and materializes its root map/array casts and every root
+property's value + runtime type as Generate-barrier attributes (a naive
+inline ``parse_json`` re-parses per keyword: measured 3.8x slower). Prefer
+this mode when documents are stored as VARIANT at rest, or the schema is
+flat-ish or touches a small fraction of large documents (variant reads
+only referenced paths; the UDF must json.loads everything).
 """
 
 from __future__ import annotations
 
-import re
-from typing import Any, Callable, Dict, List, Optional, Tuple
+import json
+from typing import Any, Callable, Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from schema_fantasy_spark.errors import human_list
-from schema_fantasy_spark.compiler.linker import resolve_ref
-from schema_fantasy_spark.compiler.plan import json_repr
+from schema_fantasy_spark.compiler import ir
 from schema_fantasy_spark.columnar import (
-    _bump_depth,
-    _jrx,
-    _compound,
+    _all_of_errors,
+    _any_of_errors,
+    _at_key,
     _concat_errors,
+    _dependency_errors,
     _empty_errors,
     _err_struct,
-    _human_list_col,
+    _invalid_keys,
     _leaf,
+    _not_errors,
+    _one_of_errors,
+    _required_in_map,
+    _say,
 )
 
 #: JSON runtime type of a variant value (NULL for SQL-NULL = absent).
@@ -130,14 +122,6 @@ def as_map(v: Column) -> Column:
     return F.try_variant_get(v, "$", "map<string,variant>")
 
 
-def is_integer_variant(
-    v: Column, m: Optional[Column] = None, a: Optional[Column] = None
-) -> Column:
-    """number AND integral (float64 semantics, like the reference's JS)."""
-    d = as_double(v)
-    return (vtype(v, m, a) == "number") & d.isNotNull() & (d == F.floor(d))
-
-
 def canonical_str(
     v: Column, m: Optional[Column] = None, a: Optional[Column] = None
 ) -> Column:
@@ -168,8 +152,6 @@ def _const_canonical(values) -> Optional[List[str]]:
     Spark's own double->string, so Python-side formatting is not an
     option. Returns None when no session is active (caller falls back to
     per-row expressions)."""
-    import json as _json
-
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
@@ -179,7 +161,7 @@ def _const_canonical(values) -> Optional[List[str]]:
         spark.range(1)
         .select(
             *[
-                canonical_json(F.parse_json(F.lit(_json.dumps(x)))).alias(f"c{i}")
+                canonical_json(F.parse_json(F.lit(json.dumps(x)))).alias(f"c{i}")
                 for i, x in enumerate(values)
             ]
         )
@@ -233,37 +215,15 @@ class VariantCompileWarning:
         self.truncated_paths: List[str] = []
 
 
-class VariantNode:
-    __slots__ = ("emit",)
-
-    def __init__(self, emit):  # emit(v, path, m=None, a=None) -> errors
-        self.emit = emit  # (variant_value, path) -> errors array
-
-
-def _literal_depth(v: Any) -> int:
-    """Nesting depth of a JSON literal: scalars 0, each list/dict level 1."""
-    if isinstance(v, list):
-        return 1 + max((_literal_depth(x) for x in v), default=0)
-    if isinstance(v, dict):
-        return 1 + max((_literal_depth(x) for x in v.values()), default=0)
-    return 0
+def _max_enum_depth(schema: Any, refs: Optional[Dict[str, Any]] = None,
+                    base: str = "") -> int:
+    """Max literal depth across the enums the schema's validation reaches."""
+    return _enum_depth(ir.lower(schema, refs, base))
 
 
-def _max_enum_depth(schema: Any) -> int:
-    """Max literal depth across every ``enum`` in the schema tree. The
-    walk is generic over dicts/lists, so an enum VALUE that happens to
-    contain an "enum" key is counted too — over-counting only routes a
-    schema to the (always-correct) kernel, never the reverse."""
-    if isinstance(schema, dict):
-        best = 0
-        for k, v in schema.items():
-            if k == "enum" and isinstance(v, list):
-                best = max(best, max((_literal_depth(x) for x in v), default=0))
-            best = max(best, _max_enum_depth(v))
-        return best
-    if isinstance(schema, list):
-        return max((_max_enum_depth(x) for x in schema), default=0)
-    return 0
+def _enum_depth(root: ir.Node) -> int:
+    return max((c.depth for node in ir.reachable(root) for c in node.checks
+                if isinstance(c, ir.Enum)), default=0)
 
 
 def compile_variant(
@@ -273,47 +233,46 @@ def compile_variant(
     max_depth: int = 6,
 ):
     """Compile to a VariantPlan. Recursive schemas unroll ``max_depth``
-    levels; deeper subtrees vacuously pass (recorded in plan.warning).
-
-    Schemas whose enum literals nest deeper than ``CANON_DEPTH`` are
-    AUTO-ROUTED to the Arrow-UDF kernel at compile time: below that
-    unroll depth variant deep-equality would compare subtrees textually
-    via to_json, diverging from the reference's R.equals number
-    semantics (src/v4/enum.js:24-28) when e.g. ``1`` vs ``1.0`` sits at
-    depth 7 — the compiler knows the literal depth, so the divergence is
-    routed away instead of documented. ``plan.kernel_routed`` records it."""
+    levels; deeper subtrees vacuously pass (plan.warning lists the schema
+    paths of the nodes cut off). Schemas whose enum literals nest deeper
+    than ``CANON_DEPTH`` are routed to the Arrow-UDF kernel at compile
+    time (``plan.kernel_routed``): below that depth variant deep equality
+    compares subtrees textually, so ``1`` and ``1.0`` would differ
+    (reference src/v4/enum.js:24-28 R.equals)."""
     refs = refs or {}
     warning = VariantCompileWarning()
-    if _max_enum_depth(schema) > CANON_DEPTH:
+    root = ir.lower(schema, refs, base)
+    if _enum_depth(root) > CANON_DEPTH:
         return VariantPlan(None, schema, warning, refs=refs, kernel_routed=True)
 
-    def compile_node(cur_base: str, cur_doc: Any, node: Any, depth: int, spath: str) -> VariantNode:
-        cur_base, cur_doc, node = resolve_ref(refs, cur_base, cur_doc, node)
-        if not isinstance(node, dict):
-            return VariantNode(lambda v, p, m=None, a=None, t=None, pm=None: _empty_errors())
-        if depth > max_depth:
-            warning.truncated_paths.append(spath)
-            return VariantNode(lambda v, p, m=None, a=None, t=None, pm=None: _empty_errors())
+    def vacuous(v, p, m=None, a=None, t=None, pm=None):
+        return _empty_errors()
 
-        emitters = []
-        for kw in node:
-            e = _compile_keyword(kw, node[kw], node, cur_base, cur_doc, depth, spath, compile_node)
-            if e is not None:
-                emitters.append(e)
+    def unroll(node: ir.Node, depth: int) -> Callable:
+        """The emitter ``emit(v, path, m, a, t, pm)`` -> errors of ``node``;
+        its ``props`` are the names its ``properties`` check reads."""
+        if node is ir.ANY:
+            return vacuous
+        if depth > max_depth:
+            warning.truncated_paths.append(node.path)
+            return vacuous
+        emitters = [_EMITTERS[type(c)](c, lambda sub: unroll(sub, depth + 1))
+                    for c in node.checks]
+        emitters = [e for e in emitters if e is not None]
 
         def emit(v: Column, path: Column, m=None, a=None, t=None, pm=None) -> Column:
             return _concat_errors([em(v, path, m, a, t, pm) for em in emitters])
 
-        return VariantNode(emit)
+        emit.props = [k for c in node.checks if isinstance(c, ir.Properties) for k, _s in c.entries]
+        return emit
 
-    root = compile_node(base, schema, schema, 0, "#")
-    return VariantPlan(root, schema, warning, refs=refs)
+    return VariantPlan(unroll(root, 0), schema, warning, refs=refs)
 
 
 class VariantPlan:
     def __init__(
         self,
-        root: Optional[VariantNode],
+        root: Optional[Callable],
         schema: Any,
         warning: VariantCompileWarning,
         refs: Optional[Dict[str, Any]] = None,
@@ -342,7 +301,7 @@ class VariantPlan:
             from schema_fantasy_spark.dynamic import json_errors_udf
 
             return json_errors_udf(self.schema, refs=self.refs)(F.to_json(v))
-        return self._root.emit(v, F.array().cast("array<string>"), m, a, None, pm)
+        return self._root(v, F.array().cast("array<string>"), m, a, None, pm)
 
     def apply(
         self,
@@ -405,11 +364,7 @@ class VariantPlan:
         # optimization; measured ~2x on the 3-keyword props gate query.
         pm = None
         drop = ["__v", "__vx"]
-        props = (
-            list(self.schema.get("properties") or {})
-            if isinstance(self.schema, dict)
-            else []
-        )
+        props = getattr(self._root, "props", [])
         if props:
             m_attr = F.col("__vx.m")
             step = step.select(
@@ -458,135 +413,35 @@ class VariantPlan:
         return out.withColumn(verdict_col, F.size(F.col(errors_col)) == 0)
 
 
-# ------------------------------------------------------------ keyword emit
+# -------------------------------------------------------------- check emit
+# One function per IR check kind: (check, rec) -> emit(v, p, m, a, t, pm)
+# -> errors array, or None to elide; ``rec`` unrolls a subschema one
+# level deeper.
 
 
-def _compile_keyword(kw, sch, node, base, doc, depth, spath, compile_node):
-    rec = lambda sub, tag: compile_node(base, doc, sub, depth + 1, f"{spath}/{tag}")  # noqa: E731
-
-    if kw == "type":
-        return _vk_type(sch)
-    if kw == "enum":
-        return _vk_enum(sch)
-    if kw == "minimum":
-        return _vk_bound(sch, node.get("exclusiveMinimum"), True)
-    if kw == "maximum":
-        return _vk_bound(sch, node.get("exclusiveMaximum"), False)
-    if kw == "multipleOf":
-        return _vk_multiple_of(sch)
-    if kw == "minLength":
-        return _vk_length(sch, True)
-    if kw == "maxLength":
-        return _vk_length(sch, False)
-    if kw == "pattern":
-        return _vk_pattern(sch)
-    if kw == "minItems":
-        return _vk_items_count(sch, True)
-    if kw == "maxItems":
-        return _vk_items_count(sch, False)
-    if kw == "uniqueItems":
-        return _vk_unique_items(sch)
-    if kw == "minProperties":
-        return _vk_props_count(sch, True)
-    if kw == "maxProperties":
-        return _vk_props_count(sch, False)
-    if kw == "required":
-        return _vk_required(sch)
-    if kw == "properties":
-        return _vk_properties({k: rec(s, f"properties/{k}") for k, s in sch.items()})
-    if kw == "patternProperties":
-        return _vk_pattern_properties(
-            [(p, rec(s, f"patternProperties/{p}")) for p, s in sch.items()]
-        )
-    if kw == "additionalProperties":
-        props = list(node.get("properties") or {})
-        patterns = list(node.get("patternProperties") or {})
-        sub = rec(sch, "additionalProperties") if isinstance(sch, dict) else None
-        return _vk_additional_properties(sch, sub, props, patterns)
-    if kw == "items":
-        if isinstance(sch, list):
-            add_sch = node.get("additionalItems")
-            add_node = rec(add_sch, "additionalItems") if isinstance(add_sch, dict) else None
-            return _vk_items_tuple(
-                [rec(s, f"items/{i}") for i, s in enumerate(sch)], add_sch, add_node
-            )
-        if isinstance(sch, dict):
-            return _vk_items_homogeneous(rec(sch, "items"))
-        return None
-    if kw == "dependencies":
-        deps = [
-            (k, d, rec(d, f"dependencies/{k}") if isinstance(d, dict) else None)
-            for k, d in sch.items()
-        ]
-        return _vk_dependencies(deps)
-    if kw == "allOf":
-        subs = [rec(s, f"allOf/{i}") for i, s in enumerate(sch)]
-        return lambda v, p, m=None, a=None, t=None, pm=None: _compound(
-            F.size(ch := _concat_errors([s.emit(v, p, m, a, t, pm) for s in subs])) > 0,
-            p, "allOf", F.lit("Not all conditions valid"), ch,
-        )
-    if kw == "anyOf":
-        subs = [rec(s, f"anyOf/{i}") for i, s in enumerate(sch)]
-        if not subs:
-            return None
-
-        def any_emit(v, p, m=None, a=None, t=None, pm=None, _subs=subs):
-            arrs = [s.emit(v, p, m, a, t, pm) for s in _subs]
-            n_fail = sum((F.when(F.size(x) > 0, 1).otherwise(0) for x in arrs), start=F.lit(0))
-            return _compound(
-                n_fail == len(_subs), p, "anyOf", F.lit("No conditions valid"),
-                _concat_errors(arrs),
-            )
-
-        return any_emit
-    if kw == "oneOf":
-        subs = [rec(s, f"oneOf/{i}") for i, s in enumerate(sch)]
-
-        def one_emit(v, p, m=None, a=None, t=None, pm=None, _subs=subs):
-            arrs = [s.emit(v, p, m, a, t, pm) for s in _subs]
-            n_ok = sum((F.when(F.size(x) == 0, 1).otherwise(0) for x in arrs), start=F.lit(0))
-            none_valid = _compound(
-                n_ok == 0, p, "oneOf", F.lit("No conditions valid"), _concat_errors(arrs)
-            )
-            too_many = _leaf(
-                n_ok > 1, _err_struct(p, "oneOf", F.lit("More than one condition valid"))
-            )
-            return F.concat(none_valid, too_many)
-
-        return one_emit
-    if kw == "not":
-        sub = rec(sch, "not")
-        return lambda v, p, m=None, a=None, t=None, pm=None: _leaf(
-            F.size(sub.emit(v, p, m, a, t, pm)) == 0,
-            _err_struct(p, "not", F.lit("condition valid")),
-        )
-    return None
-
-
-def _vk_type(sch):
-    types = sch if isinstance(sch, list) else [sch]
-    expected = " or ".join(str(t) for t in types)
-    tset = set(types)
+def _vk_type(c: ir.Type, rec):
+    tset = set(c.types)
 
     def emit(v, p, m=None, a=None, t=None, pm=None):
         actual = _vt(v, m, a, t)
         ok = actual.isin([t for t in tset if t != "integer"])
-        if "integer" in tset:
+        if c.integer:
             d = as_double(v)
             ok = ok | ((actual == "number") & d.isNotNull() & (d == F.floor(d)))
-        err = _err_struct(p, "type", F.lit("Invalid type"), F.lit(expected), actual)
+        err = _err_struct(p, c.keyword, F.lit(c.message), F.lit(c.expected), actual)
         return _leaf(v.isNotNull() & ~ok, err)
 
     return emit
 
 
-def _vk_enum(sch):
-    expected = human_list("or", [json_repr(x) for x in sch])
-    num_targets = [float(x) for x in sch if isinstance(x, (int, float)) and not isinstance(x, bool)]
-    str_targets = [x for x in sch if isinstance(x, str)]
-    bool_targets = [x for x in sch if isinstance(x, bool)]
-    has_null = any(x is None for x in sch)
-    composite = [x for x in sch if isinstance(x, (list, dict))]
+def _vk_enum(c: ir.Enum, rec):
+    values = c.values
+    num_targets = [float(x) for x in values
+                   if isinstance(x, (int, float)) and not isinstance(x, bool)]
+    str_targets = [x for x in values if isinstance(x, str)]
+    bool_targets = [x for x in values if isinstance(x, bool)]
+    has_null = any(x is None for x in values)
+    composite = [x for x in values if isinstance(x, (list, dict))]
 
     def emit(v, p, m=None, a=None, t=None, pm=None):
         t = _vt(v, m, a, t)
@@ -596,10 +451,7 @@ def _vk_enum(sch):
         if str_targets:
             ok = ok | ((t == "string") & as_string(v).isin(str_targets))
         if bool_targets:
-            ok = ok | (
-                (t == "boolean")
-                & F.try_variant_get(v, "$", "boolean").isin(bool_targets)
-            )
+            ok = ok | ((t == "boolean") & F.try_variant_get(v, "$", "boolean").isin(bool_targets))
         if has_null:
             ok = ok | (t == "null")
         if composite:
@@ -615,241 +467,165 @@ def _vk_enum(sch):
             if target_strs is not None:
                 targets = F.array(*[F.lit(s) for s in target_strs])
             else:
-                import json as _json
-
-                targets = F.array(
-                    *[
-                        canonical_json(F.parse_json(F.lit(_json.dumps(x))))
-                        for x in composite
-                    ]
-                )
-            ok = ok | (
-                t.isin(["array", "object"])
-                & F.array_contains(targets, canonical_json(v))
-            )
-        err = _err_struct(p, "enum", F.lit(""), F.lit(expected), canonical_str(v, m, a))
+                targets = F.array(*[canonical_json(F.parse_json(F.lit(json.dumps(x))))
+                                    for x in composite])
+            ok = ok | (t.isin(["array", "object"]) & F.array_contains(targets, canonical_json(v)))
+        err = _err_struct(p, c.keyword, F.lit(c.message), F.lit(c.expected),
+                          canonical_str(v, m, a))
         return _leaf(v.isNotNull() & ~ok, err)
 
     return emit
 
 
-def _vk_bound(sch, excl, is_min):
-    excl = excl if isinstance(excl, bool) else False
-
+def _vk_bound(c: ir.Bound, rec):
     def emit(v, p, m=None, a=None, t=None, pm=None):
         d = as_double(v)
-        bound = F.lit(float(sch))
-        if is_min:
-            ok = d > bound if excl else d >= bound
-            msg, kw = f"less than {'or equal to ' if excl else ''}{sch}", "minimum"
+        bound = F.lit(float(c.limit))
+        if c.is_min:
+            ok = d > bound if c.exclusive else d >= bound
         else:
-            ok = d < bound if excl else d <= bound
-            msg, kw = f"greater than {'or equal to ' if excl else ''}{sch}", "maximum"
-        err = _err_struct(p, kw, F.lit(msg))
+            ok = d < bound if c.exclusive else d <= bound
+        err = _err_struct(p, c.keyword, F.lit(c.message))
         return _leaf((_vt(v, m, a, t) == "number") & ~ok, err)
 
     return emit
 
 
-def _vk_multiple_of(sch):
+def _vk_multiple_of(c: ir.MultipleOf, rec):
     def emit(v, p, m=None, a=None, t=None, pm=None):
         d = as_double(v)
-        ok = (d / F.lit(float(sch))) % 1 == 0
-        err = _err_struct(p, "multipleOf", F.lit(f"not a multiple of {sch}"))
+        ok = (d / F.lit(float(c.divisor))) % 1 == 0
+        err = _err_struct(p, c.keyword, F.lit(c.message))
         return _leaf((_vt(v, m, a, t) == "number") & ~ok, err)
 
     return emit
 
 
-def _vk_length(sch, is_min):
+def _vk_size(c: ir.Size, rec):
+    # arrays and objects are guarded via the cast probe directly
+    # (vtype=='array' is equivalent but builds the map probe first; trap:
+    # interpreted mode re-evaluates every inline reference)
     def emit(v, p, m=None, a=None, t=None, pm=None):
-        n = F.length(as_string(v))
-        if is_min:
-            ok, kw, msg = n >= sch, "minLength", f"shorter than {sch} characters"
+        if c.guard == "string":
+            n, guard = F.length(as_string(v)), _vt(v, m, a, t) == "string"
+        elif c.guard == "array":
+            arr = _a(v, a)
+            n, guard = F.size(arr), arr.isNotNull()
         else:
-            ok, kw, msg = n <= sch, "maxLength", f"longer than {sch} characters"
-        err = _err_struct(p, kw, F.lit(msg))
-        return _leaf((_vt(v, m, a, t) == "string") & ~ok, err)
+            mm = _m(v, m)
+            n, guard = F.size(F.map_keys(mm)), mm.isNotNull()
+        ok = n >= c.limit if c.is_min else n <= c.limit
+        err = _err_struct(p, c.keyword, F.lit(c.message))
+        return _leaf(guard & ~ok, err)
 
     return emit
 
 
-def _vk_pattern(sch):
-    jp = _jrx(sch)  # dialect-divergent constructs raise at compile time
-
+def _vk_pattern(c: ir.Pattern, rec):
     def emit(v, p, m=None, a=None, t=None, pm=None):
-        err = _err_struct(p, "pattern", F.lit(f"does not match /{sch}/"))
-        return _leaf((_vt(v, m, a, t) == "string") & ~as_string(v).rlike(jp), err)
+        err = _err_struct(p, c.keyword, F.lit(c.message))
+        return _leaf((_vt(v, m, a, t) == "string") & ~as_string(v).rlike(c.regex.java), err)
 
     return emit
 
 
-def _vk_items_count(sch, is_min):
-    # guard via the array probe directly (vtype=='array' is equivalent
-    # but builds the map probe first; trap: interpreted mode re-evaluates
-    # every inline reference)
+def _vk_unique_items(c: ir.UniqueItems, rec):
     def emit(v, p, m=None, a=None, t=None, pm=None):
-        arr = _a(v, a)
-        n = F.size(arr)
-        if is_min:
-            ok, kw, msg = n >= sch, "minItems", f"less than {sch} items"
-        else:
-            ok, kw, msg = n <= sch, "maxItems", f"more than {sch} items"
-        err = _err_struct(p, kw, F.lit(msg))
-        return _leaf(arr.isNotNull() & ~ok, err)
-
-    return emit
-
-
-def _vk_unique_items(sch):
-    def emit(v, p, m=None, a=None, t=None, pm=None):
-        if sch is False:
+        if not c.unique:
             return _empty_errors()
         arr = _a(v, a)
         canon = F.transform(arr, lambda x: canonical_json(x))
         ndup = F.size(canon) - F.size(F.array_distinct(canon))
-        msg = F.concat(
-            F.lit("does not contain unique values: "),
-            ndup.cast("string"),
-            F.lit(" duplicate"),
-            F.when(ndup == 1, F.lit("")).otherwise(F.lit("s")),
-            F.lit(" found"),
-        )
-        err = _err_struct(p, "uniqueItems", msg)
+        err = _err_struct(p, c.keyword, _say(c.words, ndup))
         return _leaf(arr.isNotNull() & (ndup > 0), err)
 
     return emit
 
 
-def _vk_props_count(sch, is_min):
+def _vk_required(c: ir.Required, rec):
     def emit(v, p, m=None, a=None, t=None, pm=None):
-        mm = _m(v, m)
-        n = F.size(F.map_keys(mm))
-        if is_min:
-            ok, kw, msg = n >= sch, "minProperties", f"less than {sch} properties"
-        else:
-            ok, kw, msg = n <= sch, "maxProperties", f"more than {sch} properties"
-        err = _err_struct(p, kw, F.lit(msg))
-        return _leaf(mm.isNotNull() & ~ok, err)
+        return _required_in_map(c, _m(v, m), p)
 
     return emit
 
 
-def _vk_required(sch):
-    def emit(v, p, m=None, a=None, t=None, pm=None):
-        mm = _m(v, m)
-        guard = mm.isNotNull()
-        parts = [
-            _leaf(
-                guard & ~F.map_contains_key(mm, req),
-                _err_struct(p, "required", F.lit(f"missing {req}")),
-            )
-            for req in sch
-        ]
-        return _concat_errors(parts)
+def _vk_properties(c: ir.Properties, rec):
+    subs = [(key, rec(sub)) for key, sub in c.entries]
 
-    return emit
-
-
-def _vk_properties(subs: Dict[str, VariantNode]):
     def emit(v, p, m=None, a=None, t=None, pm=None):
         mm = _m(v, m)
         guard = mm.isNotNull()
         parts = []
-        for key, sub in subs.items():
-            if pm is not None and key in pm:
+        for key, sub in subs:
+            if pm is not None and key in pm:  # barrier attributes of a root property
                 child_v, child_t = pm[key]
             else:
                 child_v, child_t = F.try_element_at(mm, F.lit(key)), None
-            child = sub.emit(
-                child_v, F.concat(p, F.array(F.lit(key))), None, None, child_t
-            )
+            child = sub(child_v, _at_key(p, key), None, None, child_t)
             parts.append(
-                F.when(guard & F.map_contains_key(mm, key), child).otherwise(_empty_errors())
-            )
+                F.when(guard & F.map_contains_key(mm, key), child).otherwise(_empty_errors()))
         return _concat_errors(parts)
 
     return emit
 
 
-def _vk_pattern_properties(subs: List[Tuple[str, VariantNode]]):
+def _vk_pattern_properties(c: ir.PatternProperties, rec):
+    subs = [(regex, rec(sub)) for regex, sub in c.entries]
+
     def emit(v, p, m=None, a=None, t=None, pm=None):
         mm = _m(v, m)
-        guard = mm.isNotNull()
-        parts = []
-        for raw, sub in subs:
-            matched_keys = F.filter(F.map_keys(mm), lambda k: k.rlike(_jrx(raw)))
-            per_key = F.transform(
-                matched_keys,
-                lambda k: sub.emit(F.try_element_at(mm, k), F.concat(p, F.array(k))),
-            )
-            parts.append(F.when(guard, F.flatten(per_key)).otherwise(_empty_errors()))
-        return _concat_errors(parts)
+        return _concat_errors([
+            F.when(mm.isNotNull(), F.flatten(F.transform(
+                F.filter(F.map_keys(mm), lambda k: k.rlike(regex.java)),
+                lambda k: sub(F.try_element_at(mm, k), _at_key(p, k)),
+            ))).otherwise(_empty_errors())
+            for regex, sub in subs])
 
     return emit
 
 
-def _vk_additional_properties(sch, sub, props: List[str], patterns: List[str]):
-    def addkeys_col(m):
-        def is_add(k):
-            cond = ~k.isin(props) if props else F.lit(True)
-            for raw in patterns:
-                cond = cond & ~k.rlike(_jrx(raw))
-            return cond
+def _vk_additional_properties(c: ir.AdditionalProperties, rec):
+    sub = rec(c.additional) if isinstance(c.additional, ir.Node) else None
+    known = list(c.known)
 
-        return F.filter(F.map_keys(m), is_add)
+    def is_add(k):
+        cond = ~k.isin(known) if known else F.lit(True)
+        for rx in c.patterns:
+            cond = cond & ~k.rlike(rx.java)
+        return cond
 
     def emit(v, p, m=None, a=None, t=None, pm=None):
-        if sch is True:
+        if c.additional is True:
             return _empty_errors()
         mm = _m(v, m)
         guard = mm.isNotNull()
-        addkeys = addkeys_col(mm)
+        addkeys = F.filter(F.map_keys(mm), is_add)
         n = F.size(addkeys)
-        if sch is False:
-            msg = F.concat(
-                F.lit("additional propert"),
-                F.when(n == 1, F.lit("y")).otherwise(F.lit("ies")),
-                F.lit(" found: "),
-                _human_list_col("and", addkeys),
-            )
-            err = _err_struct(p, "additionalProperties", msg)
+        if c.additional is False:
+            err = _err_struct(p, c.keyword, _say(c.found, n, addkeys))
             return _leaf(guard & (n > 0), err)
-        child_arrays = F.transform(
-            addkeys,
-            lambda k: sub.emit(F.try_element_at(mm, k), F.concat(p, F.array(k))),
-        )
-        children = F.flatten(child_arrays)
-        fail_keys = F.filter(
-            F.zip_with(addkeys, child_arrays, lambda k, errs: F.when(F.size(errs) > 0, k)),
-            lambda x: x.isNotNull(),
-        )
-        nf = F.size(fail_keys)
-        msg = F.concat(
-            F.lit("additional propert"),
-            F.when(nf == 1, F.lit("y")).otherwise(F.lit("ies")),
-            F.lit(" invalid: "),
-            _human_list_col("and", fail_keys),
-        )
-        return F.when(
-            guard, _compound(nf > 0, p, "additionalProperties", msg, children)
-        ).otherwise(_empty_errors())
+        invalid = _invalid_keys(
+            c, addkeys, lambda k: sub(F.try_element_at(mm, k), _at_key(p, k)), p)
+        return F.when(guard, invalid).otherwise(_empty_errors())
 
     return emit
 
 
-def _vk_items_homogeneous(sub: VariantNode):
+def _vk_items(c: ir.Items, rec):
+    sub = rec(c.node)
+
     def emit(v, p, m=None, a=None, t=None, pm=None):
         arr = _a(v, a)
-        per_elem = F.transform(
-            arr, lambda x, i: sub.emit(x, F.concat(p, F.array(i.cast("string"))))
-        )
+        per_elem = F.transform(arr, lambda x, i: sub(x, _at_key(p, i.cast("string"))))
         return F.when(arr.isNotNull(), F.flatten(per_elem)).otherwise(_empty_errors())
 
     return emit
 
 
-def _vk_items_tuple(subs: List[VariantNode], add_sch, add_node):
+def _vk_tuple_items(c: ir.TupleItems, rec):
+    subs = [rec(sub) for sub in c.nodes]
+    add_node = rec(c.additional) if isinstance(c.additional, ir.Node) else None
+
     # ONE transform over the array instead of one slice/element_at per
     # tuple slot: each extra reference to the array re-evaluates the
     # whole parent chain (root map build -> property get -> array build)
@@ -858,67 +634,83 @@ def _vk_items_tuple(subs: List[VariantNode], add_sch, add_node):
     # touches exactly its own element, so slot order == element order.
     def emit(v, p, m=None, a=None, t=None, pm=None):
         arr = _a(v, a)
-        guard = arr.isNotNull()
-        k = len(subs)
 
         def per_elem(x, i):
-            ep = F.concat(p, F.array(i.cast("string")))
+            ep = _at_key(p, i.cast("string"))
             w = None
             for j, sub in enumerate(subs):
-                child = sub.emit(x, ep)
+                child = sub(x, ep)
                 w = F.when(i == j, child) if w is None else w.when(i == j, child)
-            if add_sch is False:
-                extra = F.array(
-                    _err_struct(ep, "items", F.lit("additional item found"))
-                )
+            if c.additional is False:
+                extra = F.array(_err_struct(ep, c.keyword, F.lit(c.message)))
             elif add_node is not None:
-                extra = add_node.emit(x, ep)
+                extra = add_node(x, ep)
             else:
                 extra = _empty_errors()
             return extra if w is None else w.otherwise(extra)
 
-        per = F.transform(arr, per_elem)
-        return F.when(guard, F.flatten(per)).otherwise(_empty_errors())
+        return F.when(arr.isNotNull(), F.flatten(F.transform(arr, per_elem))).otherwise(
+            _empty_errors())
 
     return emit
 
 
-def _vk_dependencies(deps):
+def _vk_dependencies(c: ir.Dependencies, rec):
+    subs = {dep: rec(dep.node) for dep in c.entries if isinstance(dep, ir.DependentSchema)}
+
     def emit(v, p, m=None, a=None, t=None, pm=None):
         mm = _m(v, m)
-        guard = mm.isNotNull()
-        parts = []
-        for key, dep, sub in deps:
-            present = guard & F.map_contains_key(mm, key)
-            if isinstance(dep, list):
-                missing_entries = [
-                    F.when(
-                        ~F.map_contains_key(mm, d),
-                        _err_struct(
-                            p, "dependencies", F.lit(f'Missing "{d}" given "{key}"')
-                        ),
-                    )
-                    for d in dep
-                ]
-                children = F.array_compact(F.array(*missing_entries))
-                nm = F.size(children)
-                msg = F.concat(
-                    F.lit("Missing dependenc"),
-                    F.when(nm == 1, F.lit("y ")).otherwise(F.lit("ies ")),
-                    F.lit(f'for "{key}"'),
-                )
-                parts.append(_compound(present & (nm > 0), p, "dependencies", msg, children))
-            elif sub is not None:
-                children = sub.emit(v, p, m, a, t, pm)
-                parts.append(
-                    _compound(
-                        present & (F.size(children) > 0),
-                        p,
-                        "dependencies",
-                        F.lit(f'Failed dependency for "{key}"'),
-                        children,
-                    )
-                )
-        return _concat_errors(parts)
+        return _dependency_errors(c, mm.isNotNull(), lambda name: F.map_contains_key(mm, name),
+                                  lambda dep: subs[dep](v, p, m, a, t, pm), p)
 
     return emit
+
+
+def _vk_all_of(c: ir.AllOf, rec):
+    subs = [rec(sub) for sub in c.nodes]
+
+    def emit(v, p, m=None, a=None, t=None, pm=None):
+        return _all_of_errors(c, [s(v, p, m, a, t, pm) for s in subs], p)
+
+    return emit
+
+
+def _vk_any_of(c: ir.AnyOf, rec):
+    subs = [rec(sub) for sub in c.nodes]
+    if not subs:
+        return None
+
+    def emit(v, p, m=None, a=None, t=None, pm=None):
+        return _any_of_errors(c, [s(v, p, m, a, t, pm) for s in subs], p)
+
+    return emit
+
+
+def _vk_one_of(c: ir.OneOf, rec):
+    subs = [rec(sub) for sub in c.nodes]
+
+    def emit(v, p, m=None, a=None, t=None, pm=None):
+        return _one_of_errors(c, [s(v, p, m, a, t, pm) for s in subs], p)
+
+    return emit
+
+
+def _vk_not(c: ir.Not, rec):
+    sub = rec(c.node)
+
+    def emit(v, p, m=None, a=None, t=None, pm=None):
+        return _not_errors(c, sub(v, p, m, a, t, pm), p)
+
+    return emit
+
+
+#: IR check kind -> the function making its emitter
+_EMITTERS: Dict[type, Callable] = {
+    ir.Type: _vk_type, ir.Enum: _vk_enum, ir.Bound: _vk_bound,
+    ir.MultipleOf: _vk_multiple_of, ir.Size: _vk_size, ir.Pattern: _vk_pattern,
+    ir.UniqueItems: _vk_unique_items, ir.Required: _vk_required,
+    ir.Properties: _vk_properties, ir.PatternProperties: _vk_pattern_properties,
+    ir.AdditionalProperties: _vk_additional_properties, ir.Items: _vk_items,
+    ir.TupleItems: _vk_tuple_items, ir.Dependencies: _vk_dependencies,
+    ir.AllOf: _vk_all_of, ir.AnyOf: _vk_any_of, ir.OneOf: _vk_one_of, ir.Not: _vk_not,
+}

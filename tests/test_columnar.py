@@ -472,6 +472,23 @@ def test_pattern_properties_map_nonstring_values(spark):
         assert errs == want, value
 
 
+def test_pattern_properties_over_map_keys_read_patterns_as_js(spark):
+    """Map keys are matched with the translated pattern, as everywhere
+    else: the flagless RegExp reads \\p{L} as the text 'p{L}' and '$' as
+    the end of input (java.util.regex would read a Unicode letter class
+    and an end before a final newline)."""
+    schema = {"properties": {"m": {"patternProperties": {"\\p{L}": {"maximum": 1},
+                                                         "^k$": {"maximum": 1}}}}}
+    docs = [{"x": 5}, {"p{L}": 5}, {"k\n": 5}, {"k": 5}]
+    df = spark.createDataFrame(list(enumerate(docs)), "rid long, m map<string,long>")
+    got = {r["rid"]: sorted("/".join(e["path"]) for e in r["errors"])
+           for r in compile_columnar(schema).apply(df).collect()}
+    assert got == {0: [], 1: ["m/p{L}"], 2: [], 3: ["m/k"]}
+    kernel = compile_schema(schema)
+    for rid, m in enumerate(docs):
+        assert sorted("/".join(map(str, e.vpath)) for e in kernel.validate({"m": m})) == got[rid]
+
+
 def test_composite_enum_structural_equality(spark):
     """Composite enum values compare structurally, not as JSON text
     (round-1 advice: field order and 1 vs 1.0 caused false negatives)."""

@@ -290,6 +290,20 @@ def test_both_modes_read_patterns_as_js(spark):
              ("\\k<a>", "k<a>", True), ("(?<n>a)\\k<n>", "aa", True),
              ("[\\h]", " ", False), ("[\\B]", "B", True),
              ("[\\b]", "\b", True), ("[\\b]", "b", False),
+             # digit escapes: a backreference only up to the group count;
+             # past it \8 and \9 are identity escapes, the rest legacy octal
+             ("^\\8$", "8", True), ("^\\9$", "9", True), ("^[\\8]$", "8", True),
+             ("^\\81$", "81", True), ("^(a)\\2$", "a\x02", True), ("^(a)\\2$", "a2", False),
+             ("^(a)\\1$", "aa", True), ("^(a)\\1$", "a\x01", False), ("^\\12$", "\n", True),
+             ("^\\12$", "12", False), ("^\\18$", "\x018", True), ("^\\19$", "\x019", True),
+             ("^\\400$", " 0", True), ("^\\377$", "\xff", True), ("^\\44$", "$", True),
+             ("^\\444$", "$4", True), ("^\\08$", "\x008", True), ("^[\\1]$", "\x01", True),
+             ("^[\\12]$", "\n", True), ("^[\\12]$", "1", False), ("^(a)[\\1]$", "a\x01", True),
+             ("^(a)(b)\\2$", "abb", True), ("^(a)(b)\\3$", "ab\x03", True),
+             ("^(?<n>a)\\2$", "a\x02", True), ("^\\1{2}$", "\x01\x01", True),
+             ("^(a)\\10$", "a\b", True), ("^(?:a)\\1$", "a\x01", True),
+             ("^[(]\\1$", "(\x01", True), ("^\\(a\\)\\1$", "(a)\x01", True),
+             ("^(a)(b)(c)(d)(e)(f)(g)(h)(i)(j)\\10$", "abcdefghijj", True),
              # '[^]' is any character, '[]' matches nothing
              ("^[^]$", "\n", True), ("a[^]b", "a b", True), ("^[^]{2}$", "ab", True),
              ("[]", "", False), ("a[]", "a", False), ("[]a]", "a]", False),
@@ -308,7 +322,8 @@ def test_strict_rejects_identity_escapes_and_empty_classes():
     """``strict=True`` refuses the Annex-B readings the default mode
     reproduces, as it does for ``\\p``; '\\k' that names no group is an
     error in a pattern with named groups (node rejects it too)."""
-    for pat in ["\\h", "[\\R]", "\\x4", "\\k", "[^]", "[]", "a[]b"]:
+    for pat in ["\\h", "[\\R]", "\\x4", "\\k", "[^]", "[]", "a[]b",
+                "\\8", "(a)\\2", "\\12", "[\\1]"]:
         for fn in (java_pattern, python_pattern):
             with pytest.raises(RegexDialectError):
                 fn(pat, strict=True)
