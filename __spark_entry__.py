@@ -93,50 +93,6 @@ def _violations(spark: SparkSession, sf_dir: str, schema: dict) -> DataFrame:
     )
 
 
-def _entity_panel():
-    """(raw_inputs, expected_decoded) for the 64-case named-entity gate
-    panel (entry 83) — shared by the Spark construction and the oracle.
-    Expected strings come from Python's html.unescape (the stdlib copy
-    of the WHATWG named-reference algorithm) with the engine's
-    documented entity-produced U+00A0 -> plain-space convention, so the
-    oracle states ground truth independently of ops/html.py."""
-    from html import unescape
-
-    from schema_fantasy_spark.ops import html_entities as HE
-
-    comps = ["&amp;lt;x", "&ampy", "&notit;", "&copy=2", "a&&amp;b",
-             "&#38;#97;"]
-    picks = ["amp;", "lt;", "nbsp;", "eacute;", "NotEqualTilde;", "fjlig;",
-             "ThickSpace;", "hellip;", "mdash;",
-             "CounterClockwiseContourIntegral;"]
-    legacy = ["eacute", "AMP", "Ccedil", "frac34", "yuml", "THORN"]
-    raws = list(comps) + [f"pre &{n} post" for n in picks + legacy]
-    names = sorted(k for k in HE.ENTITIES if k.endswith(";"))
-    stride = names[:: max(1, len(names) // (64 - len(raws)))]
-    for n in stride:
-        if len(raws) >= 64:
-            break
-        raws.append(f"x&{n}y")
-    expected = [unescape(r).replace("\xa0", " ") for r in raws]
-    return raws, expected
-
-
-def _entity_decode_sql() -> str:
-    """DuckDB oracle for entry 83: one CASE branch per panel slot, the
-    expected string a literal."""
-    raws, expected = _entity_panel()
-    lit = lambda s: "'" + s.replace("'", "''") + "'"  # noqa: E731
-    cases = "\n           ".join(
-        f"WHEN {i} THEN {lit(e)}" for i, e in enumerate(expected)
-    )
-    return f"""
-    SELECT doc_id,
-           CASE doc_id % {len(raws)}
-           {cases}
-           END AS decoded
-      FROM documents WHERE doc_id IS NOT NULL
-    """
-
 
 # ------------------------------------------------------------------ entry
 
@@ -393,95 +349,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return out.select("event_id", "keyword", "message")
 
     def suite_documents(spark, sf):
-        # the CheckSuite bundle — with the corpus round-tripped through
-        # the WARC INGESTION EDGE first (sources/warc.py): every doc is
-        # serialized as a spec-layout gzip-member response record
-        # (fields in HTTP headers, text as the body; absent header ==
-        # NULL) and parsed back, per partition, no shuffle. The suite's
-        # three verdict rows only match the oracle if the archive
-        # encode/parse is lossless — nulls, bytes, and ids included.
-        from typing import Iterator as _It
-
-        import pandas as pd
-
-        from schema_fantasy_spark.sources import warc as W
+        # the CheckSuite bundle over documents: schema verdict, lang
+        # null rate and doc_id uniqueness as three verdict rows
         from schema_fantasy_spark.suite import CheckSuite
 
-        docs = tables.load(spark, sf, "documents")
-        cols = ["doc_id", "text", "lang", "n_chars", "source"]
-
-        def enc(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-            for pdf in batches:
-                # raw-Common-Crawl layout: warcinfo leads the archive,
-                # and captures interleave request/metadata records with
-                # the responses — dec() must skip them by TYPE or the
-                # roundtrip gains rows and every suite verdict breaks
-                recs = [W.build_record(
-                    None, "2026-01-01T00:00:00Z",
-                    b"software: sfs-gate/1.0\r\n", warc_type="warcinfo")]
-                for r in pdf.itertuples(index=False):
-                    hdrs = {"Content-Type": "text/plain; charset=utf-8"}
-                    for name, val in (("X-Doc-Id", r.doc_id),
-                                      ("X-Lang", r.lang),
-                                      ("X-N-Chars", r.n_chars),
-                                      ("X-Source", r.source)):
-                        if val is not None and not pd.isna(val):
-                            hdrs[name] = str(val)
-                    body = b"" if r.text is None else str(r.text).encode("utf-8")
-                    if r.text is None:
-                        hdrs["X-Text-Null"] = "1"
-                    if r.doc_id is not None and r.doc_id % 3 == 0:
-                        recs.append(W.build_record(
-                            "https://crawl.example.com/doc",
-                            "2026-01-01T00:00:00Z", b"",
-                            {"Host": "crawl.example.com"},
-                            warc_type="request",
-                            request_line="GET /doc HTTP/1.1"))
-                    recs.append(W.build_record(
-                        "https://crawl.example.com/doc",
-                        "2026-01-01T00:00:00Z", body, hdrs))
-                    if r.doc_id is not None and r.doc_id % 5 == 0:
-                        recs.append(W.build_record(
-                            "https://crawl.example.com/doc",
-                            "2026-01-01T00:00:00Z",
-                            b"fetchTimeMs: 7\r\n", warc_type="metadata"))
-                yield pd.DataFrame({"payload": pd.Series(
-                    [W.build_warc(recs, compress=True)], dtype="object")})
-
-        def dec(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-            for pdf in batches:
-                rows = {c: [] for c in cols}
-                for payload in pdf["payload"]:
-                    for rec in W.parse_warc(bytes(payload)):
-                        if rec["type"] != "response":
-                            continue
-                        h = rec["http_headers"]
-                        rows["doc_id"].append(
-                            int(h["x-doc-id"]) if "x-doc-id" in h else None)
-                        rows["text"].append(
-                            None if h.get("x-text-null") == "1"
-                            else rec["body"].decode("utf-8"))
-                        rows["lang"].append(h.get("x-lang"))
-                        rows["n_chars"].append(
-                            int(h["x-n-chars"]) if "x-n-chars" in h else None)
-                        rows["source"].append(h.get("x-source"))
-                yield pd.DataFrame({
-                    "doc_id": pd.Series(rows["doc_id"], dtype="object"),
-                    "text": pd.Series(rows["text"], dtype="object"),
-                    "lang": pd.Series(rows["lang"], dtype="object"),
-                    "n_chars": pd.Series(rows["n_chars"], dtype="object"),
-                    "source": pd.Series(rows["source"], dtype="object"),
-                })
-
-        archives = _spread(docs.select(*cols), "doc_id").mapInPandas(enc, "payload binary")
-        roundtripped = archives.mapInPandas(
-            dec, "doc_id long, text string, lang string, n_chars long, source string"
-        )
+        docs = _spread(tables.load(spark, sf, "documents"), "doc_id")
         report = (
             CheckSuite(schema=DOCUMENTS_SCHEMA, id_cols=("doc_id",))
             .with_null_rate("lang", 0.05)
             .with_uniqueness(["doc_id"])
-            .run(roundtripped)
+            .run(docs)
         )
         return report.to_df(spark).select(
             "check", "pass", F.round("metric", 6).alias("metric")
@@ -569,62 +446,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         base_n = tc.numeric_histogram(docs.filter(F.length("source") == 4), "n_chars", 0.0, 600.0, 20)
         ks = tc.ks_stat(cur_n, base_n)
         return chi.crossJoin(ks)
-
-    def agg_pricing_summary(spark, sf):
-        # the decimal partial aggregation over a single-row-group scan
-        # ran in one task (~4.8s at the r9 10x replica); keyed spread
-        # parallelizes the map side (2.98s), no-op at scale
-        li = _spread(tables.load(spark, sf, "lineitem"), "l_orderkey")
-        return (
-            li.groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                # exact decimal sums, then one final cast to double so both
-                # sides of the driver gate emit the same primitive type
-                # (DECIMAL canonicalizes differently between engines)
-                F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_qty"),
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("sum_base_price"),
-                F.count(F.lit(1)).alias("count_order"),
-            )
-        )
-
-    def windowed_event_counts(spark, sf):
-        ev = tables.load(spark, sf, "events")
-        return (
-            ev.groupBy(
-                F.window("ts", "1 hour").alias("w"),
-                "event_type",
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                # exact decimal sum -> double (primitive type on both sides)
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-            )
-            .select(
-                # timestamps render engine-dependently; a formatted string is
-                # canonical on both sides of the driver gate
-                F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type",
-                "n",
-                "sum_value",
-            )
-        )
-
-    def topk_events_per_type(spark, sf):
-        from pyspark.sql import Window
-
-        ev = tables.load(spark, sf, "events")
-        w = Window.partitionBy("event_type").orderBy(
-            F.col("value").desc(), F.col("event_id").asc()
-        )
-        return (
-            ev.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .select("event_type", "event_id", "value", "rn")
-        )
 
     def error_breakdown_documents(spark, sf):
         docs = _spread(tables.load(spark, sf, "documents"), "doc_id")
@@ -960,329 +781,45 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = scale.per_host_verdicts(validated, url_col="url", buckets=16)
         return out.select("host", "n_rows", "n_invalid", "n_errors", "pass")
 
-    def text_consistency_documents(spark, sf):
-        # the north-star per-row invariant (BASELINE input_hint:
-        # byte-identical extracted text per url) gated on the driver
-        # oracle, KEYED ON THE CANONICAL URL (ops/urls.py under the
-        # gate): the two corpora spell every doc's url differently —
-        # eight crawl-variant families across the two sides (host case +
-        # default port, dot segments + fragment, unsorted params,
-        # percent escapes of unreserved chars, scheme case, whitespace)
-        # — so the consistency join lines up ONLY if canonicalize_url
-        # collapses every family to the base key (any miss changes the
-        # row count), and the surfaced keys' exact canonical strings are
-        # value-hashed. The oracle recomputes the canonical key from its
-        # ground-truth construction: the base url is BUILT canonical
-        # (lowercase host, no default port, sorted params), so expected
-        # == base, expressible directly from doc_id in SQL. A
-        # deterministically corrupted copy (every 97th doc gets '!'
-        # appended) must surface EXACTLY those keys with both hashes.
-        # The corrupted side additionally derives its text through a
-        # FULL HTML ROUND TRIP (ops/html.py under the gate): each doc is
-        # wrapped in a synthesized page — head with style/script (the
-        # script contains a literal '</p>' and a '<'), comments, quoted
-        # attributes, inline <b> tags, and numeric (dec + hex) entity
-        # encodings of letters — and extract_text must recover the text
-        # BYTE-IDENTICALLY or rows mismatch (extra rows and wrong
-        # hashes), since the oracle compares against the original text.
-        # Both corpora carry a non-ASCII suffix (Latin-1 é, BMP CJK 中,
-        # supplementary-plane 😀) that the page spells as NUMERIC
-        # ENTITIES — the UTF-16BE/surrogate-pair decode path in
-        # ops/html.py is under the gate too (the oracle hashes the
-        # suffixed original, so a single undecoded reference breaks
-        # every row's hashes).
-        from schema_fantasy_spark.ops.html import extract_text
-        from schema_fantasy_spark.ops.urls import canonicalize_url
-
-        docs = tables.load(spark, sf, "documents").filter(F.col("text").isNotNull())
-        docs = docs.withColumn(
-            "text", F.concat(F.col("text"), F.lit(" café 中\U0001f600"))
-        )
-        # family %3==2 spells its non-ASCII é as the WHATWG NAMED
-        # reference and every space as &nbsp; — the full named-entity
-        # table (ops/html_entities.py) is under this gate: an undecoded
-        # &eacute; (or an &nbsp; that fails to collapse to plain space)
-        # changes every third row's hash
-        enc = (
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.regexp_replace(F.col("text"), "a", "&#97;"),
-            )
-            .when(
-                F.col("doc_id") % 3 == 1,
-                F.regexp_replace(F.col("text"), "e", "&#x65;"),
-            )
-            .otherwise(
-                F.replace(
-                    F.replace(F.col("text"), F.lit("é"), F.lit("&eacute;")),
-                    F.lit(" "),
-                    F.lit("&nbsp;"),
-                )
-            )
-        )
-        for ch, ref in (
-            ("é", "&#233;"), ("中", "&#x4E2D;"),
-            ("\U0001f600", "&#128512;"),
-        ):
-            enc = F.replace(enc, F.lit(ch), F.lit(ref))
-        enc = F.regexp_replace(enc, r"\btable\b", "<b>table</b>")
-        # CHARSET SNIFF + TRANSCODE under the same gate (ops/charset.py):
-        # page assembly moves into Python so each doc's page serializes
-        # in its md5-nibble family charset — 14 families covering BOMs
-        # (utf-8/16le/16be), meta-declared single-byte (cp1252 + latin1
-        # label, iso-8859-2, koi8-r), meta-declared multibyte CJK
-        # (shift_jis, euc-kr, gbk, big5 — the Arrow-UDF lane), the
-        # WHATWG utf-16-label->utf-8 remap, undeclared-valid utf-8, and
-        # the undeclared-cp1252 fallback. Each family appends its own
-        # raw non-ASCII special chars to the body (ASCII bytes look the
-        # same in every charset — the specials are what make a wrong
-        # decode visible), and the reference corpus carries the same
-        # suffix built from chr() literals, so ONE family decoding
-        # wrongly surfaces extra rows and fails the gate. The detected
-        # (charset, source) pair rides along and is value-hashed for
-        # every surfaced row.
-        from schema_fantasy_spark.ops import charset as csops
-        from schema_fantasy_spark.ops import charset_corpus as mc
-
-        docs = _spread(docs.filter(F.col("doc_id").isNotNull()), "doc_id")
-
-        def build_pages(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                ids, pages = [], []
-                for r in pdf.itertuples(index=False):
-                    fam = mc.charset_fam(r.doc_id)
-                    label, _b, _c, special, _cs, _s = mc.CHARSET_FAMILIES[fam]
-                    meta = f'<meta charset="{label}">' if label else ""
-                    page = (
-                        f"<html><head>{meta}<title>d</title>"
-                        '<style>p { c: "<div>" }</style>'
-                        '<script>if (1 < 2) { s = "</p>"; }</script></head>'
-                        '<body data-x="a>b"><!-- nav <span> --><p class="m">'
-                        f"{r.enc} {special}</p>"
-                        '<script async src="x.js"></script></body></html>'
-                    )
-                    ids.append(r.doc_id)
-                    pages.append(mc.encode_charset_page(fam, page))
-                yield pd.DataFrame({
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "page": pd.Series(pages, dtype="object"),
-                })
-
-        pages = docs.select("doc_id", enc.alias("enc")).mapInPandas(
-            build_pages, "doc_id long, page binary"
-        )
-        # transcode's two decode lanes (pure-Column vs Arrow CJK) each
-        # re-execute their input: materialize the synthesized pages once
-        # so the Python page builder runs once, not per lane (trap 18)
-        pages = pages.localCheckpoint()
-        decoded = csops.transcode(pages, binary_col="page", id_col="doc_id")
-        roundtripped = decoded.select(
-            "doc_id", "charset", "source",
-            extract_text(F.col("text")).alias("text"),
-        )
-        n = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        i = F.col("doc_id").cast("string")
-        host = F.concat(F.lit("h"), n, F.lit(".example.com"))
-        host_up = F.concat(F.lit("H"), n, F.lit(".EXAMPLE.COM"))
-        v = F.pmod(F.col("doc_id"), F.lit(4))
-
-        def cc(*parts):
-            return F.concat(*[F.lit(p) if isinstance(p, str) else p for p in parts])
-
-        spelled_a = (
-            F.when(v == 0, cc("https://", host_up, ":443/p/", i, "?a=1&b=2"))
-            .when(v == 1, cc("https://", host, "/x/../p/./", i, "?a=1&b=2#frag"))
-            .when(v == 2, cc("https://", host, "/p/", i, "?b=2&a=1"))
-            .otherwise(cc("https://", host, "/%70/", i, "?a=1&b=2"))
-        )
-        spelled_b = (
-            F.when(v == 0, cc("HTTPS://", host, "/p/", i, "?a=1&b=2"))
-            .when(v == 1, cc("https://", host, "/p/x/../", i, "?b=2&a=1"))
-            .when(v == 2, cc("  https://", host, ":443/p/", i, "?a=1&b=2  "))
-            .otherwise(cc("https://", host, "/p/", i, "?a=%31&b=2"))
-        )
-        corrupted = roundtripped.withColumn("url", spelled_a).withColumn(
-            "text",
-            F.when(F.col("doc_id") % 97 == 0, F.concat(F.col("text"), F.lit("!")))
-            .otherwise(F.col("text")),
-        )
-        # the reference corpus carries each doc's family special suffix,
-        # derived independently (md5 nibble in Column exprs + literal
-        # chars) — transcode+extraction must reproduce it byte-exactly
-        famc = F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-            ).cast("int"),
-            F.lit(len(mc.CHARSET_FAMILIES)),
-        )
-        specialc = F.lit(mc.CHARSET_FAMILIES[0][3])
-        for k in range(1, len(mc.CHARSET_FAMILIES)):
-            specialc = F.when(famc == k, F.lit(mc.CHARSET_FAMILIES[k][3])).otherwise(
-                specialc
-            )
-        reference = docs.withColumn(
-            "text", F.concat(F.col("text"), F.lit(" "), specialc)
-        ).withColumn("url", spelled_b)
-        ca = corrupted.withColumn("url_key", canonicalize_url(F.col("url")))
-        # ca feeds BOTH the consistency join and the final charset
-        # re-attach join: without a barrier each branch re-executes the
-        # whole page-build + transcode + extract_text pipeline (trap
-        # 18); one eager, GC-cleaned materialization of the four
-        # surviving columns halves the query
-        ca = ca.select("url_key", "charset", "source", "text").localCheckpoint()
-        cb = reference.withColumn("url_key", canonicalize_url(F.col("url")))
-        res = tc.text_consistency(
-            ca, cb, key_col="url_key", text_col="text", method="md5"
-        )
-        return res.join(ca.select("url_key", "charset", "source"), "url_key").select(
-            F.col("url_key").alias("url"),
-            "charset",
-            "source",
-            "h_actual",
-            "h_expected",
-        )
-
-    def html_metadata_documents(spark, sf):
-        # HTML metadata + outlink extraction under the gate (ops/
-        # html_meta.py): per-doc pages are synthesized in Column exprs
-        # across 4 families (attribute order, quote style, named +
-        # numeric entities, inner tags in anchors, quote-guarded '>' in
-        # attributes, missing fields, unresolvable hrefs), run through
-        # with_html_metadata, and reduced to closed-form-checkable
-        # columns. The oracle states the expected title / description /
-        # og:title / canonical / resolved-link strings directly from the
-        # same modular construction — any regex/order/quote/entity/
-        # resolution error flips a value.
-        from schema_fantasy_spark.ops.html_meta import with_html_metadata
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        i = F.col("doc_id").cast("string")
-        host = F.concat(F.lit("h"), k, F.lit(".example.com"))
-        m = F.pmod(F.col("doc_id"), F.lit(4))
-        page = (
-            F.when(m == 0, F.concat(
-                F.lit('<html><head><title>Doc '), i,
-                F.lit(' &amp; friends</title>'),
-                F.lit('<meta name="description" content="d'), i, F.lit('">'),
-                F.lit('<link rel="canonical" href="https://h'), k,
-                F.lit('.example.com/c/'), i, F.lit('"></head><body>'),
-                F.lit('<a href="/r/'), i, F.lit('">first '), i, F.lit('</a>'),
-                F.lit('<a href="https://x'), k,
-                F.lit('.org/p?a=1&amp;b=2">x &amp; y</a>'),
-                F.lit('<a rel="nofollow" href="https://ads'), k,
-                F.lit('.example.net/z">sponsored '), i,
-                F.lit('</a></body></html>'),
-            ))
-            .when(m == 1, F.concat(
-                F.lit("<html><head><title> spaced   "), i, F.lit(" </title>"),
-                F.lit("<meta content='D "), i,
-                F.lit("' name='description'></head><body><a href='//cdn"), k,
-                F.lit(".net/a'>c<span>d</span></a></body></html>"),
-            ))
-            .when(m == 2, F.concat(
-                F.lit('<html><head><meta property="og:title" content="OG&#233;'),
-                i, F.lit('"></head><body><a href="mailto:a@b.c">m</a>'),
-                F.lit('<a href="#top">t</a><a href="rel/x">r</a></body></html>'),
-            ))
-            .otherwise(F.concat(
-                F.lit('<html><head><title>T\n&quot;'), i, F.lit('&quot;</title>'),
-                F.lit('<link href="https://h'), k, F.lit('.example.com/canon/'),
-                i, F.lit('" rel="canonical"></head><body>'),
-                F.lit('<a data-q="v>w" href="/deep/'), i, F.lit('">z'), i,
-                F.lit('</a></body></html>'),
-            ))
-        )
-        pages = _spread(docs, "doc_id").select(
-            "doc_id", host.alias("host"), F.lit("https").alias("scheme"),
-            page.alias("html"),
-        )
-        out = with_html_metadata(pages, base_scheme_col="scheme", base_host_col="host")
-        return out.select(
-            "doc_id", "title", "description", "og_title", "canonical",
-            F.size("outlinks").alias("n_outlinks"),
-            F.size("resolved_outlinks").alias("n_resolved"),
-            F.size(
-                F.filter(F.col("outlinks"), lambda l: l["nofollow"])
-            ).alias("n_nofollow"),
-            F.array_join(
-                F.transform(
-                    F.col("resolved_outlinks"),
-                    lambda l: F.concat_ws("|", l["href"], l["anchor"]),
-                ),
-                "\n",
-            ).alias("resolved_links"),
-        )
-
     def jsonld_validation_documents(spark, sf):
-        # The INTEGRATION entry: raw HTML -> embedded JSON-LD extraction
-        # (ops/html_meta.jsonld_blocks, pure Column) -> the engine's own
-        # dynamic Arrow-UDF validation kernel over the extracted blocks
-        # (the reference's core job, fed by the crawl's structured-data
-        # channel). Pages span 5 families: valid Article; missing name
+        # JSON-LD blocks through the dynamic Arrow-UDF validation kernel.
+        # Five families by doc_id % 5: valid Article; missing name
         # (required); @type outside the pattern; wordCount below minimum;
-        # and a TWO-block page whose second block fails minLength (block
-        # indexing under posexplode). Every page carries a javascript
-        # decoy block and a quote-guarded type= spoof inside another
-        # attribute — extracting either flips rows. The oracle states
-        # every violation closed-form.
+        # and a TWO-block doc whose second block fails minLength (block
+        # indexing under posexplode). The oracle states every violation
+        # closed-form.
         from schema_fantasy_spark.dynamic import validate_json
-        from schema_fantasy_spark.ops.html_meta import jsonld_blocks
 
         docs = tables.load(spark, sf, "documents").select("doc_id").filter(
             F.col("doc_id").isNotNull()
         )
         i = F.col("doc_id").cast("string")
         m = F.pmod(F.col("doc_id"), F.lit(5))
-        lead = F.concat(
-            F.lit(
-                '<html><head><script type="text/javascript">var x = '
-                '{"@type":"Nope"};</script>'
-                "<script data-t='type=\"application/ld+json\"' "
-                'type="module">no</script></head><body><p>doc '
-            ),
-            i,
-            F.lit("</p>"),
-        )
-        body = (
+        first = (
             F.when(m == 0, F.concat(
-                F.lit('<script type="application/ld+json">'
-                      '{"@type":"Article","name":"Article '),
-                i, F.lit(' fine","wordCount":150}</script>'),
+                F.lit('{"@type":"Article","name":"Article '),
+                i, F.lit(' fine","wordCount":150}'),
             ))
-            .when(m == 1, F.lit(
-                '<script type="application/ld+json">'
-                '{"@type":"Product","wordCount":120}</script>'
-            ))
+            .when(m == 1, F.lit('{"@type":"Product","wordCount":120}'))
             .when(m == 2, F.concat(
-                F.lit('<script type="application/ld+json">'
-                      '{"@type":"Video","name":"Video '),
-                i, F.lit(' name","wordCount":130}</script>'),
+                F.lit('{"@type":"Video","name":"Video '),
+                i, F.lit(' name","wordCount":130}'),
             ))
             .when(m == 3, F.concat(
-                F.lit("<script type='application/ld+json'> "
-                      '{"@type":"Article","name":"Article '),
-                i, F.lit(' ok","wordCount":7} </script>'),
+                F.lit(' {"@type":"Article","name":"Article '),
+                i, F.lit(' ok","wordCount":7} '),
             ))
             .otherwise(F.concat(
-                F.lit('<script type="application/ld+json">'
-                      '{"@type":"Product","name":"Product '),
-                i, F.lit(' good","wordCount":300}</script>'
-                         '<script type="application/ld+json">'
-                         '{"@type":"Article","name":"abc","wordCount":200}'
-                         "</script>"),
+                F.lit('{"@type":"Product","name":"Product '),
+                i, F.lit(' good","wordCount":300}'),
             ))
         )
-        pages = docs.select(
-            "doc_id", F.concat(lead, body, F.lit("</body></html>")).alias("html")
-        )
-        blocks = pages.select(
+        second = F.lit('{"@type":"Article","name":"abc","wordCount":200}')
+        blocks = docs.select(
             "doc_id",
-            F.posexplode(jsonld_blocks(F.col("html"))).alias("block_idx", "jsonld"),
+            F.posexplode(
+                F.when(m == 4, F.array(first, second)).otherwise(F.array(first))
+            ).alias("block_idx", "jsonld"),
         )
         schema = {
             "type": "object",
@@ -1302,228 +839,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "keyword",
             "message",
         )
-
-    def zip_roundtrip_documents(spark, sf):
-        # ZIP container round-trip under the gate (sources/zip_archive):
-        # documents pack into one archive per bucket (applyInPandas
-        # writer — deflate on even buckets, stored on odd), then every
-        # member re-extracts through the reader seam. The oracle
-        # recomputes each member's name, BYTE size, method and content
-        # md5 from the table directly — any container/compression/crc
-        # error flips rows (lossless or the md5s break, same contract as
-        # the WARC round-trip in suite_documents).
-        import pandas as pd
-
-        from schema_fantasy_spark.sources.zip_archive import build_zip, parse_zip
-
-        docs = (
-            tables.load(spark, sf, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-            .withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(8)).cast("int"))
-        )
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            b = int(pdf["bucket"].iloc[0])
-            members = {
-                f"d{int(i)}.txt": t.encode("utf-8")
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            }
-            return pd.DataFrame(
-                {"bucket": [b], "zip": [build_zip(members, compress=b % 2 == 0)]}
-            )
-
-        archives = docs.groupBy("bucket").applyInPandas(pack, "bucket int, zip binary")
-
-        def unpack(batches):
-            for pdf in batches:
-                out = {"member": [], "content": [], "size": [], "method": []}
-                for z in pdf["zip"]:
-                    for r in parse_zip(bytes(z)):
-                        if r["error"] is not None:
-                            raise RuntimeError(r["error"])  # gate = lossless
-                        out["member"].append(r["member"])
-                        out["content"].append(r["content"])
-                        out["size"].append(r["size"])
-                        out["method"].append(r["method"])
-                yield pd.DataFrame(out)
-
-        members = archives.mapInPandas(
-            unpack, "member string, content binary, size long, method string"
-        )
-        return members.select(
-            F.regexp_extract("member", r"^d(\d+)\.txt$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "member",
-            "size",
-            "method",
-            F.md5("content").alias("text_md5"),
-        )
-
-    def tar_roundtrip_documents(spark, sf):
-        # TAR container round-trip under the gate (sources/tar_archive):
-        # same shape as entry 60's ZIP gate — one archive per bucket
-        # (plain tar on even buckets, deterministic .tar.gz on odd),
-        # every member re-extracted through the reader seam, the oracle
-        # recomputing name / byte size / gz flag / content md5 from the
-        # table.
-        import pandas as pd
-
-        from schema_fantasy_spark.sources.tar_archive import build_tar, parse_tar
-
-        docs = (
-            tables.load(spark, sf, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-            .withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(8)).cast("int"))
-        )
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            b = int(pdf["bucket"].iloc[0])
-            members = {
-                f"d{int(i)}.txt": t.encode("utf-8")
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            }
-            return pd.DataFrame(
-                {"bucket": [b], "tar": [build_tar(members, gz=b % 2 == 1)]}
-            )
-
-        archives = docs.groupBy("bucket").applyInPandas(pack, "bucket int, tar binary")
-
-        def unpack(batches):
-            for pdf in batches:
-                out = {"member": [], "content": [], "size": [], "gzipped": []}
-                for z in pdf["tar"]:
-                    for r in parse_tar(bytes(z)):
-                        if r["error"] is not None:
-                            raise RuntimeError(r["error"])  # gate = lossless
-                        out["member"].append(r["member"])
-                        out["content"].append(r["content"])
-                        out["size"].append(r["size"])
-                        out["gzipped"].append(r["gzipped"])
-                yield pd.DataFrame(out)
-
-        members = archives.mapInPandas(
-            unpack, "member string, content binary, size long, gzipped boolean"
-        )
-        return members.select(
-            F.regexp_extract("member", r"^d(\d+)\.txt$", 1)
-            .cast("long")
-            .alias("doc_id"),
-            "member",
-            "size",
-            "gzipped",
-            F.md5("content").alias("text_md5"),
-        )
-
-    def wet_roundtrip_documents(spark, sf):
-        # WET (Common Crawl extracted-text sidecar) round-trip under the
-        # gate (sources/wet.py): documents pack into one *.warc.wet
-        # archive per bucket (warcinfo + conversion records; gz members
-        # on even buckets, plain on odd), then every conversion record
-        # re-extracts through parse_wet. Each record carries the doc's
-        # url, a fixed WARC-Date, and a WARC-Refers-To whose uuid tail
-        # is the zero-padded doc_id — the reader must surface all three.
-        # Texts carry a non-ASCII suffix (é, CJK, supplementary-plane
-        # emoji) so the UTF-8 encode/decode and the char-vs-byte length
-        # accounting are both under the gate: the oracle recomputes url,
-        # refers tail, char length, BYTE length and md5 from the table
-        # directly — a lossy decode or a mis-framed record flips rows.
-        # The unpack seam raises unless the warcinfo run-provenance
-        # fields survive into every row.
-        import pandas as pd
-
-        from schema_fantasy_spark.sources.wet import build_wet, parse_wet
-
-        docs = (
-            tables.load(spark, sf, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id").isNotNull() & F.col("text").isNotNull())
-            .withColumn("text", F.concat(F.col("text"), F.lit(" café 中\U0001f600")))
-            .withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(64)).cast("int"))
-        )
-
-        def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            b = int(pdf["bucket"].iloc[0])
-            pdf = pdf.sort_values("doc_id")
-            entries = [
-                (
-                    f"https://h{int(i) % 19}.example.com/wet/{int(i)}",
-                    "2026-01-01T00:00:00Z",
-                    f"<urn:uuid:00000000-0000-0000-0000-{int(i):012d}>",
-                    t,
-                )
-                for i, t in zip(pdf["doc_id"], pdf["text"])
-            ]
-            wet = build_wet(
-                entries,
-                info_fields={"extraction-run": "r6"},
-                compress=b % 2 == 0,
-            )
-            return pd.DataFrame({"bucket": [b], "wet": [wet]})
-
-        archives = docs.groupBy("bucket").applyInPandas(pack, "bucket int, wet binary")
-
-        def unpack(batches):
-            for pdf in batches:
-                out = {"url": [], "date": [], "refers_to": [], "text": []}
-                for z in pdf["wet"]:
-                    for r in parse_wet(bytes(z)):
-                        if r["info"].get("extraction-run") != "r6":
-                            raise RuntimeError("warcinfo provenance lost")
-                        out["url"].append(r["url"])
-                        out["date"].append(r["date"])
-                        out["refers_to"].append(r["refers_to"])
-                        out["text"].append(r["text"])
-                yield pd.DataFrame(out)
-
-        recs = archives.mapInPandas(
-            unpack, "url string, date string, refers_to string, text string"
-        )
-        return recs.select(
-            F.regexp_extract("url", r"/wet/(\d+)$", 1).cast("long").alias("doc_id"),
-            "url",
-            F.col("date").alias("warc_date"),
-            F.regexp_extract("refers_to", r"-(\d{12})>$", 1).alias("refers_pad"),
-            F.length("text").alias("char_len"),
-            F.octet_length("text").alias("byte_len"),
-            F.md5("text").alias("text_md5"),
-        )
-
-    def crawl_diff_documents(spark, sf):
-        # Crawl-over-crawl freshness diff under the gate (ops/urls.
-        # canonicalize_url + snapshots.snapshot_diff): the two crawls
-        # spell every url DIFFERENTLY (case vs default-port vs query
-        # order) so the diff only lines up on the canonical key; per
-        # family the content is unchanged / changed / removed (crawl A
-        # only) / added (crawl B only). Oracle states key + verdict
-        # closed-form — a canonicalization or full-outer/hash-compare
-        # error flips rows.
-        from schema_fantasy_spark.ops.urls import canonicalize_url
-        from schema_fantasy_spark.snapshots import snapshot_diff
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        m = F.pmod(F.col("doc_id"), F.lit(5))
-        url_a = F.concat(F.lit("https://h"), k, F.lit(".EXAMPLE.com/p/"), i,
-                         F.lit("?b=2&a=1"))
-        url_b = F.concat(F.lit("https://h"), k, F.lit(".example.com:443/p/"),
-                         i, F.lit("?a=1&b=2"))
-        crawl_a = docs.filter(m != 4).select(
-            canonicalize_url(url_a).alias("url_key"),
-            F.concat(F.lit("v1 "), i).alias("text"),
-        )
-        crawl_b = docs.filter(m != 3).select(
-            canonicalize_url(url_b).alias("url_key"),
-            F.when(m == 0, F.concat(F.lit("v1 "), i))
-            .otherwise(F.concat(F.lit("v2 "), i)).alias("text"),
-        )
-        d = snapshot_diff(crawl_a, crawl_b, ["url_key"], ["text"])
-        return d.select("url_key", "change")
 
     def jsonl_roundtrip_documents(spark, sf):
         # JSONL interchange round-trip under the gate: the dominant
@@ -1567,33 +882,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.length("text").alias("char_len"),
             F.octet_length("text").alias("byte_len"),
             F.md5("text").alias("text_md5"),
-        )
-
-    def entity_decode_documents(spark, sf):
-        # The WHATWG named-reference table DIRECTLY under the oracle
-        # (text_consistency gates it through two names; this row gates
-        # a 64-case panel): each doc embeds the panel entry doc_id%64 —
-        # adversarial compositions (&amp;lt;, bare-legacy longest-prefix
-        # &notit;/&copy=2), legacy no-semicolon spellings, multi-
-        # codepoint values, and a deterministic stride across the full
-        # sorted table — and decode_entities must reproduce the
-        # EXPECTED literal the oracle states per case (computed at
-        # build time from Python's html.unescape, the stdlib copy of
-        # the WHATWG algorithm, with the documented entity-produced
-        # U+00A0 -> space convention). One wrong mapping, prefix rule
-        # or tail splice flips that case's every row.
-        from schema_fantasy_spark.ops.html import decode_entities
-
-        raws = _entity_panel()[0]
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        raw = F.element_at(
-            F.array(*[F.lit(r) for r in raws]),
-            F.pmod(F.col("doc_id"), F.lit(len(raws))).cast("int") + 1,
-        )
-        return docs.select(
-            "doc_id", decode_entities(raw).alias("decoded")
         )
 
     def iceberg_partitioned_documents(spark, sf):
@@ -1654,8 +942,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # entries in dict order. Sole gates for the streaming / HTTP / set-op
     # categories come FIRST (round 3 had them last and they fell outside
     # the recorded window despite passing the identical local gate).
-    # ROUND-8 ROTATION: the entries added in rounds 6-7 (html_metadata
-    # ... entity_decode) had only local witnesses — they now precede the
+    # The later entries (jsonld ... iceberg_partitioned) precede the
     # round-1-5 entries; every entry is verified by
     # tools/check_correctness.py.
     return {
@@ -1664,15 +951,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_dedup_documents": streaming_dedup_documents,
         "http_linked_validation": http_linked_validation,
         "snapshot_diff_documents": snapshot_diff_documents,
-        "html_metadata_documents": html_metadata_documents,
         "jsonld_validation_documents": jsonld_validation_documents,
-        "zip_roundtrip_documents": zip_roundtrip_documents,
-        "tar_roundtrip_documents": tar_roundtrip_documents,
-        "wet_roundtrip_documents": wet_roundtrip_documents,
-        "crawl_diff_documents": crawl_diff_documents,
         "jsonl_roundtrip_documents": jsonl_roundtrip_documents,
         "iceberg_partitioned_documents": iceberg_partitioned_documents,
-        "entity_decode_documents": entity_decode_documents,
         # --- the round-1-5 entries ---
         "flagship_validation": flagship_validation,
         "combinator_validation": combinator_validation,
@@ -1693,11 +974,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "orphans_orders_customer": orphans_orders_customer,
         "lang_histograms_documents": lang_histograms_documents,
         "drift_stats_documents": drift_stats_documents,
-        "agg_pricing_summary": agg_pricing_summary,
-        "windowed_event_counts": windowed_event_counts,
-        "topk_events_per_type": topk_events_per_type,
         "error_breakdown_documents": error_breakdown_documents,
-        "text_consistency_documents": text_consistency_documents,
         "salted_agg_orders": salted_agg_orders,
         "per_host_verdicts_documents": per_host_verdicts_documents,
     }
@@ -1968,30 +1245,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT chi_square, dof, ks_stat FROM chi, ks
     """
 
-    pricing = """
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-           count(*) AS count_order
-      FROM lineitem GROUP BY l_returnflag, l_linestatus
-    """
-
-    windowed = """
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start, event_type,
-           count(*) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-      FROM events GROUP BY 1, 2
-    """
-
-    topk = """
-    WITH ranked AS (
-      SELECT event_type, event_id, value,
-             row_number() OVER (PARTITION BY event_type
-                                ORDER BY value DESC, event_id ASC) AS rn
-        FROM events)
-    SELECT event_type, event_id, value, rn FROM ranked WHERE rn <= 3
-    """
-
     error_breakdown = f"""
     WITH v AS (
       SELECT 'text' AS path, 'minLength' AS keyword FROM documents
@@ -2086,56 +1339,7 @@ def oracle_sql() -> dict[str, str]:
         "orphans_orders_customer": orphans,
         "lang_histograms_documents": lang_hists,
         "drift_stats_documents": drift_stats,
-        "agg_pricing_summary": pricing,
-        "windowed_event_counts": windowed,
-        "topk_events_per_type": topk,
         "error_breakdown_documents": error_breakdown,
-        # the charset-family suffix + (charset, source) labels replay
-        # from the same md5-nibble derivation the corpus generator uses;
-        # specials as chr() so the SQL is charset-clean itself
-        "text_consistency_documents": """
-    WITH f AS (
-      SELECT doc_id, text,
-             (strpos('0123456789abcdef',
-                     substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) % 14
-               AS fam
-        FROM documents
-       WHERE text IS NOT NULL AND doc_id IS NOT NULL AND doc_id % 97 = 0),
-    s AS (
-      SELECT doc_id, fam,
-             text || ' café 中\U0001f600' || ' ' ||
-             CASE fam
-               WHEN 0 THEN chr(233)
-               WHEN 1 THEN chr(20013) || chr(128512)
-               WHEN 2 THEN chr(20013) || chr(233) || chr(128512)
-               WHEN 3 THEN chr(20013) || chr(233) || chr(128512)
-               WHEN 4 THEN chr(233) || chr(8364)
-               WHEN 5 THEN chr(233)
-               WHEN 6 THEN chr(337) || chr(269)
-               WHEN 7 THEN chr(1046) || chr(1103)
-               WHEN 8 THEN chr(12354) || chr(20013)
-               WHEN 9 THEN chr(54620) || chr(44544)
-               WHEN 10 THEN chr(20013) || chr(25991)
-               WHEN 11 THEN chr(20013) || chr(25991)
-               WHEN 12 THEN chr(233)
-               ELSE chr(233) || chr(8364)
-             END AS t
-        FROM f)
-    SELECT 'https://h' || CAST(doc_id % 19 AS VARCHAR) || '.example.com/p/'
-             || CAST(doc_id AS VARCHAR) || '?a=1&b=2' AS url,
-           CASE fam WHEN 2 THEN 'utf-16le' WHEN 3 THEN 'utf-16be'
-                WHEN 4 THEN 'windows-1252' WHEN 5 THEN 'windows-1252'
-                WHEN 6 THEN 'iso-8859-2' WHEN 7 THEN 'koi8-r'
-                WHEN 8 THEN 'shift_jis' WHEN 9 THEN 'euc-kr'
-                WHEN 10 THEN 'gbk' WHEN 11 THEN 'big5'
-                WHEN 13 THEN 'windows-1252' ELSE 'utf-8' END AS charset,
-           CASE fam WHEN 0 THEN 'utf8' WHEN 1 THEN 'bom' WHEN 2 THEN 'bom'
-                WHEN 3 THEN 'bom' WHEN 13 THEN 'fallback'
-                ELSE 'meta' END AS source,
-           md5(t || '!') AS h_actual,
-           md5(t) AS h_expected
-      FROM s
-    """,
         "streaming_validation_documents": flagship,
         "streaming_dedup_documents": """
     SELECT DISTINCT doc_id % 97 AS dup_key
@@ -2214,43 +1418,9 @@ def oracle_sql() -> dict[str, str]:
            CAST(max(o_totalprice) AS DOUBLE) AS max_price
       FROM orders GROUP BY o_orderpriority
     """,
-        # closed-form expected metadata from the same modular page
-        # construction as the Spark query (entry 53)
-        "html_metadata_documents": """
-    WITH d AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS i,
-                      CAST(doc_id % 19 AS VARCHAR) AS k, doc_id % 4 AS m
-                 FROM documents WHERE doc_id IS NOT NULL)
-    SELECT doc_id,
-           CASE m WHEN 0 THEN 'Doc ' || i || ' & friends'
-                  WHEN 1 THEN 'spaced ' || i
-                  WHEN 2 THEN NULL
-                  ELSE 'T "' || i || '"' END AS title,
-           CASE m WHEN 0 THEN 'd' || i
-                  WHEN 1 THEN 'D ' || i ELSE NULL END AS description,
-           CASE m WHEN 2 THEN 'OGé' || i ELSE NULL END AS og_title,
-           CASE m WHEN 0 THEN 'https://h' || k || '.example.com/c/' || i
-                  WHEN 3 THEN 'https://h' || k || '.example.com/canon/' || i
-                  ELSE NULL END AS canonical,
-           CAST(CASE m WHEN 0 THEN 3 WHEN 1 THEN 1 WHEN 2 THEN 3 ELSE 1 END
-                AS INTEGER) AS n_outlinks,
-           CAST(CASE m WHEN 0 THEN 3 WHEN 1 THEN 1 WHEN 2 THEN 0 ELSE 1 END
-                AS INTEGER) AS n_resolved,
-           CAST(CASE m WHEN 0 THEN 1 ELSE 0 END AS INTEGER) AS n_nofollow,
-           CASE m
-             WHEN 0 THEN 'https://h' || k || '.example.com/r/' || i
-                         || '|first ' || i || chr(10)
-                         || 'https://x' || k || '.org/p?a=1&b=2|x & y'
-                         || chr(10)
-                         || 'https://ads' || k || '.example.net/z|sponsored ' || i
-             WHEN 1 THEN 'https://cdn' || k || '.net/a|c d'
-             WHEN 2 THEN ''
-             ELSE 'https://h' || k || '.example.com/deep/' || i || '|z' || i
-           END AS resolved_links
-      FROM d
-    """,
-        # closed-form violation rows from the JSON-LD page construction
+        # closed-form violation rows from the JSON-LD block construction
         # (entry 56): family 0 and the first block of family 4 are valid
-        # and emit nothing; decoy script blocks must never surface
+        # and emit nothing
         "jsonld_validation_documents": """
     SELECT doc_id, CAST(0 AS INTEGER) AS block_idx, '' AS path,
            'required' AS keyword, 'missing name' AS message
@@ -2267,59 +1437,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT doc_id, CAST(1 AS INTEGER), 'name', 'minLength',
            'shorter than 5 characters'
       FROM documents WHERE doc_id IS NOT NULL AND doc_id % 5 = 4
-    """,
-        # member name / byte size / method / md5 recomputed from the
-        # table directly (entry 60) — lossless or the hashes break
-        "zip_roundtrip_documents": """
-    SELECT doc_id,
-           'd' || CAST(doc_id AS VARCHAR) || '.txt' AS member,
-           CAST(octet_length(encode(text)) AS BIGINT) AS size,
-           CASE WHEN (doc_id % 8) % 2 = 0 THEN 'deflate' ELSE 'stored'
-           END AS method,
-           md5(text) AS text_md5
-      FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    """,
-        # entry 61: the tar twin of entry 60
-        "tar_roundtrip_documents": """
-    SELECT doc_id,
-           'd' || CAST(doc_id AS VARCHAR) || '.txt' AS member,
-           CAST(octet_length(encode(text)) AS BIGINT) AS size,
-           (doc_id % 8) % 2 = 1 AS gzipped,
-           md5(text) AS text_md5
-      FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    """,
-        # entry 62: WET conversion-record round-trip — url, WARC-Date,
-        # refers-to tail, char/byte lengths and md5 all recomputed from
-        # the table (texts carry a non-ASCII suffix so char_len !=
-        # byte_len on every row)
-        "wet_roundtrip_documents": """
-    WITH d AS (
-      SELECT doc_id, text || ' café 中\U0001f600' AS text
-        FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    )
-    SELECT doc_id,
-           'https://h' || CAST(doc_id % 19 AS VARCHAR)
-             || '.example.com/wet/' || CAST(doc_id AS VARCHAR) AS url,
-           '2026-01-01T00:00:00Z' AS warc_date,
-           lpad(CAST(doc_id AS VARCHAR), 12, '0') AS refers_pad,
-           CAST(length(text) AS INTEGER) AS char_len,
-           CAST(strlen(text) AS INTEGER) AS byte_len,
-           md5(text) AS text_md5
-      FROM d
-    """,
-        # entry 72: crawl diff — canonical keys and verdicts stated
-        # closed-form per family (m=3 exists only in crawl A, m=4 only
-        # in crawl B, m in {1,2} change content, m=0 is identical)
-        "crawl_diff_documents": """
-    SELECT 'https://h' || CAST(doc_id % 19 AS VARCHAR)
-             || '.example.com/p/' || CAST(doc_id AS VARCHAR)
-             || '?a=1&b=2' AS url_key,
-           CASE doc_id % 5 WHEN 0 THEN 'unchanged'
-                           WHEN 1 THEN 'changed'
-                           WHEN 2 THEN 'changed'
-                           WHEN 3 THEN 'removed'
-                           ELSE 'added' END AS change
-      FROM documents WHERE doc_id IS NOT NULL
     """,
         # entry 74: JSONL round-trip — url/char/byte/md5 recomputed
         # from the construction (the text embeds a real newline,
@@ -2354,8 +1471,4 @@ def oracle_sql() -> dict[str, str]:
      WHERE doc_id IS NOT NULL AND (doc_id % 7) BETWEEN 1 AND 3
      GROUP BY 1, 2
     """,
-        # entry 83: the 64-case named-entity panel — the oracle states
-        # every expected decoded string as a LITERAL (ground truth from
-        # the stdlib WHATWG algorithm at build time, see _entity_panel)
-        "entity_decode_documents": _entity_decode_sql(),
     }

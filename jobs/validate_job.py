@@ -32,13 +32,6 @@ def main() -> int:
                     help="timestamp column to derive a 'day' partition column from")
     ap.add_argument("--host-verdicts-out", default=None,
                     help="also write per-host verdicts (salted agg) to this path")
-    ap.add_argument("--input-format", default="auto",
-                    choices=["auto", "warc", "wet"],
-                    help="'warc': ingest raw crawl archives (*.warc.gz) - "
-                         "parse records, extract text from html, language-ID "
-                         "- then validate; 'wet': ingest extracted-text "
-                         "sidecars (*.warc.wet.gz) - text arrives ready, "
-                         "language-ID then validate; 'auto': parquet/iceberg")
     ap.add_argument("--snapshot-id", type=int, default=None,
                     help="iceberg time travel: validate this snapshot")
     ap.add_argument("--from-snapshot-id", type=int, default=None,
@@ -91,49 +84,9 @@ def main() -> int:
     else:
         schema = PAGES_SCHEMA
 
-    if args.input_format == "warc":
-        # raw crawl archives -> the pages shape, all engine operators:
-        # WARC parse (mapInPandas, no body shuffle) -> charset sniff +
-        # transcode (ops/charset.py; the transport-layer Content-Type
-        # label feeds detection per the WHATWG order — crawl bytes are
-        # NOT all UTF-8, a blind cast mangles every cp1252/CJK page)
-        # -> html -> text (codegen extract_text) -> marker-word lang ID
-        from schema_fantasy_spark.ops.charset import (
-            content_type_charset, transcode,
-        )
-        from schema_fantasy_spark.ops.html import extract_text
-        from schema_fantasy_spark.ops.text import lang_id
-        from schema_fantasy_spark.sources.warc import read_warc
-
-        df = read_warc(spark, args.input).withColumn(
-            "_ct_charset", content_type_charset(F.col("content_type"))
-        )
-        df = transcode(
-            df, binary_col="html", id_col="url", declared_col="_ct_charset"
-        )
-        df = df.withColumn("text", extract_text(F.col("text"))).drop(
-            "_ct_charset"
-        )
-        df = lang_id(df).withColumnRenamed("lang_pred", "lang")
-    elif args.input_format == "wet":
-        # extracted-text sidecars: the text column arrives decoded
-        # (WET bodies are UTF-8 by convention — sources/wet.py replaces
-        # undecodable bytes, never raises), so only language-ID runs
-        # before validation; html stays NULL (the columnar path never
-        # reads it anyway — plan-audited)
-        from schema_fantasy_spark.ops.text import lang_id
-        from schema_fantasy_spark.sources.wet import read_wet
-
-        df = (
-            read_wet(spark, args.input)
-            .withColumn("html", F.lit(None).cast("binary"))
-            .drop("refers_to", "wet_file")
-        )
-        df = lang_id(df).withColumnRenamed("lang_pred", "lang")
-    else:
-        df = read_pages(spark, args.input, snapshot_id=args.snapshot_id,
-                        from_snapshot_id=args.from_snapshot_id,
-                        partition_filter=partition_filter)
+    df = read_pages(spark, args.input, snapshot_id=args.snapshot_id,
+                    from_snapshot_id=args.from_snapshot_id,
+                    partition_filter=partition_filter)
     if args.derive_day_from:
         df = df.withColumn(args.partition_col, F.to_date(F.col(args.derive_day_from)))
 

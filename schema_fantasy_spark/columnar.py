@@ -33,6 +33,7 @@ Engine extensions over the reference model (documented):
 
 from __future__ import annotations
 
+import math
 from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -462,12 +463,14 @@ def _ck_enum(c: ir.Enum, tr: _Translator):
 def _ck_bound(c: ir.Bound, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if _is_numeric(dtype):
-            bound = F.lit(c.limit)
+            bound = F.lit(c.number)
         elif isinstance(dtype, (T.TimestampType, T.DateType)):
             bound = F.lit(c.limit).cast(dtype)  # engine extension
         else:
             return _empty_errors()
-        if c.is_min:
+        if _is_numeric(dtype) and math.isnan(c.number):
+            ok = F.lit(False)  # Spark orders NaN above every number
+        elif c.is_min:
             ok = value > bound if c.exclusive else value >= bound
         else:
             ok = value < bound if c.exclusive else value <= bound

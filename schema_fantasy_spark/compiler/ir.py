@@ -29,6 +29,7 @@ mode refuses the same schemas. Pinned divergence: a non-boolean
 from __future__ import annotations
 
 import json
+import math
 import re
 from dataclasses import dataclass, fields
 from typing import (Any, Callable, ClassVar, Dict, Iterator, List, NamedTuple, Optional,
@@ -36,6 +37,7 @@ from typing import (Any, Callable, ClassVar, Dict, Iterator, List, NamedTuple, O
 
 from schema_fantasy_spark.compiler.linker import resolve_ref
 from schema_fantasy_spark.compiler.regex_dialect import (
+    _JS_SPACE,
     RegexDialectError,
     java_pattern,
     python_pattern,
@@ -45,6 +47,30 @@ from schema_fantasy_spark.errors import human_list
 
 class SchemaCompileError(Exception):
     pass
+
+
+#: JS WhiteSpace and LineTerminator runs at either end, which Number() trims
+_JS_TRIM = re.compile(rf"\A[{_JS_SPACE}]+|[{_JS_SPACE}]+\Z")
+_JS_DECIMAL = re.compile(r"[+-]?(?:Infinity|(?:[0-9]+\.?[0-9]*|\.[0-9]+)(?:[eE][+-]?[0-9]+)?)")
+_JS_RADIX = {"x": (16, re.compile(r"[0-9a-fA-F]+")), "o": (8, re.compile(r"[0-7]+")),
+             "b": (2, re.compile(r"[01]+"))}
+
+
+def js_number(s: str) -> float:
+    """JS ``Number(s)`` (ECMA-262 StringToNumber): the value a JSON number
+    meets when the reference compares it with a string bound."""
+    s = _JS_TRIM.sub("", s)
+    if not s:
+        return 0.0
+    if _JS_DECIMAL.fullmatch(s):
+        return float(s.replace("Infinity", "inf"))
+    radix = _JS_RADIX.get(s[1:2].lower()) if s[:1] == "0" else None
+    if radix and radix[1].fullmatch(s, 2):
+        try:
+            return float(int(s[2:], radix[0]))
+        except OverflowError:
+            return math.inf
+    return math.nan
 
 
 def json_repr(v: Any) -> str:
@@ -156,6 +182,13 @@ class Bound(Check):
     exclusive: bool
     is_min: bool
     message: str
+
+    @property
+    def number(self) -> Union[int, float]:
+        """The limit a JSON number compares against: a string reads as
+        JS ``Number(limit)``, and NaN fails every number, as the
+        reference's ``value <= max`` does."""
+        return js_number(self.limit) if isinstance(self.limit, str) else self.limit
 
 
 @_check
@@ -414,6 +447,8 @@ def _literal_depth(v: Any) -> int:
 @_lowers("type")
 def _type(lo, kw, value, schema, sub):
     types = tuple(value) if isinstance(value, list) else (value,)
+    _must(all(isinstance(t, str) for t in types), kw, value,
+          "a string or an array of strings")
     return Type(kw, types, " or ".join(str(t) for t in types), "integer" in types)
 
 
@@ -457,6 +492,7 @@ def _size(lo, kw, value, schema, sub):
 
 @_lowers("pattern")
 def _pattern(lo, kw, value, schema, sub):
+    _must(isinstance(value, str), kw, value, "a string")
     return Pattern(kw, lo.regex(value), f"does not match /{value}/")
 
 
@@ -519,6 +555,7 @@ def _items(lo, kw, value, schema, sub):
 
 @_lowers("allOf", "anyOf", "oneOf")
 def _combinator(lo, kw, value, schema, sub):
+    _must(isinstance(value, list), kw, value, "an array")
     nodes = tuple(sub(s, f"{kw}/{i}") for i, s in enumerate(value))
     return {"allOf": AllOf, "anyOf": AnyOf, "oneOf": OneOf}[kw](kw, nodes)
 

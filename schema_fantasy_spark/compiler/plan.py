@@ -345,7 +345,7 @@ class _Generator:
 
     def bound(self, c: ir.Bound) -> _Block:
         op = (">" if c.is_min else "<") + ("" if c.exclusive else "=")
-        return self._single("number", f"v {op} {_lit(c.limit)}", c)
+        return self._single("number", f"v {op} {_lit(c.number)}", c)
 
     def multiple_of(self, c: ir.MultipleOf) -> _Block:
         ok = f"(v / {_lit(c.divisor)}) % 1 == 0"  # float semantics, IEEE754 like JS

@@ -25,7 +25,9 @@ dynamic kernel). The three dialects agree on the common core; this module
   backreference only outside a class in a pattern with at least N
   capturing groups; otherwise ``\\8`` and ``\\9`` are identity escapes and
   the rest a legacy octal escape (``\\12`` is U+000A, ``\\400`` is a space
-  then '0'), spelled ``\\xHH``. ``[^]`` (any character) and ``[]``
+  then '0'), spelled ``\\xHH``. A backreference to a group that opens
+  later matches the empty string, as in JS, and is spelled ``(?:)``
+  (Python refuses it, Java never matches it). ``[^]`` (any character) and ``[]``
   (matches nothing), errors in both Java and Python, are spelled as
   ``[\\s\\S]`` and ``[^\\s\\S]``.
 * with ``strict=True``, RAISES :class:`RegexDialectError` at schema-compile
@@ -130,6 +132,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
     # without a named group, flagless '\k' is an identity escape
     named = bool(_NAMED_GROUP.search(pattern))
     groups = _count_groups(pattern)
+    opened = 0  # capturing groups opened so far
     while i < n:
         ch = pattern[i]
         if ch == "\\":
@@ -243,6 +246,17 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 i = m.end() if m else i + 2
                 prev_atom = True
                 continue
+            if nxt in "123456789":
+                m = _DIGITS.match(pattern, i + 1)
+                if int(m.group(0)) > opened:
+                    # a group that opens later has captured nothing yet:
+                    # JS matches the empty string (captures also reset on
+                    # each quantifier iteration); Python refuses the
+                    # reference and Java never matches it
+                    out.append("(?:)")
+                    i = m.end()
+                    prev_atom = True
+                    continue
             if nxt in "sS":
                 if not in_class:
                     out.append(("[" if nxt == "s" else "[^") + _JS_SPACE + "]")
@@ -287,6 +301,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             out.append(("(?P<" if target == "python" else "(?<") + name + ">")
             i = j + 1
             prev_atom = False
+            opened += 1
             continue
         m = None if in_class else _EMPTY_CLASS.match(pattern, i)
         if m:
@@ -341,6 +356,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             # assertions and '*'/'+'/'?' quantifiers, not atoms; every
             # other pattern character is itself an atom
             prev_atom = ch not in "(|^$*+?"
+            opened += ch == "("
             if ch in ".$":
                 out.append(_JS_DOT if ch == "." else _END[target])
                 i += 1

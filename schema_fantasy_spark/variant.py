@@ -45,6 +45,7 @@ only referenced paths; the UDF must json.loads everything).
 from __future__ import annotations
 
 import json
+import math
 from typing import Any, Callable, Dict, List, Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -480,8 +481,10 @@ def _vk_enum(c: ir.Enum, rec):
 def _vk_bound(c: ir.Bound, rec):
     def emit(v, p, m=None, a=None, t=None, pm=None):
         d = as_double(v)
-        bound = F.lit(float(c.limit))
-        if c.is_min:
+        bound = F.lit(float(c.number))
+        if math.isnan(c.number):
+            ok = F.lit(False)  # Spark orders NaN above every double
+        elif c.is_min:
             ok = d > bound if c.exclusive else d >= bound
         else:
             ok = d < bound if c.exclusive else d <= bound

@@ -550,6 +550,19 @@ def test_columnar_accumulates_all_errors(spark):
     assert sorted(e["keyword"] for e in errs) == ["enum", "minLength", "pattern"]
 
 
+def test_string_bound_on_a_numeric_column_matches_the_kernel(spark):
+    """A string minimum/maximum meets a number column as JS Number(limit),
+    as in the kernel; a NaN bound ('2030-01-01 00:00:00') fails every
+    number instead of failing the task on a cast."""
+    df = spark.createDataFrame([(1, 5), (2, 20), (3, None)], "id: long, n: long")
+    for limit in ["10", " 0x10 ", "", "2030-01-01 00:00:00"]:
+        schema = {"properties": {"n": {"maximum": limit}}}
+        got = {r["id"]: r["verdict"] for r in compile_columnar(schema).apply(df).collect()}
+        kernel = compile_schema(schema)
+        assert got == {i: kernel.is_valid({} if n is None else {"n": n})
+                       for i, n in ((1, 5), (2, 20), (3, None))}, limit
+
+
 def test_columnar_additional_properties_static(spark):
     df = spark.createDataFrame([(1, "x")], "a: long, extra: string")
     plan = compile_columnar({"properties": {"a": {}}, "additionalProperties": False})

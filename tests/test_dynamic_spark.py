@@ -105,3 +105,62 @@ def test_engine_generates_kernel_once(spark, monkeypatch):
         got = {r["id"]: r["verdict"] for r in engine.apply(df, doc_col="doc").collect()}
         assert got == {1: True, 2: False}
     assert len(calls) == 1
+
+
+def test_string_maximum_against_a_number_is_a_violation_row(spark):
+    """PAGES_SCHEMA bounds warc_ts by a timestamp string, which a JSON
+    number meets as JS Number(limit) = NaN: a numeric warc_ts is a
+    maximum violation row in dynamic and variant mode, not a failed task."""
+    from schema_fantasy_spark.engine import ValidationEngine
+    from schema_fantasy_spark.sources.pages import PAGES_SCHEMA
+    from schema_fantasy_spark.variant import compile_variant
+
+    df = spark.createDataFrame(
+        [(1, '{"url": "https://a", "warc_ts": 5, "text": "x"}'),
+         (2, '{"url": "https://a", "warc_ts": "2020-01-01", "text": "x"}')],
+        "id: long, doc: string",
+    )
+    for validated in (validate_json(df, "doc", PAGES_SCHEMA),
+                      compile_variant(PAGES_SCHEMA).apply(df, "doc")):
+        rows = ValidationEngine.violations(validated, ["id"]).collect()
+        assert [(r["id"], list(r["path"]), r["keyword"], r["message"]) for r in rows] == [
+            (1, ["warc_ts"], "maximum", "greater than 2030-01-01 00:00:00")]
+
+
+def test_nan_infinity_docs_quarantined_in_both_modes(spark):
+    """NaN/Infinity are not JSON: both kernels must emit $parse, keeping
+    the modes oracle-interchangeable."""
+    from schema_fantasy_spark.dynamic import validate_json
+    from schema_fantasy_spark.variant import compile_variant
+
+    df = spark.createDataFrame(
+        [(1, "NaN"), (2, "Infinity"), (3, "1.5")], "id: long, doc: string"
+    )
+    dyn = {r["id"]: r for r in validate_json(df, "doc", {"maximum": 2}).collect()}
+    var = {r["id"]: r for r in compile_variant({"maximum": 2}).apply(df, "doc").collect()}
+    for i in (1, 2):
+        assert dyn[i]["errors"][0]["keyword"] == "$parse"
+        assert var[i]["errors"][0]["keyword"] == "$parse"
+    assert dyn[3]["verdict"] is True and var[3]["verdict"] is True
+
+
+def test_deterministic_sample_engine_invariant(spark):
+    """The md5-nibble sample keeps EXACTLY the rows an independent Python
+    md5 predicts (engine/partitioning invariance), and rates are
+    monotonic in the nibble threshold."""
+    import hashlib
+
+    from schema_fantasy_spark import scale
+
+    df = spark.createDataFrame([(i,) for i in range(400)], "doc_id: long")
+    got = sorted(r["doc_id"] for r in scale.deterministic_sample(df, "doc_id", 4).collect())
+    want = sorted(
+        i for i in range(400)
+        if int(hashlib.md5(str(i).encode()).hexdigest()[0], 16) < 4
+    )
+    assert got == want
+    n16 = scale.deterministic_sample(df, "doc_id", 16).count()
+    n0 = scale.deterministic_sample(df, "doc_id", 0).count()
+    assert (n16, n0) == (400, 0)
+    with pytest.raises(ValueError):
+        scale.deterministic_sample(df, "doc_id", 17)

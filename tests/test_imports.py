@@ -66,7 +66,7 @@ def test_guard_flags_a_dangling_import():
     ((lineno, module, name),) = package_imports(src, "")
     assert (lineno, module, name) == (2, f"{PKG}.ops", "no_such_module")
     assert not _resolves(module, name)
-    assert _resolves(f"{PKG}.ops", "charset")
+    assert _resolves(f"{PKG}.sources", "pages")
 
 
 def test_every_package_import_resolves():

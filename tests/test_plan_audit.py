@@ -151,35 +151,6 @@ def test_resumable_run_prunes_partitioned_input(spark, tmp_path_factory):
     assert validated.count() > 0
 
 
-def test_webtext_ops_plan_shapes(spark):
-    """The web-text operators keep their scale shapes: html extraction
-    and url canonicalization are Python-free and shuffle-free."""
-    import contextlib
-    import io
-
-    from schema_fantasy_spark.ops.html import extract_text
-    from schema_fantasy_spark.ops.urls import canonicalize_url
-
-    docs = spark.createDataFrame(
-        [(i, f"some text {i}", f"https://H{i}.Ex.com:443/p?b=2&a=1")
-         for i in range(50)],
-        "doc_id: long, text: string, url: string",
-    )
-
-    def plan(df):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue()
-
-    p = plan(docs.select(
-        extract_text(F.col("text")).alias("t"),
-        canonicalize_url(F.col("url")).alias("u"),
-    ))
-    assert "EvalPython" not in p
-    assert "Exchange" not in p
-
-
 def test_column_stats_single_scan(spark, sf_dir="/root/testdata/sf0.001"):
     """column_stats must profile k columns in ONE pass over the table
     (wide agg + stack unstack; multi-column count_distinct plans through

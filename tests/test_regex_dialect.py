@@ -303,6 +303,10 @@ def test_both_modes_read_patterns_as_js(spark):
              ("^(?<n>a)\\2$", "a\x02", True), ("^\\1{2}$", "\x01\x01", True),
              ("^(a)\\10$", "a\b", True), ("^(?:a)\\1$", "a\x01", True),
              ("^[(]\\1$", "(\x01", True), ("^\\(a\\)\\1$", "(a)\x01", True),
+             # a group that opens later has captured nothing: empty string
+             ("^\\1(a)$", "a", True), ("^\\1(a)$", "aa", False), ("^\\1{3}(a)$", "a", True),
+             ("^(?:\\1(a))+$", "aa", True), ("^(?:\\1(a))+$", "aaa", True),
+             ("^\\1(a)\\1$", "aa", True), ("^\\2(a)(b)$", "ab", True),
              ("^(a)(b)(c)(d)(e)(f)(g)(h)(i)(j)\\10$", "abcdefghijj", True),
              # '[^]' is any character, '[]' matches nothing
              ("^[^]$", "\n", True), ("a[^]b", "a b", True), ("^[^]{2}$", "ab", True),
