@@ -122,10 +122,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     def json_props_validation(spark, sf):
-        from schema_fantasy_spark.dynamic import validate_json
-
         ev = _spread(tables.load(spark, sf, "events"), "event_id")
-        v = validate_json(ev, "props", PROPS_SCHEMA)
+        v = ValidationEngine(PROPS_SCHEMA, mode="dynamic").apply(ev, doc_col="props")
         out = ValidationEngine.violations(v, ["event_id"])
         return out.select("event_id", "keyword", "message")
 
@@ -148,8 +146,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # violation, incl. the compound additionalProperties row and its
         # depth-1 child, from the columns directly), then validated by
         # the Arrow-UDF kernel
-        from schema_fantasy_spark.dynamic import validate_json
-
         ev = _spread(tables.load(spark, sf, "events"), "event_id")
         kv = (F.col("event_id") % 100).cast("string")
         # JSON-escape the string leg (backslash first, then quote — literal
@@ -203,7 +199,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "patternProperties": {"^tag_": {"type": "string", "minLength": 6}},
             "additionalProperties": {"multipleOf": 2},
         }
-        v = validate_json(ev.withColumn("doc", doc), "doc", schema)
+        v = ValidationEngine(schema, mode="dynamic").apply(
+            ev.withColumn("doc", doc), doc_col="doc")
         out = ValidationEngine.violations(v, ["event_id"])
         return out.select(
             "event_id",
@@ -341,10 +338,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def props_object_bounds(spark, sf):
         # minProperties/maxProperties on dynamic JSON objects (UDF kernel)
-        from schema_fantasy_spark.dynamic import validate_json
-
         ev = _spread(tables.load(spark, sf, "events"), "event_id")
-        v = validate_json(ev, "props", {"minProperties": 2, "maxProperties": 1})
+        v = ValidationEngine({"minProperties": 2, "maxProperties": 1},
+                             mode="dynamic").apply(ev, doc_col="props")
         out = ValidationEngine.violations(v, ["event_id"])
         return out.select("event_id", "keyword", "message")
 
@@ -388,16 +384,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-column stats + exact percentiles in one profile row set: the
         # stats rows (4 columns) left-join the percentile rows (2 columns)
         # on col_name — both are tiny per-column aggregates
-        # r9: one distinct-value count table feeds stats AND exact
-        # percentiles (tc.column_profile_exact) — the builtin percentile
-        # aggregate buffered+sorted ~n_distinct values in ONE final
-        # task (~30 s on a 6M-row double column at any core count)
         li = _spread(tables.load(spark, sf, "lineitem"), "l_orderkey")
-        return tc.column_profile_exact(
-            li,
-            ["l_discount", "l_extendedprice", "l_quantity", "l_tax"],
-            ["l_extendedprice", "l_quantity"],
-        )
+        stats = tc.column_stats(
+            li, ["l_discount", "l_extendedprice", "l_quantity", "l_tax"])
+        pct = tc.percentiles(li, ["l_extendedprice", "l_quantity"])
+        return stats.join(F.broadcast(pct), "col_name", "left")
 
     def duplicate_keys_lineitem(spark, sf):
         # keyed spread on the GROUP key: the groupBy reuses the hash
@@ -427,7 +418,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit("full").alias("scope"), "bucket", "n"
         )
         samp = scale.deterministic_sample(
-            docs.filter(F.col("doc_id").isNotNull()), "doc_id", 4, method="md5"
+            docs.filter(F.col("doc_id").isNotNull()), "doc_id", 4
         )
         sampled = tc.group_histogram(samp, "lang").select(
             F.lit("sampled").alias("scope"), "bucket", "n"
@@ -530,7 +521,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "required": ["event_type"],
             "properties": {"value": {"maximum": 50}},
         }
-        validated = st.validate_stream(stream, schema)
+        validated = ValidationEngine(schema).apply(stream)
         wv = st.windowed_verdicts(
             validated, ts_col="ts", window="1 hour", watermark="2 hours"
         )
@@ -551,78 +542,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "n_errors",
             "pass",
         )
-
-    def streaming_dedup_documents(spark, sf):
-        # the CUSTOM STATEFUL streaming operator
-        # (applyInPandasWithState cross-batch dedup) under the gate: the
-        # keyed table is split into 8 files and streamed one file per
-        # micro-batch (availableNow + maxFilesPerTrigger=1), so keys
-        # (doc_id % 97) recur ACROSS batches and only keyed state can
-        # dedupe them. The surviving key set must equal batch DISTINCT
-        # exactly — a state bug re-emits (rowcount up) or drops
-        # (rowcount down) and the gate catches either.
-        import hashlib
-        import shutil
-        import tempfile
-
-        from schema_fantasy_spark import streaming as st
-
-        docs = tables.load(spark, sf, "documents").filter(
-            F.col("doc_id").isNotNull()
-        )
-        src_file = os.path.join(sf, "documents.parquet")
-        stat = os.stat(src_file)
-        sig = hashlib.md5(
-            f"{os.path.abspath(src_file)}|{int(stat.st_mtime)}|{stat.st_size}".encode()
-        ).hexdigest()[:12]
-        root = os.path.join(tempfile.gettempdir(), f"sfspark_sdedup_{sig}")
-        src_dir = f"{root}/src"
-        # reuse only a COMPLETE prior write (_SUCCESS marker) — a crashed
-        # mid-write run leaves a partial dir that would silently shrink
-        # the streamed key set versus the oracle
-        if not os.path.isfile(os.path.join(src_dir, "_SUCCESS")):
-            shutil.rmtree(src_dir, ignore_errors=True)
-            keyed = docs.select(F.pmod(F.col("doc_id"), F.lit(97)).alias("dup_key"))
-            keyed.repartition(8).write.mode("overwrite").parquet(src_dir)
-        out_dir = f"{root}/out"
-
-        def _out_complete(d):
-            batches = (
-                [p for p in os.listdir(d) if p.startswith("b")]
-                if os.path.isdir(d)
-                else []
-            )
-            return bool(batches) and all(
-                os.path.isfile(os.path.join(d, p, "_SUCCESS")) for p in batches
-            )
-
-        if not _out_complete(out_dir):
-            # partial output or stale checkpoint without its output
-            # would no-op (or truncate) the rerun — restart both
-            shutil.rmtree(out_dir, ignore_errors=True)
-            shutil.rmtree(f"{root}/ckpt", ignore_errors=True)
-        schema = spark.read.parquet(src_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        deduped = st.stateful_dedup_stream(stream, key_col="dup_key")
-        q = (
-            deduped.writeStream.foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    f"{out_dir}/b{bid}"
-                )
-            )
-            .option("checkpointLocation", f"{root}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.option("basePath", out_dir).parquet(
-            f"{out_dir}/b*"
-        ).select("dup_key")
 
     def http_linked_validation(spark, sf):
         # entry point C under the gate: fetch the schema over live HTTP
@@ -788,8 +707,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # and a TWO-block doc whose second block fails minLength (block
         # indexing under posexplode). The oracle states every violation
         # closed-form.
-        from schema_fantasy_spark.dynamic import validate_json
-
         docs = tables.load(spark, sf, "documents").select("doc_id").filter(
             F.col("doc_id").isNotNull()
         )
@@ -830,7 +747,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "wordCount": {"type": "integer", "minimum": 100},
             },
         }
-        v = validate_json(blocks, "jsonld", schema)
+        v = ValidationEngine(schema, mode="dynamic").apply(blocks, doc_col="jsonld")
         out = ValidationEngine.violations(v, ["doc_id", "block_idx"])
         return out.select(
             "doc_id",
@@ -838,50 +755,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.array_join("path", "/").alias("path"),
             "keyword",
             "message",
-        )
-
-    def jsonl_roundtrip_documents(spark, sf):
-        # JSONL interchange round-trip under the gate: the dominant
-        # LLM-corpus shipping format is gzipped JSON-lines, written
-        # and read by Spark's NATIVE json source (record-per-line,
-        # codec splits per file). Texts embed the JSONL hazards —
-        # a real newline (must escape, or the line framing breaks),
-        # a backslash, quotes, non-ASCII — and the read uses an
-        # explicit schema (inference is not a contract). The oracle
-        # recomputes url/char/byte/md5 from the construction — an
-        # escaping, framing or decode error flips rows.
-        import tempfile
-
-        docs = tables.load(spark, sf, "documents").select("doc_id").filter(
-            F.col("doc_id").isNotNull()
-        )
-        i = F.col("doc_id").cast("string")
-        k = F.pmod(F.col("doc_id"), F.lit(19)).cast("string")
-        text = F.concat(
-            F.lit("line1 "), i, F.lit('\n"café" \\ tail'),
-        )
-        rows = docs.select(
-            "doc_id",
-            F.concat(F.lit("https://h"), k, F.lit(".example.com/j/"), i)
-            .alias("url"),
-            text.alias("text"),
-        )
-        out_dir = tempfile.mkdtemp(prefix="sfs_jsonl_")
-        (
-            rows.repartition(4, "doc_id")
-            .write.mode("overwrite")
-            .option("compression", "gzip")
-            .json(out_dir)
-        )
-        back = spark.read.schema("doc_id long, url string, text string").json(
-            out_dir
-        )
-        return back.select(
-            "doc_id",
-            "url",
-            F.length("text").alias("char_len"),
-            F.octet_length("text").alias("byte_len"),
-            F.md5("text").alias("text_md5"),
         )
 
     def iceberg_partitioned_documents(spark, sf):
@@ -948,11 +821,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "streaming_validation_documents": streaming_validation_documents,
         "windowed_verdicts_events": windowed_verdicts_events,
-        "streaming_dedup_documents": streaming_dedup_documents,
         "http_linked_validation": http_linked_validation,
         "snapshot_diff_documents": snapshot_diff_documents,
         "jsonld_validation_documents": jsonld_validation_documents,
-        "jsonl_roundtrip_documents": jsonl_roundtrip_documents,
         "iceberg_partitioned_documents": iceberg_partitioned_documents,
         # --- the round-1-5 entries ---
         "flagship_validation": flagship_validation,
@@ -1341,10 +1212,6 @@ def oracle_sql() -> dict[str, str]:
         "drift_stats_documents": drift_stats,
         "error_breakdown_documents": error_breakdown,
         "streaming_validation_documents": flagship,
-        "streaming_dedup_documents": """
-    SELECT DISTINCT doc_id % 97 AS dup_key
-      FROM documents WHERE doc_id IS NOT NULL
-    """,
         "windowed_verdicts_events": """
     SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
            count(*) AS n_rows,
@@ -1437,24 +1304,6 @@ def oracle_sql() -> dict[str, str]:
     SELECT doc_id, CAST(1 AS INTEGER), 'name', 'minLength',
            'shorter than 5 characters'
       FROM documents WHERE doc_id IS NOT NULL AND doc_id % 5 = 4
-    """,
-        # entry 74: JSONL round-trip — url/char/byte/md5 recomputed
-        # from the construction (the text embeds a real newline,
-        # backslash, quotes and non-ASCII)
-        "jsonl_roundtrip_documents": """
-    WITH d AS (
-      SELECT doc_id, CAST(doc_id AS VARCHAR) AS i,
-             CAST(doc_id % 19 AS VARCHAR) AS k,
-             'line1 ' || CAST(doc_id AS VARCHAR) || chr(10)
-               || '"café" \\ tail' AS text
-        FROM documents WHERE doc_id IS NOT NULL
-    )
-    SELECT doc_id,
-           'https://h' || k || '.example.com/j/' || i AS url,
-           CAST(length(text) AS INTEGER) AS char_len,
-           CAST(strlen(text) AS INTEGER) AS byte_len,
-           md5(text) AS text_md5
-      FROM d
     """,
         # entry 81: partitioned iceberg_lite with metadata pruning —
         # the engine read a days(warc_ts)-partitioned table through a

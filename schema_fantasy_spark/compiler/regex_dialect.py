@@ -26,8 +26,9 @@ dynamic kernel). The three dialects agree on the common core; this module
   capturing groups; otherwise ``\\8`` and ``\\9`` are identity escapes and
   the rest a legacy octal escape (``\\12`` is U+000A, ``\\400`` is a space
   then '0'), spelled ``\\xHH``. A backreference to a group that opens
-  later matches the empty string, as in JS, and is spelled ``(?:)``
-  (Python refuses it, Java never matches it). ``[^]`` (any character) and ``[]``
+  later, or to a group that is still open around it, matches the empty
+  string, as in JS, and is spelled ``(?:)`` (Python refuses it, Java
+  never matches it). ``[^]`` (any character) and ``[]``
   (matches nothing), errors in both Java and Python, are spelled as
   ``[\\s\\S]`` and ``[^\\s\\S]``.
 * with ``strict=True``, RAISES :class:`RegexDialectError` at schema-compile
@@ -133,6 +134,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
     named = bool(_NAMED_GROUP.search(pattern))
     groups = _count_groups(pattern)
     opened = 0  # capturing groups opened so far
+    open_groups = []  # the number of each enclosing group, 0 if not capturing
     while i < n:
         ch = pattern[i]
         if ch == "\\":
@@ -248,11 +250,13 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 continue
             if nxt in "123456789":
                 m = _DIGITS.match(pattern, i + 1)
-                if int(m.group(0)) > opened:
-                    # a group that opens later has captured nothing yet:
-                    # JS matches the empty string (captures also reset on
-                    # each quantifier iteration); Python refuses the
-                    # reference and Java never matches it
+                ref = int(m.group(0))
+                if ref > opened or ref in open_groups:
+                    # a group that opens later, or one still open around
+                    # the reference, has captured nothing yet: JS matches
+                    # the empty string (captures also reset on each
+                    # quantifier iteration); Python refuses the reference
+                    # and Java never matches it
                     out.append("(?:)")
                     i = m.end()
                     prev_atom = True
@@ -286,6 +290,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             out.append(m.group(0))
             i = m.end()
             prev_atom = False
+            open_groups.append(0)
             continue
         if (
             not in_class
@@ -302,6 +307,7 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             i = j + 1
             prev_atom = False
             opened += 1
+            open_groups.append(opened)
             continue
         m = None if in_class else _EMPTY_CLASS.match(pattern, i)
         if m:
@@ -356,7 +362,11 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             # assertions and '*'/'+'/'?' quantifiers, not atoms; every
             # other pattern character is itself an atom
             prev_atom = ch not in "(|^$*+?"
-            opened += ch == "("
+            if ch == "(":
+                opened += 1
+                open_groups.append(opened)
+            elif ch == ")" and open_groups:
+                open_groups.pop()
             if ch in ".$":
                 out.append(_JS_DOT if ch == "." else _END[target])
                 i += 1

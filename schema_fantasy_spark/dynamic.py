@@ -18,14 +18,14 @@ batches (spark.sql.execution.arrow.maxRecordsPerBatch rows at a time).
 from __future__ import annotations
 
 import json
-from typing import Any, Dict, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from schema_fantasy_spark.errors import ERRORS_SCHEMA, errs_to_rows
-from schema_fantasy_spark.compiler.plan import CompiledSchema, compile_schema, load_kernel
+from schema_fantasy_spark.compiler.plan import CompiledSchema, load_kernel
 
 
 def _reject_constant(name: str):
@@ -38,9 +38,7 @@ def _quarantine(keyword: str, message: str, actual: Optional[str]) -> list:
              "expected": None, "actual": actual, "depth": 0}]
 
 
-def _ensure_parallelism(
-    df: DataFrame, min_parts: int | None = None, keys: tuple = ()
-) -> DataFrame:
+def _ensure_parallelism(df: DataFrame, keys: tuple = ()) -> DataFrame:
     """Spread compute-heavy HOF stages across cores: higher-order-function
     folds evaluate interpreted and inherit the SCAN's parallelism, so a
     small single-row-group file puts an entire HOF pipeline in one task
@@ -56,18 +54,12 @@ def _ensure_parallelism(
     for a 6M-row aggregate at the r9 10x replica."""
     if df.isStreaming:
         return df  # stream parallelism comes from the source
-    if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
+    min_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_parts:
         if keys:
             return df.repartition(min_parts, *[F.col(k) for k in keys])
         return df.repartition(min_parts)
     return df
-
-
-def json_errors_udf(schema: Any, refs: Optional[Dict[str, Any]] = None):
-    """A pandas UDF: json-string column -> errors array<struct> column."""
-    return kernel_udf(compile_schema(schema, refs=refs))
 
 
 def kernel_udf(compiled: CompiledSchema):
@@ -109,19 +101,6 @@ def kernel_udf(compiled: CompiledSchema):
         return docs.map(one)
 
     return _validate
-
-
-def validate_json(
-    df: DataFrame,
-    doc_col: str,
-    schema: Any,
-    refs: Optional[Dict[str, Any]] = None,
-    errors_col: str = "errors",
-    verdict_col: str = "verdict",
-) -> DataFrame:
-    """Validate JSON documents held in ``df[doc_col]`` (string) against
-    ``schema``; append errors + verdict columns."""
-    return apply_udf(df, doc_col, json_errors_udf(schema, refs), errors_col, verdict_col)
 
 
 def apply_udf(df: DataFrame, doc_col: str, udf, errors_col: str = "errors",

@@ -165,23 +165,3 @@ class ValidationEngine:
             )
             .agg(F.count(F.lit(1)).alias("n_violations"))
         )
-
-    @staticmethod
-    def top_violations_per_partition(
-        violations: DataFrame,
-        partition_cols: Iterable[str],
-        k: int,
-        order_col: str = "keyword",
-    ) -> DataFrame:
-        """Bound violation-row output at scale: top-k per partition via a
-        window (SURVEY.md §2.4 sorts/limits)."""
-        from pyspark.sql import Window
-
-        w = (
-            Window.partitionBy(*partition_cols).orderBy(F.col(order_col))
-        )
-        return (
-            violations.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-        )

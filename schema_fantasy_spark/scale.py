@@ -25,28 +25,6 @@ def host_of(url: Column) -> Column:
     return F.parse_url(url, F.lit("HOST"))
 
 
-def with_salt(df: DataFrame, unique_expr: Column, buckets: int, salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt column in [0, buckets)."""
-    return df.withColumn(salt_col, F.pmod(F.xxhash64(unique_expr), F.lit(buckets)))
-
-
-def salted_count(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    unique_expr: Column,
-    buckets: int = 64,
-) -> DataFrame:
-    """Exact per-key counts via two-phase salted aggregation.
-
-    Equivalent to ``df.groupBy(*key_cols).count()`` but a hot key's rows
-    spread over ``buckets`` phase-1 reducers instead of one straggler.
-    """
-    key_cols = list(key_cols)
-    salted = with_salt(df, unique_expr, buckets)
-    partial = salted.groupBy(*key_cols, "_salt").agg(F.count(F.lit(1)).alias("_n"))
-    return partial.groupBy(*key_cols).agg(F.sum("_n").alias("n"))
-
-
 def salted_agg(
     df: DataFrame,
     key_cols: Sequence[str],
@@ -78,7 +56,7 @@ def salted_agg(
             final_exprs.append(F.max(f"_p_{name}").alias(name))
         else:
             raise ValueError(f"non-algebraic aggregate {fn!r} cannot be salted exactly")
-    salted = with_salt(df, unique_expr, buckets)
+    salted = df.withColumn("_salt", F.pmod(F.xxhash64(unique_expr), F.lit(buckets)))
     partial = salted.groupBy(*key_cols, "_salt").agg(*partial_exprs)
     return partial.groupBy(*key_cols).agg(*final_exprs)
 
@@ -125,7 +103,6 @@ def deterministic_sample(
     df: DataFrame,
     id_col: str,
     rate_sixteenths: int,
-    method: str = "md5",
 ) -> DataFrame:
     """Deterministic, reproducible sampling by content of the id — the
     training-data-pipeline sampling primitive (holdout carving, debug
@@ -135,15 +112,11 @@ def deterministic_sample(
     ``df.sample()``, whose output depends on partition layout.
 
     Scale shape: a pure filter — pushes into the scan pipeline, no
-    shuffle, no state. ``method='xxhash64'`` uses
-    ``pmod(xxhash64(id), 16)`` (faster; engine-specific).
+    shuffle, no state.
     """
     if not 0 <= rate_sixteenths <= 16:
         raise ValueError("rate_sixteenths must be in [0, 16]")
-    if method == "md5":
-        nib = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 1), 16, 10
-        ).cast("int")
-    else:
-        nib = F.pmod(F.xxhash64(F.col(id_col)), F.lit(16))
+    nib = F.conv(
+        F.substring(F.md5(F.col(id_col).cast("string")), 1, 1), 16, 10
+    ).cast("int")
     return df.filter(nib < rate_sixteenths)

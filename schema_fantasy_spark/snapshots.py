@@ -1,7 +1,7 @@
 """Cross-snapshot comparison (SURVEY.md §2.4 set ops / §2.5 referential):
-added / removed / changed rows between two snapshots of a keyed table,
-plus the full drift report combining referential integrity with
-chi-square/KS distribution drift.
+added / removed / changed rows between two snapshots of a keyed table
+(orphans and distribution drift between snapshots are ``table_checks``
+calls, bundled by ``CheckSuite``).
 
 Scale shape: one full-outer join keyed on the id column with pre-hashed
 content (xxhash64 of the compared columns) — content never shuffles twice,
@@ -13,8 +13,6 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
-
-from schema_fantasy_spark import table_checks as tc
 
 
 def snapshot_diff(
@@ -56,36 +54,3 @@ def snapshot_diff_summary(
     return (
         d.groupBy("change").agg(F.count(F.lit(1)).alias("n")).orderBy("change")
     )
-
-
-def drift_report(
-    base: DataFrame,
-    nxt: DataFrame,
-    key_col: str = "url",
-    categorical_col: str = "lang",
-    numeric_col_expr=None,
-    numeric_range=(0.0, 5000.0),
-    numeric_buckets: int = 25,
-) -> dict:
-    """The full snapshot-over-snapshot validation bundle (driver-side dict
-    of small result DataFrames): orphans both ways, categorical chi-square,
-    numeric KS. Every entry is a bounded aggregate."""
-    numeric_col_expr = numeric_col_expr if numeric_col_expr is not None else F.length("text")
-    b = base.withColumn("_num", numeric_col_expr)
-    n = nxt.withColumn("_num", numeric_col_expr)
-    return {
-        "removed_keys": tc.referential_orphans(
-            base.select(key_col), nxt.select(key_col), key_col
-        ),
-        "added_keys": tc.referential_orphans(
-            nxt.select(key_col), base.select(key_col), key_col
-        ),
-        "categorical_drift": tc.chi_square_stat(
-            tc.group_histogram(n, categorical_col),
-            tc.group_histogram(b, categorical_col),
-        ),
-        "numeric_drift": tc.ks_stat(
-            tc.numeric_histogram(n, "_num", *numeric_range, numeric_buckets),
-            tc.numeric_histogram(b, "_num", *numeric_range, numeric_buckets),
-        ),
-    }

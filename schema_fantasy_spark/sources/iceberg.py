@@ -104,6 +104,8 @@ def read_pages(
                 "partition_filter is the jar-free iceberg_lite mechanism; "
                 "catalog tables prune via a .where on the partition column"
             )
+        if from_snapshot_id is not None:
+            return read_incremental(spark, location, from_snapshot_id, snapshot_id)
         return read_table(spark, location, snapshot_id=snapshot_id)
     import glob as _glob
     import os as _os

@@ -6,7 +6,8 @@ semantics to column/table scope and inherit its result contract
 
 * null rate        <- ``required`` lifted to column scope
                       (reference src/v4/required.js:18-24)
-* min/max bounds   <- ``minimum``/``maximum`` (reference src/v4/minimum.js:22-27)
+* min/max bounds   <- ``minimum``/``maximum`` (reference src/v4/minimum.js:22-27;
+                      ``CheckSuite.with_bounds``)
 * cardinality      <- ``enum`` domain-size intuition
 * uniqueness       <- ``uniqueItems`` duplicate-count semantics, including
                       the reported duplicate count
@@ -116,225 +117,6 @@ def percentiles(
     ).orderBy("col_name")
 
 
-def column_profile_exact(
-    df: DataFrame,
-    cols: Sequence[str],
-    pct_cols: Sequence[str],
-    probs: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-) -> DataFrame:
-    """:func:`column_stats` ⋈ :func:`percentiles` from ONE distinct-value
-    count table — the scale shape for EXACT numeric profiling.
-
-    The naive shape (kept above for generic callers) buffers every raw
-    value into the ``percentile`` aggregate: a value->count map built
-    row-at-a-time per partition, merged and SORTED in the single final
-    reduce task — ~30 s single-task for one 6M-row double column with
-    ~6M distinct values, at any core count. Here the heavy reduction is
-    a ``groupBy(col_name, value)`` count (partial+final hash agg, fully
-    parallel, one scan of the table via ``stack``), after which:
-
-    * stats rows (min/max/distinct/non-null) are trivial aggregates of
-      the count table — the Expand (k-way row duplication) that
-      ``count_distinct`` on k columns costs is gone too;
-    * the 8 percentile ranks per column are located by range-partitioned
-      per-partition subtotals (collect of n_partitions×k rows, the only
-      driver work) + one partition-local sorted-cumsum lookup;
-    * interpolation replays ``Percentile.getPercentile``'s exact double
-      arithmetic — ``(hi - pos)*lower + (pos - lo)*higher`` with
-      ``pos = p*(N-1)`` — verified bit-equal against the builtin on
-      randomized inputs (tests/test_scale.py::test_column_profile_exact).
-
-    The count table is persisted for the three passes, the range layout
-    checkpointed, and both released before returning (bounded
-    lifecycle); the returned frame is a literal of k rows, so downstream
-    consumers pay nothing. Only sound
-    for EXACT profiling of columns whose distinct-value count table is
-    shuffle-able — i.e. strictly more scalable than the builtin, whose
-    final task holds the same table in one heap."""
-    import math
-    from collections import defaultdict
-
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    cols = list(cols)
-    # internal key is a small int, not the column-name string: the
-    # count-table shuffle carries n_distinct rows and the name literal
-    # would be its widest field
-    pct_cids = [cols.index(c) for c in pct_cols]
-    stack_expr = ", ".join(
-        f"{i}, cast({c} as double)" for i, c in enumerate(cols)
-    )
-    stacked = df.selectExpr(
-        f"stack({len(cols)}, {stack_expr}) as (cid, value)"
-    )
-    cnts = (
-        stacked.groupBy("cid", "value")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
-    ranked = None
-    try:
-        nparts = max(spark.sparkContext.defaultParallelism, 1)
-        # checkpointed: the range exchange samples boundaries per JOB
-        # (and AQE may coalesce it), so the subtotal pass and the
-        # rank-lookup pass must read the SAME materialized partition
-        # layout. An eager localCheckpoint freezes it (trap 21); a bare
-        # persist would not survive a lost cached partition, whose
-        # recompute could resample boundaries and silently shift ranks.
-        # A lost checkpoint block fails the job instead
-        ranked = (
-            cnts.filter(
-                F.col("value").isNotNull() & F.col("cid").isin(pct_cids)
-            )
-            .repartitionByRange(nparts, "cid", "value")
-            .localCheckpoint()
-        )
-        # the subtotal pass and the stats pass are independent reads of
-        # the checkpointed ranks and the persisted count table: overlap
-        # them (guide §2.6 — actions are only sequential because driver
-        # code calls them sequentially), which hides one small-job
-        # latency per profile
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _part_rows():
-            return (
-                ranked.groupBy(F.spark_partition_id().alias("pid"), "cid")
-                .agg(F.sum("cnt").alias("tot"))
-                .collect()
-            )
-
-        def _stats_rows():
-            return (
-                cnts.groupBy("cid")
-                .agg(
-                    F.min("value").alias("min_val"),
-                    F.max("value").alias("max_val"),
-                    F.count("value").alias("n_distinct"),
-                    F.coalesce(
-                        F.sum(
-                            F.when(F.col("value").isNotNull(), F.col("cnt"))
-                        ),
-                        F.lit(0),
-                    ).alias("n_nonnull"),
-                )
-                .collect()
-            )
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            part_f = pool.submit(_part_rows)
-            stats_f = pool.submit(_stats_rows)
-            part_rows = part_f.result()
-            stats = stats_f.result()
-        parts = defaultdict(list)  # cid -> [(pid, tot)] in range order
-        for r in part_rows:
-            parts[r["cid"]].append((r["pid"], r["tot"]))
-        for ps in parts.values():
-            ps.sort()
-        totals = {c: sum(t for _, t in ps) for c, ps in parts.items()}
-        # 0-based global ranks needed per column (floor/ceil of each pos)
-        poss = {}   # (cid, prob_idx) -> (pos, lo, hi)
-        need = defaultdict(set)  # cid -> {rank}
-        for c in pct_cids:
-            n = totals.get(c, 0)
-            if n == 0:
-                continue
-            for i, p in enumerate(probs):
-                pos = p * (n - 1)
-                lo, hi = math.floor(pos), math.ceil(pos)
-                poss[(c, i)] = (pos, lo, hi)
-                need[c].update((int(lo), int(hi)))
-        targets = defaultdict(list)  # pid -> [(cid, global_rank, local_rank)]
-        for c, ranks in need.items():
-            for r in sorted(ranks):
-                off = 0
-                for pid, tot in parts[c]:
-                    if r < off + tot:
-                        targets[pid].append((c, r, r - off))
-                        break
-                    off += tot
-        bc = spark.sparkContext.broadcast(dict(targets))
-
-        def find(batches):
-            import pandas as pd
-            from pyspark import TaskContext
-
-            want = bc.value.get(TaskContext.get().partitionId())
-            got = list(batches)
-            out = {"cid": [], "rank": [], "value": []}
-            if want and got:
-                pdf = pd.concat(got, ignore_index=True)
-                for c in sorted({w[0] for w in want}):
-                    sub = pdf[pdf["cid"] == c].sort_values("value")
-                    cum = sub["cnt"].cumsum().to_numpy()
-                    vals = sub["value"].to_numpy()
-                    for cc, glob_r, loc_r in want:
-                        if cc != c:
-                            continue
-                        # first value whose cumulative count > local rank
-                        idx = int(cum.searchsorted(loc_r + 1))
-                        out["cid"].append(c)
-                        out["rank"].append(glob_r)
-                        out["value"].append(float(vals[idx]))
-            yield pd.DataFrame({
-                "cid": pd.Series(out["cid"], dtype="int32"),
-                "rank": pd.Series(out["rank"], dtype="int64"),
-                "value": pd.Series(out["value"], dtype="float64"),
-            })
-
-        found = ranked.mapInPandas(
-            find, "cid int, rank long, value double"
-        ).collect()
-        val_at = {(r["cid"], r["rank"]): r["value"] for r in found}
-    finally:
-        if ranked is not None:
-            # no public API drops a local checkpoint's blocks before the
-            # driver garbage-collects its RDD; unpersist that RDD here
-            ranked._jdf.queryExecution().logical().rdd().unpersist(False)
-        cnts.unpersist()
-    rows = []
-    by_cid = {r["cid"]: r for r in stats}
-    for c in sorted(range(len(cols)), key=lambda i: cols[i]):
-        s = by_cid.get(c)
-        if s is None:
-            # empty input: the wide-agg shape still emits one row per
-            # column (count aggregates over zero rows yield one 0-row);
-            # mirror it so the two shapes stay interchangeable
-            rows.append((cols[c], None, None, 0, 0,
-                         *[None] * len(probs)))
-            continue
-        pvals = []
-        for i, _p in enumerate(probs):
-            if (c, i) not in poss:
-                pvals.append(None)
-            else:
-                pos, lo, hi = poss[(c, i)]
-                lk = val_at[(c, int(lo))]
-                hk = val_at[(c, int(hi))]
-                v = lk if (hi == lo or lk == hk) else (
-                    (hi - pos) * lk + (pos - lo) * hk
-                )
-                pvals.append(float(v))
-        rows.append((cols[c], s["min_val"], s["max_val"], s["n_distinct"],
-                     s["n_nonnull"], *pvals))
-    names = [f"p{int(p * 100)}" for p in probs]
-    schema = T.StructType(
-        [
-            T.StructField("col_name", T.StringType()),
-            T.StructField("min_val", T.DoubleType()),
-            T.StructField("max_val", T.DoubleType()),
-            T.StructField("n_distinct", T.LongType()),
-            T.StructField("n_nonnull", T.LongType()),
-        ]
-        + [T.StructField(n, T.DoubleType()) for n in names]
-    )
-    out = spark.createDataFrame(rows, schema)
-    return out.select(
-        "col_name", "min_val", "max_val", "n_distinct", "n_nonnull",
-        *[F.round(F.col(n), 4).alias(n) for n in names],
-    )
-
-
 def cardinality_approx(df: DataFrame, cols: Sequence[str], rsd: float = 0.01) -> DataFrame:
     """HLL cardinality per column — the 10^12-scale path (single pass,
     no shuffle of raw values, fixed-size sketches)."""
@@ -344,32 +126,6 @@ def cardinality_approx(df: DataFrame, cols: Sequence[str], rsd: float = 0.01) ->
     return wide.selectExpr(
         f"stack({len(cols)}, {stack_expr}) as (col_name, approx_distinct)"
     ).orderBy("col_name")
-
-
-def bounds_check(
-    df: DataFrame,
-    col: str,
-    minimum=None,
-    maximum=None,
-    id_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Per-row min/max bound violations (keyword semantics at table scope)."""
-    conds = []
-    if minimum is not None:
-        conds.append((F.col(col) < minimum, f"less than {minimum}", "minimum"))
-    if maximum is not None:
-        conds.append((F.col(col) > maximum, f"greater than {maximum}", "maximum"))
-    out = None
-    for cond, msg, kw in conds:
-        part = df.filter(F.col(col).isNotNull() & cond).select(
-            *id_cols,
-            F.lit(col).alias("col_name"),
-            F.lit(kw).alias("keyword"),
-            F.lit(msg).alias("message"),
-            F.col(col).cast("string").alias("actual"),
-        )
-        out = part if out is None else out.unionAll(part)
-    return out
 
 
 # --------------------------------------------------------------- uniqueness

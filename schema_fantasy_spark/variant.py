@@ -51,6 +51,7 @@ from typing import Any, Callable, Dict, List, Optional
 from pyspark.sql import Column, DataFrame, functions as F
 
 from schema_fantasy_spark.compiler import ir
+from schema_fantasy_spark.compiler.plan import compile_schema
 from schema_fantasy_spark.columnar import (
     _all_of_errors,
     _any_of_errors,
@@ -66,6 +67,7 @@ from schema_fantasy_spark.columnar import (
     _required_in_map,
     _say,
 )
+from schema_fantasy_spark.dynamic import apply_udf, kernel_udf
 
 #: JSON runtime type of a variant value (NULL for SQL-NULL = absent).
 #: Guard ordering matters for cost: is_variant_null / map / array probes
@@ -244,7 +246,7 @@ def compile_variant(
     warning = VariantCompileWarning()
     root = ir.lower(schema, refs, base)
     if _enum_depth(root) > CANON_DEPTH:
-        return VariantPlan(None, schema, warning, refs=refs, kernel_routed=True)
+        return VariantPlan(None, warning, kernel_udf(compile_schema(schema, refs=refs)))
 
     def vacuous(v, p, m=None, a=None, t=None, pm=None):
         return _empty_errors()
@@ -267,25 +269,22 @@ def compile_variant(
         emit.props = [k for c in node.checks if isinstance(c, ir.Properties) for k, _s in c.entries]
         return emit
 
-    return VariantPlan(unroll(root, 0), schema, warning, refs=refs)
+    return VariantPlan(unroll(root, 0), warning)
 
 
 class VariantPlan:
     def __init__(
         self,
         root: Optional[Callable],
-        schema: Any,
         warning: VariantCompileWarning,
-        refs: Optional[Dict[str, Any]] = None,
-        kernel_routed: bool = False,
+        udf=None,
     ):
         self._root = root
-        self.schema = schema
         self.warning = warning
-        self.refs = refs or {}
-        #: True when compile_variant routed this schema to the Arrow-UDF
-        #: kernel (enum literals deeper than CANON_DEPTH)
-        self.kernel_routed = kernel_routed
+        #: the Arrow-UDF kernel when compile_variant routed this schema to
+        #: it (enum literals deeper than CANON_DEPTH)
+        self._udf = udf
+        self.kernel_routed = udf is not None
 
     def errors_for_variant(
         self, v: Column, m: Optional[Column] = None, a: Optional[Column] = None,
@@ -299,9 +298,7 @@ class VariantPlan:
             # kernel over the variant's JSON rendering: to_json preserves
             # the stored int-vs-double distinction, json.loads restores
             # it, and the kernel's deep equality is depth-unbounded
-            from schema_fantasy_spark.dynamic import json_errors_udf
-
-            return json_errors_udf(self.schema, refs=self.refs)(F.to_json(v))
+            return self._udf(F.to_json(v))
         return self._root(v, F.array().cast("array<string>"), m, a, None, pm)
 
     def apply(
@@ -320,12 +317,7 @@ class VariantPlan:
             # compile-time auto-route (deep enum literals): the Arrow-UDF
             # kernel IS the faithful semantics, same output contract
             # including the '$parse' quarantine rows
-            from schema_fantasy_spark.dynamic import validate_json
-
-            return validate_json(
-                df, doc_col, self.schema, refs=self.refs,
-                errors_col=errors_col, verdict_col=verdict_col,
-            )
+            return apply_udf(df, doc_col, self._udf, errors_col, verdict_col)
         # try_parse_json: a malformed document becomes a '$parse' error
         # row instead of failing the whole job (quarantine semantics; the
         # Arrow-UDF kernel in dynamic.py does the same)

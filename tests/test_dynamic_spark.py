@@ -8,7 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from schema_fantasy_spark.dynamic import validate_json
+from schema_fantasy_spark.engine import ValidationEngine
 from tests.conftest import load_fixture_cases
 
 # group cases by (group, feature) so each schema validates one batched DF
@@ -21,13 +21,17 @@ FEATURES = sorted(_BY_FEATURE.items(), key=lambda kv: kv[0])
 IDS = [f"{g}:{feat}" for (g, feat), _ in FEATURES]
 
 
+def _dynamic(df, schema, refs=None):
+    return ValidationEngine(schema, refs=refs, mode="dynamic").apply(df, doc_col="doc")
+
+
 @pytest.mark.parametrize("key,feature", FEATURES, ids=IDS)
 def test_feature_batched(spark, key, feature):
     rows = [
         (case, json.dumps(data), valid) for case, data, valid in feature["cases"]
     ]
     df = spark.createDataFrame(rows, "case: string, doc: string, want: boolean")
-    out = validate_json(df, "doc", feature["schema"], feature["refs"])
+    out = _dynamic(df, feature["schema"], feature["refs"])
     bad = out.filter(F.col("verdict") != F.col("want")).select(
         "case", "want", F.to_json("errors").alias("errors")
     ).collect()
@@ -36,14 +40,14 @@ def test_feature_batched(spark, key, feature):
 
 def test_null_doc_column(spark):
     df = spark.createDataFrame([(None,), ('"x"',)], "doc: string")
-    out = validate_json(df, "doc", {"type": "string"})
+    out = _dynamic(df, {"type": "string"})
     got = [r["verdict"] for r in out.orderBy(F.col("doc").asc_nulls_first()).collect()]
     assert got == [False, True]  # JSON null fails type:string; "x" passes
 
 
 def test_error_struct_roundtrip(spark):
     df = spark.createDataFrame([('{"a": [1, "x"]}',)], "doc: string")
-    out = validate_json(df, "doc", {"properties": {"a": {"items": {"type": "integer"}}}})
+    out = _dynamic(df, {"properties": {"a": {"items": {"type": "integer"}}}})
     errs = out.select("errors").collect()[0][0]
     assert len(errs) == 1
     assert list(errs[0]["path"]) == ["a", "1"]
@@ -53,13 +57,11 @@ def test_error_struct_roundtrip(spark):
 def test_malformed_json_quarantined(spark):
     """A malformed document yields a '$parse' violation row instead of
     failing the stage (quarantine path for 10^12-doc corpora)."""
-    from schema_fantasy_spark.dynamic import validate_json
-
     df = spark.createDataFrame(
         [(1, '{"a": 1}'), (2, '{"a": '), (3, None), (4, "[1, 2,")],
         "id: long, doc: string",
     )
-    out = validate_json(df, "doc", {"required": ["a"]}).collect()
+    out = _dynamic(df, {"required": ["a"]}).collect()
     by_id = {r["id"]: r for r in out}
     assert by_id[1]["verdict"] is True
     assert by_id[2]["verdict"] is False
@@ -80,7 +82,7 @@ def test_deep_document_quarantined(spark):
     df = spark.createDataFrame(
         [(d, "[" * d + "]" * d) for d in (300, 600)], "depth: long, doc: string"
     )
-    by_depth = {r["depth"]: r for r in validate_json(df, "doc", schema).collect()}
+    by_depth = {r["depth"]: r for r in _dynamic(df, schema).collect()}
     assert by_depth[300]["verdict"] is True
     assert by_depth[300]["errors"] == []
     (row,) = by_depth[600]["errors"]
@@ -89,11 +91,26 @@ def test_deep_document_quarantined(spark):
     assert row["message"] == "document nests too deeply to validate"
 
 
+def test_low_split_input_spreads_to_default_parallelism(spark):
+    """The Arrow UDF inherits the scan's parallelism: a one-partition input
+    is spread to defaultParallelism before the kernel runs (hash on the
+    ``keys`` columns when given); an input already that wide is kept."""
+    from schema_fantasy_spark.dynamic import _ensure_parallelism
+
+    want = spark.sparkContext.defaultParallelism
+    one = spark.range(64).coalesce(1)
+    assert _ensure_parallelism(one).rdd.getNumPartitions() == want
+    keyed = _ensure_parallelism(one, keys=("id",))
+    assert keyed.rdd.getNumPartitions() == want
+    assert sorted(r["id"] for r in keyed.collect()) == list(range(64))
+    wide = spark.range(0, 64, 1, want + 1)
+    assert _ensure_parallelism(wide) is wide
+
+
 def test_engine_generates_kernel_once(spark, monkeypatch):
     """A dynamic engine generates its kernel at construction and every
     apply reuses it (and its UDF)."""
     from schema_fantasy_spark.compiler import plan
-    from schema_fantasy_spark.engine import ValidationEngine
 
     calls = []
     generate = plan.generate_source
@@ -111,7 +128,6 @@ def test_string_maximum_against_a_number_is_a_violation_row(spark):
     """PAGES_SCHEMA bounds warc_ts by a timestamp string, which a JSON
     number meets as JS Number(limit) = NaN: a numeric warc_ts is a
     maximum violation row in dynamic and variant mode, not a failed task."""
-    from schema_fantasy_spark.engine import ValidationEngine
     from schema_fantasy_spark.sources.pages import PAGES_SCHEMA
     from schema_fantasy_spark.variant import compile_variant
 
@@ -120,7 +136,7 @@ def test_string_maximum_against_a_number_is_a_violation_row(spark):
          (2, '{"url": "https://a", "warc_ts": "2020-01-01", "text": "x"}')],
         "id: long, doc: string",
     )
-    for validated in (validate_json(df, "doc", PAGES_SCHEMA),
+    for validated in (_dynamic(df, PAGES_SCHEMA),
                       compile_variant(PAGES_SCHEMA).apply(df, "doc")):
         rows = ValidationEngine.violations(validated, ["id"]).collect()
         assert [(r["id"], list(r["path"]), r["keyword"], r["message"]) for r in rows] == [
@@ -130,13 +146,12 @@ def test_string_maximum_against_a_number_is_a_violation_row(spark):
 def test_nan_infinity_docs_quarantined_in_both_modes(spark):
     """NaN/Infinity are not JSON: both kernels must emit $parse, keeping
     the modes oracle-interchangeable."""
-    from schema_fantasy_spark.dynamic import validate_json
     from schema_fantasy_spark.variant import compile_variant
 
     df = spark.createDataFrame(
         [(1, "NaN"), (2, "Infinity"), (3, "1.5")], "id: long, doc: string"
     )
-    dyn = {r["id"]: r for r in validate_json(df, "doc", {"maximum": 2}).collect()}
+    dyn = {r["id"]: r for r in _dynamic(df, {"maximum": 2}).collect()}
     var = {r["id"]: r for r in compile_variant({"maximum": 2}).apply(df, "doc").collect()}
     for i in (1, 2):
         assert dyn[i]["errors"][0]["keyword"] == "$parse"

@@ -345,3 +345,25 @@ def test_validate_job_partition_filter_end_to_end(
     # range + filter error forms
     with pytest.raises(il.IcebergLiteError):
         il.snapshot_files(t, partition_filter={"typo": 1})
+
+
+def test_read_pages_catalog_path_reads_the_delta(monkeypatch):
+    """On a catalog table, ``from_snapshot_id`` selects the incremental
+    append-scan between the two snapshots; without it the (time-traveled)
+    table is read whole. Driver-only: the readers are stubbed."""
+    from schema_fantasy_spark.sources import iceberg
+
+    calls = []
+    monkeypatch.setattr(iceberg, "iceberg_available", lambda spark: True)
+    monkeypatch.setattr(iceberg, "read_table",
+                        lambda *a, **kw: calls.append(("table", a, kw)))
+    monkeypatch.setattr(iceberg, "read_incremental",
+                        lambda *a, **kw: calls.append(("incremental", a, kw)))
+    iceberg.read_pages(None, "cc.web.pages", snapshot_id=9, from_snapshot_id=4)
+    iceberg.read_pages(None, "cc.web.pages", from_snapshot_id=4)
+    iceberg.read_pages(None, "cc.web.pages", snapshot_id=9)
+    assert calls == [
+        ("incremental", (None, "cc.web.pages", 4, 9), {}),
+        ("incremental", (None, "cc.web.pages", 4, None), {}),
+        ("table", (None, "cc.web.pages"), {"snapshot_id": 9}),
+    ]

@@ -83,7 +83,7 @@ def test_streaming_validation(spark, tmp_path):
     pages(spark, 2000).write.parquet(src)
     batch_schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(batch_schema).parquet(src)
-    validated = st.validate_stream(stream, PAGES_SCHEMA)
+    validated = ValidationEngine(PAGES_SCHEMA).apply(stream)
     assert validated.isStreaming
 
     metrics = []

@@ -83,6 +83,27 @@ def test_null_rate_lang(spark):
     assert abs(nr["lang"]["null_rate"] - len(exp["null_lang"]) / N) < 1e-9
 
 
+def test_cardinality_approx_within_5pct(spark):
+    """HLL cardinality (BASELINE.json): one scan for every column, and
+    each column's estimate within 5% of the exact distinct count."""
+    import contextlib
+    import io
+    import re
+
+    df = pages(spark, N)
+    cols = ["lang", "text", "url", "warc_ts"]
+    approx = tc.cardinality_approx(df, cols)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        approx.explain("formatted")
+    assert len(re.findall(r"\(\d+\) Range", buf.getvalue())) == 1, buf.getvalue()
+    exact = df.agg(*[F.count_distinct(c).alias(c) for c in cols]).collect()[0]
+    got = {r["col_name"]: r["approx_distinct"] for r in approx.collect()}
+    assert sorted(got) == cols
+    for c in cols:
+        assert abs(got[c] - exact[c]) <= 0.05 * exact[c], (c, got[c], exact[c])
+
+
 def test_snapshot_referential_orphans(spark):
     base, nxt = snapshot_pair(spark, 3000, drop_mod=211)
     # urls in base missing from next = dropped ids (except id 0 keeps its

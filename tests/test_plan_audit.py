@@ -82,17 +82,15 @@ def test_salted_agg_two_exchanges(spark, pages_parquet):
     df = spark.read.parquet(pages_parquet).withColumn(
         "host", scale.host_of(F.col("url"))
     )
-    out = scale.salted_count(df, ["host"], F.col("url"), buckets=8)
+    out = scale.salted_agg(df, ["host"], F.col("url"), {"n": (F.lit(1), "count")}, buckets=8)
     plan = plan_of(out)
     # phase-1 agg keyed (host, salt), phase-2 keyed (host): 2 exchanges
     assert plan.count("Exchange") >= 2
 
 
 def test_dynamic_mode_is_arrow_batched(spark):
-    from schema_fantasy_spark.dynamic import validate_json
-
     df = spark.createDataFrame([('{"a":1}',)], "doc: string")
-    out = validate_json(df, "doc", {"required": ["a"]})
+    out = ValidationEngine({"required": ["a"]}, mode="dynamic").apply(df, doc_col="doc")
     plan = plan_of(out)
     assert "ArrowEvalPython" in plan  # vectorized, not row-at-a-time BatchEvalPython
 

@@ -308,6 +308,13 @@ def test_both_modes_read_patterns_as_js(spark):
              ("^(?:\\1(a))+$", "aa", True), ("^(?:\\1(a))+$", "aaa", True),
              ("^\\1(a)\\1$", "aa", True), ("^\\2(a)(b)$", "ab", True),
              ("^(a)(b)(c)(d)(e)(f)(g)(h)(i)(j)\\10$", "abcdefghijj", True),
+             # so has a group still open around the reference
+             ("^(a\\1)$", "a", True), ("^(a\\1)$", "aa", False), ("^(a\\1)+$", "aa", True),
+             ("^(a\\1)+$", "aaa", True), ("^((a)\\1)$", "a", True), ("^((a)\\1)$", "aa", False),
+             ("^((a)\\2)$", "aa", True), ("^((a)\\2)$", "a", False), ("^(a(b\\1))$", "ab", True),
+             ("^(a(b\\1))$", "aba", False), ("^(a)(b\\1)$", "aba", True),
+             ("^(?<n>a\\1)$", "a", True), ("^(?=(a\\1))a$", "a", True),
+             ("^(a\\1)\\1$", "aa", True), ("^(a|b\\1)+$", "ab", True),
              # '[^]' is any character, '[]' matches nothing
              ("^[^]$", "\n", True), ("a[^]b", "a b", True), ("^[^]{2}$", "ab", True),
              ("[]", "", False), ("a[]", "a", False), ("[]a]", "a]", False),

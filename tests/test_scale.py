@@ -1,61 +1,28 @@
 """Skew machinery tests: salted two-phase aggregation must be EXACTLY
 equivalent to the plain groupBy, and per-host verdicts must match the
-unsalted computation on the Zipf-skewed pages table."""
+unsalted computation on the Zipf-skewed pages table. The column profile
+(column_stats ⋈ percentiles) is checked against pure Python."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from schema_fantasy_spark import scale
 from schema_fantasy_spark.engine import ValidationEngine
 from schema_fantasy_spark.sources.pages import PAGES_SCHEMA, pages
 
 
-def test_salted_count_exact(spark):
-    df = pages(spark, 5000)
-    plain = {
-        r["host"]: r["n"]
-        for r in df.groupBy(scale.host_of(F.col("url")).alias("host"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    salted = {
-        r["host"]: r["n"]
-        for r in scale.salted_count(
-            df.withColumn("host", scale.host_of(F.col("url"))),
-            ["host"],
-            F.col("url"),
-            buckets=16,
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_agg_exact(spark):
+@pytest.mark.parametrize("names,buckets", [(("n",), 16), (("n", "mx", "mn"), 8)],
+                         ids=["count", "count_max_min"])
+def test_salted_agg_exact(spark, names, buckets):
     df = pages(spark, 3000).withColumn("host", scale.host_of(F.col("url")))
-    plain = {
-        r["host"]: (r["n"], r["mx"], r["mn"])
-        for r in df.groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(F.length("text")).alias("mx"),
-            F.min(F.length("text")).alias("mn"),
-        )
-        .collect()
-    }
-    salted = {
-        r["host"]: (r["n"], r["mx"], r["mn"])
-        for r in scale.salted_agg(
-            df,
-            ["host"],
-            F.col("url"),
-            {
-                "n": (F.lit(1), "count"),
-                "mx": (F.length("text"), "max"),
-                "mn": (F.length("text"), "min"),
-            },
-            buckets=8,
-        ).collect()
-    }
-    assert salted == plain
+    aggs = {"n": (F.lit(1), "count"), "mx": (F.length("text"), "max"),
+            "mn": (F.length("text"), "min")}
+    fns = {"count": F.count, "max": F.max, "min": F.min}
+    plain = df.groupBy("host").agg(
+        *[fns[aggs[k][1]](aggs[k][0]).alias(k) for k in names])
+    salted = scale.salted_agg(
+        df, ["host"], F.col("url"), {k: aggs[k] for k in names}, buckets=buckets)
+    assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in plain.collect()}
 
 
 def test_per_host_verdicts_matches_plain(spark):
@@ -104,15 +71,26 @@ def test_prune_days_pushdown(spark, tmp_path):
     assert 0 < n < 2000
 
 
-def test_column_profile_exact_matches_builtin(spark):
-    """r9 optimization pin: tc.column_profile_exact (distinct-value
-    count table + range-partitioned rank lookup + replayed
-    Percentile.getPercentile arithmetic) must equal the builtin shape
-    column_stats ⋈ percentiles on randomized data with duplicates and
-    nulls — every stat long and every rounded percentile double."""
-    import random
+def _spark_percentile(values, p):
+    """Spark's exact ``percentile`` (Percentile.getPercentile): linear
+    interpolation between the sorted values at floor/ceil of p*(N-1),
+    then ``round(_, 4)`` (HALF_UP on the double's decimal string)."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
 
-    from pyspark.sql import functions as F
+    vals = sorted(values)
+    pos = p * (len(vals) - 1)
+    lo, hi = math.floor(pos), math.ceil(pos)
+    lower, higher = vals[lo], vals[hi]
+    v = lower if hi == lo or lower == higher else (hi - pos) * lower + (pos - lo) * higher
+    return float(Decimal(repr(v)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def test_column_profile_matches_python(spark):
+    """The column profile (column_stats ⋈ percentiles) on randomized data
+    with duplicates and nulls equals a pure-Python computation: every
+    stat long and every rounded percentile double."""
+    import random
 
     from schema_fantasy_spark import table_checks as tc
 
@@ -126,44 +104,32 @@ def test_column_profile_exact_matches_builtin(spark):
     # duplicates on the high-cardinality column too
     rows += random.choices(rows, k=500)
     df = spark.createDataFrame(rows, "a double, b double, c double").repartition(7)
-    cols, pct_cols = ["a", "b", "c"], ["a", "b"]
-    old = (
+    cols, pct_cols, probs = ["a", "b", "c"], ["a", "b"], (0.25, 0.5, 0.75, 0.95)
+    profile = (
         tc.column_stats(df, cols)
-        .join(F.broadcast(tc.percentiles(df, pct_cols)), "col_name", "left")
+        .join(F.broadcast(tc.percentiles(df, pct_cols, probs)), "col_name", "left")
     )
-    new = tc.column_profile_exact(df, cols, pct_cols)
-    assert old.schema == new.schema
-    o = {r["col_name"]: r.asDict() for r in old.collect()}
-    n = {r["col_name"]: r.asDict() for r in new.collect()}
-    assert o == n
+    got = {r["col_name"]: r.asDict() for r in profile.collect()}
+    want = {}
+    for k, c in enumerate(cols):
+        vals = [r[k] for r in rows if r[k] is not None]
+        want[c] = {"col_name": c, "min_val": min(vals), "max_val": max(vals),
+                   "n_distinct": len(set(vals)), "n_nonnull": len(vals)}
+        for p in probs:
+            want[c][f"p{int(p * 100)}"] = (
+                _spark_percentile(vals, p) if c in pct_cols else None)
+    assert got == want
 
 
-def test_column_profile_exact_empty_input(spark):
-    """Empty-table parity: the wide-agg shape emits one row per column
-    (nulls + zero counts); the count-table shape must mirror it."""
-    from pyspark.sql import functions as F
-
+def test_column_profile_empty_input(spark):
+    """An empty table still profiles to one row per column: null stats,
+    zero counts, null percentiles."""
     from schema_fantasy_spark import table_checks as tc
 
     df = spark.createDataFrame([], "a double, b double")
-    old = (
+    profile = (
         tc.column_stats(df, ["a", "b"])
         .join(F.broadcast(tc.percentiles(df, ["a"])), "col_name", "left")
     )
-    new = tc.column_profile_exact(df, ["a", "b"], ["a"])
-    assert old.schema == new.schema
-    o = sorted(tuple(r) for r in old.collect())
-    n = sorted(tuple(r) for r in new.collect())
-    assert o == n
-
-
-def test_column_profile_exact_releases_storage(spark):
-    """The persisted count table and the checkpointed range layout are
-    both dropped from executor storage before the call returns."""
-    from schema_fantasy_spark import table_checks as tc
-
-    df = spark.createDataFrame([(float(i % 13), float(i)) for i in range(300)],
-                               "a double, b double")
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    tc.column_profile_exact(df, ["a", "b"], ["a", "b"]).collect()
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == before
+    assert sorted(tuple(r) for r in profile.collect()) == [
+        (c, None, None, 0, 0, None, None, None, None) for c in ("a", "b")]

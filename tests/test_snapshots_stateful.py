@@ -1,12 +1,8 @@
-"""Snapshot-diff and stateful-streaming-dedup tests, plus engine edge
-cases (empty input, schema referencing absent columns)."""
+"""Snapshot-diff tests, plus engine edge cases (empty input, schema
+referencing absent columns)."""
 
-import pyspark.sql.functions as F
-import pytest
-
-from schema_fantasy_spark import snapshots, streaming as st
+from schema_fantasy_spark import snapshots
 from schema_fantasy_spark.engine import ValidationEngine
-from schema_fantasy_spark.sources.pages import pages, snapshot_pair
 
 
 def test_snapshot_diff_exact(spark):
@@ -29,50 +25,6 @@ def test_snapshot_diff_null_vs_value(spark):
     nxt = spark.createDataFrame([(1, None), (2, None)], "id: long, v: string")
     d = {r["id"]: r["change"] for r in snapshots.snapshot_diff(base, nxt, ["id"]).collect()}
     assert d == {1: "unchanged", 2: "changed"}
-
-
-def test_drift_report_on_snapshot_pair(spark):
-    base, nxt = snapshot_pair(spark, 2000)
-    rep = snapshots.drift_report(base, nxt, key_col="url")
-    assert rep["removed_keys"].count() > 0
-    assert rep["added_keys"].count() > 0
-    chi = rep["categorical_drift"].collect()[0]
-    assert chi["chi_square"] > 10  # lang distribution was shifted by design
-    ks = rep["numeric_drift"].collect()[0]
-    assert ks["ks_stat"] < 0.2  # text-length law unchanged
-
-
-def test_stateful_dedup_stream(spark, tmp_path):
-    # two batches of files: duplicates within AND across batches must drop
-    src = str(tmp_path / "src")
-    b1 = spark.createDataFrame(
-        [("u1", 1), ("u2", 2), ("u1", 3)], "url: string, seq: long"
-    )
-    b2 = spark.createDataFrame(
-        [("u2", 4), ("u3", 5)], "url: string, seq: long"
-    )
-    b1.coalesce(1).write.parquet(src)  # first file(s)
-    b2.coalesce(1).write.mode("append").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .parquet(src)
-    )
-    deduped = st.stateful_dedup_stream(stream, key_col="url")
-    rows = []
-    q = (
-        deduped.writeStream.foreachBatch(
-            lambda df, bid: rows.extend((r["url"]) for r in df.collect())
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert sorted(rows) == ["u1", "u2", "u3"]  # one survivor per key overall
 
 
 def test_validate_empty_dataframe(spark):

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from schema_fantasy_spark import compile_schema
+from schema_fantasy_spark.engine import ValidationEngine
 from schema_fantasy_spark.variant import compile_variant
 from tests.conftest import load_fixture_cases
 
@@ -50,12 +51,11 @@ def test_recursion_unrolls_and_truncates(spark):
 
 
 def test_variant_agrees_with_udf_on_events(spark):
-    from schema_fantasy_spark.dynamic import validate_json
     from __spark_entry__ import PROPS_SCHEMA
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     v = compile_variant(PROPS_SCHEMA).apply(ev, "props")
-    u = validate_json(ev, "props", PROPS_SCHEMA)
+    u = ValidationEngine(PROPS_SCHEMA, mode="dynamic").apply(ev, doc_col="props")
     va = {(r["event_id"], r["verdict"]) for r in v.select("event_id", "verdict").collect()}
     ua = {(r["event_id"], r["verdict"]) for r in u.select("event_id", "verdict").collect()}
     assert va == ua
@@ -107,9 +107,8 @@ def test_variant_malformed_json_quarantined(spark):
     assert out[2]["errors"][0]["keyword"] == "$parse"
     assert out[3]["verdict"] is False or out[3]["errors"] == []
     # $parse rows are identical across modes (they share driver oracles)
-    from schema_fantasy_spark.dynamic import validate_json
-
-    dyn = {r["id"]: r for r in validate_json(df, "doc", {"required": ["a"]}).collect()}
+    dyn = {r["id"]: r for r in ValidationEngine({"required": ["a"]}, mode="dynamic")
+           .apply(df, doc_col="doc").collect()}
     assert dyn[2]["errors"][0]["message"] == out[2]["errors"][0]["message"]
 
 
@@ -174,7 +173,6 @@ def test_deep_enum_auto_routes_to_kernel(spark):
     accept the float re-encoding ``[[[[[[[1.0]]]]]]]`` (reference R.equals
     number semantics, src/v4/enum.js:24-28) — below the unroll depth the
     pure variant expressions would compare '1' vs '1.0' textually."""
-    from schema_fantasy_spark.dynamic import validate_json
     from schema_fantasy_spark.variant import CANON_DEPTH, _max_enum_depth
 
     target = 1
@@ -195,7 +193,7 @@ def test_deep_enum_auto_routes_to_kernel(spark):
     got = {r["i"]: r["verdict"]
            for r in plan.apply(df, "doc").select("i", "verdict").collect()}
     kernel = {r["i"]: r["verdict"]
-              for r in validate_json(df, "doc", schema)
+              for r in ValidationEngine(schema, mode="dynamic").apply(df, doc_col="doc")
               .select("i", "verdict").collect()}
     assert got == kernel == {0: True, 1: True, 2: False, 3: False}
 
@@ -209,3 +207,26 @@ def test_deep_enum_auto_routes_to_kernel(spark):
     # a depth-6 enum still compiles to pure variant expressions
     shallow = {"enum": [[[1]]]}
     assert not compile_variant(shallow).kernel_routed
+
+
+def test_deep_enum_route_generates_kernel_once(spark, monkeypatch):
+    """A kernel-routed variant plan generates its kernel at compile time;
+    every apply and errors_for_variant reuses it."""
+    from schema_fantasy_spark.compiler import plan
+    from schema_fantasy_spark.variant import CANON_DEPTH
+
+    calls = []
+    generate = plan.generate_source
+    monkeypatch.setattr(plan, "generate_source",
+                        lambda *a, **kw: calls.append(a) or generate(*a, **kw))
+    target = 1
+    for _ in range(CANON_DEPTH + 1):
+        target = [target]
+    routed = compile_variant({"enum": [target]})
+    df = spark.createDataFrame([(0, json.dumps(target)), (1, "2")], "i: long, doc: string")
+    for _ in range(2):
+        got = {r["i"]: r["verdict"] for r in routed.apply(df, "doc").collect()}
+        assert got == {0: True, 1: False}
+    vdf = df.select("i", F.parse_json("doc").alias("v"))
+    assert vdf.select(F.size(routed.errors_for_variant(F.col("v")))).count() == 2
+    assert len(calls) == 1
