@@ -131,10 +131,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the THIRD execution mode (Spark 4 VariantType, pure JVM) under
         # the driver gate: same schema and output as json_props_validation,
         # so it shares that oracle — three-mode parity on the driver
-        from schema_fantasy_spark.variant import compile_variant
-
         ev = _spread(tables.load(spark, sf, "events"), "event_id")
-        v = compile_variant(PROPS_SCHEMA).apply(ev, "props")
+        v = ValidationEngine(PROPS_SCHEMA, mode="variant").apply(ev, doc_col="props")
         out = ValidationEngine.violations(v, ["event_id"])
         return out.select("event_id", "keyword", "message")
 
@@ -219,8 +217,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # query exists for PARITY, and interpreted variant expressions
         # are the documented ~8x-slower mode (README "two execution
         # modes") — the UDF twin covers the full table
-        from schema_fantasy_spark.variant import compile_variant
-
         ev = _spread(
             tables.load(spark, sf, "events").filter(F.col("event_id") % 10 == 0),
             "event_id",
@@ -277,7 +273,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "patternProperties": {"^tag_": {"type": "string", "minLength": 6}},
             "additionalProperties": {"multipleOf": 2},
         }
-        v = compile_variant(schema).apply(ev.withColumn("doc", doc), "doc")
+        v = ValidationEngine(schema, mode="variant").apply(ev.withColumn("doc", doc), doc_col="doc")
         out = ValidationEngine.violations(v, ["event_id"])
         return out.select(
             "event_id",

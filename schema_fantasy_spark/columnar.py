@@ -34,9 +34,12 @@ Engine extensions over the reference model (documented):
 from __future__ import annotations
 
 import math
+import unicodedata
 from typing import Any, Callable, Dict, List, Optional, Sequence
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql.pandas.functions import pandas_udf
 
 from schema_fantasy_spark.compiler import ir
 from schema_fantasy_spark.compiler.ir import SchemaCompileError
@@ -248,12 +251,6 @@ class ColumnarPlan:
             dtype = T.StructType(df.schema.fields)
             errors = self._bound[key] = self._root(value, dtype, F.array().cast("array<string>"))
         return errors
-
-    def apply(
-        self, df: DataFrame, errors_col: str = "errors", verdict_col: str = "verdict"
-    ) -> DataFrame:
-        out = df.withColumn(errors_col, self.errors_column(df))
-        return out.withColumn(verdict_col, F.size(F.col(errors_col)) == 0)
 
 
 # ------------------------------------------------------------- check emit
@@ -501,13 +498,11 @@ def nfc_length_udf():
     corpus can contain decomposed combining sequences; plain ``F.length``
     (raw code points) is the default and identical for NFC-normalized or
     ASCII text."""
-    import unicodedata
-    from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringifies them
-    # and pyspark cannot resolve 'pd.Series' from this module's scope
-    @pandas_udf("int", PandasUDFType.SCALAR)
-    def _nfc_len(s):
+    # the hints are strings (`from __future__ import annotations`);
+    # pyspark resolves them against this module's globals, hence the
+    # module-level pandas import
+    @pandas_udf(T.IntegerType())
+    def _nfc_len(s: pd.Series) -> pd.Series:
         return s.map(
             lambda x: len(unicodedata.normalize("NFC", x)) if x is not None else None
         )

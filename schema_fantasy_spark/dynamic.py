@@ -103,10 +103,8 @@ def kernel_udf(compiled: CompiledSchema):
     return _validate
 
 
-def apply_udf(df: DataFrame, doc_col: str, udf, errors_col: str = "errors",
-              verdict_col: str = "verdict") -> DataFrame:
-    """Append the errors of the kernel UDF ``udf`` over ``df[doc_col]``
-    and the verdict."""
+def with_errors(df: DataFrame, doc_col: str, udf) -> DataFrame:
+    """Append ``errors``: the kernel UDF ``udf`` over ``df[doc_col]``."""
     # The Arrow UDF inherits the scan's parallelism; spread low-split
     # inputs (a single-row-group bench file, a small createDataFrame)
     # across cores first. _ensure_parallelism is a NO-OP whenever the
@@ -116,6 +114,4 @@ def apply_udf(df: DataFrame, doc_col: str, udf, errors_col: str = "errors",
     # costs far less than the idle cores (measured 1.65s -> 0.75s once
     # the violations() double-eval was fixed; an earlier measurement
     # that found repartitioning a wash predated that fix).
-    src = _ensure_parallelism(df)
-    out = src.withColumn(errors_col, udf(F.col(doc_col)))
-    return out.withColumn(verdict_col, F.size(F.col(errors_col)) == 0)
+    return _ensure_parallelism(df).withColumn("errors", udf(F.col(doc_col)))

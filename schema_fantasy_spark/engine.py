@@ -4,22 +4,44 @@ Entry-point parity (reference index.js:33-46):
   validateIn(schema, value)      -> ValidationEngine(schema).apply(df)
   validate(refs, schema, value)  -> ValidationEngine(schema, refs=...).apply(df)
 
-Result contract (SURVEY.md §1.4):
+Result contract (SURVEY.md §1.4), owned by this module: the backends
+build only ``errors``; ``apply`` appends ``verdict``, and every per-group
+pass/fail count sums ``verdict_rollup``.
   errors  : array<struct<path,keyword,message,expected,actual,depth>>
   verdict : size(errors) == 0
-  violations     = filter(~verdict) . select(id_cols, explode(errors))
-  partition verdicts = groupBy(partition_cols).agg(...)   -- shuffle #1
+  violations     = select(id_cols, explode(errors))
+  partition verdicts = groupBy(partition_cols).agg(verdict_rollup())
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, Iterable, Optional
+from typing import Any, Dict, Iterable, List, Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from schema_fantasy_spark.columnar import ColumnarPlan, compile_columnar
+from schema_fantasy_spark.columnar import compile_columnar
 from schema_fantasy_spark.compiler.plan import compile_schema
-from schema_fantasy_spark.dynamic import apply_udf, kernel_udf
+from schema_fantasy_spark.dynamic import kernel_udf, with_errors
+
+
+def _verdict_counts() -> Dict[str, tuple]:
+    """The rollup's per-row counts, in ``scale.salted_agg``'s form
+    {name: (column, "count" | "sum")}."""
+    return {
+        "n_rows": (F.lit(1), "count"),
+        "n_invalid": ((~F.col("verdict")).cast("long"), "sum"),
+        "n_errors": (F.size("errors"), "sum"),
+    }
+
+
+def verdict_rollup() -> List[Column]:
+    """The verdict rollup: ``n_rows``, ``n_invalid`` and ``n_errors``
+    (bigint) of a validated frame or group. Each adds up a per-row count,
+    so a two-phase aggregate can split it (``scale.salted_agg``), and a
+    global aggregate over no rows gives 0, never null. A group passes
+    iff ``n_invalid == 0``."""
+    return [F.coalesce(getattr(F, fn)(c), F.lit(0)).alias(name)
+            for name, (c, fn) in _verdict_counts().items()]
 
 
 class ValidationEngine:
@@ -64,34 +86,24 @@ class ValidationEngine:
 
     # ------------------------------------------------------------- validate
 
-    def apply(
-        self,
-        df: DataFrame,
-        doc_col: Optional[str] = None,
-        errors_col: str = "errors",
-        verdict_col: str = "verdict",
-    ) -> DataFrame:
-        """Append errors + verdict. ``doc_col`` names the JSON-string
-        column in dynamic mode; columnar mode validates the whole row."""
-        if self.mode == "dynamic":
-            if doc_col is None:
-                raise ValueError("dynamic mode needs doc_col (a JSON-string column)")
-            return apply_udf(df, doc_col, self._udf, errors_col, verdict_col)
-        if self.mode == "variant":
-            if doc_col is None:
-                raise ValueError("variant mode needs doc_col (a JSON-string column)")
-            return self._plan.apply(df, doc_col, errors_col, verdict_col)
-        return self._plan.apply(df, errors_col, verdict_col)
+    def apply(self, df: DataFrame, doc_col: Optional[str] = None) -> DataFrame:
+        """Append ``errors`` and ``verdict``. ``doc_col`` names the
+        JSON-string column in dynamic and variant mode; columnar mode
+        validates the whole row."""
+        if self.mode == "columnar":
+            out = df.withColumn("errors", self._plan.errors_column(df))
+        elif doc_col is None:
+            raise ValueError(f"{self.mode} mode needs doc_col (a JSON-string column)")
+        elif self.mode == "dynamic":
+            out = with_errors(df, doc_col, self._udf)
+        else:
+            out = self._plan.with_errors(df, doc_col)
+        return out.withColumn("verdict", F.size(F.col("errors")) == 0)
 
     # ----------------------------------------------------------- violations
 
     @staticmethod
-    def violations(
-        validated: DataFrame,
-        id_cols: Iterable[str],
-        errors_col: str = "errors",
-        verdict_col: str = "verdict",
-    ) -> DataFrame:
+    def violations(validated: DataFrame, id_cols: Iterable[str]) -> DataFrame:
         """One row per (document, error): the violation-rows sink.
 
         No verdict filter (``explode`` already emits zero rows for an
@@ -108,7 +120,7 @@ class ValidationEngine:
         barrier attribute, not the kernel."""
         barrier = validated.select(
             *[F.col(c) for c in id_cols],
-            F.explode(F.array(F.col(errors_col))).alias("_errs"),
+            F.explode(F.array(F.col("errors"))).alias("_errs"),
         )
         err = F.explode(F.col("_errs")).alias("error")
         return (
@@ -127,36 +139,28 @@ class ValidationEngine:
     # ----------------------------------------------------- partition verdicts
 
     @staticmethod
-    def partition_verdicts(
-        validated: DataFrame,
-        partition_cols: Iterable[str],
-        verdict_col: str = "verdict",
-        errors_col: str = "errors",
-    ) -> DataFrame:
+    def partition_verdicts(validated: DataFrame, partition_cols: Iterable[str]) -> DataFrame:
         """Per-partition pass/fail + counts (partial+final hash agg; the
         only shuffle is on the partition keys)."""
         partition_cols = list(partition_cols)
-        return validated.groupBy(*partition_cols).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col(verdict_col).cast("long")).alias("n_valid"),
-            F.sum((~F.col(verdict_col)).cast("long")).alias("n_invalid"),
-            F.sum(F.size(errors_col)).alias("n_errors"),
-            (F.sum((~F.col(verdict_col)).cast("long")) == 0).alias("pass"),
+        return validated.groupBy(*partition_cols).agg(*verdict_rollup()).select(
+            *partition_cols,
+            "n_rows",
+            (F.col("n_rows") - F.col("n_invalid")).alias("n_valid"),
+            "n_invalid",
+            "n_errors",
+            (F.col("n_invalid") == 0).alias("pass"),
         )
 
     @staticmethod
-    def error_breakdown(
-        validated: DataFrame,
-        group_cols: Iterable[str] = (),
-        errors_col: str = "errors",
-    ) -> DataFrame:
+    def error_breakdown(validated: DataFrame, group_cols: Iterable[str] = ()) -> DataFrame:
         """Violation counts per (group, keyword, path) — the monitoring
         rollup. Exploding only the (tiny) errors arrays of failing rows;
         valid rows contribute nothing to the shuffle."""
         group_cols = list(group_cols)
-        err = F.explode(F.col(errors_col)).alias("error")
+        err = F.explode(F.col("errors")).alias("error")
         return (
-            validated.filter(F.size(F.col(errors_col)) > 0)
+            validated.filter(F.size(F.col("errors")) > 0)
             .select(*group_cols, err)
             .groupBy(
                 *group_cols,

@@ -26,7 +26,7 @@ from typing import Callable, Dict, List, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from schema_fantasy_spark.engine import ValidationEngine
+from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 
 
 def _safe_key(key: str) -> str:
@@ -127,12 +127,6 @@ class ResumableValidationRun:
             t0 = time.time()
             pdf = df.filter(F.col(self.partition_col).cast("string") == part)
             validated = self.engine.apply(pdf)
-            metric_cols = [
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col("verdict").cast("long")).alias("n_valid"),
-                F.sum((~F.col("verdict")).cast("long")).alias("n_invalid"),
-                F.sum(F.size("errors")).alias("n_errors"),
-            ]
             if self.violations_dir:
                 # ONE pass per partition: metrics ride the violations write
                 # as a CollectMetrics (observe) node — Catalyst cannot push
@@ -141,20 +135,20 @@ class ResumableValidationRun:
                 from pyspark.sql import Observation
 
                 obs = Observation(f"validate-{_safe_key(part)}")
-                observed = validated.observe(obs, *metric_cols)
+                observed = validated.observe(obs, *verdict_rollup())
                 viol = ValidationEngine.violations(observed, list(self.id_cols))
                 viol.write.mode("overwrite").parquet(
                     os.path.join(self.violations_dir, f"part={_safe_key(part)}")
                 )
                 agg = obs.get
             else:
-                agg = validated.agg(*metric_cols).collect()[0].asDict()
+                agg = validated.agg(*verdict_rollup()).collect()[0].asDict()
             metrics = {
                 "n_rows": agg["n_rows"],
-                "n_valid": agg["n_valid"] or 0,
-                "n_invalid": agg["n_invalid"] or 0,
-                "n_errors": agg["n_errors"] or 0,
-                "pass": (agg["n_invalid"] or 0) == 0,
+                "n_valid": agg["n_rows"] - agg["n_invalid"],
+                "n_invalid": agg["n_invalid"],
+                "n_errors": agg["n_errors"],
+                "pass": agg["n_invalid"] == 0,
                 "wall_sec": round(time.time() - t0, 3),
             }
             self.manifest.mark(part, metrics)

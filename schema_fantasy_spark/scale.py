@@ -19,6 +19,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from schema_fantasy_spark.engine import _verdict_counts
+
 
 def host_of(url: Column) -> Column:
     """Host part of a URL (native parse_url — codegen'd)."""
@@ -70,17 +72,7 @@ def per_host_verdicts(
     the skew-safe version of ValidationEngine.partition_verdicts for
     Zipf-distributed hosts."""
     df = validated.withColumn("_host", host_of(F.col(url_col)))
-    out = salted_agg(
-        df,
-        ["_host"],
-        F.col(url_col),
-        {
-            "n_rows": (F.lit(1), "count"),
-            "n_invalid": ((~F.col("verdict")).cast("long"), "sum"),
-            "n_errors": (F.size("errors"), "sum"),
-        },
-        buckets=buckets,
-    )
+    out = salted_agg(df, ["_host"], F.col(url_col), _verdict_counts(), buckets=buckets)
     return out.withColumnRenamed("_host", "host").withColumn(
         "pass", F.col("n_invalid") == 0
     )

@@ -236,8 +236,7 @@ def _encode(w: io.BytesIO, schema: Any, v: Any) -> None:
         raise ValueError(f"unsupported avro type for writing: {t!r}")
 
 
-def write_container(schema: Any, records: List[Any],
-                    extra_meta: Dict[str, bytes] | None = None) -> bytes:
+def write_container(schema: Any, records: List[Any]) -> bytes:
     """Serialize records as an Avro Object Container File (null codec,
     one block, deterministic content-derived sync marker)."""
     body = io.BytesIO()
@@ -248,7 +247,6 @@ def write_container(schema: Any, records: List[Any],
 
     sync = hashlib.md5(block + json.dumps(schema, sort_keys=True).encode()).digest()
     meta = {"avro.schema": json.dumps(schema).encode(), "avro.codec": b"null"}
-    meta.update(extra_meta or {})
     out = io.BytesIO()
     out.write(MAGIC)
     _encode(out, {"type": "map", "values": "bytes"}, meta)

@@ -45,6 +45,9 @@ LANGS = ["en", "de", "fr", "es", "zh", "ru"]
 #: cumulative weight thresholds out of 100 for lang assignment
 LANG_CUM = [45, 60, 72, 84, 94, 100]
 
+#: distinct hosts (H in the construction rules above)
+N_HOSTS = 1000
+
 MAX_WARC_TS = "2030-01-01 00:00:00"
 FUTURE_TS = "2033-06-01 00:00:00"
 
@@ -71,7 +74,6 @@ def pages(
     spark: SparkSession,
     n_rows: int,
     seed: int = 42,
-    n_hosts: int = 1000,
     n_days: int = 30,
     partitions: int | None = None,
     lang_cum=None,
@@ -84,7 +86,7 @@ def pages(
 
     # url: power-law host + unique path; duplicates copy the previous id's url
     url_id = F.when(F.col("_m") == DUP_URL_MARK, F.col("id") - 1).otherwise(F.col("id"))
-    host = F.floor(F.lit(n_hosts) * F.pow(_u01(url_id, seed), F.lit(4.0)))
+    host = F.floor(F.lit(N_HOSTS) * F.pow(_u01(url_id, seed), F.lit(4.0)))
     path = F.md5(F.concat(F.lit(f"p{seed}:"), url_id.cast("string")))
     url = F.concat(F.lit("https://host"), host.cast("string"), F.lit(".example.com/"), path)
     url = F.when(

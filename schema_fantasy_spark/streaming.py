@@ -19,7 +19,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, functions as F
 
-from schema_fantasy_spark.engine import ValidationEngine
+from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 
 
 def windowed_verdicts(
@@ -33,11 +33,7 @@ def windowed_verdicts(
     return (
         validated.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col("verdict")).cast("long")).alias("n_invalid"),
-            F.sum(F.size("errors")).alias("n_errors"),
-        )
+        .agg(*verdict_rollup())
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
@@ -74,10 +70,7 @@ def write_validated(
                 f"{violations_path}/batch_id={batch_id}"
             )
             if on_batch is not None:
-                agg = batch_df.agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum((~F.col("verdict")).cast("long")).alias("n_invalid"),
-                ).collect()[0]
+                agg = batch_df.agg(*verdict_rollup()).collect()[0]
                 on_batch(batch_id, {"n_rows": agg["n_rows"], "n_invalid": agg["n_invalid"]})
         finally:
             batch_df.unpersist()

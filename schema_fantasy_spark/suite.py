@@ -17,12 +17,12 @@ and returns a ``SuiteReport`` with a uniform results frame:
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Callable, Dict, List, Optional, Sequence
+from typing import Any, Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
 from schema_fantasy_spark import table_checks as tc
-from schema_fantasy_spark.engine import ValidationEngine
+from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 
 
 @dataclass
@@ -85,7 +85,7 @@ class CheckSuite:
             return [F.sum(F.col(col).isNull().cast("long")).alias(f"{tag}_null")]
 
         def finish(row) -> List[CheckResult]:
-            n_null, n_rows = row[f"{tag}_null"] or 0, row["_n_rows"]
+            n_null, n_rows = row[f"{tag}_null"] or 0, row["n_rows"]
             rate = (n_null / n_rows) if n_rows else 0.0
             return [CheckResult(
                 f"null_rate({col})", "column", rate <= max_rate,
@@ -165,23 +165,6 @@ class CheckSuite:
         self._slots.append(("job", check, None))
         return self
 
-    def with_numeric_drift(self, col_expr, baseline_hist: DataFrame, lo, hi, buckets,
-                           max_ks: float, name: str = "numeric") -> "CheckSuite":
-        def check(df: DataFrame) -> List[CheckResult]:
-            cur = tc.numeric_histogram(df.withColumn("_nd", col_expr), "_nd", lo, hi, buckets)
-            stat = tc.ks_stat(cur, baseline_hist).collect()[0]
-            return [CheckResult(
-                f"ks_drift({name})", "distribution",
-                stat["ks_stat"] <= max_ks, stat["ks_stat"], f"max {max_ks}",
-            )]
-
-        self._slots.append(("job", check, None))
-        return self
-
-    def with_custom(self, name: str, fn: Callable[[DataFrame], CheckResult]) -> "CheckSuite":
-        self._slots.append(("job", lambda df: [fn(df)], None))
-        return self
-
     # ----------------------------------------------------------------- run
 
     def run(self, df: DataFrame) -> SuiteReport:
@@ -200,17 +183,14 @@ class CheckSuite:
         agg_slots = [s for s in self._slots if s[0] == "agg"]
         row = None
         if self._engine is not None or agg_slots:
-            aggs = [F.count(F.lit(1)).alias("_n_rows")]
-            if self._engine is not None:
-                aggs.append(
-                    F.sum((~F.col("verdict")).cast("long")).alias("_n_invalid")
-                )
+            aggs = (verdict_rollup() if self._engine is not None
+                    else [F.count(F.lit(1)).alias("n_rows")])
             for _kind, build, _finish in agg_slots:
                 aggs.extend(build(target))
             row = target.agg(*aggs).collect()[0]
 
         if self._engine is not None:
-            n, n_invalid = row["_n_rows"], row["_n_invalid"] or 0
+            n, n_invalid = row["n_rows"], row["n_invalid"]
             rate = (n_invalid / n) if n else 0.0
             results.append(CheckResult(
                 "schema", "row", rate <= self._max_invalid_rate, rate,

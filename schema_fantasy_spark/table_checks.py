@@ -117,10 +117,11 @@ def percentiles(
     ).orderBy("col_name")
 
 
-def cardinality_approx(df: DataFrame, cols: Sequence[str], rsd: float = 0.01) -> DataFrame:
-    """HLL cardinality per column — the 10^12-scale path (single pass,
-    no shuffle of raw values, fixed-size sketches)."""
-    aggs = [F.approx_count_distinct(c, rsd).alias(f"__ad_{c}") for c in cols]
+def cardinality_approx(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """HLL cardinality per column, to a 1% relative standard deviation —
+    the 10^12-scale path (single pass, no shuffle of raw values,
+    fixed-size sketches)."""
+    aggs = [F.approx_count_distinct(c, 0.01).alias(f"__ad_{c}") for c in cols]
     wide = df.agg(*aggs)
     stack_expr = ", ".join(f"'{c}', __ad_{c}" for c in cols)
     return wide.selectExpr(
@@ -209,7 +210,6 @@ def text_consistency(
     reference: DataFrame,
     key_col: str = "url",
     text_col: str = "text",
-    method: str = "xxhash64",
 ) -> DataFrame:
     """Per-row invariant vs a reference corpus: byte-identical ``text`` per
     ``key`` (BASELINE.json input_hint; semantics = the reference's enum
@@ -218,10 +218,9 @@ def text_consistency(
     Returns mismatching keys with both hashes. Only (key, xxhash64(text))
     pairs shuffle — texts themselves never move.
     """
-    h = F.md5 if method == "md5" else F.xxhash64  # md5 = oracle-comparable
-    a = df.select(F.col(key_col).alias("k"), h(F.col(text_col)).alias("h_actual"))
+    a = df.select(F.col(key_col).alias("k"), F.xxhash64(F.col(text_col)).alias("h_actual"))
     b = reference.select(
-        F.col(key_col).alias("k"), h(F.col(text_col)).alias("h_expected")
+        F.col(key_col).alias("k"), F.xxhash64(F.col(text_col)).alias("h_expected")
     )
     return (
         a.join(b, "k")

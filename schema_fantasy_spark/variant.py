@@ -33,13 +33,14 @@ Documented approximations (route to dynamic mode if they matter):
   remain the one manual-routing case.
 
 Variant expressions evaluate interpreted (no whole-stage codegen, so no
-subexpression elimination), so ``VariantPlan.apply`` parses each JSON
-document once and materializes its root map/array casts and every root
-property's value + runtime type as Generate-barrier attributes (a naive
-inline ``parse_json`` re-parses per keyword: measured 3.8x slower). Prefer
-this mode when documents are stored as VARIANT at rest, or the schema is
-flat-ish or touches a small fraction of large documents (variant reads
-only referenced paths; the UDF must json.loads everything).
+subexpression elimination), so ``VariantPlan.with_errors`` parses each
+JSON document once and materializes its root map/array casts and every
+root property's value + runtime type as Generate-barrier attributes (a
+naive inline ``parse_json`` re-parses per keyword: measured 3.8x
+slower). Prefer this mode when documents are stored as VARIANT at rest,
+or the schema is flat-ish or touches a small fraction of large documents
+(variant reads only referenced paths; the UDF must json.loads
+everything).
 """
 
 from __future__ import annotations
@@ -67,7 +68,7 @@ from schema_fantasy_spark.columnar import (
     _required_in_map,
     _say,
 )
-from schema_fantasy_spark.dynamic import apply_udf, kernel_udf
+from schema_fantasy_spark.dynamic import kernel_udf, with_errors
 
 #: JSON runtime type of a variant value (NULL for SQL-NULL = absent).
 #: Guard ordering matters for cost: is_variant_null / map / array probes
@@ -77,7 +78,7 @@ from schema_fantasy_spark.dynamic import apply_udf, kernel_udf
 #: same value (Generate-barrier attributes): interpreted variant
 #: expressions get no CSE, so every inline as_map/as_array reference
 #: re-builds the whole cast — the root-level barrier in
-#: ``VariantPlan.apply`` makes them attribute reads instead.
+#: ``VariantPlan.with_errors`` makes them attribute reads instead.
 def vtype(v: Column, m: Optional[Column] = None, a: Optional[Column] = None) -> Column:
     t = F.schema_of_variant(v)  # evaluated only on the scalar branch
     return (
@@ -301,23 +302,18 @@ class VariantPlan:
             return self._udf(F.to_json(v))
         return self._root(v, F.array().cast("array<string>"), m, a, None, pm)
 
-    def apply(
-        self,
-        df: DataFrame,
-        doc_col: str,
-        errors_col: str = "errors",
-        verdict_col: str = "verdict",
-    ) -> DataFrame:
-        """Validate a JSON-string column. The explode(array(parse_json))
-        barrier makes the parsed variant a Generate output attribute, so
-        the document is parsed ONCE per row instead of once per keyword
-        (CollapseProject would otherwise inline parse_json into every
-        check expression — measured 3.8x slower)."""
+    def with_errors(self, df: DataFrame, doc_col: str) -> DataFrame:
+        """Append the ``errors`` of the JSON-string column ``doc_col``. The
+        explode(array(parse_json)) barrier makes the parsed variant a
+        Generate output attribute, so the document is parsed ONCE per row
+        instead of once per keyword (CollapseProject would otherwise
+        inline parse_json into every check expression — measured 3.8x
+        slower)."""
         if self.kernel_routed:
             # compile-time auto-route (deep enum literals): the Arrow-UDF
             # kernel IS the faithful semantics, same output contract
             # including the '$parse' quarantine rows
-            return apply_udf(df, doc_col, self._udf, errors_col, verdict_col)
+            return with_errors(df, doc_col, self._udf)
         # try_parse_json: a malformed document becomes a '$parse' error
         # row instead of failing the whole job (quarantine semantics; the
         # Arrow-UDF kernel in dynamic.py does the same)
@@ -390,20 +386,16 @@ class VariantPlan:
                 for i, k in enumerate(props)
             }
             drop += ["__vp", "__vt"]
-        out = (
-            step.withColumn(
-                errors_col,
-                F.when(F.col(doc_col).isNull(), _empty_errors())
-                .when(F.col("__v").isNull(), parse_err)
-                .otherwise(
-                    self.errors_for_variant(
-                        F.col("__v"), F.col("__vx.m"), F.col("__vx.a"), pm
-                    )
-                ),
-            )
-            .drop(*drop)
-        )
-        return out.withColumn(verdict_col, F.size(F.col(errors_col)) == 0)
+        return step.withColumn(
+            "errors",
+            F.when(F.col(doc_col).isNull(), _empty_errors())
+            .when(F.col("__v").isNull(), parse_err)
+            .otherwise(
+                self.errors_for_variant(
+                    F.col("__v"), F.col("__vx.m"), F.col("__vx.a"), pm
+                )
+            ),
+        ).drop(*drop)
 
 
 # -------------------------------------------------------------- check emit

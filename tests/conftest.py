@@ -24,6 +24,15 @@ def load_fixture_cases():
     return cases
 
 
+def pytest_configure(config):
+    # a pandas UDF declared by a function-type argument instead of type
+    # hints (deprecated) fails the suite instead of printing a warning
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:.*preferred to specify type hints for pandas UDF:UserWarning",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from schema_fantasy_spark.session import get_spark

@@ -5,11 +5,12 @@ kernel (the two modes must agree on (path, keyword) multisets)."""
 import json
 import random
 import unicodedata
+import warnings
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
-from schema_fantasy_spark.columnar import compile_columnar
+from schema_fantasy_spark.columnar import compile_columnar, nfc_length_udf
 from schema_fantasy_spark.compiler.plan import SchemaCompileError, compile_schema
 from schema_fantasy_spark.engine import ValidationEngine
 from schema_fantasy_spark.errors import errs_to_rows
@@ -423,7 +424,7 @@ def test_columnar_matches_python_kernel(spark, name, seed):
         with pytest.raises(SchemaCompileError):
             compile_columnar(schema)
         return
-    plan = compile_columnar(schema, nfc_lengths=name in _NFC_CASES)
+    plan = ValidationEngine(schema, nfc_lengths=name in _NFC_CASES)
     df = spark.createDataFrame(rows, st)
     mismatches = []
     # the kernel reads each row as Spark returns it: map entries keep
@@ -451,7 +452,7 @@ def test_pattern_properties_map_nonstring_values(spark):
             T.StructField("m", T.MapType(T.StringType(), T.LongType())),
         ]),
     )
-    plan = compile_columnar(schema)
+    plan = ValidationEngine(schema)
     got = {
         r["rid"]: sorted(("/".join(e["path"]), e["keyword"]) for e in r["errors"])
         for r in plan.apply(df).select("rid", "errors").collect()
@@ -482,7 +483,7 @@ def test_pattern_properties_over_map_keys_read_patterns_as_js(spark):
     docs = [{"x": 5}, {"p{L}": 5}, {"k\n": 5}, {"k": 5}]
     df = spark.createDataFrame(list(enumerate(docs)), "rid long, m map<string,long>")
     got = {r["rid"]: sorted("/".join(e["path"]) for e in r["errors"])
-           for r in compile_columnar(schema).apply(df).collect()}
+           for r in ValidationEngine(schema).apply(df).collect()}
     assert got == {0: [], 1: ["m/p{L}"], 2: [], 3: ["m/k"]}
     kernel = compile_schema(schema)
     for rid, m in enumerate(docs):
@@ -509,7 +510,7 @@ def test_composite_enum_structural_equality(spark):
         "xs": {"enum": [[1], [3.5]]},            # int literal vs double column
         "m": {"enum": [{"k": 1.0}]},             # map + float literal vs long value
     }}
-    plan = compile_columnar(schema)
+    plan = ValidationEngine(schema)
     got = {r["rid"]: sorted(e["path"][0] for e in r["errors"])
            for r in plan.apply(df).select("rid", "errors").collect()}
     assert got[0] == []          # all three match despite order/numeric repr
@@ -525,7 +526,7 @@ def test_composite_enum_type_mismatch_never_matches(spark):
     """Literals not representable in the column type can match nothing:
     booleans are not numbers, strings are not numbers (R.equals parity)."""
     df = spark.createDataFrame([(1, True, "1")], "i: long, b: boolean, s: string")
-    plan = compile_columnar({"properties": {
+    plan = ValidationEngine({"properties": {
         "i": {"enum": [True, "1"]},   # neither matches a numeric 1
         "b": {"enum": [1]},           # number does not match true
         "s": {"enum": [1]},           # number does not match "1"
@@ -543,7 +544,7 @@ def test_columnar_rejects_recursive_schema():
 
 def test_columnar_accumulates_all_errors(spark):
     df = spark.createDataFrame([("zz",)], "s: string")
-    plan = compile_columnar(
+    plan = ValidationEngine(
         {"properties": {"s": {"minLength": 5, "pattern": "^a", "enum": ["q"]}}}
     )
     errs = plan.apply(df).select("errors").collect()[0][0]
@@ -557,7 +558,7 @@ def test_string_bound_on_a_numeric_column_matches_the_kernel(spark):
     df = spark.createDataFrame([(1, 5), (2, 20), (3, None)], "id: long, n: long")
     for limit in ["10", " 0x10 ", "", "2030-01-01 00:00:00"]:
         schema = {"properties": {"n": {"maximum": limit}}}
-        got = {r["id"]: r["verdict"] for r in compile_columnar(schema).apply(df).collect()}
+        got = {r["id"]: r["verdict"] for r in ValidationEngine(schema).apply(df).collect()}
         kernel = compile_schema(schema)
         assert got == {i: kernel.is_valid({} if n is None else {"n": n})
                        for i, n in ((1, 5), (2, 20), (3, None))}, limit
@@ -565,7 +566,7 @@ def test_string_bound_on_a_numeric_column_matches_the_kernel(spark):
 
 def test_columnar_additional_properties_static(spark):
     df = spark.createDataFrame([(1, "x")], "a: long, extra: string")
-    plan = compile_columnar({"properties": {"a": {}}, "additionalProperties": False})
+    plan = ValidationEngine({"properties": {"a": {}}, "additionalProperties": False})
     errs = plan.apply(df).select("errors").collect()[0][0]
     assert len(errs) == 1
     assert errs[0]["message"] == "additional property found: extra"
@@ -581,7 +582,7 @@ def test_errors_column_bound_once_per_input_type(spark):
 
     def rows(df):
         return sorted((r["id"], [(e["keyword"], e["actual"]) for e in r["errors"]])
-                      for r in plan.apply(df).collect())
+                      for r in df.withColumn("errors", plan.errors_column(df)).collect())
 
     first = rows(strs)
     assert first == [(1, []), (2, [("maxLength", None)])]
@@ -609,7 +610,7 @@ def test_whole_stage_codegen_in_plan(spark):
     """The columnar path must stay JVM-side: no BatchEvalPython /
     ArrowEvalPython nodes, and codegen must cover the project."""
     df = spark.createDataFrame([("a", 1.0)], "s: string, n: double")
-    plan = compile_columnar(
+    plan = ValidationEngine(
         {"required": ["s"], "properties": {"s": {"minLength": 2}, "n": {"minimum": 0}}}
     )
     import contextlib
@@ -627,12 +628,20 @@ def test_nfc_lengths_option(spark):
     # decomposed "A" + COMBINING RING: 2 raw code points, 1 after NFC
     decomposed = "Å"
     df = spark.createDataFrame([(decomposed,)], "s: string")
-    default_plan = compile_columnar({"properties": {"s": {"maxLength": 1}}})
+    default_plan = ValidationEngine({"properties": {"s": {"maxLength": 1}}})
     assert default_plan.apply(df).collect()[0]["verdict"] is False  # raw: 2 > 1
-    nfc_plan = compile_columnar(
+    nfc_plan = ValidationEngine(
         {"properties": {"s": {"maxLength": 1}}}, nfc_lengths=True
     )
     assert nfc_plan.apply(df).collect()[0]["verdict"] is True  # NFC: 1 <= 1
+
+
+def test_nfc_length_udf_is_declared_by_type_hints():
+    """The NFC length UDF builds without the deprecation warning that a
+    function-type (untyped) pandas UDF declaration raises."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        nfc_length_udf()
 
 
 def test_composite_enum_randomized_cross_check(spark):
@@ -691,7 +700,7 @@ def test_composite_enum_randomized_cross_check(spark):
             list(enumerate(spark_vals)),
             T.StructType([T.StructField("rid", T.LongType()), T.StructField("c", dtype)]),
         )
-        plan = compile_columnar(schema)
+        plan = ValidationEngine(schema)
         got = {r["rid"]: len(r["errors"]) == 0 for r in plan.apply(df).collect()}
         kernel = compile_schema(schema)
         for rid, v in enumerate(json_vals):
@@ -704,7 +713,7 @@ def test_enum_out_of_range_literal_matches_nothing(spark):
     simply never match — casting it would throw CAST_OVERFLOW and kill
     the job (round-2 review finding, reproduced live)."""
     df = spark.createDataFrame([(1, 5), (2, 7)], "rid: long, i: int")
-    plan = compile_columnar({"properties": {"i": {"enum": [4294967296, 5, 1e30]}}})
+    plan = ValidationEngine({"properties": {"i": {"enum": [4294967296, 5, 1e30]}}})
     got = {r["rid"]: r["verdict"] for r in plan.apply(df).collect()}
     assert got == {1: True, 2: False}
 
@@ -719,7 +728,7 @@ def test_enum_on_date_and_timestamp_columns(spark):
         [(1, datetime.date(2024, 1, 1)), (2, datetime.date(2025, 2, 2)), (3, None)],
         "rid: long, d: date",
     )
-    plan = compile_columnar({"properties": {"d": {"enum": ["2024-01-01", "not-a-date"]}}})
+    plan = ValidationEngine({"properties": {"d": {"enum": ["2024-01-01", "not-a-date"]}}})
     got = {r["rid"]: r["verdict"] for r in plan.apply(df).collect()}
     assert got == {1: True, 2: False, 3: True}
 
@@ -732,9 +741,9 @@ def test_enum_decimal_and_huge_float_literals(spark):
     df = spark.createDataFrame(
         [(1, Decimal("5.25"))], "rid: long, m: decimal(10,2)"
     )
-    plan = compile_columnar(
+    plan = ValidationEngine(
         {"properties": {"m": {"enum": [99999999999999999999, 5.25, 10 ** 400]}}}
     )
     assert plan.apply(df).collect()[0]["verdict"] is True
-    plan2 = compile_columnar({"properties": {"m": {"enum": [99999999999999999999]}}})
+    plan2 = ValidationEngine({"properties": {"m": {"enum": [99999999999999999999]}}})
     assert plan2.apply(df).collect()[0]["verdict"] is False

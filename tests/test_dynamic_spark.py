@@ -129,7 +129,6 @@ def test_string_maximum_against_a_number_is_a_violation_row(spark):
     number meets as JS Number(limit) = NaN: a numeric warc_ts is a
     maximum violation row in dynamic and variant mode, not a failed task."""
     from schema_fantasy_spark.sources.pages import PAGES_SCHEMA
-    from schema_fantasy_spark.variant import compile_variant
 
     df = spark.createDataFrame(
         [(1, '{"url": "https://a", "warc_ts": 5, "text": "x"}'),
@@ -137,7 +136,7 @@ def test_string_maximum_against_a_number_is_a_violation_row(spark):
         "id: long, doc: string",
     )
     for validated in (_dynamic(df, PAGES_SCHEMA),
-                      compile_variant(PAGES_SCHEMA).apply(df, "doc")):
+                      ValidationEngine(PAGES_SCHEMA, mode="variant").apply(df, "doc")):
         rows = ValidationEngine.violations(validated, ["id"]).collect()
         assert [(r["id"], list(r["path"]), r["keyword"], r["message"]) for r in rows] == [
             (1, ["warc_ts"], "maximum", "greater than 2030-01-01 00:00:00")]
@@ -146,13 +145,12 @@ def test_string_maximum_against_a_number_is_a_violation_row(spark):
 def test_nan_infinity_docs_quarantined_in_both_modes(spark):
     """NaN/Infinity are not JSON: both kernels must emit $parse, keeping
     the modes oracle-interchangeable."""
-    from schema_fantasy_spark.variant import compile_variant
-
     df = spark.createDataFrame(
         [(1, "NaN"), (2, "Infinity"), (3, "1.5")], "id: long, doc: string"
     )
     dyn = {r["id"]: r for r in _dynamic(df, {"maximum": 2}).collect()}
-    var = {r["id"]: r for r in compile_variant({"maximum": 2}).apply(df, "doc").collect()}
+    var = {r["id"]: r for r in ValidationEngine({"maximum": 2}, mode="variant")
+           .apply(df, "doc").collect()}
     for i in (1, 2):
         assert dyn[i]["errors"][0]["keyword"] == "$parse"
         assert var[i]["errors"][0]["keyword"] == "$parse"

@@ -10,9 +10,11 @@ import pyspark.sql.functions as F
 import pytest
 
 from schema_fantasy_spark import streaming as st
-from schema_fantasy_spark.engine import ValidationEngine
+from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 from schema_fantasy_spark.manifest import PartitionManifest, ResumableValidationRun
+from schema_fantasy_spark.scale import per_host_verdicts
 from schema_fantasy_spark.sources.pages import PAGES_SCHEMA, pages
+from schema_fantasy_spark.suite import CheckSuite
 
 
 def _day_pages(spark, n=3000):
@@ -156,3 +158,43 @@ def test_resumable_run_is_one_job_per_partition(spark, tmp_path):
     deltas = [b - a for a, b in zip(counts, counts[1:])]
     assert deltas == [1] * (len(counts) - 1), (counts, deltas)
     assert result.summary["n_rows"] == 1200
+
+
+def test_every_verdict_consumer_sums_the_same_rollup(spark, tmp_path):
+    """partition_verdicts, per_host_verdicts, batch windowed_verdicts, the
+    resumable run's summary (both metric paths) and CheckSuite's schema
+    check report the same totals as a plain aggregate of the validated
+    frame. The suite reports n_rows and n_invalid only."""
+    df = _day_pages(spark, 2000)
+    validated = ValidationEngine(PAGES_SCHEMA).apply(df)
+    totals = validated.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum((~F.col("verdict")).cast("long")).alias("n_invalid"),
+        F.sum(F.size("errors")).alias("n_errors"),
+    ).collect()[0].asDict()
+    assert 0 < totals["n_invalid"] <= totals["n_errors"]
+
+    def summed(frame):
+        rows = frame.collect()
+        return {k: sum(r[k] for r in rows) for k in totals}
+
+    assert summed(ValidationEngine.partition_verdicts(validated, ["day"])) == totals
+    assert summed(per_host_verdicts(validated, buckets=8)) == totals
+    assert summed(st.windowed_verdicts(validated)) == totals
+    for i, vdir in enumerate((None, str(tmp_path / "v"))):
+        run = ResumableValidationRun(ValidationEngine(PAGES_SCHEMA), str(tmp_path / f"m{i}"),
+                                     "day", violations_dir=vdir, id_cols=("id",))
+        summary = run.run(df).summary
+        assert {k: summary[k] for k in totals} == totals
+    schema = CheckSuite(PAGES_SCHEMA, id_cols=("id",)).run(df).results[0]
+    assert schema.check == "schema"
+    assert schema.detail.startswith(f"{totals['n_invalid']}/{totals['n_rows']} invalid rows")
+
+
+def test_verdict_rollup_is_zero_on_empty_input(spark):
+    empty = ValidationEngine(PAGES_SCHEMA).apply(pages(spark, 10).limit(0))
+    assert empty.agg(*verdict_rollup()).collect()[0].asDict() == {
+        "n_rows": 0, "n_invalid": 0, "n_errors": 0}
+    schema = CheckSuite(PAGES_SCHEMA).run(pages(spark, 10).limit(0)).results[0]
+    assert schema.passed and schema.metric == 0.0
+    assert schema.detail.startswith("0/0 invalid rows")

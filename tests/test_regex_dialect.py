@@ -17,6 +17,7 @@ from schema_fantasy_spark.compiler.regex_dialect import (
     java_pattern,
     python_pattern,
 )
+from schema_fantasy_spark.engine import ValidationEngine
 
 
 class TestTranslation:
@@ -137,7 +138,7 @@ class TestEngineRouting:
         assert len(list(kernel.validate({"s": "letters"}))) == 1
 
     def test_columnar_annex_b_parity(self, spark):
-        plan = compile_columnar({"properties": {"s": {"pattern": r"\p{L}"}}})
+        plan = ValidationEngine({"properties": {"s": {"pattern": r"\p{L}"}}})
         df = spark.createDataFrame(
             [(0, "xp{L}y"), (1, "letters")], "rid: long, s: string"
         )
@@ -152,7 +153,7 @@ class TestEngineRouting:
     def test_columnar_verdict_matches_kernel(self, spark):
         schema = {"properties": {"s": {"pattern": r"^\u0061+\cI$"}}}
         df = spark.createDataFrame([(0, "aaa\t"), (1, "bbb")], "rid: long, s: string")
-        plan = compile_columnar(schema)
+        plan = ValidationEngine(schema)
         got = {r["rid"]: r["verdict"] for r in plan.apply(df).collect()}
         assert got == {0: True, 1: False}
         kernel = compile_schema(schema)

@@ -24,7 +24,7 @@ IDS = [f"{g}:{feat}" for (g, feat), _ in FEATURES]
 def test_variant_conformance(spark, key, feature):
     rows = [(c, json.dumps(d), v) for c, d, v in feature["cases"]]
     df = spark.createDataFrame(rows, "c: string, doc: string, want: boolean")
-    plan = compile_variant(feature["schema"], refs=feature["refs"])
+    plan = ValidationEngine(feature["schema"], refs=feature["refs"], mode="variant")
     bad = df.transform(lambda d: plan.apply(d, "doc")).filter(
         F.col("verdict") != F.col("want")
     ).select("c", "want", F.to_json("errors").alias("e")).collect()
@@ -46,7 +46,7 @@ def test_recursion_unrolls_and_truncates(spark):
         [(json.dumps(doc_ok),), (json.dumps(doc_bad),), (json.dumps(deep_bad),)],
         "doc: string",
     )
-    got = [r["verdict"] for r in plan.apply(df, "doc").collect()]
+    got = [len(r["errors"]) == 0 for r in plan.with_errors(df, "doc").collect()]
     assert got == [True, False, True]  # deep violation vacuously passes (documented)
 
 
@@ -54,7 +54,7 @@ def test_variant_agrees_with_udf_on_events(spark):
     from __spark_entry__ import PROPS_SCHEMA
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    v = compile_variant(PROPS_SCHEMA).apply(ev, "props")
+    v = ValidationEngine(PROPS_SCHEMA, mode="variant").apply(ev, "props")
     u = ValidationEngine(PROPS_SCHEMA, mode="dynamic").apply(ev, doc_col="props")
     va = {(r["event_id"], r["verdict"]) for r in v.select("event_id", "verdict").collect()}
     ua = {(r["event_id"], r["verdict"]) for r in u.select("event_id", "verdict").collect()}
@@ -65,13 +65,12 @@ def test_variant_agrees_with_columnar_on_typed_corpus(spark):
     """Three-mode consistency: the same 840-row corpus validated (a)
     columnar over typed columns and (b) variant over the JSON-serialized
     documents must yield identical (path, keyword, depth) multisets."""
-    from schema_fantasy_spark.columnar import compile_columnar
     from tests.test_columnar import (
         FULL_SCHEMA, TYPED_SCHEMA, _mk_rows, _row_to_json_value,
     )
 
     df = spark.createDataFrame(_mk_rows(), TYPED_SCHEMA)
-    col_plan = compile_columnar(FULL_SCHEMA)
+    col_plan = ValidationEngine(FULL_SCHEMA)
     got_col = {
         r["rid"]: sorted(("/".join(e["path"]), e["keyword"], e["depth"]) for e in r["errors"])
         for r in col_plan.apply(df).select("rid", "errors").collect()
@@ -85,7 +84,7 @@ def test_variant_agrees_with_columnar_on_typed_corpus(spark):
         value["rid"] = rid
         docs.append((rid, json.dumps(value)))
     jdf = spark.createDataFrame(docs, "rid: long, doc: string")
-    var_plan = compile_variant(FULL_SCHEMA)
+    var_plan = ValidationEngine(FULL_SCHEMA, mode="variant")
     got_var = {
         r["rid"]: sorted(("/".join(e["path"]), e["keyword"], e["depth"]) for e in r["errors"])
         for r in var_plan.apply(jdf, "doc").select("rid", "errors").collect()
@@ -97,7 +96,7 @@ def test_variant_agrees_with_columnar_on_typed_corpus(spark):
 def test_variant_malformed_json_quarantined(spark):
     """try_parse_json + null-variant guard: malformed docs become '$parse'
     violation rows; the job never dies on one bad document."""
-    plan = compile_variant({"required": ["a"]})
+    plan = ValidationEngine({"required": ["a"]}, mode="variant")
     df = spark.createDataFrame(
         [(1, '{"a": 1}'), (2, '{"a": '), (3, None)], "id: long, doc: string"
     )
@@ -157,7 +156,7 @@ def test_variant_kernel_agreement_on_random_composite_enums(spark):
         ]
         rows = [(i, json.dumps(c)) for i, c in enumerate(cands)]
         df = spark.createDataFrame(rows, "i: long, doc: string")
-        plan = compile_variant(schema)
+        plan = ValidationEngine(schema, mode="variant")
         got = {
             r["i"]: r["verdict"]
             for r in plan.apply(df, "doc").select("i", "verdict").collect()
@@ -190,8 +189,8 @@ def test_deep_enum_auto_routes_to_kernel(spark):
     df = spark.createDataFrame(
         [(i, json.dumps(c)) for i, c in enumerate(cands)], "i: long, doc: string"
     )
-    got = {r["i"]: r["verdict"]
-           for r in plan.apply(df, "doc").select("i", "verdict").collect()}
+    got = {r["i"]: len(r["errors"]) == 0
+           for r in plan.with_errors(df, "doc").select("i", "errors").collect()}
     kernel = {r["i"]: r["verdict"]
               for r in ValidationEngine(schema, mode="dynamic").apply(df, doc_col="doc")
               .select("i", "verdict").collect()}
@@ -225,7 +224,7 @@ def test_deep_enum_route_generates_kernel_once(spark, monkeypatch):
     routed = compile_variant({"enum": [target]})
     df = spark.createDataFrame([(0, json.dumps(target)), (1, "2")], "i: long, doc: string")
     for _ in range(2):
-        got = {r["i"]: r["verdict"] for r in routed.apply(df, "doc").collect()}
+        got = {r["i"]: len(r["errors"]) == 0 for r in routed.with_errors(df, "doc").collect()}
         assert got == {0: True, 1: False}
     vdf = df.select("i", F.parse_json("doc").alias("v"))
     assert vdf.select(F.size(routed.errors_for_variant(F.col("v")))).count() == 2
