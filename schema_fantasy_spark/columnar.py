@@ -26,9 +26,12 @@ Design rules (SURVEY.md §1.4, §2):
 Engine extensions over the reference model (documented):
 * ``minimum``/``maximum`` accept timestamp/date columns (bounds coerced);
 * ``type`` may name the non-JSON types 'timestamp'/'date'/'binary';
-* string lengths are code points (Spark ``length``), NFC normalization is
-  not applied in the columnar path (route to the dynamic mode if a fixture
-  requires it — reference src/ulength.js:9-17).
+* string lengths are code points, NFC normalization is not applied in the
+  columnar path (``nfc_lengths=True`` or the dynamic mode apply it —
+  reference src/ulength.js:9-17). A length check is decided by the byte
+  length ``b`` (``octet_length``, a stored count) where it can be: a code
+  point is 1 to 4 bytes, so only a string with ``b`` between ``k`` and
+  ``4k`` counts its code points (Spark ``length``, a walk of every byte).
 """
 
 from __future__ import annotations
@@ -517,7 +520,8 @@ def _ck_size(c: ir.Size, tr: _Translator):
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if c.guard == "string" and isinstance(dtype, T.StringType):
-            n = nfc_length_udf()(value) if use_nfc else F.length(value)
+            # None: _length_violates decides from the byte length first
+            n = nfc_length_udf()(value) if use_nfc else None
         elif c.guard == "array" and isinstance(dtype, T.ArrayType):
             n = F.size(value)
         elif c.guard == "object" and isinstance(dtype, T.MapType):
@@ -528,11 +532,30 @@ def _ck_size(c: ir.Size, tr: _Translator):
                     start=F.lit(0))
         else:
             return _empty_errors()
-        ok = n >= c.limit if c.is_min else n <= c.limit
+        if n is None:
+            violated = _length_violates(value, c.limit, c.is_min)
+        else:
+            violated = ~(n >= c.limit if c.is_min else n <= c.limit)
         err = _err_struct(path, c.keyword, F.lit(c.message))
-        return _leaf(value.isNotNull() & ~ok, err)
+        return _leaf(value.isNotNull() & violated, err)
 
     return emit
+
+
+def _length_violates(value: Column, k: int, is_min: bool) -> Column:
+    """``length(value) < k`` (min) or ``> k`` (max), decided by the byte
+    length where it can be. Spark's ``length`` walks every byte, while
+    ``octet_length`` reads a stored count. Spark reads each code point as
+    1 to 4 bytes (an invalid byte as a 1-byte one), so ``ceil(b/4) <=
+    length <= b``, and only a string with ``k <= b < 4k`` (min) or ``k < b
+    <= 4k`` (max) walks its bytes: And/Or short-circuit in codegen."""
+    b = F.octet_length(value)
+    # octet_length stays below 2^31, so the cap changes no verdict; it
+    # keeps the literal inside long range for any limit a long holds
+    wide = min(4 * k, 2**31)
+    if is_min:
+        return (b < k) | ((b < wide) & (F.length(value) < k))
+    return (b > wide) | ((b > k) & (F.length(value) > k))
 
 
 def _ck_pattern(c: ir.Pattern, tr: _Translator):

@@ -644,6 +644,73 @@ def test_nfc_length_udf_is_declared_by_type_hints():
         nfc_length_udf()
 
 
+#: code points of each UTF-8 byte width (surrogates excluded)
+_WIDTH_RANGES = {1: (0x20, 0x7E), 2: (0x80, 0x7FF), 3: (0x800, 0xD7FF), 4: (0x10000, 0x10FFFF)}
+
+
+def _width_string(rng, n, widths=(1, 2, 3, 4)):
+    return "".join(chr(rng.randint(*_WIDTH_RANGES[rng.choice(widths)])) for _ in range(n))
+
+
+def _invalid_utf8(rng):
+    """Bytes that do not decode: stray continuation bytes, bytes no UTF-8
+    sequence uses, and lead bytes cut short, mixed with valid code points."""
+    parts = [bytes([0xFF])]
+    for _ in range(rng.randint(0, 8)):
+        pick = rng.random()
+        if pick < 0.4:
+            parts.append(_width_string(rng, 1).encode("utf-8"))
+        elif pick < 0.6:
+            parts.append(bytes([rng.randint(0x80, 0xBF)]))
+        elif pick < 0.8:
+            parts.append(bytes([rng.choice([0xC0, 0xC1, *range(0xF5, 0x100)])]))
+        else:
+            parts.append(_width_string(rng, 1, (2, 3, 4)).encode("utf-8")[:-1])
+    rng.shuffle(parts)
+    return b"".join(parts)
+
+
+def test_string_length_checks_match_code_point_count(spark):
+    """min/maxLength decided from the byte length (with a code-point count
+    only inside the 1-to-4-bytes-per-code-point window) give the errors of
+    a plain code-point comparison: strings of 1- to 4-byte code points and
+    invalid UTF-8, limits at the window edges, and one limit whose 4k is
+    out of int range. On valid UTF-8 they are also the kernel's."""
+    rng = random.Random(11)
+    texts = [unicodedata.normalize("NFC", _width_string(rng, rng.randint(0, 15)))
+             for _ in range(300)]
+    texts += [_width_string(rng, n, (4,)) for n in (511, 512, 513)]
+    texts += ["a" + _width_string(rng, 511, (4,)), _width_string(rng, 512, (4,)) + "a"]
+    raw = [t.encode("utf-8") for t in texts]
+    raw += [_invalid_utf8(rng) for _ in range(150)]
+    limits = [*range(14), 512, 2**29 + 1]
+    schema = {"properties": {f"c{k}": {"minLength": k, "maxLength": k} for k in limits}}
+    base = spark.createDataFrame(list(enumerate(b.hex() for b in raw)), "rid: long, hex: string")
+    s = F.unhex("hex").cast("string")
+    df = base.select("rid", F.length(s).alias("n"), *[s.alias(f"c{k}") for k in limits])
+    kernel = compile_schema(schema)
+    out = ValidationEngine(schema).apply(df).select("rid", "n", "errors").collect()
+    assert len(out) == len(raw)
+    n_valid = n_walked = 0
+    for r in out:
+        n = r["n"]
+        got = sorted((e["path"][0], e["keyword"]) for e in r["errors"])
+        want = sorted([(f"c{k}", "minLength") for k in limits if n < k]
+                      + [(f"c{k}", "maxLength") for k in limits if n > k])
+        assert got == want, (raw[r["rid"]], n)
+        try:
+            text = raw[r["rid"]].decode("utf-8")
+        except UnicodeDecodeError:
+            continue
+        n_valid += 1
+        n_walked += any(k <= len(raw[r["rid"]]) < 4 * k for k in limits)
+        kernel_errors = errs_to_rows(kernel.validate({f"c{k}": text for k in limits}))
+        assert (sorted(_error_key(e) for e in r["errors"])
+                == sorted(_error_key(e) for e in kernel_errors)), text
+    # the window is exercised and the invalid rows really are invalid
+    assert n_valid == len(texts) and n_walked > 200
+
+
 def test_composite_enum_randomized_cross_check(spark):
     """Randomized (enum, value) combinations per column type: the columnar
     typed-literal equality must agree with the dynamic kernel row by row

@@ -50,6 +50,11 @@ def test_referential_check_broadcasts_parent(spark, sf_dir="/root/testdata/sf0.0
 def test_columnar_validation_no_python_and_pruned_scan(spark, pages_parquet):
     df = spark.read.parquet(pages_parquet)
     validated = ValidationEngine(PAGES_SCHEMA).apply(df).select("url", "verdict")
+    # minLength on text and maxLength on url read the stored byte count
+    # before any code-point count (columnar._length_violates)
+    optimized = plan_of(validated, "extended").split("== Optimized Logical Plan ==")[1]
+    optimized = optimized.split("== Physical Plan ==")[0]
+    assert "octet_length(text" in optimized and "octet_length(url" in optimized
     plan = plan_of(validated)
     assert "EvalPython" not in plan
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
