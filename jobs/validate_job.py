@@ -1,5 +1,6 @@
 """spark-submit entry point: validate a pages table, resumably.
 
+    ./tools/make_pyfiles.sh   # builds dist/schema_fantasy_spark.zip
     /opt/spark/bin/spark-submit --master local[8] \
         --py-files dist/schema_fantasy_spark.zip \
         jobs/validate_job.py \

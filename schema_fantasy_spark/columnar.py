@@ -26,26 +26,30 @@ Design rules (SURVEY.md §1.4, §2):
 Engine extensions over the reference model (documented):
 * ``minimum``/``maximum`` accept timestamp/date columns (bounds coerced);
 * ``type`` may name the non-JSON types 'timestamp'/'date'/'binary';
-* string lengths are code points, NFC normalization is not applied in the
-  columnar path (``nfc_lengths=True`` or the dynamic mode apply it —
-  reference src/ulength.js:9-17). A length check is decided by the byte
-  length ``b`` (``octet_length``, a stored count) where it can be: a code
-  point is 1 to 4 bytes, so only a string with ``b`` between ``k`` and
-  ``4k`` counts its code points (Spark ``length``, a walk of every byte).
+* string lengths are raw code points: the columnar path does not NFC
+  normalize (reference src/ulength.js:9-17); the dynamic mode does, and
+  is the exact path for corpora with decomposed sequences. A length check
+  is decided by the byte length ``b`` (``octet_length``, a stored count)
+  where it can be: a code point is 1 to 4 bytes, so only a string with
+  ``b`` between ``k`` and ``4k`` counts its code points (Spark ``length``,
+  a walk of every byte).
+
+The checks keep no keyword semantics of their own: each translates its
+IR record, and the errors a JSON ``null`` yields (an array element or map
+value, see :func:`_emit_json`) come from the kernel generated for the
+node (``compiler/plan.py`` ``null_errors``).
 """
 
 from __future__ import annotations
 
 import math
-import unicodedata
 from typing import Any, Callable, Dict, List, Optional, Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
 from schema_fantasy_spark.compiler import ir
 from schema_fantasy_spark.compiler.ir import SchemaCompileError
+from schema_fantasy_spark.compiler.plan import null_errors
 from schema_fantasy_spark.errors import ERRORS_SCHEMA
 
 ERRORS_DDL = ERRORS_SCHEMA.simpleString()
@@ -118,33 +122,17 @@ def _compound(
     )
 
 
-def _with_null_rows(emit: Callable, rows: Sequence[tuple]) -> Callable:
-    """An emitter ``emit(value, dtype, path)`` -> errors array, of a check
-    or of a whole node, with its ``null_rows``.
-
-    ``emit`` reads a NULL value as an ABSENT property (a NULL struct field
-    or column), which every keyword passes. ``null_rows`` are the error
-    rows a JSON ``null`` yields instead — the reading of a NULL array
-    element or map value, see :func:`_emit_json`. They are static:
-    ``(keyword, message, expected, actual, depth)`` tuples, all at the
-    value's own path, because null has no children."""
-    emit.null_rows = tuple(rows)
-    return emit
-
-
-def _bump_rows(rows: Sequence[tuple]) -> List[tuple]:
-    return [(kw, msg, exp, act, depth + 1) for kw, msg, exp, act, depth in rows]
-
-
-def _emit_json(sub: Callable, value: Column, dtype: T.DataType, path: Column) -> Column:
-    """``sub`` over an array element or map value. There a NULL is a
-    JSON null that is present, not an absent property, so it yields
-    ``sub.null_rows`` (only ``type``, ``enum`` and the combinators over
-    them react to a null; every other keyword's type guard passes it)."""
+def _emit_json(sub: Callable, node: ir.Node, value: Column, dtype: T.DataType,
+               path: Column) -> Column:
+    """``sub``, the emitter of IR ``node``, over an array element or map
+    value. ``sub`` reads a NULL as an absent property, which every
+    keyword passes; here a NULL is a JSON null that is present, so it
+    yields the errors the kernel gives a null under ``node``, all at the
+    value's own path."""
     nulls = [
-        _err_struct(path, kw, F.lit(msg), F.lit(exp).cast("string"),
-                    F.lit(act).cast("string"), depth)
-        for kw, msg, exp, act, depth in sub.null_rows
+        _err_struct(path, err.keyword, F.lit(err.message), F.lit(err.expected).cast("string"),
+                    F.lit(err.actual).cast("string"), depth)
+        for top in null_errors(node) for err, depth in top.flatten()
     ]
     return F.when(
         value.isNull(), F.array(*nulls) if nulls else _empty_errors()
@@ -187,30 +175,23 @@ def compile_columnar(
     schema: Any,
     refs: Optional[Dict[str, Any]] = None,
     base: str = "",
-    nfc_lengths: bool = False,
 ) -> "ColumnarPlan":
     """Compile ``schema`` into a ColumnarPlan applicable to any DataFrame
     whose schema the plan's keywords can bind to. $refs resolved at compile
     time (cycle -> raise, reference src/context.js:24-26 semantics).
-
-    ``nfc_lengths=True`` routes min/maxLength through a vectorized
-    NFC-normalizing pandas UDF for exact reference parity on corpora with
-    decomposed combining sequences (default: raw code points, pure JVM).
 
     Note: unlike the dynamic mode, the columnar compiler rejects
     *recursive* schemas (a $ref cycle through properties/items) — a flat
     expression DAG cannot express unbounded recursion. Those route to the
     dynamic mode.
     """
-    root = _Translator(nfc_lengths).node(ir.lower(schema, refs, base))
-    return ColumnarPlan(root, schema)
+    return ColumnarPlan(_Translator().node(ir.lower(schema, refs, base)))
 
 
 class _Translator:
     """IR nodes -> emitters, each check by its ``_EMITTERS`` entry."""
 
-    def __init__(self, nfc_lengths: bool):
-        self.nfc_lengths = nfc_lengths
+    def __init__(self):
         self.in_progress: set = set()
 
     def node(self, node: ir.Node) -> Callable:
@@ -226,15 +207,14 @@ class _Translator:
         def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
             return _concat_errors([em(value, dtype, path) for em in emitters])
 
-        return _with_null_rows(emit, [r for e in emitters for r in getattr(e, "null_rows", ())])
+        return emit
 
 
 class ColumnarPlan:
     """A compiled constraint plan bound lazily to a DataFrame."""
 
-    def __init__(self, root: Callable, schema: Any):
+    def __init__(self, root: Callable):
         self._root = root
-        self.schema = schema
         #: input struct type (JSON: field order, types, nullability) ->
         #: its errors Column
         self._bound: Dict[str, Column] = {}
@@ -290,8 +270,7 @@ def _ck_type(c: ir.Type, tr: _Translator):
         err = _err_struct(path, c.keyword, F.lit(c.message), F.lit(c.expected), F.lit(actual))
         return _leaf(value.isNotNull(), err)
 
-    nulls = [] if "null" in tset else [(c.keyword, c.message, c.expected, "null", 0)]
-    return _with_null_rows(emit, nulls)
+    return emit
 
 
 #: closed integral ranges per Spark type, for ANSI-safe literal coercion
@@ -456,8 +435,7 @@ def _ck_enum(c: ir.Enum, tr: _Translator):
                           value.cast("string"))
         return _leaf(value.isNotNull() & ~ok, err)
 
-    nulls = [] if None in c.values else [(c.keyword, c.message, c.expected, "null", 0)]
-    return _with_null_rows(emit, nulls)
+    return emit
 
 
 def _ck_bound(c: ir.Bound, tr: _Translator):
@@ -494,34 +472,25 @@ def _ck_multiple_of(c: ir.MultipleOf, tr: _Translator):
     return emit
 
 
-def nfc_length_udf():
-    """Vectorized NFC-normalized code-point length (reference
-    src/v4/minLength.js:18-22 + src/ulength.js). The ONLY optional Python
-    slice in the columnar path — enable via ``nfc_lengths=True`` when a
-    corpus can contain decomposed combining sequences; plain ``F.length``
-    (raw code points) is the default and identical for NFC-normalized or
-    ASCII text."""
-    # the hints are strings (`from __future__ import annotations`);
-    # pyspark resolves them against this module's globals, hence the
-    # module-level pandas import
-    @pandas_udf(T.IntegerType())
-    def _nfc_len(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda x: len(unicodedata.normalize("NFC", x)) if x is not None else None
-        )
+#: No Spark string (in bytes), array or map reaches 2^31 elements, so a
+#: size limit above it decides as 2^31 does; the cap keeps every size
+#: literal a long (a limit of 2^63 or more is no Spark literal at all).
+_SIZE_CAP = 2**31
 
-    return _nfc_len
+
+def _size_limit(c: ir.Size) -> int:
+    """``c.limit`` as a Spark literal, capped at :data:`_SIZE_CAP`."""
+    return min(c.limit, _SIZE_CAP)
 
 
 def _ck_size(c: ir.Size, tr: _Translator):
     """min/maxLength over strings, min/maxItems over arrays and
     min/maxProperties over structs (non-null fields) and maps."""
-    use_nfc = tr.nfc_lengths
+    k = _size_limit(c)
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if c.guard == "string" and isinstance(dtype, T.StringType):
-            # None: _length_violates decides from the byte length first
-            n = nfc_length_udf()(value) if use_nfc else None
+            n = None  # _length_violates decides from the byte length first
         elif c.guard == "array" and isinstance(dtype, T.ArrayType):
             n = F.size(value)
         elif c.guard == "object" and isinstance(dtype, T.MapType):
@@ -533,9 +502,9 @@ def _ck_size(c: ir.Size, tr: _Translator):
         else:
             return _empty_errors()
         if n is None:
-            violated = _length_violates(value, c.limit, c.is_min)
+            violated = _length_violates(value, k, c.is_min)
         else:
-            violated = ~(n >= c.limit if c.is_min else n <= c.limit)
+            violated = ~(n >= k if c.is_min else n <= k)
         err = _err_struct(path, c.keyword, F.lit(c.message))
         return _leaf(value.isNotNull() & violated, err)
 
@@ -550,9 +519,7 @@ def _length_violates(value: Column, k: int, is_min: bool) -> Column:
     length <= b``, and only a string with ``k <= b < 4k`` (min) or ``k < b
     <= 4k`` (max) walks its bytes: And/Or short-circuit in codegen."""
     b = F.octet_length(value)
-    # octet_length stays below 2^31, so the cap changes no verdict; it
-    # keeps the literal inside long range for any limit a long holds
-    wide = min(4 * k, 2**31)
+    wide = min(4 * k, _SIZE_CAP)  # octet_length stays below it
     if is_min:
         return (b < k) | ((b < wide) & (F.length(value) < k))
     return (b > wide) | ((b > k) & (F.length(value) > k))
@@ -639,7 +606,7 @@ def _at_key(path: Column, key) -> Column:
 
 
 def _ck_properties(c: ir.Properties, tr: _Translator):
-    subs = [(key, tr.node(sub)) for key, sub in c.entries]
+    subs = [(key, node, tr.node(node)) for key, node in c.entries]
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if isinstance(dtype, T.StructType):
@@ -647,20 +614,20 @@ def _ck_properties(c: ir.Properties, tr: _Translator):
             # an absent property vacuously passes
             return _concat_errors([
                 _field_errors(value, key, sub(value[key], fields[key], _at_key(path, key)))
-                for key, sub in subs if key in fields])
+                for key, _, sub in subs if key in fields])
         if isinstance(dtype, T.MapType):
             return _concat_errors([
                 F.when(value.isNull() | ~F.map_contains_key(value, key), _empty_errors())
-                .otherwise(_emit_json(sub, value.getItem(key), dtype.valueType,
+                .otherwise(_emit_json(sub, node, value.getItem(key), dtype.valueType,
                                       _at_key(path, key)))
-                for key, sub in subs])
+                for key, node, sub in subs])
         return _empty_errors()
 
     return emit
 
 
 def _ck_pattern_properties(c: ir.PatternProperties, tr: _Translator):
-    subs = [(regex, tr.node(sub)) for regex, sub in c.entries]
+    subs = [(regex, node, tr.node(node)) for regex, node in c.entries]
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if isinstance(dtype, T.StructType):
@@ -668,14 +635,14 @@ def _ck_pattern_properties(c: ir.PatternProperties, tr: _Translator):
             return _concat_errors([
                 _field_errors(value, f.name, sub(value[f.name], f.dataType,
                                                       _at_key(path, f.name)))
-                for regex, sub in subs for f in dtype.fields if regex.python.search(f.name)])
+                for regex, _, sub in subs for f in dtype.fields if regex.python.search(f.name)])
         if isinstance(dtype, T.MapType):
             return _concat_errors([
                 F.when(value.isNull(), _empty_errors()).otherwise(F.flatten(F.transform(
                     F.map_entries(F.map_filter(value, lambda k, _v: k.rlike(regex.java))),
-                    lambda e: _emit_json(sub, e["value"], dtype.valueType,
+                    lambda e: _emit_json(sub, node, e["value"], dtype.valueType,
                                          _at_key(path, e["key"])))))
-                for regex, sub in subs])
+                for regex, node, sub in subs])
         return _empty_errors()
 
     return emit
@@ -744,7 +711,8 @@ def _ck_additional_properties(c: ir.AdditionalProperties, tr: _Translator):
             # schema form over map values
             return F.when(value.isNull(), _empty_errors()).otherwise(_invalid_keys(
                 c, addkeys,
-                lambda k: _emit_json(sub, value[k], dtype.valueType, _at_key(path, k)), path))
+                lambda k: _emit_json(sub, c.additional, value[k], dtype.valueType,
+                                     _at_key(path, k)), path))
         return _empty_errors()
 
     return emit
@@ -757,7 +725,7 @@ def _ck_items(c: ir.Items, tr: _Translator):
         if not isinstance(dtype, T.ArrayType):
             return _empty_errors()
         per_element = F.transform(value, lambda x, i: _emit_json(
-            sub, x, dtype.elementType, _at_key(path, i.cast("string"))))
+            sub, c.node, x, dtype.elementType, _at_key(path, i.cast("string"))))
         return F.when(value.isNull(), _empty_errors()).otherwise(F.flatten(per_element))
 
     return emit
@@ -765,7 +733,7 @@ def _ck_items(c: ir.Items, tr: _Translator):
 
 def _ck_tuple_items(c: ir.TupleItems, tr: _Translator):
     subs = [tr.node(sub) for sub in c.nodes]
-    add_node = tr.node(c.additional) if isinstance(c.additional, ir.Node) else None
+    add_sub = tr.node(c.additional) if isinstance(c.additional, ir.Node) else None
 
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         if not isinstance(dtype, T.ArrayType):
@@ -773,17 +741,18 @@ def _ck_tuple_items(c: ir.TupleItems, tr: _Translator):
         et, k = dtype.elementType, len(subs)
         parts = [
             F.when(value.isNull() | (F.size(value) <= i), _empty_errors()).otherwise(
-                _emit_json(sub, F.element_at(value, i + 1), et, _at_key(path, str(i))))
-            for i, sub in enumerate(subs)]
+                _emit_json(sub, node, F.element_at(value, i + 1), et, _at_key(path, str(i))))
+            for i, (node, sub) in enumerate(zip(c.nodes, subs))]
         if c.additional is False:
             rest = F.transform(
                 F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
                 lambda _x, i: _err_struct(_at_key(path, (i + k).cast("string")),
                                           c.keyword, F.lit(c.message)))
-        elif add_node is not None:
+        elif add_sub is not None:
             rest = F.flatten(F.transform(
                 F.slice(value, k + 1, F.greatest(F.size(value) - k, F.lit(0))),
-                lambda x, i: _emit_json(add_node, x, et, _at_key(path, (i + k).cast("string")))))
+                lambda x, i: _emit_json(add_sub, c.additional, x, et,
+                                        _at_key(path, (i + k).cast("string")))))
         else:
             return _concat_errors(parts)
         extra = F.when(value.isNotNull() & (F.size(value) > k), rest).otherwise(_empty_errors())
@@ -867,9 +836,7 @@ def _ck_all_of(c: ir.AllOf, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         return _all_of_errors(c, [s(value, dtype, path) for s in subs], path)
 
-    children = [r for s in subs for r in s.null_rows]
-    nulls = [(c.keyword, c.message, None, None, 0)] if children else []
-    return _with_null_rows(emit, nulls + _bump_rows(children))
+    return emit
 
 
 def _ck_any_of(c: ir.AnyOf, tr: _Translator):
@@ -880,11 +847,7 @@ def _ck_any_of(c: ir.AnyOf, tr: _Translator):
             return _empty_errors()
         return _any_of_errors(c, [s(value, dtype, path) for s in subs], path)
 
-    nulls = []
-    if subs and all(s.null_rows for s in subs):
-        nulls = [(c.keyword, c.message, None, None, 0)]
-        nulls += _bump_rows([r for s in subs for r in s.null_rows])
-    return _with_null_rows(emit, nulls)
+    return emit
 
 
 def _ck_one_of(c: ir.OneOf, tr: _Translator):
@@ -893,14 +856,7 @@ def _ck_one_of(c: ir.OneOf, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         return _one_of_errors(c, [s(value, dtype, path) for s in subs], path)
 
-    n_ok = sum(not s.null_rows for s in subs)
-    nulls = []
-    if n_ok == 0:
-        nulls = [(c.keyword, c.message, None, None, 0)]
-        nulls += _bump_rows([r for s in subs for r in s.null_rows])
-    if n_ok > 1:
-        nulls.append((c.keyword, c.too_many, None, None, 0))
-    return _with_null_rows(emit, nulls)
+    return emit
 
 
 def _ck_not(c: ir.Not, tr: _Translator):
@@ -909,8 +865,7 @@ def _ck_not(c: ir.Not, tr: _Translator):
     def emit(value: Column, dtype: T.DataType, path: Column) -> Column:
         return _not_errors(c, sub(value, dtype, path), path)
 
-    nulls = [] if sub.null_rows else [(c.keyword, c.message, None, None, 0)]
-    return _with_null_rows(emit, nulls)
+    return emit
 
 
 #: IR check kind -> the function making its emitter

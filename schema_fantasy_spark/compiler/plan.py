@@ -213,6 +213,13 @@ def generate_source(schema: Any, refs: Optional[Dict[str, Any]] = None,
     return _Generator().run(ir.lower(schema, refs, base))
 
 
+def null_errors(node: ir.Node) -> List[Err]:
+    """The errors a JSON ``null`` yields under IR ``node``, from the
+    kernel generated for that node. A null has no children, so every
+    error sits at the null's own path."""
+    return load_kernel(_Generator().run(node))(None, 0) or []
+
+
 # ------------------------------------------------------------- the generator
 
 def _lit(x: Any) -> str:

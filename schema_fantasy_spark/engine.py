@@ -52,7 +52,6 @@ class ValidationEngine:
         schema: Any,
         refs: Optional[Dict[str, Any]] = None,
         mode: str = "columnar",
-        nfc_lengths: bool = False,
     ):
         """modes: 'columnar' (typed tables, the scale path), 'dynamic'
         (JSON strings via Arrow-batched compiled kernel — the measured
@@ -61,11 +60,11 @@ class ValidationEngine:
         wins). Dynamic mode generates its kernel and builds its UDF here,
         once; every ``apply`` reuses them.
 
-        ``nfc_lengths=True`` (columnar mode) counts min/maxLength in NFC
-        like the reference (src/v4/minLength.js:19-20) via one vectorized
-        Arrow UDF slice — the exact-parity option for corpora with
-        decomposed combining sequences; default stays pure-JVM raw code
-        points (documented divergence). Dynamic mode is always NFC-exact."""
+        Columnar mode runs no Python: it counts min/maxLength in raw code
+        points (documented divergence). Dynamic mode counts them after NFC
+        normalization like the reference (src/v4/minLength.js:19-20) and
+        is the exact path for corpora with decomposed combining
+        sequences."""
         if mode not in ("columnar", "dynamic", "variant"):
             raise ValueError(f"unknown mode {mode!r}")
         self.schema = schema
@@ -76,9 +75,7 @@ class ValidationEngine:
             self._plan = compile_schema(schema, refs=self.refs)
             self._udf = kernel_udf(self._plan)
         elif mode == "columnar":
-            self._plan = compile_columnar(
-                schema, refs=self.refs, nfc_lengths=nfc_lengths
-            )
+            self._plan = compile_columnar(schema, refs=self.refs)
         elif mode == "variant":
             from schema_fantasy_spark.variant import compile_variant
 

@@ -1,8 +1,10 @@
 """Structured validation errors + reference-parity rendering.
 
-Mirrors the reference's 4-way ``Err`` sum type and its ``toString``
-(reference src/err.js:15-63): Single / Compound / Values / Type, rendered
+Mirrors the reference's ``Err`` sum type and its ``toString``
+(reference src/err.js:15-63): Single / Compound / Values, rendered
 with the value-path joined by '/' and empty components compacted away.
+The reference's fourth case, Type, renders as a Values error; the
+kernel emits type errors as Values directly.
 
 The Spark-side contract (SURVEY.md §1.4) flattens this to an
 ``array<struct>`` column::
@@ -45,7 +47,6 @@ ERRORS_SCHEMA = T.ArrayType(ERROR_STRUCT, containsNull=False)
 SINGLE = "single"
 COMPOUND = "compound"
 VALUES = "values"
-TYPE = "type"
 
 
 @dataclass
@@ -100,7 +101,6 @@ def render_error(err: Err) -> str:
     Single   -> "<vpath>: <msg>"
     Compound -> "<vpath>: <msg>: N error(s) found\\n<child>\\n<child>..."
     Values   -> "<vpath>: <msg>: expected <exp>, was <act>"
-    Type     -> Values("unexpected type", ...)
     with empty components compacted out of the ':'-join.
     """
     pathstr = "/".join(str(p) for p in err.vpath)
@@ -115,10 +115,6 @@ def render_error(err: Err) -> str:
     if err.kind == VALUES:
         return _compact_join(
             [pathstr, err.message, f"expected {err.expected}, was {err.actual}"], ": "
-        )
-    if err.kind == TYPE:
-        return render_error(
-            Err(VALUES, err.keyword, "unexpected type", err.vpath, err.expected, err.actual)
         )
     raise ValueError(f"unknown err kind: {err.kind}")
 

@@ -67,6 +67,7 @@ from schema_fantasy_spark.columnar import (
     _one_of_errors,
     _required_in_map,
     _say,
+    _size_limit,
 )
 from schema_fantasy_spark.dynamic import kernel_udf, with_errors
 
@@ -501,7 +502,8 @@ def _vk_size(c: ir.Size, rec):
         else:
             mm = _m(v, m)
             n, guard = F.size(F.map_keys(mm)), mm.isNotNull()
-        ok = n >= c.limit if c.is_min else n <= c.limit
+        k = _size_limit(c)
+        ok = n >= k if c.is_min else n <= k
         err = _err_struct(p, c.keyword, F.lit(c.message))
         return _leaf(guard & ~ok, err)
 

@@ -5,12 +5,11 @@ kernel (the two modes must agree on (path, keyword) multisets)."""
 import json
 import random
 import unicodedata
-import warnings
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
-from schema_fantasy_spark.columnar import compile_columnar, nfc_length_udf
+from schema_fantasy_spark.columnar import compile_columnar
 from schema_fantasy_spark.compiler.plan import SchemaCompileError, compile_schema
 from schema_fantasy_spark.engine import ValidationEngine
 from schema_fantasy_spark.errors import errs_to_rows
@@ -121,12 +120,9 @@ def _row_to_json_value(row: dict):
 # projection of JSON documents).
 #
 # Two documented divergences shape the comparison:
-# * min/maxLength: the default columnar plan counts raw code points, the
-#   kernel NFC code points (test_nfc_lengths_option). The two length
-#   cases run with nfc_lengths=True over strings that include a
-#   decomposed sequence; every other case NFC-normalizes its strings,
-#   because nfc_lengths cannot run inside array items (a Python UDF may
-#   not appear in a higher-order function).
+# * min/maxLength: columnar counts raw code points, the kernel NFC code
+#   points (test_columnar_counts_raw_code_points), so every case
+#   NFC-normalizes its strings.
 # * enum's ``actual`` renders the value with Spark's string cast, the
 #   kernel as compact JSON ('[1, 2]' vs '[1,2]', '1.0E20' vs '1e+20'),
 #   so enum rows compare without ``actual``.
@@ -386,7 +382,6 @@ _DIFF_CASES = {
     "$ref-chain": _ref_case,
     "nested": _nested_case,
 }
-_NFC_CASES = {"minLength", "maxLength"}
 
 
 def _diff_case(name: str, seed: int, n_rows: int = 48):
@@ -394,9 +389,7 @@ def _diff_case(name: str, seed: int, n_rows: int = 48):
     fields, schema = _DIFF_CASES[name](rng, name)
     st = T.StructType([T.StructField("rid", _LONG)]
                       + [T.StructField(n, dt) for n, dt in fields])
-    rows = [(rid, *[_value(rng, dt) for _, dt in fields]) for rid in range(n_rows)]
-    if name not in _NFC_CASES:
-        rows = [_nfc(list(r)) for r in rows]
+    rows = [_nfc([rid, *[_value(rng, dt) for _, dt in fields]]) for rid in range(n_rows)]
     return st, schema, rows
 
 
@@ -424,7 +417,7 @@ def test_columnar_matches_python_kernel(spark, name, seed):
         with pytest.raises(SchemaCompileError):
             compile_columnar(schema)
         return
-    plan = ValidationEngine(schema, nfc_lengths=name in _NFC_CASES)
+    plan = ValidationEngine(schema)
     df = spark.createDataFrame(rows, st)
     mismatches = []
     # the kernel reads each row as Spark returns it: map entries keep
@@ -624,24 +617,35 @@ def test_whole_stage_codegen_in_plan(spark):
     assert "codegen id" in explained  # whole-stage codegen covers the project
 
 
-def test_nfc_lengths_option(spark):
-    # decomposed "A" + COMBINING RING: 2 raw code points, 1 after NFC
-    decomposed = "Å"
-    df = spark.createDataFrame([(decomposed,)], "s: string")
-    default_plan = ValidationEngine({"properties": {"s": {"maxLength": 1}}})
-    assert default_plan.apply(df).collect()[0]["verdict"] is False  # raw: 2 > 1
-    nfc_plan = ValidationEngine(
-        {"properties": {"s": {"maxLength": 1}}}, nfc_lengths=True
-    )
-    assert nfc_plan.apply(df).collect()[0]["verdict"] is True  # NFC: 1 <= 1
+def test_columnar_counts_raw_code_points(spark):
+    """Columnar min/maxLength count raw code points, without NFC (a
+    documented divergence; dynamic mode normalizes): a decomposed "Å",
+    "A" + COMBINING RING, is 2 code points, so it fails maxLength 1."""
+    df = spark.createDataFrame([("A\u030a",)], "s: string")
+    plan = ValidationEngine({"properties": {"s": {"maxLength": 1}}})
+    assert plan.apply(df).collect()[0]["verdict"] is False  # raw: 2 > 1
 
 
-def test_nfc_length_udf_is_declared_by_type_hints():
-    """The NFC length UDF builds without the deprecation warning that a
-    function-type (untyped) pandas UDF declaration raises."""
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        nfc_length_udf()
+_SIZE_KEYWORDS = ["minLength", "maxLength", "minItems", "maxItems",
+                  "minProperties", "maxProperties"]
+
+
+@pytest.mark.parametrize("limit", [2**63, 2**64], ids=["2^63", "2^64"])
+@pytest.mark.parametrize("kw", _SIZE_KEYWORDS)
+def test_size_limit_beyond_long_range(spark, kw, limit):
+    """A size limit no Spark long holds validates like any other: the
+    keyword on a string, an array, a map and the row struct gives the
+    kernel's error rows on every row."""
+    schema = {kw: limit, "properties": {c: {kw: limit} for c in ("s", "a", "m")}}
+    st = T.StructType([T.StructField("rid", _LONG), T.StructField("s", _STR),
+                       T.StructField("a", _ARR(_LONG)), T.StructField("m", _MAP(_LONG))])
+    rows = [(0, "", [], {}), (1, "abc", [1, 2], {"k": 1}), (2, None, None, None)]
+    kernel = compile_schema(schema)
+    out = ValidationEngine(schema).apply(spark.createDataFrame(rows, st)).collect()
+    for r in out:
+        value = _row_to_json_value({n: r[n] for n in st.names})
+        want = sorted(_error_key(e) for e in errs_to_rows(kernel.validate(value)))
+        assert sorted(_error_key(e) for e in r["errors"]) == want, value
 
 
 #: code points of each UTF-8 byte width (surrogates excluded)

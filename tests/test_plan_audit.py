@@ -173,31 +173,3 @@ def test_column_stats_single_scan(spark, sf_dir="/root/testdata/sf0.001"):
     pct = tc.percentiles(li, ["l_extendedprice", "l_quantity"])
     profile = stats.join(F.broadcast(pct), "col_name", "left")
     assert len(re.findall(r"\(\d+\) Scan parquet", plan_of(profile))) == 2
-
-
-def test_nfc_lengths_exactly_one_arrow_slice(spark):
-    """nfc_lengths=True buys reference-exact NFC length counting
-    (src/v4/minLength.js:19-20) at the cost of exactly ONE ArrowEvalPython
-    slice — never row-Python, never more than one Python stage even with
-    both minLength and maxLength in the schema. The default configuration
-    stays Python-free (raw code points, documented divergence)."""
-    from schema_fantasy_spark.engine import ValidationEngine
-
-    schema = {"properties": {"s": {"minLength": 2, "maxLength": 3}}}
-    df = spark.createDataFrame(
-        [("ÅBC",), ("x",)], "s: string"  # decomposed Å + BC: 4 raw, 3 NFC
-    )
-    eng = ValidationEngine(schema, nfc_lengths=True)
-    out = eng.apply(df)
-    got = {r["s"]: r["verdict"] for r in out.collect()}
-    assert got == {"ÅBC": True, "x": False}  # NFC: 3 <= 3; 1 < 2
-    plan = plan_of(out)
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
-    assert "BatchEvalPython" not in plan
-    # default engine: no Python at all, and the RAW count (4 > 3) flips
-    # the verdict — the two configurations genuinely diverge on this row
-    dflt = ValidationEngine(schema).apply(df)
-    assert "EvalPython" not in plan_of(dflt)
-    assert {r["s"]: r["verdict"] for r in dflt.collect()} == {
-        "ÅBC": False, "x": False
-    }

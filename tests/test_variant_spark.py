@@ -229,3 +229,18 @@ def test_deep_enum_route_generates_kernel_once(spark, monkeypatch):
     vdf = df.select("i", F.parse_json("doc").alias("v"))
     assert vdf.select(F.size(routed.errors_for_variant(F.col("v")))).count() == 2
     assert len(calls) == 1
+
+
+def test_variant_size_limit_beyond_long_range(spark):
+    """A size limit no Spark long holds (2^63, 2^64) gives the kernel's
+    verdict on a string, an array, a map and the document."""
+    docs = [{"s": "", "a": [], "m": {}}, {"s": "abc", "a": [1, 2], "m": {"k": 1}}, {}]
+    df = spark.createDataFrame([(json.dumps(d),) for d in docs], "doc: string")
+    for kw in ["minLength", "maxLength", "minItems", "maxItems",
+               "minProperties", "maxProperties"]:
+        for limit in (2**63, 2**64):
+            schema = {kw: limit, "properties": {c: {kw: limit} for c in ("s", "a", "m")}}
+            kernel = compile_schema(schema)
+            got = [r["verdict"] for r in
+                   ValidationEngine(schema, mode="variant").apply(df, "doc").collect()]
+            assert got == [kernel.is_valid(d) for d in docs], (kw, limit)
