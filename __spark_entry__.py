@@ -641,40 +641,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         snap_next = il.read_snapshot(spark, tp, snapshot_id=s4)
         return sn.snapshot_diff(snap_base, snap_next, ["doc_id"], ["lang", "n_chars"])
 
-    def salted_agg_orders(spark, sf):
-        # the skew path itself under the oracle gate: two-phase salted
-        # aggregation must equal a plain GROUP BY bit-for-bit (exact
-        # decimal sums; one final cast to double)
-        from schema_fantasy_spark import scale
-
-        o = tables.load(spark, sf, "orders")
-        out = scale.salted_agg(
-            o,
-            ["o_orderpriority"],
-            F.col("o_orderkey"),
-            {
-                "n": (F.lit(1), "count"),
-                "total_price": (F.col("o_totalprice").cast("decimal(18,2)"), "sum"),
-                "min_price": (F.col("o_totalprice"), "min"),
-                "max_price": (F.col("o_totalprice"), "max"),
-            },
-            buckets=16,
-        )
-        return out.select(
-            "o_orderpriority",
-            "n",
-            F.col("total_price").cast("double").alias("total_price"),
-            F.col("min_price").cast("double").alias("min_price"),
-            F.col("max_price").cast("double").alias("max_price"),
-        )
-
     def per_host_verdicts_documents(spark, sf):
-        # the north rule's "salted repartitioning for skewed hosts" +
-        # per-partition verdicts, end to end under the gate: a
-        # deterministic Zipf-ish url is synthesized from doc_id (half of
-        # all rows land on host h0 — real skew), the flagship schema
-        # validates, and the SALTED two-phase per-host rollup (parse_url
-        # host extraction + salted_agg) must equal a plain GROUP BY
+        # per-host verdicts over skewed hosts, end to end under the
+        # gate: a deterministic Zipf-ish url is synthesized from doc_id
+        # (half of all rows land on host h0 — real skew), the flagship
+        # schema validates, and partition_verdicts grouped on the
+        # parse_url host must equal a plain GROUP BY
         from schema_fantasy_spark import scale
 
         docs = tables.load(spark, sf, "documents").filter(
@@ -693,7 +665,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             ),
         )
         validated = ValidationEngine(DOCUMENTS_SCHEMA).apply(with_url)
-        out = scale.per_host_verdicts(validated, url_col="url", buckets=16)
+        out = ValidationEngine.partition_verdicts(
+            validated.withColumn("host", scale.host_of(F.col("url"))), ["host"]
+        )
         return out.select("host", "n_rows", "n_invalid", "n_errors", "pass")
 
     def jsonld_validation_documents(spark, sf):
@@ -842,7 +816,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_histograms_documents": lang_histograms_documents,
         "drift_stats_documents": drift_stats_documents,
         "error_breakdown_documents": error_breakdown_documents,
-        "salted_agg_orders": salted_agg_orders,
         "per_host_verdicts_documents": per_host_verdicts_documents,
     }
 
@@ -1273,13 +1246,6 @@ def oracle_sql() -> dict[str, str]:
            CAST(sum(n_err) AS BIGINT) AS n_errors,
            sum(CASE WHEN n_err > 0 THEN 1 ELSE 0 END) = 0 AS pass
       FROM d GROUP BY host
-    """,
-        "salted_agg_orders": """
-    SELECT o_orderpriority, count(*) AS n,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-           CAST(min(o_totalprice) AS DOUBLE) AS min_price,
-           CAST(max(o_totalprice) AS DOUBLE) AS max_price
-      FROM orders GROUP BY o_orderpriority
     """,
         # closed-form violation rows from the JSON-LD block construction
         # (entry 56): family 0 and the first block of family 4 are valid

@@ -32,7 +32,8 @@ def main() -> int:
     ap.add_argument("--derive-day-from", default=None,
                     help="timestamp column to derive a 'day' partition column from")
     ap.add_argument("--host-verdicts-out", default=None,
-                    help="also write per-host verdicts (salted agg) to this path")
+                    help="also write per-host verdicts to this parquet path: "
+                         "host, n_rows, n_valid, n_invalid, n_errors, pass")
     ap.add_argument("--snapshot-id", type=int, default=None,
                     help="iceberg time travel: validate this snapshot")
     ap.add_argument("--from-snapshot-id", type=int, default=None,
@@ -68,7 +69,7 @@ def main() -> int:
 
     from schema_fantasy_spark.engine import ValidationEngine
     from schema_fantasy_spark.manifest import ResumableValidationRun
-    from schema_fantasy_spark.scale import per_host_verdicts
+    from schema_fantasy_spark.scale import host_of
     from schema_fantasy_spark.sources.iceberg import read_pages
     from schema_fantasy_spark.sources.pages import PAGES_SCHEMA
 
@@ -102,8 +103,10 @@ def main() -> int:
     result = run.run(df)
 
     if args.host_verdicts_out:
-        validated = engine.apply(df)
-        per_host_verdicts(validated).write.mode("overwrite").parquet(args.host_verdicts_out)
+        validated = engine.apply(df).withColumn("host", host_of(F.col("url")))
+        ValidationEngine.partition_verdicts(validated, ["host"]).write.mode(
+            "overwrite"
+        ).parquet(args.host_verdicts_out)
 
     print(json.dumps({
         "processed": result.processed,

@@ -24,24 +24,17 @@ from schema_fantasy_spark.compiler.plan import compile_schema
 from schema_fantasy_spark.dynamic import kernel_udf, with_errors
 
 
-def _verdict_counts() -> Dict[str, tuple]:
-    """The rollup's per-row counts, in ``scale.salted_agg``'s form
-    {name: (column, "count" | "sum")}."""
-    return {
-        "n_rows": (F.lit(1), "count"),
-        "n_invalid": ((~F.col("verdict")).cast("long"), "sum"),
-        "n_errors": (F.size("errors"), "sum"),
-    }
-
-
 def verdict_rollup() -> List[Column]:
     """The verdict rollup: ``n_rows``, ``n_invalid`` and ``n_errors``
     (bigint) of a validated frame or group. Each adds up a per-row count,
-    so a two-phase aggregate can split it (``scale.salted_agg``), and a
-    global aggregate over no rows gives 0, never null. A group passes
-    iff ``n_invalid == 0``."""
-    return [F.coalesce(getattr(F, fn)(c), F.lit(0)).alias(name)
-            for name, (c, fn) in _verdict_counts().items()]
+    so Spark plans a map-side partial aggregate for it, and a global
+    aggregate over no rows gives 0, never null. A group passes iff
+    ``n_invalid == 0``."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.coalesce(F.sum((~F.col("verdict")).cast("long")), F.lit(0)).alias("n_invalid"),
+        F.coalesce(F.sum(F.size("errors")), F.lit(0)).alias("n_errors"),
+    ]
 
 
 class ValidationEngine:
@@ -138,7 +131,9 @@ class ValidationEngine:
     @staticmethod
     def partition_verdicts(validated: DataFrame, partition_cols: Iterable[str]) -> DataFrame:
         """Per-partition pass/fail + counts (partial+final hash agg; the
-        only shuffle is on the partition keys)."""
+        only shuffle is on the partition keys). Every grouped verdict goes
+        through here: per day, per host (``scale.host_of``) and per
+        event-time window (``streaming.windowed_verdicts``)."""
         partition_cols = list(partition_cols)
         return validated.groupBy(*partition_cols).agg(*verdict_rollup()).select(
             *partition_cols,

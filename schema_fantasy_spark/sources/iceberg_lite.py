@@ -425,14 +425,21 @@ def read_snapshot(
     module docstring for the join shapes). ``partition_filter``
     ({name: value} or {name: (lo, hi)}) prunes manifests and files
     from the METADATA — pruned data files are never opened."""
-    from pyspark.sql import functions as F
-
     md = table_metadata(table_path)
     snap = _resolve_snapshot(md, snapshot_id, as_of_timestamp_ms)
     plan = _scan_plan(md, snap, partition_filter)
     if not plan["data"]:
         raise IcebergLiteError("snapshot has no data files (after pruning)"
                                if partition_filter else "snapshot has no data files")
+    return _read_plan(spark, md, plan)
+
+
+def _read_plan(spark, md: Dict[str, Any], plan: Dict[str, Any]):
+    """Live rows of a scan plan's data files, with its delete files
+    applied (the one reader behind ``read_snapshot`` and
+    ``read_incremental``)."""
+    from pyspark.sql import functions as F
+
     df = spark.read.parquet(*[p for p, _ in plan["data"]])
     if not plan["pos"] and not plan["eq"]:
         return df  # fast path: no metadata columns materialized
@@ -505,29 +512,25 @@ def read_snapshot(
     return d.select(*out_cols)
 
 
-def incremental_files(
-    table_path: str, from_snapshot_id: int, to_snapshot_id: int,
-    partition_filter: Optional[Dict[str, Any]] = None,
-) -> List[str]:
-    """DATA files present in ``to`` but not in ``from`` — the append
-    delta an incremental validation run scans (resume-from-snapshot),
-    optionally partition-pruned. The FROM side lists unfiltered (a
-    file pruned from 'from' must not masquerade as newly appended).
-    A delete-only commit appends no data files, so its delta is empty."""
-    a = set(snapshot_files(table_path, from_snapshot_id))
-    b = set(snapshot_files(table_path, to_snapshot_id,
-                           partition_filter=partition_filter))
-    return sorted(b - a)
-
-
 def read_incremental(spark, table_path: str, from_snapshot_id: int,
                      to_snapshot_id: int,
                      partition_filter: Optional[Dict[str, Any]] = None):
-    files = incremental_files(table_path, from_snapshot_id, to_snapshot_id,
-                              partition_filter=partition_filter)
-    if not files:
+    """Live rows of the DATA files present in ``to`` but not in ``from`` —
+    the append delta an incremental validation run scans
+    (resume-from-snapshot), optionally partition-pruned. Every delete
+    file of ``to`` applies, as in ``read_snapshot``, so a row deleted
+    after its append is not read. The FROM side lists unfiltered (a
+    file pruned from 'from' must not masquerade as newly appended). A
+    backwards range or a delete-only commit appends no data files and
+    raises."""
+    md = table_metadata(table_path)
+    before = _scan_plan(md, _resolve_snapshot(md, from_snapshot_id))["data"]
+    before_paths = {p for p, _ in before}
+    plan = _scan_plan(md, _resolve_snapshot(md, to_snapshot_id), partition_filter)
+    plan["data"] = [f for f in plan["data"] if f[0] not in before_paths]
+    if not plan["data"]:
         raise IcebergLiteError("no appended files between the snapshots")
-    return spark.read.parquet(*files)
+    return _read_plan(spark, md, plan)
 
 
 # --------------------------------------------------------------- writing

@@ -10,8 +10,8 @@ Schema (BASELINE.json input_hint):
     url:string  warc_ts:timestamp  html:binary  text:string  lang:string
 
 Construction rules:
-* hosts are power-law skewed (a few hot hosts) to exercise salted
-  repartitioning — ``host_id = floor(H * u^4)`` concentrates mass near 0;
+* hosts are power-law skewed (a few hot hosts) to exercise per-host
+  verdicts under skew — ``host_id = floor(H * u^4)`` concentrates mass near 0;
 * ``text`` is a pure function of ``url`` (sha2 chain), so the
   byte-identical-text-per-url invariant holds BY CONSTRUCTION — including
   for injected duplicate urls;

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 
@@ -29,19 +29,18 @@ def windowed_verdicts(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Per-event-time-window verdict counts with a watermark bounding
-    state for late data (output mode: append after watermark passes)."""
-    return (
-        validated.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"))
-        .agg(*verdict_rollup())
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_rows",
-            "n_invalid",
-            "n_errors",
-            (F.col("n_invalid") == 0).alias("pass"),
-        )
+    state for late data (output mode: append after watermark passes):
+    ``partition_verdicts`` grouped on the window."""
+    windowed = validated.withWatermark(ts_col, watermark).withColumn(
+        "w", F.window(F.col(ts_col), window)
+    )
+    return ValidationEngine.partition_verdicts(windowed, ["w"]).select(
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        "n_rows",
+        "n_invalid",
+        "n_errors",
+        "pass",
     )
 
 
@@ -63,17 +62,16 @@ def write_validated(
     output is effectively exactly-once per committed batch."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            viol = ValidationEngine.violations(batch_df, list(id_cols))
-            viol.write.mode("overwrite").parquet(
-                f"{violations_path}/batch_id={batch_id}"
-            )
-            if on_batch is not None:
-                agg = batch_df.agg(*verdict_rollup()).collect()[0]
-                on_batch(batch_id, {"n_rows": agg["n_rows"], "n_invalid": agg["n_invalid"]})
-        finally:
-            batch_df.unpersist()
+        # ONE pass per micro-batch: the rollup rides the violations write
+        # as an observe node, as in ResumableValidationRun.run
+        obs = Observation()
+        observed = batch_df.observe(obs, *verdict_rollup())
+        ValidationEngine.violations(observed, list(id_cols)).write.mode(
+            "overwrite"
+        ).parquet(f"{violations_path}/batch_id={batch_id}")
+        if on_batch is not None:
+            agg = obs.get
+            on_batch(batch_id, {"n_rows": agg["n_rows"], "n_invalid": agg["n_invalid"]})
 
     return (
         validated.writeStream.foreachBatch(handle)

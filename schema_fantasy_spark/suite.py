@@ -138,10 +138,14 @@ class CheckSuite:
         self._slots.append(("job", check, None))
         return self
 
-    def with_referential(self, parent: DataFrame, fk, pk=None,
-                         broadcast_parent: bool = True) -> "CheckSuite":
+    def with_referential(self, parent: DataFrame, fk, pk=None) -> "CheckSuite":
+        """Orphan check against ``parent``'s keys. The join strategy is
+        Spark's: it broadcasts a parent under
+        ``spark.sql.autoBroadcastJoinThreshold`` and sort-merge joins a
+        larger one (a previous snapshot's whole url column)."""
+
         def check(df: DataFrame) -> List[CheckResult]:
-            s = tc.referential_summary(df, parent, fk, pk, broadcast_parent).collect()[0]
+            s = tc.referential_summary(df, parent, fk, pk).collect()[0]
             return [CheckResult(
                 f"referential({fk})", "table", bool(s["pass"]),
                 float(s["n_orphans"]), f"{s['n_orphans']} orphan rows",

@@ -132,13 +132,23 @@ def cardinality_approx(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 # --------------------------------------------------------------- uniqueness
 
 
+def _keyed(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
+    """Rows whose key columns are all non-null. A NULL key is unknown,
+    not a value: it duplicates nothing and is no orphan (the null-rate
+    check's job)."""
+    for c in key_cols:
+        df = df.filter(F.col(c).isNotNull())
+    return df
+
+
 def duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Keys appearing more than once + how many extra copies (the
     reference's reported-duplicate-count semantics,
-    reference src/v4/uniqueItems.js:20-27). groupBy-count, one shuffle."""
+    reference src/v4/uniqueItems.js:20-27). groupBy-count, one shuffle.
+    Uniqueness holds over the rows with all key columns non-null."""
     key_cols = list(key_cols)
     return (
-        df.groupBy(*key_cols)
+        _keyed(df, key_cols).groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("n_copies"))
         .filter(F.col("n_copies") > 1)
         .withColumn("n_duplicates", F.col("n_copies") - 1)
@@ -157,14 +167,17 @@ def uniqueness_violations(
 
 
 def uniqueness_summary(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """One-row verdict for a uniqueness constraint."""
+    """One-row verdict for a uniqueness constraint over the rows with
+    all key columns non-null (``n_rows`` counts those rows)."""
     key_cols = list(key_cols)
-    per_key = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
+    per_key = _keyed(df, key_cols).groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
+    # coalesce: no non-null key at all is 0 duplicates and a pass, not null
+    n_dup = F.coalesce(F.sum(F.col("n") - 1), F.lit(0))
     return per_key.agg(
         F.count(F.lit(1)).alias("n_keys"),
-        F.sum("n").alias("n_rows"),
-        F.sum(F.when(F.col("n") > 1, F.col("n") - 1).otherwise(0)).alias("n_duplicates"),
-        (F.sum(F.when(F.col("n") > 1, 1).otherwise(0)) == 0).alias("pass"),
+        F.coalesce(F.sum("n"), F.lit(0)).alias("n_rows"),
+        n_dup.alias("n_duplicates"),
+        (n_dup == 0).alias("pass"),
     )
 
 
@@ -189,10 +202,7 @@ def referential_orphans(
     keys = parent.select(*[F.col(p).alias(f) for p, f in zip(pk, fk)]).distinct()
     if broadcast_parent:
         keys = F.broadcast(keys)
-    non_null = child
-    for f in fk:
-        non_null = non_null.filter(F.col(f).isNotNull())
-    return non_null.join(keys, on=fk, how="left_anti")
+    return _keyed(child, fk).join(keys, on=fk, how="left_anti")
 
 
 def referential_summary(

@@ -137,6 +137,25 @@ def test_iceberg_lite_positional_delete(spark, tmp_path):
         il.read_incremental(spark, tp, s1, s2)
 
 
+def test_iceberg_lite_incremental_applies_deletes(spark, tmp_path):
+    """The append delta is read through the snapshot's delete files: a
+    row deleted after its append does not come back. Positional deletes
+    (``delete_where``) and equality deletes both apply."""
+    tp = str(tmp_path / "tbli")
+    ids = lambda lo, hi: spark.range(lo, hi).select(  # noqa: E731
+        F.col("id").alias("doc_id"), (F.col("id") % 3).cast("string").alias("lang"))
+    s1 = il.append(spark, ids(0, 10), tp)
+    il.append(spark, ids(10, 20), tp)
+    s3 = il.delete_where(spark, tp, F.col("doc_id") >= 15)
+    got = sorted(r["doc_id"] for r in il.read_incremental(spark, tp, s1, s3).collect())
+    assert got == list(range(10, 15))
+    assert sorted(r["doc_id"] for r in il.read_snapshot(spark, tp, snapshot_id=s3).collect()) == list(
+        range(15))
+    s4 = il.delete_equality(spark, tp, spark.createDataFrame([("1",)], "lang string"), ["lang"])
+    got = sorted(r["doc_id"] for r in il.read_incremental(spark, tp, s1, s4).collect())
+    assert got == [i for i in range(10, 15) if i % 3 != 1]
+
+
 def test_iceberg_lite_equality_delete(spark, tmp_path):
     tp = str(tmp_path / "tble")
     rows = [(0, "en"), (1, "xx"), (2, None), (3, "de"), (4, "xx"), (5, None)]
@@ -333,7 +352,8 @@ def test_validate_job_partition_filter_end_to_end(
             "--partition-filter", f"warc_ts_day={pick}",
             "--manifest-dir", str(tmp_path / "m"),
             "--violations-dir", str(tmp_path / "v"),
-            "--derive-day-from", "warc_ts"]
+            "--derive-day-from", "warc_ts",
+            "--host-verdicts-out", str(tmp_path / "hosts")]
     monkeypatch.setattr(_sys, "argv", argv)
     assert main() == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -341,6 +361,11 @@ def test_validate_job_partition_filter_end_to_end(
     exp_day = (datetime.date(1970, 1, 1)
                + datetime.timedelta(days=pick)).isoformat()
     assert summary["processed"] == [exp_day]
+    # per-host verdicts carry partition_verdicts' columns and its totals
+    hosts = spark.read.parquet(str(tmp_path / "hosts"))
+    assert hosts.columns == ["host", "n_rows", "n_valid", "n_invalid", "n_errors", "pass"]
+    totals = hosts.agg(F.sum("n_rows"), F.sum("n_invalid")).first()
+    assert tuple(totals) == (summary["n_rows"], summary["n_invalid"])
 
     # range + filter error forms
     with pytest.raises(il.IcebergLiteError):

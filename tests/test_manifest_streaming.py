@@ -12,7 +12,7 @@ import pytest
 from schema_fantasy_spark import streaming as st
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 from schema_fantasy_spark.manifest import PartitionManifest, ResumableValidationRun
-from schema_fantasy_spark.scale import per_host_verdicts
+from schema_fantasy_spark.scale import host_of
 from schema_fantasy_spark.sources.pages import PAGES_SCHEMA, pages
 from schema_fantasy_spark.suite import CheckSuite
 
@@ -120,6 +120,28 @@ def test_streaming_validation(spark, tmp_path):
     assert sum(m["n_rows"] for m in metrics2) == 0
 
 
+def test_write_validated_is_one_job_per_batch(spark, tmp_path):
+    """Each micro-batch is ONE Spark job: the verdict metrics ride the
+    violations write as an observe node, with no persist and no second
+    aggregate job. A stream's jobs run in the job group of its run id."""
+    src = str(tmp_path / "src")
+    pages(spark, 1500).repartition(3).write.parquet(src)
+    stream = (spark.readStream.schema(spark.read.parquet(src).schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    metrics = []
+    q = st.write_validated(
+        ValidationEngine(PAGES_SCHEMA).apply(stream),
+        violations_path=str(tmp_path / "viol"),
+        checkpoint_path=str(tmp_path / "ckpt"),
+        id_cols=("id",),
+        on_batch=lambda bid, m: metrics.append(m),
+    )
+    q.awaitTermination(120)
+    assert len(metrics) == 3 and sum(m["n_rows"] for m in metrics) == 1500
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == len(metrics)
+
+
 def test_windowed_verdicts_shape(spark):
     # windowed aggregation plan compiles on a stream (no execution needed
     # beyond schema analysis) and on the equivalent batch frame
@@ -130,6 +152,34 @@ def test_windowed_verdicts_shape(spark):
     assert {c for c in batch.columns} == {
         "window_start", "window_end", "n_rows", "n_invalid", "n_errors", "pass"
     }
+
+
+def test_windowed_verdicts_append_mode_emits_closed_windows(spark, tmp_path):
+    """In append mode a window is emitted once the watermark passes its
+    end, and never again. With all data in one micro-batch nothing is
+    late, so the stream's rows are the batch frame's windows that end
+    at least the watermark delay before the latest event."""
+    import uuid
+
+    src = str(tmp_path / "src")
+    pages(spark, 3000, n_days=2).repartition(3).write.parquet(src)
+    batch_df = spark.read.parquet(src)
+    stream = spark.readStream.schema(batch_df.schema).parquet(src)
+    wv = st.windowed_verdicts(ValidationEngine(PAGES_SCHEMA).apply(stream),
+                              window="1 hour", watermark="2 hours")
+    name = "wv_" + uuid.uuid4().hex[:8]
+    q = (wv.writeStream.format("memory").queryName(name).outputMode("append")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    got = sorted(tuple(r) for r in spark.table(name).collect())
+    latest = batch_df.agg(F.max("warc_ts")).first()[0]
+    want = sorted(
+        tuple(r) for r in st.windowed_verdicts(ValidationEngine(PAGES_SCHEMA).apply(batch_df))
+        .filter(F.col("window_end") <= F.lit(latest) - F.expr("INTERVAL 2 HOURS"))
+        .collect()
+    )
+    assert got and got == want
+
 
 def test_resumable_run_is_one_job_per_partition(spark, tmp_path):
     """With violations_dir set, validate+write+metrics must be ONE Spark
@@ -161,7 +211,7 @@ def test_resumable_run_is_one_job_per_partition(spark, tmp_path):
 
 
 def test_every_verdict_consumer_sums_the_same_rollup(spark, tmp_path):
-    """partition_verdicts, per_host_verdicts, batch windowed_verdicts, the
+    """partition_verdicts per day and per host, batch windowed_verdicts, the
     resumable run's summary (both metric paths) and CheckSuite's schema
     check report the same totals as a plain aggregate of the validated
     frame. The suite reports n_rows and n_invalid only."""
@@ -179,7 +229,8 @@ def test_every_verdict_consumer_sums_the_same_rollup(spark, tmp_path):
         return {k: sum(r[k] for r in rows) for k in totals}
 
     assert summed(ValidationEngine.partition_verdicts(validated, ["day"])) == totals
-    assert summed(per_host_verdicts(validated, buckets=8)) == totals
+    by_host = validated.withColumn("host", host_of(F.col("url")))
+    assert summed(ValidationEngine.partition_verdicts(by_host, ["host"])) == totals
     assert summed(st.windowed_verdicts(validated)) == totals
     for i, vdir in enumerate((None, str(tmp_path / "v"))):
         run = ResumableValidationRun(ValidationEngine(PAGES_SCHEMA), str(tmp_path / f"m{i}"),

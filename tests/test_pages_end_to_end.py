@@ -74,6 +74,33 @@ def test_uniqueness_on_url(spark):
     assert s["n_duplicates"] == len(exp["dup_url"]) and not s["pass"]
 
 
+def test_uniqueness_ignores_null_keys(spark):
+    """A NULL key is unknown, not a value: uniqueness holds over the rows
+    whose key columns are all non-null, as referential_orphans already
+    treats a NULL foreign key. Two NULLs duplicate nothing, and a
+    composite key with a NULL part is left out too."""
+    df = spark.createDataFrame(
+        [(1, None, "x"), (2, None, "x"), (3, "a", None), (4, "a", None),
+         (5, "b", "y"), (6, "b", "y"), (7, "c", "z")],
+        "id int, k string, k2 string",
+    )
+    s = tc.uniqueness_summary(df, ["k"]).collect()[0].asDict()
+    assert s == {"n_keys": 3, "n_rows": 5, "n_duplicates": 2, "pass": False}
+    assert sorted((r["k"], r["n_duplicates"]) for r in tc.duplicate_keys(df, ["k"]).collect()) == [
+        ("a", 1), ("b", 1)]
+    v = tc.uniqueness_violations(df, ["k"], select_cols=["id"])
+    assert sorted(r["id"] for r in v.collect()) == [3, 4, 5, 6]
+    s2 = tc.uniqueness_summary(df, ["k", "k2"]).collect()[0].asDict()
+    assert s2 == {"n_keys": 2, "n_rows": 3, "n_duplicates": 1, "pass": False}
+    assert sorted(r["id"] for r in tc.uniqueness_violations(df, ["k", "k2"]).collect()) == [5, 6]
+    only_nulls = spark.createDataFrame([(None,), (None,), ("a",)], "k string")
+    s3 = tc.uniqueness_summary(only_nulls, ["k"]).collect()[0].asDict()
+    assert s3 == {"n_keys": 1, "n_rows": 1, "n_duplicates": 0, "pass": True}
+    assert tc.duplicate_keys(only_nulls, ["k"]).count() == 0
+    empty = tc.uniqueness_summary(only_nulls.filter("k is null"), ["k"]).collect()[0]
+    assert empty.asDict() == {"n_keys": 0, "n_rows": 0, "n_duplicates": 0, "pass": True}
+
+
 def test_null_rate_lang(spark):
     df = pages(spark, N)
     exp = expected_violation_ids(N)

@@ -81,16 +81,46 @@ def test_partition_verdicts_partial_aggregation(spark, pages_parquet):
     assert "partial_count" in plan or "partial count" in plan.lower()
 
 
-def test_salted_agg_two_exchanges(spark, pages_parquet):
+def test_per_host_verdicts_one_exchange(spark, pages_parquet):
+    """Per-host verdicts need no salt: the rollup is partially aggregated
+    on the map side, so a hot host crosses the one exchange as at most
+    one partial row per map task."""
     from schema_fantasy_spark import scale
 
-    df = spark.read.parquet(pages_parquet).withColumn(
-        "host", scale.host_of(F.col("url"))
+    validated = ValidationEngine(PAGES_SCHEMA).apply(spark.read.parquet(pages_parquet))
+    pv = ValidationEngine.partition_verdicts(
+        validated.withColumn("host", scale.host_of(F.col("url"))), ["host"]
     )
-    out = scale.salted_agg(df, ["host"], F.col("url"), {"n": (F.lit(1), "count")}, buckets=8)
-    plan = plan_of(out)
-    # phase-1 agg keyed (host, salt), phase-2 keyed (host): 2 exchanges
-    assert plan.count("Exchange") >= 2
+    nodes = [ln.lstrip(" :+-") for ln in plan_of(pv, "simple").splitlines()]
+    exchanges = [i for i, ln in enumerate(nodes) if ln.startswith("Exchange ")]
+    assert len(exchanges) == 1, nodes
+    below = next(ln for ln in nodes[exchanges[0] + 1:] if ln.startswith("HashAggregate"))
+    assert "partial_count" in below and "partial_sum" in below
+
+
+def test_suite_referential_leaves_the_join_to_spark(spark, monkeypatch):
+    """CheckSuite.with_referential forces no broadcast: a parent key set
+    over ``autoBroadcastJoinThreshold`` is sort-merge joined, never
+    shipped whole to every executor. The plan is read after the suite
+    ran it, so it is AQE's final plan."""
+    from schema_fantasy_spark.suite import CheckSuite
+
+    built = []
+    real = tc.referential_summary
+    monkeypatch.setattr(tc, "referential_summary",
+                        lambda *a, **kw: built.append(real(*a, **kw)) or built[-1])
+    child = pages(spark, 2000).select("url")
+    parent = pages(spark, 2000).select("url")
+    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+        report = CheckSuite().with_referential(parent, "url").run(child)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+    assert report.passed and len(built) == 1
+    plan = plan_of(built[0])
+    assert "isFinalPlan=true" in plan and "LeftAnti" in plan
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def test_dynamic_mode_is_arrow_batched(spark):

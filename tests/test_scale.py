@@ -1,46 +1,33 @@
-"""Skew machinery tests: salted two-phase aggregation must be EXACTLY
-equivalent to the plain groupBy, and per-host verdicts must match the
-unsalted computation on the Zipf-skewed pages table. The column profile
-(column_stats ⋈ percentiles) is checked against pure Python."""
+"""Scale helper tests: per-host verdicts (``partition_verdicts`` on
+``host_of(url)``) match a plain aggregate on the Zipf-skewed pages
+table. The column profile (column_stats ⋈ percentiles) is checked
+against pure Python."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from schema_fantasy_spark import scale
 from schema_fantasy_spark.engine import ValidationEngine
 from schema_fantasy_spark.sources.pages import PAGES_SCHEMA, pages
 
 
-@pytest.mark.parametrize("names,buckets", [(("n",), 16), (("n", "mx", "mn"), 8)],
-                         ids=["count", "count_max_min"])
-def test_salted_agg_exact(spark, names, buckets):
-    df = pages(spark, 3000).withColumn("host", scale.host_of(F.col("url")))
-    aggs = {"n": (F.lit(1), "count"), "mx": (F.length("text"), "max"),
-            "mn": (F.length("text"), "min")}
-    fns = {"count": F.count, "max": F.max, "min": F.min}
-    plain = df.groupBy("host").agg(
-        *[fns[aggs[k][1]](aggs[k][0]).alias(k) for k in names])
-    salted = scale.salted_agg(
-        df, ["host"], F.col("url"), {k: aggs[k] for k in names}, buckets=buckets)
-    assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in plain.collect()}
-
-
 def test_per_host_verdicts_matches_plain(spark):
-    validated = ValidationEngine(PAGES_SCHEMA).apply(pages(spark, 4000))
+    validated = ValidationEngine(PAGES_SCHEMA).apply(pages(spark, 4000)).withColumn(
+        "host", scale.host_of(F.col("url"))
+    )
     plain = {
         r["host"]: (r["n_rows"], r["n_invalid"])
-        for r in validated.groupBy(scale.host_of(F.col("url")).alias("host"))
+        for r in validated.groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum((~F.col("verdict")).cast("long")).alias("n_invalid"),
         )
         .collect()
     }
-    salted = {
+    per_host = {
         r["host"]: (r["n_rows"], r["n_invalid"])
-        for r in scale.per_host_verdicts(validated).collect()
+        for r in ValidationEngine.partition_verdicts(validated, ["host"]).collect()
     }
-    assert salted == plain
+    assert per_host == plain
     # the generator really is skewed: hottest host >> median host
     counts = sorted((n for n, _ in plain.values()), reverse=True)
     assert counts[0] > 10 * counts[len(counts) // 2]

@@ -65,7 +65,7 @@ def test_suite_referential(spark):
     base, nxt = snapshot_pair(spark, 2000)
     report = (
         CheckSuite()
-        .with_referential(nxt.select("url"), "url", broadcast_parent=True)
+        .with_referential(nxt.select("url"), "url")
         .run(base)
     )
     r = report.results[0]
