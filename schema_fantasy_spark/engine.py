@@ -10,14 +10,15 @@ pass/fail count sums ``verdict_rollup``.
   errors  : array<struct<path,keyword,message,expected,actual,depth>>
   verdict : size(errors) == 0
   violations     = select(id_cols, explode(errors))
+  observed violations = violations + observe(verdict_rollup()), one job
   partition verdicts = groupBy(partition_cols).agg(verdict_rollup())
 """
 
 from __future__ import annotations
 
-from typing import Any, Dict, Iterable, List, Optional
+from typing import Any, Dict, Iterable, List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from schema_fantasy_spark.columnar import compile_columnar
 from schema_fantasy_spark.compiler.plan import compile_schema
@@ -125,6 +126,19 @@ class ValidationEngine:
                 F.col("error.depth").alias("depth"),
             )
         )
+
+    @staticmethod
+    def observed_violations(validated: DataFrame, id_cols: Iterable[str],
+                            *aggs: Column) -> Tuple[DataFrame, Observation]:
+        """The violations of ``validated``, and an ``Observation`` of
+        ``verdict_rollup()`` plus ``aggs`` over all its rows that is read
+        once an action on the violations has ended: one job, no second
+        pass. The observe node sits upstream of the violations' Generate
+        barrier and Catalyst pushes no filter below it, so the filter
+        inferred from the explode cannot drop a valid row from the count."""
+        obs = Observation()
+        observed = validated.observe(obs, *verdict_rollup(), *aggs)
+        return ValidationEngine.violations(observed, list(id_cols)), obs
 
     # ----------------------------------------------------- partition verdicts
 

@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, functions as F
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 
 
+# the key of the NULL partition: the directory name Spark's partitionBy
+# gives NULL, so ``part=`` reads back as NULL under partition discovery
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
 def _safe_key(key: str) -> str:
     return "".join(c if (c.isalnum() or c in "-_.") else "_" for c in key)
 
@@ -106,7 +111,7 @@ class ResumableValidationRun:
             .orderBy("p")
             .collect()
         )
-        return [r["p"] for r in rows]
+        return [NULL_PARTITION if r["p"] is None else r["p"] for r in rows]
 
     def run(
         self,
@@ -125,18 +130,12 @@ class ResumableValidationRun:
             if fail_after is not None and i >= fail_after:
                 raise RuntimeError(f"injected failure after {fail_after} partitions")
             t0 = time.time()
-            pdf = df.filter(F.col(self.partition_col).cast("string") == part)
+            value = None if part == NULL_PARTITION else part
+            pdf = df.filter(F.col(self.partition_col).cast("string").eqNullSafe(value))
             validated = self.engine.apply(pdf)
             if self.violations_dir:
                 # ONE pass per partition: metrics ride the violations write
-                # as a CollectMetrics (observe) node — Catalyst cannot push
-                # the violations filter below it, so the observation sees
-                # every validated row while the write job runs
-                from pyspark.sql import Observation
-
-                obs = Observation(f"validate-{_safe_key(part)}")
-                observed = validated.observe(obs, *verdict_rollup())
-                viol = ValidationEngine.violations(observed, list(self.id_cols))
+                viol, obs = ValidationEngine.observed_violations(validated, self.id_cols)
                 viol.write.mode("overwrite").parquet(
                     os.path.join(self.violations_dir, f"part={_safe_key(part)}")
                 )

@@ -17,9 +17,9 @@ from __future__ import annotations
 
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
+from schema_fantasy_spark.engine import ValidationEngine
 
 
 def windowed_verdicts(
@@ -63,12 +63,8 @@ def write_validated(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # ONE pass per micro-batch: the rollup rides the violations write
-        # as an observe node, as in ResumableValidationRun.run
-        obs = Observation()
-        observed = batch_df.observe(obs, *verdict_rollup())
-        ValidationEngine.violations(observed, list(id_cols)).write.mode(
-            "overwrite"
-        ).parquet(f"{violations_path}/batch_id={batch_id}")
+        viol, obs = ValidationEngine.observed_violations(batch_df, id_cols)
+        viol.write.mode("overwrite").parquet(f"{violations_path}/batch_id={batch_id}")
         if on_batch is not None:
             agg = obs.get
             on_batch(batch_id, {"n_rows": agg["n_rows"], "n_invalid": agg["n_invalid"]})

@@ -6,8 +6,9 @@ This is the reference's applicative accumulation lifted to table scope
 here every CHECK evaluates, all outcomes land in one report; no
 short-circuit). A suite compiles once; ``run(df)`` executes:
 
-* the row-level schema plan (one scan) -> verdict counts + violation rows,
-* each registered table check (bounded aggregates / joins),
+* the row-level schema plan (one scan) -> the violation rows, with the
+  verdict counts and the column checks observed on the same job,
+* each registered table check (bounded aggregates / joins) over the source,
 
 and returns a ``SuiteReport`` with a uniform results frame:
 
@@ -22,7 +23,7 @@ from typing import Any, Dict, List, Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from schema_fantasy_spark import table_checks as tc
-from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
+from schema_fantasy_spark.engine import ValidationEngine
 
 
 @dataclass
@@ -41,7 +42,6 @@ class CheckResult:
 @dataclass
 class SuiteReport:
     results: List[CheckResult]
-    validated: Optional[DataFrame]
     violations: Optional[DataFrame]
 
     @property
@@ -160,10 +160,13 @@ class CheckSuite:
 
         def check(df: DataFrame) -> List[CheckResult]:
             stat = tc.chi_square_stat(tc.group_histogram(df, col), base_hist).collect()[0]
+            chi, detail = stat["chi_square"], f"dof={stat['dof']}, max {max_chi_square}"
+            if chi is None:  # an emptied side must not pass drift silently
+                side = "baseline" if base_hist.isEmpty() else "current"
+                detail = f"{side} histogram is empty; {detail}"
             return [CheckResult(
                 f"chi_square_drift({col})", "distribution",
-                stat["chi_square"] <= max_chi_square, stat["chi_square"],
-                f"dof={stat['dof']}, max {max_chi_square}",
+                chi is not None and chi <= max_chi_square, chi, detail,
             )]
 
         self._slots.append(("job", check, None))
@@ -173,27 +176,19 @@ class CheckSuite:
 
     def run(self, df: DataFrame) -> SuiteReport:
         results: List[CheckResult] = []
-        validated = violations = None
+        violations = row = None
+        # ONE aggregation for the schema verdict + every algebraic
+        # column-scope check (null rates, bounds), however many registered
+        aggs = [c for kind, build, _finish in self._slots if kind == "agg"
+                for c in build(df)]
         if self._engine is not None:
-            # materialized once by an eager, lineage-truncating local
-            # checkpoint: the schema aggregate, the table checks and the
-            # report's violations all read it, none re-runs validation
-            validated = self._engine.apply(df).localCheckpoint()
-        target = validated if validated is not None else df
-
-        # ONE aggregation pass for the schema verdict + every algebraic
-        # column-scope check (null rates, bounds): a single scan with
-        # map-side partial aggregation, however many checks registered
-        agg_slots = [s for s in self._slots if s[0] == "agg"]
-        row = None
-        if self._engine is not None or agg_slots:
-            aggs = (verdict_rollup() if self._engine is not None
-                    else [F.count(F.lit(1)).alias("n_rows")])
-            for _kind, build, _finish in agg_slots:
-                aggs.extend(build(target))
-            row = target.agg(*aggs).collect()[0]
-
-        if self._engine is not None:
+            # observed on the job that materializes the violations: the
+            # suite keeps only the violation rows, and writing them later
+            # re-runs no validation
+            violations, obs = ValidationEngine.observed_violations(
+                self._engine.apply(df), self._id_cols, *aggs)
+            violations = violations.localCheckpoint()
+            row = obs.get
             n, n_invalid = row["n_rows"], row["n_invalid"]
             rate = (n_invalid / n) if n else 0.0
             results.append(CheckResult(
@@ -201,13 +196,15 @@ class CheckSuite:
                 f"{n_invalid}/{n} invalid rows, "
                 f"max rate {self._max_invalid_rate}",
             ))
-            violations = ValidationEngine.violations(validated, self._id_cols)
+        elif aggs:
+            row = df.agg(F.count(F.lit(1)).alias("n_rows"), *aggs).collect()[0]
 
-        # join/shuffle-shaped checks run as their own jobs, in
-        # registration order interleaved with agg finishers
+        # join/shuffle-shaped checks run as their own jobs over the source,
+        # each reading only its own columns, in registration order
+        # interleaved with agg finishers
         for kind, payload, finish in self._slots:
             if kind == "agg":
                 results.extend(finish(row))
             else:
-                results.extend(payload(target))
-        return SuiteReport(results, validated, violations)
+                results.extend(payload(df))
+        return SuiteReport(results, violations)

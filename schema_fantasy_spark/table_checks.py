@@ -273,7 +273,9 @@ def chi_square_stat(
     baseline distribution to the current total. Computed over the (tiny)
     pre-aggregated histograms — never over raw rows (SURVEY.md §2.4). The
     statistic is emitted (rounded, so cross-engine float-sum order cannot
-    flip the hash); p-value thresholds are the caller's policy.
+    flip the hash); p-value thresholds are the caller's policy. An empty
+    side gives a NULL statistic, never an error, and ``dof`` is never
+    negative.
     """
     cur = current_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
     base = baseline_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base"))
@@ -282,12 +284,13 @@ def chi_square_stat(
         F.sum("n_cur").alias("t_cur"), F.sum("n_base").alias("t_base")
     )
     j = joined.crossJoin(F.broadcast(totals)).filter(F.col("n_base") > 0)
-    term = F.pow(F.col("n_cur") - F.col("n_base") * F.col("t_cur") / F.col("t_base"), 2) / (
-        F.col("n_base") * F.col("t_cur") / F.col("t_base")
-    )
+    expected = F.col("n_base") * F.col("t_cur") / F.col("t_base")
+    # expected is 0 on every row when the current side is empty; with an
+    # empty baseline no row is left, and the sum is NULL either way
+    term = F.try_divide(F.pow(F.col("n_cur") - expected, 2), expected)
     return j.agg(
         F.round(F.sum(term), 4).alias("chi_square"),
-        (F.count(F.lit(1)) - 1).cast("long").alias("dof"),
+        F.greatest(F.count(F.lit(1)) - 1, F.lit(0)).cast("long").alias("dof"),
     )
 
 
@@ -296,7 +299,8 @@ def ks_stat(
 ) -> DataFrame:
     """Kolmogorov-Smirnov statistic between two numeric histograms:
     max |ECDF_cur - ECDF_base| over bucket boundaries, via cumulative
-    window over the (tiny) histogram (SURVEY.md §2.4 'cume_dist')."""
+    window over the (tiny) histogram (SURVEY.md §2.4 'cume_dist'). An
+    empty side has no ECDF: the statistic is NULL, never an error."""
     from pyspark.sql import Window
 
     cur = current_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
@@ -312,7 +316,7 @@ def ks_stat(
     return (
         ecdf.crossJoin(F.broadcast(totals))
         .select(
-            F.abs(F.col("c_cur") / F.col("t_cur") - F.col("c_base") / F.col("t_base")).alias("d")
+            F.abs(F.try_divide("c_cur", "t_cur") - F.try_divide("c_base", "t_base")).alias("d")
         )
         .agg(F.round(F.max("d"), 6).alias("ks_stat"))
     )

@@ -11,7 +11,9 @@ import pytest
 
 from schema_fantasy_spark import streaming as st
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
-from schema_fantasy_spark.manifest import PartitionManifest, ResumableValidationRun
+from schema_fantasy_spark.manifest import (
+    NULL_PARTITION, PartitionManifest, ResumableValidationRun,
+)
 from schema_fantasy_spark.scale import host_of
 from schema_fantasy_spark.sources.pages import PAGES_SCHEMA, pages
 from schema_fantasy_spark.suite import CheckSuite
@@ -67,6 +69,28 @@ def test_resume_zero_recompute(spark, tmp_path):
         for r in spark.read.parquet(f"{vdir}/part=*").collect()
     }
     assert viol_manifest == viol_direct
+
+
+def test_null_partition_is_validated_and_resumed(spark, tmp_path):
+    """Rows whose partition value is NULL form one partition, keyed as
+    Spark's partitionBy names a NULL directory: the run validates them,
+    writes their violations and skips them on a rerun."""
+    df = pages(spark, 300, n_days=3).withColumn(
+        "warc_ts", F.when(F.col("id") % 50 == 29, None).otherwise(F.col("warc_ts"))
+    ).withColumn("day", F.to_date("warc_ts"))
+    eng = ValidationEngine(PAGES_SCHEMA)
+    mdir, vdir = str(tmp_path / "m"), str(tmp_path / "v")
+    run = ResumableValidationRun(eng, mdir, "day", violations_dir=vdir, id_cols=("id",))
+    result = run.run(df)
+    assert NULL_PARTITION in result.processed
+    totals = eng.apply(df).agg(*verdict_rollup()).collect()[0].asDict()
+    assert {k: result.summary[k] for k in totals} == totals
+    null_ids = {r["id"] for r in df.filter(F.col("day").isNull()).collect()}
+    assert len(null_ids) == 6
+    written = spark.read.parquet(os.path.join(vdir, f"part={NULL_PARTITION}"))
+    assert {r["id"] for r in written.collect()} == null_ids  # all lack warc_ts
+    rerun = run.run(df)
+    assert rerun.processed == [] and NULL_PARTITION in rerun.skipped
 
 
 def test_manifest_atomic_entries(tmp_path):

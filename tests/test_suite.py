@@ -58,7 +58,7 @@ def test_suite_accumulates_all_checks(spark):
 def test_suite_without_schema(spark):
     df = pages(spark, 1000)
     report = CheckSuite().with_uniqueness(["id"]).run(df)
-    assert report.passed and report.validated is None
+    assert report.passed and report.violations is None
 
 
 def test_suite_referential(spark):
@@ -118,6 +118,51 @@ def test_report_violations_read_the_suite_materialization(spark, tmp_path):
     report.violations.write.parquet(out)
     assert n_errors > 0
     assert spark.read.parquet(out).count() == n_errors
+
+
+def _rdd_storage(sc):
+    return {i.id(): i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+
+def test_suite_keeps_only_the_violation_rows(spark, tmp_path):
+    """The executor storage a run adds holds its violation rows, not a copy
+    of the validated table: it stays below the bytes of the input's
+    ``text`` column alone."""
+    src = str(tmp_path / "pages")
+    pages(spark, 4000).write.parquet(src)
+    df = spark.read.parquet(src)
+    text_bytes = df.agg(F.sum(F.octet_length("text"))).collect()[0][0]
+    sc = spark.sparkContext
+    before = _rdd_storage(sc)
+    report = (CheckSuite(PAGES_SCHEMA, id_cols=("id",))
+              .with_null_rate("lang", 0.05).with_uniqueness(["url"]).run(df))
+    added = sum(n for rdd, n in _rdd_storage(sc).items() if rdd not in before)
+    assert report.violations.count() > 0
+    assert 0 < added < text_bytes, (added, text_bytes)
+
+
+def test_drift_on_an_empty_side_is_null_and_fails(spark):
+    """An empty histogram side gives a NULL statistic and a non-negative
+    dof, never an error; the suite's drift check then fails and names the
+    empty side."""
+    df = pages(spark, 500)
+    hist = tc.group_histogram(df, "lang")
+    empty = hist.limit(0)
+    for cur, base in ((empty, hist), (hist, empty), (empty, empty)):
+        chi = tc.chi_square_stat(cur, base).collect()[0]
+        assert chi["chi_square"] is None and chi["dof"] >= 0
+        assert tc.ks_stat(cur, base).collect()[0]["ks_stat"] is None
+    assert tc.chi_square_stat(empty, hist).collect()[0]["dof"] == hist.count() - 1
+
+    def drift(frame, baseline):
+        report = CheckSuite().with_categorical_drift("lang", baseline, 1e9).run(frame)
+        return report.results[0]
+
+    for frame, baseline, side in ((df.limit(0), hist, "current"), (df, empty, "baseline")):
+        r = drift(frame, baseline)
+        assert not r.passed and r.metric is None
+        assert r.detail.startswith(f"{side} histogram is empty"), r.detail
+    assert drift(df, hist).passed
 
 
 def test_schema_check_statuses(spark):
