@@ -24,7 +24,9 @@ import sys
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="parquet path or iceberg identifier")
-    ap.add_argument("--schema-file", default=None, help="JSON-Schema file; default: built-in pages schema")
+    ap.add_argument("--schema-file", default=None,
+                    help="JSON-Schema file, its relative $refs fetched beside it; "
+                         "default: built-in pages schema")
     ap.add_argument("--manifest-dir", required=True)
     ap.add_argument("--violations-dir", default=None)
     ap.add_argument("--partition-col", default="day")
@@ -38,7 +40,9 @@ def main() -> int:
                     help="iceberg time travel: validate this snapshot")
     ap.add_argument("--from-snapshot-id", type=int, default=None,
                     help="iceberg incremental: validate only the file delta "
-                         "from this snapshot to --snapshot-id/current")
+                         "from this snapshot to --snapshot-id/current; give it a "
+                         "fresh --manifest-dir (the manifest skips a partition "
+                         "by name, whatever snapshot it came from)")
     ap.add_argument("--partition-filter", action="append", default=[],
                     metavar="NAME=V | NAME=LO..HI",
                     help="iceberg_lite partition pruning, repeatable "
@@ -67,6 +71,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession, functions as F
 
+    from schema_fantasy_spark.compiler.http import load_schema
     from schema_fantasy_spark.engine import ValidationEngine
     from schema_fantasy_spark.manifest import ResumableValidationRun
     from schema_fantasy_spark.scale import host_of
@@ -80,11 +85,7 @@ def main() -> int:
     owns_session = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName("sfs-validate").getOrCreate()
 
-    if args.schema_file:
-        with open(args.schema_file) as f:
-            schema = json.load(f)
-    else:
-        schema = PAGES_SCHEMA
+    schema, refs = load_schema(args.schema_file) if args.schema_file else (PAGES_SCHEMA, {})
 
     df = read_pages(spark, args.input, snapshot_id=args.snapshot_id,
                     from_snapshot_id=args.from_snapshot_id,
@@ -92,7 +93,7 @@ def main() -> int:
     if args.derive_day_from:
         df = df.withColumn(args.partition_col, F.to_date(F.col(args.derive_day_from)))
 
-    engine = ValidationEngine(schema)
+    engine = ValidationEngine(schema, refs=refs)
     run = ResumableValidationRun(
         engine,
         manifest_dir=args.manifest_dir,

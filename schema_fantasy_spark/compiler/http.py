@@ -18,6 +18,7 @@ import json
 from typing import Any, Dict, Optional, Tuple
 from urllib.request import urlopen
 
+from schema_fantasy_spark.compiler import pointer as ptr
 from schema_fantasy_spark.compiler.linker import link
 
 
@@ -46,8 +47,12 @@ def load_schema(
 ) -> Tuple[Any, Dict[str, Any]]:
     """Fetch ``url`` and its transitive $ref closure (cycle-safe dedup,
     reference src/linker.js:96-103). Returns (schema, refs_table) ready
-    for ValidationEngine(schema, refs=refs)."""
+    for ValidationEngine(schema, refs=refs). A root without an ``id``
+    gets ``url`` as its ``id``, so its relative $refs resolve against
+    the URL it was fetched from, as ``link`` resolved them."""
     refs, root = link(fetch or default_fetch, url, cache=cache)
+    if isinstance(root, dict) and not isinstance(root.get("id"), str):
+        root = {"id": ptr.normalize_url(url), **root}
     return root, refs
 
 

@@ -8,7 +8,7 @@ dynamic kernel). The three dialects agree on the common core; this module
   target dialect (``\\cJ`` control escapes, ``(?<name>...)`` named groups
   for Python, a bare ``\\0`` NUL), and
 * reproduces the reference's FLAGLESS-RegExp Annex-B reading of the
-  legacy escapes (default, reference-faithful): ``new RegExp(p)`` without
+  legacy escapes, the only reading it implements: ``new RegExp(p)`` without
   the ``u`` flag makes ``\\p``/``\\P``/dangling ``\\u`` IDENTITY escapes —
   they match the literal letter — and a ``{...}`` that is not a valid
   quantifier is a literal brace sequence. So ``\\p{L}`` matches the text
@@ -31,14 +31,11 @@ dynamic kernel). The three dialects agree on the common core; this module
   never matches it). ``[^]`` (any character) and ``[]``
   (matches nothing), errors in both Java and Python, are spelled as
   ``[\\s\\S]`` and ``[^\\s\\S]``.
-* with ``strict=True``, RAISES :class:`RegexDialectError` at schema-compile
-  time for those same constructs instead — for deployments that would
-  rather reject a schema than reproduce Annex-B legacy semantics.
 
-Deliberate divergence kept strict-only: ``\\c`` without a control letter
-(Annex-B reads it as a literal backslash + 'c' OUTSIDE classes but as a
-data character inside them — translating both contexts faithfully buys
-nothing for real schemas, so it raises in both modes).
+Deliberate divergence: ``\\c`` without a control letter (Annex-B reads it
+as a literal backslash + 'c' OUTSIDE classes but as a data character
+inside them — translating both contexts faithfully buys nothing for real
+schemas, so it raises :class:`RegexDialectError`).
 
 The constructs whose meaning differs between the three dialects are
 spelled out as the reference's RegExp reads them, for both targets:
@@ -61,9 +58,9 @@ import re
 _HEX4 = re.compile(r"[0-9a-fA-F]{4}\Z")
 _HEX2 = re.compile(r"[0-9a-fA-F]{2}")
 #: letters a flagless JS RegExp escape gives a meaning, in a class or out
-#: (p/P and u are identity escapes handled on their own, k and x depend
-#: on what follows, B is only an assertion outside a class)
-_MEANINGFUL = set("bBdDwWsSfnrtvcxukpP")
+#: (k, u and x depend on what follows, B is only an assertion outside a
+#: class; p/P are property escapes only under the u flag)
+_MEANINGFUL = set("bBdDwWsSfnrtvcxuk")
 #: JS's "[^]" (any character) and "[]" (nothing)
 _EMPTY_CLASS = re.compile(r"\[\^?\]")
 #: a named group opener (?<name>, not a lookbehind
@@ -116,7 +113,7 @@ def _count_groups(pattern: str) -> int:
     return len(re.findall(r"\((?!\?)|\(\?<(?![=!])", bare))
 
 
-def _translate(pattern: str, target: str, strict: bool = False) -> str:
+def _translate(pattern: str, target: str) -> str:
     out = []
     i, n = 0, len(pattern)
     in_class = False
@@ -145,60 +142,12 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
                 nxt not in _MEANINGFUL
                 or (nxt == "B" and in_class)
                 or (nxt == "x" and not _HEX2.match(pattern, i + 2))
+                or (nxt == "u" and not _HEX4.match(pattern[i + 2 : i + 6]))
                 or (nxt == "k" and not named)
             ):
-                if strict:
-                    raise RegexDialectError(
-                        f"pattern {pattern!r}: '\\{nxt}' is a JS legacy identity "
-                        f"escape (it matches '{nxt}'); Java and Python read it "
-                        "differently or not at all; write the bare letter"
-                    )
-                out.append(nxt)  # Annex-B identity escape: the letter itself
-                i += 2
-                prev_atom = True
-                continue
-            if nxt == "u":
-                if _HEX4.match(pattern[i + 2 : i + 6]):
-                    out.append(pattern[i : i + 6])  # \uXXXX: common core
-                    i += 6
-                    prev_atom = True
-                    continue
-                if strict and i + 2 < n and pattern[i + 2] == "{":
-                    # \u{...} is a code-point escape ONLY under the u flag;
-                    # the reference compiles new RegExp(p) WITHOUT flags
-                    # (src/v4/pattern.js:18)
-                    raise RegexDialectError(
-                        f"pattern {pattern!r}: '\\u{{...}}' reads as a code-point "
-                        "escape under the u flag but as 'u'+quantifier in the "
-                        "reference's flagless RegExp; spell the intent "
-                        "unambiguously (\\uXXXX for a code point, u{{n}} for "
-                        "repetition)"
-                    )
-                if strict:
-                    raise RegexDialectError(
-                        f"pattern {pattern!r}: '\\u' without 4 hex digits or "
-                        "{...} is JS legacy identity-escape behavior; escape "
-                        "the backslash if a literal was meant"
-                    )
-                # Annex-B identity escape: flagless '\u' is the literal
-                # letter; a following '{...}' falls to the brace scanner
-                # below ({2} quantifies the 'u', {GG} is literal braces) —
-                # the reference's exact reading
-                out.append("u")
-                i += 2
-                prev_atom = True
-                continue
-            if nxt in "pP":
-                if strict:
-                    raise RegexDialectError(
-                        f"pattern {pattern!r}: unicode property escapes "
-                        f"(\\{nxt}{{...}}) have dialect-dependent property "
-                        "names (JS RegExp vs java.util.regex) and no Python "
-                        "re support; spell the character class explicitly"
-                    )
-                # Annex-B identity escape: flagless '\p' matches 'p'
-                # (reference src/v4/pattern.js:18 — property escapes only
-                # exist under the u flag)
+                # Annex-B identity escape: the letter itself; a '{...}'
+                # after '\u' or '\p' falls to the brace scanner below ({2}
+                # quantifies the letter, {GG} is literal braces)
                 out.append(nxt)
                 i += 2
                 prev_atom = True
@@ -238,11 +187,6 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             ):
                 # no such group: Annex-B reads \8 and \9 as identity
                 # escapes and the rest as a legacy octal escape
-                if strict:
-                    raise RegexDialectError(
-                        f"pattern {pattern!r}: '\\{nxt}' names no group; the reference's "
-                        "flagless RegExp reads it as a legacy octal or identity escape"
-                    )
                 m = _OCTAL.match(pattern, i + 1)
                 out.append("\\x%02X" % int(m.group(0), 8) if m else nxt)
                 i = m.end() if m else i + 2
@@ -311,12 +255,6 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
             continue
         m = None if in_class else _EMPTY_CLASS.match(pattern, i)
         if m:
-            if strict:
-                raise RegexDialectError(
-                    f"pattern {pattern!r}: JS's empty class '[]' and any-"
-                    "character class '[^]' are errors in Java and Python; "
-                    "spell the intent another way"
-                )
             out.append("[\\s\\S]" if m.group(0) == "[^]" else "[^\\s\\S]")
             i = m.end()
             prev_atom = True
@@ -376,16 +314,15 @@ def _translate(pattern: str, target: str, strict: bool = False) -> str:
     return "".join(out)
 
 
-def java_pattern(pattern: str, strict: bool = False) -> str:
-    """Pattern string for java.util.regex (``Column.rlike``). Default is
-    the reference-faithful Annex-B reading of legacy escapes;
-    ``strict=True`` raises :class:`RegexDialectError` for them instead."""
-    return _translate(pattern, "java", strict=strict)
+def java_pattern(pattern: str) -> str:
+    """Pattern string for java.util.regex (``Column.rlike``), read as the
+    reference's flagless RegExp (Annex-B legacy escapes included)."""
+    return _translate(pattern, "java")
 
 
-def python_pattern(pattern: str, strict: bool = False) -> "re.Pattern":
-    """Compiled Python ``re`` pattern with JS spellings translated (same
-    ``strict`` contract as :func:`java_pattern`). ``re.ASCII`` gives
+def python_pattern(pattern: str) -> "re.Pattern":
+    """Compiled Python ``re`` pattern with JS spellings translated, read
+    like :func:`java_pattern`. ``re.ASCII`` gives
     ``\\d``/``\\w`` the ASCII classes of the reference's RegExp;
     Python's defaults are Unicode, so ``\\d`` would match ``'٣'``."""
-    return re.compile(_translate(pattern, "python", strict=strict), re.ASCII)
+    return re.compile(_translate(pattern, "python"), re.ASCII)

@@ -11,6 +11,7 @@ pass/fail count sums ``verdict_rollup``.
   verdict : size(errors) == 0
   violations     = select(id_cols, explode(errors))
   observed violations = violations + observe(verdict_rollup()), one job
+  error breakdown = violations.groupBy(group_cols, keyword, path).count()
   partition verdicts = groupBy(partition_cols).agg(verdict_rollup())
 """
 
@@ -161,17 +162,12 @@ class ValidationEngine:
     @staticmethod
     def error_breakdown(validated: DataFrame, group_cols: Iterable[str] = ()) -> DataFrame:
         """Violation counts per (group, keyword, path) — the monitoring
-        rollup. Exploding only the (tiny) errors arrays of failing rows;
-        valid rows contribute nothing to the shuffle."""
+        rollup, a count over ``violations``, so the errors column is
+        evaluated once, behind its barrier; valid rows contribute nothing
+        to the shuffle."""
         group_cols = list(group_cols)
-        err = F.explode(F.col("errors")).alias("error")
         return (
-            validated.filter(F.size(F.col("errors")) > 0)
-            .select(*group_cols, err)
-            .groupBy(
-                *group_cols,
-                F.col("error.keyword").alias("keyword"),
-                F.array_join(F.col("error.path"), "/").alias("path"),
-            )
+            ValidationEngine.violations(validated, group_cols)
+            .groupBy(*group_cols, "keyword", F.array_join("path", "/").alias("path"))
             .agg(F.count(F.lit(1)).alias("n_violations"))
         )

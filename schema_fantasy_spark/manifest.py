@@ -23,6 +23,7 @@ import tempfile
 import time
 from dataclasses import dataclass
 from typing import Callable, Dict, List, Optional
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -35,7 +36,9 @@ NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _safe_key(key: str) -> str:
-    return "".join(c if (c.isalnum() or c in "-_.") else "_" for c in key)
+    """A file name for a partition key: percent-encoding is one-to-one,
+    and Spark's partition discovery decodes it in a ``part=`` directory."""
+    return quote(key, safe="")
 
 
 class PartitionManifest:

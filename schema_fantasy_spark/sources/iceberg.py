@@ -41,7 +41,6 @@ def read_table(
     spark: SparkSession,
     identifier: str,
     snapshot_id: Optional[int] = None,
-    as_of_timestamp_ms: Optional[int] = None,
 ) -> DataFrame:
     """Read an Iceberg table, optionally time-traveled to a snapshot —
     the source of the 'base' side in cross-snapshot referential/drift
@@ -54,8 +53,6 @@ def read_table(
     reader = spark.read.format("iceberg")
     if snapshot_id is not None:
         reader = reader.option("snapshot-id", str(snapshot_id))
-    if as_of_timestamp_ms is not None:
-        reader = reader.option("as-of-timestamp", str(as_of_timestamp_ms))
     return reader.load(identifier)
 
 

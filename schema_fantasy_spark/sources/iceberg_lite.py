@@ -63,7 +63,7 @@ fields. Data files land in Hive-style ``<name>=<value>`` directories
 (readable layout; the manifests, not the paths, are authoritative —
 the reader never parses paths).
 
-Supported: snapshot listing, current/by-id/as-of-timestamp resolution,
+Supported: snapshot listing, current/by-id resolution,
 live-file listing (ADDED + EXISTING, DELETED dropped), positional +
 equality delete application, partition pruning at manifest-list and
 manifest-entry level, incremental file diffs between snapshots,
@@ -122,11 +122,7 @@ def snapshots(table_path: str) -> List[Dict[str, Any]]:
     return list(table_metadata(table_path).get("snapshots") or [])
 
 
-def _resolve_snapshot(
-    md: Dict[str, Any],
-    snapshot_id: Optional[int] = None,
-    as_of_timestamp_ms: Optional[int] = None,
-) -> Dict[str, Any]:
+def _resolve_snapshot(md: Dict[str, Any], snapshot_id: Optional[int] = None) -> Dict[str, Any]:
     snaps = md.get("snapshots") or []
     if not snaps:
         raise IcebergLiteError("table has no snapshots")
@@ -135,11 +131,6 @@ def _resolve_snapshot(
             if s["snapshot-id"] == snapshot_id:
                 return s
         raise IcebergLiteError(f"snapshot {snapshot_id} not found")
-    if as_of_timestamp_ms is not None:
-        eligible = [s for s in snaps if s["timestamp-ms"] <= as_of_timestamp_ms]
-        if not eligible:
-            raise IcebergLiteError("no snapshot at or before the timestamp")
-        return max(eligible, key=lambda s: s["timestamp-ms"])
     cur = md.get("current-snapshot-id")
     for s in snaps:
         if s["snapshot-id"] == cur:
@@ -399,7 +390,6 @@ def _field_names_by_id(md: Dict[str, Any]) -> Dict[int, str]:
 def snapshot_files(
     table_path: str,
     snapshot_id: Optional[int] = None,
-    as_of_timestamp_ms: Optional[int] = None,
     partition_filter: Optional[Dict[str, Any]] = None,
 ) -> List[str]:
     """Live DATA-file paths of a snapshot (ADDED + EXISTING entries
@@ -408,7 +398,7 @@ def snapshot_files(
     the scan plan, not of this list — use ``read_snapshot`` for
     delete-applied rows."""
     md = table_metadata(table_path)
-    snap = _resolve_snapshot(md, snapshot_id, as_of_timestamp_ms)
+    snap = _resolve_snapshot(md, snapshot_id)
     return [p for p, _ in _scan_plan(md, snap, partition_filter)["data"]]
 
 
@@ -416,7 +406,6 @@ def read_snapshot(
     spark,
     table_path: str,
     snapshot_id: Optional[int] = None,
-    as_of_timestamp_ms: Optional[int] = None,
     partition_filter: Optional[Dict[str, Any]] = None,
 ):
     """DataFrame over a snapshot's live rows — time travel is a pure
@@ -426,7 +415,7 @@ def read_snapshot(
     ({name: value} or {name: (lo, hi)}) prunes manifests and files
     from the METADATA — pruned data files are never opened."""
     md = table_metadata(table_path)
-    snap = _resolve_snapshot(md, snapshot_id, as_of_timestamp_ms)
+    snap = _resolve_snapshot(md, snapshot_id)
     plan = _scan_plan(md, snap, partition_filter)
     if not plan["data"]:
         raise IcebergLiteError("snapshot has no data files (after pruning)"

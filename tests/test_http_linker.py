@@ -6,6 +6,7 @@ tuple items)."""
 
 import http.server
 import json
+import sys
 import threading
 
 import pytest
@@ -92,3 +93,39 @@ def test_unknown_remote_404(server):
 
     with pytest.raises(HTTPError):
         load_schema(f"{server}/nope")
+
+
+def _split_schema_files(tmp_path, target):
+    """A root file without an ``id`` whose only content is a relative
+    $ref to ``target``, written beside it."""
+    (tmp_path / "defs.json").write_text(json.dumps(target))
+    root = tmp_path / "schema.json"
+    root.write_text(json.dumps({"$ref": "defs.json"}))
+    return str(root)
+
+
+def test_load_schema_resolves_a_relative_ref_of_a_root_without_id(tmp_path):
+    root = _split_schema_files(tmp_path, {"type": "string", "minLength": 2})
+    schema, refs = load_schema(root)
+    compiled = compile_schema(schema, refs=refs)
+    assert compiled.is_valid("ab")
+    assert not compiled.is_valid("a")
+
+
+def test_validate_job_schema_file_with_a_relative_ref(spark, tmp_path, capsys, monkeypatch):
+    from jobs.validate_job import main
+    from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
+    from schema_fantasy_spark.sources.pages import PAGES_SCHEMA, pages
+
+    src = str(tmp_path / "pages")
+    pages(spark, 300, n_days=2).write.parquet(src)
+    monkeypatch.setattr(sys, "argv", [
+        "validate_job", "--input", src,
+        "--schema-file", _split_schema_files(tmp_path, PAGES_SCHEMA),
+        "--manifest-dir", str(tmp_path / "m"), "--derive-day-from", "warc_ts"])
+    assert main() == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    totals = ValidationEngine(PAGES_SCHEMA).apply(spark.read.parquet(src)).agg(
+        *verdict_rollup()).first().asDict()
+    assert totals["n_invalid"] > 0
+    assert {k: summary[k] for k in totals} == totals

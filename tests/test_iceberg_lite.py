@@ -80,8 +80,6 @@ def test_iceberg_lite_snapshots(spark, tmp_path):
     assert il.read_snapshot(spark, tp, snapshot_id=s1).count() == 40
     assert il.read_snapshot(spark, tp, snapshot_id=s2).count() == 70
     assert il.read_snapshot(spark, tp).count() == 30          # current = s3
-    # as-of-timestamp resolution (logical clock == snapshot id)
-    assert il.read_snapshot(spark, tp, as_of_timestamp_ms=s2).count() == 70
     # incremental read = the appended delta only
     inc = il.read_incremental(spark, tp, s1, s2)
     assert inc.count() == 30

@@ -8,6 +8,8 @@ import ast
 import importlib
 import importlib.util
 import os
+import subprocess
+import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "schema_fantasy_spark"
@@ -87,3 +89,25 @@ def test_every_query_has_an_oracle(monkeypatch):
     monkeypatch.syspath_prepend(ROOT)
     entry = importlib.import_module("__spark_entry__")
     assert set(entry.queries()) == set(entry.oracle_sql())
+
+
+def test_pyfiles_zip_imports_alone(tmp_path):
+    """``tools/make_pyfiles.sh`` builds the ``--py-files`` artifact, and the
+    modules a spark-submit job reaches import from that zip alone."""
+    subprocess.run([os.path.join(ROOT, "tools", "make_pyfiles.sh")], check=True,
+                   capture_output=True)
+    env = {**os.environ, "PYTHONPATH": os.path.join(ROOT, "dist", f"{PKG}.zip")}
+    modules = ["engine", "manifest", "suite", "sources.iceberg",
+               "sources.iceberg_lite", "compiler.http"]
+    probe = (
+        "import importlib, sys\n"
+        f"for m in {modules!r}:\n"
+        f"    importlib.import_module('{PKG}.' + m)\n"
+        f"print(sys.modules['{PKG}'].__file__)\n"
+    )
+    out = subprocess.run([sys.executable, "-c", probe], cwd=tmp_path, env=env,
+                         check=True, capture_output=True, text=True).stdout
+    assert out.strip() == os.path.join(env["PYTHONPATH"], PKG, "__init__.py")
+    job = subprocess.run([sys.executable, os.path.join(ROOT, "jobs", "validate_job.py"),
+                          "--help"], cwd=tmp_path, env=env, capture_output=True, text=True)
+    assert job.returncode == 0 and "--schema-file" in job.stdout, job.stderr

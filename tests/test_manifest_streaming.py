@@ -93,6 +93,33 @@ def test_null_partition_is_validated_and_resumed(spark, tmp_path):
     assert rerun.processed == [] and NULL_PARTITION in rerun.skipped
 
 
+def test_partition_keys_that_differ_only_in_punctuation_stay_apart(spark, tmp_path):
+    """Partition values such as "a b" and "a_b" keep their own manifest
+    entries and their own violations directories."""
+    m = PartitionManifest(str(tmp_path / "marks"))
+    m.mark("a b", {"n_rows": 1})
+    m.mark("a_b", {"n_rows": 2})
+    assert {k: e["n_rows"] for k, e in m.completed().items()} == {"a b": 1, "a_b": 2}
+
+    values = ["a b", "a_b", "a/b", "a:b", "a%20b"]
+    df = pages(spark, 300).withColumn(
+        "part", F.element_at(F.array(*map(F.lit, values)), (F.col("id") % 5 + 1).cast("int"))
+    )
+    mdir, vdir = str(tmp_path / "m"), str(tmp_path / "v")
+    run = ResumableValidationRun(ValidationEngine(PAGES_SCHEMA), mdir, "part",
+                                 violations_dir=vdir, id_cols=("id",))
+    result = run.run(df)
+    assert sorted(result.processed) == sorted(values)
+    assert result.summary["n_partitions"] == 5 and result.summary["n_rows"] == 300
+    assert len(os.listdir(vdir)) == 5
+    written = spark.read.parquet(vdir)  # partition discovery decodes part=
+    expected = ValidationEngine.violations(
+        ValidationEngine(PAGES_SCHEMA).apply(df), ["id", "part"])
+    assert sorted(written.select("id", "part").distinct().collect()) == sorted(
+        expected.select("id", "part").distinct().collect())
+    assert run.run(df).processed == []
+
+
 def test_manifest_atomic_entries(tmp_path):
     m = PartitionManifest(str(tmp_path / "m"))
     m.mark("2026-01-01", {"n_rows": 10, "n_invalid": 0, "pass": True})

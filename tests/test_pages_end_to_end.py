@@ -35,6 +35,17 @@ def test_exact_violation_sets(spark):
                         ("maximum", "warc_ts"), ("enum", "lang")}
 
 
+def test_error_breakdown_counts_the_violation_rows(spark):
+    """Every violation row is counted once in ``error_breakdown``, with and
+    without group columns."""
+    validated = ValidationEngine(PAGES_SCHEMA).apply(pages(spark, N))
+    n_rows = ValidationEngine.violations(validated, ["id"]).count()
+    assert n_rows > 0
+    for group_cols in ((), ["lang"]):
+        breakdown = ValidationEngine.error_breakdown(validated, group_cols)
+        assert breakdown.agg(F.sum("n_violations")).first()[0] == n_rows
+
+
 def test_byte_identical_text_per_url(spark):
     """text is a pure function of url -> every url maps to exactly one
     text hash, even for injected duplicate urls (BASELINE.json per-row

@@ -130,6 +130,20 @@ def test_dynamic_mode_is_arrow_batched(spark):
     assert "ArrowEvalPython" in plan  # vectorized, not row-at-a-time BatchEvalPython
 
 
+def test_error_breakdown_runs_the_kernel_once(spark):
+    """``error_breakdown`` counts the rows ``violations`` builds, so on an
+    unpersisted dynamic frame the filter inferred from its explode tests
+    the barrier attribute and the kernel runs once per document."""
+    df = spark.createDataFrame(
+        [(1, '{"a": 1}'), (2, '{"b": 1}'), (3, '{"a": "x"}')], "id: long, doc: string"
+    )
+    schema = {"required": ["a"], "properties": {"a": {"type": "integer"}}}
+    validated = ValidationEngine(schema, mode="dynamic").apply(df, doc_col="doc")
+    for group_cols in ((), ["id"]):
+        plan = plan_of(ValidationEngine.error_breakdown(validated, group_cols), "simple")
+        assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
+
+
 def test_bucketed_join_avoids_shuffle(spark, tmp_path_factory):
     """Bucketing co-locates join keys at write time: a self-join of two
     tables bucketed on the same key by the same bucket count needs NO

@@ -3,8 +3,7 @@
 yield the reference's verdicts on every engine mode. The reference's
 RegExp is FLAGLESS, so Annex-B legacy semantics apply: ``\\p``/``\\P``/
 dangling ``\\u`` are identity escapes and non-quantifier braces are
-literals — the default translation reproduces exactly that reading;
-``strict=True`` rejects those constructs at schema-compile time instead."""
+literals — the translation reproduces exactly that reading."""
 
 import re
 
@@ -53,11 +52,6 @@ class TestTranslation:
         assert python_pattern(r"\u{1F600}").fullmatch("u{1F600}")
         assert java_pattern(r"\u{2}") == "u{2}"
         assert java_pattern(r"\u{1F600}") == r"u\{1F600\}"
-        # strict mode rejects the ambiguity at compile time instead
-        with pytest.raises(RegexDialectError):
-            java_pattern(r"\u{1F600}", strict=True)
-        with pytest.raises(RegexDialectError):
-            python_pattern(r"\u{2}", strict=True)
         # the unambiguous 4-hex spelling passes through
         assert java_pattern(r"\u0041") == r"\u0041"
         assert python_pattern(r"\u0041").search("A")
@@ -93,20 +87,11 @@ class TestTranslation:
         # inside a class: identity escape, braces already literal there
         assert python_pattern(r"[\p{L}]+").fullmatch("pL{}")
         assert java_pattern(r"[\p]") == "[p]"
-        # strict mode rejects property escapes at compile time
-        with pytest.raises(RegexDialectError):
-            java_pattern(r"\p{Letter}+", strict=True)
-        with pytest.raises(RegexDialectError):
-            python_pattern(r"\P{L}", strict=True)
 
     def test_malformed_u_annex_b(self):
         # dangling '\u' (no 4 hex digits) is the literal letter 'u'
         assert python_pattern(r"\u12").fullmatch("u12")
         assert java_pattern(r"\u12") == "u12"
-        with pytest.raises(RegexDialectError):
-            java_pattern(r"\u12", strict=True)
-        with pytest.raises(RegexDialectError):
-            java_pattern(r"\u{GG}", strict=True)
 
     def test_literal_braces_match_annex_b(self):
         # a brace that is not a valid quantifier is a literal in the
@@ -330,18 +315,14 @@ def test_both_modes_read_patterns_as_js(spark):
         assert bool(python_pattern(p).search(s)) == js, ("kernel", p, s)
 
 
-def test_strict_rejects_identity_escapes_and_empty_classes():
-    """``strict=True`` refuses the Annex-B readings the default mode
-    reproduces, as it does for ``\\p``; '\\k' that names no group is an
-    error in a pattern with named groups (node rejects it too)."""
-    for pat in ["\\h", "[\\R]", "\\x4", "\\k", "[^]", "[]", "a[]b",
-                "\\8", "(a)\\2", "\\12", "[\\1]"]:
-        for fn in (java_pattern, python_pattern):
-            with pytest.raises(RegexDialectError):
-                fn(pat, strict=True)
+def test_k_naming_no_group_raises_in_a_pattern_with_named_groups():
+    """'\\k' that names no group is an error in a pattern with named
+    groups (node rejects it too); without named groups it is an identity
+    escape."""
     for pat in ["(?<n>a)\\k", "(?<n>a)\\kx"]:
         with pytest.raises(RegexDialectError):
             java_pattern(pat)
+    assert java_pattern("\\kx") == "kx"
 
 
 def test_pattern_rejected_by_kernel_is_rejected_by_columnar():
