@@ -13,6 +13,11 @@ pass/fail count sums ``verdict_rollup``.
   observed violations = violations + observe(verdict_rollup()), one job
   error breakdown = violations.groupBy(group_cols, keyword, path).count()
   partition verdicts = groupBy(partition_cols).agg(verdict_rollup())
+
+The result plans are written as SQL text (``selectExpr``, ``F.expr``):
+under PySpark 4 every ``F.*`` call is about a dozen py4j round trips
+(CLAUDE.md trap 16), and building ``violations`` one call per column took
+261 of them, 47-65 ms of driver time per plan.
 """
 
 from __future__ import annotations
@@ -26,6 +31,11 @@ from schema_fantasy_spark.compiler.plan import compile_schema
 from schema_fantasy_spark.dynamic import kernel_udf, with_errors
 
 
+def _quoted(cols: Iterable[str]) -> List[str]:
+    """``cols`` as backquoted SQL identifiers for ``selectExpr``."""
+    return ["`" + c.replace("`", "``") + "`" for c in cols]
+
+
 def verdict_rollup() -> List[Column]:
     """The verdict rollup: ``n_rows``, ``n_invalid`` and ``n_errors``
     (bigint) of a validated frame or group. Each adds up a per-row count,
@@ -33,9 +43,9 @@ def verdict_rollup() -> List[Column]:
     aggregate over no rows gives 0, never null. A group passes iff
     ``n_invalid == 0``."""
     return [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.coalesce(F.sum((~F.col("verdict")).cast("long")), F.lit(0)).alias("n_invalid"),
-        F.coalesce(F.sum(F.size("errors")), F.lit(0)).alias("n_errors"),
+        F.expr("count(1) AS n_rows"),
+        F.expr("coalesce(sum(CAST(NOT verdict AS BIGINT)), 0) AS n_invalid"),
+        F.expr("coalesce(sum(size(errors)), 0) AS n_errors"),
     ]
 
 
@@ -90,7 +100,7 @@ class ValidationEngine:
             out = with_errors(df, doc_col, self._udf)
         else:
             out = self._plan.with_errors(df, doc_col)
-        return out.withColumn("verdict", F.size(F.col("errors")) == 0)
+        return out.withColumn("verdict", F.expr("size(errors) = 0"))
 
     # ----------------------------------------------------------- violations
 
@@ -110,23 +120,9 @@ class ValidationEngine:
         trap #1). The barrier costs one array wrap of an
         already-computed value; the inferred filter then tests the
         barrier attribute, not the kernel."""
-        barrier = validated.select(
-            *[F.col(c) for c in id_cols],
-            F.explode(F.array(F.col("errors"))).alias("_errs"),
-        )
-        err = F.explode(F.col("_errs")).alias("error")
-        return (
-            barrier.select(*[F.col(c) for c in id_cols], err)
-            .select(
-                *id_cols,
-                F.col("error.path").alias("path"),
-                F.col("error.keyword").alias("keyword"),
-                F.col("error.message").alias("message"),
-                F.col("error.expected").alias("expected"),
-                F.col("error.actual").alias("actual"),
-                F.col("error.depth").alias("depth"),
-            )
-        )
+        ids = _quoted(id_cols)
+        barrier = validated.selectExpr(*ids, "explode(array(errors)) AS _errs")
+        return barrier.selectExpr(*ids, "inline(_errs)")
 
     @staticmethod
     def observed_violations(validated: DataFrame, id_cols: Iterable[str],
@@ -150,14 +146,10 @@ class ValidationEngine:
         through here: per day, per host (``scale.host_of``) and per
         event-time window (``streaming.windowed_verdicts``)."""
         partition_cols = list(partition_cols)
-        return validated.groupBy(*partition_cols).agg(*verdict_rollup()).select(
-            *partition_cols,
-            "n_rows",
-            (F.col("n_rows") - F.col("n_invalid")).alias("n_valid"),
-            "n_invalid",
-            "n_errors",
-            (F.col("n_invalid") == 0).alias("pass"),
-        )
+        keys = _quoted(partition_cols)
+        return validated.groupBy(*partition_cols).agg(*verdict_rollup()).selectExpr(
+            *keys, "n_rows", "n_rows - n_invalid AS n_valid", "n_invalid", "n_errors",
+            "n_invalid = 0 AS `pass`")
 
     @staticmethod
     def error_breakdown(validated: DataFrame, group_cols: Iterable[str] = ()) -> DataFrame:
@@ -168,6 +160,6 @@ class ValidationEngine:
         group_cols = list(group_cols)
         return (
             ValidationEngine.violations(validated, group_cols)
-            .groupBy(*group_cols, "keyword", F.array_join("path", "/").alias("path"))
-            .agg(F.count(F.lit(1)).alias("n_violations"))
+            .groupBy(*group_cols, "keyword", F.expr("array_join(path, '/') AS path"))
+            .agg(F.expr("count(1) AS n_violations"))
         )

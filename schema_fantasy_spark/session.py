@@ -31,7 +31,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for the few pandas-UDF slices; generous batch for throughput
+        # Arrow for the dynamic mode's kernel UDF; generous batch for throughput
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # keep scans partition-parallel at bench SFs

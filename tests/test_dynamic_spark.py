@@ -1,6 +1,6 @@
 """Tier 2 — the dynamic (Arrow-batched) Spark mode re-runs the conformance
 corpus BATCHED: all cases of a fixture group become rows of one DataFrame
-per feature, validated by one pandas-UDF pass (mirrors the reference
+per feature, validated by one Arrow-UDF pass (mirrors the reference
 harness shape, test/test-suite.js:57-99)."""
 
 import json
