@@ -74,10 +74,37 @@ def js_number(s: str) -> float:
 
 
 def json_repr(v: Any) -> str:
-    """Stringify a JSON value for error messages."""
+    """Stringify a JSON value for error messages: a string as itself, any
+    other value as ``json.dumps(v, separators=(",", ":"), sort_keys=True)``
+    gives it. Containers are walked with a stack of their own, so the text
+    of a deep value does not depend on the recursion limit."""
     if isinstance(v, str):
         return v
-    return json.dumps(v, separators=(",", ":"), sort_keys=True)
+    out: List[str] = []
+    todo: List[Tuple[bool, Any]] = [(False, v)]  # (is text, text or value), last first
+    while todo:
+        text, x = todo.pop()
+        if text:
+            out.append(x)
+        elif isinstance(x, (list, tuple)):
+            out.append("[")
+            todo.append((True, "]"))
+            for i in range(len(x) - 1, -1, -1):
+                todo.append((False, x[i]))
+                if i:
+                    todo.append((True, ","))
+        elif isinstance(x, dict):
+            if not all(isinstance(k, str) for k in x):
+                return json.dumps(v, separators=(",", ":"), sort_keys=True)
+            out.append("{")
+            todo.append((True, "}"))
+            items = sorted(x.items())
+            for i in range(len(items) - 1, -1, -1):
+                k, y = items[i]
+                todo += [(False, y), (True, ("," if i else "") + json.dumps(k) + ":")]
+        else:
+            out.append(json.dumps(x))
+    return "".join(out)
 
 
 # ------------------------------------------------------------------ wording

@@ -13,14 +13,38 @@ keyword semantics, ``$ref`` resolution, value checks and wording live in
   deliberately recompiles per evaluation, src/v4/pattern.js:18 — a
   documented naivety we do not reproduce).
 
-The generated source holds one function per IR node (a recursive schema
-becomes mutually recursive functions). Inside a function the value's JSON
-type is looked up once, the checks are straight-line ``if``s in schema-key
-order under that guard, and a function returns ``None`` for a valid value.
+The generated source holds one function ``f<n>(v, d)`` per IR node (a
+recursive schema becomes mutually recursive functions), returning
+``None`` for a valid value. Each function has up to two paths:
+
+* a fast one for the values whose class alone settles the node's type
+  (``v.__class__ is dict``, ``is str``, ``is int`` ...). A node without
+  loops (a leaf) tests one condition, the class test and its checks'
+  conditions joined by ``and``, and returns ``None`` at once when it
+  holds. A node with loops runs its checks for that class with no type
+  lookup and no guards. A caller tests a leaf's condition in place and
+  calls the leaf only when it fails, so most valid values cost no call;
+* the general one: the value's JSON type is looked up once
+  (``_T.get(v.__class__) or _type_of(v)``), the checks are straight-line
+  ``if``s in schema-key order under that guard. Values the fast path
+  does not take (``True`` under ``number``, ``1.0`` under ``integer``,
+  NaN, subclasses, failing values) get their rows here, as before.
+
+Object checks read each declared property with one lookup
+(``v.get(key, _NO)``). When no declared property name matches a
+``patternProperties`` regex (decided at compile time), the patterns and
+``additionalProperties`` look only at the keys outside ``properties``,
+listed once in document order; otherwise they loop over every key.
+``uniqueItems`` compares an all-``str`` array as a set, and
+``minLength``/``maxLength`` count an ASCII string with ``len``.
+
 Errors carry value paths relative to the node that made them; a parent
 prefixes its key only when a child failed, so a valid document builds no
 path at all. ``anyOf`` stops at the first passing branch and ``oneOf`` at
-the second: the discarded branches could not change the result.
+the second: the discarded branches could not change the result. The
+fast conditions never change the rows: a condition holds only where the
+node passes, and it raises NestingError only where the node's own
+checks would (``tests/fixtures/kernel_golden.json`` pins the rows).
 
 Every constant (messages, enum sets, translated regexes) is a literal in
 the source, so the text alone determines the kernel: ``load_kernel``
@@ -32,6 +56,8 @@ Documented divergences:
   silently bounds integers to int32 in JS. We use mathematical integrality
   (int, or float with .is_integer()), matching draft-4 intent.
 * enum expected-value rendering uses compact JSON, not JS String().
+  Deep equality (``canonical``) and that rendering walk a value without
+  recursion, so an enum's rows do not depend on the recursion limit.
 * nesting: the kernel looks inside containers at most ``MAX_DEPTH`` levels
   below the root and raises :class:`NestingError` past that; the
   reference recurses until the JS stack overflows.
@@ -45,7 +71,7 @@ import math
 import re
 import unicodedata
 from dataclasses import dataclass
-from typing import Any, Callable, Dict, List, Optional
+from typing import Any, Callable, Dict, List, NamedTuple, Optional, Tuple
 
 from schema_fantasy_spark.compiler import ir
 from schema_fantasy_spark.compiler.ir import SchemaCompileError, json_repr
@@ -99,17 +125,44 @@ def is_integer(v: Any) -> bool:
     return isinstance(v, float) and v.is_integer()
 
 
-def canonical(v: Any):
+_END = object()
+
+
+def canonical(v: Any, d: int = 0):
     """Hashable type-tagged canonical form for JSON deep equality
-    (R.equals semantics: 1 == 1.0 but 1 != true != '1')."""
-    t = _TYPES.get(v.__class__) or type_of(v)
-    if t == "number":
-        return ("n", float(v))
-    if t == "array":
-        return ("a", tuple(canonical(x) for x in v))
-    if t == "object":
-        return ("o", tuple(sorted((k, canonical(x)) for k, x in v.items())))
-    return (t[0], v)
+    (R.equals semantics: 1 == 1.0 but 1 != true != '1') of ``v`` at
+    nesting depth ``d``. It walks the value with a stack of its own, so
+    the result does not depend on the recursion limit; like the kernel
+    it looks inside containers at most MAX_DEPTH levels below the root
+    and raises NestingError past that."""
+    parts: list = []  # finished forms of the open container's members
+    stack: list = []  # open containers: (object keys or None, members, outer parts)
+    while True:
+        t = _TYPES.get(v.__class__) or type_of(v)
+        if t == "array" or t == "object":
+            if d >= MAX_DEPTH:
+                _deep()
+            keys = [] if t == "object" else None
+            stack.append((keys, iter(v if keys is None else v.items()), parts))
+            parts = []
+            d += 1
+        else:
+            parts.append(("n", float(v)) if t == "number" else (t[0], v))
+        while stack:  # the next member of the innermost open container
+            keys, members, outer = stack[-1]
+            v = next(members, _END)
+            if v is not _END:
+                if keys is not None:
+                    k, v = v
+                    keys.append(k)
+                break
+            stack.pop()
+            d -= 1
+            outer.append(("a", tuple(parts)) if keys is None
+                         else ("o", tuple(sorted(zip(keys, parts)))))
+            parts = outer
+        else:
+            return parts[0]
 
 
 def ulength(s: str) -> int:
@@ -154,12 +207,26 @@ def _vacuous(v, d):
     return None
 
 
+def _dups(items: list, d: int) -> int:
+    """How many items of an array equal an earlier one under JSON deep
+    equality; ``d`` is the items' depth. Distinct strs are distinct JSON
+    strings, so an all-str array needs no canonical forms."""
+    for x in items:
+        if x.__class__ is not str:
+            return len(items) - len({canonical(x, d) for x in items})
+    return len(items) - len(set(items))
+
+
+#: the absent-key default of a property lookup
+_NO = object()
+
 #: the names generated source may use besides its own functions/constants
 _RUNTIME = {
     "_Err": Err, "_T": _TYPES, "_type_of": type_of, "_isint": is_integer,
     "_canon": canonical, "_json": json_repr, "_ulen": ulength, "_add": _add,
-    "_cat": _cat, "_at": _at, "_props_msg": ir.props_message,
+    "_cat": _cat, "_at": _at, "_props_msg": ir.props_message, "_dups": _dups, "_NO": _NO,
     "_unique_msg": ir.unique_message, "_deep": _deep, "_vacuous": _vacuous, "_re": re,
+    "_filterfalse": itertools.filterfalse,
 }
 
 
@@ -258,16 +325,129 @@ def _add_err(*args, **kw) -> str:
     return f"e = _add(e, {_err(*args, **kw)})"
 
 
+def _indent(lines: List[str], levels: int = 1) -> List[str]:
+    return ["    " * levels + line for line in lines]
+
+
+#: the JSON type each guarded check kind applies to (it passes on the others)
+_GUARDS = {
+    ir.Bound: "number", ir.MultipleOf: "number", ir.Pattern: "string",
+    ir.UniqueItems: "array", ir.Items: "array", ir.TupleItems: "array",
+    ir.Required: "object", ir.Properties: "object", ir.PatternProperties: "object",
+    ir.AdditionalProperties: "object", ir.Dependencies: "object",
+}
+
+
+def _guard(c: ir.Check) -> Optional[str]:
+    """The JSON type check ``c`` applies to; None: every type."""
+    return c.guard if isinstance(c, ir.Size) else _GUARDS.get(type(c))
+
+
+#: the class test of a fast path's values, by the JSON type it settles
+#: ('integer': the ints among the numbers)
+_CLASS_TESTS = {
+    "string": "{v}.__class__ is str", "integer": "{v}.__class__ is int",
+    "number": "({v}.__class__ is int or {v}.__class__ is float)",
+    "array": "{v}.__class__ is list", "object": "{v}.__class__ is dict",
+    "boolean": "{v}.__class__ is bool", "null": "{v} is None",
+}
+
+
+def _kind(node: ir.Node) -> Optional[Tuple[str, str]]:
+    """``(t, test)``: the JSON type ``t`` of the values ``node``'s fast path
+    takes and the key of their class test. A value that passes the test
+    passes the node's type check, and its guarded checks are those of
+    type ``t``. None when no one type is the node's."""
+    for c in node.checks:
+        if isinstance(c, ir.Type):
+            types = set(c.types)
+            if types == {"integer"}:
+                return "number", "integer"
+            if "number" in types:
+                types.discard("integer")
+            if len(types) == 1 and types <= _CLASS_TESTS.keys():
+                t = types.pop()
+                return t, t
+            return None
+    guards = {_guard(c) for c in node.checks} - {None}
+    if len(guards) == 1:
+        t = guards.pop()
+        return t, t
+    return None
+
+
+def _accepts(node: ir.Node) -> Optional[set]:
+    """The JSON types ``node``'s type check lets through; None: all."""
+    for c in node.checks:
+        if isinstance(c, ir.Type):
+            return {"number" if t == "integer" else t for t in c.types}
+    return None
+
+
+class _Fast(NamedTuple):
+    """A condition under which a node or check passes, as the terms of a
+    conjunction. ``exact``: it holds only then. ``raises``: it may raise
+    NestingError, which happens only where the node's own checks would
+    raise it too. No other condition raises."""
+
+    terms: Tuple[str, ...]
+    exact: bool
+    raises: bool
+
+    @property
+    def src(self) -> str:
+        return " and ".join(self.terms) or "True"
+
+
+_PASSES = _Fast((), True, False)
+
+#: the longest fast condition worth testing in place of a call
+_FAST_MAX = 400
+
+
+def _all(parts: List[_Fast]) -> _Fast:
+    terms = tuple(dict.fromkeys(t for p in parts for t in p.terms))
+    return _Fast(terms, all(p.exact for p in parts), any(p.raises for p in parts))
+
+
+def _any(parts: List[_Fast], exact: bool) -> _Fast:
+    return _Fast(("(" + " or ".join(p.src for p in parts) + ")",), exact,
+                 any(p.raises for p in parts))
+
+
 @dataclass
 class _Block:
-    """The source lines of one check, run when the value's JSON type
-    ``t`` is ``guard`` (always when None); ``descends`` if they call
-    children at depth ``d1``, ``typed`` if they read ``t`` unguarded."""
+    """The source lines of one check, run when the value's JSON type is
+    the check's guard; ``descends`` if they call children at depth
+    ``d1``."""
 
-    guard: Optional[str]
+    check: ir.Check
     lines: List[str]
     descends: bool = False
-    typed: bool = False
+
+    @property
+    def guard(self) -> Optional[str]:
+        return _guard(self.check)
+
+
+@dataclass
+class _Keys:
+    """What the key loops of one object node share. ``disjoint``: no
+    declared property name matches a pattern of the node, so patterns and
+    additionalProperties need only the keys outside ``known``; ``listed``
+    once a block has bound those keys, in document order, to ``u``."""
+
+    known: Tuple[str, ...] = ()
+    disjoint: bool = True
+    listed: bool = False
+
+    @classmethod
+    def of(cls, node: ir.Node) -> "_Keys":
+        known = next((tuple(k for k, _ in c.entries) for c in node.checks
+                      if isinstance(c, ir.Properties)), ())
+        patterns = next((tuple(rx for rx, _ in c.entries) for c in node.checks
+                         if isinstance(c, ir.PatternProperties)), ())
+        return cls(known, not any(rx.python.search(k) for rx in patterns for k in known))
 
 
 class _Generator:
@@ -277,6 +457,8 @@ class _Generator:
         self.n_funcs = 0
         self.consts: Dict[str, str] = {}  # literal expression -> name
         self.funcs: List[str] = []
+        self.keys = _Keys()  # of the object node being generated
+        self.busy: set = set()  # nodes whose fast condition is being built
 
     def run(self, root: ir.Node) -> str:
         root = self.node(root)
@@ -290,8 +472,8 @@ class _Generator:
         return name
 
     def regex(self, rx: ir.Regex) -> str:
-        """Name of the compiled regex constant of a pattern."""
-        return self.const(f"_re.compile({rx.python.pattern!r}, {rx.python.flags})")
+        """Name of the ``search`` method of a pattern's compiled regex."""
+        return self.const(f"_re.compile({rx.python.pattern!r}, {rx.python.flags}).search")
 
     def node(self, node: ir.Node) -> Optional[str]:
         """Name of the function validating ``node``; None if it never fails."""
@@ -301,16 +483,34 @@ class _Generator:
             return self.memo[node]  # done, or in progress (a recursive $ref)
         name = self.memo[node] = f"f{self.n_funcs}"
         self.n_funcs += 1
+        outer, self.keys = self.keys, _Keys.of(node)
         blocks = [b for b in (self.HANDLERS[type(c)](self, c) for c in node.checks)
                   if b is not None]
+        self.keys = outer
         if not blocks:
             # later callers skip the node; a recursive $ref met while it
             # was in progress may already call it by name
             self.memo[node] = None
             self.funcs.append(f"{name} = _vacuous\n")
             return None
-        lines = [f"def {name}(v, d):", "    e = None"]
-        if any(b.guard or b.typed for b in blocks):
+        lines = [f"def {name}(v, d):"]
+        fast, kind = self.fast(node, "v", "d"), _kind(node)
+        if fast is not None:
+            lines.append(f"    if {fast.src}: return None")
+        elif kind is not None:
+            # a value of the kind's class passes the type check, and only
+            # the checks of its type apply: no type lookup and no guards
+            own = [b for b in blocks
+                   if not isinstance(b.check, ir.Type) and b.guard in (None, kind[0])]
+            body = ["e = None"]
+            if any(b.descends for b in own):
+                body += ["d1 = d + 1", f"if d1 > {MAX_DEPTH}: _deep()"]
+            for b in own:
+                body += b.lines
+            lines.append(f"    if {_CLASS_TESTS[kind[1]].format(v='v')}:")
+            lines += _indent(body + ["return e"], 2)
+        lines.append("    e = None")
+        if any(b.guard or isinstance(b.check, ir.Type) for b in blocks):
             lines.append("    t = _T.get(v.__class__) or _type_of(v)")
         for guard, group in itertools.groupby(blocks, key=lambda b: b.guard):
             group, pad = list(group), "    "
@@ -324,6 +524,116 @@ class _Generator:
         self.funcs.append("\n".join(lines) + "\n")
         return name
 
+    def call(self, node: ir.Node, v: str, d: str) -> Optional[str]:
+        """Expression of ``node``'s errors on the value ``v`` at depth
+        ``d``: a call of its function, skipped when its fast condition
+        holds. None for a node that never fails."""
+        fn = self.node(node)
+        if fn is None:
+            return None
+        fast = self.fast(node, v, d)
+        return f"{fn}({v}, {d})" if fast is None else f"None if {fast.src} else {fn}({v}, {d})"
+
+    # ------------------------------------------------- fast conditions
+
+    def fast(self, node: ir.Node, v: str, d: str) -> Optional[_Fast]:
+        """A condition on the value ``v`` at depth ``d`` under which
+        ``node`` passes, built from the class test of its kind and the
+        conditions of its checks; None when a check has none. A node
+        tests it first and returns at once, and a caller tests it before
+        calling the node."""
+        if node is ir.ANY:
+            return _PASSES
+        kind = _kind(node)
+        if node in self.busy or kind is None and any(
+                isinstance(c, ir.Type) or _guard(c) for c in node.checks):
+            return None
+        self.busy.add(node)
+        parts = [_Fast((_CLASS_TESTS[kind[1]].format(v=v),), False, False)] if kind else []
+        for c in node.checks:
+            if not isinstance(c, ir.Type) and _guard(c) in (None, kind and kind[0]):
+                parts.append(self.ok(c, v, d))
+        self.busy.discard(node)
+        if None in parts:
+            return None
+        fast = _all(parts)
+        return fast if len(fast.src) <= _FAST_MAX else None
+
+    def ok(self, c: ir.Check, v: str, d: str) -> Optional[_Fast]:
+        """A condition on the value ``v`` at depth ``d`` under which check
+        ``c`` passes, its guard holding; None when there is none cheap."""
+        if isinstance(c, ir.Enum):
+            allowed = self.const(f"frozenset(map(_canon, {_lit(list(c.values))}))")
+            # a str's canonical form is ('s', str): test strs directly
+            strs = self.const(f"frozenset({_lit([x for x in c.values if isinstance(x, str)])})")
+            return _Fast((f"({v} in {strs} if {v}.__class__ is str "
+                          f"else _canon({v}, {d}) in {allowed})",), True, True)
+        if isinstance(c, ir.Bound):
+            op = (">" if c.is_min else "<") + ("" if c.exclusive else "=")
+            src = f"{v} {op} {_lit(c.number)}"
+        elif isinstance(c, ir.MultipleOf):
+            src = f"({v} / {_lit(c.divisor)}) % 1 == 0"  # float semantics, IEEE754 like JS
+            if isinstance(c.divisor, int):
+                src = f"({v} % {_lit(c.divisor)} == 0 if isinstance({v}, int) else {src})"
+        elif isinstance(c, ir.Size):
+            # an ASCII string is its own NFC form
+            n = (f"(len({v}) if {v}.isascii() else _ulen({v}))" if c.guard == "string"
+                 else f"len({v})")
+            src = f"{n} {'>=' if c.is_min else '<='} {_lit(c.limit)}"
+        elif isinstance(c, ir.Pattern):
+            src = f"{self.regex(c.regex)}({v})"
+        elif isinstance(c, ir.Required):
+            return _Fast(tuple(f"{_lit(name)} in {v}" for name in c.names), True, False)
+        elif isinstance(c, ir.UniqueItems):
+            return _Fast((f"not _dups({v}, {d} + 1)",), True, True) if c.unique else _PASSES
+        elif isinstance(c, ir.AllOf):
+            parts = [self.fast(n, v, d) for n in c.nodes if self.node(n) is not None]
+            return None if None in parts else _all(parts)
+        elif isinstance(c, ir.AnyOf):
+            return self.any_ok(c, v, d)
+        elif isinstance(c, ir.OneOf):
+            return self.one_ok(c, v, d)
+        elif isinstance(c, ir.Not) and self.node(c.node) is not None:
+            inner = self.fast(c.node, v, d)
+            if inner is None or not inner.exact:
+                return None
+            return _Fast((f"not ({inner.src})",), True, inner.raises)
+        else:
+            return None
+        return _Fast((src,), True, False)
+
+    def any_ok(self, c: ir.AnyOf, v: str, d: str) -> Optional[_Fast]:
+        """Any branch's condition. The kernel tries a branch only when the
+        ones before it failed, so a condition that may raise joins only
+        behind exact ones."""
+        if not c.nodes or any(self.node(n) is None for n in c.nodes):
+            return _PASSES  # vacuous truth, as the kernel's check
+        parts, settled = [], True
+        for n in c.nodes:
+            fast = self.fast(n, v, d)
+            if fast is not None and (settled or not fast.raises):
+                parts.append(fast)
+            settled = settled and fast is not None and fast.exact
+        return _any(parts, settled) if parts else None
+
+    def one_ok(self, c: ir.OneOf, v: str, d: str) -> Optional[_Fast]:
+        """The condition of a branch whose kind no other branch's type
+        check lets through: the value passes that branch and fails the
+        rest. Such a value fails every other branch, so the kernel tries
+        every branch on it, and a condition that may raise raises only
+        where the kernel's checks would."""
+        if any(self.node(n) is None for n in c.nodes):
+            return None
+        accepts = [_accepts(n) for n in c.nodes]
+        parts = []
+        for i, n in enumerate(c.nodes):
+            kind, fast = _kind(n), self.fast(n, v, d)
+            if fast is None or kind is None:
+                continue
+            if all(j == i or a is not None and kind[0] not in a for j, a in enumerate(accepts)):
+                parts.append(fast)
+        return _any(parts, False) if parts else None
+
     # -------------------------------------------------------------- checks
     # each: the block of one IR check, None for a check that never fails
 
@@ -331,141 +641,129 @@ class _Generator:
         ok = f"t in {self.const(f'frozenset({_lit(list(c.types))})')}"
         if c.integer and "number" not in c.types:
             ok += " or (t == 'number' and _isint(v))"
-        return _Block(None, [f"if not ({ok}):",
-                             "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
-                                               repr(c.expected), "t")], typed=True)
+        return _Block(c, [f"if not ({ok}):",
+                          "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
+                                            repr(c.expected), "t")])
 
     def enum(self, c: ir.Enum) -> _Block:
-        allowed = self.const(f"frozenset(map(_canon, {_lit(list(c.values))}))")
-        # a str's canonical form is ('s', str): test strs directly
-        strs = self.const(f"frozenset({_lit([x for x in c.values if isinstance(x, str)])})")
-        miss = f"v not in {strs} if v.__class__ is str else _canon(v) not in {allowed}"
-        return _Block(None, [f"if {miss}:",
-                             "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
-                                               repr(c.expected), "_json(v)")])
+        return _Block(c, [f"if not {self.ok(c, 'v', 'd').src}:",
+                          "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
+                                            repr(c.expected), "_json(v)")])
 
-    @staticmethod
-    def _single(guard: str, ok: str, c: ir.Check) -> _Block:
-        """A check failing with its fixed message when ``ok`` is false."""
-        return _Block(guard, [f"if not {ok}:",
-                              "    " + _add_err(SINGLE, c.keyword, repr(c.message))])
-
-    def bound(self, c: ir.Bound) -> _Block:
-        op = (">" if c.is_min else "<") + ("" if c.exclusive else "=")
-        return self._single("number", f"v {op} {_lit(c.number)}", c)
-
-    def multiple_of(self, c: ir.MultipleOf) -> _Block:
-        ok = f"(v / {_lit(c.divisor)}) % 1 == 0"  # float semantics, IEEE754 like JS
-        if isinstance(c.divisor, int):
-            ok = f"(v % {_lit(c.divisor)} == 0 if isinstance(v, int) else {ok})"
-        return self._single("number", ok, c)
-
-    def size(self, c: ir.Size) -> _Block:
-        n = "_ulen(v)" if c.guard == "string" else "len(v)"
-        return self._single(c.guard, f"{n} {'>=' if c.is_min else '<='} {_lit(c.limit)}", c)
-
-    def pattern(self, c: ir.Pattern) -> _Block:
-        return self._single("string", f"{self.regex(c.regex)}.search(v)", c)
+    def single(self, c: ir.Check) -> _Block:
+        """A check failing with its fixed message when its condition fails."""
+        return _Block(c, [f"if not {self.ok(c, 'v', 'd').src}:",
+                          "    " + _add_err(SINGLE, c.keyword, repr(c.message))])
 
     def unique_items(self, c: ir.UniqueItems) -> Optional[_Block]:
         if not c.unique:
             return None
-        return _Block("array", [
-            "n = len(v) - len({_canon(x) for x in v})",
-            "if n:",
-            "    " + _add_err(SINGLE, c.keyword, "_unique_msg(n)")])
+        return _Block(c, ["n = _dups(v, d + 1)", "if n:",
+                          "    " + _add_err(SINGLE, c.keyword, "_unique_msg(n)")])
 
     def required(self, c: ir.Required) -> Optional[_Block]:
         lines = []
         for name, msg in zip(c.names, c.messages):
             lines += [f"if {_lit(name)} not in v:",
                       "    " + _add_err(SINGLE, c.keyword, repr(msg))]
-        return _Block("object", lines) if lines else None
+        return _Block(c, lines) if lines else None
 
     def properties(self, c: ir.Properties) -> Optional[_Block]:
         lines = []
         for key, sub in c.entries:
-            fn = self.node(sub)
-            if fn is not None:  # absent keys vacuously pass
-                lines += [f"if {_lit(key)} in v:",
-                          f"    r = {fn}(v[{_lit(key)}], d1)",
-                          f"    if r: e = _cat(e, _at(r, {_lit(key)}))"]
-        return _Block("object", lines, True) if lines else None
+            call, k = self.call(sub, "x", "d1"), _lit(key)
+            if call is not None:  # absent keys vacuously pass
+                lines += [f"x = v.get({k}, _NO)", "if x is not _NO:", f"    r = {call}",
+                          f"    if r: e = _cat(e, _at(r, {k}))"]
+        return _Block(c, lines, True) if lines else None
+
+    def undeclared(self) -> List[str]:
+        """The line binding ``u`` to the keys outside the declared names,
+        in document order, unless a block before bound it."""
+        if self.keys.listed:
+            return []
+        self.keys.listed = True
+        known = self.const(f"frozenset({_lit(list(self.keys.known))})")
+        return [f"u = () if v.keys() <= {known} else "
+                f"[*_filterfalse({self.const(known + '.__contains__')}, v)]"]
 
     def pattern_properties(self, c: ir.PatternProperties) -> Optional[_Block]:
-        lines = []
-        for regex, sub in c.entries:
-            rx, fn = self.regex(regex), self.node(sub)
-            if fn is not None:
-                lines += [f"for k in filter({rx}.search, v):",
-                          f"    r = {fn}(v[k], d1)",
-                          "    if r: e = _cat(e, _at(r, k))"]
-        return _Block("object", lines, True) if lines else None
+        entries = [(self.regex(rx), self.call(sub, "x", "d1")) for rx, sub in c.entries]
+        entries = [(rx, call) for rx, call in entries if call is not None]
+        if not entries:
+            return None
+        if not self.keys.disjoint:  # a declared name may match: every key
+            lines = []
+            for rx, call in entries:
+                lines += [f"for k in filter({rx}, v):"] + _indent(
+                    ["x = v[k]", f"r = {call}", "if r: e = _cat(e, _at(r, k))"])
+            return _Block(c, lines, True)
+        lines = self.undeclared()
+        for rx, call in entries:  # patterns outer, as the reference
+            lines += ["for k in u:", f"    if {rx}(k):"] + _indent(
+                ["x = v[k]", f"r = {call}", "if r: e = _cat(e, _at(r, k))"], 2)
+        return _Block(c, lines, True)
 
     def additional_properties(self, c: ir.AdditionalProperties) -> Optional[_Block]:
         if c.additional is True:
             return None
-        known = self.const(f"frozenset({_lit(list(c.known))})")
-        extra = f"k not in {known}" + "".join(
-            f" and not {self.regex(p)}.search(k)" for p in c.patterns)
-        if c.additional is False:
-            return _Block("object", [
-                f"if not v.keys() <= {known}:",
-                f"    a = [k for k in v if {extra}]",
-                "    if a: " + _add_err(SINGLE, c.keyword, "_props_msg('found', a)")])
-        fn = self.node(c.additional)
-        if fn is None:
+        call = None if c.additional is False else self.call(c.additional, "x", "d1")
+        if c.additional is not False and call is None:
             return None
-        # object schema: validate each additional prop via focusValue
-        return _Block("object", [
-            f"if not v.keys() <= {known}:",
-            "    a = c = None",
-            "    for k in v:",
-            f"        if {extra}:",
-            f"            r = {fn}(v[k], d1)",
-            "            if r:",
-            "                a = _add(a, k)",
-            "                c = _cat(c, _at(r, k))",
-            "    if a: " + _add_err(COMPOUND, c.keyword, "_props_msg('invalid', a)",
-                                    children="c")], True)
+        if self.keys.disjoint:
+            head, keys = self.undeclared(), "u"
+        else:
+            known = self.const(f"frozenset({_lit(list(c.known))})")
+            head = [f"if not v.keys() <= {known}:"]
+            keys = f"_filterfalse({self.const(known + '.__contains__')}, v)"
+        for p in c.patterns:
+            keys = f"_filterfalse({self.regex(p)}, {keys})"
+        if call is None:
+            body = [f"a = {keys}" if keys == "u" else f"a = [*{keys}]",
+                    "if a: " + _add_err(SINGLE, c.keyword, "_props_msg('found', a)")]
+        else:
+            # object schema: validate each additional prop via focusValue
+            body = ["a = c = None", f"for k in {keys}:"] + _indent([
+                "x = v[k]", f"r = {call}", "if r:", "    a = _add(a, k)",
+                "    c = _cat(c, _at(r, k))"])
+            body.append("if a: " + _add_err(COMPOUND, c.keyword, "_props_msg('invalid', a)",
+                                             children="c"))
+        return _Block(c, head + (body if self.keys.disjoint else _indent(body)), call is not None)
 
     def items(self, c: ir.Items) -> Optional[_Block]:
-        fn = self.node(c.node)
-        if fn is None:
+        call = self.call(c.node, "x", "d1")
+        if call is None:
             return None
-        return _Block("array", ["for i, x in enumerate(v):",
-                                f"    r = {fn}(x, d1)",
-                                "    if r: e = _cat(e, _at(r, i))"], True)
+        return _Block(c, ["for i, x in enumerate(v):", f"    r = {call}",
+                          "    if r: e = _cat(e, _at(r, i))"], True)
 
     def tuple_items(self, c: ir.TupleItems) -> Optional[_Block]:
         lines = []
         for i, sub in enumerate(c.nodes):
-            fn = self.node(sub)
-            if fn is not None:
-                lines += [f"if len(v) > {i}:",
-                          f"    r = {fn}(v[{i}], d1)",
+            call = self.call(sub, "x", "d1")
+            if call is not None:
+                lines += [f"if len(v) > {i}:", f"    x = v[{i}]", f"    r = {call}",
                           f"    if r: e = _cat(e, _at(r, {i}))"]
         n = len(c.nodes)
         if c.additional is False:
             lines += [f"for i in range({n}, len(v)):",
                       "    " + _add_err(SINGLE, c.keyword, repr(c.message), "(i,)")]
         elif c.additional is not True:
-            fn = self.node(c.additional)
-            if fn is not None:
-                lines += [f"for i in range({n}, len(v)):",
-                          f"    r = {fn}(v[i], d1)",
+            call = self.call(c.additional, "x", "d1")
+            if call is not None:
+                lines += [f"for i in range({n}, len(v)):", "    x = v[i]", f"    r = {call}",
                           "    if r: e = _cat(e, _at(r, i))"]
-        return _Block("array", lines, True) if lines else None
+        return _Block(c, lines, True) if lines else None
 
     def dependencies(self, c: ir.Dependencies) -> Optional[_Block]:
         lines = []
         for dep in c.entries:
             key = _lit(dep.key)
             if isinstance(dep, ir.DependentSchema):
-                fn = self.node(dep.node)
-                if fn is not None:  # whole value re-validated, same path
+                call = self.call(dep.node, "v", "d")
+                if call is not None:  # whole value re-validated, same path
                     lines += [f"if {key} in v:",
-                              f"    r = {fn}(v, d)",
+                              f"    r = {call}",
                               "    if r: " + _add_err(COMPOUND, c.keyword, repr(dep.message),
                                                       children="r")]
             elif dep.names:
@@ -477,53 +775,53 @@ class _Generator:
                 lines += ["    if m: " + _add_err(COMPOUND, c.keyword,
                                                   f"{one} if len(m) == 1 else {many}",
                                                   children="m")]
-        return _Block("object", lines) if lines else None
+        return _Block(c, lines) if lines else None
 
     def all_of(self, c: ir.AllOf) -> Optional[_Block]:
-        fns = [fn for fn in map(self.node, c.nodes) if fn is not None]
-        if not fns:
+        calls = [call for call in (self.call(n, "v", "d") for n in c.nodes) if call is not None]
+        if not calls:
             return None
         lines = ["c = None"]
-        for fn in fns:
-            lines += [f"r = {fn}(v, d)", "if r: c = _cat(c, r)"]
+        for call in calls:
+            lines += [f"r = {call}", "if r: c = _cat(c, r)"]
         lines.append("if c: " + _add_err(COMPOUND, c.keyword, repr(c.message), children="c"))
-        return _Block(None, lines)
+        return _Block(c, lines)
 
     def any_of(self, c: ir.AnyOf) -> Optional[_Block]:
-        fns = [self.node(n) for n in c.nodes]
-        if not fns or None in fns:  # vacuous truth (reference src/v4/anyOf.js:25)
+        calls = [self.call(n, "v", "d") for n in c.nodes]
+        if not calls or None in calls:  # vacuous truth (reference src/v4/anyOf.js:25)
             return None
         # c holds the failures so far; None once a branch passed
-        lines = [f"c = {fns[0]}(v, d)"]
-        for fn in fns[1:]:
-            lines += ["if c:", f"    r = {fn}(v, d)", "    c = _cat(c, r) if r else None"]
+        lines = [f"c = {calls[0]}"]
+        for call in calls[1:]:
+            lines += ["if c:", f"    r = {call}", "    c = _cat(c, r) if r else None"]
         lines.append("if c: " + _add_err(COMPOUND, c.keyword, repr(c.message), children="c"))
-        return _Block(None, lines)
+        return _Block(c, lines)
 
     def one_of(self, c: ir.OneOf) -> _Block:
-        fns = [self.node(n) for n in c.nodes]
+        calls = [self.call(n, "v", "d") for n in c.nodes]
         # n counts passing branches; past two the verdict cannot change
-        lines = ["c = None", f"n = {sum(fn is None for fn in fns)}"]
-        for fn in fns:
-            if fn is not None:
-                lines += ["if n < 2:", f"    r = {fn}(v, d)",
+        lines = ["c = None", f"n = {sum(call is None for call in calls)}"]
+        for call in calls:
+            if call is not None:
+                lines += ["if n < 2:", f"    r = {call}",
                           "    if r: c = _cat(c, r)", "    else: n += 1"]
         lines += ["if n == 0: " + _add_err(COMPOUND, c.keyword, repr(c.message),
                                            children="c or []"),
                   "elif n > 1: " + _add_err(SINGLE, c.keyword, repr(c.too_many))]
-        return _Block(None, lines)
+        return _Block(c, lines)
 
     def not_(self, c: ir.Not) -> _Block:
-        fn = self.node(c.node)
+        call = self.call(c.node, "v", "d")
         lines = [_add_err(SINGLE, c.keyword, repr(c.message))]
-        if fn is not None:
-            lines = [f"if not {fn}(v, d):", "    " + lines[0]]
-        return _Block(None, lines)
+        if call is not None:
+            lines = [f"if not ({call}):", "    " + lines[0]]
+        return _Block(c, lines)
 
     #: IR check kind -> the method generating its block
     HANDLERS: Dict[type, Callable] = {
-        ir.Type: type_, ir.Enum: enum, ir.Bound: bound, ir.MultipleOf: multiple_of,
-        ir.Size: size, ir.Pattern: pattern, ir.UniqueItems: unique_items,
+        ir.Type: type_, ir.Enum: enum, ir.Bound: single, ir.MultipleOf: single,
+        ir.Size: single, ir.Pattern: single, ir.UniqueItems: unique_items,
         ir.Required: required, ir.Properties: properties,
         ir.PatternProperties: pattern_properties,
         ir.AdditionalProperties: additional_properties, ir.Items: items,

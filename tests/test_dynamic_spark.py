@@ -71,6 +71,22 @@ def test_malformed_json_quarantined(spark):
     assert by_id[4]["errors"][0]["keyword"] == "$parse"
 
 
+def test_document_not_utf8_is_a_parse_row(spark):
+    """A document whose bytes are not UTF-8 (here a string cast from
+    binary) is one '$parse' row showing its first bytes with replacement
+    characters; the other documents of its batch validate as usual."""
+    df = spark.createDataFrame([(1, "22FF22"), (2, "227822"), (3, "7B22612231")],
+                               "id: long, hex: string")
+    df = df.select("id", F.unhex("hex").cast("string").alias("doc"))
+    by_id = {r["id"]: r for r in _dynamic(df, {"type": "string"}).collect()}
+    (row,) = by_id[1]["errors"]
+    assert (row["keyword"], row["path"], row["depth"]) == ("$parse", [], 0)
+    assert row["message"] == 'malformed JSON: "\ufffd"'
+    assert row["actual"] == '"\ufffd"'
+    assert by_id[2]["verdict"] is True
+    assert [e["keyword"] for e in by_id[3]["errors"]] == ["$parse"]
+
+
 def test_deep_document_quarantined(spark):
     """A well-formed document nested past the kernel's recursion budget
     yields one '$depth' row instead of failing the task; a shallower one
