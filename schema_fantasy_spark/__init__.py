@@ -13,8 +13,7 @@ those semantics two ways:
   JSON documents (conformance parity with the reference's test suite).
 
 Plus ENGINE-NEW table-scope checks (column stats, uniqueness, referential
-integrity, distribution drift), checkpoint/resume manifests, and
-Structured Streaming validation.
+integrity, distribution drift) and checkpoint/resume manifests.
 """
 
 from schema_fantasy_spark.errors import Err, render_error

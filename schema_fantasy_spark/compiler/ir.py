@@ -14,11 +14,15 @@ Python kernel, ``columnar.py`` and ``variant.py`` into Column expressions.
 Nodes are memoized per ``(base, id(schema object))``, so a recursive
 schema lowers to a cyclic graph; each backend keeps its own policy for a
 cycle (mutually recursive kernel functions, a columnar compile error, a
-variant unroll to ``max_depth``). Unknown keywords and the non-predicates
-('default', 'definitions', 'format', 'id', ...) lower to nothing
-(reference index.js:73, src/predicate.js:34-59); a schema that is not an
-object lowers to :data:`ANY`; ``$ref`` beside other keywords replaces the
-whole node by its target (draft-4 ignores the siblings).
+variant unroll to ``max_depth``). A cycle that checks the same value
+again (through allOf, anyOf, oneOf, not or a schema dependency, never
+descending into the value) would never end, so ``lower`` raises
+CyclicRefError for it, as for a bare ``$ref`` chain. Unknown keywords
+and the non-predicates ('default', 'definitions', 'format', 'id', ...)
+lower to nothing (reference index.js:73, src/predicate.js:34-59); a
+schema that is not an object lowers to :data:`ANY`; ``$ref`` beside
+other keywords replaces the whole node by its target (draft-4 ignores
+the siblings).
 
 Malformed keyword values raise :class:`SchemaCompileError` here, so every
 mode refuses the same schemas. Pinned divergence: a non-boolean
@@ -35,7 +39,7 @@ from dataclasses import dataclass, fields
 from typing import (Any, Callable, ClassVar, Dict, Iterator, List, NamedTuple, Optional,
                     Tuple, Union)
 
-from schema_fantasy_spark.compiler.linker import resolve_ref
+from schema_fantasy_spark.compiler.linker import CyclicRefError, resolve_ref
 from schema_fantasy_spark.compiler.regex_dialect import (
     _JS_SPACE,
     RegexDialectError,
@@ -405,7 +409,35 @@ def reachable(root: Node) -> Iterator[Node]:
 def lower(schema: Any, refs: Optional[Dict[str, Any]] = None, base: str = "") -> Node:
     """The IR of ``schema``, its $refs resolved against ``refs``. Raises
     CyclicRefError / UnknownResourceError / SchemaCompileError."""
-    return _Lowering(refs or {}).node(base, schema, schema, "#")
+    root = _Lowering(refs or {}).node(base, schema, schema, "#")
+    _refuse_same_value_cycles(root)
+    return root
+
+
+def _same_value(node: Node) -> Iterator[Node]:
+    """The nodes that ``node``'s checks apply to the value ``node`` checks."""
+    for c in node.checks:
+        if isinstance(c, (AllOf, AnyOf, OneOf)):
+            yield from c.nodes
+        elif isinstance(c, Not):
+            yield c.node
+        elif isinstance(c, Dependencies):
+            yield from (e.node for e in c.entries if isinstance(e, DependentSchema))
+
+
+def _refuse_same_value_cycles(root: Node) -> None:
+    """Raise CyclicRefError if a node reaches itself through
+    ``_same_value`` edges alone: that cycle checks one value forever."""
+    for node in reachable(root):
+        seen, todo = set(), list(_same_value(node))
+        while todo:
+            kid = todo.pop()
+            if kid is node:
+                raise CyclicRefError(f"$ref cycle at {node.path!r} checks the same value "
+                                     "again without descending into it")
+            if kid not in seen:
+                seen.add(kid)
+                todo.extend(_same_value(kid))
 
 
 class _Lowering:

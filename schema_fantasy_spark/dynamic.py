@@ -218,8 +218,6 @@ def _ensure_parallelism(df: DataFrame, keys: tuple = ()) -> DataFrame:
     on by default so retried tasks reproduce their row assignment — a
     hash key is retry-deterministic for free) — measured 6.7s vs 3.2s
     for a 6M-row aggregate at the r9 10x replica."""
-    if df.isStreaming:
-        return df  # stream parallelism comes from the source
     min_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_parts:
         if keys:

@@ -143,8 +143,7 @@ class ValidationEngine:
     def partition_verdicts(validated: DataFrame, partition_cols: Iterable[str]) -> DataFrame:
         """Per-partition pass/fail + counts (partial+final hash agg; the
         only shuffle is on the partition keys). Every grouped verdict goes
-        through here: per day, per host (``scale.host_of``) and per
-        event-time window (``streaming.windowed_verdicts``)."""
+        through here: per day and per host (``scale.host_of``)."""
         partition_cols = list(partition_cols)
         keys = _quoted(partition_cols)
         return validated.groupBy(*partition_cols).agg(*verdict_rollup()).selectExpr(

@@ -155,17 +155,6 @@ def duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     )
 
 
-def uniqueness_violations(
-    df: DataFrame, key_cols: Sequence[str], select_cols: Optional[Sequence[str]] = None
-) -> DataFrame:
-    """All rows participating in a duplicated key: groupBy-count +
-    semi-join back (cheaper at scale than a full window over every row —
-    SURVEY.md §2.4 'window functions')."""
-    dups = duplicate_keys(df, key_cols).select(*key_cols)
-    out = df.join(dups, on=list(key_cols), how="left_semi")
-    return out.select(*select_cols) if select_cols else out
-
-
 def uniqueness_summary(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """One-row verdict for a uniqueness constraint over the rows with
     all key columns non-null (``n_rows`` counts those rows)."""

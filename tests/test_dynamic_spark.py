@@ -172,24 +172,3 @@ def test_nan_infinity_docs_quarantined_in_both_modes(spark):
         assert var[i]["errors"][0]["keyword"] == "$parse"
     assert dyn[3]["verdict"] is True and var[3]["verdict"] is True
 
-
-def test_deterministic_sample_engine_invariant(spark):
-    """The md5-nibble sample keeps EXACTLY the rows an independent Python
-    md5 predicts (engine/partitioning invariance), and rates are
-    monotonic in the nibble threshold."""
-    import hashlib
-
-    from schema_fantasy_spark import scale
-
-    df = spark.createDataFrame([(i,) for i in range(400)], "doc_id: long")
-    got = sorted(r["doc_id"] for r in scale.deterministic_sample(df, "doc_id", 4).collect())
-    want = sorted(
-        i for i in range(400)
-        if int(hashlib.md5(str(i).encode()).hexdigest()[0], 16) < 4
-    )
-    assert got == want
-    n16 = scale.deterministic_sample(df, "doc_id", 16).count()
-    n0 = scale.deterministic_sample(df, "doc_id", 0).count()
-    assert (n16, n0) == (400, 0)
-    with pytest.raises(ValueError):
-        scale.deterministic_sample(df, "doc_id", 17)

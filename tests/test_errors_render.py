@@ -212,11 +212,45 @@ def test_unknown_resource_raises():
         compile_schema({"$ref": "http://nowhere/void.json"})
 
 
-def test_cyclic_ref_chain_raises():
-    # reference test/test-smoke.js:194-226 semantics
+@pytest.mark.parametrize("schema", [
+    # a bare chain (reference test/test-smoke.js:194-226 semantics)
+    {"definitions": {"a": {"$ref": "#/definitions/b"}, "b": {"$ref": "#/definitions/a"}},
+     "$ref": "#/definitions/a"},
+    # in place: the cycle checks the same value again through a combinator
+    {"allOf": [{"$ref": "#"}]},
+    {"not": {"$ref": "#"}},
+    {"anyOf": [{"type": "string"}, {"$ref": "#"}]},
+    {"oneOf": [{"type": "string"}, {"$ref": "#"}]},
+    {"dependencies": {"a": {"$ref": "#"}}},
+    {"definitions": {"a": {"allOf": [{"$ref": "#/definitions/b"}]},
+                     "b": {"allOf": [{"$ref": "#/definitions/a"}]}},
+     "properties": {"x": {"$ref": "#/definitions/a"}}},
+], ids=["chain", "allOf", "not", "anyOf", "oneOf", "dependencies", "two-definitions"])
+def test_cyclic_ref_raises_in_every_mode(schema):
+    from schema_fantasy_spark.columnar import compile_columnar
+    from schema_fantasy_spark.engine import ValidationEngine
+
     with pytest.raises(CyclicRefError):
-        compile_schema(
-            {"definitions": {"a": {"$ref": "#/definitions/b"},
-                             "b": {"$ref": "#/definitions/a"}},
-             "$ref": "#/definitions/a"}
-        )
+        compile_schema(schema)
+    with pytest.raises(CyclicRefError):
+        compile_columnar(schema)
+    with pytest.raises(CyclicRefError):
+        ValidationEngine(schema, mode="dynamic")
+
+
+@pytest.mark.parametrize("schema,doc,rendered", [
+    ({"properties": {"a": {"$ref": "#"}}, "required": ["b"]}, {"a": {"a": {"b": 1}}},
+     ["a: missing b", "missing b"]),
+    ({"items": {"$ref": "#"}, "maxItems": 1}, [[[1, 2]]], ["0/0: more than 1 items"]),
+    ({"additionalProperties": {"$ref": "#"}, "type": "object"}, {"a": {"b": 1}},
+     ["additional property invalid: a: 1 error found\n"
+      "a: additional property invalid: b: 1 error found\n"
+      "a/b: Invalid type: expected object, was number"]),
+    ({"patternProperties": {"^a": {"$ref": "#"}}, "minProperties": 1}, {"a": {"aa": {}}},
+     ["a/aa: less than 1 properties"]),
+], ids=["properties", "items", "additionalProperties", "patternProperties"])
+def test_ref_to_root_below_a_value_compiles(schema, doc, rendered):
+    """A $ref to the root that descends into the value first recurses
+    only as deep as the document."""
+    errs = compile_schema(schema).validate(doc)
+    assert [render_error(e) for e in errs] == rendered

@@ -1,15 +1,12 @@
 """Resume-from-manifest (kill after K partitions, rerun, zero recompute,
-identical output — SURVEY.md §5.2 tier 3) and Structured Streaming
-validation tests."""
+identical output — SURVEY.md §5.2 tier 3) and the verdict rollup that
+every consumer shares."""
 
-import json
 import os
-import time
 
 import pyspark.sql.functions as F
 import pytest
 
-from schema_fantasy_spark import streaming as st
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 from schema_fantasy_spark.manifest import (
     NULL_PARTITION, PartitionManifest, ResumableValidationRun,
@@ -130,108 +127,6 @@ def test_manifest_atomic_entries(tmp_path):
     assert s["n_partitions"] == 1 and not s["all_pass"]
 
 
-def test_streaming_validation(spark, tmp_path):
-    # file-source stream over a parquet snapshot; availableNow drains it
-    src = str(tmp_path / "src")
-    pages(spark, 2000).write.parquet(src)
-    batch_schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(batch_schema).parquet(src)
-    validated = ValidationEngine(PAGES_SCHEMA).apply(stream)
-    assert validated.isStreaming
-
-    metrics = []
-    q = st.write_validated(
-        validated,
-        violations_path=str(tmp_path / "viol"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        id_cols=("id",),
-        on_batch=lambda bid, m: metrics.append(m),
-    )
-    q.awaitTermination(120)
-    assert metrics and sum(m["n_rows"] for m in metrics) == 2000
-
-    # streamed violations == batch violations
-    batch_viol = ValidationEngine.violations(
-        ValidationEngine(PAGES_SCHEMA).apply(spark.read.parquet(src)), ["id"]
-    )
-    got = {(r["id"], r["keyword"]) for r in spark.read.parquet(str(tmp_path / "viol")).collect()}
-    want = {(r["id"], r["keyword"]) for r in batch_viol.collect()}
-    assert got == want
-
-    # restart with same checkpoint: nothing re-processed
-    metrics2 = []
-    q2 = st.write_validated(
-        validated,
-        violations_path=str(tmp_path / "viol"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        id_cols=("id",),
-        on_batch=lambda bid, m: metrics2.append(m),
-    )
-    q2.awaitTermination(120)
-    assert sum(m["n_rows"] for m in metrics2) == 0
-
-
-def test_write_validated_is_one_job_per_batch(spark, tmp_path):
-    """Each micro-batch is ONE Spark job: the verdict metrics ride the
-    violations write as an observe node, with no persist and no second
-    aggregate job. A stream's jobs run in the job group of its run id."""
-    src = str(tmp_path / "src")
-    pages(spark, 1500).repartition(3).write.parquet(src)
-    stream = (spark.readStream.schema(spark.read.parquet(src).schema)
-              .option("maxFilesPerTrigger", 1).parquet(src))
-    metrics = []
-    q = st.write_validated(
-        ValidationEngine(PAGES_SCHEMA).apply(stream),
-        violations_path=str(tmp_path / "viol"),
-        checkpoint_path=str(tmp_path / "ckpt"),
-        id_cols=("id",),
-        on_batch=lambda bid, m: metrics.append(m),
-    )
-    q.awaitTermination(120)
-    assert len(metrics) == 3 and sum(m["n_rows"] for m in metrics) == 1500
-    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
-    assert len(jobs) == len(metrics)
-
-
-def test_windowed_verdicts_shape(spark):
-    # windowed aggregation plan compiles on a stream (no execution needed
-    # beyond schema analysis) and on the equivalent batch frame
-    df = pages(spark, 1000)
-    batch = st.windowed_verdicts(ValidationEngine(PAGES_SCHEMA).apply(df))
-    rows = batch.collect()
-    assert rows and all(r["n_rows"] > 0 for r in rows)
-    assert {c for c in batch.columns} == {
-        "window_start", "window_end", "n_rows", "n_invalid", "n_errors", "pass"
-    }
-
-
-def test_windowed_verdicts_append_mode_emits_closed_windows(spark, tmp_path):
-    """In append mode a window is emitted once the watermark passes its
-    end, and never again. With all data in one micro-batch nothing is
-    late, so the stream's rows are the batch frame's windows that end
-    at least the watermark delay before the latest event."""
-    import uuid
-
-    src = str(tmp_path / "src")
-    pages(spark, 3000, n_days=2).repartition(3).write.parquet(src)
-    batch_df = spark.read.parquet(src)
-    stream = spark.readStream.schema(batch_df.schema).parquet(src)
-    wv = st.windowed_verdicts(ValidationEngine(PAGES_SCHEMA).apply(stream),
-                              window="1 hour", watermark="2 hours")
-    name = "wv_" + uuid.uuid4().hex[:8]
-    q = (wv.writeStream.format("memory").queryName(name).outputMode("append")
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = sorted(tuple(r) for r in spark.table(name).collect())
-    latest = batch_df.agg(F.max("warc_ts")).first()[0]
-    want = sorted(
-        tuple(r) for r in st.windowed_verdicts(ValidationEngine(PAGES_SCHEMA).apply(batch_df))
-        .filter(F.col("window_end") <= F.lit(latest) - F.expr("INTERVAL 2 HOURS"))
-        .collect()
-    )
-    assert got and got == want
-
-
 def test_resumable_run_is_one_job_per_partition(spark, tmp_path):
     """With violations_dir set, validate+write+metrics must be ONE Spark
     job per partition (metrics observed on the write), not a write pass
@@ -262,8 +157,7 @@ def test_resumable_run_is_one_job_per_partition(spark, tmp_path):
 
 
 def test_every_verdict_consumer_sums_the_same_rollup(spark, tmp_path):
-    """partition_verdicts per day and per host, batch windowed_verdicts, the
-    resumable run's summary (both metric paths) and CheckSuite's schema
+    """partition_verdicts per day and per host, the resumable run's summary (both metric paths) and CheckSuite's schema
     check report the same totals as a plain aggregate of the validated
     frame. The suite reports n_rows and n_invalid only."""
     df = _day_pages(spark, 2000)
@@ -282,7 +176,6 @@ def test_every_verdict_consumer_sums_the_same_rollup(spark, tmp_path):
     assert summed(ValidationEngine.partition_verdicts(validated, ["day"])) == totals
     by_host = validated.withColumn("host", host_of(F.col("url")))
     assert summed(ValidationEngine.partition_verdicts(by_host, ["host"])) == totals
-    assert summed(st.windowed_verdicts(validated)) == totals
     for i, vdir in enumerate((None, str(tmp_path / "v"))):
         run = ResumableValidationRun(ValidationEngine(PAGES_SCHEMA), str(tmp_path / f"m{i}"),
                                      "day", violations_dir=vdir, id_cols=("id",))

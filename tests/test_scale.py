@@ -42,22 +42,6 @@ def test_host_of_and_bad_urls(spark):
     assert got[1] is None  # malformed url -> NULL host, lands in null group
 
 
-def test_prune_days_pushdown(spark, tmp_path):
-    import contextlib
-    import io
-
-    src = str(tmp_path / "p")
-    pages(spark, 2000).write.parquet(src)
-    df = scale.prune_days(spark.read.parquet(src), "warc_ts", "2026-01-02", "2026-01-05")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "PushedFilters" in plan and "warc_ts" in plan.split("PushedFilters")[1][:200]
-    n = df.count()
-    assert 0 < n < 2000
-
-
 def _spark_percentile(values, p):
     """Spark's exact ``percentile`` (Percentile.getPercentile): linear
     interpolation between the sorted values at floor/ceil of p*(N-1),
