@@ -47,6 +47,7 @@ from typing import Any, Callable, Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from schema_fantasy_spark.columns import column
 from schema_fantasy_spark.compiler import ir
 from schema_fantasy_spark.compiler.ir import SchemaCompileError
 from schema_fantasy_spark.compiler.plan import null_errors
@@ -171,11 +172,7 @@ def _is_numeric(dtype: T.DataType) -> bool:
 # ------------------------------------------------------------- the compiler
 
 
-def compile_columnar(
-    schema: Any,
-    refs: Optional[Dict[str, Any]] = None,
-    base: str = "",
-) -> "ColumnarPlan":
+def compile_columnar(schema: Any, refs: Optional[Dict[str, Any]] = None) -> "ColumnarPlan":
     """Compile ``schema`` into a ColumnarPlan applicable to any DataFrame
     whose schema the plan's keywords can bind to. $refs resolved at compile
     time (cycle -> raise, reference src/context.js:24-26 semantics).
@@ -185,7 +182,7 @@ def compile_columnar(
     expression DAG cannot express unbounded recursion. Those route to the
     dynamic mode.
     """
-    return ColumnarPlan(_Translator().node(ir.lower(schema, refs, base)))
+    return ColumnarPlan(_Translator().node(ir.lower(schema, refs)))
 
 
 class _Translator:
@@ -230,7 +227,7 @@ class ColumnarPlan:
         key = df.schema.json()
         errors = self._bound.get(key)
         if errors is None:
-            value = F.struct(*[F.col(f.name) for f in df.schema.fields])
+            value = F.struct(*[column(f.name) for f in df.schema.fields])
             dtype = T.StructType(df.schema.fields)
             errors = self._bound[key] = self._root(value, dtype, F.array().cast("array<string>"))
         return errors

@@ -406,10 +406,11 @@ def reachable(root: Node) -> Iterator[Node]:
 # ----------------------------------------------------------------- lowering
 
 
-def lower(schema: Any, refs: Optional[Dict[str, Any]] = None, base: str = "") -> Node:
-    """The IR of ``schema``, its $refs resolved against ``refs``. Raises
-    CyclicRefError / UnknownResourceError / SchemaCompileError."""
-    root = _Lowering(refs or {}).node(base, schema, schema, "#")
+def lower(schema: Any, refs: Optional[Dict[str, Any]] = None) -> Node:
+    """The IR of ``schema``, its $refs resolved against ``refs`` and
+    against the root's ``id``. Raises CyclicRefError /
+    UnknownResourceError / SchemaCompileError."""
+    root = _Lowering(refs or {}).node("", schema, schema, "#")
     _refuse_same_value_cycles(root)
     return root
 

@@ -70,16 +70,12 @@ def refs_in(doc: Any, base: Optional[str] = None) -> List[str]:
     return out
 
 
-def link(
-    fetch: Callable[[str], Any],
-    url: str,
-    cache: Optional[Dict[str, Any]] = None,
-) -> Tuple[Dict[str, Any], Any]:
+def link(fetch: Callable[[str], Any], url: str) -> Tuple[Dict[str, Any], Any]:
     """Fetch ``url`` and the transitive closure of its $ref-reachable
-    documents. Already-cached URLs are not re-fetched — this dedup is what
-    terminates cyclic reference graphs. Returns (refs_table, root_doc).
+    documents. A URL already fetched is not fetched again — this dedup is
+    what terminates cyclic reference graphs. Returns (refs_table, root_doc).
     """
-    refs: Dict[str, Any] = dict(cache or {})
+    refs: Dict[str, Any] = {}
     root_url = ptr.normalize_url(url)
     queue = [root_url]
     root_doc = None

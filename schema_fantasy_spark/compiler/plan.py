@@ -258,26 +258,21 @@ class CompiledSchema:
         return not self._kernel(value, 0)
 
 
-def compile_schema(
-    schema: Any,
-    refs: Optional[Dict[str, Any]] = None,
-    base: str = "",
-) -> CompiledSchema:
+def compile_schema(schema: Any, refs: Optional[Dict[str, Any]] = None) -> CompiledSchema:
     """Compile ``schema`` (its $refs resolved against ``refs``) into a
     CompiledSchema. Raises CyclicRefError / UnknownResourceError /
     SchemaCompileError at plan time.
     """
     refs = refs or {}
-    return CompiledSchema(generate_source(schema, refs, base), schema, refs)
+    return CompiledSchema(generate_source(schema, refs), schema, refs)
 
 
-def generate_source(schema: Any, refs: Optional[Dict[str, Any]] = None,
-                    base: str = "") -> str:
+def generate_source(schema: Any, refs: Optional[Dict[str, Any]] = None) -> str:
     """Python source of the kernel validating ``schema``: one function
     ``f<n>(v, d)`` per schema node (``d`` is the value's nesting depth)
     returning ``None`` or a non-empty error list, and ``kernel``, the
     root. The same schema always yields the same text."""
-    return _Generator().run(ir.lower(schema, refs, base))
+    return _Generator().run(ir.lower(schema, refs))
 
 
 def null_errors(node: ir.Node) -> List[Err]:

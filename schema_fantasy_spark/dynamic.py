@@ -36,10 +36,11 @@ from typing import Callable, Optional
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
+from schema_fantasy_spark.columns import column
 from schema_fantasy_spark.errors import ERRORS_SCHEMA, errs_to_rows
 from schema_fantasy_spark.compiler.plan import MAX_DEPTH, CompiledSchema, load_kernel
 
@@ -221,7 +222,7 @@ def _ensure_parallelism(df: DataFrame, keys: tuple = ()) -> DataFrame:
     min_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < min_parts:
         if keys:
-            return df.repartition(min_parts, *[F.col(k) for k in keys])
+            return df.repartition(min_parts, *[column(k) for k in keys])
         return df.repartition(min_parts)
     return df
 
@@ -250,4 +251,4 @@ def with_errors(df: DataFrame, doc_col: str, udf) -> DataFrame:
     # costs far less than the idle cores (measured 1.65s -> 0.75s once
     # the violations() double-eval was fixed; an earlier measurement
     # that found repartitioning a wash predated that fix).
-    return _ensure_parallelism(df).withColumn("errors", udf(F.col(doc_col)))
+    return _ensure_parallelism(df).withColumn("errors", udf(column(doc_col)))

@@ -27,13 +27,9 @@ from typing import Any, Dict, Iterable, List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from schema_fantasy_spark.columnar import compile_columnar
+from schema_fantasy_spark.columns import column, quoted
 from schema_fantasy_spark.compiler.plan import compile_schema
 from schema_fantasy_spark.dynamic import kernel_udf, with_errors
-
-
-def _quoted(cols: Iterable[str]) -> List[str]:
-    """``cols`` as backquoted SQL identifiers for ``selectExpr``."""
-    return ["`" + c.replace("`", "``") + "`" for c in cols]
 
 
 def verdict_rollup() -> List[Column]:
@@ -120,7 +116,7 @@ class ValidationEngine:
         trap #1). The barrier costs one array wrap of an
         already-computed value; the inferred filter then tests the
         barrier attribute, not the kernel."""
-        ids = _quoted(id_cols)
+        ids = [quoted(c) for c in id_cols]
         barrier = validated.selectExpr(*ids, "explode(array(errors)) AS _errs")
         return barrier.selectExpr(*ids, "inline(_errs)")
 
@@ -145,10 +141,10 @@ class ValidationEngine:
         only shuffle is on the partition keys). Every grouped verdict goes
         through here: per day and per host (``scale.host_of``)."""
         partition_cols = list(partition_cols)
-        keys = _quoted(partition_cols)
-        return validated.groupBy(*partition_cols).agg(*verdict_rollup()).selectExpr(
-            *keys, "n_rows", "n_rows - n_invalid AS n_valid", "n_invalid", "n_errors",
-            "n_invalid = 0 AS `pass`")
+        grouped = validated.groupBy(*[column(c) for c in partition_cols])
+        return grouped.agg(*verdict_rollup()).selectExpr(
+            *[quoted(c) for c in partition_cols], "n_rows", "n_rows - n_invalid AS n_valid",
+            "n_invalid", "n_errors", "n_invalid = 0 AS `pass`")
 
     @staticmethod
     def error_breakdown(validated: DataFrame, group_cols: Iterable[str] = ()) -> DataFrame:
@@ -159,6 +155,7 @@ class ValidationEngine:
         group_cols = list(group_cols)
         return (
             ValidationEngine.violations(validated, group_cols)
-            .groupBy(*group_cols, "keyword", F.expr("array_join(path, '/') AS path"))
+            .groupBy(*[column(c) for c in group_cols], "keyword",
+                     F.expr("array_join(path, '/') AS path"))
             .agg(F.expr("count(1) AS n_violations"))
         )

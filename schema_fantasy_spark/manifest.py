@@ -11,8 +11,11 @@ idempotent per-partition overwrites).
 
 Layout: one JSON file per completed partition under ``manifest_dir``
 (atomic temp+rename). A file-per-partition manifest scales to O(10^4)
-partitions (a year of days x host buckets) and supports concurrent
-writers on real object stores better than one mutable index file.
+partitions (a year of days x host buckets). The files are written with
+``os`` and ``tempfile`` on the local file system of the Spark
+application's main process: a URI such as ``s3://bucket/manifest`` is
+read as a relative local path, not as the object store (ROADMAP item 1,
+Defect B).
 """
 
 from __future__ import annotations
@@ -25,8 +28,9 @@ from dataclasses import dataclass
 from typing import Callable, Dict, List, Optional
 from urllib.parse import quote
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
+from schema_fantasy_spark.columns import column
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
 
 
@@ -109,7 +113,7 @@ class ResumableValidationRun:
 
     def partitions(self, df: DataFrame) -> List[str]:
         rows = (
-            df.select(F.col(self.partition_col).cast("string").alias("p"))
+            df.select(column(self.partition_col).cast("string").alias("p"))
             .distinct()
             .orderBy("p")
             .collect()
@@ -134,7 +138,7 @@ class ResumableValidationRun:
                 raise RuntimeError(f"injected failure after {fail_after} partitions")
             t0 = time.time()
             value = None if part == NULL_PARTITION else part
-            pdf = df.filter(F.col(self.partition_col).cast("string").eqNullSafe(value))
+            pdf = df.filter(column(self.partition_col).cast("string").eqNullSafe(value))
             validated = self.engine.apply(pdf)
             if self.violations_dir:
                 # ONE pass per partition: metrics ride the violations write

@@ -192,6 +192,17 @@ def _parse_partition_by(
     return out
 
 
+def _current_schema(md: Dict[str, Any]) -> Dict[str, Any]:
+    """The table's current iceberg schema: the ``schemas`` entry named by
+    ``current-schema-id`` (else the last one), else the v1 ``schema``;
+    {} when the metadata has neither."""
+    schemas = md.get("schemas")
+    if schemas:
+        cur = md.get("current-schema-id")
+        return next((s for s in schemas if s.get("schema-id") == cur), schemas[-1])
+    return md.get("schema") or {}
+
+
 def _spec_fields_of_md(md: Dict[str, Any]) -> List[Dict[str, Any]]:
     """The table's default partition-spec fields with their iceberg
     value types resolved (day -> int; identity -> source field type)."""
@@ -201,12 +212,7 @@ def _spec_fields_of_md(md: Dict[str, Any]) -> List[Dict[str, Any]]:
     fields = (spec or {}).get("fields") or []
     if not fields:
         return []
-    schema = md.get("schema") or {}
-    schemas = md.get("schemas")
-    if schemas:
-        cur = md.get("current-schema-id")
-        schema = next((s for s in schemas if s.get("schema-id") == cur), schemas[-1])
-    types = {int(f["id"]): f["type"] for f in schema.get("fields", [])}
+    types = {int(f["id"]): f["type"] for f in _current_schema(md).get("fields", [])}
     out = []
     for f in fields:
         t = f["transform"]
@@ -373,15 +379,7 @@ def _scan_plan(
 def _field_names_by_id(md: Dict[str, Any]) -> Dict[int, str]:
     """Current iceberg schema's field-id -> name map (equality_ids are
     FIELD IDS, not names)."""
-    schema = None
-    schemas = md.get("schemas")
-    if schemas:
-        cur = md.get("current-schema-id")
-        schema = next(
-            (s for s in schemas if s.get("schema-id") == cur), schemas[-1]
-        )
-    if schema is None:
-        schema = md.get("schema")
+    schema = _current_schema(md)
     if not schema:
         raise IcebergLiteError("table metadata has no schema")
     return {int(f["id"]): f["name"] for f in schema["fields"]}
@@ -616,25 +614,6 @@ def _spark_schema_to_iceberg(schema) -> Dict[str, Any]:
     return {"type": "struct", "schema-id": 0, "fields": fields}
 
 
-def _norm_mrow(r: Dict[str, Any]) -> Dict[str, Any]:
-    """Fill v2 manifest-list fields when carrying forward rows written
-    by the older v1 writer (logical clock: snapshot id == sequence
-    number, so added_snapshot_id is the correct backfill)."""
-    seq = r.get("sequence_number")
-    if seq is None:
-        seq = r.get("added_snapshot_id") or 0
-    return {
-        "manifest_path": r["manifest_path"],
-        "manifest_length": r["manifest_length"],
-        "partition_spec_id": int(r.get("partition_spec_id") or 0),
-        "content": int(r.get("content") or 0),
-        "sequence_number": int(seq),
-        "min_sequence_number": int(r.get("min_sequence_number") or seq),
-        "added_snapshot_id": r.get("added_snapshot_id"),
-        "partitions": r.get("partitions"),
-    }
-
-
 def _load_state(table_path: str):
     try:
         md = table_metadata(table_path)
@@ -768,7 +747,7 @@ def _finish_commit(
 def _prior_mrows(md) -> List[Dict[str, Any]]:
     cur = _resolve_snapshot(md)
     _, rows = read_container(open(_local(cur["manifest-list"]), "rb").read())
-    return [_norm_mrow(r) for r in rows]
+    return rows
 
 
 def _transform_col(f: Dict[str, Any]):
@@ -872,9 +851,7 @@ def delete_where(spark, table_path: str, condition) -> int:
     mrows = _prior_mrows(md) + [
         _write_manifest(spark, table_path, snap_id, data_dir, content=1)
     ]
-    schema = (md or {}).get("schema") or _spark_schema_to_iceberg(
-        spark.read.parquet(plan["data"][0][0]).schema
-    )
+    schema = _current_schema(md)
     return _finish_commit(table_path, md, version, prior, snap_id, mrows,
                           "delete", schema, len(schema.get("fields", [])),
                           spec_fields=_spec_fields_of_md(md))
@@ -900,7 +877,7 @@ def delete_equality(spark, table_path: str, values_df, eq_cols: List[str]) -> in
         _write_manifest(spark, table_path, snap_id, data_dir,
                         content=2, equality_ids=eq_ids)
     ]
-    schema = md.get("schema")
+    schema = _current_schema(md)
     return _finish_commit(table_path, md, version, prior, snap_id, mrows,
                           "delete", schema, len(schema.get("fields", [])),
                           spec_fields=_spec_fields_of_md(md))

@@ -23,6 +23,7 @@ from typing import Any, Dict, List, Optional, Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from schema_fantasy_spark import table_checks as tc
+from schema_fantasy_spark.columns import column
 from schema_fantasy_spark.engine import ValidationEngine
 
 
@@ -82,7 +83,7 @@ class CheckSuite:
         tag = f"_c{len(self._slots)}"
 
         def build(df: DataFrame):
-            return [F.sum(F.col(col).isNull().cast("long")).alias(f"{tag}_null")]
+            return [F.sum(column(col).isNull().cast("long")).alias(f"{tag}_null")]
 
         def finish(row) -> List[CheckResult]:
             n_null, n_rows = row[f"{tag}_null"] or 0, row["n_rows"]
@@ -101,7 +102,7 @@ class CheckSuite:
         def build(df: DataFrame):
             # comparisons happen Spark-side so bound literals coerce to the
             # column type (e.g. string date vs timestamp column)
-            c = F.col(col)
+            c = column(col)
             viol = F.lit(False)
             if minimum is not None:
                 viol = viol | (c < F.lit(minimum).cast(df.schema[col].dataType))
@@ -109,8 +110,8 @@ class CheckSuite:
                 viol = viol | (c > F.lit(maximum).cast(df.schema[col].dataType))
             return [
                 F.sum(viol.cast("long")).alias(f"{tag}_viol"),
-                F.min(col).cast("string").alias(f"{tag}_mn"),
-                F.max(col).cast("string").alias(f"{tag}_mx"),
+                F.min(c).cast("string").alias(f"{tag}_mn"),
+                F.max(c).cast("string").alias(f"{tag}_mx"),
             ]
 
         def finish(row) -> List[CheckResult]:
@@ -138,14 +139,15 @@ class CheckSuite:
         self._slots.append(("job", check, None))
         return self
 
-    def with_referential(self, parent: DataFrame, fk, pk=None) -> "CheckSuite":
-        """Orphan check against ``parent``'s keys. The join strategy is
-        Spark's: it broadcasts a parent under
+    def with_referential(self, parent: DataFrame, fk) -> "CheckSuite":
+        """Orphan check: rows whose key ``fk`` (a column name or a list
+        of them) is not a key of ``parent``, which names it the same way.
+        The join strategy is Spark's: it broadcasts a parent under
         ``spark.sql.autoBroadcastJoinThreshold`` and sort-merge joins a
         larger one (a previous snapshot's whole url column)."""
 
         def check(df: DataFrame) -> List[CheckResult]:
-            s = tc.referential_summary(df, parent, fk, pk).collect()[0]
+            s = tc.referential_summary(df, parent, fk).collect()[0]
             return [CheckResult(
                 f"referential({fk})", "table", bool(s["pass"]),
                 float(s["n_orphans"]), f"{s['n_orphans']} orphan rows",

@@ -25,108 +25,86 @@ decimal.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Callable, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from schema_fantasy_spark.columns import column
+
 
 # ------------------------------------------------------------- column stats
+
+#: the probabilities :func:`percentiles` reports, as columns p25 ... p95
+PROBS = (0.25, 0.5, 0.75, 0.95)
+
+
+def _profile(df: DataFrame, cols: Sequence[str], names: Sequence[str],
+             stats: Callable[[Column], List[Column]], *keep: Column) -> DataFrame:
+    """Long format, one row per column ``c`` of ``cols`` in name order:
+    the aggregates ``keep`` over ``df`` (aliased; the same on every row),
+    ``col_name`` and ``names``, the values of ``stats(c)`` over ``df``.
+
+    ONE aggregate computes every column's stats in a single scan (alias
+    ``_<i>_<j>``: column i, stat j) and ONE ``stack`` unstacks its row.
+    A per-column select unioned back together re-plans the aggregate
+    per column: k scans of the table, 400 TB read to profile 4 columns
+    of a 100 TB one (tests/test_plan_audit.py asserts the one scan)."""
+    wide = df.agg(*keep, *[s.alias(f"_{i}_{j}") for i, c in enumerate(cols)
+                           for j, s in enumerate(stats(column(c)))])
+    rows = [x for i, c in enumerate(cols)
+            for x in (F.lit(c), *[f"_{i}_{j}" for j in range(len(names))])]
+    return wide.select(*wide.columns[:len(keep)],
+                       F.stack(F.lit(len(cols)), *rows).alias("col_name", *names)
+                       ).orderBy("col_name")
 
 
 def null_rates(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Long-format per-column null counts + rate. One pass, one row out
     per column (exact longs; the rate is a single final division)."""
-    aggs: List[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"))
-    wide = df.agg(*aggs)
-    stack_expr = ", ".join(f"'{c}', __nn_{c}" for c in cols)
-    return (
-        wide.selectExpr("n_rows", f"stack({len(cols)}, {stack_expr}) as (col_name, n_null)")
-        .select(
-            "col_name",
-            "n_rows",
-            "n_null",
-            F.round(F.col("n_null") / F.col("n_rows"), 6).alias("null_rate"),
-        )
-        .orderBy("col_name")
-    )
+    counts = _profile(df, cols, ["n_null"], lambda c: [F.sum(c.isNull().cast("long"))],
+                      F.count(F.lit(1)).alias("n_rows"))
+    return counts.select(
+        "col_name", "n_rows", "n_null",
+        F.round(F.col("n_null") / F.col("n_rows"), 6).alias("null_rate"))
 
 
 def column_stats(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """Long-format min/max/exact-distinct/non-null counts per column.
 
-    ONE scan of ``df`` for every column (a wide agg unstacked to long
-    format with ``stack``, the same shape :func:`percentiles` uses).
     The k ``count_distinct`` aggregates on different columns plan
-    through Spark's Expand — a k-way row expansion but a SINGLE pass
-    over the table, strictly better than the k full scans a
-    per-column ``df.agg`` union costs at 100 TB (the previous shape;
-    tests/test_plan_audit.py now asserts the one-scan plan).
-
-    Exact ``count(distinct)`` here because the oracle compares values; the
-    scale path is :func:`cardinality_approx` (HLL — no Expand either).
-    """
-    aggs: List[Column] = []
-    for i, c in enumerate(cols):
-        aggs += [
-            F.min(c).cast("double").alias(f"__mn_{i}"),
-            F.max(c).cast("double").alias(f"__mx_{i}"),
-            F.count_distinct(F.col(c)).alias(f"__nd_{i}"),
-            F.count(c).alias(f"__nn_{i}"),
-        ]
-    wide = df.agg(*aggs)
-    stack_expr = ", ".join(
-        f"'{c}', __mn_{i}, __mx_{i}, __nd_{i}, __nn_{i}" for i, c in enumerate(cols)
-    )
-    return wide.selectExpr(
-        f"stack({len(cols)}, {stack_expr}) "
-        "as (col_name, min_val, max_val, n_distinct, n_nonnull)"
-    ).orderBy("col_name")
+    through Spark's Expand: a k-way row expansion, but a SINGLE pass
+    over the table. Exact ``count(distinct)`` here because the oracle
+    compares values; the scale path is :func:`cardinality_approx` (HLL,
+    no Expand either)."""
+    return _profile(
+        df, cols, ["min_val", "max_val", "n_distinct", "n_nonnull"],
+        lambda c: [F.min(c).cast("double"), F.max(c).cast("double"),
+                   F.count_distinct(c), F.count(c)])
 
 
-def percentiles(
-    df: DataFrame, cols: Sequence[str], probs: Sequence[float] = (0.25, 0.5, 0.75, 0.95)
-) -> DataFrame:
-    """Exact percentiles per column (long format). Exact `percentile`
-    keeps the oracle comparable; the 10^12-scale path swaps in
-    ``approx_percentile`` (t-digest sketch, same call shape).
+def percentiles(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Exact percentiles per column at ``PROBS`` (long format). Exact
+    `percentile` keeps the oracle comparable; the 10^12-scale path swaps
+    in ``approx_percentile`` (t-digest sketch, same call shape).
 
-    One ARRAY-form percentile aggregate per column: the scalar form
-    buffers and sorts the column's values once PER PROBABILITY (four
-    separate copies for the default probs — measured 4x this check),
-    the array form once per column. All columns aggregate in a single
-    pass; the long format unstacks the one result row."""
-    arr = "array(" + ",".join(str(p) for p in probs) + ")"
-    wide = df.agg(*[
-        F.expr(f"percentile({c}, {arr})").alias(f"__p_{i}")
-        for i, c in enumerate(cols)
-    ])
-    # unstack with ONE stack generator — a per-column select unioned
-    # back together re-plans the agg subtree per column (k scans of the
-    # table; the same N-scan shape column_stats had)
-    stack_expr = ", ".join(
-        f"'{c}', " + ", ".join(
-            f"round(element_at(__p_{i}, {k + 1}), 4)" for k in range(len(probs))
-        )
-        for i, c in enumerate(cols)
-    )
-    names = ", ".join(f"p{int(p * 100)}" for p in probs)
-    return wide.selectExpr(
-        f"stack({len(cols)}, {stack_expr}) as (col_name, {names})"
-    ).orderBy("col_name")
+    One ARRAY-form percentile aggregate per column, which every
+    probability's element reads (Spark plans identical aggregates once):
+    the scalar form buffers and sorts the column's values once PER
+    PROBABILITY (measured 4x this check), the array form once per
+    column."""
+    def stats(c: Column) -> List[Column]:
+        p = F.percentile(c, PROBS)
+        return [F.round(F.element_at(p, k + 1), 4) for k in range(len(PROBS))]
+
+    return _profile(df, cols, [f"p{int(q * 100)}" for q in PROBS], stats)
 
 
 def cardinality_approx(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """HLL cardinality per column, to a 1% relative standard deviation —
     the 10^12-scale path (single pass, no shuffle of raw values,
     fixed-size sketches)."""
-    aggs = [F.approx_count_distinct(c, 0.01).alias(f"__ad_{c}") for c in cols]
-    wide = df.agg(*aggs)
-    stack_expr = ", ".join(f"'{c}', __ad_{c}" for c in cols)
-    return wide.selectExpr(
-        f"stack({len(cols)}, {stack_expr}) as (col_name, approx_distinct)"
-    ).orderBy("col_name")
+    return _profile(df, cols, ["approx_distinct"],
+                    lambda c: [F.approx_count_distinct(c, 0.01)])
 
 
 # --------------------------------------------------------------- uniqueness
@@ -137,19 +115,25 @@ def _keyed(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     not a value: it duplicates nothing and is no orphan (the null-rate
     check's job)."""
     for c in key_cols:
-        df = df.filter(F.col(c).isNotNull())
+        df = df.filter(column(c).isNotNull())
     return df
+
+
+def _key_counts(df: DataFrame, key_cols: Sequence[str], count: str) -> DataFrame:
+    """The keys of ``_keyed(df, key_cols)``, each with its row count in
+    column ``count``: groupBy-count, one shuffle."""
+    key_cols = list(key_cols)
+    return (_keyed(df, key_cols).groupBy(*[column(c) for c in key_cols])
+            .agg(F.count(F.lit(1)).alias(count)))
 
 
 def duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """Keys appearing more than once + how many extra copies (the
     reference's reported-duplicate-count semantics,
-    reference src/v4/uniqueItems.js:20-27). groupBy-count, one shuffle.
-    Uniqueness holds over the rows with all key columns non-null."""
-    key_cols = list(key_cols)
+    reference src/v4/uniqueItems.js:20-27). Uniqueness holds over the
+    rows with all key columns non-null."""
     return (
-        _keyed(df, key_cols).groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n_copies"))
+        _key_counts(df, key_cols, "n_copies")
         .filter(F.col("n_copies") > 1)
         .withColumn("n_duplicates", F.col("n_copies") - 1)
     )
@@ -158,8 +142,7 @@ def duplicate_keys(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
 def uniqueness_summary(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """One-row verdict for a uniqueness constraint over the rows with
     all key columns non-null (``n_rows`` counts those rows)."""
-    key_cols = list(key_cols)
-    per_key = _keyed(df, key_cols).groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
+    per_key = _key_counts(df, key_cols, "n")
     # coalesce: no non-null key at all is 0 duplicates and a pass, not null
     n_dup = F.coalesce(F.sum(F.col("n") - 1), F.lit(0))
     return per_key.agg(
@@ -188,7 +171,7 @@ def referential_orphans(
     """
     fk = [fk] if isinstance(fk, str) else list(fk)
     pk = fk if pk is None else ([pk] if isinstance(pk, str) else list(pk))
-    keys = parent.select(*[F.col(p).alias(f) for p, f in zip(pk, fk)]).distinct()
+    keys = parent.select(*[column(p).alias(f) for p, f in zip(pk, fk)]).distinct()
     if broadcast_parent:
         keys = F.broadcast(keys)
     return _keyed(child, fk).join(keys, on=fk, how="left_anti")
@@ -204,27 +187,20 @@ def referential_summary(
     )
 
 
-def text_consistency(
-    df: DataFrame,
-    reference: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
+def text_consistency(df: DataFrame, reference: DataFrame) -> DataFrame:
     """Per-row invariant vs a reference corpus: byte-identical ``text`` per
-    ``key`` (BASELINE.json input_hint; semantics = the reference's enum
+    ``url`` (BASELINE.json input_hint; semantics = the reference's enum
     deep-equality on strings, src/v4/enum.js:25, lifted to a keyed join).
 
     Returns mismatching keys with both hashes. Only (key, xxhash64(text))
     pairs shuffle — texts themselves never move.
     """
-    a = df.select(F.col(key_col).alias("k"), F.xxhash64(F.col(text_col)).alias("h_actual"))
-    b = reference.select(
-        F.col(key_col).alias("k"), F.xxhash64(F.col(text_col)).alias("h_expected")
-    )
+    a = df.select(F.col("url").alias("k"), F.xxhash64("text").alias("h_actual"))
+    b = reference.select(F.col("url").alias("k"), F.xxhash64("text").alias("h_expected"))
     return (
         a.join(b, "k")
         .filter(~F.col("h_actual").eqNullSafe(F.col("h_expected")))
-        .select(F.col("k").alias(key_col), "h_actual", "h_expected")
+        .select(F.col("k").alias("url"), "h_actual", "h_expected")
     )
 
 
@@ -234,7 +210,7 @@ def text_consistency(
 def group_histogram(df: DataFrame, col: str) -> DataFrame:
     """Categorical histogram (drift input). NULL is its own bucket."""
     return (
-        df.groupBy(F.coalesce(F.col(col).cast("string"), F.lit("<null>")).alias("bucket"))
+        df.groupBy(F.coalesce(column(col).cast("string"), F.lit("<null>")).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("bucket")
     )
@@ -246,16 +222,22 @@ def numeric_histogram(
     """Fixed-width histogram via width_bucket (drift input; bounded-size
     aggregate regardless of input scale)."""
     return (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(F.width_bucket(F.col(col), F.lit(lo), F.lit(hi), F.lit(n_buckets)).alias("bucket"))
+        df.filter(column(col).isNotNull())
+        .groupBy(F.width_bucket(column(col), F.lit(lo), F.lit(hi), F.lit(n_buckets)).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("bucket")
     )
 
 
-def chi_square_stat(
-    current_hist: DataFrame, baseline_hist: DataFrame, bucket_col: str = "bucket"
-) -> DataFrame:
+def _aligned(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
+    """The two histograms' counts per ``bucket``, ``n_cur`` and ``n_base``,
+    0 where a side has no such bucket."""
+    cur = current_hist.select("bucket", F.col("n").alias("n_cur"))
+    base = baseline_hist.select("bucket", F.col("n").alias("n_base"))
+    return cur.join(base, "bucket", "full_outer").fillna(0, ["n_cur", "n_base"])
+
+
+def chi_square_stat(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
     """Chi-square statistic between two categorical histograms.
 
     chi2 = sum_b (o_b - e_b)^2 / e_b  with expected counts scaled from the
@@ -266,12 +248,8 @@ def chi_square_stat(
     side gives a NULL statistic, never an error, and ``dof`` is never
     negative.
     """
-    cur = current_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    base = baseline_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base"))
-    joined = cur.join(base, "bucket", "full_outer").fillna(0, ["n_cur", "n_base"])
-    totals = joined.agg(
-        F.sum("n_cur").alias("t_cur"), F.sum("n_base").alias("t_base")
-    )
+    joined = _aligned(current_hist, baseline_hist)
+    totals = joined.agg(F.sum("n_cur").alias("t_cur"), F.sum("n_base").alias("t_base"))
     j = joined.crossJoin(F.broadcast(totals)).filter(F.col("n_base") > 0)
     expected = F.col("n_base") * F.col("t_cur") / F.col("t_base")
     # expected is 0 on every row when the current side is empty; with an
@@ -283,18 +261,14 @@ def chi_square_stat(
     )
 
 
-def ks_stat(
-    current_hist: DataFrame, baseline_hist: DataFrame, bucket_col: str = "bucket"
-) -> DataFrame:
+def ks_stat(current_hist: DataFrame, baseline_hist: DataFrame) -> DataFrame:
     """Kolmogorov-Smirnov statistic between two numeric histograms:
     max |ECDF_cur - ECDF_base| over bucket boundaries, via cumulative
     window over the (tiny) histogram (SURVEY.md §2.4 'cume_dist'). An
     empty side has no ECDF: the statistic is NULL, never an error."""
     from pyspark.sql import Window
 
-    cur = current_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    base = baseline_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base"))
-    joined = cur.join(base, "bucket", "full_outer").fillna(0, ["n_cur", "n_base"])
+    joined = _aligned(current_hist, baseline_hist)
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     ecdf = joined.select(
         "bucket",

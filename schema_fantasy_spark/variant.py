@@ -220,10 +220,9 @@ class VariantCompileWarning:
         self.truncated_paths: List[str] = []
 
 
-def _max_enum_depth(schema: Any, refs: Optional[Dict[str, Any]] = None,
-                    base: str = "") -> int:
+def _max_enum_depth(schema: Any, refs: Optional[Dict[str, Any]] = None) -> int:
     """Max literal depth across the enums the schema's validation reaches."""
-    return _enum_depth(ir.lower(schema, refs, base))
+    return _enum_depth(ir.lower(schema, refs))
 
 
 def _enum_depth(root: ir.Node) -> int:
@@ -234,7 +233,6 @@ def _enum_depth(root: ir.Node) -> int:
 def compile_variant(
     schema: Any,
     refs: Optional[Dict[str, Any]] = None,
-    base: str = "",
     max_depth: int = 6,
 ):
     """Compile to a VariantPlan. Recursive schemas unroll ``max_depth``
@@ -246,7 +244,7 @@ def compile_variant(
     (reference src/v4/enum.js:24-28 R.equals)."""
     refs = refs or {}
     warning = VariantCompileWarning()
-    root = ir.lower(schema, refs, base)
+    root = ir.lower(schema, refs)
     if _enum_depth(root) > CANON_DEPTH:
         return VariantPlan(None, warning, kernel_udf(compile_schema(schema, refs=refs)))
 

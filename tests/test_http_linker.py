@@ -67,7 +67,7 @@ def test_load_schema_links_transitively(server):
     schema, refs = load_schema(f"{server}/simple/array")
     assert schema["type"] == "array"
     assert f"{server}/simple/array" in refs and f"{server}/simple/item" in refs
-    compiled = compile_schema(schema, refs=refs, base=f"{server}/simple/array")
+    compiled = compile_schema(schema, refs=refs)
     assert compiled.is_valid(["ab", "cde"])
     assert not compiled.is_valid(["ab", 3])
     assert not compiled.is_valid(["a"])  # minLength from the remote item
@@ -75,7 +75,7 @@ def test_load_schema_links_transitively(server):
 
 def test_jcard_style_tuple_items(server):
     schema, refs = load_schema(f"{server}/jcard/card")
-    compiled = compile_schema(schema, refs=refs, base=f"{server}/jcard/card")
+    compiled = compile_schema(schema, refs=refs)
     assert compiled.is_valid(["vcard", [["fn", {}], ["org", {"x": 1}]]])
     assert not compiled.is_valid(["notvcard", []])
     assert not compiled.is_valid(["vcard", [["fn"]]])  # property minItems 2

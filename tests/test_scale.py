@@ -78,7 +78,7 @@ def test_column_profile_matches_python(spark):
     cols, pct_cols, probs = ["a", "b", "c"], ["a", "b"], (0.25, 0.5, 0.75, 0.95)
     profile = (
         tc.column_stats(df, cols)
-        .join(F.broadcast(tc.percentiles(df, pct_cols, probs)), "col_name", "left")
+        .join(F.broadcast(tc.percentiles(df, pct_cols)), "col_name", "left")
     )
     got = {r["col_name"]: r.asDict() for r in profile.collect()}
     want = {}
