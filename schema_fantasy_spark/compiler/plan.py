@@ -13,7 +13,7 @@ keyword semantics, ``$ref`` resolution, value checks and wording live in
   deliberately recompiles per evaluation, src/v4/pattern.js:18 — a
   documented naivety we do not reproduce).
 
-The generated source holds one function ``f<n>(v, d)`` per IR node (a
+The generated source holds one function ``f<n>(v)`` per IR node (a
 recursive schema becomes mutually recursive functions), returning
 ``None`` for a valid value. Each function has up to two paths:
 
@@ -43,8 +43,7 @@ prefixes its key only when a child failed, so a valid document builds no
 path at all. ``anyOf`` stops at the first passing branch and ``oneOf`` at
 the second: the discarded branches could not change the result. The
 fast conditions never change the rows: a condition holds only where the
-node passes, and it raises NestingError only where the node's own
-checks would (``tests/fixtures/kernel_golden.json`` pins the rows).
+node passes (``tests/fixtures/kernel_golden.json`` pins the rows).
 
 Every constant (messages, enum sets, translated regexes) is a literal in
 the source, so the text alone determines the kernel: ``load_kernel``
@@ -58,9 +57,10 @@ Documented divergences:
 * enum expected-value rendering uses compact JSON, not JS String().
   Deep equality (``canonical``) and that rendering walk a value without
   recursion, so an enum's rows do not depend on the recursion limit.
-* nesting: the kernel looks inside containers at most ``MAX_DEPTH`` levels
-  below the root and raises :class:`NestingError` past that; the
-  reference recurses until the JS stack overflows.
+* nesting: one rule, whatever the schema: a value nested deeper than
+  ``MAX_DEPTH`` is refused before the kernel runs (``check_depth``; the
+  dynamic mode refuses such a document before parsing it). The reference
+  recurses until the JS stack overflows. The kernel checks no depth.
 """
 
 from __future__ import annotations
@@ -77,17 +77,27 @@ from schema_fantasy_spark.compiler import ir
 from schema_fantasy_spark.compiler.ir import SchemaCompileError, json_repr
 from schema_fantasy_spark.errors import COMPOUND, SINGLE, VALUES, Err
 
-#: The kernel's nesting budget: it looks inside containers at most this
-#: many levels below the document root. A deeper document raises
-#: NestingError (the dynamic mode quarantines it as one '$depth' row), so
-#: a hostile document cannot exhaust the Python stack. A schema whose
-#: nodes each cost several frames per level may still run out of stack
-#: first; that RecursionError is quarantined the same way.
+#: The nesting cap, so that a hostile document cannot exhaust the Python
+#: stack. A schema whose nodes each cost several frames per level may
+#: still run out of stack first; the dynamic mode quarantines that
+#: RecursionError as it does a document past the cap, as one '$depth' row.
 MAX_DEPTH = 512
 
 
 class NestingError(RecursionError):
-    """A document nests deeper than MAX_DEPTH levels."""
+    """A value nests deeper than MAX_DEPTH levels."""
+
+
+def check_depth(value: Any) -> None:
+    """Raise NestingError when the containers of ``value`` nest deeper
+    than MAX_DEPTH: one walk, a level of containers at a time."""
+    level = [value] if isinstance(value, (list, dict)) else []
+    for _ in range(MAX_DEPTH):
+        level = [x for v in level for x in (v.values() if isinstance(v, dict) else v)
+                 if isinstance(x, (list, dict))]
+        if not level:
+            return
+    raise NestingError(f"value nests deeper than {MAX_DEPTH} levels")
 
 
 # ---------------------------------------------------------------- type model
@@ -128,24 +138,19 @@ def is_integer(v: Any) -> bool:
 _END = object()
 
 
-def canonical(v: Any, d: int = 0):
+def canonical(v: Any):
     """Hashable type-tagged canonical form for JSON deep equality
-    (R.equals semantics: 1 == 1.0 but 1 != true != '1') of ``v`` at
-    nesting depth ``d``. It walks the value with a stack of its own, so
-    the result does not depend on the recursion limit; like the kernel
-    it looks inside containers at most MAX_DEPTH levels below the root
-    and raises NestingError past that."""
+    (R.equals semantics: 1 == 1.0 but 1 != true != '1') of ``v``. It
+    walks the value with a stack of its own, so the result does not
+    depend on the recursion limit."""
     parts: list = []  # finished forms of the open container's members
     stack: list = []  # open containers: (object keys or None, members, outer parts)
     while True:
         t = _TYPES.get(v.__class__) or type_of(v)
         if t == "array" or t == "object":
-            if d >= MAX_DEPTH:
-                _deep()
             keys = [] if t == "object" else None
             stack.append((keys, iter(v if keys is None else v.items()), parts))
             parts = []
-            d += 1
         else:
             parts.append(("n", float(v)) if t == "number" else (t[0], v))
         while stack:  # the next member of the innermost open container
@@ -157,7 +162,6 @@ def canonical(v: Any, d: int = 0):
                     keys.append(k)
                 break
             stack.pop()
-            d -= 1
             outer.append(("a", tuple(parts)) if keys is None
                          else ("o", tuple(sorted(zip(keys, parts)))))
             parts = outer
@@ -199,21 +203,17 @@ def _at(errs: list, key) -> list:
     return errs
 
 
-def _deep():
-    raise NestingError(f"document nests deeper than {MAX_DEPTH} levels")
-
-
-def _vacuous(v, d):
+def _vacuous(v):
     return None
 
 
-def _dups(items: list, d: int) -> int:
+def _dups(items: list) -> int:
     """How many items of an array equal an earlier one under JSON deep
-    equality; ``d`` is the items' depth. Distinct strs are distinct JSON
-    strings, so an all-str array needs no canonical forms."""
+    equality. Distinct strs are distinct JSON strings, so an all-str
+    array needs no canonical forms."""
     for x in items:
         if x.__class__ is not str:
-            return len(items) - len({canonical(x, d) for x in items})
+            return len(items) - len({canonical(x) for x in items})
     return len(items) - len(set(items))
 
 
@@ -225,13 +225,13 @@ _RUNTIME = {
     "_Err": Err, "_T": _TYPES, "_type_of": type_of, "_isint": is_integer,
     "_canon": canonical, "_json": json_repr, "_ulen": ulength, "_add": _add,
     "_cat": _cat, "_at": _at, "_props_msg": ir.props_message, "_dups": _dups, "_NO": _NO,
-    "_unique_msg": ir.unique_message, "_deep": _deep, "_vacuous": _vacuous, "_re": re,
+    "_unique_msg": ir.unique_message, "_vacuous": _vacuous, "_re": re,
     "_filterfalse": itertools.filterfalse,
 }
 
 
 @functools.lru_cache(maxsize=128)
-def load_kernel(source: str) -> Callable[[Any, int], Optional[List[Err]]]:
+def load_kernel(source: str) -> Callable[[Any], Optional[List[Err]]]:
     """The root function of generated ``source``, executed once per
     process and cached by the source text."""
     ns = dict(_RUNTIME)
@@ -242,8 +242,9 @@ def load_kernel(source: str) -> Callable[[Any, int], Optional[List[Err]]]:
 class CompiledSchema:
     """A compiled constraint plan. ``validate(value)`` returns the
     accumulated error list (empty = valid), mirroring the reference's
-    ``Validation`` applicative (index.js:60-62). ``source`` is the
-    generated kernel."""
+    ``Validation`` applicative (index.js:60-62), or raises NestingError
+    for a value nested deeper than MAX_DEPTH. ``source`` is the generated
+    kernel."""
 
     def __init__(self, source: str, schema: Any, refs: Dict[str, Any]):
         self.source = source
@@ -252,10 +253,11 @@ class CompiledSchema:
         self._kernel = load_kernel(source)
 
     def validate(self, value: Any) -> List[Err]:
-        return self._kernel(value, 0) or []
+        check_depth(value)
+        return self._kernel(value) or []
 
     def is_valid(self, value: Any) -> bool:
-        return not self._kernel(value, 0)
+        return not self.validate(value)
 
 
 def compile_schema(schema: Any, refs: Optional[Dict[str, Any]] = None) -> CompiledSchema:
@@ -269,9 +271,9 @@ def compile_schema(schema: Any, refs: Optional[Dict[str, Any]] = None) -> Compil
 
 def generate_source(schema: Any, refs: Optional[Dict[str, Any]] = None) -> str:
     """Python source of the kernel validating ``schema``: one function
-    ``f<n>(v, d)`` per schema node (``d`` is the value's nesting depth)
-    returning ``None`` or a non-empty error list, and ``kernel``, the
-    root. The same schema always yields the same text."""
+    ``f<n>(v)`` per schema node returning ``None`` or a non-empty error
+    list, and ``kernel``, the root. The same schema always yields the
+    same text."""
     return _Generator().run(ir.lower(schema, refs))
 
 
@@ -279,7 +281,7 @@ def null_errors(node: ir.Node) -> List[Err]:
     """The errors a JSON ``null`` yields under IR ``node``, from the
     kernel generated for that node. A null has no children, so every
     error sits at the null's own path."""
-    return load_kernel(_Generator().run(node))(None, 0) or []
+    return load_kernel(_Generator().run(node))(None) or []
 
 
 # ------------------------------------------------------------- the generator
@@ -381,20 +383,17 @@ def _accepts(node: ir.Node) -> Optional[set]:
 
 class _Fast(NamedTuple):
     """A condition under which a node or check passes, as the terms of a
-    conjunction. ``exact``: it holds only then. ``raises``: it may raise
-    NestingError, which happens only where the node's own checks would
-    raise it too. No other condition raises."""
+    conjunction. ``exact``: it holds only then."""
 
     terms: Tuple[str, ...]
     exact: bool
-    raises: bool
 
     @property
     def src(self) -> str:
         return " and ".join(self.terms) or "True"
 
 
-_PASSES = _Fast((), True, False)
+_PASSES = _Fast((), True)
 
 #: the longest fast condition worth testing in place of a call
 _FAST_MAX = 400
@@ -402,23 +401,20 @@ _FAST_MAX = 400
 
 def _all(parts: List[_Fast]) -> _Fast:
     terms = tuple(dict.fromkeys(t for p in parts for t in p.terms))
-    return _Fast(terms, all(p.exact for p in parts), any(p.raises for p in parts))
+    return _Fast(terms, all(p.exact for p in parts))
 
 
 def _any(parts: List[_Fast], exact: bool) -> _Fast:
-    return _Fast(("(" + " or ".join(p.src for p in parts) + ")",), exact,
-                 any(p.raises for p in parts))
+    return _Fast(("(" + " or ".join(p.src for p in parts) + ")",), exact)
 
 
 @dataclass
 class _Block:
     """The source lines of one check, run when the value's JSON type is
-    the check's guard; ``descends`` if they call children at depth
-    ``d1``."""
+    the check's guard."""
 
     check: ir.Check
     lines: List[str]
-    descends: bool = False
 
     @property
     def guard(self) -> Optional[str]:
@@ -488,8 +484,8 @@ class _Generator:
             self.memo[node] = None
             self.funcs.append(f"{name} = _vacuous\n")
             return None
-        lines = [f"def {name}(v, d):"]
-        fast, kind = self.fast(node, "v", "d"), _kind(node)
+        lines = [f"def {name}(v):"]
+        fast, kind = self.fast(node, "v"), _kind(node)
         if fast is not None:
             lines.append(f"    if {fast.src}: return None")
         elif kind is not None:
@@ -497,11 +493,7 @@ class _Generator:
             # the checks of its type apply: no type lookup and no guards
             own = [b for b in blocks
                    if not isinstance(b.check, ir.Type) and b.guard in (None, kind[0])]
-            body = ["e = None"]
-            if any(b.descends for b in own):
-                body += ["d1 = d + 1", f"if d1 > {MAX_DEPTH}: _deep()"]
-            for b in own:
-                body += b.lines
+            body = ["e = None"] + [line for b in own for line in b.lines]
             lines.append(f"    if {_CLASS_TESTS[kind[1]].format(v='v')}:")
             lines += _indent(body + ["return e"], 2)
         lines.append("    e = None")
@@ -512,31 +504,28 @@ class _Generator:
             if guard is not None:
                 lines.append(f"    if t == {guard!r}:")
                 pad = "        "
-            if any(b.descends for b in group):
-                lines += [pad + "d1 = d + 1", pad + f"if d1 > {MAX_DEPTH}: _deep()"]
             lines += [pad + line for b in group for line in b.lines]
         lines.append("    return e")
         self.funcs.append("\n".join(lines) + "\n")
         return name
 
-    def call(self, node: ir.Node, v: str, d: str) -> Optional[str]:
-        """Expression of ``node``'s errors on the value ``v`` at depth
-        ``d``: a call of its function, skipped when its fast condition
-        holds. None for a node that never fails."""
+    def call(self, node: ir.Node, v: str) -> Optional[str]:
+        """Expression of ``node``'s errors on the value ``v``: a call of
+        its function, skipped when its fast condition holds. None for a
+        node that never fails."""
         fn = self.node(node)
         if fn is None:
             return None
-        fast = self.fast(node, v, d)
-        return f"{fn}({v}, {d})" if fast is None else f"None if {fast.src} else {fn}({v}, {d})"
+        fast = self.fast(node, v)
+        return f"{fn}({v})" if fast is None else f"None if {fast.src} else {fn}({v})"
 
     # ------------------------------------------------- fast conditions
 
-    def fast(self, node: ir.Node, v: str, d: str) -> Optional[_Fast]:
-        """A condition on the value ``v`` at depth ``d`` under which
-        ``node`` passes, built from the class test of its kind and the
-        conditions of its checks; None when a check has none. A node
-        tests it first and returns at once, and a caller tests it before
-        calling the node."""
+    def fast(self, node: ir.Node, v: str) -> Optional[_Fast]:
+        """A condition on the value ``v`` under which ``node`` passes,
+        built from the class test of its kind and the conditions of its
+        checks; None when a check has none. A node tests it first and
+        returns at once, and a caller tests it before calling the node."""
         if node is ir.ANY:
             return _PASSES
         kind = _kind(node)
@@ -544,25 +533,25 @@ class _Generator:
                 isinstance(c, ir.Type) or _guard(c) for c in node.checks):
             return None
         self.busy.add(node)
-        parts = [_Fast((_CLASS_TESTS[kind[1]].format(v=v),), False, False)] if kind else []
+        parts = [_Fast((_CLASS_TESTS[kind[1]].format(v=v),), False)] if kind else []
         for c in node.checks:
             if not isinstance(c, ir.Type) and _guard(c) in (None, kind and kind[0]):
-                parts.append(self.ok(c, v, d))
+                parts.append(self.ok(c, v))
         self.busy.discard(node)
         if None in parts:
             return None
         fast = _all(parts)
         return fast if len(fast.src) <= _FAST_MAX else None
 
-    def ok(self, c: ir.Check, v: str, d: str) -> Optional[_Fast]:
-        """A condition on the value ``v`` at depth ``d`` under which check
-        ``c`` passes, its guard holding; None when there is none cheap."""
+    def ok(self, c: ir.Check, v: str) -> Optional[_Fast]:
+        """A condition on the value ``v`` under which check ``c`` passes,
+        its guard holding; None when there is none cheap."""
         if isinstance(c, ir.Enum):
             allowed = self.const(f"frozenset(map(_canon, {_lit(list(c.values))}))")
             # a str's canonical form is ('s', str): test strs directly
             strs = self.const(f"frozenset({_lit([x for x in c.values if isinstance(x, str)])})")
             return _Fast((f"({v} in {strs} if {v}.__class__ is str "
-                          f"else _canon({v}, {d}) in {allowed})",), True, True)
+                          f"else _canon({v}) in {allowed})",), True)
         if isinstance(c, ir.Bound):
             op = (">" if c.is_min else "<") + ("" if c.exclusive else "=")
             src = f"{v} {op} {_lit(c.number)}"
@@ -578,51 +567,45 @@ class _Generator:
         elif isinstance(c, ir.Pattern):
             src = f"{self.regex(c.regex)}({v})"
         elif isinstance(c, ir.Required):
-            return _Fast(tuple(f"{_lit(name)} in {v}" for name in c.names), True, False)
+            return _Fast(tuple(f"{_lit(name)} in {v}" for name in c.names), True)
         elif isinstance(c, ir.UniqueItems):
-            return _Fast((f"not _dups({v}, {d} + 1)",), True, True) if c.unique else _PASSES
+            return _Fast((f"not _dups({v})",), True) if c.unique else _PASSES
         elif isinstance(c, ir.AllOf):
-            parts = [self.fast(n, v, d) for n in c.nodes if self.node(n) is not None]
+            parts = [self.fast(n, v) for n in c.nodes if self.node(n) is not None]
             return None if None in parts else _all(parts)
         elif isinstance(c, ir.AnyOf):
-            return self.any_ok(c, v, d)
+            return self.any_ok(c, v)
         elif isinstance(c, ir.OneOf):
-            return self.one_ok(c, v, d)
+            return self.one_ok(c, v)
         elif isinstance(c, ir.Not) and self.node(c.node) is not None:
-            inner = self.fast(c.node, v, d)
+            inner = self.fast(c.node, v)
             if inner is None or not inner.exact:
                 return None
-            return _Fast((f"not ({inner.src})",), True, inner.raises)
+            return _Fast((f"not ({inner.src})",), True)
         else:
             return None
-        return _Fast((src,), True, False)
+        return _Fast((src,), True)
 
-    def any_ok(self, c: ir.AnyOf, v: str, d: str) -> Optional[_Fast]:
-        """Any branch's condition. The kernel tries a branch only when the
-        ones before it failed, so a condition that may raise joins only
-        behind exact ones."""
+    def any_ok(self, c: ir.AnyOf, v: str) -> Optional[_Fast]:
+        """Any branch's condition; exact when every branch's is."""
         if not c.nodes or any(self.node(n) is None for n in c.nodes):
             return _PASSES  # vacuous truth, as the kernel's check
-        parts, settled = [], True
-        for n in c.nodes:
-            fast = self.fast(n, v, d)
-            if fast is not None and (settled or not fast.raises):
-                parts.append(fast)
-            settled = settled and fast is not None and fast.exact
-        return _any(parts, settled) if parts else None
+        fasts = [self.fast(n, v) for n in c.nodes]
+        parts = [fast for fast in fasts if fast is not None]
+        if not parts:
+            return None
+        return _any(parts, None not in fasts and all(p.exact for p in parts))
 
-    def one_ok(self, c: ir.OneOf, v: str, d: str) -> Optional[_Fast]:
+    def one_ok(self, c: ir.OneOf, v: str) -> Optional[_Fast]:
         """The condition of a branch whose kind no other branch's type
         check lets through: the value passes that branch and fails the
-        rest. Such a value fails every other branch, so the kernel tries
-        every branch on it, and a condition that may raise raises only
-        where the kernel's checks would."""
+        rest."""
         if any(self.node(n) is None for n in c.nodes):
             return None
         accepts = [_accepts(n) for n in c.nodes]
         parts = []
         for i, n in enumerate(c.nodes):
-            kind, fast = _kind(n), self.fast(n, v, d)
+            kind, fast = _kind(n), self.fast(n, v)
             if fast is None or kind is None:
                 continue
             if all(j == i or a is not None and kind[0] not in a for j, a in enumerate(accepts)):
@@ -641,19 +624,19 @@ class _Generator:
                                             repr(c.expected), "t")])
 
     def enum(self, c: ir.Enum) -> _Block:
-        return _Block(c, [f"if not {self.ok(c, 'v', 'd').src}:",
+        return _Block(c, [f"if not {self.ok(c, 'v').src}:",
                           "    " + _add_err(VALUES, c.keyword, repr(c.message), "()",
                                             repr(c.expected), "_json(v)")])
 
     def single(self, c: ir.Check) -> _Block:
         """A check failing with its fixed message when its condition fails."""
-        return _Block(c, [f"if not {self.ok(c, 'v', 'd').src}:",
+        return _Block(c, [f"if not {self.ok(c, 'v').src}:",
                           "    " + _add_err(SINGLE, c.keyword, repr(c.message))])
 
     def unique_items(self, c: ir.UniqueItems) -> Optional[_Block]:
         if not c.unique:
             return None
-        return _Block(c, ["n = _dups(v, d + 1)", "if n:",
+        return _Block(c, ["n = _dups(v)", "if n:",
                           "    " + _add_err(SINGLE, c.keyword, "_unique_msg(n)")])
 
     def required(self, c: ir.Required) -> Optional[_Block]:
@@ -666,11 +649,11 @@ class _Generator:
     def properties(self, c: ir.Properties) -> Optional[_Block]:
         lines = []
         for key, sub in c.entries:
-            call, k = self.call(sub, "x", "d1"), _lit(key)
+            call, k = self.call(sub, "x"), _lit(key)
             if call is not None:  # absent keys vacuously pass
                 lines += [f"x = v.get({k}, _NO)", "if x is not _NO:", f"    r = {call}",
                           f"    if r: e = _cat(e, _at(r, {k}))"]
-        return _Block(c, lines, True) if lines else None
+        return _Block(c, lines) if lines else None
 
     def undeclared(self) -> List[str]:
         """The line binding ``u`` to the keys outside the declared names,
@@ -683,7 +666,7 @@ class _Generator:
                 f"[*_filterfalse({self.const(known + '.__contains__')}, v)]"]
 
     def pattern_properties(self, c: ir.PatternProperties) -> Optional[_Block]:
-        entries = [(self.regex(rx), self.call(sub, "x", "d1")) for rx, sub in c.entries]
+        entries = [(self.regex(rx), self.call(sub, "x")) for rx, sub in c.entries]
         entries = [(rx, call) for rx, call in entries if call is not None]
         if not entries:
             return None
@@ -692,17 +675,17 @@ class _Generator:
             for rx, call in entries:
                 lines += [f"for k in filter({rx}, v):"] + _indent(
                     ["x = v[k]", f"r = {call}", "if r: e = _cat(e, _at(r, k))"])
-            return _Block(c, lines, True)
+            return _Block(c, lines)
         lines = self.undeclared()
         for rx, call in entries:  # patterns outer, as the reference
             lines += ["for k in u:", f"    if {rx}(k):"] + _indent(
                 ["x = v[k]", f"r = {call}", "if r: e = _cat(e, _at(r, k))"], 2)
-        return _Block(c, lines, True)
+        return _Block(c, lines)
 
     def additional_properties(self, c: ir.AdditionalProperties) -> Optional[_Block]:
         if c.additional is True:
             return None
-        call = None if c.additional is False else self.call(c.additional, "x", "d1")
+        call = None if c.additional is False else self.call(c.additional, "x")
         if c.additional is not False and call is None:
             return None
         if self.keys.disjoint:
@@ -723,19 +706,19 @@ class _Generator:
                 "    c = _cat(c, _at(r, k))"])
             body.append("if a: " + _add_err(COMPOUND, c.keyword, "_props_msg('invalid', a)",
                                              children="c"))
-        return _Block(c, head + (body if self.keys.disjoint else _indent(body)), call is not None)
+        return _Block(c, head + (body if self.keys.disjoint else _indent(body)))
 
     def items(self, c: ir.Items) -> Optional[_Block]:
-        call = self.call(c.node, "x", "d1")
+        call = self.call(c.node, "x")
         if call is None:
             return None
         return _Block(c, ["for i, x in enumerate(v):", f"    r = {call}",
-                          "    if r: e = _cat(e, _at(r, i))"], True)
+                          "    if r: e = _cat(e, _at(r, i))"])
 
     def tuple_items(self, c: ir.TupleItems) -> Optional[_Block]:
         lines = []
         for i, sub in enumerate(c.nodes):
-            call = self.call(sub, "x", "d1")
+            call = self.call(sub, "x")
             if call is not None:
                 lines += [f"if len(v) > {i}:", f"    x = v[{i}]", f"    r = {call}",
                           f"    if r: e = _cat(e, _at(r, {i}))"]
@@ -744,18 +727,18 @@ class _Generator:
             lines += [f"for i in range({n}, len(v)):",
                       "    " + _add_err(SINGLE, c.keyword, repr(c.message), "(i,)")]
         elif c.additional is not True:
-            call = self.call(c.additional, "x", "d1")
+            call = self.call(c.additional, "x")
             if call is not None:
                 lines += [f"for i in range({n}, len(v)):", "    x = v[i]", f"    r = {call}",
                           "    if r: e = _cat(e, _at(r, i))"]
-        return _Block(c, lines, True) if lines else None
+        return _Block(c, lines) if lines else None
 
     def dependencies(self, c: ir.Dependencies) -> Optional[_Block]:
         lines = []
         for dep in c.entries:
             key = _lit(dep.key)
             if isinstance(dep, ir.DependentSchema):
-                call = self.call(dep.node, "v", "d")
+                call = self.call(dep.node, "v")
                 if call is not None:  # whole value re-validated, same path
                     lines += [f"if {key} in v:",
                               f"    r = {call}",
@@ -773,7 +756,7 @@ class _Generator:
         return _Block(c, lines) if lines else None
 
     def all_of(self, c: ir.AllOf) -> Optional[_Block]:
-        calls = [call for call in (self.call(n, "v", "d") for n in c.nodes) if call is not None]
+        calls = [call for call in (self.call(n, "v") for n in c.nodes) if call is not None]
         if not calls:
             return None
         lines = ["c = None"]
@@ -783,7 +766,7 @@ class _Generator:
         return _Block(c, lines)
 
     def any_of(self, c: ir.AnyOf) -> Optional[_Block]:
-        calls = [self.call(n, "v", "d") for n in c.nodes]
+        calls = [self.call(n, "v") for n in c.nodes]
         if not calls or None in calls:  # vacuous truth (reference src/v4/anyOf.js:25)
             return None
         # c holds the failures so far; None once a branch passed
@@ -794,7 +777,7 @@ class _Generator:
         return _Block(c, lines)
 
     def one_of(self, c: ir.OneOf) -> _Block:
-        calls = [self.call(n, "v", "d") for n in c.nodes]
+        calls = [self.call(n, "v") for n in c.nodes]
         # n counts passing branches; past two the verdict cannot change
         lines = ["c = None", f"n = {sum(call is None for call in calls)}"]
         for call in calls:
@@ -807,7 +790,7 @@ class _Generator:
         return _Block(c, lines)
 
     def not_(self, c: ir.Not) -> _Block:
-        call = self.call(c.node, "v", "d")
+        call = self.call(c.node, "v")
         lines = [_add_err(SINGLE, c.keyword, repr(c.message))]
         if call is not None:
             lines = [f"if not ({call}):", "    " + lines[0]]

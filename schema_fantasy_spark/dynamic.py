@@ -16,7 +16,9 @@ batches (spark.sql.execution.arrow.maxRecordsPerBatch rows at a time):
 ``validate_batch`` reads a batch's documents as bytes in one loop, and
 the UDF returns its error rows as one ``pa.array``, with no pandas in
 between. A document that is not UTF-8 or not JSON is a ``$parse`` row,
-never a failed task.
+never a failed task. One whose brackets nest deeper than
+``plan.MAX_DEPTH`` is a ``$depth`` row, found before any parse
+(``_nests_too_deep``), so the kernel takes the parsed value alone.
 
 Documents are parsed by ``orjson`` where it reads them exactly as
 ``json.loads`` does (``_orjson_reads``). A reused worker no longer re-reads the
@@ -27,13 +29,13 @@ per-task ``importlib.invalidate_caches`` does on Python < 3.12
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import sys
 import zipimport
 from typing import Callable, Optional
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -83,29 +85,55 @@ def _orjson_loads() -> Optional[Callable[[bytes], object]]:
 
 def _orjson_reads(docs: pa.Array) -> list:
     """Which documents of ``docs`` (a binary array) orjson reads exactly
-    as ``json.loads``: those with no ``LONG_DIGITS`` and at most
-    ``MAX_DEPTH`` opening brackets. orjson reads an integer beyond 64 bits
-    as a float, and json.loads fails on nesting a few levels short of the
-    recursion limit, where orjson reads on to 1024 levels. The others, and
-    every one orjson rejects, go to json.loads, which reads ``1e400`` as
-    inf and keeps a lone surrogate escape, and whose failure makes the
-    ``$parse`` row. Brackets are counted only in the documents longer
-    than MAX_DEPTH bytes, the only ones that can hold more: a count over
-    every document took twice as long as the regex match (83 against
-    37 ms over the 48k ``json_docs`` documents)."""
-    reads = pc.invert(pc.match_substring_regex(docs, LONG_DIGITS)).to_pylist()
-    long = pc.indices_nonzero(pc.greater(pc.binary_length(docs), MAX_DEPTH))
-    if len(long):
-        deep = pc.greater(pc.count_substring_regex(docs.take(long), "[\\[{]"), MAX_DEPTH)
-        for i in pc.filter(long, deep).to_pylist():
-            reads[i] = False
-    return reads
+    as ``json.loads``: those with no ``LONG_DIGITS``, as orjson reads an
+    integer beyond 64 bits as a float. The others, and every one orjson
+    rejects, go to json.loads, which reads ``1e400`` as inf and keeps a
+    lone surrogate escape, and whose failure makes the ``$parse`` row."""
+    return pc.invert(pc.match_substring_regex(docs, LONG_DIGITS)).to_pylist()
+
+
+#: every byte but a quote and the four brackets
+_NOT_STRUCTURE = bytes(sorted(set(range(256)) - set(b'"[]{}')))
+#: a kept byte's step in nesting depth, as a signed byte
+_STEPS = bytes.maketrans(b'[{]}"', b"\x01\x01\xff\xff\x00")
+#: the bytes ``_nests_too_deep`` sums at a time
+_CHUNK = 1 << 16
+#: what ``validate_batch`` reads a document nested past MAX_DEPTH with
+_DEEP = object()
+
+
+def _nests_too_deep(doc: bytes) -> bool:
+    """Whether the brackets of ``doc`` outside strings nest deeper than
+    MAX_DEPTH, from the bytes alone: a document that is not JSON is
+    measured too. Escaped backslashes and quotes are dropped, so each
+    quote left opens or closes a string, then all but quotes and brackets,
+    and two quotes in a row (they hold no bracket). numpy sums the depth
+    a chunk at a time and stops at the first chunk past MAX_DEPTH."""
+    if doc.count(b"[") + doc.count(b"{") <= MAX_DEPTH:
+        return False
+    if b"\\" in doc:
+        doc = doc.replace(b"\\\\", b"").replace(b'\\"', b"")
+    kept = doc.translate(None, _NOT_STRUCTURE).replace(b'""', b"")
+    steps, kept = memoryview(kept.translate(_STEPS)), memoryview(kept)
+    quotes = depth = 0
+    for i in range(0, len(kept), _CHUNK):
+        quotes = np.cumsum(np.frombuffer(kept[i:i + _CHUNK], np.uint8) == ord('"')) + quotes
+        # a byte after an odd number of quotes is inside a string
+        depth = np.cumsum(np.frombuffer(steps[i:i + _CHUNK], np.int8) * (quotes & 1 == 0)) + depth
+        if depth.max() > MAX_DEPTH:
+            return True
+        quotes, depth = quotes[-1], depth[-1]
+    return False
 
 
 def _quarantine(keyword: str, message: str, actual: Optional[str]) -> list:
     """The one violation row of a document the kernel cannot evaluate."""
     return [{"path": [], "keyword": keyword, "message": message,
              "expected": None, "actual": actual, "depth": 0}]
+
+
+#: the ``_quarantine`` arguments of a document nested too deeply to validate
+_TOO_DEEP = ("$depth", "document nests too deeply to validate", None)
 
 
 def _malformed(doc: bytes) -> list:
@@ -132,16 +160,24 @@ def validate_batch(source: str, docs: pa.Array) -> list:
     draft-4 keyword, so it can never collide with schema-driven errors).
     A null document is validated as JSON null. ``orjson`` parses where it
     reads a document as ``json.loads`` does (``_orjson_reads``, found for
-    the whole batch at once). A well-formed document nested past the
-    kernel's budget (plan.NestingError) or the Python stack is one
-    ``$depth`` row."""
+    the whole batch at once). A document nested deeper than MAX_DEPTH is
+    one ``$depth`` row, unparsed (``_nests_too_deep``), as is one that a
+    schema costing several frames a level cannot check within the stack."""
     kernel, fast_loads = load_kernel(source), _orjson_loads()
     docs = docs.view(pa.large_binary() if pa.types.is_large_string(docs.type) else pa.binary())
-    reads = itertools.repeat(False) if fast_loads is None else _orjson_reads(docs)
+    texts = docs.to_pylist()
+    reads = [False] * len(texts) if fast_loads is None else _orjson_reads(docs)
+    # only a document longer than MAX_DEPTH bytes can nest deeper (no json_docs one is)
+    for i in pc.indices_nonzero(pc.greater(pc.binary_length(docs), MAX_DEPTH)).to_pylist():
+        if _nests_too_deep(texts[i]):
+            reads[i] = _DEEP
     rows = []
-    for doc, fast in zip(docs.to_pylist(), reads):
+    for doc, fast in zip(texts, reads):
         if doc is None:
             value = None
+        elif fast is _DEEP:
+            rows.append(_quarantine(*_TOO_DEEP))
+            continue
         elif fast:
             try:
                 value = fast_loads(doc)
@@ -153,9 +189,9 @@ def validate_batch(source: str, docs: pa.Array) -> list:
             rows.append(_malformed(doc))
             continue
         try:
-            errs = kernel(value, 0)
+            errs = kernel(value)
         except RecursionError:
-            rows.append(_quarantine("$depth", "document nests too deeply to validate", None))
+            rows.append(_quarantine(*_TOO_DEEP))
             continue
         rows.append(errs_to_rows(errs) if errs else [])
     return rows
@@ -206,12 +242,13 @@ def keep_unchanged_zip_directories() -> None:
 
 
 def _ensure_parallelism(df: DataFrame, keys: tuple = ()) -> DataFrame:
-    """Spread compute-heavy HOF stages across cores: higher-order-function
-    folds evaluate interpreted and inherit the SCAN's parallelism, so a
-    small single-row-group file puts an entire HOF pipeline in one task
-    (measured 10s -> ~1s on a since-deleted minhash stage at sf0.1).
-    No-op whenever the scan already has enough partitions — always true
-    for a 100 TB table — so at scale this never adds a shuffle.
+    """Spread a frame with fewer partitions than cores across them first:
+    a stage pipelined with the scan inherits its partitions, so a small
+    one-file input or a small ``createDataFrame`` would run the kernel in
+    one task. A no-op whenever the scan already has enough partitions,
+    always true for a large table, so at scale it never adds a shuffle.
+    perfbench's ``json_docs`` scans as 3 partitions on ``local[3]``, so
+    it is a no-op there too.
 
     Pass ``keys`` (a high-cardinality column, normally the row id) when
     one exists: hash repartitioning skips the local sort every KEYLESS
@@ -242,13 +279,6 @@ def kernel_udf(compiled: CompiledSchema):
 
 def with_errors(df: DataFrame, doc_col: str, udf) -> DataFrame:
     """Append ``errors``: the kernel UDF ``udf`` over ``df[doc_col]``."""
-    # The Arrow UDF inherits the scan's parallelism; spread low-split
-    # inputs (a single-row-group bench file, a small createDataFrame)
-    # across cores first. _ensure_parallelism is a NO-OP whenever the
-    # scan already has >= defaultParallelism partitions — always true
-    # for a 100 TB table — so at scale this never adds a shuffle; on
-    # the single-partition sf0.1 file the shuffle of document strings
-    # costs far less than the idle cores (measured 1.65s -> 0.75s once
-    # the violations() double-eval was fixed; an earlier measurement
-    # that found repartitioning a wash predated that fix).
+    # the Arrow UDF inherits the scan's parallelism: spread a low-split
+    # input across the cores first (a no-op on perfbench's json_docs)
     return _ensure_parallelism(df).withColumn("errors", udf(column(doc_col)))

@@ -119,10 +119,6 @@ def render_error(err: Err) -> str:
     raise ValueError(f"unknown err kind: {err.kind}")
 
 
-def render_all(errs: Sequence[Err]) -> str:
-    return "\n".join(render_error(e) for e in errs)
-
-
 def errs_to_rows(errs: Sequence[Err]) -> list:
     """Flatten a list of Errs (with compound children) into struct rows."""
     rows = []

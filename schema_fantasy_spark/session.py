@@ -1,9 +1,4 @@
-"""SparkSession factory with scale-oriented defaults.
-
-Local harness runs on local[N]; the conf set here is what a cluster
-submission would carry (AQE, skew-join handling, Arrow batching) so local
-plans are representative of the 1000-executor plans.
-"""
+"""SparkSession factory for local runs on local[N]."""
 
 from __future__ import annotations
 
@@ -25,17 +20,9 @@ def get_spark(
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        # AQE: runtime coalescing, skew-join splitting — the cluster-scale
-        # answer to stragglers from Zipf-skewed hosts (SURVEY.md §4.2)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # AQE, partition coalescing and skew-join handling are Spark's
+        # defaults, and the engine relies on them
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow for the dynamic mode's kernel UDF; generous batch for throughput
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # keep scans partition-parallel at bench SFs
-        .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

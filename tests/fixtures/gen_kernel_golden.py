@@ -7,7 +7,8 @@ Three sets, each with the full rows (``errors.errs_to_rows``):
   by ``group:feature:case`` id, through ``CompiledSchema.validate``;
 * ``edges``: the values in :data:`EDGES`, which sit on the edges of the
   kernel's fast paths (class identity, ASCII lengths, all-string
-  ``uniqueItems``, key loops over undeclared keys);
+  ``uniqueItems``, key loops over undeclared keys) and of the nesting cap
+  (``"NestingError"`` in place of the rows);
 * ``docs``: ids 0-89 of ``perfbench.inputs.json_docs`` at seed 1 under
   ``DOCS_SCHEMA`` (every injection residue three times), the documents
   as text and their rows as the dynamic-mode UDF computes them
@@ -37,6 +38,7 @@ import pyarrow as pa  # noqa: E402
 
 from perfbench.inputs import DOCS_SCHEMA, json_docs  # noqa: E402
 from schema_fantasy_spark import compile_schema, dynamic  # noqa: E402
+from schema_fantasy_spark.compiler.plan import NestingError  # noqa: E402
 from schema_fantasy_spark.errors import errs_to_rows  # noqa: E402
 from schema_fantasy_spark.sources.pages import PAGES_SCHEMA  # noqa: E402
 
@@ -133,6 +135,7 @@ EDGES = [
     ("oneOf both", {"oneOf": [{"type": "string"}, {"maxLength": 3}]}, lambda: "ab"),
     ("anyOf nan", {"anyOf": [{"type": "number", "maximum": 1}, {"type": "null"}]},
      lambda: math.nan),
+    # nested past MAX_DEPTH: refused before the kernel runs, whatever the schema
     ("anyOf passes before a deep enum", {"anyOf": [{"type": "array"}, {"enum": [[1]]}]},
      lambda: _deep_seq(600)),
     ("not enum", {"not": {"enum": ["a", 1]}}, lambda: 1.0),
@@ -159,9 +162,17 @@ def draft4_rows() -> list:
             for g, f, c, schema, refs, data, _ in load_fixture_cases()]
 
 
+def edge_result(schema, value):
+    """The rows of ``value`` under ``schema``, or ``"NestingError"`` for a
+    value nested deeper than MAX_DEPTH."""
+    try:
+        return errs_to_rows(compile_schema(schema).validate(value))
+    except NestingError:
+        return "NestingError"
+
+
 def edge_rows() -> list:
-    return [{"id": name, "rows": errs_to_rows(compile_schema(schema).validate(make()))}
-            for name, schema, make in EDGES]
+    return [{"id": name, "rows": edge_result(schema, make())} for name, schema, make in EDGES]
 
 
 def doc_rows() -> list:

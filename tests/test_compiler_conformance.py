@@ -16,7 +16,7 @@ from referencing.jsonschema import DRAFT4
 
 from schema_fantasy_spark import compile_schema
 from schema_fantasy_spark.compiler.plan import MAX_DEPTH, NestingError
-from schema_fantasy_spark.errors import errs_to_rows, render_all
+from schema_fantasy_spark.errors import errs_to_rows, render_error
 
 from tests.conftest import load_fixture_cases
 
@@ -28,7 +28,7 @@ IDS = [f"{g}:{f}:{c}" for g, f, c, *_ in CASES]
 def test_conformance(group, feat, case, schema, refs, data, valid):
     compiled = compile_schema(schema, refs=refs)
     errs = compiled.validate(data)
-    assert (not errs) == valid, f"errors: {render_all(errs)}"
+    assert (not errs) == valid, f"errors: {[render_error(e) for e in errs]}"
 
 
 # Fixture cases on which jsonschema's Draft4Validator departs from the

@@ -5,17 +5,20 @@ directory fix for reused workers (``keep_unchanged_zip_directories``)."""
 import importlib
 import json
 import os
+import random
 import shutil
 import subprocess
 import sys
+import time
 import zipfile
 import zipimport
 
 import pyarrow as pa
 import pytest
 
-from schema_fantasy_spark import dynamic
+from schema_fantasy_spark import compile_schema, dynamic
 from schema_fantasy_spark.compiler.plan import MAX_DEPTH, generate_source
+from schema_fantasy_spark.errors import errs_to_rows
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -95,6 +98,109 @@ def test_parse_failures_are_quarantined_rows(monkeypatch):
     assert [(r["keyword"], r["message"], r["actual"]) for (r,) in rows] == [
         ("$parse", 'malformed JSON: "\ufffd"', '"\ufffd"'),
         ("$parse", 'malformed JSON: "\u00e9\ufffd', '"\u00e9\ufffd')]
+
+
+@pytest.mark.parametrize("orjson", [True, False], ids=["orjson", "json"])
+def test_deep_rows_are_a_property_of_the_document(monkeypatch, orjson):
+    """A document whose brackets outside strings nest deeper than MAX_DEPTH
+    is one '$depth' row before any parse, malformed or not, under a schema
+    that never looks inside it, whatever the recursion limit and the
+    parser. Brackets inside strings do not count."""
+    if orjson:
+        pytest.importorskip("orjson")
+    else:
+        monkeypatch.setitem(sys.modules, "orjson", None)
+    deep = [_nested(600), _nested(1100), "[" * 1023]
+    in_strings = [json.dumps(["[" * 600, {"k": '\\"' + "{" * 600}])]
+    limit = sys.getrecursionlimit()
+    try:
+        for n in (1000, 5000):
+            sys.setrecursionlimit(n)
+            rows = _rows(deep + in_strings, {"type": "array"})
+            assert [[r["keyword"] for r in doc] for doc in rows] == [["$depth"]] * 3 + [[]], n
+    finally:
+        sys.setrecursionlimit(limit)
+
+
+def _depth_by_loop(doc: bytes) -> int:
+    """The deepest nesting of the brackets of ``doc`` outside strings, a
+    byte at a time: the reference for ``dynamic._nests_too_deep``."""
+    depth = deepest = 0
+    in_string = escaped = False
+    for b in doc:
+        if in_string:
+            escaped, in_string = (False, True) if escaped else (b == 92, b != 34)
+        elif b == 34:
+            in_string = True
+        elif b in b"[{":
+            depth += 1
+            deepest = max(deepest, depth)
+        elif b in b"]}":
+            depth -= 1
+    return deepest
+
+
+def _random_doc(rng: random.Random, depth: int) -> bytes:
+    """Brackets opened to about ``depth`` and closed, between strings that
+    hold brackets, escaped quotes and backslashes; some are left open."""
+    def string():
+        return b'"' + b"".join(rng.choice([b"a", b"[", b"{]", b"\\\\", b'\\"', b"\\n"])
+                               for _ in range(rng.randint(0, 8))) + b'"'
+
+    parts = []
+    for _ in range(depth):
+        parts += [rng.choice([b"[", b"{", b"[", b"[1, "]), string() if rng.random() < 0.3 else b""]
+        if rng.random() < 0.05:
+            parts.append(rng.choice([b"]", b"}"]))
+    parts += [rng.choice([b"]", b"}"]) for _ in range(rng.randint(0, depth))]
+    return b"".join(parts) + (string()[:-1] if rng.random() < 0.2 else b"")
+
+
+def test_depth_scan_matches_a_byte_loop():
+    """The chunked numpy scan gives the verdict of a loop over every byte,
+    around MAX_DEPTH and across its chunk boundaries."""
+    rng = random.Random(20)
+    docs = [_random_doc(rng, rng.randint(MAX_DEPTH - 10, MAX_DEPTH + 40)) for _ in range(300)]
+    # the scan keeps only quotes and brackets: 65,532 of them put a chunk edge in the doc
+    docs += [b"[]" * (dynamic._CHUNK // 2 - 2) + doc for doc in docs[:20]]
+    docs += [b"[" * 70_000 + b"]" * 70_000, b'["' + b"[" * 70_000 + b'"]']
+    verdicts = [dynamic._nests_too_deep(doc) for doc in docs]
+    assert verdicts == [_depth_by_loop(doc) > MAX_DEPTH for doc in docs]
+    assert 50 < sum(verdicts) < len(docs) - 50
+
+
+def _best_s(*fs, reps: int = 7) -> list:
+    """The least time each of ``fs`` takes, over reps taken in turn."""
+    best = [float("inf")] * len(fs)
+    for _ in range(reps):
+        for i, f in enumerate(fs):
+            start = time.perf_counter()
+            f()
+            best[i] = min(best[i], time.perf_counter() - start)
+    return best
+
+
+@pytest.mark.parametrize("orjson", [True, False], ids=["orjson", "json"])
+def test_wide_document_keeps_its_rows(monkeypatch, orjson):
+    """About 1 MB of 20,000 small objects: far more than MAX_DEPTH
+    brackets, 3 levels deep. It is validated as any document, and the
+    depth scan it needs keeps ``validate_batch`` within twice the time
+    ``json.loads`` takes to read it."""
+    if orjson:
+        pytest.importorskip("orjson")
+    else:
+        monkeypatch.setitem(sys.modules, "orjson", None)
+    schema = {"type": "array", "items": {"required": ["id"]}}
+    doc = json.dumps([{"id": i, "n": i, "tags": ["t[%d]" % i, "{"]} if i % 5000 else {"tags": []}
+                      for i in range(20000)])
+    assert 900_000 < len(doc) < 1_100_000
+    (rows,) = _rows([doc], schema)
+    assert rows == errs_to_rows(compile_schema(schema).validate(json.loads(doc)))
+    assert [r["path"] for r in rows] == [[str(i)] for i in range(0, 20000, 5000)]
+    docs, source = pa.array([doc], pa.string()), generate_source(schema)
+    batch_s, loads_s = _best_s(lambda: dynamic.validate_batch(source, docs),
+                               lambda: json.loads(doc))
+    assert batch_s <= 2 * loads_s
 
 
 # ------------------------------------------------ the zip directory fix

@@ -15,7 +15,7 @@ from schema_fantasy_spark import compile_schema, dynamic
 from schema_fantasy_spark.compiler.plan import MAX_DEPTH, generate_source
 from schema_fantasy_spark.errors import errs_to_rows
 from tests.conftest import load_fixture_cases
-from tests.fixtures.gen_kernel_golden import EDGES, OUT
+from tests.fixtures.gen_kernel_golden import EDGES, OUT, edge_result
 
 with open(OUT) as f:
     GOLDEN = json.load(f)
@@ -40,7 +40,7 @@ def test_draft4_rows(group, feat, case, schema, refs, data, valid):
 
 @pytest.mark.parametrize("name,schema,make", EDGES, ids=[name for name, *_ in EDGES])
 def test_edge_rows(name, schema, make):
-    assert errs_to_rows(compile_schema(schema).validate(make())) == EDGE_ROWS[name]
+    assert edge_result(schema, make()) == EDGE_ROWS[name]
 
 
 @pytest.mark.parametrize("orjson", [True, False], ids=["orjson", "json"])
