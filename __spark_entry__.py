@@ -66,19 +66,18 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Spread a single-row-group bench scan across cores before a
-    compute-heavy stage (dynamic._ensure_parallelism: no-op whenever
-    the input already has >= defaultParallelism partitions — always true
-    for a 100 TB table, so at scale this never adds a shuffle). Applied
-    AFTER pushed filters so scan pruning/pushdown is unchanged; outputs
-    of the wrapped stages are per-row or aggregate, so results are
-    partition-layout-invariant. Pass the row-id column as ``keys`` where
-    one exists: hash repartitioning skips round-robin's local
-    sort-before-repartition (retry-deterministic either way)."""
-    from schema_fantasy_spark.dynamic import _ensure_parallelism
-
-    return _ensure_parallelism(df, keys=keys)
+def _spread(df: DataFrame, key: str) -> DataFrame:
+    """Spread a bench scan with fewer partitions than cores across them
+    before a compute-heavy stage: a stage pipelined with the scan runs in
+    as many tasks as the scan has partitions, and the engine never
+    repartitions its input. Applied AFTER pushed filters, so scan pruning
+    and pushdown are unchanged; the wrapped stages' outputs are per-row or
+    aggregate, so results do not depend on the layout. Hash partitioning
+    on the row id ``key`` skips the local sort a round-robin repartition
+    pays (spark.sql.execution.sortBeforeRepartition) and is
+    retry-deterministic."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, key) if df.rdd.getNumPartitions() < n else df
 
 
 def _violations(spark: SparkSession, sf_dir: str, schema: dict) -> DataFrame:

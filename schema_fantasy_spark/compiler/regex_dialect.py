@@ -6,7 +6,7 @@ dynamic kernel). The three dialects agree on the common core; this module
 
 * TRANSLATES the JS-specific spellings that have an exact equivalent in the
   target dialect (``\\cJ`` control escapes, ``(?<name>...)`` named groups
-  for Python, a bare ``\\0`` NUL), and
+  for Python), and
 * reproduces the reference's FLAGLESS-RegExp Annex-B reading of the
   legacy escapes, the only reading it implements: ``new RegExp(p)`` without
   the ``u`` flag makes ``\\p``/``\\P``/dangling ``\\u`` IDENTITY escapes —
@@ -23,14 +23,15 @@ dynamic kernel). The three dialects agree on the common core; this module
   several of them as classes, anchors or quotes and Python rejects most,
   so the translator emits the bare letter. A digit escape ``\\N`` is a
   backreference only outside a class in a pattern with at least N
-  capturing groups; otherwise ``\\8`` and ``\\9`` are identity escapes and
-  the rest a legacy octal escape (``\\12`` is U+000A, ``\\400`` is a space
-  then '0'), spelled ``\\xHH``. A backreference to a group that opens
-  later, or to a group that is still open around it, matches the empty
-  string, as in JS, and is spelled ``(?:)`` (Python refuses it, Java
-  never matches it). ``[^]`` (any character) and ``[]``
-  (matches nothing), errors in both Java and Python, are spelled as
-  ``[\\s\\S]`` and ``[^\\s\\S]``.
+  capturing groups and never for ``\\0``; otherwise ``\\8`` and ``\\9`` are
+  identity escapes and the rest a legacy octal escape (``\\0`` is NUL,
+  ``\\12`` is U+000A, ``\\400`` is a space then '0', ``\\0123`` is U+000A
+  then '3' where Java would read one escape), spelled ``\\xHH``. A
+  backreference to a group that opens later, or to a group that is still
+  open around it, matches the empty string, as in JS, and is spelled
+  ``(?:)`` (Python refuses it, Java never matches it). ``[^]`` (any
+  character) and ``[]`` (matches nothing), errors in both Java and Python,
+  are spelled as ``[\\s\\S]`` and ``[^\\s\\S]``.
 
 Deliberate divergence: ``\\c`` without a control letter (Annex-B reads it
 as a literal backslash + 'c' OUTSIDE classes but as a data character
@@ -177,16 +178,13 @@ def _translate(pattern: str, target: str) -> str:
                 i = j + 1
                 prev_atom = True
                 continue
-            if nxt == "0" and not (i + 2 < n and pattern[i + 2] in "01234567"):
-                out.append("\\x00")  # bare \0 is NUL in JS; octal-error in Java
-                i += 2
-                prev_atom = True
-                continue
-            if nxt in "123456789" and (
+            if nxt == "0" or (nxt in "123456789" and (
                 in_class or int(_DIGITS.match(pattern, i + 1).group(0)) > groups
-            ):
-                # no such group: Annex-B reads \8 and \9 as identity
-                # escapes and the rest as a legacy octal escape
+            )):
+                # \0 is never a backreference, nor is \N without group N:
+                # Annex-B reads \8 and \9 as identity escapes and the rest
+                # as a legacy octal escape (\0 alone is NUL, \0123 is \012
+                # then '3'; Java would read \0123 as one octal escape)
                 m = _OCTAL.match(pattern, i + 1)
                 out.append("\\x%02X" % int(m.group(0), 8) if m else nxt)
                 i = m.end() if m else i + 2

@@ -38,11 +38,9 @@ from typing import Callable, Optional
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
-from schema_fantasy_spark.columns import column
 from schema_fantasy_spark.errors import ERRORS_SCHEMA, errs_to_rows
 from schema_fantasy_spark.compiler.plan import MAX_DEPTH, CompiledSchema, load_kernel
 
@@ -241,29 +239,6 @@ def keep_unchanged_zip_directories() -> None:
     zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
-def _ensure_parallelism(df: DataFrame, keys: tuple = ()) -> DataFrame:
-    """Spread a frame with fewer partitions than cores across them first:
-    a stage pipelined with the scan inherits its partitions, so a small
-    one-file input or a small ``createDataFrame`` would run the kernel in
-    one task. A no-op whenever the scan already has enough partitions,
-    always true for a large table, so at scale it never adds a shuffle.
-    perfbench's ``json_docs`` scans as 3 partitions on ``local[3]``, so
-    it is a no-op there too.
-
-    Pass ``keys`` (a high-cardinality column, normally the row id) when
-    one exists: hash repartitioning skips the local sort every KEYLESS
-    round-robin exchange pays (spark.sql.execution.sortBeforeRepartition,
-    on by default so retried tasks reproduce their row assignment — a
-    hash key is retry-deterministic for free) — measured 6.7s vs 3.2s
-    for a 6M-row aggregate at the r9 10x replica."""
-    min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < min_parts:
-        if keys:
-            return df.repartition(min_parts, *[column(k) for k in keys])
-        return df.repartition(min_parts)
-    return df
-
-
 def kernel_udf(compiled: CompiledSchema):
     """The Arrow UDF running ``compiled``'s kernel; it carries only the
     kernel's source."""
@@ -276,9 +251,3 @@ def kernel_udf(compiled: CompiledSchema):
 
     return _validate
 
-
-def with_errors(df: DataFrame, doc_col: str, udf) -> DataFrame:
-    """Append ``errors``: the kernel UDF ``udf`` over ``df[doc_col]``."""
-    # the Arrow UDF inherits the scan's parallelism: spread a low-split
-    # input across the cores first (a no-op on perfbench's json_docs)
-    return _ensure_parallelism(df).withColumn("errors", udf(column(doc_col)))

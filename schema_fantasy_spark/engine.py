@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Observation, functions as F
 from schema_fantasy_spark.columnar import compile_columnar
 from schema_fantasy_spark.columns import column, quoted
 from schema_fantasy_spark.compiler.plan import compile_schema
-from schema_fantasy_spark.dynamic import kernel_udf, with_errors
+from schema_fantasy_spark.dynamic import kernel_udf
 
 
 def verdict_rollup() -> List[Column]:
@@ -93,7 +93,7 @@ class ValidationEngine:
         elif doc_col is None:
             raise ValueError(f"{self.mode} mode needs doc_col (a JSON-string column)")
         elif self.mode == "dynamic":
-            out = with_errors(df, doc_col, self._udf)
+            out = df.withColumn("errors", self._udf(column(doc_col)))
         else:
             out = self._plan.with_errors(df, doc_col)
         return out.withColumn("verdict", F.expr("size(errors) = 0"))

@@ -9,26 +9,27 @@ outputs are durably committed, so a crash between partitions loses nothing
 and a crash mid-partition re-runs exactly that partition (outputs are
 idempotent per-partition overwrites).
 
-Layout: one JSON file per completed partition under ``manifest_dir``
-(atomic temp+rename). A file-per-partition manifest scales to O(10^4)
-partitions (a year of days x host buckets). The files are written with
-``os`` and ``tempfile`` on the local file system of the Spark
-application's main process: a URI such as ``s3://bucket/manifest`` is
-read as a relative local path, not as the object store (ROADMAP item 1,
-Defect B).
+Layout: one JSON file per completed partition under ``manifest_dir``,
+stored through the Hadoop ``FileSystem`` of the active Spark session, the
+layer the violations write uses: an ``s3://``, ``hdfs://`` or ``file://``
+URI reaches its store, and a plain path is a local directory. Each entry
+is one overwriting ``create`` (a rename on an object store is a copy); an
+entry torn by a crash does not parse, so its partition runs again. A
+file-per-partition manifest scales to O(10^4) partitions (a year of days
+x host buckets).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import tempfile
 import time
 from dataclasses import dataclass
 from typing import Callable, Dict, List, Optional
-from urllib.parse import quote
+from urllib.parse import quote, urlparse
 
-from pyspark.sql import DataFrame
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 
 from schema_fantasy_spark.columns import column
 from schema_fantasy_spark.engine import ValidationEngine, verdict_rollup
@@ -47,27 +48,43 @@ def _safe_key(key: str) -> str:
 
 class PartitionManifest:
     def __init__(self, manifest_dir: str):
-        self.dir = manifest_dir
-        os.makedirs(manifest_dir, exist_ok=True)
+        spark = SparkSession.active()
+        if not urlparse(manifest_dir).scheme:
+            # a plain path: the driver's local disk, relative to its working
+            # directory, whatever the cluster's default file system
+            manifest_dir = "file://" + os.path.abspath(manifest_dir)
+        self._jvm = spark._jvm
+        self.dir = self._jvm.org.apache.hadoop.fs.Path(manifest_dir)
+        self._fs = self.dir.getFileSystem(spark._jsc.hadoopConfiguration())
+        self._fs.mkdirs(self.dir)
 
     def completed(self) -> Dict[str, dict]:
+        """The entries that parse, by partition (``.json`` names only, so
+        checksum sidecars do not count)."""
         out = {}
-        for name in os.listdir(self.dir):
-            if not name.endswith(".json"):
+        for status in self._fs.listStatus(self.dir):
+            path = status.getPath()
+            if not path.getName().endswith(".json"):
                 continue
-            with open(os.path.join(self.dir, name)) as f:
-                entry = json.load(f)
+            stream = self._fs.open(path)
+            try:
+                entry = json.loads(self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            except (ValueError, Py4JJavaError):  # torn: not done
+                continue
+            finally:
+                stream.close()
             out[entry["partition"]] = entry
         return out
 
     def mark(self, partition: str, metrics: dict) -> None:
-        """Atomically record a completed partition (temp file + rename)."""
+        """Record a completed partition, overwriting its entry."""
         entry = {"partition": partition, "completed_at": time.time(), **metrics}
-        path = os.path.join(self.dir, f"{_safe_key(partition)}.json")
-        fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(entry, f)
-        os.replace(tmp, path)
+        path = self._jvm.org.apache.hadoop.fs.Path(self.dir, f"{_safe_key(partition)}.json")
+        stream = self._fs.create(path, True)
+        try:
+            stream.write(json.dumps(entry).encode())
+        finally:
+            stream.close()
 
     def summary(self) -> dict:
         done = self.completed()

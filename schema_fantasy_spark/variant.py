@@ -69,7 +69,8 @@ from schema_fantasy_spark.columnar import (
     _say,
     _size_limit,
 )
-from schema_fantasy_spark.dynamic import kernel_udf, with_errors
+from schema_fantasy_spark.columns import column
+from schema_fantasy_spark.dynamic import kernel_udf
 
 #: JSON runtime type of a variant value (NULL for SQL-NULL = absent).
 #: Guard ordering matters for cost: is_variant_null / map / array probes
@@ -312,7 +313,7 @@ class VariantPlan:
             # compile-time auto-route (deep enum literals): the Arrow-UDF
             # kernel IS the faithful semantics, same output contract
             # including the '$parse' quarantine rows
-            return with_errors(df, doc_col, self._udf)
+            return df.withColumn("errors", self._udf(column(doc_col)))
         # try_parse_json: a malformed document becomes a '$parse' error
         # row instead of failing the whole job (quarantine semantics; the
         # Arrow-UDF kernel in dynamic.py does the same)

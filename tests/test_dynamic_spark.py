@@ -107,20 +107,25 @@ def test_deep_document_quarantined(spark):
     assert row["message"] == "document nests too deeply to validate"
 
 
-def test_low_split_input_spreads_to_default_parallelism(spark):
-    """The Arrow UDF inherits the scan's parallelism: a one-partition input
-    is spread to defaultParallelism before the kernel runs (hash on the
-    ``keys`` columns when given); an input already that wide is kept."""
-    from schema_fantasy_spark.dynamic import _ensure_parallelism
-
-    want = spark.sparkContext.defaultParallelism
-    one = spark.range(64).coalesce(1)
-    assert _ensure_parallelism(one).rdd.getNumPartitions() == want
-    keyed = _ensure_parallelism(one, keys=("id",))
-    assert keyed.rdd.getNumPartitions() == want
-    assert sorted(r["id"] for r in keyed.collect()) == list(range(64))
-    wide = spark.range(0, 64, 1, want + 1)
-    assert _ensure_parallelism(wide) is wide
+@pytest.mark.parametrize("n_parts", [1, 9])
+def test_apply_keeps_the_input_partitioning(spark, n_parts):
+    """A dynamic ``apply`` is one projection over the frame it is given:
+    the kernel runs in as many tasks as the input has partitions (one for
+    a one-partition input, which the caller repartitions to spread), and
+    neither the optimized nor the physical plan gains a Repartition or an
+    Exchange."""
+    df = spark.range(0, 64, 1, n_parts).selectExpr(
+        "id", "to_json(named_struct('a', id)) AS doc")
+    out = _dynamic(df, {"properties": {"a": {"maximum": 31}}})
+    qe = out._jdf.queryExecution()
+    nodes = {
+        line.lstrip(" :+-").split(" ")[0]
+        for plan in (qe.optimizedPlan(), qe.executedPlan())
+        for line in plan.toString().splitlines()
+    }
+    assert not [n for n in nodes if n.startswith("Repartition") or "Exchange" in n], nodes
+    assert out.rdd.getNumPartitions() == n_parts
+    assert sorted(r["id"] for r in out.filter("NOT verdict").collect()) == list(range(32, 64))
 
 
 def test_engine_generates_kernel_once(spark, monkeypatch):

@@ -117,7 +117,7 @@ def test_partition_keys_that_differ_only_in_punctuation_stay_apart(spark, tmp_pa
     assert run.run(df).processed == []
 
 
-def test_manifest_atomic_entries(tmp_path):
+def test_manifest_atomic_entries(spark, tmp_path):
     m = PartitionManifest(str(tmp_path / "m"))
     m.mark("2026-01-01", {"n_rows": 10, "n_invalid": 0, "pass": True})
     m.mark("2026-01-01", {"n_rows": 11, "n_invalid": 1, "pass": False})  # idempotent overwrite
@@ -125,6 +125,34 @@ def test_manifest_atomic_entries(tmp_path):
     assert done["2026-01-01"]["n_rows"] == 11
     s = m.summary()
     assert s["n_partitions"] == 1 and not s["all_pass"]
+
+
+def test_manifest_uri_reaches_its_file_system(spark, tmp_path, monkeypatch):
+    """A ``file://`` manifest URI is stored where it names, not under a
+    relative ``file:`` directory of the working directory: a rerun from
+    another directory skips every partition, and a torn entry does not
+    parse, so its partition runs again."""
+    df = _day_pages(spark, 300)
+    eng = ValidationEngine(PAGES_SCHEMA)
+    for d in ("a", "b"):
+        (tmp_path / d).mkdir()
+    uri = f"file://{tmp_path}/m"
+    monkeypatch.chdir(tmp_path / "a")
+    first = ResumableValidationRun(eng, uri, "day", id_cols=("id",)).run(df)
+    names = sorted(n for n in os.listdir(tmp_path / "m") if n.endswith(".json"))
+    assert len(names) == len(first.processed) == 7
+    assert os.listdir(tmp_path / "a") == []
+
+    monkeypatch.chdir(tmp_path / "b")
+    run = ResumableValidationRun(eng, uri, "day", id_cols=("id",))
+    rerun = run.run(df)
+    assert rerun.processed == [] and sorted(rerun.skipped) == sorted(first.processed)
+    torn = tmp_path / "m" / names[0]
+    torn.write_text(torn.read_text()[:20])
+    again = run.run(df)
+    assert [f"{p}.json" for p in again.processed] == names[:1]
+    assert again.summary == first.summary
+    assert os.listdir(tmp_path / "b") == []
 
 
 def test_resumable_run_is_one_job_per_partition(spark, tmp_path):

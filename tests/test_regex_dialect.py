@@ -5,6 +5,7 @@ RegExp is FLAGLESS, so Annex-B legacy semantics apply: ``\\p``/``\\P``/
 dangling ``\\u`` are identity escapes and non-quantifier braces are
 literals — the translation reproduces exactly that reading."""
 
+import json
 import re
 
 import pytest
@@ -70,7 +71,8 @@ class TestTranslation:
 
     def test_bare_nul(self):
         assert java_pattern("\\0x") == "\\x00x"
-        assert java_pattern("\\07") == "\\07"  # real octal untouched
+        assert java_pattern("\\07") == "\\x07"  # legacy octal, spelled as hex
+        assert java_pattern("\\0123") == "\\x0A3"  # \012 then '3', as in JS
 
     def test_char_class_state(self):
         # '(' inside a class is literal, not a group opener
@@ -313,6 +315,37 @@ def test_both_modes_read_patterns_as_js(spark):
     for i, (p, s, js) in enumerate(cases):
         assert got[i] == js, ("columnar", p, s)
         assert bool(python_pattern(p).search(s)) == js, ("kernel", p, s)
+
+
+#: strings probed by the legacy-octal cases, and node's ``new
+#: RegExp(p).test(s)`` verdict for each
+_OCTAL_STRINGS = ["\n3", "S", "\n", "3", "a\x00b"]
+_OCTAL_VERDICTS = {
+    "\\0123": [True, False, False, False, False],
+    "^[\\0123]$": [False, False, True, True, False],
+    "\\012": [True, False, True, False, False],
+    "a\\00b": [False, False, False, False, True],
+}
+
+
+@pytest.mark.parametrize("mode", ["columnar", "dynamic"])
+@pytest.mark.parametrize("pattern", list(_OCTAL_VERDICTS),
+                         ids=["nul-then-octal", "class", "octal", "nul-nul"])
+def test_legacy_octal_escapes_read_as_js(spark, pattern, mode):
+    """A legacy octal escape takes at most three digits, ``\\0`` included,
+    in a class or out: ``\\0123`` is ``\\012`` then '3' in JS and in both
+    modes, where java.util.regex alone reads one escape ('S')."""
+    schema = {"properties": {"s": {"pattern": pattern}}}
+    if mode == "columnar":
+        df = spark.createDataFrame(list(enumerate(_OCTAL_STRINGS)), "i: int, s: string")
+        out = ValidationEngine(schema).apply(df)
+    else:
+        df = spark.createDataFrame(
+            [(i, json.dumps({"s": s})) for i, s in enumerate(_OCTAL_STRINGS)],
+            "i: int, doc: string")
+        out = ValidationEngine(schema, mode="dynamic").apply(df, doc_col="doc")
+    got = {r["i"]: r["verdict"] for r in out.collect()}
+    assert [got[i] for i in range(len(_OCTAL_STRINGS))] == _OCTAL_VERDICTS[pattern]
 
 
 def test_k_naming_no_group_raises_in_a_pattern_with_named_groups():
